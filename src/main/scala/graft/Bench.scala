@@ -43,18 +43,6 @@ object Bench {
         asked.sorted
       case None => SparkEntry.queries.keys.toSeq.sorted
     }
-    // Scale-bench yardstick skip (round-15 verdict item 1): the declared
-    // quadratic SEMANTIC yardsticks burn out of the sf1+ bench wall (381 s =
-    // 26% at sf1) while their scale-safe twins are the production paths.
-    // Only the sf1/sf3 bench runs set this; the driver's sf0.1 stamp and
-    // the correctness gates never do, so the yardsticks stay measured at
-    // fixture SF and oracle-checked at every SF. The skip is recorded in
-    // the emitted JSON (yardsticks_skipped) so a record can't silently
-    // shrink.
-    val skipYardsticks = sys.env.get("SPARK_GRAFT_SKIP_YARDSTICKS").contains("1")
-    val benchNames =
-      if (skipYardsticks) names.filterNot(SparkEntry.scaleYardsticks) else names
-
     // Release localCheckpoint blocks left behind by the query just timed.
     // Safe: no table-level cache exists and every pass rebuilds each query's
     // plan from scratch, so nothing reuses a prior query's persisted RDDs.
@@ -70,7 +58,7 @@ object Bench {
     // index costs once so the timed pass measures data processing.
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
-      benchNames.foreach { n => materialize(n, warmDir); releaseCheckpoints() }
+      names.foreach { n => materialize(n, warmDir); releaseCheckpoints() }
 
     // Ambient-load sentinel: ONE fixed compute job (no I/O, no registry
     // key) timed at run start / middle / end. The code is identical each
@@ -105,7 +93,7 @@ object Bench {
     // (q78 measured 1.01 s alone vs 1.78 s after the q1xx family);
     // releaseCheckpoints() between timed regions removes that coupling.
     def timedPass(): Seq[(String, Double, Boolean)] =
-      benchNames.map { name =>
+      names.map { name =>
         val t0 = System.nanoTime()
         val ok = materialize(name, sfDir)
         val t = (System.nanoTime() - t0) / 1e9
@@ -154,18 +142,13 @@ object Bench {
     val ss = Seq(sentinelStart, sentinelMid, sentinelEnd)
     val drift = ss.max / math.max(ss.min, 1e-9)
     val sentinelJson = f""""load_sentinel":{"start":${sentinelStart}%.3f,"mid":${sentinelMid}%.3f,"end":${sentinelEnd}%.3f,"drift":$drift%.3f,"flagged":${drift > 1.5}}"""
-    val skippedJson =
-      if (skipYardsticks)
-        SparkEntry.scaleYardsticks.toSeq.sorted
-          .map("\"" + _ + "\"").mkString(""","yardsticks_skipped":[""", ",", "]")
-      else ""
     // "cpus" is recorded so a reader (and scripts/bench_regress.py) can
     // refuse cross-core comparisons — the driver ALSO runs the bench at a
     // lower core count for its scaling measurement, and those runs are not
     // comparable to the 32-core round records (r17 verdict item 2: an
     // 8-core scaling run stamped itself as BENCH_LOCAL_r18 and would have
     // read as a 15% regression)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"passes":2,"third_pass_keys":$reruns,"cpus":${cpus.toInt},$sentinelJson$skippedJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errors,"passes":2,"third_pass_keys":$reruns,"cpus":${cpus.toInt},$sentinelJson,"sf":"$sfDir"}"""
     println(line)
     // provenance: the driver's BENCH_r{N}.json tails truncate the per-query
     // map, so also land the full line at a stable path for round-over-round
@@ -185,17 +168,15 @@ object Bench {
       }
       // a SPARK_GRAFT_KEYS-filtered probe run must never stamp the round
       // record — a 6-key subset masquerading as the round bench would
-      // poison every round-over-round comparison; same for a
-      // yardstick-skipped scale run (it's not the full registry either),
-      // and same for any run at a core count other than the record
-      // convention's (r17 verdict item 2: the driver's 8-core scaling run
-      // auto-stamped itself as BENCH_LOCAL_r18 — a phantom 15% regression).
+      // poison every round-over-round comparison; same for any run at a
+      // core count other than the record convention's (r17 verdict item 2:
+      // an 8-core scaling run auto-stamped itself as BENCH_LOCAL_r18 — a
+      // phantom 15% regression).
       // Every committed BENCH_LOCAL_r* record is a local[32] run; a
       // different-core run still prints its line and lands at
       // target/bench_local.json, it just never becomes the round record.
       val recordCpus = 32
-      if (sys.env.get("SPARK_GRAFT_KEYS").isEmpty && !skipYardsticks &&
-          cpus.toInt == recordCpus)
+      if (sys.env.get("SPARK_GRAFT_KEYS").isEmpty && cpus.toInt == recordCpus)
         round.foreach { r =>
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(f"BENCH_LOCAL_r$r%02d.json"), line)

@@ -23,14 +23,17 @@ object Pipeline {
 
   /** Entry point B (`Data Analysis/Reddit_4chan_Analysis.py:88-137`):
     * enrich-once ETL — skip ids already enriched, clean, score sentiment,
-    * classify moderation. */
+    * classify moderation. Scoring is the native map-side scorer, so the
+    * plan reads each input once and cleans each row once. Output columns:
+    * the key first, then the other input columns, then the scores. */
   def enrich(comments: DataFrame, alreadyEnriched: DataFrame): DataFrame = {
     val delta = Relational.antiDedup(comments, alreadyEnriched, Seq("comment_id"))
     val cleaned = delta
       .withColumn("cleaned_body",
         TextFunctions.normalizeText(TextFunctions.stripUrls(col("body"))))
+    val scored = Sentiment.scoreByLexiconNative(cleaned, "cleaned_body")
     Moderation.classify(
-      Sentiment.scoreByLexiconJoin(cleaned, "comment_id", "cleaned_body"),
+      scored.select("comment_id", scored.columns.filterNot(_ == "comment_id"): _*),
       "cleaned_body")
   }
 

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.StructType
 import graft.ops._
 import graft.stream.Streaming
 import graft.multimodal.Multimodal
+import graft.storage.Materialize
+import graft.storage.Materialize.scratch
 
 /** Driver contract (SURVEY.md §2 operator inventory → runnable queries).
   *
@@ -60,8 +62,6 @@ object SparkEntry {
     p1.unionByName(p2).dropDuplicates("key_a", "key_b")
   }
 
-  private[graft] val TMP = "/root/repo/target/qtmp"
-
   /** The SHARED co-purchase edge table: the full-history lineitem
     * co-occurrence graph materialized once per (input dir) per JVM and
     * scanned by its six consumers — q120 (PageRank), q125 (triangles),
@@ -69,9 +69,8 @@ object SparkEntry {
     * (personalized PR). q226 is NOT a consumer: its edges come from a
     * time-windowed relation by design. See [[Graph.coOccurrenceEdgeIndex]]. */
   private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     Graph.coOccurrenceEdgeIndex(T(s, dir, "lineitem"), "l_partkey", "l_orderkey",
-      indexDir = s"$TMP/edge_index/${safe}_lineitem_part_order")
+      indexDir = scratch("edge_index/lineitem_part_order", dir))
   }
 
   /** The (node, degree) frame CO-MATERIALIZED with [[copurchaseEdges]]
@@ -79,17 +78,15 @@ object SparkEntry {
     * used to open with the same degree aggregate over the edge table now
     * scan |nodes| rows instead. */
   private[graft] def copurchaseDegrees(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     Graph.coOccurrenceDegreeIndex(T(s, dir, "lineitem"), "l_partkey", "l_orderkey",
-      indexDir = s"$TMP/edge_index/${safe}_lineitem_part_order")
+      indexDir = scratch("edge_index/lineitem_part_order", dir))
   }
 
   /** The SHARED bigram-LM score table (q204 reads, q218 buckets): the
     * CCNet score-once shape — see [[TextAnalysis.bigramLogProbIndex]]. */
   private[graft] def lmScores(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     TextAnalysis.bigramLogProbIndex(T(s, dir, "documents"), "doc_id", "text",
-      indexDir = s"$TMP/lm_scores/${safe}_bigram_l7000")
+      indexDir = scratch("lm_scores/bigram_l7000", dir))
   }
 
   /** The SHARED near-dup index for the q44-parameter family: pairs +
@@ -107,11 +104,9 @@ object SparkEntry {
     * convention, and the round-14 verdict's "reuse q412's exact pairs"
     * (item 3). */
   private[graft] def mutualKnnExactIndex(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val idxDir = s"$TMP/mutual_knn/${safe}_top1"
-    val emb = T(s, dir, "embeddings")
-    graft.storage.Materialize.once(graft.storage.Materialize.key(idxDir, emb)) {
-      mutualKnnExactPairs(s, dir).write.mode("overwrite").parquet(idxDir)
+    val idxDir = scratch("mutual_knn/top1", dir)
+    Materialize.once(idxDir, T(s, dir, "embeddings")) {
+      mutualKnnExactPairs(s, dir).write.parquet(idxDir)
     }
     s.read.parquet(idxDir)
   }
@@ -137,20 +132,18 @@ object SparkEntry {
   }
 
   private[graft] def dedupIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     Dedup.componentIndex(T(s, dir, "documents"), "doc_id", "text",
       shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25,
-      indexDir = s"$TMP/dedup_index/${safe}_k2_h16_b8_t25")
+      indexDir = scratch("dedup_index/k2_h16_b8_t25", dir))
   }
 
   /** The persisted banded-signature side of [[dedupIndex]] (same artifact,
     * same write): what incremental maintenance probes (q265) instead of
     * re-banding the historical corpus. */
   private[graft] def dedupIndexBands(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
     Dedup.componentIndexBands(T(s, dir, "documents"), "doc_id", "text",
       shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25,
-      indexDir = s"$TMP/dedup_index/${safe}_k2_h16_b8_t25")
+      indexDir = scratch("dedup_index/k2_h16_b8_t25", dir))
   }
 
   /** The top principal direction of the strided 16-dim embedding
@@ -260,12 +253,6 @@ object SparkEntry {
         RegistryRound17.queries).toMap
     base ++ retiredToTwins.map { case (k, twin) => k -> base(twin) }
   }
-
-  /** Retired round-15/16 mechanism, kept as an empty set so sf1+ bench
-    * drivers that still export `SPARK_GRAFT_SKIP_YARDSTICKS=1` run the
-    * full registry: since round 17 every registered key is scale-safe
-    * (see [[retiredToTwins]]) and nothing is excluded from any bench. */
-  val scaleYardsticks: Set[String] = Set.empty
 
   // ------------------------------------------------------------------ oracle
 

@@ -8,12 +8,12 @@ import org.apache.spark.sql.execution.ExplainMode
 import graft.SparkEntry
 
 /** Per-key plan dumper for the round's before/after evidence: executes each
-  * requested key at the given SF via `collect()` — the PlanSpec convention,
-  * which runs the frame's OWN QueryExecution so the dumped plan is the
-  * AQE-final one (isFinalPlan=true). A noop write would spawn a separate
-  * QueryExecution and leave the explained plan at the initial, pre-AQE
-  * state (r17 advice item 1 — every plans/r17 dump shows
-  * isFinalPlan=false). Writes `<outDir>/<key><suffix>.txt` with the
+  * requested key at the given SF through the frame's OWN QueryExecution
+  * (`toRdd`, drained where it runs — no result rows are collected),
+  * so the dumped plan is the AQE-final one (isFinalPlan=true). A noop write
+  * would spawn a separate QueryExecution and leave the explained plan at
+  * the initial, pre-AQE state (r17 advice item 1 — every plans/r17 dump
+  * shows isFinalPlan=false). Writes `<outDir>/<key><suffix>.txt` with the
   * `explain("formatted")` output. Session config mirrors DumpPlans so dumps
   * are comparable across commits.
   *
@@ -36,7 +36,7 @@ object DumpPlanFiles {
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { key =>
       val df = SparkEntry.queries(key)(spark, dir)
-      df.collect() // executes df's own QE — explain below is AQE-final
+      df.queryExecution.toRdd.foreach(_ => ()) // df's own QE: explain below is AQE-final
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(outDir, s"$key$suffix.txt"), plan)
       println(s"[dumpplanfiles] wrote $outDir/$key$suffix.txt")

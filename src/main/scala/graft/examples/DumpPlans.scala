@@ -611,7 +611,7 @@ object DumpPlans {
       sb.append(lastStreamPlan.getOrElse("NO MICRO-BATCH PLAN CAPTURED"))
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md (" + sb.length + " chars)")
     spark.stop()
   }

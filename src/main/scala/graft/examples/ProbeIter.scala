@@ -73,7 +73,7 @@ object ProbeIter {
         .orderBy(col("side"), col("score").desc, col("node")).limit(40)
     }
 
-    val pairsPath = "/root/repo/target/probeiter_pairs"
+    val pairsPath = graft.storage.Materialize.scratch("probeiter_pairs", dir)
     SparkEntry.queries("q445_name_group_join")(spark, dir)
       .select(col("gid_a").as("id_a"), col("gid_b").as("id_b"))
       .write.mode("overwrite").parquet(pairsPath)

@@ -534,14 +534,14 @@ object Dedup {
                      shingleK: Int, numHashes: Int, bands: Int,
                      threshold: Double, indexDir: String): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
-    graft.storage.Materialize.once(graft.storage.Materialize.key(indexDir, docs)) {
+    graft.storage.Materialize.once(indexDir, docs) {
       bandedSignatures(docs, idCol, textCol, shingleK, numHashes, bands)
-        .write.mode("overwrite").parquet(s"$indexDir/bands")
+        .write.parquet(s"$indexDir/bands")
       nearDupPairsBanded(spark.read.parquet(s"$indexDir/bands"), idCol,
           numHashes, threshold)
-        .write.mode("overwrite").parquet(s"$indexDir/pairs")
+        .write.parquet(s"$indexDir/pairs")
       connectedComponents(spark.read.parquet(s"$indexDir/pairs"))
-        .write.mode("overwrite").parquet(s"$indexDir/components")
+        .write.parquet(s"$indexDir/components")
     }
     (spark.read.parquet(s"$indexDir/pairs"),
       spark.read.parquet(s"$indexDir/components"))
@@ -576,10 +576,10 @@ object Dedup {
     val (pairs, _) = componentIndex(docs, idCol, textCol, shingleK, numHashes,
       bands, threshold, indexDir)
     val sliceDir = s"$indexDir/components_lt$idUpper"
-    graft.storage.Materialize.once(graft.storage.Materialize.key(sliceDir, docs)) {
+    graft.storage.Materialize.once(sliceDir, docs) {
       connectedComponents(
         pairs.filter(col("id_a") < idUpper && col("id_b") < idUpper))
-        .write.mode("overwrite").parquet(sliceDir)
+        .write.parquet(sliceDir)
     }
     spark.read.parquet(sliceDir)
   }

@@ -97,9 +97,8 @@ object Graph {
                                        containerCol: String,
                                        indexDir: String): Unit = {
     val spark = rel.sparkSession
-    graft.storage.Materialize.once(graft.storage.Materialize.key(indexDir, rel)) {
-      coOccurrenceEdges(rel, entityCol, containerCol)
-        .write.mode("overwrite").parquet(indexDir)
+    graft.storage.Materialize.once(indexDir, rel) {
+      coOccurrenceEdges(rel, entityCol, containerCol).write.parquet(indexDir)
       spark.read.parquet(indexDir)
         .groupBy(col("src").as("node"))
         .agg(count(lit(1)).cast("long").as("degree"))

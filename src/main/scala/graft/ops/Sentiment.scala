@@ -14,14 +14,17 @@ import org.apache.spark.sql.functions._
   * threshold ladder. Capability parity (score + label columns), not bit parity
   * with NLTK.
   *
-  * Two formulations:
+  * Three formulations, bit-identical (SentimentModerationSpec):
+  *  - [[scoreByLexiconNative]]: one codegen'd byte loop per row — a map-side
+  *    projection with no explode, join or shuffle. The registered q34 scorer
+  *    and the one [[graft.Pipeline.enrich]] runs.
   *  - [[scoreByLexiconJoin]]: tokens ⋈ broadcast lexicon + hash agg. Fully
-  *    relational — Catalyst sees everything, the lexicon broadcast is a few KB,
-  *    and the only shuffle is the per-doc partial/final agg. This is the
-  *    100 TB path AND the DuckDB-oracle-able path (lexicon inlined as VALUES).
+  *    relational — Catalyst sees the token relation, and the lexicon can be
+  *    inlined as VALUES for the DuckDB oracle. It reads `docs` twice (tokens
+  *    and the join back), so a fused pipeline plan evaluates every upstream
+  *    expression and scan twice; the parity reference, not a pipeline stage.
   *  - [[compoundUdf]]: a self-contained scalar UDF for API parity with the
-  *    reference's per-row call shape. Used in tests; the join form is preferred
-  *    in pipelines (UDFs are opaque to codegen).
+  *    reference's per-row call shape (UDFs are opaque to codegen).
   */
 object Sentiment {
 
@@ -75,9 +78,9 @@ object Sentiment {
     * tenths sum in one byte loop per row, so scoring is a pure MAP-SIDE
     * projection: no token explode, no join, no aggregate, no exchange
     * anywhere (PlanSpec pins the plan). The relational
-    * [[scoreByLexiconJoin]] stays for pipelines that want Catalyst to see
-    * the token relation (or a lexicon too big to bake into an expression);
-    * [[compoundUdf]] stays for per-row API parity with the reference.
+    * [[scoreByLexiconJoin]] stays as the parity reference (and for a
+    * lexicon too big to bake into an expression); [[compoundUdf]] stays for
+    * per-row API parity with the reference.
     * All three agree bit-for-bit (SentimentModerationSpec).
     *
     * Output matches [[scoreByLexiconJoin]]: docs columns +

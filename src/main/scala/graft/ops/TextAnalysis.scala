@@ -435,9 +435,8 @@ object TextAnalysis {
     * [[graft.ops.Dedup.componentIndex]] ([[graft.storage.Materialize]]). */
   def bigramLogProbIndex(docs: DataFrame, idCol: String, textCol: String,
                          indexDir: String, lambdaBp: Int = 7000): DataFrame = {
-    graft.storage.Materialize.once(graft.storage.Materialize.key(indexDir, docs)) {
-      bigramLogProb(docs, idCol, textCol, lambdaBp)
-        .write.mode("overwrite").parquet(indexDir)
+    graft.storage.Materialize.once(indexDir, docs) {
+      bigramLogProb(docs, idCol, textCol, lambdaBp).write.parquet(indexDir)
     }
     docs.sparkSession.read.parquet(indexDir)
   }

@@ -9,6 +9,7 @@ import graft.stream.Streaming
 import graft.multimodal.Multimodal
 
 import SparkEntry._
+import graft.storage.Materialize.scratch
 
 /** Registry part: ANN/IVF/PQ, dedup-component and eval-curve keys (q243-q313).
   *
@@ -24,7 +25,7 @@ private[graft] object RegistryAnnDedup {
       // emit exactly once on watermark close; replay equals the batch
       // least(n, quota) twin because admission counts, not per-event
       // verdicts, are the contract (order-independent by construction)
-      Streaming.quotaReplay(s, dir, s"$TMP/q243_src", maxPerHour = 1)
+      Streaming.quotaReplay(s, dir, scratch("q243_src", dir), maxPerHour = 1)
         .orderBy("user_id", "hour_start")),
     "q244_welch_t" -> ((s, dir) =>
       // per-metric two-arm mean test with unequal variances (the
@@ -78,7 +79,7 @@ private[graft] object RegistryAnnDedup {
       // per-day trending-item leaderboard from a watermarked append-mode
       // windowed count; top-3 ranked batch-side over the emitted window
       // rows (bounded by the item domain, never raw events)
-      Streaming.trendingReplay(s, dir, s"$TMP/q248_src", topK = 3)
+      Streaming.trendingReplay(s, dir, scratch("q248_src", dir), topK = 3)
         .orderBy("day_start", "rn")),
     "q249_bpe_curve" -> ((s, dir) => {
       // the tokenizer-tuning readout: tokens-per-word as merges accumulate
@@ -386,10 +387,9 @@ private[graft] object RegistryAnnDedup {
       // the historical component map is a STORED artifact (yesterday's
       // merge output), read back — not recomputed per run (round-13
       // verdict item 3: the per-run min-label loop was the key's variance)
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
       val existing = Dedup.componentIndexSliceBelow(docs, "doc_id", "text",
         shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25,
-        indexDir = s"$TMP/dedup_index/${safe}_k2_h16_b8_t25", idUpper = 350)
+        indexDir = scratch("dedup_index/k2_h16_b8_t25", dir), idUpper = 350)
       val cross = Dedup.probeNearDupBanded(oldBands, freshBanded, "doc_id", 16, 0.25)
         .select(col("existing_id").as("id_a"), col("new_id").as("id_b"))
       val inner = Dedup.nearDupPairsBanded(freshBanded, "doc_id", 16, 0.25)
@@ -404,14 +404,14 @@ private[graft] object RegistryAnnDedup {
       // index, deduped within-batch, survivors appended — the survivor set
       // is batching-invariant and equals "docs that are id_b of no
       // whole-corpus pair", which is exactly what the oracle computes
-      Streaming.nearDupGateReplay(s, dir, s"$TMP/q266_src")
+      Streaming.nearDupGateReplay(s, dir, scratch("q266_src", dir))
         .orderBy("doc_id")),
     "q267_stream_psi" -> ((s, dir) =>
       // the drift monitor as a STREAM: each arriving batch's value
       // histogram scored against the pinned first-batch reference via
       // q158's exact PSI machinery; batch boundaries derive from the id
       // span, so the oracle reproduces them with no stream knowledge
-      Streaming.psiReplay(s, dir, s"$TMP/q267_src")
+      Streaming.psiReplay(s, dir, scratch("q267_src", dir))
         .orderBy("batch_id")),
     "q268_ivfpq_curve" -> ((s, dir) => {
       // the nprobe trade-off curve q256's single point implies: composed
@@ -988,7 +988,7 @@ private[graft] object RegistryAnnDedup {
       // slice; the occupancy audit of the accumulated index must equal the
       // batch assignment of the whole corpus (the oracle IS q283's SQL) —
       // the exactly-once statement for streaming index ingest
-      Streaming.vectorIngestReplay(s, dir, s"$TMP/q292_src")
+      Streaming.vectorIngestReplay(s, dir, scratch("q292_src", dir))
         .orderBy("cell")),
     "q293_source_sketch" -> ((s, dir) => {
       // DATASET-level overlap estimation from MERGEABLE MinHash sketches —
@@ -1403,7 +1403,7 @@ private[graft] object RegistryAnnDedup {
       // StorageSpec asserts the file accounting (old generation gone,
       // naive dir read ≡ v3 afterwards).
       import graft.storage.Storage
-      val tmp = s"$TMP/q306_vac"; val log = s"$TMP/q306_vac_log"
+      val tmp = scratch("q306_vac", dir); val log = scratch("q306_vac_log", dir)
       val ev = T(s, dir, "events")
         .withColumn("day", TextFunctions.dayString(col("ts")))
       ev.filter(col("day") < "2024-01-16")

@@ -9,6 +9,7 @@ import graft.stream.Streaming
 import graft.multimodal.Multimodal
 
 import SparkEntry._
+import graft.storage.Materialize.scratch
 
 /** Registry part: storage, streaming-replay, privacy and drift keys (q314-q383).
   *
@@ -181,8 +182,7 @@ private[graft] object RegistryPipelineOps {
       // substrings/casts; the gate aggregates per segment so the oracle
       // (which aggregates the source table directly) proves the roundtrip
       // lossless, sign and padding included.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val path = s"$TMP/fixed_width/$safe"
+      val path = scratch("fixed_width", dir)
       T(s, dir, "customer").select(
           format_string("%010d%-10s%012d", col("c_custkey"), col("c_mktsegment"),
             ops.Num.roundz(col("c_acctbal") * 100, 0).cast("long")).as("value"))
@@ -207,8 +207,7 @@ private[graft] object RegistryPipelineOps {
       // the one you needed. The gate row is the full-feed accounting
       // identity predicted from the planting rule; parse + quarantine
       // classification are entirely map-side.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val path = s"$TMP/jsonl_corrupt/$safe"
+      val path = scratch("jsonl_corrupt", dir)
       T(s, dir, "documents").select(
           when(col("doc_id") % 10 === 7,
             concat(lit("{oops "), col("doc_id").cast("string")))
@@ -508,8 +507,7 @@ private[graft] object RegistryPipelineOps {
       // archive. The gate proves byte fidelity through compress +
       // decompress by aggregating the parsed lines against the source
       // table.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val path = s"$TMP/gzip_text/$safe"
+      val path = scratch("gzip_text", dir)
       T(s, dir, "documents")
         .select(concat(col("doc_id").cast("string"), lit("|"), col("text")).as("value"))
         .write.mode("overwrite").option("compression", "gzip").text(path)
@@ -529,8 +527,7 @@ private[graft] object RegistryPipelineOps {
       // with doubled cents under partitionOverwriteMode=dynamic, and
       // proves every other day byte-identical; the session config is
       // restored in a finally.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val path = s"$TMP/dyn_overwrite/$safe"
+      val path = scratch("dyn_overwrite", dir)
       val ev = T(s, dir, "events").select(
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         ops.Num.roundz(col("value") * 100, 0).cast("long").as("cents"))
@@ -557,8 +554,7 @@ private[graft] object RegistryPipelineOps {
       // is read. PlanSpec asserts the pruning subquery is in the fact
       // scan's partition filters; the gate proves the join result
       // matches the static-filter twin.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val path = s"$TMP/dpp_fact/$safe"
+      val path = scratch("dpp_fact", dir)
       val ev = T(s, dir, "events").select(
         date_format(col("ts"), "yyyy-MM-dd").as("day"),
         ops.Num.roundz(col("value") * 100, 0).cast("long").as("cents"))
@@ -683,7 +679,7 @@ private[graft] object RegistryPipelineOps {
       // final snapshot must equal the one-shot batch fold — the oracle
       // IS q317's SQL, which makes the gate row the incremental ≡ batch
       // proof. See [[Streaming.cdcApplyReplay]].
-      Streaming.cdcApplyReplay(s, dir, s"$TMP/q339_src")),
+      Streaming.cdcApplyReplay(s, dir, scratch("q339_src", dir))),
     "q340_padding_waste" -> ((s, dir) =>
       // dynamic-batching padding ledger: docs bucket to the next
       // power-of-two length tier (the bucketed-batching serving/training
@@ -1465,12 +1461,11 @@ private[graft] object RegistryPipelineOps {
       // discipline for the messiest text format in production ingest).
       // multiLine forces whole-file parse units (not line-splittable) —
       // the 100 TB note: shard the FILES, not the lines, for this format.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
       val out = T(s, dir, "documents")
         .select(col("doc_id"),
           concat(substring(col("text"), 1, 20), lit("\nhe said \""),
             col("source"), lit("\"")).as("field"))
-      val tmp = s"$TMP/q369_csv/$safe"
+      val tmp = scratch("q369_csv", dir)
       out.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true").option("multiLine", "true")
         .schema(out.schema).csv(tmp)
@@ -1720,10 +1715,9 @@ private[graft] object RegistryPipelineOps {
       // union ever gets to. The schemas are read back from the written
       // parquet FOOTERS (metadata I/O only — no data scan at any size);
       // the ledger itself is |fields| rows built from that metadata.
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
       val docs = T(s, dir, "documents")
-      val pa = s"$TMP/q378_schema/$safe/a"
-      val pb = s"$TMP/q378_schema/$safe/b"
+      val pa = s"${scratch("q378_schema", dir)}/a"
+      val pb = s"${scratch("q378_schema", dir)}/b"
       docs.select(col("doc_id"), col("source"), col("n_chars"))
         .limit(10).write.mode("overwrite").parquet(pa)
       docs.select(col("doc_id"), col("n_chars").cast("int").as("n_chars"),

@@ -9,6 +9,7 @@ import graft.stream.Streaming
 import graft.multimodal.Multimodal
 
 import SparkEntry._
+import graft.storage.Materialize.scratch
 
 /** Registry part: the reference surface (q01-q40) and the round-5/6 stats batch (q143-q172).
   *
@@ -22,7 +23,7 @@ private[graft] object RegistryReference {
     // ---------------------------------------------------------- §2.1 sources
     "q01_csv_scan" -> ((s, dir) => {
       val region = T(s, dir, "region")
-      val tmp = s"$TMP/q01_csv"
+      val tmp = scratch("q01_csv", dir)
       region.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true").schema(region.schema).csv(tmp).orderBy("r_regionkey")
     }),
@@ -53,7 +54,7 @@ private[graft] object RegistryReference {
         .orderBy("custkey")
     }),
     "q04_table_sink_append" -> ((s, dir) => {
-      val sink = s"$TMP/q04_sink"
+      val sink = scratch("q04_sink", dir)
       val li = T(s, dir, "lineitem")
       li.filter(col("l_returnflag") === "R").write.mode("overwrite").parquet(sink)
       li.filter(col("l_returnflag") === "A").write.mode("append").parquet(sink)
@@ -280,8 +281,8 @@ private[graft] object RegistryReference {
       // snapshot-isolation time travel: v1 commits the first half-month,
       // v2 appends the rest to the SAME directory; reading v1 afterwards
       // must not see the appended files — the txn-log read, not a data copy
-      val tmp = s"$TMP/q149_tt"
-      val log = s"$TMP/q149_tt_log"
+      val tmp = scratch("q149_tt", dir)
+      val log = scratch("q149_tt_log", dir)
       val ev = T(s, dir, "events")
         .withColumn("day", TextFunctions.dayString(col("ts")))
       ev.filter(col("day") < "2024-01-16")
@@ -299,8 +300,8 @@ private[graft] object RegistryReference {
       // incremental consumption: process ONLY the files the v2 commit added
       // — the change-feed read whose cost tracks the increment, not the
       // table (file-granularity complement of q123's row-level CDC)
-      val tmp = s"$TMP/q150_sd"
-      val log = s"$TMP/q150_sd_log"
+      val tmp = scratch("q150_sd", dir)
+      val log = scratch("q150_sd_log", dir)
       val ev = T(s, dir, "events")
         .withColumn("day", TextFunctions.dayString(col("ts")))
       ev.filter(col("day") < "2024-01-16")

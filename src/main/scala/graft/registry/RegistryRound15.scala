@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import SparkEntry._
+import graft.storage.Materialize
 import graft.ops.{Dedup, Relational, Similarity, TwoPhase}
 
 /** Registry part: round-15 additions (q442+) — the DENSITY-SCALED
@@ -118,11 +119,9 @@ private[graft] object RegistryRound15 {
     * cross-run cache: the Materialize key folds in the customer table's
     * content fingerprint and every new JVM recomputes). */
   private def nameGroupPairsIndex(s: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val idxDir = s"${SparkEntry.TMP}/name_pairs/${safe}_del1"
-    val cust = T(s, dir, "customer")
-    graft.storage.Materialize.once(graft.storage.Materialize.key(idxDir, cust)) {
-      nameGroupPairs(s, dir).write.mode("overwrite").parquet(idxDir)
+    val idxDir = Materialize.scratch("name_pairs/del1", dir)
+    Materialize.once(idxDir, T(s, dir, "customer")) {
+      nameGroupPairs(s, dir).write.parquet(idxDir)
     }
     s.read.parquet(idxDir)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import SparkEntry._
+import graft.storage.Materialize.scratch
 import graft.ops.{Num, Similarity}
 
 /** Registry part: round-16 additions (q451+).
@@ -78,7 +79,7 @@ private[graft] object RegistryRound16 {
         .orderBy("query_id", "rn")
     }),
     "q452_stream_ttl_dedup" -> ((s, dir) =>
-      graft.stream.Streaming.streamTtlDedupEras(s, dir, s"$TMP/stream_ttl")
+      graft.stream.Streaming.streamTtlDedupEras(s, dir, scratch("stream_ttl", dir))
         .orderBy("user_id", "era")),
     "q453_graph_ann" -> ((s, dir) => {
       // GRAPH-based ANN — the third serving family next to IVF (q58/q449)
@@ -170,7 +171,7 @@ private[graft] object RegistryRound16 {
       // stragglers under a 1-day horizon: most delayed rows are dropped as
       // LATE (the measured lag-2 watermark rule); see
       // Streaming.lateDataAudit for the pinned semantics
-      graft.stream.Streaming.lateDataAudit(s, dir, s"$TMP/stream_late")
+      graft.stream.Streaming.lateDataAudit(s, dir, scratch("stream_late", dir))
         .orderBy("day")),
     "q456_audio_fingerprint" -> ((s, dir) => {
       // Walsh–Hadamard audio fingerprint dedup: per doc a 64-sample PCM
@@ -264,7 +265,7 @@ private[graft] object RegistryRound16 {
       // lists ONLY the matching partition directory, and every value
       // (including the binary double o_totalprice) round-trips exactly
       val orders = T(s, dir, "orders")
-      val tmp = s"$TMP/q454_orc"
+      val tmp = scratch("q454_orc", dir)
       orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderdate"), col("o_orderpriority"))
         .write.mode("overwrite").partitionBy("o_orderpriority").orc(tmp)
@@ -325,8 +326,8 @@ private[graft] object RegistryRound16 {
         |WHERE r.rn <= 5 ORDER BY r.query_id, r.rn""".stripMargin,
     "q452_stream_ttl_dedup" ->
       // the pinned eviction recursion, unrolled on the round-17 3-DAY
-      // BUCKET spine (prototyped scripts/proto_r17_stream.py against a
-      // pure-python replay of the measured rule): era j+1 = the user's
+      // BUCKET spine (the measured rule is pinned by StreamingSpec's "q452
+      // semantics pin" and "q452: TTL bounds" tests): era j+1 = the user's
       // first event bucket whose micro-batch sees an eviction watermark at
       // or past era j's expiry — evict_base(d) = the bucket TWO batches
       // back (the measured commit lag), condition date_diff(era_d,
@@ -429,7 +430,7 @@ private[graft] object RegistryRound16 {
         |ORDER BY o_orderkey""".stripMargin,
     "q455_late_data_audit" ->
       // the measured late rule replayed on the round-17 3-DAY BUCKET spine
-      // (prototyped scripts/proto_r17_stream.py): batch = bucket index
+      // (pinned by StreamingSpec's "q455 semantics pin"): batch = bucket index
       // (+3 for the delayed %17 stream), running max over batches <= N-2
       // minus the 1-day horizon, boundary row dropped (ts > wm survives) —
       // empty batches advance nothing
@@ -456,7 +457,8 @@ private[graft] object RegistryRound16 {
         |FROM ev e LEFT JOIN deliv dv ON dv.event_id = e.event_id
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q457_quantile_merge" ->
-      // the prototyped summary-merge recursion (scripts/proto_r16.py):
+      // the summary-merge recursion (error bound pinned by Round16Spec's
+      // "q457: summary estimates carry the equi-depth rank-error bound"):
       // per-shard CDF, 32 exact-rank bounds with integer weights, merged
       // weighted CDF vs the exact global CDF, ceil-rank targets
       """WITH ev AS (SELECT event_id % 8 AS shard,

@@ -9,6 +9,7 @@ import graft.stream.Streaming
 import graft.multimodal.Multimodal
 
 import SparkEntry._
+import graft.storage.Materialize.scratch
 
 /** Registry part: the statistics/ML batches (q384-q417) and the LLM-pipeline extensions (q41-q63, q116-q127).
   *
@@ -1155,7 +1156,7 @@ private[graft] object RegistryStatsMl {
     // as Round15Spec yardsticks built inline from ops/.
     "q63_orc_roundtrip" -> ((s, dir) => {
       val nation = T(s, dir, "nation")
-      val tmp = s"$TMP/q63_orc"
+      val tmp = scratch("q63_orc", dir)
       nation.coalesce(1).write.mode("overwrite").orc(tmp)
       s.read.schema(nation.schema).orc(tmp).orderBy("n_nationkey")
     }),
@@ -1177,7 +1178,7 @@ private[graft] object RegistryStatsMl {
       // schema drift across ingest batches: an early batch lacks a column
       // later batches carry; mergeSchema reads the union, old rows NULL
       val nation = T(s, dir, "nation")
-      val tmp = s"$TMP/q118_evo"
+      val tmp = scratch("q118_evo", dir)
       nation.select("n_nationkey", "n_name").coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/batch=1")
       nation.coalesce(1).write.mode("overwrite").parquet(s"$tmp/batch=2")
@@ -1229,20 +1230,14 @@ private[graft] object RegistryStatsMl {
       // small-files antipattern q133's compaction exists to fix).
       import s.implicits._
       val docs = T(s, dir, "documents")
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val tmp = s"$TMP/q122_bin/$safe"
+      val tmp = scratch("q122_bin", dir)
       // stage ONCE per (dir) per JVM: the operator under test is the
       // binaryFile SCAN; re-staging 5k small files per invocation made the
       // key's bench time mostly dirty-page writeback noise (round-15
       // adjudication of the r14 "q122 regression": isolated probes of
       // identical code ranged 1.3-2.8 s)
-      graft.storage.Materialize.once(graft.storage.Materialize.key(tmp, docs)) {
-        val root = java.nio.file.Paths.get(tmp)
-        if (java.nio.file.Files.exists(root)) {
-          val it = java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-          try it.forEach(p => java.nio.file.Files.delete(p)) finally it.close()
-        }
-        java.nio.file.Files.createDirectories(root)
+      graft.storage.Materialize.once(tmp, docs) {
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
         // a NULL text has no byte payload to stage — skipped on BOTH sides
         // (the oracle filters identically), instead of an executor NPE
         docs.filter(col("text").isNotNull)
@@ -1288,7 +1283,7 @@ private[graft] object RegistryStatsMl {
       // scans filtered on either dimension prune most files (StorageSpec
       // measures the per-file span shrink vs an unclustered layout). The
       // gate proves the interleave bit-exact through a write/read roundtrip.
-      val tmp = s"$TMP/q124_z"
+      val tmp = scratch("q124_z", dir)
       T(s, dir, "events")
         .select(col("event_id"),
           (col("user_id") % 1024).cast("long").as("xb"),

@@ -9,6 +9,7 @@ import graft.stream.Streaming
 import graft.multimodal.Multimodal
 
 import SparkEntry._
+import graft.storage.Materialize.scratch
 
 /** Registry part: warehouse, multimodal and text-analysis keys (q64-q141).
   *
@@ -24,7 +25,7 @@ private[graft] object RegistryWarehouseText {
       // reference's collectors would meet in the wild): write, read back
       // with declared schema, prove value fidelity through the gate
       val nation = T(s, dir, "nation")
-      val tmp = s"$TMP/q115_xml"
+      val tmp = scratch("q115_xml", dir)
       nation.coalesce(1).write.mode("overwrite")
         .option("rootTag", "nations").option("rowTag", "nation").xml(tmp)
       s.read.schema(nation.schema)
@@ -186,7 +187,7 @@ private[graft] object RegistryWarehouseText {
       // the flatMapGroupsWithState sessionizer replayed under the SAME oracle
       // as the built-in session_window (q57): custom state must agree with
       // the declarative twin (flush-sentinel determinism — Streaming.scala)
-      Streaming.statefulSessionsReplay(s, dir, s"$TMP/q75_src")
+      Streaming.statefulSessionsReplay(s, dir, scratch("q75_src", dir))
         .orderBy("user_id", "session_start")),
     "q76_curation_chain" -> ((s, dir) =>
       // the composed C4/Gopher-style curation pipeline with per-doc audit
@@ -289,7 +290,7 @@ private[graft] object RegistryWarehouseText {
       // no dir cleanup: Derby stays booted for the JVM's lifetime, so
       // deleting under it between calls would corrupt the instance;
       // Overwrite mode replaces the table on every call instead
-      val db = s"$TMP/q92_derby"
+      val db = scratch("q92_derby", dir)
       val url = s"jdbc:derby:$db;create=true"
       val agg = T(s, dir, "events")
         .groupBy(col("event_type"), TextFunctions.dayString(col("ts")).as("day"))
@@ -505,7 +506,7 @@ private[graft] object RegistryWarehouseText {
       // hive-style date partitioning — THE 100 TB layout for time-range
       // scans: the filtered read prunes to 5 of 30 day directories before
       // any row is touched (PlanSpec asserts the pruned partition count)
-      val tmp = s"$TMP/q99_part"
+      val tmp = scratch("q99_part", dir)
       T(s, dir, "events")
         .withColumn("day", TextFunctions.dayString(col("ts")))
         .write.mode("overwrite").partitionBy("day").parquet(tmp)
@@ -683,7 +684,7 @@ private[graft] object RegistryWarehouseText {
       // outer stream-stream attribution: unmatched purchases survive as
       // null-extended rows, flushed deterministically by watermark sentinels
       // (Streaming.scala); oracle = the batch LEFT JOIN twin
-      Streaming.streamOuterAttribution(s, dir, s"$TMP/q114_src")
+      Streaming.streamOuterAttribution(s, dir, scratch("q114_src", dir))
         // null view_id sorts differently in the two engines — make the
         // gate order explicit: nulls first, like Spark's asc default
         .orderBy(col("purchase_id"), col("view_id").asc_nulls_first)),
@@ -726,7 +727,7 @@ private[graft] object RegistryWarehouseText {
       // files over 30 days) + manifest consulted on the driver → a 7-day
       // scan opens ~2 of 8 files (StorageSpec asserts the prune count);
       // result ≡ full scan + filter, which is exactly what the oracle runs
-      val tmp = s"$TMP/q132_man"
+      val tmp = scratch("q132_man", dir)
       T(s, dir, "events")
         .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(tmp)
@@ -741,7 +742,7 @@ private[graft] object RegistryWarehouseText {
       // lakehouse OPTIMIZE: a fragmented hive layout (16 writer tasks × 30
       // day dirs ≈ 480 small files) compacts to one file per day with the
       // layout — and its pruning — intact; the gate proves row fidelity
-      val tmp = s"$TMP/q133_comp"
+      val tmp = scratch("q133_comp", dir)
       T(s, dir, "events")
         .withColumn("day", TextFunctions.dayString(col("ts")))
         .repartition(16)

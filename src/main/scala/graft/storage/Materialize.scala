@@ -1,23 +1,31 @@
 package graft.storage
 
+import java.io.File
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.DataFrame
 
-/** Write-once-per-JVM materialization guard — the shared discipline behind
-  * the dedup component index, the co-purchase edge table, and the LM score
-  * table: a derivation several consumers share is computed and persisted
-  * exactly once per (input, params) key per JVM, atomically (concurrent
-  * first touches block on `computeIfAbsent` rather than double-write), and
-  * every NEW JVM recomputes on first touch so a stale on-disk artifact can
-  * never be served. The key must encode the input identity AND every
-  * parameter the derivation depends on.
+/** Where scratch lives and how a shared derivation is built once — the one
+  * mechanism behind the dedup component index, the co-purchase edge table,
+  * the LM score table, the registry's staged round-trip outputs and the
+  * streaming replays' staged inputs.
   *
-  * Input identity is CONTENT, not path: callers fold in
-  * [[inputFingerprint]] — a hash of the input's file listing with sizes and
-  * mtimes — so a long-lived JVM (server / notebook deployment) that
-  * rewrites an input in place gets a fresh derivation on next touch instead
-  * of being served the stale artifact (the write targets the same indexDir,
-  * so the refresh overwrites it). The fingerprint is a driver-side metadata
-  * listing, never a data read.
+  * Scratch root: one directory per JVM, `target/qtmp/run-<pid>` under the
+  * working directory, created on first use. Creating it sweeps every
+  * sibling `run-<pid>` whose process is gone, so a run can never see
+  * another run's artifacts: a fresh JVM always recomputes, and two
+  * concurrent JVMs (a test suite next to a verify run) never overwrite
+  * each other's files.
+  *
+  * Build-once guard: [[once]] rebuilds `dir` only when the input CONTENT
+  * differs from the one its last build used — compared by
+  * [[inputFingerprint]], a hash of the input's file listing with sizes and
+  * mtimes — so a long-lived JVM that rewrites an input in place gets a
+  * fresh derivation on its next touch. Concurrent
+  * first touches (any session, any thread) block on a per-dir lock rather
+  * than double-write, and `dir` is cleared before a build and after a
+  * failed one, so a build that throws never leaves partial output for the
+  * next reader.
   *
   * This is the single-process analog of a production pipeline's
   * materialized-table step (per ingest batch, the component map / edge
@@ -26,29 +34,73 @@ import org.apache.spark.sql.DataFrame
   * per consumer).
   */
 object Materialize {
-  private val done = new java.util.concurrent.ConcurrentHashMap[String, Unit]()
+  private val RunDir = """run-(\d+)""".r
 
-  def once(key: String)(write: => Unit): Unit =
-    done.computeIfAbsent(key, _ => write)
+  private lazy val root: File =
+    runRoot(new File("target/qtmp").getAbsoluteFile, ProcessHandle.current().pid())
+
+  /** Creates `base/run-<pid>` after deleting every sibling `run-<n>` whose
+    * process is no longer alive. */
+  private[graft] def runRoot(base: File, pid: Long): File = {
+    Option(base.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
+      f.getName match {
+        case RunDir(n) if n.toLong != pid &&
+            !ProcessHandle.of(n.toLong).filter(_.isAlive).isPresent =>
+          deleteRecursively(f)
+        case _ =>
+      }
+    }
+    val dir = new File(base, s"run-$pid")
+    dir.mkdirs()
+    dir
+  }
+
+  /** This JVM's scratch path for artifact `name` derived from the table
+    * directory `inputDir` (sanitized into one path segment). */
+  def scratch(name: String, inputDir: String): String =
+    s"$root/$name/${inputDir.replaceAll("[^A-Za-z0-9._-]", "_")}"
+
+  /** dir -> fingerprint of the input its current content was built from */
+  private val builtFrom = new ConcurrentHashMap[String, String]()
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
+
+  /** Runs `build` (which writes `dir`) unless this JVM's last build of `dir`
+    * was from the current content of `input`. `dir` must encode every
+    * parameter the derivation depends on. */
+  def once(dir: String, input: DataFrame)(build: => Unit): Unit = {
+    val fp = inputFingerprint(input)
+    if (builtFrom.get(dir) != fp) locks.computeIfAbsent(dir, _ => new AnyRef).synchronized {
+      if (builtFrom.get(dir) != fp) {
+        val out = new File(dir)
+        builtFrom.remove(dir)
+        deleteRecursively(out)
+        try build
+        catch { case e: Throwable => deleteRecursively(out); throw e }
+        builtFrom.put(dir, fp)
+      }
+    }
+  }
+
+  private[graft] def deleteRecursively(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteRecursively)
+    f.delete(): Unit
+  }
 
   /** Cheap content fingerprint of a DataFrame's file-source inputs: a hash
     * over the sorted (uri, size, mtime) triples. Any rewrite changes it —
     * Spark part-file names are unique per write, so even a same-length
     * rewrite flips the listing. Non-file-backed inputs (in-memory test
-    * frames) yield a constant, degrading to the plain path key. */
+    * frames) yield a constant, degrading to the plain dir key. The
+    * fingerprint is a file-metadata listing, never a data read. */
   def inputFingerprint(df: DataFrame): String = {
     val entries = df.inputFiles.sorted.map { u =>
       val f = try {
         val uri = java.net.URI.create(u)
-        new java.io.File(if (uri.getPath == null) u else uri.getPath)
-      } catch { case _: IllegalArgumentException => new java.io.File(u) }
+        new File(if (uri.getPath == null) u else uri.getPath)
+      } catch { case _: IllegalArgumentException => new File(u) }
       s"$u:${f.length}:${f.lastModified}"
     }
     val h = entries.foldLeft(1125899906842597L)((acc, s) => acc * 31 + s.hashCode)
     java.lang.Long.toHexString(h)
   }
-
-  /** The composite key for [[once]]: artifact dir + input content. */
-  def key(indexDir: String, input: DataFrame): String =
-    s"$indexDir#${inputFingerprint(input)}"
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
+import graft.storage.Materialize
+import graft.storage.Materialize.deleteRecursively
 
 /** Structured Streaming re-expression of the reference's poll-loop "streams"
   * (SURVEY.md §2.9). The reference streams by scheduling a fetch every 1s/3min/
@@ -42,40 +44,26 @@ object Streaming {
     } else None
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Crash-safe batch stager shared by the replay gates: writes each slice
+  /** Batch stager shared by the replay gates: writes each slice of `input`
     * as one `bNNN.parquet` file with ascending names AND mtimes (the file
-    * source discovers them in order), then commits with a `_SUCCESS`
-    * sentinel. Two crash-recovery rules: (1) a stage dir WITHOUT the
-    * sentinel is a partial stage from an interrupted run — wipe it before
-    * re-staging (a prior version re-staged over it and Files.move without
-    * REPLACE threw FileAlreadyExistsException); (2) the move itself uses
-    * REPLACE_EXISTING so even a same-name leftover can't fail the commit. */
-  private def stageBatches(stageDir: String, slices: Seq[DataFrame]): Unit = {
-    val root = new java.io.File(stageDir)
-    if (!new java.io.File(root, "_SUCCESS").exists()) {
-      if (root.exists()) deleteRecursively(root) // partial stage: start clean
+    * source discovers them in order), once per JVM per input content
+    * ([[Materialize.once]] — a crashed stage is cleared and rebuilt). */
+  private def stageBatches(stageDir: String, input: DataFrame,
+                           slices: Seq[DataFrame]): Unit =
+    Materialize.once(stageDir, input) {
+      val root = new java.io.File(stageDir)
       root.mkdirs()
       slices.zipWithIndex.foreach { case (df, i) =>
         val tmp = s"$stageDir/__stage$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        df.coalesce(1).write.parquet(tmp)
         val part = new java.io.File(tmp).listFiles()
           .filter(_.getName.endsWith(".parquet")).head
         val dst = new java.io.File(root, f"b$i%03d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        java.nio.file.Files.move(part.toPath, dst.toPath)
         dst.setLastModified(1000000L * (i + 1))
         deleteRecursively(new java.io.File(tmp))
       }
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(stageDir, "_SUCCESS"), "")
-      ()
     }
-  }
 
   /** Eagerly materialize a gate result that still reads from the per-run
     * temp `work` tree (state snapshots + streaming checkpoint), then delete
@@ -282,8 +270,8 @@ object Streaming {
     val ev = evDay.withColumn("__d0", lit(d0))
       .selectExpr("user_id",
         s"timestampadd(DAY, $bucketDays * (datediff(__d, __d0) div $bucketDays), __d0) AS ts")
-    val stageDir = s"$stageDirBase/${stageKey(dir)}_ttl_b${bucketDays}_d$divisor"
-    stageBatches(stageDir, days.toSeq.map(d => ev.filter(col("ts") === d)))
+    val stageDir = s"$stageDirBase/ttl_b${bucketDays}_d$divisor"
+    stageBatches(stageDir, evDay, days.toSeq.map(d => ev.filter(col("ts") === d)))
     val emitted = runToResult(spark, s =>
       s.readStream.schema("user_id BIGINT, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1)
@@ -354,8 +342,8 @@ object Streaming {
         else ev.filter(lit(false))
       onTime.unionByName(late).select("event_id", "ts")
     }
-    val stageDir = s"$stageDirBase/${stageKey(dir)}_late_b${bucketDays}_d$delayBatches"
-    stageBatches(stageDir, (0 until nBatches).map(slice))
+    val stageDir = s"$stageDirBase/late_b${bucketDays}_d$delayBatches"
+    stageBatches(stageDir, ev0, (0 until nBatches).map(slice))
     // append mode + batch-side counting, measured AGAINST the in-stream
     // complete-mode ledger: a complete-mode agg after the dedup adds a
     // second stateful operator (extra shuffle + state commit every
@@ -436,23 +424,18 @@ object Streaming {
     * horizon: it deterministically closes every real session on arrival, and
     * its own one-event session stays open and is never emitted. The result
     * provably equals the batch `session_window` twin (q57's oracle). */
-  def statefulSessionsReplay(spark: SparkSession, dir: String, stageDirBase: String,
+  def statefulSessionsReplay(spark: SparkSession, dir: String, stageDir: String,
                              gapMinutes: Int = 30,
                              extraConfs: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
     // the staged source is INPUT SYNTHESIS (turning the batch table into a
     // replayable stream + flush sentinels), not the operator under test —
-    // stage once per input CONTENT and reuse (same policy as q03's nested
-    // build). The key folds every input file's (name, size, mtime) into a
-    // 64-bit fingerprint alongside the full path, so regenerating the data
-    // under the same path (or a path collision) forces a fresh stage
-    // instead of silently replaying a stale one.
-    val stageDir = s"$stageDirBase/${stageKey(dir)}"
-    if (!new java.io.File(stageDir, "_SUCCESS").exists()) {
-      val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"))
+    // staged once per JVM per input CONTENT and reused by every replay
+    val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"))
+    Materialize.once(stageDir, ev) {
       val flush = ev.select(col("user_id")).distinct()
         .withColumn("ts", lit(flushTs(ev)))
-      ev.unionByName(flush).write.mode("overwrite").parquet(stageDir)
+      ev.unionByName(flush).write.parquet(stageDir)
     }
     runToResult(spark, { s =>
       val stream = s.readStream
@@ -505,18 +488,17 @@ object Streaming {
     * unmatched purchase flushes deterministically. Sentinels filter out of
     * the result; equality with the batch LEFT JOIN twin is the oracle. */
   def streamOuterAttribution(spark: SparkSession, dir: String,
-                             stageDirBase: String): DataFrame = {
-    val stageDir = s"$stageDirBase/${stageKey(dir)}"
-    if (!new java.io.File(stageDir, "_SUCCESS").exists()) {
-      val ev = Tables.events(spark, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+                             stageDir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+    Materialize.once(stageDir, ev) {
       val sentinels = spark.createDataFrame(Seq(
         (-1L, "2025-06-01 00:00:00", -1L, "view"),
         (-2L, "2025-06-10 00:00:00", -1L, "purchase")))
         .toDF("event_id", "__ts", "user_id", "event_type")
         .select(col("event_id"), col("__ts").cast("timestamp").as("ts"),
           col("user_id"), col("event_type"))
-      ev.unionByName(sentinels).write.mode("overwrite").parquet(stageDir)
+      ev.unionByName(sentinels).write.parquet(stageDir)
     }
     val result = runToResult(spark, { s =>
       val events = s.readStream
@@ -548,34 +530,14 @@ object Streaming {
     result.filter(col("user_id") >= 0)
   }
 
-  /** Content fingerprint for a staged-input cache key: FNV-1a over the full
-    * sanitized path plus every file's (relative name, size, mtime) under the
-    * events table dir, hex-encoded. Changing any input byte's file metadata
-    * changes the key, so stale stages are never replayed. */
-  private[graft] def stageKey(dir: String, table: String = "events"): String = {
-    def fold(h: Long, s: String): Long =
-      s.foldLeft(h)((acc, c) => (acc ^ c.toLong) * 0x100000001b3L)
-    val root = new java.io.File(dir, s"$table.parquet")
-    val files =
-      if (root.isFile) Array(root)
-      else Option(root.listFiles()).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
-    // "v2": the staging FORMAT participates in the key (the flush sentinel
-    // became data-derived) — bump on any format change so an old staged dir
-    // can never satisfy a new stager
-    val h = files.foldLeft(fold(0xcbf29ce484222325L, s"v2:$dir")) { (acc, f) =>
-      fold(acc, s"${f.getName}:${f.length}:${f.lastModified}")
-    }
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${safe}_${java.lang.Long.toHexString(h)}"
-  }
-
   /** Flush-sentinel timestamp DERIVED from the staged input: max(ts) + 48 h,
     * comfortably past every replay's watermark (≤ 1 h) + window/gap (≤ 1 day)
     * horizon. A hard-coded far-future date silently withholds tail
     * windows/ledgers the moment regenerated testdata crosses into its
     * horizon; anchoring on the data moves the sentinel with it (the q253
     * data-anchored-split convention). One scalar driver action at STAGE time
-    * only — the staged file is reused per input content thereafter. */
+    * only — the staged file is reused for that input content for the rest of
+    * the JVM. */
   private def flushTs(ev: DataFrame, tsCol: String = "ts"): java.sql.Timestamp = {
     val mx = ev.agg(max(col(tsCol))).head.getTimestamp(0)
     require(mx != null, "flushTs: staged input has no rows / null timestamps")
@@ -592,14 +554,13 @@ object Streaming {
     * window — a bounded partition, never raw events). A far-future
     * sentinel (item −1) flushes the tail windows on the finite replay and
     * is filtered batch-side (the q114 pushdown lesson). */
-  def trendingReplay(spark: SparkSession, dir: String, stageDirBase: String,
+  def trendingReplay(spark: SparkSession, dir: String, stageDir: String,
                      topK: Int): DataFrame = {
-    val stageDir = s"$stageDirBase/${stageKey(dir)}"
-    if (!new java.io.File(stageDir, "_SUCCESS").exists()) {
-      val ev = Tables.events(spark, dir).select(col("ts"), col("props"))
+    val ev = Tables.events(spark, dir).select(col("ts"), col("props"))
+    Materialize.once(stageDir, ev) {
       val sentinel = spark.createDataFrame(Seq((flushTs(ev), """{"k": -1}""")))
         .toDF("ts", "props")
-      ev.unionByName(sentinel).write.mode("overwrite").parquet(stageDir)
+      ev.unionByName(sentinel).write.parquet(stageDir)
     }
     val emitted = runToResult(spark, { s =>
       s.readStream.schema("ts TIMESTAMP, props STRING").parquet(stageDir)
@@ -667,15 +628,14 @@ object Streaming {
     * batch side (inside the streaming plan the predicate would be pushed
     * below the watermark node and prune the sentinel at the scan — the
     * q114 lesson). */
-  def quotaReplay(spark: SparkSession, dir: String, stageDirBase: String,
+  def quotaReplay(spark: SparkSession, dir: String, stageDir: String,
                   maxPerHour: Int): DataFrame = {
     import spark.implicits._
-    val stageDir = s"$stageDirBase/${stageKey(dir)}"
-    if (!new java.io.File(stageDir, "_SUCCESS").exists()) {
-      val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"))
+    val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"))
+    Materialize.once(stageDir, ev) {
       val sentinel = spark.createDataFrame(Seq((-1L, flushTs(ev))))
         .toDF("user_id", "ts")
-      ev.unionByName(sentinel).write.mode("overwrite").parquet(stageDir)
+      ev.unionByName(sentinel).write.parquet(stageDir)
     }
     runToResult(spark, { s =>
       val stream = s.readStream
@@ -708,7 +668,7 @@ object Streaming {
     * (restart-safe), not executor memory.
     *
     * Output: (doc_id, batch_id = id div span) for survivors. */
-  def nearDupGateReplay(spark: SparkSession, dir: String, stageDirBase: String,
+  def nearDupGateReplay(spark: SparkSession, dir: String, stageDir: String,
                         batches: Int = 4, shingleK: Int = 2,
                         numHashes: Int = 16, bands: Int = 8,
                         threshold: Double = 0.25): DataFrame = {
@@ -716,11 +676,8 @@ object Streaming {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
     val span = (maxId + batches) / batches // ceil((maxId+1)/batches)
-    // stage once per input content: `batches` single-file slices in
-    // ascending-id order (ascending names AND mtimes — the file source
-    // discovers them in order)
-    val stageDir = s"$stageDirBase/${stageKey(dir, "documents")}"
-    stageBatches(stageDir, (0 until batches).map(i =>
+    // `batches` single-file slices in ascending-id order
+    stageBatches(stageDir, docs, (0 until batches).map(i =>
       docs.filter(col("doc_id") >= i * span && col("doc_id") < (i + 1) * span)))
     // fresh work area per run: the index/survivor accumulation is the
     // query's STATE and must start empty
@@ -801,14 +758,13 @@ object Streaming {
     * regardless of accumulated index size (ingest never reads the index,
     * unlike the near-dup probe); the index lives in parquet, never
     * executor memory, and compaction is [[graft.storage.Storage]]'s story. */
-  def vectorIngestReplay(spark: SparkSession, dir: String, stageDirBase: String,
+  def vectorIngestReplay(spark: SparkSession, dir: String, stageDir: String,
                          batches: Int = 4): DataFrame = {
     import graft.ops.Similarity
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
     val span = (maxId + batches) / batches // ceil((maxId+1)/batches)
-    val stageDir = s"$stageDirBase/${stageKey(dir, "embeddings")}"
-    stageBatches(stageDir, (0 until batches).map(i =>
+    stageBatches(stageDir, emb, (0 until batches).map(i =>
       emb.filter(col("vec_id") >= i * span && col("vec_id") < (i + 1) * span)))
     val work = java.nio.file.Files.createTempDirectory("graft_vec_ingest").toString
     val idxDir = s"$work/index"
@@ -866,7 +822,7 @@ object Streaming {
     * lives in parquet between batches, never in executor memory.
     */
   def cdcApplyReplay(spark: SparkSession, dir: String,
-                     stageDirBase: String): DataFrame = {
+                     stageDir: String): DataFrame = {
     val base = Tables.customer(spark, dir).select(col("c_custkey"),
       graft.ops.Num.roundz(col("c_acctbal") * 100, 0).cast("long").as("cents"),
       col("c_mktsegment").as("segment"))
@@ -882,8 +838,7 @@ object Streaming {
       base.filter(col("c_custkey") % 20 === 0)
         .select(col("c_custkey"), lit(3L).as("seq"), lit("I").as("op"),
           lit(555L).as("cents"), lit("WINBACK").as("segment")))
-    val stageDir = s"$stageDirBase/${stageKey(dir, "customer")}"
-    stageBatches(stageDir, slices)
+    stageBatches(stageDir, base, slices)
     val work = java.nio.file.Files.createTempDirectory("graft_cdc_apply").toString
     val stateDir = s"$work/state"
     new java.io.File(stateDir).mkdirs()
@@ -951,14 +906,13 @@ object Streaming {
     * joined against the bins-sized reference metadata — the monitor costs
     * O(batch) regardless of history; reference + emitted rows live in
     * parquet, never executor memory. */
-  def psiReplay(spark: SparkSession, dir: String, stageDirBase: String,
+  def psiReplay(spark: SparkSession, dir: String, stageDir: String,
                 batches: Int = 4): DataFrame = {
     import graft.ops.Stats
     val ev = Tables.events(spark, dir).select(col("event_id"), col("value"))
     val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
     val span = (maxId + batches) / batches
-    val stageDir = s"$stageDirBase/${stageKey(dir)}"
-    stageBatches(stageDir, (0 until batches).map(i =>
+    stageBatches(stageDir, ev, (0 until batches).map(i =>
       ev.filter(col("event_id") >= i * span && col("event_id") < (i + 1) * span)))
     val work = java.nio.file.Files.createTempDirectory("graft_psi_monitor").toString
     val refDir = s"$work/reference"; val outDir = s"$work/out"

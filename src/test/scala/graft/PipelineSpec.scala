@@ -2,6 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.Pipeline
@@ -63,6 +66,40 @@ class PipelineSpec extends SparkSpec {
     assert(sentiments("rc2") == "negative") // bad bad crash
     assert(sentiments("yc1") == "positive") // great, love
     assert(sentiments("rc3") == "neutral")  // null body -> no tokens -> 0
+  }
+
+  test("run's output schema: names, types and order of the enriched store table") {
+    val out = Pipeline.run(reddit, chan, youtube, Seq("yc2").toDF("comment_id"))
+    assert(out.schema.toDDL == Seq("comment_id STRING", "platform STRING NOT NULL",
+      "parent_id STRING", "body STRING", "author STRING", "score INT NOT NULL",
+      "created_ts TIMESTAMP", "cleaned_body STRING", "sentiment_score DOUBLE",
+      "sentiment STRING NOT NULL", "hate_speech_confidence DOUBLE",
+      "is_hate_speech BOOLEAN").mkString(","))
+  }
+
+  test("the fused plan cleans each row once and scans each raw input once") {
+    val base = java.nio.file.Files.createTempDirectory("graft_pipeline_plan").toString
+    reddit.write.parquet(s"$base/reddit")
+    chan.write.parquet(s"$base/chan")
+    youtube.write.parquet(s"$base/youtube")
+    val out = Pipeline.run(spark.read.parquet(s"$base/reddit"),
+      spark.read.parquet(s"$base/chan"), spark.read.parquet(s"$base/youtube"),
+      Seq("yc2").toDF("comment_id"))
+    assert(out.collect().length == 6) // runs the frame's own plan to its AQE-final form
+    object Plan extends AdaptiveSparkPlanHelper
+    val plan = out.queryExecution.executedPlan
+    val scans = Plan.collectWithSubqueries(plan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName).mkString
+    }
+    assert(scans.sorted == Seq("chan", "reddit", "youtube"), plan.toString)
+    val stripNodes = Plan.collectWithSubqueries(plan) {
+      case p if p.expressions.exists(_.exists {
+        case r: RegExpReplace =>
+          r.regexp.foldable && String.valueOf(r.regexp.eval()).startsWith("https?://")
+        case _ => false
+      }) => p
+    }
+    assert(stripNodes.size == 1, plan.toString)
   }
 
   test("dashboard views: shares sum to 100 per platform, daily counts total") {

@@ -349,30 +349,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.select("comment_id").as[String].collect().sorted.toSeq == Seq("b", "c"))
   }
 
-  test("stageKey fingerprints input content, not just the path string") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stagekey").toFile
-    try {
-      val table = new java.io.File(dir, "events.parquet")
-      table.mkdirs()
-      val part = new java.io.File(table, "part-0.parquet")
-      java.nio.file.Files.write(part.toPath, "v1".getBytes)
-      val k1 = Streaming.stageKey(dir.getAbsolutePath)
-      assert(k1 == Streaming.stageKey(dir.getAbsolutePath)) // stable
-      // regenerating the data under the SAME path must change the key
-      java.nio.file.Files.write(part.toPath, "longer v2 bytes".getBytes)
-      part.setLastModified(part.lastModified + 5000)
-      val k2 = Streaming.stageKey(dir.getAbsolutePath)
-      assert(k1 != k2)
-      // keys are filesystem-safe single path segments
-      assert(!k1.contains("/") && k1.matches("[A-Za-z0-9._-]+_[0-9a-f]+"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-      }
-      rm(dir)
-    }
-  }
-
   test("quotaByHour: hand-computed hourly ledgers; sentinel closes the tail") {
     import Streaming.SessionEvent
     val src = java.nio.file.Files.createTempDirectory("graft_quota").toString
@@ -696,8 +672,7 @@ class StreamingSpec extends SparkSpec {
     val users = Tables.events(spark, sf).filter(col("user_id").isNotNull)
       .select("user_id").distinct().count()
     assert(eras.count(_._3 == 2L) > 0, "the horizon must BITE: some second eras")
-    val stage =
-      s"${SparkEntry.TMP}/stream_ttl/${Streaming.stageKey(sf)}_ttl_b3_d6"
+    val stage = s"${graft.storage.Materialize.scratch("stream_ttl", sf)}/ttl_b3_d6"
     val maxDay = eras.map(_._2.toLocalDate).max(Ordering.by[java.time.LocalDate, Long](_.toEpochDay))
     val h = 3L // horizon DAYS: 3-day buckets x (10-bucket fixture span div 6)
     // live state at end of replay = entries the final (lag-2) watermark has
