@@ -43,8 +43,17 @@ def sentinel_median(run):
 # Cross-core refusal (round-17 verdict item 2): the driver also benches at a
 # lower core count for its scaling measurement; comparing an 8-core run to a
 # 32-core record manufactures uniform phantom deltas. Records since round 18
-# carry "cpus"; when both sides carry it and disagree, refuse outright.
+# carry "cpus"; older records were all stamped at 32 cores, so when only one
+# side carries it the other is taken as 32 (and said so). When the two
+# disagree, refuse outright.
+RECORD_CPUS = 32
 co, cn = old.get("cpus"), new.get("cpus")
+if (co is None) != (cn is None):
+    tag = "old" if co is None else "new"
+    print(f"note: the {tag} record carries no cpus; taking it as "
+          f"{RECORD_CPUS}, the record core count")
+    co = RECORD_CPUS if co is None else co
+    cn = RECORD_CPUS if cn is None else cn
 if co is not None and cn is not None and co != cn:
     print(f"REFUSED: cross-core comparison (old cpus={co}, new cpus={cn}) — "
           "core-count changes runtime for every key; rerun the new stamp at "

@@ -40,7 +40,7 @@ object ProbeStreamIndex {
     val docs = spark.read.parquet(docsPath).select(col("doc_id"), col("text"))
     val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
     val span = (maxId + batches) / batches
-    val work = java.nio.file.Files.createTempDirectory("graft_idx_probe").toString
+    val work = graft.storage.Materialize.freshDir("idx_probe").getPath
     val idxDir = s"$work/index"
 
     def timeS[A](f: => A): (A, Double) = {

@@ -2,7 +2,8 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+
+import graft.stream.Streaming
 
 /** Streaming STATE depth probe (round-14 verdict item 8): measures — not
   * argues — the state story of the stateful pipelines (q38-shape ingest
@@ -32,61 +33,37 @@ object StreamStateProbe {
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- stage events into 8 time-ordered slices (one file per batch)
-    val work = new java.io.File("target/stream_state_probe")
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(work); work.mkdirs()
-    val stage = new java.io.File(work, "stage")
-    stage.mkdirs()
+    val stage = graft.storage.Materialize.scratch("stream_state_probe", dir)
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     // slice strictly by TIME so each batch advances the watermark
     val tcuts = ev.select(unix_micros(col("ts")).as("m"))
       .stat.approxQuantile("m", (1 to 7).map(_ / 8.0).toArray, 0.0)
     val tb = (Array(Long.MinValue.toDouble) ++ tcuts) :+ Double.MaxValue
-    tb.sliding(2).zipWithIndex.foreach { case (Array(lo, hi), i) =>
-      val slice = ev.filter(unix_micros(col("ts")) > lo &&
-        unix_micros(col("ts")) <= hi)
-      val tmp = new java.io.File(work, s"tmp$i")
-      slice.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(stage, f"b$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
-      rmrf(tmp)
-    }
-    val schema = spark.read.parquet(stage.getAbsolutePath).schema
+    Streaming.stageBatches(stage, ev, tb.toSeq.sliding(2).map { case Seq(lo, hi) =>
+      ev.filter(unix_micros(col("ts")) > lo && unix_micros(col("ts")) <= hi)
+    }.toSeq)
 
     final case class Res(pipeline: String, provider: String,
                          outRows: Long, batches: Int,
                          stateRows: Long, stateMemBytes: Long)
     var results = Vector.empty[Res]
-    var n = 0
 
     def run(pipeline: String, provider: String, mode: String)
            (build: DataFrame => DataFrame): Unit = {
-      n += 1
-      val qn = s"probe_$n"
-      val session = spark.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", "8")
-      if (provider == "rocksdb")
-        session.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val src = session.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage.getAbsolutePath)
-      val q = build(src).writeStream
-        .format("memory").queryName(qn).outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          new java.io.File(work, s"ckpt_$qn").getAbsolutePath)
-        .start()
-      q.awaitTermination()
+      val q = Streaming.replayToMemory(spark, s =>
+        build(s.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "1").parquet(stage)),
+        mode, statePartitions = Some(8),
+        extraConfs =
+          if (provider == "rocksdb")
+            Map("spark.sql.streaming.stateStore.providerClass" ->
+              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+          else Map.empty)
       val stateful = q.recentProgress.filter(_.stateOperators.nonEmpty)
       val last = stateful.lastOption
       results :+= Res(pipeline, provider,
-        session.table(qn).count(),
+        q.sparkSession.table(q.name).count(),
         q.recentProgress.length,
         last.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L),
         last.map(_.stateOperators.map(_.memoryUsedBytes).sum).getOrElse(0L))
@@ -132,7 +109,6 @@ object StreamStateProbe {
         s""""state_rows":${r.stateRows},"state_mem_bytes":${r.stateMemBytes}}""")
       .mkString("[", ",", "]")
     println(s"""{"probe":"stream_state","sf":"$dir","results":$json}""")
-    rmrf(work)
     spark.stop()
   }
 }

@@ -642,25 +642,27 @@ object Multimodal {
     // memory-backed stream + the thread's cached writer: the previous
     // ImageIO.createImageOutputStream / getImageWritersByFormatName pair
     // paid a disk-cache temp file and a registry walk PER SYNTHESIZED ROW
-    // (see [[Codec]]); sequence state resets with setOutput, so the cached
-    // writer is reusable across calls
+    // (see [[Codec]]); the cached writer is reusable across calls because
+    // every exit releases it from the stream, and a failed sequence also
+    // resets its sequence state
     val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
     val writer = Codec.writer("gif")
     writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    colors.foreach { rgb =>
-      val cm = new java.awt.image.IndexColorModel(8, 2,
-        Array(((rgb >> 16) & 0xff).toByte, 0.toByte),
-        Array(((rgb >> 8) & 0xff).toByte, 0.toByte),
-        Array((rgb & 0xff).toByte, 0.toByte))
-      // the fresh indexed raster is all zeros -> every pixel = palette[0]
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-    }
-    writer.endWriteSequence()
-    ios.close()
-    writer.setOutput(null)
+    try {
+      writer.prepareWriteSequence(null)
+      colors.foreach { rgb =>
+        val cm = new java.awt.image.IndexColorModel(8, 2,
+          Array(((rgb >> 16) & 0xff).toByte, 0.toByte),
+          Array(((rgb >> 8) & 0xff).toByte, 0.toByte),
+          Array((rgb & 0xff).toByte, 0.toByte))
+        // the fresh indexed raster is all zeros -> every pixel = palette[0]
+        val img = new java.awt.image.BufferedImage(
+          w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
+        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+      }
+      writer.endWriteSequence()
+    } catch { case e: Throwable => writer.reset(); throw e }
+    finally { writer.setOutput(null); ios.close() }
     out.toByteArray
   }
 

@@ -2,13 +2,14 @@ package graft.storage
 
 import java.io.File
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
 
 /** Where scratch lives and how a shared derivation is built once — the one
   * mechanism behind the dedup component index, the co-purchase edge table,
-  * the LM score table, the registry's staged round-trip outputs and the
-  * streaming replays' staged inputs.
+  * the LM score table, the registry's staged round-trip outputs, the
+  * streaming replays' staged inputs and their checkpoints and work dirs.
   *
   * Scratch root: one directory per JVM, `target/qtmp/run-<pid>` under the
   * working directory, created on first use. Creating it sweeps every
@@ -36,7 +37,7 @@ import org.apache.spark.sql.DataFrame
 object Materialize {
   private val RunDir = """run-(\d+)""".r
 
-  private lazy val root: File =
+  private[graft] lazy val root: File =
     runRoot(new File("target/qtmp").getAbsoluteFile, ProcessHandle.current().pid())
 
   /** Creates `base/run-<pid>` after deleting every sibling `run-<n>` whose
@@ -56,9 +57,21 @@ object Materialize {
   }
 
   /** This JVM's scratch path for artifact `name` derived from the table
-    * directory `inputDir` (sanitized into one path segment). */
+    * directory `inputDir`, sanitized into one path segment that never starts
+    * with `_` or `.` (names Spark's file listing treats as hidden). */
   def scratch(name: String, inputDir: String): String =
-    s"$root/$name/${inputDir.replaceAll("[^A-Za-z0-9._-]", "_")}"
+    s"$root/$name/${inputDir.replaceAll("[^A-Za-z0-9._-]", "_").replaceAll("^[_.]+", "")}"
+
+  private val freshCounter = new AtomicLong(0)
+
+  /** A new empty directory `<root>/<prefix>_<n>`, unique in this JVM (a
+    * leftover of a dead run that had the same PID is cleared). */
+  def freshDir(prefix: String): File = {
+    val dir = new File(root, s"${prefix}_${freshCounter.incrementAndGet()}")
+    deleteRecursively(dir)
+    dir.mkdirs()
+    dir
+  }
 
   /** dir -> fingerprint of the input its current content was built from */
   private val builtFrom = new ConcurrentHashMap[String, String]()

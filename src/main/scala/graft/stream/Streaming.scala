@@ -1,10 +1,9 @@
 package graft.stream
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.storage.Materialize
@@ -23,33 +22,12 @@ import graft.storage.Materialize.deleteRecursively
   */
 object Streaming {
 
-  private val nameCounter = new AtomicLong(0)
-
-  /** Checkpoint base for REPLAY-MODE queries (memory sink, AvailableNow):
-    * tmpfs when the platform has one. A replay checkpoint is throwaway by
-    * construction — the gate rebuilds the stream from the staged input every
-    * run — but Spark still fsyncs every micro-batch's offset log, commit
-    * log, and state-store delta files into it; on a disk-backed tmpdir that
-    * fixed cost dominates the small-batch replay keys. A PRODUCTION
-    * deployment points `checkpointLocation` at durable storage
-    * ([[toParquetSink]] takes it as a parameter); only the ephemeral replay
-    * path opts into RAM. Dir names carry the PID so concurrent JVMs (sbt
-    * test + verify) can never resume each other's offsets. */
-  private lazy val replayCheckpointBase: Option[java.io.File] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val d = new java.io.File(shm, s"graft_stream_ckpt_${ProcessHandle.current().pid()}")
-      d.mkdirs()
-      Some(d)
-    } else None
-  }
-
-  /** Batch stager shared by the replay gates: writes each slice of `input`
-    * as one `bNNN.parquet` file with ascending names AND mtimes (the file
+  /** Batch stager shared by the replays: writes each slice of `input` as
+    * one `bNNN.parquet` file with ascending names AND mtimes (the file
     * source discovers them in order), once per JVM per input content
     * ([[Materialize.once]] — a crashed stage is cleared and rebuilt). */
-  private def stageBatches(stageDir: String, input: DataFrame,
-                           slices: Seq[DataFrame]): Unit =
+  private[graft] def stageBatches(stageDir: String, input: DataFrame,
+                                  slices: Seq[DataFrame]): Unit =
     Materialize.once(stageDir, input) {
       val root = new java.io.File(stageDir)
       root.mkdirs()
@@ -65,18 +43,74 @@ object Streaming {
       }
     }
 
-  /** Eagerly materialize a gate result that still reads from the per-run
-    * temp `work` tree (state snapshots + streaming checkpoint), then delete
-    * that tree. The result is otherwise read lazily, so without the eager
-    * `localCheckpoint` the deletion would break the read — and without the
-    * deletion every gate/bench invocation leaks an unbounded temp dir.
-    * Gate results are audit-table-sized, so holding them as checkpoint
-    * blocks is fine; a production run lands them in a real sink instead. */
-  private def finishAndCleanup(df: DataFrame, work: String): DataFrame = {
-    val out = df.localCheckpoint()
-    deleteRecursively(new java.io.File(work))
-    out
+  /** Stages `input` as `batches` ascending spans of the non-negative id
+    * column `idCol` (span = ceil((max id + 1) / batches)); returns the span,
+    * so a batch's data-derived key is `id div span`. */
+  private def stageIdSpans(stageDir: String, input: DataFrame, idCol: String,
+                           batches: Int): Long = {
+    val maxId = input.agg(max(col(idCol))).head.getLong(0)
+    val span = (maxId + batches) / batches
+    stageBatches(stageDir, input, (0 until batches).map(i =>
+      input.filter(col(idCol) >= i * span && col(idCol) < (i + 1) * span)))
+    span
   }
+
+  /** The replay harness: every throwaway `Trigger.AvailableNow` run in this
+    * object goes through here. The query runs on a cloned session
+    * (`newSession`: shared SparkContext and catalog, private SQLConf), so
+    * `statePartitions` and `extraConfs` (e.g. the RocksDB state-store
+    * provider) bind to the replay only and a batch query planned
+    * concurrently on the caller's session never inherits them. `attach`
+    * gets that session and the replay's work dir and returns the writer with
+    * its sink; `replay` names the query, points its checkpoint into a
+    * fresh dir under [[Materialize]]'s per-JVM root, runs it until drained,
+    * and passes the finished query and the work dir to `finish`. The
+    * checkpoint and work dir are deleted on every exit path once `finish`
+    * returns, so `finish` must materialize whatever it reads from the work
+    * dir. Production sinks ([[toParquetSink]], [[foreachBatchSink]]) take
+    * the caller's durable checkpoint instead.
+    *
+    * Streaming state partition count is a real deployment knob: it is
+    * FIXED into the checkpoint at first start and every micro-batch pays a
+    * fixed cost per state store instance (a stream-stream join keeps four
+    * stores per partition). A production query sizes it to |state| /
+    * executor memory; a replay's per-batch volume is tiny, so callers pass
+    * a small count (measured at sf0.1: 4 beats 8 by ~18% on the five
+    * streaming keys and beats 2 on the join/session keys, where state work
+    * still parallelizes). */
+  private[graft] def replay[T](spark: SparkSession, statePartitions: Option[Int],
+                              extraConfs: Map[String, String] = Map.empty)(
+      attach: (SparkSession, String) => DataStreamWriter[_])(
+      finish: (StreamingQuery, String) => T): T = {
+    val scratch = Materialize.freshDir("replay")
+    val work = s"$scratch/work"
+    val session = spark.newSession()
+    statePartitions.foreach(n =>
+      session.conf.set("spark.sql.shuffle.partitions", n.toString))
+    extraConfs.foreach { case (k, v) => session.conf.set(k, v) }
+    try {
+      val q = attach(session, work)
+        .queryName(scratch.getName)
+        .option("checkpointLocation", s"$scratch/chk")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+      finish(q, work)
+    } finally deleteRecursively(scratch)
+  }
+
+  /** foreachBatch replay of a staged input, one staged file per
+    * micro-batch: `step` gets each batch and the work dir its outputs
+    * accumulate in; `result` reads them back and is `localCheckpoint`ed
+    * before [[replay]] deletes the work dir (results are audit-table
+    * sized; a production run lands them in a real sink instead). */
+  private[graft] def foreachBatchReplay(spark: SparkSession, stageDir: String,
+                                        schema: StructType)(
+      step: (DataFrame, String) => Unit)(result: String => DataFrame): DataFrame =
+    replay(spark, statePartitions = Some(4))({ (s, work) =>
+      s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stageDir)
+        .writeStream.foreachBatch((batch: DataFrame, _: Long) => step(batch, work))
+    })((_, work) => result(work).localCheckpoint())
 
   /** Streaming scan of a testdata table: file-source with the schema taken
     * from the batch reader (streams require a declared schema). */
@@ -125,48 +159,26 @@ object Streaming {
       .trigger(trigger)
       .start()
 
-  /** Run a streaming query to completion with AvailableNow into a memory
-    * sink and return the final result table. Memory sink is driver-local —
-    * only ever used for chart-sized aggregates / verify replays; production
-    * sinks are file/Kafka via the same writeStream.
-    *
-    * The stream is BUILT on a cloned session (`newSession`: shared
-    * SparkContext and catalog, private SQLConf) — hence the builder
-    * signature rather than a ready DataFrame. Streaming state partition
-    * count is a real deployment knob: it is FIXED into the checkpoint at
-    * first start and every micro-batch pays a fixed cost per state store
-    * instance (a stream-stream join keeps four stores per partition). A
-    * production query sizes it to |state| / executor memory; the replay
-    * gate's per-batch volume is tiny, so callers pass a small count
-    * (measured at sf0.1: 4 beats 8 by ~18% on the five streaming keys and
-    * beats 2 on the join/session keys, where state work still parallelizes).
-    * Setting
-    * it on the clone means a batch query planned concurrently on the
-    * caller's session can never inherit the temporary value — runToResult
-    * is safe for concurrent use of the parent session. */
+  /** Replays `build` (a stream on [[replay]]'s cloned session) into a
+    * memory sink and returns the finished query; its result table is
+    * `q.sparkSession.table(q.name)` and its per-trigger progress
+    * `q.recentProgress`. The memory sink keeps its rows in this JVM's
+    * heap — only ever used for chart-sized aggregates / verify replays;
+    * production sinks are file/Kafka via the same writeStream. */
+  def replayToMemory(spark: SparkSession, build: SparkSession => DataFrame,
+                     outputMode: String,
+                     statePartitions: Option[Int] = None,
+                     extraConfs: Map[String, String] = Map.empty): StreamingQuery =
+    replay(spark, statePartitions, extraConfs)((s, _) =>
+      build(s).writeStream.format("memory").outputMode(outputMode))((q, _) => q)
+
+  /** [[replayToMemory]]'s final result table. */
   def runToResult(spark: SparkSession, build: SparkSession => DataFrame,
                   outputMode: String,
                   statePartitions: Option[Int] = None,
                   extraConfs: Map[String, String] = Map.empty): DataFrame = {
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val session = spark.newSession()
-    statePartitions.foreach(n =>
-      session.conf.set("spark.sql.shuffle.partitions", n.toString))
-    // deployment knobs that must bind to the streaming session only — e.g.
-    // the RocksDB state-store provider for beyond-heap state at scale
-    extraConfs.foreach { case (k, v) => session.conf.set(k, v) }
-    val w = build(session).writeStream
-      .format("memory").queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-    // tmpfs checkpoint for the throwaway replay (see replayCheckpointBase);
-    // pre-clean so a crashed prior run's offsets can never be resumed
-    val ckpt = replayCheckpointBase.map(new java.io.File(_, name))
-    ckpt.foreach { d => deleteRecursively(d); w.option("checkpointLocation", d.getAbsolutePath) }
-    val q = w.start()
-    q.awaitTermination()
-    ckpt.foreach(deleteRecursively)
-    session.table(name)
+    val q = replayToMemory(spark, build, outputMode, statePartitions, extraConfs)
+    q.sparkSession.table(q.name)
   }
 
   /** q37: micro-batch periodic counts (reference cadences: 1 s / 3 min / 60 min).
@@ -674,72 +686,55 @@ object Streaming {
                         threshold: Double = 0.25): DataFrame = {
     import graft.ops.Dedup
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-    val span = (maxId + batches) / batches // ceil((maxId+1)/batches)
-    // `batches` single-file slices in ascending-id order
-    stageBatches(stageDir, docs, (0 until batches).map(i =>
-      docs.filter(col("doc_id") >= i * span && col("doc_id") < (i + 1) * span)))
-    // fresh work area per run: the index/survivor accumulation is the
-    // query's STATE and must start empty
-    val work = java.nio.file.Files.createTempDirectory("graft_neardup_gate").toString
-    val idxDir = s"$work/index"; val outDir = s"$work/survivors"
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = session.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stageDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // IDEMPOTENT writes under at-least-once foreachBatch: every output
-        // lands in a batch-keyed subdirectory with overwrite semantics, so
-        // a micro-batch replayed after a partial write REWRITES its own
-        // slice instead of appending duplicate survivor/index rows. The
-        // key derives from the DATA (min id div span), not Spark's batchId,
-        // so it is stable across checkpoint resets too.
-        // one action decides both emptiness and the batch key: min is NULL
-        // iff the batch is empty
-        val __m = batch.agg(min(expr(s"doc_id div $span"))).head
-        if (!__m.isNullAt(0)) {
-          val bid = __m.getLong(0)
-          val tag = f"b$bid%03d"
-          val banded = Dedup.bandedSignatures(batch, "doc_id", "text",
-            shingleK, numHashes, bands)
-          val inner = Dedup.nearDupPairsBanded(banded, "doc_id", numHashes, threshold)
-            .select(col("id_b").as("doc_id"))
-          // probe ONLY strictly-earlier batches' index slices: a replayed
-          // batch whose own index write survived the crash must not probe
-          // against itself (every doc would self-match and be dropped)
-          val prior = Option(new java.io.File(idxDir).listFiles()).toSeq.flatten
-            .filter(f => f.isDirectory && f.getName < tag)
-            .map(_.getPath).sorted
-          // slices stay FLAT: a batch probe's key set covers every layout
-          // bucket, so a bucketed slice layout buys no pruning and was
-          // measured 7× slower per probe (64-dir discovery per slice).
-          // The bucketed layout ([[graft.ops.Dedup.withBandBucket]]) is
-          // the COMPACTED serving index's job — point lookups there prune
-          // to ≤ bands/64 of the index (ProbeStreamIndex measures both).
-          val cross =
-            if (prior.nonEmpty)
-              Dedup.probeNearDupBanded(session.read.parquet(prior: _*), banded,
-                "doc_id", numHashes, threshold)
-                .select(col("new_id").as("doc_id"))
-            else session.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-          val removed = inner.unionByName(cross).distinct()
-          batch.select(col("doc_id"))
-            .join(removed, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outDir/$tag")
-          banded.write.mode("overwrite").parquet(s"$idxDir/$tag")
-        }
-        ()
+    val span = stageIdSpans(stageDir, docs, "doc_id", batches)
+    // the replay's fresh work dir holds the index/survivor accumulation —
+    // the query's STATE, which must start empty
+    foreachBatchReplay(spark, stageDir, docs.schema) { (batch, work) =>
+      val idxDir = s"$work/index"
+      // IDEMPOTENT writes under at-least-once foreachBatch: every output
+      // lands in a batch-keyed subdirectory with overwrite semantics, so
+      // a micro-batch replayed after a partial write REWRITES its own
+      // slice instead of appending duplicate survivor/index rows. The
+      // key derives from the DATA (min id div span), not Spark's batchId,
+      // so it is stable across checkpoint resets too.
+      // one action decides both emptiness and the batch key: min is NULL
+      // iff the batch is empty
+      val __m = batch.agg(min(expr(s"doc_id div $span"))).head
+      if (!__m.isNullAt(0)) {
+        val bid = __m.getLong(0)
+        val tag = f"b$bid%03d"
+        val banded = Dedup.bandedSignatures(batch, "doc_id", "text",
+          shingleK, numHashes, bands)
+        val inner = Dedup.nearDupPairsBanded(banded, "doc_id", numHashes, threshold)
+          .select(col("id_b").as("doc_id"))
+        // probe ONLY strictly-earlier batches' index slices: a replayed
+        // batch whose own index write survived the crash must not probe
+        // against itself (every doc would self-match and be dropped)
+        val prior = Option(new java.io.File(idxDir).listFiles()).toSeq.flatten
+          .filter(f => f.isDirectory && f.getName < tag)
+          .map(_.getPath).sorted
+        // slices stay FLAT: a batch probe's key set covers every layout
+        // bucket, so a bucketed slice layout buys no pruning and was
+        // measured 7× slower per probe (64-dir discovery per slice).
+        // The bucketed layout ([[graft.ops.Dedup.withBandBucket]]) is
+        // the COMPACTED serving index's job — point lookups there prune
+        // to ≤ bands/64 of the index (ProbeStreamIndex measures both).
+        val cross =
+          if (prior.nonEmpty)
+            Dedup.probeNearDupBanded(batch.sparkSession.read.parquet(prior: _*),
+              banded, "doc_id", numHashes, threshold)
+              .select(col("new_id").as("doc_id"))
+          else batch.sparkSession.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
+        val removed = inner.unionByName(cross).distinct()
+        batch.select(col("doc_id"))
+          .join(removed, Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$work/survivors/$tag")
+        banded.write.mode("overwrite").parquet(s"$idxDir/$tag")
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/chk")
-      .start()
-    q.awaitTermination()
-    finishAndCleanup(spark.read.parquet(s"$outDir/b*")
-      .select(col("doc_id"), expr(s"doc_id div $span").cast("long").as("batch_id")),
-      work)
+    } { work =>
+      spark.read.parquet(s"$work/survivors/b*")
+        .select(col("doc_id"), expr(s"doc_id div $span").cast("long").as("batch_id"))
+    }
   }
 
   /** STREAMING vector-store ingest — the IVF index write path run over
@@ -762,46 +757,28 @@ object Streaming {
                          batches: Int = 4): DataFrame = {
     import graft.ops.Similarity
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
-    val span = (maxId + batches) / batches // ceil((maxId+1)/batches)
-    stageBatches(stageDir, emb, (0 until batches).map(i =>
-      emb.filter(col("vec_id") >= i * span && col("vec_id") < (i + 1) * span)))
-    val work = java.nio.file.Files.createTempDirectory("graft_vec_ingest").toString
-    val idxDir = s"$work/index"
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "4")
-    val cent = Tables.embeddings(session, dir)
-      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 16)
-    val q = session.readStream
-      .schema(emb.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stageDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one action decides both emptiness and the data-derived batch key
-        val __m = batch.agg(min(expr(s"vec_id div $span"))).head
-        if (!__m.isNullAt(0)) {
-          val tag = f"b${__m.getLong(0)}%03d"
-          Similarity.ivfAssign(batch, cent, "vec_id", "embedding")
-            .select(col("cell"), col("vec_id"))
-            .write.mode("overwrite").parquet(s"$idxDir/$tag")
-        }
-        ()
+    val span = stageIdSpans(stageDir, emb, "vec_id", batches)
+    val cent = emb.filter(col("vec_id") < 16)
+    foreachBatchReplay(spark, stageDir, emb.schema) { (batch, work) =>
+      // one action decides both emptiness and the data-derived batch key
+      val __m = batch.agg(min(expr(s"vec_id div $span"))).head
+      if (!__m.isNullAt(0)) {
+        val tag = f"b${__m.getLong(0)}%03d"
+        Similarity.ivfAssign(batch, cent, "vec_id", "embedding")
+          .select(col("cell"), col("vec_id"))
+          .write.mode("overwrite").parquet(s"$work/index/$tag")
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/chk")
-      .start()
-    q.awaitTermination()
-    val asg = spark.read.parquet(s"$idxDir/b*")
-    val total = asg.agg(count(lit(1)).as("__n"))
-    finishAndCleanup(asg.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vecs"))
-      .crossJoin(broadcast(total))
-      .select(col("cell").cast("long").as("cell"),
-        col("n_vecs").cast("long").as("n_vecs"),
-        expr("(10000 * n_vecs) div __n").cast("long").as("share_bp"),
-        expr("(1000 * n_vecs * 16) div __n").cast("long").as("load_milli")),
-      work)
+    } { work =>
+      val asg = spark.read.parquet(s"$work/index/b*")
+      val total = asg.agg(count(lit(1)).as("__n"))
+      asg.groupBy(col("cell"))
+        .agg(count(lit(1)).as("n_vecs"))
+        .crossJoin(broadcast(total))
+        .select(col("cell").cast("long").as("cell"),
+          col("n_vecs").cast("long").as("n_vecs"),
+          expr("(10000 * n_vecs) div __n").cast("long").as("share_bp"),
+          expr("(1000 * n_vecs * 16) div __n").cast("long").as("load_milli"))
+    }
   }
 
   /** STREAMING changelog apply — q317's ordered I/U/D apply run as a
@@ -839,55 +816,38 @@ object Streaming {
         .select(col("c_custkey"), lit(3L).as("seq"), lit("I").as("op"),
           lit(555L).as("cents"), lit("WINBACK").as("segment")))
     stageBatches(stageDir, base, slices)
-    val work = java.nio.file.Files.createTempDirectory("graft_cdc_apply").toString
-    val stateDir = s"$work/state"
-    new java.io.File(stateDir).mkdirs()
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = session.readStream
-      .schema(slices.head.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stageDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one action decides both emptiness and the data-derived batch key
-        val __m = batch.agg(min(col("seq"))).head
-        if (!__m.isNullAt(0)) {
-          val k = __m.getLong(0)
-          val sp = batch.sparkSession
-          // predecessor = the largest committed snapshot strictly below k —
-          // a replayed batch rebuilds from ITS OWN prior, idempotently
-          val prevTag = Option(new java.io.File(stateDir).listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .filter(f => f.isDirectory && f.getName.startsWith("s"))
-            .map(_.getName.stripPrefix("s").toLong)
-            .filter(_ < k).sorted.lastOption
-          val resolved = batch
-            .groupBy(col("c_custkey"))
-            .agg(max(struct(col("seq"), col("op"), col("cents"), col("segment"))).as("l"))
-            .select(col("c_custkey"), col("l.op").as("op"),
-              col("l.cents").as("cents"), col("l.segment").as("segment"))
-          val prev = prevTag match {
-            case Some(t) => sp.read.parquet(f"$stateDir/s$t%03d")
-            case None => resolved.filter(lit(false))
-              .select(col("c_custkey"), col("cents"), col("segment"))
-          }
-          prev.join(resolved.select(col("c_custkey")), Seq("c_custkey"), "left_anti")
-            .unionByName(resolved.filter(col("op") =!= "D")
-              .select(col("c_custkey"), col("cents"), col("segment")))
-            .write.mode("overwrite").parquet(f"$stateDir/s$k%03d")
+    def snapshots(stateDir: String): Seq[String] =
+      Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("s")).map(_.getName)
+    foreachBatchReplay(spark, stageDir, slices.head.schema) { (batch, work) =>
+      // one action decides both emptiness and the data-derived batch key
+      val __m = batch.agg(min(col("seq"))).head
+      if (!__m.isNullAt(0)) {
+        val k = __m.getLong(0)
+        val stateDir = s"$work/state"
+        // predecessor = the largest committed snapshot strictly below k —
+        // a replayed batch rebuilds from ITS OWN prior, idempotently
+        val prevTag = snapshots(stateDir).map(_.stripPrefix("s").toLong)
+          .filter(_ < k).sorted.lastOption
+        val resolved = batch
+          .groupBy(col("c_custkey"))
+          .agg(max(struct(col("seq"), col("op"), col("cents"), col("segment"))).as("l"))
+          .select(col("c_custkey"), col("l.op").as("op"),
+            col("l.cents").as("cents"), col("l.segment").as("segment"))
+        val prev = prevTag match {
+          case Some(t) => batch.sparkSession.read.parquet(f"$stateDir/s$t%03d")
+          case None => resolved.filter(lit(false))
+            .select(col("c_custkey"), col("cents"), col("segment"))
         }
-        ()
+        prev.join(resolved.select(col("c_custkey")), Seq("c_custkey"), "left_anti")
+          .unionByName(resolved.filter(col("op") =!= "D")
+            .select(col("c_custkey"), col("cents"), col("segment")))
+          .write.mode("overwrite").parquet(f"$stateDir/s$k%03d")
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/chk")
-      .start()
-    q.awaitTermination()
-    val lastTag = new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("s"))
-      .map(_.getName).sorted.last
-    finishAndCleanup(
-      spark.read.parquet(s"$stateDir/$lastTag").orderBy("c_custkey"), work)
+    } { work =>
+      val last = snapshots(s"$work/state").sorted.last
+      spark.read.parquet(s"$work/state/$last").orderBy("c_custkey")
+    }
   }
 
   /** STREAMING drift monitor — q158's PSI freshness gate run as a monitor
@@ -910,50 +870,33 @@ object Streaming {
                 batches: Int = 4): DataFrame = {
     import graft.ops.Stats
     val ev = Tables.events(spark, dir).select(col("event_id"), col("value"))
-    val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
-    val span = (maxId + batches) / batches
-    stageBatches(stageDir, ev, (0 until batches).map(i =>
-      ev.filter(col("event_id") >= i * span && col("event_id") < (i + 1) * span)))
-    val work = java.nio.file.Files.createTempDirectory("graft_psi_monitor").toString
-    val refDir = s"$work/reference"; val outDir = s"$work/out"
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = session.readStream
-      .schema("event_id BIGINT, value DOUBLE")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stageDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // IDEMPOTENT under at-least-once foreachBatch: the batch's role
-        // (reference snapshot vs monitored batch) is decided on the DATA
-        // (min id div span), not on refDir existence — a replayed first
-        // batch with a partial reference on disk must rewrite it, not be
-        // misread as batch 1 and scored against its own partial self. All
-        // writes are overwrite into batch-keyed targets, so a replay
-        // rewrites its own slice instead of appending a duplicate PSI row.
-        val __m = batch.agg(min(expr(s"event_id div $span"))).head
-        if (!__m.isNullAt(0)) {
-          val cents = batch.select(col("event_id"),
-            expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
-          val bId = __m.getLong(0)
-          if (bId == 0L) {
-            cents.select(col("cents")).write.mode("overwrite").parquet(refDir)
-          } else {
-            val ref = session.read.parquet(refDir).withColumn("__p", lit("a"))
-            val cur = cents.select(col("cents")).withColumn("__p", lit("b"))
-            Stats.psiDrift(ref.unionByName(cur).withColumn("__g", lit(0L)),
-                "__g", "cents", "__p")
-              .select(lit(bId).as("batch_id"), col("n_a"), col("n_b"), col("psi"))
-              .write.mode("overwrite").parquet(f"$outDir/b$bId%03d")
-          }
+    val span = stageIdSpans(stageDir, ev, "event_id", batches)
+    foreachBatchReplay(spark, stageDir, ev.schema) { (batch, work) =>
+      // IDEMPOTENT under at-least-once foreachBatch: the batch's role
+      // (reference snapshot vs monitored batch) is decided on the DATA
+      // (min id div span), not on the reference's existence — a replayed
+      // first batch with a partial reference on disk must rewrite it, not
+      // be misread as batch 1 and scored against its own partial self. All
+      // writes are overwrite into batch-keyed targets, so a replay
+      // rewrites its own slice instead of appending a duplicate PSI row.
+      val __m = batch.agg(min(expr(s"event_id div $span"))).head
+      if (!__m.isNullAt(0)) {
+        val cents = batch.select(col("event_id"),
+          expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
+        val bId = __m.getLong(0)
+        val refDir = s"$work/reference"
+        if (bId == 0L) {
+          cents.select(col("cents")).write.mode("overwrite").parquet(refDir)
+        } else {
+          val ref = batch.sparkSession.read.parquet(refDir).withColumn("__p", lit("a"))
+          val cur = cents.select(col("cents")).withColumn("__p", lit("b"))
+          Stats.psiDrift(ref.unionByName(cur).withColumn("__g", lit(0L)),
+              "__g", "cents", "__p")
+            .select(lit(bId).as("batch_id"), col("n_a"), col("n_b"), col("psi"))
+            .write.mode("overwrite").parquet(f"$work/out/b$bId%03d")
         }
-        ()
       }
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/chk")
-      .start()
-    q.awaitTermination()
-    finishAndCleanup(spark.read.parquet(s"$outDir/b*"), work)
+    }(work => spark.read.parquet(s"$work/out/b*"))
   }
 
   case class SessionEvent(user_id: Long, ts: java.sql.Timestamp)

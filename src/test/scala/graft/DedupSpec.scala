@@ -59,7 +59,7 @@ class DedupSpec extends SparkSpec {
     val index = Dedup.bandedSignatures(existing, "doc_id", "text", 2, 16, 8)
     val banded = Dedup.bandedSignatures(fresh, "doc_id", "text", 2, 16, 8)
     // round-trip through the partitioned on-disk layout the gate writes
-    val dir = java.nio.file.Files.createTempDirectory("graft_hbidx").toString + "/idx"
+    val dir = tmpDir("graft_hbidx") + "/idx"
     Dedup.withBandBucket(index).write.partitionBy("hb").parquet(dir)
     val stored = spark.read.parquet(dir)
     val full = Dedup.probeNearDupBanded(stored.drop("hb"), banded, "doc_id", 16, 0.5)
@@ -368,7 +368,7 @@ class DedupSpec extends SparkSpec {
       (3L, "totally different words here now"),
       (4L, "alpha beta gamma delta epsilon")) // exact dup of 1
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cidx").toString + "/idx"
+    val dir = tmpDir("graft_cidx") + "/idx"
     val (pairs, comp) = Dedup.componentIndex(docs, "doc_id", "text",
       shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25, indexDir = dir)
     val directPairs = Dedup.minHashNearDup(docs, "doc_id", "text",

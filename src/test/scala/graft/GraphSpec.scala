@@ -150,7 +150,7 @@ class GraphSpec extends SparkSpec {
 
   test("coOccurrenceEdgeIndex equals the direct derivation and writes once per JVM") {
     val rel = (1L to 300L).map(i => (i % 23, i % 7)).toDF("c", "e")
-    val dir = java.nio.file.Files.createTempDirectory("graft_eidx").toString + "/idx"
+    val dir = tmpDir("graft_eidx") + "/idx"
     val idx = Graph.coOccurrenceEdgeIndex(rel, "e", "c", dir)
     val direct = Graph.coOccurrenceEdges(rel, "e", "c")
     assert(idx.as[(Long, Long)].collect().toSet ==
@@ -165,7 +165,7 @@ class GraphSpec extends SparkSpec {
   test("co-materialized degree index matches the derived degrees, and every " +
       "degree-consuming algorithm is bit-identical with and without it") {
     val rel = (1L to 400L).map(i => (i % 19, i % 11)).toDF("c", "e")
-    val dir = java.nio.file.Files.createTempDirectory("graft_didx").toString + "/idx"
+    val dir = tmpDir("graft_didx") + "/idx"
     val edges = Graph.coOccurrenceEdgeIndex(rel, "e", "c", dir)
     val degIdx = Graph.coOccurrenceDegreeIndex(rel, "e", "c", dir)
     val derived = edges.groupBy(col("src").as("node"))

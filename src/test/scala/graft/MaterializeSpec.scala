@@ -17,11 +17,8 @@ import graft.stream.Streaming
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("once() refreshes when the input is rewritten in place within one JVM") {
-    val base = java.nio.file.Files.createTempDirectory("graft_mat").toString
+    val base = tmpDir("graft_mat")
     val in = s"$base/docs"
     val idx = s"$base/idx"
 
@@ -50,7 +47,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("a build that throws leaves no partial output; the next touch rebuilds only its own rows") {
-    val base = tmp("graft_mat_crash")
+    val base = tmpDir("graft_mat_crash")
     Seq(1L).toDF("id").write.parquet(s"$base/in")
     val input = spark.read.parquet(s"$base/in")
     val dir = s"$base/idx"
@@ -74,7 +71,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("inputs alternating on one dir always read their own build") {
-    val base = tmp("graft_mat_alt")
+    val base = tmpDir("graft_mat_alt")
     Seq(1L).toDF("id").write.parquet(s"$base/a")
     Seq(2L).toDF("id").write.parquet(s"$base/b")
     val dir = s"$base/idx"
@@ -89,7 +86,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("two sessions first-touching one index on two threads build it once") {
-    val base = tmp("graft_mat_race")
+    val base = tmpDir("graft_mat_race")
     Seq(1L, 2L).toDF("id").write.parquet(s"$base/in")
     val dir = s"$base/idx"
     val builds = new AtomicInteger
@@ -117,7 +114,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("scratch roots are per PID, and a dead run's root is swept") {
-    val base = new File(tmp("graft_mat_roots"))
+    val base = new File(tmpDir("graft_mat_roots"))
     val deadPid = {
       val p = new ProcessBuilder("true").start()
       p.waitFor()
@@ -138,13 +135,13 @@ class MaterializeSpec extends SparkSpec {
       assert(theirs != mine && mine.exists())
     } finally sleeper.destroy()
     // this JVM's scratch paths live under its own root, one sanitized
-    // segment per input dir
+    // segment per input dir that Spark does not treat as hidden
     val p = Materialize.scratch("idx/k2", "/data/sf0.01")
-    assert(p.endsWith(s"target/qtmp/run-${ProcessHandle.current().pid()}/idx/k2/_data_sf0.01"), p)
+    assert(p.endsWith(s"target/qtmp/run-${ProcessHandle.current().pid()}/idx/k2/data_sf0.01"), p)
   }
 
   test("a rewritten events table re-stages a replay input") {
-    val base = tmp("graft_mat_restage")
+    val base = tmpDir("graft_mat_restage")
     val dir = s"$base/data"
     val stage = s"$base/stage"
     def at(s: String) = Timestamp.valueOf(s)

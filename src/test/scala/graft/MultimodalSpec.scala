@@ -88,6 +88,30 @@ class MultimodalSpec extends SparkSpec {
     assert(got == expect)
   }
 
+  test("synthGif: a write that throws mid-sequence leaves the thread's cached writer usable") {
+    val colors = Seq(0x102030, 0x405060)
+    val outcome = new java.util.concurrent.atomic.AtomicReference[Any]()
+    // one thread, so both writes share its cached GIF writer
+    val t = new Thread(() => outcome.set(try {
+      // a zero-width frame throws inside the sequence, after prepareWriteSequence
+      val failed = scala.util.Try(Multimodal.synthGif(0, 3, colors)).isFailure
+      val released = Multimodal.Codec.writer("gif").getOutput == null
+      (failed, released, Multimodal.synthGif(4, 3, colors))
+    } catch { case e: Throwable => e }))
+    t.start(); t.join()
+    val (failed, released, gif) = outcome.get match {
+      case e: Throwable => throw e
+      case r => r.asInstanceOf[(Boolean, Boolean, Array[Byte])]
+    }
+    assert(failed, "the zero-width write must throw")
+    assert(released, "the failed write left the cached writer bound to its stream")
+    val got = Multimodal.sampleGifFrames(Seq((1L, gif)).toDF("doc_id", "payload"), "doc_id", step = 1)
+      .orderBy("frame_idx").select("n_frames", "mean_r", "mean_g", "mean_b")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(got == colors.map(c =>
+      (2L, ((c >> 16) & 0xff).toLong, ((c >> 8) & 0xff).toLong, (c & 0xff).toLong)))
+  }
+
   test("sampleGifFrames quarantines undecodable payloads as a single -1 row") {
     val mm = Seq((9L, "definitely not a gif".getBytes("UTF-8"))).toDF("doc_id", "payload")
     val got = Multimodal.sampleGifFrames(mm, "doc_id", step = 1)

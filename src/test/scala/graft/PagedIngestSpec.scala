@@ -15,7 +15,7 @@ class PagedIngestSpec extends SparkSpec {
   }
 
   test("paged ingest drains the cursor chain, appending one page at a time") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ingest").toString + "/sink"
+    val out = tmpDir("graft_ingest") + "/sink"
     val res = PagedIngest.ingest(spark, fakeClient) { df =>
       df.write.mode("append").parquet(out)
     }
@@ -26,7 +26,7 @@ class PagedIngestSpec extends SparkSpec {
   }
 
   test("maxFetches bounds remote calls; resumeCursor resumes the chain") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ingest2").toString + "/sink"
+    val out = tmpDir("graft_ingest2") + "/sink"
     val r1 = PagedIngest.ingest(spark, fakeClient, maxFetches = 1) { df =>
       df.write.mode("append").parquet(out)
     }

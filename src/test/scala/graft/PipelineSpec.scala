@@ -78,7 +78,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("the fused plan cleans each row once and scans each raw input once") {
-    val base = java.nio.file.Files.createTempDirectory("graft_pipeline_plan").toString
+    val base = tmpDir("graft_pipeline_plan")
     reddit.write.parquet(s"$base/reddit")
     chan.write.parquet(s"$base/chan")
     youtube.write.parquet(s"$base/youtube")

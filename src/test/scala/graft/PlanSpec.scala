@@ -657,7 +657,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ops.Dedup
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_q265_plan").toString + "/idx"
+    val idx = tmpDir("graft_q265_plan") + "/idx"
     val bands = Dedup.componentIndexBands(docs, "doc_id", "text",
       shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25, indexDir = idx)
     val fresh = Dedup.bandedSignatures(docs.filter(col("doc_id") >= 350),
@@ -679,7 +679,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ops.Dedup
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_probe_plan").toString + "/bands"
+    val idx = tmpDir("graft_probe_plan") + "/bands"
     Dedup.bandedSignatures(docs.filter(col("doc_id") < 300), "doc_id", "text",
       shingleK = 2, numHashes = 16, bands = 8).write.parquet(idx)
     val fresh = Dedup.bandedSignatures(docs.filter(col("doc_id") >= 300), "doc_id", "text",

@@ -24,7 +24,7 @@ class StorageSpec extends SparkSpec {
   ).toDF("platform", "comment_id", "created_ts")
 
   test("partitioned store prunes partitions at scan time") {
-    val path = "/root/repo/target/qtmp/store_part"
+    val path = s"${tmpDir("store_part")}/t"
     Storage.writePartitionedByDay(comments, "created_ts", path)
     val scan = spark.read.parquet(path)
       .filter(col("platform") === "reddit" && col("day") === "2024-01-02")
@@ -55,7 +55,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("compact rewrites many small files into few") {
-    val path = "/root/repo/target/qtmp/store_compact"
+    val path = s"${tmpDir("store_compact")}/t"
     (1 to 500).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(20).write.mode("overwrite").parquet(path)
     def parquetFiles = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
@@ -66,7 +66,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("JDBC sink round-trips against embedded Derby (reference Postgres parity)") {
-    val db = java.nio.file.Files.createTempDirectory("graft_derby").toString + "/db"
+    val db = tmpDir("graft_derby") + "/db"
     val url = s"jdbc:derby:$db;create=true"
     Storage.writeJdbc(Seq((1L, "a"), (2L, "b")).toDF("id", "body"), url, "comments",
       org.apache.spark.sql.SaveMode.Overwrite)
@@ -77,7 +77,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("streaming JDBC sink: checkpointed foreachBatch appends only new files") {
-    val base = java.nio.file.Files.createTempDirectory("graft_jdbc_stream").toString
+    val base = tmpDir("graft_jdbc_stream")
     val src = s"$base/src"; val chk = s"$base/chk"
     val url = s"jdbc:derby:$base/db;create=true"
     new java.io.File(src).mkdirs()
@@ -165,8 +165,9 @@ class StorageSpec extends SparkSpec {
           (max(col("yb")) - min(col("yb"))).as("ys"))
       perFile.select("xs", "ys").as[(Long, Long)].collect().toSeq
     }
-    val zDir = "/root/repo/target/storage_spec/zorder"
-    val linDir = "/root/repo/target/storage_spec/linear"
+    val base = tmpDir("zorder_layout")
+    val zDir = s"$base/zorder"
+    val linDir = s"$base/linear"
     grid.repartitionByRange(16, col("zval")).sortWithinPartitions(col("zval"))
       .write.mode("overwrite").parquet(zDir)
     grid.repartitionByRange(16, col("xb"), col("yb"))
@@ -195,7 +196,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("compactPartitioned collapses each partition dir to one file, rows intact") {
-    val path = "/root/repo/target/test_compact"
+    val path = s"${tmpDir("test_compact")}/t"
     val df = (1L to 400L).map(i => (i, s"d${i % 4}")).toDF("id", "day")
     df.repartition(8).write.mode("overwrite").partitionBy("day").parquet(path)
     def filesPerDay: Map[String, Int] = {
@@ -212,7 +213,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("manifestPrunedRange opens only overlapping files, result = full filter") {
-    val path = "/root/repo/target/test_manifest"
+    val path = s"${tmpDir("test_manifest")}/t"
     // 8 range files over a sorted key: a [250, 500) scan overlaps ~2 of them
     (0L until 1000L).toDF("v")
       .repartitionByRange(8, col("v")).sortWithinPartitions("v")
@@ -226,7 +227,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("manifestPrunedRange skips a file whose stat column is entirely NULL") {
-    val path = "/root/repo/target/test_manifest_null"
+    val path = s"${tmpDir("test_manifest_null")}/t"
     (0L until 50L).map(Some(_)).toDF("v").coalesce(1)
       .write.mode("overwrite").parquet(path)
     Seq.fill(10)(Option.empty[Long]).toDF("v").coalesce(1)
@@ -238,7 +239,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("manifestPrunedRange with no overlapping file returns empty, keeps schema") {
-    val path = "/root/repo/target/test_manifest_empty"
+    val path = s"${tmpDir("test_manifest_empty")}/t"
     (0L until 100L).toDF("v")
       .repartitionByRange(4, col("v")).sortWithinPartitions("v")
       .write.mode("overwrite").parquet(path)
@@ -249,8 +250,9 @@ class StorageSpec extends SparkSpec {
   }
 
   test("snapshot log: v1 read is isolated from a later append; v2 sees all") {
-    val path = "/root/repo/target/test_snapshot"
-    val log = "/root/repo/target/test_snapshot_log"
+    val base = tmpDir("snapshot")
+    val path = s"$base/t"
+    val log = s"$base/log"
     (0L until 40L).toDF("v").coalesce(2).write.mode("overwrite").parquet(path)
     Storage.commitSnapshot(spark, path, log, 1L, reset = true)
     (40L until 60L).toDF("v").coalesce(1).write.mode("append").parquet(path)
@@ -270,11 +272,9 @@ class StorageSpec extends SparkSpec {
   }
 
   test("vacuum reclaims exactly the unreferenced generation; retained snapshots read intact") {
-    val path = "/root/repo/target/test_vacuum"
-    val log = "/root/repo/target/test_vacuum_log"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
+    val base = tmpDir("vacuum")
+    val path = s"$base/t"
+    val log = s"$base/log"
     (0L until 40L).toDF("v").coalesce(2).write.mode("overwrite").parquet(path)
     Storage.commitSnapshot(spark, path, log, 1L, reset = true)
     (40L until 60L).toDF("v").coalesce(1).write.mode("append").parquet(path)

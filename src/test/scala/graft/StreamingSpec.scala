@@ -157,7 +157,7 @@ class StreamingSpec extends SparkSpec {
   test("stateful sessionizer is store-agnostic: RocksDB provider equals the default store") {
     // the 100 TB state path: the default HDFS-backed store keeps state on
     // the executor heap; RocksDB spills beyond it. Same replay, same result.
-    val tmp = java.nio.file.Files.createTempDirectory("rocksdb_replay").toString
+    val tmp = tmpDir("rocksdb_replay")
     val rocks = Streaming.statefulSessionsReplay(spark, dir, tmp,
       extraConfs = Map("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
@@ -190,7 +190,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("durable parquet sink: restart from checkpoint resumes, no loss no dupes") {
-    val base = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val base = tmpDir("graft_sink")
     val src = s"$base/src"; val out = s"$base/out"; val chk = s"$base/chk"
     new java.io.File(src).mkdirs()
     // stage a new input file into the watched dir (unique name = new data)
@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
     // session spans the kill point), no duplicated closed sessions (the
     // file sink's metadata log + state-store versioning together).
     import Streaming.{ClosedSession, SessionEvent}
-    val base = java.nio.file.Files.createTempDirectory("graft_sess_restart").toString
+    val base = tmpDir("graft_sess_restart")
     val src = s"$base/src"; val out = s"$base/out"; val chk = s"$base/chk"
     new java.io.File(src).mkdirs()
     // +1000 min base: an event at exactly epoch 0 sits ON the initial
@@ -308,9 +308,7 @@ class StreamingSpec extends SparkSpec {
 
   test("live foreachBatch enrich-once appends only unseen keys to the sink") {
     implicit val sqlCtx = spark.sqlContext
-    val sink = "/root/repo/target/qtmp/stream_enrich_sink"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(sink), true)
+    val sink = s"${tmpDir("stream_enrich")}/sink"
     val mem = MemoryStream[(String, Double)]
     val existing = Seq("a").toDF("comment_id")
     val q = mem.toDF().toDF("comment_id", "v").writeStream
@@ -351,7 +349,7 @@ class StreamingSpec extends SparkSpec {
 
   test("quotaByHour: hand-computed hourly ledgers; sentinel closes the tail") {
     import Streaming.SessionEvent
-    val src = java.nio.file.Files.createTempDirectory("graft_quota").toString
+    val src = tmpDir("graft_quota")
     // absolute epoch hours 100/101: u1 puts 3 events in hour 100 (quota 2
     // → 1 dropped) and 1 in hour 101; u2 1 in hour 100. The -1 sentinel
     // (far future) advances the watermark so every real ledger times out;
@@ -383,7 +381,7 @@ class StreamingSpec extends SparkSpec {
     // least(n, quota) twin — lost state would under-count n_events,
     // sink-metadata failure would duplicate ledgers
     import Streaming.{HourQuota, SessionEvent}
-    val base = java.nio.file.Files.createTempDirectory("graft_quota_restart").toString
+    val base = tmpDir("graft_quota_restart")
     val src = s"$base/src"; val out = s"$base/out"; val chk = s"$base/chk"
     new java.io.File(src).mkdirs()
     def at(h: Long, m: Long) = new Timestamp((h * 3600L + m * 60L) * 1000L)
@@ -431,7 +429,7 @@ class StreamingSpec extends SparkSpec {
     // maxId 7 → span 2 → batches [0,2) [2,4) [4,6) [6,8).
     // 3 dups 0 (cross-batch, via the index probe), 4 dups 1 (cross),
     // 5 dups 2 (cross), 7 dups 6 (WITHIN batch 3) → survivors 0,1,2,6
-    val base = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    val base = tmpDir("graft_gate")
     val dir = s"$base/data"; new java.io.File(dir).mkdirs()
     Seq((0L, "a b c d e"), (1L, "p q r s t"), (2L, "x y z w v"),
       (3L, "a b c d e"), (4L, "p q r s t"), (5L, "x y z w v"),
@@ -443,7 +441,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("vectorIngestReplay: accumulated streaming index equals the batch assignment") {
-    val base = java.nio.file.Files.createTempDirectory("graft_vi").toString
+    val base = tmpDir("graft_vi")
     val dir = s"$base/data"; new java.io.File(dir).mkdirs()
     val vecs = (0 until 24).map { i =>
       (i.toLong, Array.tabulate(4)(d => ((i % 7) + d * 0.25f + (i % 3) * 0.1f)))
@@ -464,7 +462,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cdcApplyReplay: streamed merge chain lands on the one-shot batch fold") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val base = tmpDir("graft_cdc")
     val dir = s"$base/data"; new java.io.File(dir).mkdirs()
     // a synthetic customer table exercising every op path: keys 1..140
     // hit the %7 update, %10 delete, and %20 re-insert tiers
@@ -503,7 +501,7 @@ class StreamingSpec extends SparkSpec {
   test("psiReplay: planted drift in the last batch scores far above the clean ones") {
     // ids 0..39 → span 10; batches 0-2 draw the same value pattern,
     // batch 3 is shifted two bins up — its PSI row must dominate
-    val base = java.nio.file.Files.createTempDirectory("graft_psi").toString
+    val base = tmpDir("graft_psi")
     val dir = s"$base/data"; new java.io.File(dir).mkdirs()
     def at(i: Long) = new Timestamp(1700000000000L + i * 60000L)
     val rows = (0L until 40L).map { i =>
@@ -526,7 +524,7 @@ class StreamingSpec extends SparkSpec {
     // events dated 2026 — PAST the old hard-coded 2025-01-01 sentinel,
     // which would have silently withheld every tail ledger; the max(ts)+48h
     // sentinel moves with the data, so all ledgers emit
-    val base = java.nio.file.Files.createTempDirectory("graft_quota_anchor").toString
+    val base = tmpDir("graft_quota_anchor")
     val dir = s"$base/data"; new java.io.File(dir).mkdirs()
     def at(s: String) = Timestamp.valueOf(s)
     Seq((1L, at("2026-03-01 10:00:00")), (1L, at("2026-03-01 10:10:00")),
@@ -540,23 +538,66 @@ class StreamingSpec extends SparkSpec {
       (2L, at("2026-03-01 11:00:00"), 1L, 1L, 0L)), out.toString)
   }
 
-  /** Stage handcrafted one-row-per-day batches and replay them through
-    * dropDuplicatesWithinWatermark — the measurement harness behind the
-    * q452 eviction-semantics pin below. */
-  private def ttlReplay(days: Seq[(String, Int)], horizon: String): Seq[(String, Int)] = {
-    def dayTs(d: Int) = Timestamp.valueOf(f"2024-01-${d + 1}%02d 00:00:00")
-    val stage = java.nio.file.Files.createTempDirectory("graft_ttl_pin").toString
-    days.map(_._2).distinct.sorted.zipWithIndex.foreach { case (d, i) =>
-      val rows = days.filter(_._2 == d).map { case (u, dd) => (u, dayTs(dd)) }
-      val tmp = s"$stage/__t$d"
-      rows.toDF("uid", "ts").coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(stage, f"b$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  /** Top-level entries of this JVM's scratch root, where every replay's
+    * checkpoint and work dir live while it runs. */
+  private def rootEntries(): Set[String] =
+    Option(graft.storage.Materialize.root.list()).toSeq.flatten.toSet
+
+  /** A tmpfs checkpoint base outside the scratch root: no replay may create
+    * it, since nothing would ever remove it. */
+  private def shmCheckpointBase =
+    new java.io.File(s"/dev/shm/graft_stream_ckpt_${ProcessHandle.current().pid()}")
+
+  test("replay harness: a step that throws on batch 2 rethrows and leaves no checkpoint or work tree") {
+    val stage = tmpDir("replay_fail")
+    val slices = (0 until 3).map(i => Seq(i.toLong).toDF("id"))
+    Streaming.stageBatches(stage, slices.head, slices)
+    val before = rootEntries()
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    var workDir = ""
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Streaming.foreachBatchReplay(spark, stage, slices.head.schema) { (batch, work) =>
+        workDir = work
+        batch.write.parquet(s"$work/b${calls.get}")
+        if (calls.incrementAndGet() == 2) throw new IllegalStateException("step failed")
+      }(work => spark.read.parquet(s"$work/b*"))
     }
+    assert(calls.get == 2)
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => e.isInstanceOf[IllegalStateException] && e.getMessage == "step failed"), err)
+    assert(workDir.startsWith(graft.storage.Materialize.root.getPath), workDir)
+    assert(!new java.io.File(workDir).getParentFile.exists(),
+      "the failed replay's checkpoint and work dir must be deleted")
+    assert(rootEntries() == before)
+    assert(!shmCheckpointBase.exists())
+  }
+
+  test("replay harness: completed memory and foreachBatch replays leave only their stage dirs") {
+    val base = tmpDir("replay_clean")
+    val dir = s"$base/data"
+    (0L until 40L).map(i =>
+      (i, new Timestamp(1700000000000L + i * 60000L), i % 5, "view", (i % 10) * 50.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val before = rootEntries()
+    // psiReplay runs foreachBatch with a work dir, quotaReplay a memory sink
+    val psiRows = Streaming.psiReplay(spark, dir, s"$base/psi_stage", batches = 4).count()
+    val quotaRows = Streaming.quotaReplay(spark, dir, s"$base/quota_stage", maxPerHour = 2).count()
+    assert(psiRows == 3L && quotaRows > 0L)
+    assert(rootEntries() == before, "a replay left scratch under the JVM's root")
+    assert(new java.io.File(base).list().toSet == Set("data", "psi_stage", "quota_stage"))
+    assert(!shmCheckpointBase.exists())
+  }
+
+  /** Replay staged batches of (uid, day) rows one file per micro-batch
+    * through dropDuplicatesWithinWatermark — the measurement harness behind
+    * the q452/q455 semantics pins below. */
+  private def ttlReplayBatches(batches: Seq[Seq[(String, Int)]],
+                               horizon: String): Seq[(String, Int)] = {
+    def dayTs(d: Int) = Timestamp.valueOf(f"2024-01-${d + 1}%02d 00:00:00")
+    val slices = batches.map(_.map { case (u, d) => (u, dayTs(d)) }.toDF("uid", "ts"))
+    val stage = tmpDir("ttl_pin")
+    Streaming.stageBatches(stage, slices.head, slices)
     Streaming.runToResult(spark, s =>
       s.readStream.schema("uid STRING, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1).parquet(stage)
@@ -566,6 +607,11 @@ class StreamingSpec extends SparkSpec {
       .select(col("uid"), (dayofmonth(col("ts")) - 1).as("d"))
       .as[(String, Int)].collect().sorted.toSeq
   }
+
+  /** One batch per event day, in day order. */
+  private def ttlReplay(days: Seq[(String, Int)], horizon: String): Seq[(String, Int)] =
+    ttlReplayBatches(days.map(_._2).distinct.sorted.map(d => days.filter(_._2 == d)),
+      horizon)
 
   test("q452 semantics pin: dedup state is evicted by the LAG-2 watermark, >= at equality, no refresh") {
     // The q452 oracle replays this exact model: a key's state carries
@@ -592,33 +638,6 @@ class StreamingSpec extends SparkSpec {
     // first reaches the expiry (batch day7: day5 - 2 = day3 >= day2)
     assert(ttlReplay(Seq(0, 5, 6, 7, 9).map(d => ("u2", d)), "2 days")
       .map(_._2) == Seq(0, 7), "lag-2 eviction fires at day 7")
-  }
-
-  /** Same harness, explicit batch composition: rows land in the batch the
-    * caller puts them in (not their event day) — the late-arrival pin. */
-  private def ttlReplayBatches(batches: Seq[Seq[(String, Int)]],
-                               horizon: String): Seq[(String, Int)] = {
-    def dayTs(d: Int) = Timestamp.valueOf(f"2024-01-${d + 1}%02d 00:00:00")
-    val stage = java.nio.file.Files.createTempDirectory("graft_late_pin").toString
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = s"$stage/__t$i"
-      rows.map { case (u, d) => (u, dayTs(d)) }.toDF("uid", "ts")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(stage, f"b$i%03d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(1000000L * (i + 1))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
-    Streaming.runToResult(spark, s =>
-      s.readStream.schema("uid STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .withWatermark("ts", horizon)
-        .dropDuplicatesWithinWatermark("uid"),
-      "append", statePartitions = Some(4))
-      .select(col("uid"), (dayofmonth(col("ts")) - 1).as("d"))
-      .as[(String, Int)].collect().sorted.toSeq
   }
 
   test("q455 semantics pin: late rows drop against the LAG-2 watermark, boundary row dropped") {
@@ -686,18 +705,13 @@ class StreamingSpec extends SparkSpec {
           Map("spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         else Map.empty[String, String]
-      val session = spark.newSession()
-      session.conf.set("spark.sql.shuffle.partitions", "4")
-      confs.foreach { case (k, v) => session.conf.set(k, v) }
-      val qn = s"ttl_bound_$provider"
-      val q = session.readStream.schema("user_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .withWatermark("ts", "3 days")
-        .dropDuplicatesWithinWatermark("user_id")
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val emitted = session.table(qn)
+      val q = Streaming.replayToMemory(spark, s =>
+        s.readStream.schema("user_id BIGINT, ts TIMESTAMP")
+          .option("maxFilesPerTrigger", 1).parquet(stage)
+          .withWatermark("ts", "3 days")
+          .dropDuplicatesWithinWatermark("user_id"),
+        "append", statePartitions = Some(4), extraConfs = confs)
+      val emitted = q.sparkSession.table(q.name)
         .select(col("user_id"), to_date(col("ts")))
         .as[(Long, java.sql.Date)].collect().toSet
       assert(emitted == eras.map(e => (e._1, e._2)).toSet,
