@@ -28,9 +28,12 @@ object Bench {
       try {
         SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
         true
-      } catch { case _: Throwable => false }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        false
+      }
 
-    // optional probe filter (comma-separated keys): time a subset in
+    // optional key filter (comma-separated keys): time a subset in
     // isolation — the driver never sets this, so the contract is unchanged
     val names = sys.env.get("SPARK_GRAFT_KEYS") match {
       case Some(ks) =>

@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -66,8 +62,4 @@ object Tables {
       case _ => raw
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` parity queries work. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

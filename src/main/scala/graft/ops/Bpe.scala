@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * frequency, (2) a 1-row argmax collected as metadata, and (3) a map-side
   * fold applying the merge — k merges = k passes over the word table, the
   * corpus is never rescanned. `localCheckpoint` between steps caps plan
-  * growth (same discipline as ivfTrain / connectedComponents).
+  * growth (same discipline as ivfTrainMicro / connectedComponents).
   *
   * The merge application is a left fold that is provably equivalent to the
   * greedy left-to-right scan: it merges when the accumulator's last symbol

@@ -283,34 +283,6 @@ object Dedup {
       .localCheckpoint()
   }
 
-  /** Bucket count for the STORED band-index layout: slices are written
-    * `partitionBy("hb")` with [[withBandBucket]]'s hash bucket, so a probe
-    * whose key set covers few buckets prunes whole directories at the
-    * reader. Batch probes (thousands of band keys) cover every bucket and
-    * pay the full linear scan — that cost is intrinsic to batch dedup —
-    * but the SERVING path ("is this one document a dup?") carries `bands`
-    * keys and reads ≤ bands/64 of the index: dir-level data skipping, no
-    * index shuffle, no driver state beyond the ≤64-value bucket list. */
-  val IndexBuckets = 64
-
-  /** Adds the stored-layout bucket column `hb` to a banded frame. */
-  def withBandBucket(banded: DataFrame, buckets: Int = IndexBuckets): DataFrame =
-    banded.withColumn("hb",
-      pmod(xxhash64(col("band"), col("band_hash")), lit(buckets.toLong)))
-
-  /** Prunes a bucket-partitioned stored index to the buckets the probe's
-    * key set can reach. The bucket list is ≤ `buckets` values (metadata,
-    * not data); the `isin` lands on the partition column, so pruning is
-    * directory-level — non-matching buckets are never opened. Join
-    * semantics are unchanged: a dropped bucket shares no (band, band_hash)
-    * with the probe by construction. */
-  def pruneToProbeBuckets(index: DataFrame, probeBanded: DataFrame,
-                          buckets: Int = IndexBuckets): DataFrame = {
-    val hbs = withBandBucket(probeBanded, buckets)
-      .select(col("hb")).distinct().collect().map(_.getLong(0))
-    index.filter(col("hb").isin(hbs.toIndexedSeq: _*))
-  }
-
   /** INCREMENTAL near-dup: probe a NEW batch against the stored band index
     * of the existing corpus — the production dedup shape (a crawler dedups
     * each incoming batch against everything already kept; recomputing

@@ -259,32 +259,6 @@ object Similarity {
       .select(col(idCol), col(vecCol), col("cell"))
   }
 
-  /** IVF training: Lloyd iterations on the coarse quantizer. Each iteration
-    * is one assignment pass (broadcast centroids) + one component-wise mean
-    * (posexplode → groupBy(cell, dim) avg → re-assemble), i.e. two shuffles
-    * over (id, cell) and (cell, dim) keys — never vector-by-vector driver
-    * work. Seeds = first k vectors by id (deterministic). `localCheckpoint`
-    * between iterations caps plan growth.
-    *
-    * Output: (idCol = cell id, vecCol = centroid) with exactly ≤ k rows.
-    */
-  def ivfTrain(vectors: DataFrame, idCol: String, vecCol: String,
-               k: Int, iterations: Int): DataFrame = {
-    var centroids = vectors.filter(col(idCol) < k).select(col(idCol), col(vecCol))
-    for (_ <- 1 to iterations) {
-      val assigned = ivfAssign(vectors, centroids, idCol, vecCol)
-      val means = assigned
-        .select(col("cell"), posexplode(col(vecCol)))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("col")).as("m"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cell").as(idCol),
-          expr(s"transform(pm, x -> CAST(x.m AS FLOAT))").as(vecCol))
-      centroids = means.localCheckpoint(true)
-    }
-    centroids
-  }
-
   // ------------------------------------------------- micro-exact Lloyd (IVF)
 
   /** (id, dim, micro component) per vector — the [[nearestCentroid]]
@@ -297,9 +271,9 @@ object Similarity {
         round(col("__v").cast("double") * lit(1000000.0), 0).cast("long").as("__vm"))
 
   /** Micro-quantized seed centroids: the first `k` vectors by id, cell =
-    * the seed's id — [[ivfTrain]]'s deterministic seeding rule carried into
-    * the exact-long domain so seed-vs-trained comparisons share one
-    * quantization. Output: (cell, dim, cm) micro longs. */
+    * the seed's id — the deterministic seeding rule of [[ivfTrainMicro]],
+    * so seed-vs-trained comparisons share one quantization. Output:
+    * (cell, dim, cm) micro longs. */
   def microSeedCentroids(vectors: DataFrame, idCol: String, vecCol: String,
                          k: Int): DataFrame =
     microVec(vectors, idCol, vecCol).filter(col("__id") < k)
@@ -341,9 +315,9 @@ object Similarity {
         col("__b.__d2").as("d2"))
 
   /** Lloyd-trained IVF coarse quantizer in EXACT micro-long arithmetic —
-    * [[ivfTrain]]'s float avg update is accumulation-order-dependent (a
-    * different partitioning moves the last ulp, which can flip an argmin),
-    * so the GATED trainer runs the whole loop on the integer grid:
+    * a float avg update is accumulation-order-dependent (a different
+    * partitioning moves the last ulp, which can flip an argmin), so the
+    * trainer runs the whole loop on the integer grid:
     * assignment = exact-long squared distance argmin (ties to the smallest
     * cell), update = floor(Σvm/n) per dimension (the q235 no-flip floor —
     * the true quotient sits ≥ 1/n from any integer while ulp ≪ 1/n).
@@ -354,7 +328,7 @@ object Similarity {
     * metadata against the checkpointed (id, dim, vm) component frame, one
     * map-side-combined d2 aggregate, one struct-min, one (cell, dim) sum
     * aggregate — never vector-by-vector driver work; `localCheckpoint`
-    * between iterations caps plan growth (the [[ivfTrain]] convention).
+    * between iterations caps plan growth.
     * A cell that loses every member simply drops out (both engines).
     *
     * Output: (cell, dim, cm) micro longs after `iterations` full
@@ -385,17 +359,6 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("dim"), col("cm")))).as("__pm"))
       .select(col("cell").as(idCol),
         expr("transform(__pm, x -> CAST(x.cm AS DOUBLE) / 1000000.0)").as(vecCol))
-
-  /** Mean within-cell cosine distance (1 - cos to own centroid) — the
-    * convergence metric for [[ivfTrain]]. */
-  def ivfDistortion(vectors: DataFrame, centroids: DataFrame, idCol: String,
-                    vecCol: String): Double = {
-    val assigned = ivfAssign(vectors, centroids, idCol, vecCol)
-    val c = broadcast(centroids.select(col(idCol).as("cell"), col(vecCol).as("cv")))
-    assigned.join(c, "cell")
-      .select((lit(1.0) - dot(vecCol, "cv") / (norm(vecCol) * norm("cv"))).as("d"))
-      .agg(avg(col("d"))).head().getDouble(0)
-  }
 
   /** IVF top-k search: each query scores only the vectors in its `nprobe`
     * nearest cells — nprobe/|cells| of the corpus per query instead of all
@@ -563,7 +526,7 @@ object Similarity {
     * (same engine-parity machinery q45/q58 prove); ties break on centroid
     * id. Codebooks here come from a caller-supplied frame (the differential
     * gate uses first-K-by-id, q58's convention); production trains each
-    * subspace with [[ivfTrain]] on the sliced column.
+    * subspace with [[ivfTrainMicro]] on the sliced column.
     *
     * Scale shape: the codebook broadcasts, the corpus explodes only m-way
     * on (id, subvector) and reduces straight back — one narrow shuffle for
@@ -589,47 +552,6 @@ object Similarity {
       max(when(col("sub") === i, col("code"))).as(s"c$i"))
     assigned.groupBy(col("__id").as(idCol))
       .agg(codes.head, codes.tail: _*)
-  }
-
-  /** TRUE product-quantizer training: an INDEPENDENT Lloyd run per subspace
-    * (Jégou et al., "Product Quantization for Nearest Neighbor Search",
-    * TPAMI 2011 — the codebook is the cartesian PRODUCT of m per-subspace
-    * codebooks, K^m effective cells from m·K codewords). Slicing one
-    * full-dim centroid frame — the registry gates' deterministic
-    * convention — ties codeword j's subspace slices together, collapsing
-    * the product structure to K cells; this trainer is what production
-    * uses. Runs on the exact micro-long grid ([[ivfTrainMicro]] per
-    * subspace), so it is deterministic and oracle-replicable like every
-    * other trained quantizer here.
-    *
-    * Output rows re-assemble codeword j as concat_s(codeword(s, j)) in the
-    * (idCol, vecCol) shape [[pqEncode]]/[[pqSearchTopK]] slice back apart —
-    * subspace s of row j IS per-subspace codeword (s, j). Rows = min over
-    * subspaces of surviving-cell count (an empty Lloyd cell drops the
-    * codeword id everywhere, keeping the frame rectangular).
-    *
-    * Scale shape: the m subspace frames come off ONE map-side explode of
-    * the corpus; each Lloyd run is [[ivfTrainMicro]]'s broadcast+aggregate
-    * loop on a |corpus|·subDim component frame; the reassembly is a
-    * K·m-row metadata aggregate. */
-  def pqTrainMicro(vectors: DataFrame, idCol: String, vecCol: String,
-                   m: Int, subDim: Int, k: Int, iterations: Int): DataFrame = {
-    val subs = vectors.select(col(idCol),
-      posexplode(expr(
-        s"transform(sequence(0, ${m - 1}), i -> slice($vecCol, i * $subDim + 1, $subDim))"))
-        .as(Seq("sub", "__xs"))).localCheckpoint(eager = false)
-    val perSub = (0 until m).map { s =>
-      microCentroidVectors(
-        ivfTrainMicro(subs.filter(col("sub") === s).select(col(idCol), col("__xs")),
-          idCol, "__xs", k, iterations), idCol, "__xs")
-        .select(col(idCol), lit(s).as("sub"), col("__xs"))
-    }.reduce(_ unionByName _)
-    perSub
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("__n"),
-        array_sort(collect_list(struct(col("sub"), col("__xs")))).as("__p"))
-      .filter(col("__n") === m) // keep the frame rectangular across subspaces
-      .select(col(idCol), flatten(expr("transform(__p, x -> x.__xs)")).as(vecCol))
   }
 
   /** Asymmetric-distance (ADC) top-k search over a PQ-ENCODED corpus — the

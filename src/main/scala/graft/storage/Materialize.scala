@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
   *
   * Scratch root: one directory per JVM, `target/qtmp/run-<pid>` under the
   * working directory, created on first use. Creating it sweeps every
-  * sibling `run-<pid>` whose process is gone, so a run can never see
+  * sibling except the `run-<pid>` roots of live processes (dead runs'
+  * roots and any dir an older scratch layout left), so a run can never see
   * another run's artifacts: a fresh JVM always recomputes, and two
   * concurrent JVMs (a test suite next to a verify run) never overwrite
   * each other's files.
@@ -40,15 +41,14 @@ object Materialize {
   private[graft] lazy val root: File =
     runRoot(new File("target/qtmp").getAbsoluteFile, ProcessHandle.current().pid())
 
-  /** Creates `base/run-<pid>` after deleting every sibling `run-<n>` whose
-    * process is no longer alive. */
+  /** Creates `base/run-<pid>` after deleting every other entry of `base`
+    * except the `run-<n>` roots of processes that are still alive. */
   private[graft] def runRoot(base: File, pid: Long): File = {
     Option(base.listFiles()).getOrElse(Array.empty[File]).foreach { f =>
       f.getName match {
-        case RunDir(n) if n.toLong != pid &&
-            !ProcessHandle.of(n.toLong).filter(_.isAlive).isPresent =>
-          deleteRecursively(f)
-        case _ =>
+        case RunDir(n) if n.toLong == pid ||
+            ProcessHandle.of(n.toLong).filter(_.isAlive).isPresent =>
+        case _ => deleteRecursively(f)
       }
     }
     val dir = new File(base, s"run-$pid")

@@ -713,12 +713,9 @@ object Streaming {
         val prior = Option(new java.io.File(idxDir).listFiles()).toSeq.flatten
           .filter(f => f.isDirectory && f.getName < tag)
           .map(_.getPath).sorted
-        // slices stay FLAT: a batch probe's key set covers every layout
-        // bucket, so a bucketed slice layout buys no pruning and was
-        // measured 7× slower per probe (64-dir discovery per slice).
-        // The bucketed layout ([[graft.ops.Dedup.withBandBucket]]) is
-        // the COMPACTED serving index's job — point lookups there prune
-        // to ≤ bands/64 of the index (ProbeStreamIndex measures both).
+        // slices stay FLAT: a batch probe's key set covers every hash
+        // bucket of a bucketed layout, so bucketing buys no pruning and
+        // was measured 7× slower per probe (64-dir discovery per slice).
         val cross =
           if (prior.nonEmpty)
             Dedup.probeNearDupBanded(batch.sparkSession.read.parquet(prior: _*),

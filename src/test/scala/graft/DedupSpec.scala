@@ -49,31 +49,6 @@ class DedupSpec extends SparkSpec {
     assert(!got.exists { case (e, n) => e == 3L || n == 12L })
   }
 
-  test("bucket-partitioned index layout: pruned probe equals the full probe, " +
-      "and a serving probe's bucket list stays under the layout width") {
-    val base = (1 to 60).map(i => s"tok$i").mkString(" ")
-    val existing = (1L to 40L).map(i =>
-      (i, if (i <= 2) base + s" tail$i" else (1 to 60).map(j => s"w${i}_$j").mkString(" ")))
-      .toDF("doc_id", "text")
-    val fresh = Seq((100L, base)).toDF("doc_id", "text")
-    val index = Dedup.bandedSignatures(existing, "doc_id", "text", 2, 16, 8)
-    val banded = Dedup.bandedSignatures(fresh, "doc_id", "text", 2, 16, 8)
-    // round-trip through the partitioned on-disk layout the gate writes
-    val dir = tmpDir("graft_hbidx") + "/idx"
-    Dedup.withBandBucket(index).write.partitionBy("hb").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    val full = Dedup.probeNearDupBanded(stored.drop("hb"), banded, "doc_id", 16, 0.5)
-      .select("existing_id", "new_id").as[(Long, Long)].collect().toSet
-    val pruned = Dedup.probeNearDupBanded(
-        Dedup.pruneToProbeBuckets(stored, banded).drop("hb"), banded,
-        "doc_id", 16, 0.5)
-      .select("existing_id", "new_id").as[(Long, Long)].collect().toSet
-    assert(pruned == full && full.nonEmpty)
-    // one document probes `bands` keys → at most `bands` of the 64 buckets
-    val nb = Dedup.withBandBucket(banded).select("hb").distinct().count()
-    assert(nb <= 8, s"serving probe covered $nb buckets")
-  }
-
   test("simHash fingerprints: near-dup pair closer in hamming than unrelated") {
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 57).map(i => s"tok$i").mkString(" ") + " x y z"

@@ -122,6 +122,8 @@ class MaterializeSpec extends SparkSpec {
     }
     val stale = new File(base, s"run-$deadPid/dedup_index")
     stale.mkdirs()
+    val olderLayout = new File(base, "q114_src/data")
+    olderLayout.mkdirs()
     val sleeper = new ProcessBuilder("sleep", "60").start()
     try {
       val liveOther = new File(base, s"run-${sleeper.pid()}")
@@ -130,6 +132,7 @@ class MaterializeSpec extends SparkSpec {
       val mine = Materialize.runRoot(base, me)
       assert(mine == new File(base, s"run-$me") && mine.isDirectory)
       assert(!stale.getParentFile.exists(), "a dead run's root must be swept")
+      assert(!olderLayout.getParentFile.exists(), "an older layout's dir must be swept")
       assert(liveOther.exists(), "a live run's root must be kept")
       val theirs = Materialize.runRoot(base, sleeper.pid())
       assert(theirs != mine && mine.exists())

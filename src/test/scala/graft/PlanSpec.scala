@@ -1675,4 +1675,50 @@ class PlanSpec extends SparkSpec {
     assert(readSchemas.exists(l => l.contains("c0") && !l.contains("embedding")),
       s"the ADC path must score from codes without reading vectors:\n$plan")
   }
+
+  test("plan normalizer: a re-run keeps its fingerprint (q107), a plan change moves it (q12)") {
+    import graft.examples.DumpPlans
+    import graft.examples.DumpPlans.{fp, normalize}
+    def raw(key: String): String = DumpPlans.finalPlan(SparkEntry.queries(key)(spark, dir))
+    // a second build of the same frame gets fresh exprIds, and q107's
+    // count-distinct rewrite numbers its groups and orders their columns
+    // by raw exprId hash order
+    val (first, second) = (raw("q107_profile"), raw("q107_profile"))
+    assert(first != second, "two builds should differ in raw exprIds")
+    assert(fp(normalize(first)) == fp(normalize(second)),
+      s"one plan, two fingerprints:\n${normalize(first)}\n---\n${normalize(second)}")
+    // the same rewrite as two builds can print it, pinned as text so the
+    // check does not depend on which order this run's hashes happened to give
+    val a =
+      """(9) Expand [codegen id : 3]
+        |Input [4]: [o_orderkey#1L, o_custkey#2L, o_orderstatus#3, o_orderpriority#4]
+        |Arguments: [[null, null, null, o_orderkey#1L, 4], [null, null, o_orderstatus#3, null, 3], [null, o_orderpriority#4, null, null, 2], [o_custkey#2L, null, null, null, 1]], [o_custkey#5L, o_orderpriority#6, o_orderstatus#7, o_orderkey#8L, gid#9]
+        |
+        |(10) HashAggregate [codegen id : 3]
+        |Input [5]: [o_custkey#5L, o_orderpriority#6, o_orderstatus#7, o_orderkey#8L, gid#9]
+        |Functions [2]: [partial_count(o_orderkey#8L) FILTER (WHERE (gid#9 = 4)), partial_count(o_custkey#5L) FILTER (WHERE (gid#9 = 1))]""".stripMargin
+    val b =
+      """(9) Expand [codegen id : 3]
+        |Input [4]: [o_orderkey#101L, o_custkey#102L, o_orderstatus#103, o_orderpriority#104]
+        |Arguments: [[null, null, null, o_orderstatus#103, 4], [null, null, o_custkey#102L, null, 3], [null, o_orderpriority#104, null, null, 2], [o_orderkey#101L, null, null, null, 1]], [o_orderkey#105L, o_orderpriority#106, o_custkey#107L, o_orderstatus#108, gid#109]
+        |
+        |(10) HashAggregate [codegen id : 3]
+        |Input [5]: [o_orderkey#105L, o_orderpriority#106, o_custkey#107L, o_orderstatus#108, gid#109]
+        |Functions [2]: [partial_count(o_orderkey#105L) FILTER (WHERE (gid#109 = 1)), partial_count(o_custkey#107L) FILTER (WHERE (gid#109 = 3))]""".stripMargin
+    assert(normalize(a) == normalize(b), s"\n${normalize(a)}\n---\n${normalize(b)}")
+    // counting o_orderkey over o_custkey's group rows is a different plan
+    assert(normalize(a.replace("(gid#9 = 4)", "(gid#9 = 1)")) != normalize(a))
+
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(threshold)
+    val broadcast = raw("q12_anti_join_dedup")
+    val shuffled =
+      try { spark.conf.set(threshold, "-1"); raw("q12_anti_join_dedup") }
+      finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    // the raw plans differ in operators, not only in ids
+    assert(broadcast.contains("BroadcastHashJoin") && !shuffled.contains("BroadcastHashJoin"),
+      s"the threshold did not change the join:\n$broadcast\n---\n$shuffled")
+    assert(fp(normalize(broadcast)) != fp(normalize(shuffled)),
+      s"two plans, one fingerprint:\n$broadcast\n---\n$shuffled")
+  }
 }

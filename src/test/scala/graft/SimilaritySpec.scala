@@ -187,16 +187,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got.filter(_._4 == 1L).forall { case (_, _, d, _) => d >= 0 })
   }
 
-  test("ivfTrain reduces distortion vs the raw seed centroids") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val seeds = emb.filter(col("vec_id") < 8).select("vec_id", "embedding")
-    val trained = Similarity.ivfTrain(emb, "vec_id", "embedding", k = 8, iterations = 2)
-    assert(trained.count() <= 8)
-    val before = Similarity.ivfDistortion(emb, seeds, "vec_id", "embedding")
-    val after = Similarity.ivfDistortion(emb, trained, "vec_id", "embedding")
-    assert(after < before, s"lloyd iterations should tighten cells: $after !< $before")
-  }
-
   test("lshBucketNearDup recalls planted near-identical vectors") {
     // 40 distinct pseudo-random base vectors + one near-copy of vector 0
     val pool = Similarity.hyperplanes(140, 64)
