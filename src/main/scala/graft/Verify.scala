@@ -20,6 +20,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+      // a key that fails while its frame is built never reaches the write;
+      // without this a reused out dir would keep the previous run's dump
+      // for it, and the oracle compare would pass on stale rows
+      graft.storage.Materialize.deleteRecursively(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -455,6 +455,9 @@ object DumpPlans {
       .replaceAll("graft_stream_\\d+", "graft_stream_x")
       .replaceAll("MapPartitionsRDD\\[\\d+\\]", "MapPartitionsRDD[x]")
       .replaceAll("rdd_\\d+_\\d+", "rdd_x")
+      // call sites of checkpoints (`localCheckpoint at Dedup.scala:637`):
+      // an edit above the call moves the line, not the plan
+      .replaceAll("\\.scala:\\d+", ".scala:x")
       // JVM identity leaks: byte-array/bloom toStrings, lambda classes
       .replaceAll("@[0-9a-f]{4,}", "@x")
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda\\$x/0xx")

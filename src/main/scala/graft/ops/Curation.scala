@@ -433,17 +433,13 @@ object Curation {
     *    covered set is a DRIVER/BROADCAST bound, not a data-scale bound:
     *    the loop fails loudly the moment the accumulated vocabulary would
     *    exceed `maxCoveredRows` (the requireQueryBatch discipline).
-    *
-    * `singlePass = Some(true|false)` pins the strategy (the pageRank
-    * convention); None sizes the checkpointed index with one count.
     */
   def greedySetCover(spark: org.apache.spark.sql.SparkSession,
                      pairs: DataFrame, rounds: Int,
-                     maxCoveredRows: Long = 2000000L,
-                     singlePass: Option[Boolean] = None): DataFrame = {
+                     maxCoveredRows: Long = 2000000L): DataFrame = {
     import spark.implicits._
-    val onePass = singlePass.getOrElse(
-      Graph.fitsRankBroadcast(pairs.count(), pairs.schema))
+    val onePass =
+      Graph.fitsRankBroadcast(pairs.count(), pairs.schema.map(_.dataType): _*)
     val picksDf =
       if (onePass) {
         val agg = new GreedyCoverAggregator(rounds, maxCoveredRows)

@@ -574,14 +574,11 @@ object Dedup {
     * Edges are pre-partitioned on the probe key and checkpointed once, so a
     * step that sort-merge-joins at scale reshuffles only the label frame.
     * The driver-side loop-with-convergence-check is the standard shape for
-    * iterative graph algorithms on Spark (each `count` is one tiny action);
-    * at extreme graph sizes swap in large-star/small-star to cut the
-    * iteration count, same operator surface.
+    * iterative graph algorithms on Spark (each `count` is one tiny action).
     *
     * Output: (node, component) for every node that appears in `pairs`. */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b", maxIter: Int = 20,
-                          broadcastLabels: Option[Boolean] = None): DataFrame = {
+                          idB: String = "id_b", maxIter: Int = 20): DataFrame = {
     // checkpoint the pair list FIRST: the symmetrized edge frame reads it
     // twice, and without the barrier the (expensive) pair-producing DAG
     // would execute once per branch past its last reusable exchange
@@ -601,17 +598,10 @@ object Dedup {
     // Beyond broadcast range the shape is the round-16 one: edges
     // repartitioned on the probe key once, each step a sort-merge join
     // reshuffling only the label frame. Fixpoint labels are identical
-    // either way (DedupSpec pins it).
-    val bLabels = broadcastLabels.getOrElse(
-      Graph.fitsRankBroadcast(nodes.count(),
-        org.apache.spark.sql.types.StructType(Seq(
-          // both fields carry the LIVE id type (labels are node ids), not a
-          // hardcoded LongType — a string/decimal-keyed caller must not
-          // under-estimate broadcast bytes (r17 advice item 2)
-          org.apache.spark.sql.types.StructField("node",
-            nodes.schema("node").dataType),
-          org.apache.spark.sql.types.StructField("label",
-            nodes.schema("node").dataType)))))
+    // either way. Both fields carry the live id type (labels are node ids):
+    // a string- or decimal-keyed caller must not under-estimate the bytes.
+    val idT = nodes.schema("node").dataType
+    val bLabels = Graph.fitsRankBroadcast(nodes.count(), idT, idT)
     def side(df: DataFrame) = if (bLabels) broadcast(df) else df
     val edges0 = p
       .union(p.select(col("dst"), col("src")))
@@ -670,64 +660,6 @@ object Dedup {
       existing.select(col("node").as(idA), col("component").as(idB))
         .unionByName(newPairs.select(col(idA), col(idB))),
       idA, idB)
-
-  /** Large-star/small-star connected components — the EXTREME-graph-scale
-    * alternative to [[connectedComponents]]' min-label propagation.
-    * Propagation needs one round per hop of graph diameter; the alternating
-    * star contractions (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond") converge in O(log²) rounds on ANY topology, because each
-    * round re-hangs whole subtrees directly under their minimum:
-    *
-    *   - large-star: every node's strictly-larger neighbors re-attach to the
-    *     minimum of its neighborhood (incl. itself);
-    *   - small-star: its not-larger neighbors (and the node) attach there.
-    *
-    * Both steps are a symmetrized edge frame + a per-node window min — group
-    * cost is bounded by node degree, nothing collects, edges stay a 2-long
-    * frame. The fixpoint is a star forest rooted at each component's minimum
-    * id, so labels equal propagation's (DedupSpec asserts equality on
-    * chains, cliques, and random graphs). Near-dup graphs (tiny clusters,
-    * diameter ~2) converge FASTER under plain propagation, which is why
-    * q77/q105 keep it; swap this in when components can be deep or skewed.
-    */
-  def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
-                              idB: String = "id_b", maxIter: Int = 40): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def sym(e: DataFrame) =
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    // m(u) = min(Γ(u) ∪ {u}), one window over the symmetrized edges
-    def withMin(e: DataFrame) = sym(e).withColumn("m",
-      least(col("src"), min(col("dst")).over(Window.partitionBy(col("src")))))
-    def largeStar(e: DataFrame) = withMin(e)
-      .filter(col("dst") > col("src"))
-      .select(col("dst").as("src"), col("m").as("dst"))
-      .distinct()
-    def smallStar(e: DataFrame) = {
-      val n = withMin(e)
-      n.filter(col("dst") <= col("src") && col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .union(n.filter(col("src") =!= col("m"))
-          .select(col("src"), col("m").as("dst")))
-        .distinct()
-    }
-    var e = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      // both frames are distinct sets: equal count + empty difference = equal
-      done = next.count() == e.count() && next.exceptAll(e).isEmpty
-      e = next
-      iter += 1
-    }
-    require(done, s"connectedComponentsStar did not converge in $maxIter rounds")
-    // star forest: every edge is (member, root); roots label themselves
-    e.select(col("src").as("node"), col("dst").as("component"))
-      .union(e.select(col("dst")).distinct()
-        .select(col("dst").as("node"), col("dst").as("component")))
-      .distinct()
-  }
 
   /** Canonical-document election: given near-dup pair hits, resolve clusters
     * (connected components) and pick ONE representative per cluster by a

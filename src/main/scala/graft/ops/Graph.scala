@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Graph scoring over relational edge lists — the crawl-frontier /
   * item-importance signal of a large-scale data pipeline (which pages or
@@ -130,31 +132,25 @@ object Graph {
     *
     * Output: (node, rank) — rank in Scale units.
     *
-    * `broadcastRanks` selects the per-iteration join strategy: broadcasting
-    * the |nodes|-row rank frame makes each iteration's join map-side, but a
-    * graph beyond broadcast range (driver memory / the 8 GB broadcast cap)
-    * would fail at runtime instead of degrading. The default (`None`) is
-    * AUTO: the adjacency checkpoint has already materialized the node
+    * Join strategy: broadcasting the |nodes|-row rank frame makes each
+    * iteration's join map-side, but a graph beyond broadcast range (driver
+    * memory / the 8 GB broadcast cap) would fail at runtime instead of
+    * degrading. The adjacency checkpoint has already materialized the node
     * frame, so counting nodes is a cheap second action over cached blocks,
-    * and the broadcast is taken only when the frame's estimated bytes are
-    * provably inside range ([[AutoBroadcastRankBytes]]). `Some(true|false)`
-    * pins the strategy
-    * for callers that know their graph (or whose driver is sized
-    * differently). Results are bit-identical either way (GraphSpec asserts
-    * it — integer arithmetic, so the join strategy cannot leak into
+    * and [[fitsRankBroadcast]] takes the broadcast only when the frame's
+    * estimated bytes are provably inside range. Results are bit-identical
+    * either way (integer arithmetic, so the join strategy cannot leak into
     * values). */
-  def pageRank(edges: DataFrame, iterations: Int = 3,
-               broadcastRanks: Option[Boolean] = None): DataFrame = {
+  def pageRank(edges: DataFrame, iterations: Int = 3): DataFrame = {
     val adj = adjacency(edges).localCheckpoint()
     var ranks = adj.select(col("src").as("node"), lit(Scale).as("rank"))
-    val bcast = broadcastRanks.getOrElse(
-      fitsRankBroadcast(adj.count(), ranks.schema))
+    val bcast = fitsRankBroadcast(adj.count(), ranks.schema.map(_.dataType): _*)
     // the rank frame is |nodes| rows of two longs — for any graph whose
     // adjacency fits memory it broadcasts, making each iteration's join
     // map-side over the (stationary, checkpointed) adjacency frame; the
     // only exchange per iteration is then the contribution groupBy. Beyond
-    // broadcast range, flip the flag: the join falls back to shuffling the
-    // two |nodes|-row frames (never the edge list).
+    // broadcast range the join falls back to shuffling the two |nodes|-row
+    // frames (never the edge list).
     for (_ <- 1 to iterations) {
       ranks = pageRankStep(adj, ranks, bcast).localCheckpoint(eager = false)
     }
@@ -179,16 +175,14 @@ object Graph {
     * rank join + one node-keyed contribution exchange + one node-keyed
     * full-outer with the (≤ |nodes|-row) seed frame. */
   def personalizedPageRank(edges: DataFrame, seedPred: Column,
-                           iterations: Int = 3,
-                           broadcastRanks: Option[Boolean] = None): DataFrame = {
+                           iterations: Int = 3): DataFrame = {
     val adj = adjacency(edges).localCheckpoint()
     // seedPred is a predicate over the node id column `src` (seeds outside
     // the graph's source set carry no out-edges and no mass — excluded)
     val seeds = adj.where(seedPred).select(col("src").as("__snode"))
       .localCheckpoint(eager = false)
     var ranks = seeds.select(col("__snode").as("node"), lit(Scale).as("rank"))
-    val bcast = broadcastRanks.getOrElse(
-      fitsRankBroadcast(adj.count(), ranks.schema))
+    val bcast = fitsRankBroadcast(adj.count(), ranks.schema.map(_.dataType): _*)
     for (_ <- 1 to iterations) {
       val in = adj
         .join(if (bcast) broadcast(ranks) else ranks, adj("src") === ranks("node"))
@@ -244,8 +238,8 @@ object Graph {
           (lit(4L).cast(dec) * lit(m) * lit(m)).cast("double"), 4).as("modularity"))
   }
 
-  /** Auto-broadcast BYTE budget for [[pageRank]]'s per-iteration rank
-    * frame: 320 MB of estimated packed rows — comfortably inside the 8 GB
+  /** Auto-broadcast BYTE budget of [[fitsRankBroadcast]] (sized first for
+    * [[pageRank]]'s per-iteration rank frame): 320 MB of estimated packed rows — comfortably inside the 8 GB
     * broadcast hard cap and a normally-sized driver. For today's
     * (node, rank) long pair (two 8-byte fields + 16 bytes estimated row
     * overhead = 32 B) this is exactly the previous 10M-row ceiling, but
@@ -257,16 +251,23 @@ object Graph {
     * measurable cost over the already-checkpointed adjacency. */
   val AutoBroadcastRankBytes: Long = 320L * 1000 * 1000
 
-  /** Estimated-bytes broadcast check for a |rows|-row frame of `schema`:
-    * Σ field defaultSize + 16 B per-row overhead vs the byte budget. A
-    * static estimate (not `plan.stats.sizeInBytes`) on purpose: the rank
-    * frame is mid-iteration lineage whose stats are a join estimate, while
-    * rows × fixed-width schema is exact for the long frames this guards. */
-  private[graft] def fitsRankBroadcast(rows: Long,
-      schema: org.apache.spark.sql.types.StructType): Boolean = {
-    val rowBytes = schema.fields.map(_.dataType.defaultSize.toLong).sum + 16L
-    rows * rowBytes <= AutoBroadcastRankBytes
-  }
+  /** The one gate that picks every size-conditional plan arm (rank, label,
+    * keep, frontier and score frames, the triangle adjacency, the set-cover
+    * single pass, q296 and q324): does a |rows|-row frame with fields of
+    * types `fields` fit [[AutoBroadcastRankBytes]]? Bytes are Σ defaultSize
+    * + 16 B per row. A static estimate (not `plan.stats.sizeInBytes`) on
+    * purpose: the rank frame is mid-iteration lineage whose stats are a
+    * join estimate, while rows × fixed-width fields is exact for long frames.
+    *
+    * It also answers no whenever the active session's
+    * `spark.sql.autoBroadcastJoinThreshold` is negative, Spark's own
+    * "broadcast off" value (read through `SQLConf.get`, as Spark's planner
+    * reads it). Every caller then takes its shuffle or iterative arm, the
+    * shape a graph beyond broadcast range runs; the specs and a Verify run
+    * with `-Dspark.sql.autoBroadcastJoinThreshold=-1` check those arms. */
+  private[graft] def fitsRankBroadcast(rows: Long, fields: DataType*): Boolean =
+    SQLConf.get.autoBroadcastJoinThreshold >= 0 &&
+      rows * (fields.map(_.defaultSize.toLong).sum + 16L) <= AutoBroadcastRankBytes
 
   /** Adjacency-list collapse of an edge list: out-neighbors (sorted — the
     * frame itself, not just results, is deterministic across shuffles) and
@@ -326,14 +327,14 @@ object Graph {
     * itself) is then BROADCAST to both sides, so edges never shuffle for
     * the closing — the only exchange after it is the 3·|triangles| credit
     * aggregate, map-side combined. For a graph whose adjacency frame
-    * outgrows a broadcast, `broadcastAdj = false` falls back to shuffled
-    * joins (same result; the Σ outdeg² wedge volume returns as shuffle
+    * outgrows a broadcast ([[fitsRankBroadcast]]) the joins fall back to
+    * shuffles (same result; the Σ outdeg² wedge volume returns as shuffle
     * width on the second join — the documented cost).
     *
     * Input may carry either or both directions; it is canonicalized and
     * de-duplicated here. Output: (node, triangles), nodes with ≥ 1 triangle.
     */
-  def triangleCounts(edges: DataFrame, broadcastAdj: Boolean = true,
+  def triangleCounts(edges: DataFrame,
                      degrees: Option[DataFrame] = None): DataFrame = {
     // packed-key precondition enforced IN the plan (zero extra jobs): a
     // negative or >32-bit id would sign-extend into the degree bits and
@@ -360,10 +361,12 @@ object Graph {
     // orientation key (degree, id) packed into one long (degree high bits):
     // total order, so ties can't create cycles. Precondition: ids and
     // degrees fit in 32/31 bits (any realistic key domain).
-    // the degree frame is |nodes| rows of two longs — if the adjacency
-    // frame fits a broadcast (the flag's contract), degrees certainly do,
-    // and the orientation then never shuffles the edge list
-    def side(df: DataFrame) = if (broadcastAdj) broadcast(df) else df
+    // the adjacency frame holds m ids over ≤ m rows, so m rows of two
+    // longs bound it from above; if it fits a broadcast, the |nodes|-row
+    // degree frame certainly does, and the orientation then never
+    // shuffles the edge list
+    val bAdj = fitsRankBroadcast(und.count(), LongType, LongType)
+    def side(df: DataFrame) = if (bAdj) broadcast(df) else df
     val annotated = und
       .join(side(deg.select(col("n").as("u"), col("d").as("__du"))), Seq("u"))
       .join(side(deg.select(col("n").as("v"), col("d").as("__dv"))), Seq("v"))
@@ -441,8 +444,7 @@ object Graph {
     * lineage stays flat across iterations (the q120 PageRank discipline).
     * Output: surviving (node, deg) with the degree AFTER the last peel. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int = 3,
-                initialDegrees: Option[DataFrame] = None,
-                broadcastKeep: Option[Boolean] = None): DataFrame = {
+                initialDegrees: Option[DataFrame] = None): DataFrame = {
     require(k >= 1 && rounds >= 1, s"bad kCorePeel params ($k, $rounds)")
     var pairs = edges.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v"))
@@ -454,15 +456,10 @@ object Graph {
     // (monotonically shrinking, but m-row) pair list every round; beyond
     // broadcast range, or with no index to size against, the shape is the
     // round-16 one (pair-list hash exchanges). Survivors are identical
-    // either way (GraphSpec pins it).
-    val bKeep = broadcastKeep.getOrElse(initialDegrees.exists(d =>
-      fitsRankBroadcast(d.count(),
-        org.apache.spark.sql.types.StructType(Seq(
-          // size from the LIVE key type (the keep frame is one node column
-          // drawn from the pair list), not a hardcoded LongType — r17
-          // advice item 2
-          org.apache.spark.sql.types.StructField("node",
-            pairs.schema("u").dataType))))))
+    // either way. The keep frame sizes from the live key type of the pair
+    // list, not a hardcoded LongType.
+    val bKeep = initialDegrees.exists(d =>
+      fitsRankBroadcast(d.count(), pairs.schema("u").dataType))
     def side(df: DataFrame) = if (bKeep) broadcast(df) else df
     for (r <- 1 to rounds) {
       // round 1's degrees are the FULL graph's — the co-materialized index
@@ -497,8 +494,7 @@ object Graph {
     * the visited set — all node-keyed; the frontier frame is |reached
     * nodes|, never edges. Hop counts are the only driver-visible rows. */
   def bfsHopCounts(edges: DataFrame, maxHops: Int = 3,
-                   degrees: Option[DataFrame] = None,
-                   broadcastFrontier: Option[Boolean] = None): DataFrame = {
+                   degrees: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val und = edges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(eager = false)
@@ -512,15 +508,10 @@ object Graph {
     // every hop's semi/anti join then probes a broadcast instead of
     // re-exchanging the m-row edge list; beyond broadcast range, or with no
     // index to size against, the hops keep the round-16 edge-hash shape.
-    // Hop counts are identical either way (GraphSpec pins it).
-    val bFrontier = broadcastFrontier.getOrElse(degrees.exists(d =>
-      fitsRankBroadcast(d.count(),
-        org.apache.spark.sql.types.StructType(Seq(
-          // live node type, not a hardcoded LongType (r17 advice item 2)
-          org.apache.spark.sql.types.StructField("node",
-            und.schema("src").dataType),
-          org.apache.spark.sql.types.StructField("hop",
-            org.apache.spark.sql.types.LongType))))))
+    // Hop counts are identical either way. The node field sizes from the
+    // live node type, not a hardcoded LongType.
+    val bFrontier = degrees.exists(d =>
+      fitsRankBroadcast(d.count(), und.schema("src").dataType, LongType))
     def side(df: DataFrame) = if (bFrontier) broadcast(df) else df
     val seed = deg.orderBy(col("d").desc, col("node")).limit(1).select("node")
     var visited = seed.withColumn("hop", lit(0L)).localCheckpoint(eager = false)
@@ -575,8 +566,7 @@ object Graph {
     * anything wider than the |nodes|-row score frames.
     */
   def hits(edges: DataFrame, hubCol: String, authCol: String,
-           iterations: Int = 2,
-           broadcastScores: Option[Boolean] = None): DataFrame = {
+           iterations: Int = 2): DataFrame = {
     val e = edges.select(col(hubCol).as("h"), col(authCol).as("a"))
       .distinct().localCheckpoint()
     // each score frame is ≤ max(|hubs|, |auths|) rows of (node, score) —
@@ -589,17 +579,8 @@ object Graph {
     // field sizes from the wider of the two live key types, not a
     // hardcoded LongType (r17 advice item 2 — a string-keyed caller must
     // not under-estimate broadcast bytes).
-    val bScores = broadcastScores.getOrElse {
-      val nodeT =
-        if (e.schema("h").dataType.defaultSize >= e.schema("a").dataType.defaultSize)
-          e.schema("h").dataType
-        else e.schema("a").dataType
-      fitsRankBroadcast(e.count(),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeT),
-          org.apache.spark.sql.types.StructField("score",
-            org.apache.spark.sql.types.LongType))))
-    }
+    val nodeT = Seq(e.schema("h").dataType, e.schema("a").dataType).maxBy(_.defaultSize)
+    val bScores = fitsRankBroadcast(e.count(), nodeT, LongType)
     var hub = e.select(col("h").as("node")).distinct()
       .select(col("node"), lit(Scale).as("score"))
     var auth: DataFrame = null

@@ -1081,16 +1081,11 @@ private[graft] object RegistryAnnDedup {
       // sort-merge-exchanging the m-row edge list every round (measured
       // SMJ in all 4 rounds before round 17); beyond broadcast range the
       // join falls back to exactly that round-16 shape. Labels are
-      // identical either way (exact integer argmax).
+      // identical either way (exact integer argmax). Both fields carry the
+      // live key type: labels are node ids.
       val e = copurchaseEdges(s, dir) // (src, dst), both directions
-      val bLab = ops.Graph.fitsRankBroadcast(copurchaseDegrees(s, dir).count(),
-        org.apache.spark.sql.types.StructType(Seq(
-          // live key type (labels are node ids), not a hardcoded LongType —
-          // r17 advice item 2
-          org.apache.spark.sql.types.StructField("node",
-            e.schema("src").dataType),
-          org.apache.spark.sql.types.StructField("label",
-            e.schema("src").dataType))))
+      val idT = e.schema("src").dataType
+      val bLab = ops.Graph.fitsRankBroadcast(copurchaseDegrees(s, dir).count(), idT, idT)
       var lab = e.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
       (1 to 4).foreach { _ =>

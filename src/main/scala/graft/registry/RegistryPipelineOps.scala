@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.ops._
 import graft.stream.Streaming
@@ -297,13 +297,8 @@ private[graft] object RegistryPipelineOps {
         sum(when(col("src") % 100 === 0, col("deg")).otherwise(0L)).as("__sd"),
         count(lit(1)).as("__n")).head
       val seedDeg = if (szRow.isNullAt(0)) 0L else szRow.getLong(0)
-      val longF = (n: String) => org.apache.spark.sql.types.StructField(
-        n, org.apache.spark.sql.types.LongType)
-      val bPath =
-        ops.Graph.fitsRankBroadcast(seedDeg,
-          org.apache.spark.sql.types.StructType(Seq(longF("v"), longF("mid")))) &&
-        ops.Graph.fitsRankBroadcast(szRow.getLong(1),
-          org.apache.spark.sql.types.StructType(Seq(longF("mid"))))
+      val bPath = ops.Graph.fitsRankBroadcast(seedDeg, LongType, LongType) &&
+        ops.Graph.fitsRankBroadcast(szRow.getLong(1), LongType)
       def bc(df: org.apache.spark.sql.DataFrame) =
         if (bPath) broadcast(df) else df
       val hop2 = bc(e.select(col("src").as("v"), col("dst").as("mid"))

@@ -299,27 +299,27 @@ class CurationSpec extends SparkSpec {
     val pairs = (1L to 40L).flatMap { d =>
       (0L until (d % 7 + 1)).map(t => (d, s"t${(d * 3 + t * 5) % 23}"))
     }.toDF("doc_id", "tok")
-    val arms = Seq(Some(true), Some(false)).map { arm =>
-      Curation.greedySetCover(spark, pairs, rounds = 6, singlePass = arm)
-        .as[(Long, Long, Long, Long)].collect().toSeq
-    }
-    assert(arms(0) == arms(1), s"single-pass ${arms(0)} != iterative ${arms(1)}")
-    assert(arms(0).nonEmpty)
+    val (onePass, iterative) = bothArms(Curation.greedySetCover(spark, pairs, rounds = 6)
+      .as[(Long, Long, Long, Long)].collect().toSeq)
+    assert(onePass == iterative, s"single-pass $onePass != iterative $iterative")
+    assert(onePass.nonEmpty)
   }
 
   test("greedySetCover fails loudly when the covered vocabulary would exceed the bound") {
     val pairs = (1L to 50L).map(t => (1L, s"t$t")).toDF("doc_id", "tok")
-    // iterative arm: the per-round driver check throws at call time
+    // iterative arm (broadcast off): the per-round driver check throws at
+    // call time
     val e = intercept[IllegalArgumentException] {
-      Curation.greedySetCover(spark, pairs, rounds = 2, maxCoveredRows = 10L,
-        singlePass = Some(false))
+      withSQLConf(broadcastOff) {
+        Curation.greedySetCover(spark, pairs, rounds = 2, maxCoveredRows = 10L)
+      }
     }
     assert(e.getMessage.contains("maxCoveredRows"))
-    // single-pass arm: the walk runs inside the aggregate, so the require
-    // surfaces at action time (wrapped by the task runner) — still loud
+    // single-pass arm (the default here): the walk runs inside the
+    // aggregate, so the require surfaces at action time (wrapped by the
+    // task runner) — still loud
     val e2 = intercept[Throwable] {
-      Curation.greedySetCover(spark, pairs, rounds = 2, maxCoveredRows = 10L,
-        singlePass = Some(true)).collect()
+      Curation.greedySetCover(spark, pairs, rounds = 2, maxCoveredRows = 10L).collect()
     }
     val msgs = Iterator.iterate(e2)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")

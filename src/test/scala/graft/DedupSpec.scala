@@ -188,30 +188,9 @@ class DedupSpec extends SparkSpec {
     assert(out == Seq((2L, 2L, true), (4L, 2L, false), (9L, 1L, true)))
   }
 
-  test("star contraction equals min-label propagation on chains, cliques, random graphs") {
-    // a deep chain (diameter = rounds for propagation, log² for stars),
-    // a clique, an isolated pair, plus seeded pseudo-random edge sets
-    val chain = (1L until 15L).map(i => (i, i + 1))
-    val clique = for (a <- 20L to 24L; b <- (a + 1) to 24L) yield (a, b)
-    val pair = Seq((90L, 91L))
-    val rnd = (0 until 60).map { i =>
-      val a = (i * 2654435761L) % 37 + 100
-      val b = (i * 40503L + 7) % 37 + 100
-      (a, b)
-    }.filter(e => e._1 != e._2)
-    for (edges <- Seq(chain, clique ++ pair, rnd, chain ++ clique ++ rnd)) {
-      val pairs = edges.toDF("id_a", "id_b")
-      val prop = Dedup.connectedComponents(pairs, maxIter = 60)
-        .as[(Long, Long)].collect().toSet
-      val star = Dedup.connectedComponentsStar(pairs)
-        .as[(Long, Long)].collect().toSet
-      assert(star == prop, s"star != propagation for ${edges.take(5)}...")
-    }
-  }
-
   test("connectedComponents broadcast and shuffled label joins agree bit-identically") {
-    // same topology mix as the star-equality test: deep chain (diameter
-    // drives the loop), clique, isolated pair, seeded pseudo-random edges
+    // deep chain (diameter drives the loop), clique, isolated pair, seeded
+    // pseudo-random edges
     val chain = (1L until 15L).map(i => (i, i + 1))
     val clique = for (a <- 20L to 24L; b <- (a + 1) to 24L) yield (a, b)
     val pair = Seq((90L, 91L))
@@ -222,21 +201,24 @@ class DedupSpec extends SparkSpec {
     }.filter(e => e._1 != e._2)
     for (edges <- Seq(chain, clique ++ pair, rnd, chain ++ clique ++ rnd)) {
       val pairs = edges.toDF("id_a", "id_b")
-      val shuffled = Dedup.connectedComponents(pairs, maxIter = 60,
-        broadcastLabels = Some(false)).as[(Long, Long)].collect().toSet
-      val bcast = Dedup.connectedComponents(pairs, maxIter = 60,
-        broadcastLabels = Some(true)).as[(Long, Long)].collect().toSet
+      val (bcast, shuffled) = bothArms(Dedup.connectedComponents(pairs, maxIter = 60)
+        .as[(Long, Long)].collect().toSet)
       assert(shuffled == bcast && shuffled.nonEmpty,
         s"broadcast != shuffled for ${edges.take(5)}...")
+      // reference labels: a driver-side union-find that always hangs the
+      // larger root under the smaller, so each root is its component's min
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else find(p)
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      assert(bcast == parent.keys.map(n => n -> find(n)).toSet,
+        s"labels != union-find reference for ${edges.take(5)}...")
     }
-    // auto mode (None) sizes the label frame from the checkpointed node
-    // frame's count; these tiny graphs are far below range → broadcast
-    val pairs = (chain ++ clique ++ rnd).toDF("id_a", "id_b")
-    val auto = Dedup.connectedComponents(pairs, maxIter = 60)
-      .as[(Long, Long)].collect().toSet
-    val pinned = Dedup.connectedComponents(pairs, maxIter = 60,
-      broadcastLabels = Some(true)).as[(Long, Long)].collect().toSet
-    assert(auto == pinned)
   }
 
   test("clusterRepresentatives elects the longest member per component") {

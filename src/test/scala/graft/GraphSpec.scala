@@ -102,50 +102,46 @@ class GraphSpec extends SparkSpec {
   test("pageRank broadcast and shuffle rank joins agree bit-identically") {
     val rel = (1L to 400L).map(i => (i % 37, i % 11)).toDF("c", "e")
     val edges = Graph.coOccurrenceEdges(rel, "e", "c")
-    val shuffled = Graph.pageRank(edges, 3, broadcastRanks = Some(false))
-      .as[(Long, Long)].collect().toSet
-    val bcast = Graph.pageRank(edges, 3, broadcastRanks = Some(true))
-      .as[(Long, Long)].collect().toSet
+    val (bcast, shuffled) = bothArms(
+      Graph.pageRank(edges, 3).as[(Long, Long)].collect().toSet)
     assert(shuffled == bcast && shuffled.nonEmpty)
-    // auto mode (None) must agree too — this tiny graph measures far below
-    // AutoBroadcastRankBytes, so auto resolves to the broadcast strategy
-    val auto = Graph.pageRank(edges, 3)
-      .as[(Long, Long)].collect().toSet
-    assert(auto == bcast)
   }
+
+  // the frontier and keep joins are sized from a degree frame: without one
+  // both calls would take the shuffled arm
+  private def degreesOf(edges: org.apache.spark.sql.DataFrame) =
+    edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
 
   test("bfsHopCounts broadcast and shuffled frontier joins agree bit-identically") {
     val rel = (1L to 400L).map(i => (i % 37, i % 11)).toDF("c", "e")
     val edges = Graph.coOccurrenceEdges(rel, "e", "c")
-    val shuffled = Graph.bfsHopCounts(edges, maxHops = 3,
-      broadcastFrontier = Some(false)).as[(Long, Long)].collect().toSet
-    val bcast = Graph.bfsHopCounts(edges, maxHops = 3,
-      broadcastFrontier = Some(true)).as[(Long, Long)].collect().toSet
+    val (bcast, shuffled) = bothArms(Graph.bfsHopCounts(edges, maxHops = 3,
+      degrees = Some(degreesOf(edges))).as[(Long, Long)].collect().toSet)
     assert(shuffled == bcast && shuffled.nonEmpty)
   }
 
   test("kCorePeel broadcast and shuffled keep joins agree bit-identically") {
     val rel = (1L to 400L).map(i => (i % 37, i % 11)).toDF("c", "e")
     val edges = Graph.coOccurrenceEdges(rel, "e", "c")
-    val shuffled = Graph.kCorePeel(edges, k = 3, rounds = 3,
-      broadcastKeep = Some(false)).as[(Long, Long)].collect().toSet
-    val bcast = Graph.kCorePeel(edges, k = 3, rounds = 3,
-      broadcastKeep = Some(true)).as[(Long, Long)].collect().toSet
+    val (bcast, shuffled) = bothArms(Graph.kCorePeel(edges, k = 3, rounds = 3,
+      initialDegrees = Some(degreesOf(edges))).as[(Long, Long)].collect().toSet)
     assert(shuffled == bcast && shuffled.nonEmpty)
   }
 
   test("hits broadcast and shuffled score gathers agree bit-identically") {
     val rel = (1L to 400L).map(i => (i % 37, i % 11)).toDF("h", "a")
-    val shuffled = Graph.hits(rel, "h", "a", iterations = 2,
-      broadcastScores = Some(false)).as[(String, Long, Long)].collect().toSet
-    val bcast = Graph.hits(rel, "h", "a", iterations = 2,
-      broadcastScores = Some(true)).as[(String, Long, Long)].collect().toSet
+    val (bcast, shuffled) = bothArms(Graph.hits(rel, "h", "a", iterations = 2)
+      .as[(String, Long, Long)].collect().toSet)
     assert(shuffled == bcast && shuffled.nonEmpty)
-    // auto mode (None) sizes the score frames from one edge-frame metadata
-    // action; this tiny relation is far below range, so auto == broadcast
-    val auto = Graph.hits(rel, "h", "a", iterations = 2)
-      .as[(String, Long, Long)].collect().toSet
-    assert(auto == bcast)
+  }
+
+  test("triangleCounts broadcast and shuffled adjacency joins agree bit-identically") {
+    val rnd = new scala.util.Random(5)
+    val edges = (1 to 300).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .toDF("src", "dst")
+    val (bcast, shuffled) = bothArms(
+      Graph.triangleCounts(edges).as[(Long, Long)].collect().toSet)
+    assert(shuffled == bcast && shuffled.nonEmpty)
   }
 
   test("coOccurrenceEdgeIndex equals the direct derivation and writes once per JVM") {
@@ -187,16 +183,19 @@ class GraphSpec extends SparkSpec {
 
   test("rank-frame broadcast guard is byte-based, not a row-count proxy") {
     import org.apache.spark.sql.types._
-    val narrow = StructType(Seq(StructField("node", LongType),
-      StructField("rank", LongType))) // 32 B/row estimate
-    // today's 2-long frame keeps the old 10M-row ceiling exactly
-    assert(Graph.fitsRankBroadcast(10000000L, narrow))
-    assert(!Graph.fitsRankBroadcast(10000001L, narrow))
+    // a (node, rank) frame of two longs: 32 B/row estimate, so the 2-long
+    // frame keeps the old 10M-row ceiling exactly
+    assert(Graph.fitsRankBroadcast(10000000L, LongType, LongType))
+    assert(!Graph.fitsRankBroadcast(10000001L, LongType, LongType))
     // a widened frame (e.g. a 64-float payload riding along) shrinks the
     // row ceiling automatically — the case a row-count proxy under-estimates
-    val wide = narrow.add(StructField("payload",
-      ArrayType(FloatType))) // defaultSize adds the array estimate
-    assert(!Graph.fitsRankBroadcast(10000000L, wide))
+    // (defaultSize adds the array estimate)
+    assert(!Graph.fitsRankBroadcast(10000000L, LongType, LongType, ArrayType(FloatType)))
+    // Spark's broadcast-off value turns every gate to its fallback arm
+    assert(Graph.fitsRankBroadcast(1L, LongType, LongType))
+    withSQLConf(broadcastOff) {
+      assert(!Graph.fitsRankBroadcast(1L, LongType, LongType))
+    }
   }
 
   test("associationRules: hand-computed support/confidence/lift, floor applied") {
@@ -313,12 +312,11 @@ class GraphSpec extends SparkSpec {
     val rnd = new scala.util.Random(11)
     val edges = (1 to 300).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter(e => e._1 != e._2).toDF("src", "dst")
-    val a = Graph.personalizedPageRank(edges.repartition(1), col("src") % 7 === 0,
-      iterations = 3, broadcastRanks = Some(true))
+    def ppr(parts: Int) = Graph.personalizedPageRank(edges.repartition(parts),
+      col("src") % 7 === 0, iterations = 3)
       .orderBy("node").as[(Long, Long)].collect().toSeq
-    val b = Graph.personalizedPageRank(edges.repartition(13), col("src") % 7 === 0,
-      iterations = 3, broadcastRanks = Some(false))
-      .orderBy("node").as[(Long, Long)].collect().toSeq
+    val a = ppr(1)
+    val b = withSQLConf(broadcastOff)(ppr(13))
     assert(a == b && a.nonEmpty)
   }
 }

@@ -33,14 +33,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  private def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
   import spark.implicits._
 
   private def vecsDF(vs: Seq[(Long, Array[Float])]) = vs.toDF("vec_id", "embedding")

@@ -28,4 +28,24 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
   def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
+
+  /** Runs `f` with the session confs `pairs` set, then restores each one's
+    * previous value (or unsets it). */
+  def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Spark's own "broadcast off" value: under it `Graph.fitsRankBroadcast`
+    * answers no, so every size-conditional plan takes its fallback arm. */
+  val broadcastOff: (String, String) = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
+  /** `f` evaluated at the session defaults (the broadcast or single-pass
+    * arms, on test-sized inputs) and again with the broadcast switch off
+    * (the shuffle and iterative arms). */
+  def bothArms[A](f: => A): (A, A) = (f, withSQLConf(broadcastOff)(f))
 }

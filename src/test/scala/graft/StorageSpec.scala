@@ -42,16 +42,14 @@ class StorageSpec extends SparkSpec {
     Storage.writeBucketed(right, "bkt_right", "k", 4)
     // force the non-broadcast path: co-location matters for fact-fact joins,
     // where neither side fits in a broadcast anyway
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withSQLConf(broadcastOff) {
       val joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
       assert(joined.count() == 1000)
       val plan = finalPlan(joined)
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"), plan)
       assert(!plan.contains("Exchange"), s"bucketed join should not shuffle:\n$plan")
       assert(plan.contains("SelectedBucketsCount"), plan)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("compact rewrites many small files into few") {
@@ -139,9 +137,7 @@ class StorageSpec extends SparkSpec {
     // equivalence + plan in the no-broadcast regime (bucketed/stream-static
     // joins — the case AQE skew handling can't reach)
     val dims = Seq(("reddit", 1), ("youtube", 2), ("4chan", 3)).toDF("platform", "dim_id")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withSQLConf(broadcastOff) {
       val agg = Relational.saltedJoin(events, dims, "platform", 8)
         .groupBy("platform").agg(count(lit(1)).as("n"))
       val counts = agg.as[(String, Long)].collect().toMap
@@ -149,7 +145,7 @@ class StorageSpec extends SparkSpec {
       val plan = agg.queryExecution
         .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       assert(plan.contains("__salt"), s"join key does not carry the salt:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("z-order layout bounds BOTH dimensions' per-file spans; linear sort only one") {
