@@ -22,46 +22,6 @@ object SparkEntry {
   private[graft] def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** MULTI-PASS blocked edit-distance self-join over customer names (shared
-    * by q127's pair listing and q203's transitive entity resolution):
-    * candidate pairs come from equi-joins on blocking keys, so Levenshtein
-    * — quadratic in the naive formulation — runs only inside blocks; there
-    * is NO cartesian anywhere in the plan. A single blocking key has a
-    * structural blind spot (prefix-16 blocking can never find a pair whose
-    * edit sits IN the first 16 chars), so two passes with complementary
-    * keys union their candidates — standard multi-blocking:
-    *   pass 1: block on the 16-char prefix, DP on the tails
-    *           (edit distance is common-PREFIX invariant)
-    *   pass 2: block on (length, last-8 suffix), DP on the heads
-    *           (edit distance is common-SUFFIX invariant)
-    * A substitution anywhere in an 18-char name lands in at least one pass;
-    * two fixture rows whose edit is at char 10 (invisible to pass 1) prove
-    * pass 2 carries its weight under the oracle. */
-  private[graft] def fuzzyCustomerPairs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val base = T(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-      .unionByName(Seq(
-        (900000001L, "Customer#A00001111"),
-        (900000002L, "Customer#B00001111")).toDF("c_custkey", "c_name"))
-    def pass(blk: Column, residue: Column): DataFrame = {
-      val c = base.select(col("c_custkey"), blk.as("__blk"), residue.as("__res"))
-      val a = c.select(col("__blk"), col("c_custkey").as("key_a"), col("__res").as("res_a"))
-      val b = c.select(col("__blk"), col("c_custkey").as("key_b"), col("__res").as("res_b"))
-      a.join(b, Seq("__blk"))
-        .filter(col("key_a") < col("key_b"))
-        .withColumn("dist", levenshtein(col("res_a"), col("res_b")).cast("long"))
-        .filter(col("dist") <= 1)
-        .select(col("key_a"), col("key_b"), col("dist"))
-    }
-    val p1 = pass(substring(col("c_name"), 1, 16),
-      substring(col("c_name"), 17, 1000000))
-    val p2 = pass(struct(length(col("c_name")), expr("substring(c_name, -8, 8)")),
-      expr("substring(c_name, 1, greatest(length(c_name) - 8, 0))"))
-    // a pair agreeing on BOTH keys surfaces twice with the same dist —
-    // dedup on the pair (dist is a pure function of it)
-    p1.unionByName(p2).dropDuplicates("key_a", "key_b")
-  }
-
   /** The SHARED co-purchase edge table: the full-history lineitem
     * co-occurrence graph materialized once per (input dir) per JVM and
     * scanned by its six consumers — q120 (PageRank), q125 (triangles),
@@ -223,8 +183,9 @@ object SparkEntry {
     * twin's plan — same registered name, the twin's engine code and oracle —
     * so the full registry scale-benches with ZERO exclusions and a user
     * calling any of these keys at 100× gets the linear plan, not the melt.
-    * The superlinear originals survive as Spec-only yardsticks: Round15Spec
-    * rebuilds each shape inline from ops/ and pins that the twin preserves
+    * The superlinear originals survive as Spec-only yardsticks: DedupSpec
+    * (q127/q203/q273/q276) and RelationalSpec (q62/q394) rebuild each shape
+    * inline and pin that the twin preserves
     * the semantics (exact identity for q62/q444; the documented
     * density-scaled re-statements for the rest — group-level pairs/closure
     * for q127/q203, LSH cells for q273, the production 9000 bp confirm
@@ -246,11 +207,7 @@ object SparkEntry {
         RegistryAnnDedup.queries ++
         RegistryPipelineOps.queries ++
         RegistryStatsMl.queries ++
-        RegistryWarehouseText.queries ++
-        RegistryRound14.queries ++
-        RegistryRound15.queries ++
-        RegistryRound16.queries ++
-        RegistryRound17.queries).toMap
+        RegistryWarehouseText.queries).toMap
     base ++ retiredToTwins.map { case (k, twin) => k -> base(twin) }
   }
 
@@ -1570,11 +1527,7 @@ object SparkEntry {
         RegistryAnnDedup.oracleSql ++
         RegistryPipelineOps.oracleSql ++
         RegistryStatsMl.oracleSql ++
-        RegistryWarehouseText.oracleSql ++
-        RegistryRound14.oracleSql ++
-        RegistryRound15.oracleSql ++
-        RegistryRound16.oracleSql ++
-        RegistryRound17.oracleSql).toMap
+        RegistryWarehouseText.oracleSql).toMap
     // the retired keys verify against their twin's oracle — EXCEPT q62,
     // whose own interval-join SQL is kept as the cross-formulation witness
     // for the rank-difference plan (see retiredToTwins)

@@ -27,7 +27,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -564,17 +564,6 @@ object Multimodal {
         lit("text/plain").as("mime"),
         octet_length(encode(col(textCol), "UTF-8")).cast("long").as("n_bytes")).as("meta"))
 
-  /** Image resize stub: real codecs are unavailable in this container, so the
-    * transform records the target geometry in metadata and passes payload
-    * bytes through — the Spark-side plumbing (schema evolution, partition
-    * parallelism) is real; swap the identity for a codec call in production.
-    * (For formats the JDK DOES decode — PNG/GIF/BMP — [[resizeBox]] below is
-    * the real thing and supersedes this seam.) */
-  def resizeStub(mm: DataFrame, width: Int, height: Int): DataFrame =
-    mm.withColumn("meta",
-      struct(col("meta.mime").as("mime"), col("meta.n_bytes").as("n_bytes"),
-        lit(width).as("target_w"), lit(height).as("target_h")))
-
   /** REAL box-filter image downsample — the resize step a vision-language
     * pipeline runs before patch embedding: genuine ImageIO decode per row,
     * then each target pixel is the floor-divided EXACT integer mean of its

@@ -433,6 +433,11 @@ object Curation {
     *    covered set is a DRIVER/BROADCAST bound, not a data-scale bound:
     *    the loop fails loudly the moment the accumulated vocabulary would
     *    exceed `maxCoveredRows` (the requireQueryBatch discipline).
+    *
+    * Precondition: `pairs` is materialized (e.g. `localCheckpoint`ed). The
+    * sizing `pairs.count()` and the chosen strategy each scan it, so an
+    * unmaterialized derivation would be computed again by every scan. q416,
+    * the one product caller, passes a localCheckpointed frame.
     */
   def greedySetCover(spark: org.apache.spark.sql.SparkSession,
                      pairs: DataFrame, rounds: Int,

@@ -352,27 +352,6 @@ object Dedup {
           .reduce(_.bitwiseOR(_)).as("simhash"))
   }
 
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, found via
-    * chunk-bucket join (4 chunks of 16 bits ⇒ pigeonhole for maxHamming ≤ 3).
-    */
-  def simHashNearDup(docs: DataFrame, idCol: String, textCol: String,
-                     maxHamming: Int = 3): DataFrame = {
-    val chunks = 4
-    val sh = simHash(docs, idCol, textCol)
-    val chunked = sh.select(col(idCol), col("simhash"),
-      posexplode(array((0 until chunks).map(i =>
-        shiftrightunsigned(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "chunk_val")
-    val a = chunked.select(col(idCol).as("id_a"), col("simhash").as("sh_a"), col("chunk"), col("chunk_val"))
-    val b = chunked.select(col(idCol).as("id_b"), col("simhash").as("sh_b"), col("chunk"), col("chunk_val"))
-    val ham = bit_count(col("sh_a").bitwiseXOR(col("sh_b")))
-    a.join(b, Seq("chunk", "chunk_val")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b")).distinct()
-      .withColumn("hamming", ham)
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   // ---------------------------------------------------------------- jaccard
 
   /** Exact n-gram Jaccard similarity for candidate pairs: |A∩B| via a
@@ -661,27 +640,22 @@ object Dedup {
         .unionByName(newPairs.select(col(idA), col(idB))),
       idA, idB)
 
-  /** Canonical-document election: given near-dup pair hits, resolve clusters
-    * (connected components) and pick ONE representative per cluster by a
-    * quality ordering — keep the longest member, tie-broken on id (q77 keeps
-    * min-id; a real curation run keeps the best-quality member, which is
-    * what this computes). `qualityCol` must exist on `docs`.
+  /** Canonical-document election: given the resolved near-dup clusters
+    * (a (node, component) map from [[connectedComponents]], or the one
+    * materialized and shared by [[componentIndex]]), pick ONE representative
+    * per cluster by a quality ordering — keep the longest member,
+    * tie-broken on id (q77 keeps min-id; a real curation run keeps the
+    * best-quality member, which is what this computes). `qualityCol` must
+    * exist on `docs`.
     *
-    * Scale shape: components over pair ids (never text), then one join of
-    * the component labels against the docs' (id, quality) projection and one
-    * window over the component — cluster groups are near-dup clusters, tiny
-    * by construction, so the window partition never skews.
+    * Scale shape: one join of the component labels against the docs' (id,
+    * quality) projection and one window over the component — cluster
+    * groups are near-dup clusters, tiny by construction, so the window
+    * partition never skews.
     *
     * Output: (component, id, quality, cluster_size, is_rep). */
-  def clusterRepresentatives(pairs: DataFrame, docs: DataFrame, idCol: String,
-                             qualityCol: String): DataFrame =
-    clusterRepresentativesFrom(connectedComponents(pairs), docs, idCol, qualityCol)
-
-  /** [[clusterRepresentatives]] over an ALREADY-RESOLVED component map —
-    * the entry point when the (node, component) table is materialized once
-    * and shared ([[componentIndex]]) instead of re-derived per consumer. */
-  def clusterRepresentativesFrom(comp: DataFrame, docs: DataFrame, idCol: String,
-                                 qualityCol: String): DataFrame = {
+  def clusterRepresentatives(comp: DataFrame, docs: DataFrame, idCol: String,
+                             qualityCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("component"))
     comp.join(docs.select(col(idCol).as("node"), col(qualityCol)), Seq("node"))

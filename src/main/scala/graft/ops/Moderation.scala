@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic moderation classifier (SURVEY.md §2.8 q35).
@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * call per row, the pipeline's throughput ceiling. We keep the output
   * contract (`is_hate_speech: Boolean`, `hate_speech_confidence: Double`,
   * strict `> 0.9`) but replace the remote model with a deterministic keyword
-  * scorer, and shape the real-HTTP escape hatch as a per-partition batch
-  * client rather than per-row calls.
+  * scorer evaluated as codegen'd column expressions.
   */
 object Moderation {
 
@@ -26,7 +25,7 @@ object Moderation {
   /** Confidence = hits / (hits + 1): monotone in hit count, in [0, 1), crosses
     * the 0.9 threshold at 10+ hits. Pure codegen'd expressions. */
   def confidence(textCol: Column): Column = {
-    // null text scores 0.0, mirroring the partitioned variant's empty-string guard
+    // null text scores 0.0 (no hits)
     val hits = coalesce(regexp_count(lower(textCol), lit(termPattern)), lit(0)).cast("double")
     Num.roundz(hits / (hits + lit(1.0)), 4)
   }
@@ -38,58 +37,5 @@ object Moderation {
     val conf = confidence(col(textCol))
     df.withColumn("hate_speech_confidence", conf)
       .withColumn("is_hate_speech", isHate(col("hate_speech_confidence")))
-  }
-
-  /** Injectable remote-scorer seam: the factory runs ONCE PER PARTITION on
-    * the executor (connection pool, auth, analyzer init live here), and the
-    * returned function scores a whole batch per call — vs the reference's
-    * one blocking HTTP POST and analyzer re-init per row
-    * (`Reddit_4chan_Analysis.py:123,148`), its throughput ceiling. Same shape
-    * as [[graft.multimodal.Multimodal.Decoder]]: a Serializable factory so a
-    * real HTTP client can be swapped in without touching the operator. */
-  trait Client extends Serializable {
-    /** Called once per partition; the returned function once per batch. */
-    def open(): Seq[String] => Seq[Double]
-  }
-
-  /** Deterministic default client: the keyword scorer, batched. */
-  object KeywordClient extends Client {
-    def open(): Seq[String] => Seq[Double] = {
-      val pattern = termPattern.r // the SAME pattern the expression path uses
-      texts =>
-        texts.map { t =>
-          val hits = pattern.findAllMatchIn(Option(t).getOrElse("").toLowerCase).size.toDouble
-          math.rint(hits / (hits + 1.0) * 10000) / 10000
-        }
-    }
-  }
-
-  /** Batch-client classifier: per-partition client init, `batchSize` rows per
-    * remote call. The expression path ([[classify]]) is preferred wherever
-    * the scorer is expressible — this is the seam for genuinely remote
-    * models. */
-  def classifyPartitioned(df: DataFrame, textCol: String,
-                          client: Client = KeywordClient,
-                          batchSize: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+
-        org.apache.spark.sql.types.StructField("hate_speech_confidence", org.apache.spark.sql.types.DoubleType) :+
-        org.apache.spark.sql.types.StructField("is_hate_speech", org.apache.spark.sql.types.BooleanType))
-    val textIdx = df.schema.fieldIndex(textCol)
-    val out = df.rdd.mapPartitions { iter =>
-      val scoreBatch = client.open() // once per partition
-      iter.grouped(batchSize).flatMap { rows =>
-        val confs = scoreBatch(rows.map(_.getString(textIdx)))
-        // fail loudly on a misbehaving client: lazyZip would silently drop
-        // rows (or scores) on a length mismatch
-        require(confs.size == rows.size,
-          s"Moderation.Client returned ${confs.size} scores for ${rows.size} rows")
-        rows.lazyZip(confs).map { (row, conf) =>
-          Row.fromSeq(row.toSeq :+ conf :+ (conf > confidenceThreshold))
-        }
-      }
-    }
-    spark.createDataFrame(out, schema)
   }
 }

@@ -173,37 +173,6 @@ object Relational {
     carried.filter(col("__side") === 1).select(outCols: _*)
   }
 
-  /** Unkeyed interval join via time-binning: pairs (l, r) with
-    * `rightTs ∈ [leftTs − before, leftTs + after]`. A naive unkeyed range
-    * join is a cartesian product; here both sides shuffle on a time BIN of
-    * `binWidth` micros — left rows replicate to every bin their interval
-    * touches (≤ 2 + (before+after)/binWidth copies), right rows keep their
-    * own bin, and the exact predicate re-applies after the equi-join on the
-    * bin. Cost is Σ bin² over co-occurring bins, not |L|·|R|; each matching
-    * pair meets in exactly one bin (the right row's), so no dedup pass.
-    * Timestamps must be non-negative (epoch micros; `div` floors there).
-    */
-  def binnedRangeJoin(left: DataFrame, right: DataFrame,
-                      leftTs: String, rightTs: String,
-                      before: String, after: String,
-                      binWidth: String = "1 hour"): DataFrame = {
-    def micros(interval: String): Column =
-      expr(s"unix_micros(timestamp '1970-01-01 00:00:00Z' + INTERVAL $interval)")
-    val w = micros(binWidth)
-    val lm = unix_micros(col(leftTs))
-    val lo = lm - micros(before)
-    val hi = lm + micros(after)
-    // micros < 2^53 ⇒ the double quotient is exact enough for floor (an
-    // integer quotient is itself representable, so floor can't misround)
-    val lBinned = left
-      .withColumn("__bin", explode(sequence(floor(lo / w), floor(hi / w))))
-    val rBinned = right.withColumn("__bin", floor(unix_micros(col(rightTs)) / w))
-    lBinned.join(rBinned, Seq("__bin"))
-      .filter(col(rightTs).between(col(leftTs) - expr(s"INTERVAL $before"),
-        col(leftTs) + expr(s"INTERVAL $after")))
-      .drop("__bin")
-  }
-
   /** Ordered running state via window functions (reference carries `start`/
     * `count` across an ordered python loop, `Analysis Dashboard/app.py:44-56`).
     * Partitioned by a key so state never concentrates on one task.

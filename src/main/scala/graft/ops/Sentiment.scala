@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * threshold ladder. Capability parity (score + label columns), not bit parity
   * with NLTK.
   *
-  * Three formulations, bit-identical (SentimentModerationSpec):
+  * Two formulations, bit-identical (SentimentModerationSpec):
   *  - [[scoreByLexiconNative]]: one codegen'd byte loop per row — a map-side
   *    projection with no explode, join or shuffle. The registered q34 scorer
   *    and the one [[graft.Pipeline.enrich]] runs.
@@ -23,15 +23,13 @@ import org.apache.spark.sql.functions._
   *    inlined as VALUES for the DuckDB oracle. It reads `docs` twice (tokens
   *    and the join back), so a fused pipeline plan evaluates every upstream
   *    expression and scan twice; the parity reference, not a pipeline stage.
-  *  - [[compoundUdf]]: a self-contained scalar UDF for API parity with the
-  *    reference's per-row call shape (UDFs are opaque to codegen).
   */
 object Sentiment {
 
   /** Bundled word → valence map (deterministic stand-in for the VADER lexicon;
     * values in VADER's [-4, 4] convention). Canonical copy lives with the
-    * native expression ([[graft.functions.LexiconScore.words]]) so all three
-    * forms — native, join, UDF — score from one table. */
+    * native expression ([[graft.functions.LexiconScore.words]]) so both
+    * forms — native and join — and [[scoreVader]] score from one table. */
   val lexicon: Seq[(String, Double)] = graft.functions.LexiconScore.words
 
   val normalizationAlpha = 15.0
@@ -79,9 +77,8 @@ object Sentiment {
     * projection: no token explode, no join, no aggregate, no exchange
     * anywhere (PlanSpec pins the plan). The relational
     * [[scoreByLexiconJoin]] stays as the parity reference (and for a
-    * lexicon too big to bake into an expression); [[compoundUdf]] stays for
-    * per-row API parity with the reference.
-    * All three agree bit-for-bit (SentimentModerationSpec).
+    * lexicon too big to bake into an expression). Both agree bit-for-bit
+    * (SentimentModerationSpec).
     *
     * Output matches [[scoreByLexiconJoin]]: docs columns +
     * (`sentiment_score` 4dp, `sentiment`); NULL/hitless text scores 0. */
@@ -159,19 +156,5 @@ object Sentiment {
       .select(col(idCol),
         Num.roundz(compoundOf(col("__s")), 4).as("vader_score"),
         label(compoundOf(col("__s"))).as("vader_label"))
-  }
-
-  /** Scalar UDF variant: whole scorer in one call, mirroring the reference's
-    * `analyze_sentiment(comment)` shape. Deterministic; test/parity use. */
-  def compoundUdf: org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val lex = lexicon.toMap
-    udf { (text: String) =>
-      if (text == null) 0.0
-      else {
-        val s = text.toLowerCase.split("\\s+").iterator.map(w => lex.getOrElse(w, 0.0)).sum
-        val c = s / math.sqrt(s * s + normalizationAlpha)
-        math.rint(c * 10000) / 10000
-      }
-    }
   }
 }

@@ -212,22 +212,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Embedding-cosine near-duplicate pairs: all (a, b), a < b, cosine ≥
-    * threshold. Brute-force all-pairs — O(N²) compute and shuffle, so this is
-    * NOT a registered query path; it survives as the exact recall yardstick
-    * for [[lshBucketNearDup]] (the scale path, which q54 registers) in
-    * SimilaritySpec.
-    */
-  def cosineNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double): DataFrame = {
-    val a = vectors.select(col(idCol).as("id_a"), col(vecCol).as("va"))
-    val b = vectors.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", dot("va", "vb") / (norm("va") * norm("vb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), Num.roundz(col("cosine"), 4).as("cosine"))
-  }
-
   /** IVF coarse quantization: assign every vector to its nearest centroid
     * cell (highest cosine, centroid id tie-break). Centroids are broadcast;
     * the assignment is one corpus scan + a per-vector window over |centroids|

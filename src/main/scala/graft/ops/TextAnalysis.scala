@@ -72,15 +72,6 @@ object TextAnalysis {
     Num.roundz(lenScore * 0.4 + alphaRatio * 0.3 + stopScore * 0.3, 4)
   }
 
-  /** HyperLogLog distinct count (q46 scale path): one pass, fixed-size sketch
-    * per group — the exact `count_distinct` twin backs the DuckDB oracle,
-    * this is what a 100 TB run uses (rsd 1.5% ⇒ ~few KB of sketch/group vs an
-    * unbounded distinct-set shuffle). */
-  def approxDistinct(df: DataFrame, groupCol: String, targetCol: String,
-                     rsd: Double = 0.015): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(approx_count_distinct(col(targetCol), rsd).as("approx_users"))
-
   /** Per-language corpus stats (q47): docs, token volume, char stats. */
   def corpusStats(docs: DataFrame, langCol: String, textCol: String): DataFrame =
     docs.groupBy(col(langCol))

@@ -78,11 +78,6 @@ object TextFunctions {
   def chanTimestamp(c: Column): Column =
     try_to_timestamp(regexp_replace(c, "\\(\\w+\\)", " "), lit("MM/dd/yy HH:mm:ss"))
 
-  /** Null / empty guard (reference `isinstance(comment, str)` fallback,
-    * `Data Analysis/Reddit_4chan_Analysis.py:161-163`). */
-  def nullGuard(c: Column, fallback: String = "not a string"): Column =
-    when(c.isNull || length(c) === 0, lit(fallback)).otherwise(c)
-
   /** JSON field with default (reference `.get('score', 0)`,
     * `Data Collection/Reddit.py:115`). */
   def jsonGetLong(c: Column, field: String, default: Long): Column =

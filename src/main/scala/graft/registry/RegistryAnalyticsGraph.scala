@@ -9,8 +9,11 @@ import graft.stream.Streaming
 import graft.multimodal.Multimodal
 
 import SparkEntry._
+import graft.storage.Materialize
 
-/** Registry part: analytics, graph, BPE and eval keys (q173-q242).
+/** Registry part: analytics, graph, BPE and eval keys (q173-q242), with
+  * the density-scaled twins q442 (silhouette, next to q209) and q445/q446
+  * (name-group join and entity resolution, where q203 was).
   *
   * Split VERBATIM from SparkEntry's single queries/oracleSql map literals
   * (round-13 verdict item 8 - pure maintainability, zero semantic change);
@@ -18,6 +21,82 @@ import SparkEntry._
   * the merged key set and the 1:1 queries<->oracleSql correspondence.
   */
 private[graft] object RegistryAnalyticsGraph {
+
+  /** q445/q446's shared group frame: distinct customer names with their
+    * min-custkey group id and member count (dedup-BEFORE-block: the 100 TB
+    * fix for q127's growing blocks — identical names collapse to one node
+    * no matter how many members repeat them, so the fuzzy join runs on the
+    * distinct-name universe, which grows with the ENTITY population, not
+    * the row count). Fixture rows carried from q127. */
+  private def nameGroups(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    T(s, dir, "customer").select(col("c_custkey"), col("c_name"))
+      .unionByName(Seq(
+        (900000001L, "Customer#A00001111"),
+        (900000002L, "Customer#B00001111")).toDF("c_custkey", "c_name"))
+      .groupBy(col("c_name"))
+      .agg(min(col("c_custkey")).as("gid"), count(lit(1)).as("cnt"))
+  }
+
+  /** Deletion-1 neighborhood pairs over [[nameGroups]]: every group keyed
+    * by itself and each delete-one-char variant, equi-joined on the
+    * variant, then verified with exact Levenshtein <= 1. The deletion
+    * neighborhood is COMPLETE for edit distance 1 (a substitution at
+    * position p makes both names share the delete-p variant; an
+    * insertion/deletion pair shares the shorter name itself), unlike
+    * q127's two-pass prefix/suffix blocking — and each name contributes
+    * length+1 variant rows, so the join input is O(groups · len) with
+    * bucket occupancy bounded by the near-neighbor density, never by the
+    * corpus row count. Verify kills variant collisions at distance 2. */
+  private[graft] def nameGroupPairs(s: SparkSession, dir: String): DataFrame = {
+    // checkpoint both frames: g feeds the variant explode AND two gather
+    // joins; v feeds BOTH sides of the candidate self-join — without the
+    // barriers the groupBy and the length(c_name)-way substring explode
+    // each run twice (measured 4.3 s -> 2.6 s for q445 at sf0.1). Both
+    // frames are narrow and |distinct names|-sized.
+    val g = nameGroups(s, dir).localCheckpoint()
+    val v = g.select(col("gid"), col("c_name"),
+      explode(concat(
+        array(col("c_name")),
+        expr("transform(sequence(1, length(c_name)), i -> " +
+          "concat(substring(c_name, 1, i - 1), substring(c_name, i + 1, 1000000)))")))
+        .as("var"))
+      .select(col("gid"), col("var"))
+      .localCheckpoint()
+    val cand = v.select(col("var"), col("gid").as("gid_a"))
+      .join(v.select(col("var"), col("gid").as("gid_b")), Seq("var"))
+      .filter(col("gid_a") < col("gid_b"))
+      .select(col("gid_a"), col("gid_b")).distinct()
+    cand
+      .join(g.select(col("gid").as("gid_a"), col("c_name").as("__na"),
+        col("cnt").as("n_a")), "gid_a")
+      .join(g.select(col("gid").as("gid_b"), col("c_name").as("__nb"),
+        col("cnt").as("n_b")), "gid_b")
+      .withColumn("dist", levenshtein(col("__na"), col("__nb")).cast("long"))
+      .filter(col("dist") <= 1)
+      .select(col("gid_a"), col("gid_b"), col("dist"),
+        col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"))
+  }
+
+  /** The SHARED distinct-name fuzzy-pair table — [[nameGroupPairs]]
+    * materialized once per (input dir) per JVM and read back as parquet by
+    * its three registered consumers: q445 emits it, q446 closes components
+    * over it, and the q127/q203 twin aliases re-run those two. Before this
+    * index each consumer re-derived the full pipeline (distinct-name
+    * groupBy → deletion-variant explode → variant self-join → Levenshtein
+    * verify — the most expensive block in the registry's top-3 keys); now
+    * the derivation runs once per run, the copurchaseEdges/dedupIndex
+    * convention (r17 verdict item 7 — an in-run shared artifact, never a
+    * cross-run cache: the Materialize key folds in the customer table's
+    * content fingerprint and every new JVM recomputes). */
+  private def nameGroupPairsIndex(s: SparkSession, dir: String): DataFrame = {
+    val idxDir = Materialize.scratch("name_pairs/del1", dir)
+    Materialize.once(idxDir, T(s, dir, "customer")) {
+      nameGroupPairs(s, dir).write.parquet(idxDir)
+    }
+    s.read.parquet(idxDir)
+  }
+
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q173_rank_normalize" -> ((s, dir) => {
       // quantile (rank) normalization of the value column — EXACT global
@@ -295,7 +374,45 @@ private[graft] object RegistryAnalyticsGraph {
     // (round 17): the member-level closure builds its pair graph from
     // row-level fuzzy matches whose volume grows with the duplicate
     // population; the registered plan is q446's group-graph closure and the
-    // member-level shape lives on as a Round15Spec yardstick.
+    // member-level shape lives on as a DedupSpec yardstick.
+    "q445_name_group_join" -> ((s, dir) =>
+      // q127's fuzzy join re-registered dedup-before-block: pairs of
+      // DISTINCT-NAME GROUPS (min-custkey id + member count) within edit
+      // distance 1, candidates from the complete deletion-1 neighborhood
+      // join. Identical names — however many rows repeat them — are ONE
+      // node, so candidate volume is bounded by the distinct-name
+      // universe and near-neighbor density, never by row replication
+      // (q127's blocks grow ∝ n when names repeat: 22x at sf1). Full
+      // recall at dist <= 1, unlike q127's prefix/suffix passes (hole at
+      // positions 11-16 of an 18-char name).
+      nameGroupPairsIndex(s, dir).orderBy("gid_a", "gid_b")),
+    "q446_er_groups" -> ((s, dir) => {
+      // q203's MDM closure run on the GROUP graph: min-label connected
+      // components over q445's distinct-name pairs, every group stamped
+      // with its entity id, the entity's group count and total MEMBER
+      // count (multiplicities fold back as a sum, never as rows).
+      // Closure input is |distinct names| nodes — at sf1 that is 15k
+      // nodes instead of q203's 150k members and 675k duplicate-name
+      // member pairs (16x at sf1). Sequential fixture names chain into
+      // one giant entity — the known over-merge behavior of transitive
+      // ER — which makes the gate pin full min-label convergence across
+      // the component diameter.
+      val g = nameGroups(s, dir).localCheckpoint() // read by 2 branches
+      val pairs = nameGroupPairsIndex(s, dir)
+        .select(col("gid_a").as("id_a"), col("gid_b").as("id_b"))
+      val comp = Dedup.connectedComponents(pairs)
+      val m = g.join(comp, g("gid") === comp("node"), "left")
+        .select(col("gid"), col("cnt"),
+          coalesce(col("component"), col("gid")).as("entity_id"))
+      val sz = m.groupBy(col("entity_id"))
+        .agg(count(lit(1)).as("n_groups"), sum(col("cnt")).as("n_members"))
+      m.join(sz, Seq("entity_id"))
+        .select(col("gid"), col("entity_id"),
+          (col("gid") === col("entity_id")).as("is_canonical"),
+          col("n_groups").cast("long").as("n_groups"),
+          col("n_members").cast("long").as("n_members"))
+        .orderBy("gid")
+    }),
     "q204_bigram_lm" -> ((s, dir) =>
       // context-aware fluency score: Jelinek-Mercer interpolated bigram
       // NLL per document, unseen bigrams backed off to the unigram floor;
@@ -346,6 +463,19 @@ private[graft] object RegistryAnalyticsGraph {
       // yardstick itself stays benchable at sf1+.
       val emb = T(s, dir, "embeddings")
       val mod = math.max(4L, emb.count() / 500L)
+      Similarity.silhouetteSampled(emb, "vec_id", "embedding", "label",
+        sampleMod = mod.toInt)
+        .orderBy("vec_id")
+    }),
+    "q442_silhouette_scaled" -> ((s, dir) => {
+      // q209 with the sample pinned to a CONSTANT size instead of a
+      // constant fraction: sampleMod = max(1, n div 128) keeps |sample|
+      // ~128 at every scale, so the broadcast-nested-loop work is
+      // 128 · n — linear — where q209's id%4 sample made it n²/4
+      // (65x at sf1, SCALE.md round 14). Same tenth-of-bp integer
+      // distance grid, same output shape.
+      val emb = T(s, dir, "embeddings")
+      val mod = math.max(1L, emb.count() / 128L)
       Similarity.silhouetteSampled(emb, "vec_id", "embedding", "label",
         sampleMod = mod.toInt)
         .orderBy("vec_id")
@@ -1334,6 +1464,51 @@ private[graft] object RegistryAnalyticsGraph {
         |FROM r WHERE rank % 100 = 1 ORDER BY rank""".stripMargin,
     // q203_entity_resolution verifies against q446's oracle
     // (SparkEntry.retiredToTwins, round 17)
+    "q445_name_group_join" ->
+      // same group frame, same deletion-1 neighborhood, same verify
+      """WITH base AS (SELECT c_custkey, c_name FROM customer
+        |  UNION ALL SELECT * FROM (VALUES (900000001, 'Customer#A00001111'),
+        |    (900000002, 'Customer#B00001111')) t(c_custkey, c_name)),
+        |g AS (SELECT c_name, min(c_custkey) AS gid, count(*) AS cnt FROM base GROUP BY 1),
+        |v AS (SELECT gid, CASE WHEN t.i = 0 THEN c_name
+        |    ELSE substr(c_name, 1, CAST(t.i AS INT) - 1) || substr(c_name, CAST(t.i AS INT) + 1) END AS var
+        |  FROM g, LATERAL (SELECT unnest(range(0, length(c_name) + 1)) AS i) t),
+        |cand AS (SELECT DISTINCT a.gid AS gid_a, b.gid AS gid_b
+        |  FROM v a JOIN v b ON a.var = b.var AND a.gid < b.gid)
+        |SELECT gid_a, gid_b, CAST(levenshtein(ga.c_name, gb.c_name) AS BIGINT) AS dist,
+        |  CAST(ga.cnt AS BIGINT) AS n_a, CAST(gb.cnt AS BIGINT) AS n_b
+        |FROM cand JOIN g ga ON ga.gid = cand.gid_a JOIN g gb ON gb.gid = cand.gid_b
+        |WHERE levenshtein(ga.c_name, gb.c_name) <= 1
+        |ORDER BY gid_a, gid_b""".stripMargin,
+    "q446_er_groups" ->
+      // q445's pairs + the shared pointer-jumping min-label closure
+      // (minLabelCc — q203's oracle convention, O(log diameter) rounds);
+      // singletons self-canonical via the left-join coalesce, entity
+      // sizes fold member counts back in
+      s"""WITH base AS (SELECT c_custkey, c_name FROM customer
+        |  UNION ALL SELECT * FROM (VALUES (900000001, 'Customer#A00001111'),
+        |    (900000002, 'Customer#B00001111')) t(c_custkey, c_name)),
+        |g AS MATERIALIZED (SELECT c_name, min(c_custkey) AS gid, count(*) AS cnt
+        |  FROM base GROUP BY 1),
+        |v AS (SELECT gid, CASE WHEN t.i = 0 THEN c_name
+        |    ELSE substr(c_name, 1, CAST(t.i AS INT) - 1) || substr(c_name, CAST(t.i AS INT) + 1) END AS var
+        |  FROM g, LATERAL (SELECT unnest(range(0, length(c_name) + 1)) AS i) t),
+        |cand AS (SELECT DISTINCT a.gid AS gid_a, b.gid AS gid_b
+        |  FROM v a JOIN v b ON a.var = b.var AND a.gid < b.gid),
+        |pr AS (SELECT gid_a, gid_b FROM cand
+        |  JOIN g ga ON ga.gid = cand.gid_a JOIN g gb ON gb.gid = cand.gid_b
+        |  WHERE levenshtein(ga.c_name, gb.c_name) <= 1),
+        |e AS MATERIALIZED (SELECT gid_a AS src, gid_b AS dst FROM pr
+        |  UNION SELECT gid_b, gid_a FROM pr),
+        |${minLabelCc()},
+        |m AS (SELECT g.gid, g.cnt, coalesce(l$ccRounds.lab, g.gid) AS entity_id
+        |  FROM g LEFT JOIN l$ccRounds ON l$ccRounds.node = g.gid),
+        |sz AS (SELECT entity_id, count(*) AS n_groups, sum(cnt) AS n_members
+        |  FROM m GROUP BY 1)
+        |SELECT m.gid, m.entity_id, m.gid = m.entity_id AS is_canonical,
+        |  CAST(sz.n_groups AS BIGINT) AS n_groups,
+        |  CAST(sz.n_members AS BIGINT) AS n_members
+        |FROM m JOIN sz USING (entity_id) ORDER BY m.gid""".stripMargin,
     "q204_bigram_lm" -> q204Sql,
     "q205_srm" ->
       // two-cell chi-square: flag (n_a - n_b)^2 * 100 > 384 * n on exact ints
@@ -1418,6 +1593,29 @@ private[graft] object RegistryAnalyticsGraph {
       """WITH s AS (SELECT vec_id AS sid, label AS sl,
         |    CAST(embedding AS DOUBLE[]) AS sv FROM embeddings
         |    WHERE vec_id % greatest(4, (SELECT count(*) // 500 FROM embeddings)) = 0),
+        |p AS (SELECT vec_id AS pid, label AS pl,
+        |    CAST(embedding AS DOUBLE[]) AS pv FROM embeddings),
+        |sn AS (SELECT sid, sl, sv, list_dot_product(sv, sv) AS snorm FROM s),
+        |pn AS (SELECT pid, pl, pv, list_dot_product(pv, pv) AS pnorm FROM p),
+        |pr AS (SELECT sid, sl, pl,
+        |    CAST(round(sqrt(greatest(snorm + pnorm - 2 * list_dot_product(sv, pv), 0))
+        |      * 100000, 0) AS BIGINT) AS d
+        |  FROM pn CROSS JOIN sn WHERE pid <> sid),
+        |pc AS (SELECT sid, sl, pl, sum(d) AS sm, count(*) AS n FROM pr GROUP BY 1, 2, 3),
+        |ab AS (SELECT sid, sl,
+        |    max(CASE WHEN pl = sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS a,
+        |    min(CASE WHEN pl <> sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS b
+        |  FROM pc GROUP BY 1, 2)
+        |SELECT sid AS vec_id, sl AS label,
+        |  (round(a / 100000, 4) + 0.0) AS a_dist, (round(b / 100000, 4) + 0.0) AS b_dist,
+        |  (round((b - a) / greatest(a, b), 4) + 0.0) AS silhouette
+        |FROM ab WHERE a IS NOT NULL AND b IS NOT NULL ORDER BY vec_id""".stripMargin,
+    "q442_silhouette_scaled" ->
+      // q209's pairwise-Euclidean-on-the-integer-grid oracle with the
+      // sample mod derived from the same count the engine uses
+      """WITH s AS (SELECT vec_id AS sid, label AS sl,
+        |    CAST(embedding AS DOUBLE[]) AS sv FROM embeddings
+        |    WHERE vec_id % greatest(1, (SELECT count(*) // 128 FROM embeddings)) = 0),
         |p AS (SELECT vec_id AS pid, label AS pl,
         |    CAST(embedding AS DOUBLE[]) AS pv FROM embeddings),
         |sn AS (SELECT sid, sl, sv, list_dot_product(sv, sv) AS snorm FROM s),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -11,7 +12,10 @@ import graft.multimodal.Multimodal
 import SparkEntry._
 import graft.storage.Materialize.scratch
 
-/** Registry part: ANN/IVF/PQ, dedup-component and eval-curve keys (q243-q313).
+/** Registry part: ANN/IVF/PQ, dedup-component and eval-curve keys (q243-q313),
+  * with the density-scaled twins q443/q447 (where q273/q276 were) and the
+  * ANN serving keys q449-q451/q453 (next to q257) and q458-q460 (next to
+  * q307).
   *
   * Split VERBATIM from SparkEntry's single queries/oracleSql map literals
   * (round-13 verdict item 8 - pure maintainability, zero semantic change);
@@ -19,6 +23,118 @@ import graft.storage.Materialize.scratch
   * the merged key set and the 1:1 queries<->oracleSql correspondence.
   */
 private[graft] object RegistryAnnDedup {
+
+  /** Smallest power of two STRICTLY greater than q (q >= 0) — the cell
+    * count ladder shared bit-for-bit with [[cellLadderSql]]. */
+  private[graft] def pow2Above(q: Long): Long = {
+    var c = 1L
+    while (c <= q) c *= 2
+    c
+  }
+
+  /** The LSH signature width q443 masks its cells from: the cell count is
+    * capped at 2^signaturePlanes on BOTH sides, because `pmod(bucket,
+    * cells)` over a `signaturePlanes`-bit bucket is the identity for any
+    * larger modulus — the cap makes engine and oracle agree by
+    * construction instead of by the fixture's n/32 staying small. */
+  private[graft] val signaturePlanes = 16
+
+  /** DuckDB CASE ladder computing min([[pow2Above]], 2^[[signaturePlanes]])
+    * of a column named `q` — integer comparisons only, so both engines land
+    * on the same power of two for the same count. The ladder depth is
+    * derived from [[signaturePlanes]]; raising the plane count widens both
+    * the ladder and the engine-side cap together. */
+  private[graft] def cellLadderSql: String =
+    "CASE " + ((signaturePlanes - 1) to 0 by -1)
+      .map(b => s"WHEN q >= ${1L << b} THEN ${1L << (b + 1)}")
+      .mkString(" ") + " ELSE 1 END"
+
+  /** q447's pre-barrier pipeline (exposed for PlanSpec: the registered key
+    * truncates to a checkpoint scan, so the pushdown/broadcast claims are
+    * asserted on THIS frame): gate the stored pair index on the MinHash
+    * estimate, broadcast the gated pairs against streamed texts, length
+    * prefilter, DP once into a narrow row. */
+  private[graft] def confirmPrunedInner(s: SparkSession, dir: String): DataFrame = {
+    val docs = T(s, dir, "documents")
+    val (pairs, _) = dedupIndex(s, dir)
+    val t = docs.select(col("doc_id"), col("text"), length(col("text")).as("__len"))
+    // the gated pair list is the SMALL side at every scale (the docs
+    // side grows with the corpus) — broadcast it and stream the texts
+    broadcast(pairs.filter(col("est_jaccard") >= 0.5))
+      .join(t.select(col("doc_id").as("id_a"), col("text").as("__ta"),
+        col("__len").as("__la")), "id_a")
+      .join(t.select(col("doc_id").as("id_b"), col("text").as("__tb"),
+        col("__len").as("__lb")), "id_b")
+      .withColumn("__ml", greatest(col("__la"), col("__lb"), lit(1)))
+      // the prefilter, EXACT at any text length: lev >= |la − lb|, so
+      // (10000·lendiff) div ml >= 1001 forces (10000·lev) div ml > 1000,
+      // i.e. sim_bp < 9000 — the DP is skipped only for pairs the final
+      // threshold would drop anyway (a plain 10·lendiff > ml test is NOT
+      // tight at the boundary once texts pass ~10k chars)
+      .filter(expr("(10000 * abs(__la - __lb)) div __ml <= 1000"))
+      .repartition(64, col("id_a")) // q276's DP-spread convention
+      .select(col("id_a"), col("id_b"), col("est_jaccard"),
+        levenshtein(col("__ta"), col("__tb")).cast("long").as("lev"),
+        col("__ml"))
+  }
+
+  /** q449's two sides (exposed for PlanSpec): the SERVING index — cell
+    * assignment + embedding + PQ codes written as ONE bucketed-on-cell
+    * catalog table (Storage.writeBucketed, the q88 layout discipline
+    * applied to the ANN store) — and the probed query batch. The read path
+    * joins them on cell: the stored side feeds the join STRAIGHT FROM ITS
+    * BUCKETS (no Exchange between the scan and the join — the property a
+    * 100 TB serving tier lives on: query traffic never reshuffles the
+    * corpus). */
+  private[graft] def annServingParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val emb = T(s, dir, "embeddings")
+    val cents = emb.filter(col("vec_id") < 16)
+    val assigned = Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
+    val codes = Similarity.pqEncode(emb, emb.filter(col("vec_id") < 8),
+      "vec_id", "embedding", m = 4, subDim = 16)
+    // table keyed by the sanitized dir (the dedupIndex/q122 convention):
+    // the returned frame reads the catalog table LAZILY, so a fixed name
+    // re-executed after a later build for a different dir would silently
+    // serve the wrong corpus
+    // keep ONLY [A-Za-z0-9_]: a '-' or '.' surviving into the unquoted
+    // identifier is rejected by the catalog parser at s.table time (r16 advice)
+    val table = s"g449_ivf_serving_${dir.replaceAll("[^A-Za-z0-9_]", "_")}"
+      .toLowerCase
+    graft.storage.Storage.writeBucketed(
+      assigned.join(codes, "vec_id"), table, "cell", 8)
+    // codes ride along for the ADC consumer (q451); q449's exact-float
+    // search ignores them (ivfTopKPrepared projects them away post-join)
+    val idxCells = s.table(table)
+      .select(col("cell"), col("vec_id").as("neighbor_id"),
+        col("embedding").as("cv"),
+        col("c0"), col("c1"), col("c2"), col("c3"))
+    val queryCells = Similarity.ivfProbe(emb.filter(col("vec_id") < 8),
+        cents, "vec_id", "embedding", nprobe = 1)
+      .select(col("cell"), col("vec_id").as("query_id"),
+        col("embedding").as("qv"))
+    (idxCells, queryCells)
+  }
+
+  /** The filter-aware probe rule shared by the engine and (formula-for-
+    * formula) the oracle: nprobe = min(|cells|, ceil(2 / sel²)) with
+    * sel = kept/total. Inverse-SQUARE, not inverse-linear: the qualifying
+    * density inside each probed cell falls ∝ sel AND the per-cell
+    * qualifying counts get noisier as cells thin out, so an inverse-linear
+    * rule (probe 2/sel cells) measured 0.650–0.825 recall at the
+    * half/quarter legs (sf0.01) while the squared rule clears 0.95 on
+    * every leg at every fixture SF. At quarter selectivity the rule
+    * saturates to nprobe = |cells| — the EXACT pre-filtered scan — which
+    * costs sel · n ≈ a quarter of one unfiltered corpus pass: falling back
+    * to brute force over a selective filter's survivors is cheaper than
+    * any probed search that still misses (the FAISS/Milvus filtered-search
+    * playbook). Scanned volume per leg ≈ min(sel, 2/|cells| · 1/sel) of
+    * the corpus, so adaptive filtered traffic is never more than ~2× an
+    * unfiltered search. */
+  private[graft] def adaptiveNprobe(total: Long, kept: Long, cells: Long): Int = {
+    val k = math.max(kept, 1L)
+    math.min(cells, (2L * total * total + k * k - 1L) / (k * k)).toInt
+  }
+
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q243_stream_quota" -> ((s, dir) =>
       // per-(user, hour) ingestion quota as a custom-state stream: ledgers
@@ -276,6 +392,195 @@ private[graft] object RegistryAnnDedup {
           coalesce(col("arrivals"), lit(0L)).cast("long").as("arrivals"))
         .orderBy("cell")
     }),
+    "q449_ann_serving" -> ((s, dir) => {
+      // the MATERIALIZED ANN serving layout (round-14 verdict item 5):
+      // IVF assignment + PQ codes written via Storage.writeBucketed on
+      // the cell key, then the q58-shape search served FROM THE CATALOG
+      // TABLE — identical results to q58 (same oracle), but the corpus
+      // side of the probe join reads its buckets with NO Exchange
+      // (PlanSpec asserts it). This is the q88 bucketed-join discipline
+      // applied to the vector store: at 100 TB the index is written once
+      // per build cadence and every query batch streams against it.
+      val (idxCells, queryCells) = annServingParts(s, dir)
+      Similarity.ivfTopKPrepared(idxCells, queryCells, k = 5)
+        .orderBy("query_id", "rn")
+    }),
+    "q450_ivf_train_readout" -> ((s, dir) => {
+      // IVF training EFFECTIVENESS readout (round-14 verdict item 4):
+      // micro-Lloyd (k = 16, 2 exact-integer iterations, first-16 seeds)
+      // vs the untrained seeds, each variant scored on (a) total EXACT
+      // within-cell squared distortion — the number Lloyd provably
+      // decreases — and (b) recall@5 of the q58-shape nprobe=1 search
+      // against the exact top-5 truth for the 8-query probe set. On this
+      // deliberately isotropic fixture (gen_scale: "no cluster
+      // structure") recall is flat by construction — distortion is the
+      // training signal (measured −40%); on a clustered corpus the same
+      // readout shows both move together. All-integer output: sums and
+      // hit counts, no rounded ratios to disagree on.
+      val emb = T(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") < 8)
+      val seeds = Similarity.microSeedCentroids(emb, "vec_id", "embedding", 16)
+      val trained = Similarity.ivfTrainMicro(emb, "vec_id", "embedding",
+        k = 16, iterations = 2)
+      val exact = Similarity.cosineTopK(emb, queries, "vec_id", "embedding", 5)
+        .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      def readout(variant: String, cent: DataFrame,
+                  searchCents: DataFrame): DataFrame = {
+        val dist = Similarity.microAssignDist(emb, "vec_id", "embedding", cent)
+          .agg(sum(col("d2")).as("sum_d2"), count(lit(1)).as("n_vecs"))
+        val approx = Similarity.ivfTopK(emb, queries, searchCents,
+          "vec_id", "embedding", k = 5, nprobe = 1)
+        val hits = approx.join(exact, Seq("query_id", "neighbor_id"), "leftsemi")
+          .agg(count(lit(1)).as("hits_at_5"))
+        dist.crossJoin(hits)
+          .select(lit(variant).as("variant"),
+            col("sum_d2").cast("long").as("sum_d2"),
+            col("n_vecs").cast("long").as("n_vecs"),
+            col("hits_at_5").cast("long").as("hits_at_5"))
+      }
+      val untrainedSearch = emb.filter(col("vec_id") < 16)
+      val trainedSearch = Similarity.microCentroidVectors(trained,
+        "vec_id", "embedding")
+      readout("seed", seeds, untrainedSearch)
+        .unionByName(readout("trained", trained, trainedSearch))
+        .orderBy("variant")
+    }),
+    "q451_adc_search" -> ((s, dir) => {
+      // ADC search over q449's serving layout: per-query LUT of squared-L2
+      // distances to every (subspace, codeword) — |queries|·m·K rows of
+      // driver-broadcastable metadata — then each candidate in the probed
+      // cell scores as the SUM OF 4 TABLE LOOKUPS on its stored codes; the
+      // candidate's embedding column is never touched. LUT entries land on
+      // the 1e-6 integer grid before the sum, so the additive score is an
+      // exact integer (order-free, engine-agnostic). Ranking: ADC distance
+      // asc, neighbor id tie-break; recall@5 of the code-scored ranking vs
+      // the exact float truth rides along per row (the q450 readout
+      // discipline: the number that justifies shipping 8-bit codes).
+      val emb = T(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") < 8)
+      val (idxCells, queryCells) = annServingParts(s, dir)
+      def sliced(df: DataFrame, idAs: String, vecAs: String) = df.select(
+        col("vec_id").as(idAs),
+        posexplode(expr(
+          "transform(sequence(0, 3), i -> slice(embedding, i * 16 + 1, 16))"))
+          .as(Seq("sub", vecAs)))
+      val qs = sliced(queries, "query_id", "qs")
+      val cb = sliced(emb.filter(col("vec_id") < 8), "code", "cs")
+      val lut = qs.join(cb, "sub")
+        .select(col("query_id"), col("sub"), col("code"),
+          Num.roundz((Similarity.dot("qs", "qs")
+            - lit(2.0) * Similarity.dot("qs", "cs")
+            + Similarity.dot("cs", "cs")) * lit(1000000d))
+            .cast("long").as("lq"))
+      val cand = idxCells.join(queryCells, "cell")
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          posexplode(array(col("c0"), col("c1"), col("c2"), col("c3")))
+            .as(Seq("sub", "code")))
+      val adc = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
+        .groupBy(col("query_id"), col("neighbor_id"))
+        .agg(sum(col("lq")).as("adc_d2q"))
+      val ranked = adc.withColumn("rn", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("adc_d2q"), col("neighbor_id"))).cast("long"))
+        .filter(col("rn") <= 5)
+      val truth = Similarity.cosineTopK(emb, queries, "vec_id", "embedding", 5)
+        .select(col("query_id").as("__tq"), col("neighbor_id").as("__tn"))
+      ranked.join(truth,
+          col("query_id") === col("__tq") && col("neighbor_id") === col("__tn"),
+          "left")
+        .withColumn("hit", when(col("__tn").isNotNull, 1L).otherwise(0L))
+        .withColumn("hits_at_5",
+          sum(col("hit")).over(Window.partitionBy(col("query_id"))).cast("long"))
+        .select(col("query_id"), col("rn"), col("neighbor_id"),
+          col("adc_d2q"), col("hit"), col("hits_at_5"))
+        .orderBy("query_id", "rn")
+    }),
+    "q453_graph_ann" -> ((s, dir) => {
+      // GRAPH-based ANN — the third serving family next to IVF (q58/q449)
+      // and LSH (q55): a bounded-degree proximity graph built once (each
+      // node's top-4 cosine neighbors WITHIN its LSH cell, symmetrized —
+      // build cost n·occupancy, occupancy ~32-64 by the q443 knob), then
+      // batched greedy BEAM SEARCH from a fixed entry node: 4 hops, beam 8,
+      // candidates re-ranked on the 1e-6 cosine grid with id tie-breaks
+      // (public knowledge: NSW/Vamana-style best-first over a neighbor
+      // graph, batched per hop for the dataflow engine). The scale
+      // property: each hop touches only |beam|·degree candidate ids per
+      // query — the corpus is read by ID-KEYED point lookups, never
+      // scanned; recall@5 vs the exact truth rides along (the q451
+      // readout discipline).
+      val emb = T(s, dir, "embeddings")
+      val n = emb.count()
+      val cells = math.min(pow2Above(n / 32L),
+        1L << signaturePlanes)
+      val coded = Similarity.lshBands(emb, "vec_id", "embedding",
+        numPlanes = signaturePlanes, bands = 1, dim = 64)
+        .select(col("vec_id"), col("embedding"),
+          pmod(col("bucket"), lit(cells)).as("cell"))
+        .localCheckpoint() // self-join: signature computed once
+      val la = coded.select(col("cell"), col("vec_id").as("src"),
+        col("embedding").as("sv"))
+      val lb = coded.select(col("cell"), col("vec_id").as("dst"),
+        col("embedding").as("dv"))
+      val out4 = la.join(lb, Seq("cell"))
+        .filter(col("src") =!= col("dst"))
+        .withColumn("cq", Num.roundz((Similarity.dot("sv", "dv") /
+          (Similarity.norm("sv") * Similarity.norm("dv"))) * lit(1000000d))
+          .cast("long"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("src")).orderBy(col("cq").desc, col("dst"))))
+        .filter(col("rn") <= 4)
+        .select(col("src"), col("dst"))
+      val edges = out4
+        .unionByName(out4.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct().localCheckpoint()
+      val queries = emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val corpus = emb.select(col("vec_id").as("node"), col("embedding").as("nv"))
+      def withDist(cand: DataFrame): DataFrame =
+        cand.join(corpus, "node")
+          .join(broadcast(queries), "query_id")
+          .select(col("query_id"), col("node"),
+            Num.roundz((Similarity.dot("qv", "nv") /
+              (Similarity.norm("qv") * Similarity.norm("nv"))) * lit(1000000d))
+              .cast("long").as("cq"))
+      // entry: the smallest corpus id that isn't the query itself
+      val lowIds = emb.select(col("vec_id")).orderBy("vec_id").limit(2)
+        .collect().map(_.getLong(0))
+      var v = withDist(queries.select(col("query_id"),
+        when(col("query_id") === lowIds(0), lit(lowIds(1)))
+          .otherwise(lit(lowIds(0))).as("node"))).localCheckpoint()
+      for (_ <- 1 to 4) {
+        val nbrs = v.select(col("query_id"), col("node"))
+          .join(edges, col("node") === col("src"))
+          .select(col("query_id"), col("dst").as("node"))
+          .filter(col("node") =!= col("query_id"))
+        val cand = v.select(col("query_id"), col("node"))
+          .unionByName(nbrs).distinct()
+        v = withDist(cand)
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(col("query_id"))
+              .orderBy(col("cq").desc, col("node"))))
+          .filter(col("rn") <= 8).drop("rn")
+          .localCheckpoint() // flat lineage per hop
+      }
+      val ranked = v.withColumn("rn", row_number().over(
+          Window.partitionBy(col("query_id"))
+            .orderBy(col("cq").desc, col("node"))).cast("long"))
+        .filter(col("rn") <= 5)
+      val truth = Similarity.cosineTopK(emb,
+          emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5)
+        .select(col("query_id").as("__tq"), col("neighbor_id").as("__tn"))
+      ranked.join(truth,
+          col("query_id") === col("__tq") && col("node") === col("__tn"),
+          "left")
+        .withColumn("hit", when(col("__tn").isNotNull, 1L).otherwise(0L))
+        .withColumn("hits_at_5",
+          sum(col("hit")).over(Window.partitionBy(col("query_id"))).cast("long"))
+        .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
+          col("cq").as("cos_q"), col("hit"), col("hits_at_5"))
+        .orderBy("query_id", "rn")
+    }),
     "q258_ivf_train_recall" -> ((s, dir) => {
       // does training the quantizer buy recall? recall@5 of the IVF search
       // path under the TRAINED centroids vs under the seed (first-K)
@@ -528,7 +833,44 @@ private[graft] object RegistryAnnDedup {
     // SemDeDup with FIXED k=4 Lloyd cells makes cell occupancy — and with
     // it the within-cell pair volume — grow ∝ n (39× at sf1); the
     // registered plan is q443's density-derived LSH-cell variant and the
-    // fixed-k shape lives on as a Round15Spec yardstick.
+    // fixed-k shape lives on as a DedupSpec yardstick.
+    "q443_semdedup_lsh" -> ((s, dir) => {
+      // SemDeDup with LSH cells instead of q273's fixed-k Lloyd cells:
+      // the cell count is a power of two derived from the corpus count
+      // (cells = pow2Above(n div 32)), so expected occupancy stays ~32-64
+      // as data grows and the within-cell lower-id cosine prune is
+      // n · occupancy — linear — where q273's fixed k=4 made cluster
+      // sizes grow with n (39x at sf1). Cells come from the 16-plane
+      // hyperplane signature (the q55 machinery, bands=1 so the bucket
+      // IS the packed code) masked to the derived cell count; k-means
+      // cells optimize the partition, LSH cells buy the same bound
+      // without the n·k assignment pass a k ∝ n Lloyd would need (which
+      // is itself quadratic — the reason k ∝ n alone is NOT the fix).
+      // Cells cap at 2^signaturePlanes to mirror cellLadderSql's ladder
+      // depth exactly (beyond the signature width, pmod is the identity
+      // on both sides anyway).
+      val emb = T(s, dir, "embeddings")
+      val cells = math.min(pow2Above(emb.count() / 32L), 1L << signaturePlanes)
+      val coded = Similarity.lshBands(emb, "vec_id", "embedding",
+        numPlanes = signaturePlanes, bands = 1, dim = 64)
+        .select(col("vec_id"), col("embedding"),
+          pmod(col("bucket"), lit(cells)).as("cell"))
+        .localCheckpoint() // two self-join branches: signature runs once
+      val hi = coded.select(col("cell"), col("vec_id").as("__ih"),
+        col("embedding").as("vh"))
+      val lo = coded.select(col("cell"), col("vec_id").as("__il"),
+        col("embedding").as("vl"))
+      val dropped = hi.join(lo, Seq("cell"))
+        .filter(col("__il") < col("__ih"))
+        .filter((Similarity.dot("vh", "vl") /
+          (Similarity.norm("vh") * Similarity.norm("vl"))) > 0.4)
+        .select(col("__ih").as("vec_id")).distinct()
+        .withColumn("__d", lit(1))
+      coded.join(dropped, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cell"),
+          when(col("__d").isNull, 1L).otherwise(0L).as("kept"))
+        .orderBy("vec_id")
+    }),
     "q274_knn_label" -> ((s, dir) => {
       // kNN majority-vote label propagation (the weak-labeling /
       // auto-labeling primitive): each query's label predicted from its 5
@@ -596,7 +938,37 @@ private[graft] object RegistryAnnDedup {
     // (round 17): the full >= 0.25-candidate confirm listing grows with
     // band-collision density (14× at sf1); the registered plan is q447's
     // estimate-gated production confirm (est >= 0.5, sim_bp >= 9000) and
-    // the full-listing shape lives on as a Round15Spec yardstick.
+    // the full-listing shape lives on as a DedupSpec yardstick.
+    "q447_confirm_pruned" -> ((s, dir) => {
+      // q276's confirm stage at the PRODUCTION threshold (near-dup proper,
+      // sim_bp >= 9000) behind a DUAL prune: (1) the MinHash estimate
+      // itself gates which candidates graduate to the DP (est_jaccard >=
+      // 0.5 — a pure column predicate PUSHED INTO the stored pair index's
+      // parquet scan, so sub-threshold candidates never leave the file),
+      // and (2) the length bound lev >= |len_a − len_b|, so a pair with
+      // (10000·lendiff) div maxlen >= 1001 can never reach 9000 bp and
+      // its len² DP is skipped. The estimate gate is what makes the key
+      // scale-stable:
+      // the >= 0.25 candidate population grows with band-collision
+      // density (161k at sf1 vs 11k at sf0.1, 14.5x), while the >= 0.5
+      // stratum is the planted near-dup population itself (258 -> 2.6k,
+      // linear — measured round 15). Output: confirmed pairs only (the
+      // verdict a dedup pipeline acts on), q276 kept as the full-listing
+      // yardstick.
+      confirmPrunedInner(s, dir)
+        // barrier BETWEEN the DP and its consumers: without it, project
+        // collapse inlines levenshtein into the sim_bp filter, the output
+        // lev and the output sim_bp — the DP ran 4x per row (measured
+        // 4.4 s vs 1.5 s at sf1). The checkpointed frame is narrow
+        // (5 numeric cols, |gated pairs| rows), so the barrier is cheap
+        .localCheckpoint()
+        .withColumn("sim_bp",
+          (lit(10000L) - expr("(10000 * lev) div __ml")).cast("long"))
+        .filter(col("sim_bp") >= 9000L)
+        .select(col("id_a"), col("id_b"), col("est_jaccard"), col("lev"),
+          col("sim_bp"))
+        .orderBy("id_a", "id_b")
+    }),
     "q277_ndcg" -> ((s, dir) => {
       // nDCG@5 of the exact retrieval path with label-match relevance —
       // the graded eval metric next to q212's recall@k: DCG discounts in
@@ -1454,6 +1826,149 @@ private[graft] object RegistryAnnDedup {
             (col("n_queries").cast("double") * 5d), 4).as("recall"))
         .orderBy("leg")
     }),
+    "q458_adaptive_nprobe" -> ((s, dir) => {
+      // filter-aware nprobe (r16 verdict item 7): per selectivity leg the
+      // probe width comes from adaptiveNprobe over a ONE-PASS label
+      // histogram (the q166/q326 stats estimate — driver metadata, never a
+      // second corpus scan), then the q302 pre-filtered IVF search runs at
+      // that width with exact-truth recall riding along per leg (the q450
+      // readout discipline: the number that justifies the rule).
+      val emb = T(s, dir, "embeddings")
+      val queries = emb.filter(col("vec_id") < 8)
+      val cents = emb.filter(col("vec_id") < 16)
+      val hist = emb.groupBy(col("label").cast("long").as("l"))
+        .agg(count(lit(1)).as("c"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val total = hist.values.sum
+      // labels are ~uniform over 0..9, so the four legs sweep the rule's
+      // whole range: sel ~1.0 -> np 2, ~0.7 -> np 5, ~0.5 -> np 8,
+      // ~0.1 -> np 16 (the exact pre-filtered fallback)
+      val legs = Seq(
+        ("l1_all", lit(true), total),
+        ("l2_mild", col("label") <= 6, hist.filter(_._1 <= 6L).values.sum),
+        ("l3_half", col("label") <= 4, hist.filter(_._1 <= 4L).values.sum),
+        ("l4_narrow", col("label") === 2, hist.getOrElse(2L, 0L)))
+      legs.map { case (name, pred, kept) =>
+        val np = adaptiveNprobe(total, kept, cells = 16L)
+        val corpus = emb.filter(pred)
+        val approx = Similarity.ivfTopK(corpus, queries, cents,
+          "vec_id", "embedding", 5, nprobe = np)
+          .select(col("query_id"), col("neighbor_id"))
+        val truth = Similarity.cosineTopK(corpus, queries,
+          "vec_id", "embedding", 5)
+          .select(col("query_id"), col("neighbor_id"))
+        approx.join(broadcast(truth), Seq("query_id", "neighbor_id"))
+          .agg(count(lit(1)).as("hits"))
+          .select(lit(name).as("leg"),
+            lit(10000L * kept / total).as("sel_bp"),
+            lit(np.toLong).as("nprobe"), col("hits"))
+      }.reduce(_ unionByName _)
+        .crossJoin(broadcast(queries.agg(count(lit(1)).as("n_queries"))))
+        .select(col("leg"), col("sel_bp"), col("nprobe"),
+          col("n_queries").cast("long").as("n_queries"),
+          col("hits").cast("long").as("hits"),
+          ops.Num.roundz(col("hits").cast("double") /
+            (col("n_queries").cast("double") * 5d), 4).as("recall"))
+        .orderBy("leg")
+    }),
+    "q459_histogram_selectivity" -> ((s, dir) => {
+      // the optimizer-statistics loop CLOSED: q326's ANALYZE-style
+      // equi-depth histogram (32 buckets over order cents, exact two-phase
+      // ranks) ESTIMATES range-predicate selectivities — full mass from
+      // buckets above the threshold, uniform interpolation inside the
+      // boundary bucket, all integer arithmetic — and each estimate is
+      // priced against the exact count. This is the readout that decides
+      // whether stored stats are fresh enough to drive runtime rules (the
+      // q458 adaptive-nprobe selectivity input names exactly this family).
+      // Scale shape: the histogram is 32 rows of metadata derived by the
+      // TwoPhase rank (never a single-partition window); estimation is a
+      // 32x|thresholds| broadcast fold; the exact side is ONE conditional
+      // pass with map-side combine.
+      import s.implicits._
+      val o = T(s, dir, "orders").select(col("o_orderkey"),
+        ops.Num.roundz(col("o_totalprice") * 100, 0).cast("long").as("cents"))
+      val (ranked, nTot) = TwoPhase.globalRank(o, col("cents"),
+        Seq(col("cents"), col("o_orderkey")), "rank")
+      val hist = ranked
+        .withColumn("bucket", TwoPhase.ntileFromRank("rank", nTot, 32).cast("long"))
+        .groupBy(col("bucket"))
+        .agg(count(lit(1)).as("cnt"), min(col("cents")).as("lo"),
+          max(col("cents")).as("hi"))
+        .localCheckpoint() // 32 rows, probed by every threshold leg
+      // thresholds sweep the mass: tail / body / median / head / extreme
+      val ts = Seq(5000000L, 15000000L, 25000000L, 40000000L, 48000000L)
+        .toDF("t_cents")
+      val est = hist.crossJoin(broadcast(ts))
+        .select(col("t_cents"),
+          when(col("t_cents") <= col("lo"), col("cnt"))
+            .when(col("t_cents") > col("hi"), lit(0L))
+            // inclusive integer widths: the boundary bucket contributes
+            // cnt * (hi - t + 1) div (hi - lo + 1) — floor on both engines
+            .otherwise(expr("cnt * (hi - t_cents + 1) div (hi - lo + 1)"))
+            .as("part"))
+        .groupBy(col("t_cents")).agg(sum(col("part")).as("est_rows"))
+      val actual = o.crossJoin(broadcast(ts))
+        .filter(col("cents") >= col("t_cents"))
+        .groupBy(col("t_cents")).agg(count(lit(1)).as("actual_rows"))
+      est.join(actual, Seq("t_cents"), "left")
+        .select(col("t_cents"), lit(nTot).as("n_total"),
+          col("est_rows").cast("long").as("est_rows"),
+          coalesce(col("actual_rows"), lit(0L)).cast("long").as("actual_rows"),
+          expr(s"est_rows * 10000 div $nTot").cast("long").as("est_bp"),
+          expr(s"coalesce(actual_rows, 0) * 10000 div $nTot").cast("long").as("actual_bp"),
+          expr(s"abs(est_rows - coalesce(actual_rows, 0)) * 10000 div $nTot")
+            .cast("long").as("err_bp"))
+        .orderBy("t_cents")
+    }),
+    "q460_ivf_cell_split" -> ((s, dir) => {
+      // IVF index MAINTENANCE: the hottest cell splits in place — the
+      // rebalancing act a serving index performs when ingest (q292) skews
+      // occupancy (q283 measures the imbalance; this key FIXES it). The
+      // split is the KD rule, fully deterministic and oracle-replicable:
+      // inside the argmax-count cell (min cell id on ties), pick the
+      // dimension with the widest within-cell range (min dim id on ties),
+      // rank members on (value-at-dim, vec_id), and send rank <= ceil(n/2)
+      // to sub-cell A = cell, the rest to B = 16 + cell (fresh id space).
+      // Scale shape: ONE corpus pass assigns cells (the stored index in
+      // production); the split itself touches only the hot cell's members
+      // — maintenance cost follows the CELL, not the corpus — and the
+      // readout (count per resulting cell + before/after max occupancy)
+      // is |cells|+1 rows of metadata.
+      val emb = T(s, dir, "embeddings")
+      val cents = emb.filter(col("vec_id") < 16)
+      val assigned = Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
+        .select(col("vec_id"), col("embedding"), col("cell"))
+        .localCheckpoint() // counted, argmax'd, then split — one pass
+      val hot = assigned.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("cell")).limit(1).head
+      val (hotCell, hotCnt) = (hot.getLong(0), hot.getLong(1))
+      val members = assigned.filter(col("cell") === hotCell)
+      val dims = members
+        .select(posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+          .as(Seq("dim", "v")))
+        .groupBy(col("dim")).agg((max(col("v")) - min(col("v"))).as("range"))
+        .orderBy(col("range").desc, col("dim")).limit(1).head
+      val splitDim = dims.getInt(0)
+      val half = (hotCnt + 1L) / 2L
+      import org.apache.spark.sql.expressions.Window
+      val ranked = members
+        .withColumn("__v", expr(s"CAST(element_at(embedding, ${splitDim + 1}) AS DOUBLE)"))
+        .withColumn("__rn", row_number().over(
+          Window.partitionBy(col("cell")).orderBy(col("__v"), col("vec_id"))))
+        .select(col("vec_id"),
+          when(col("__rn") <= half, lit(hotCell)).otherwise(lit(16L + hotCell))
+            .as("cell"))
+      val after = assigned.filter(col("cell") =!= hotCell)
+        .select(col("vec_id"), col("cell"))
+        .unionByName(ranked)
+        .groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
+        .localCheckpoint() // 17 rows; read twice (rows + max)
+      val maxAfter = after.agg(max(col("cnt"))).head.getLong(0)
+      after.select(col("cell"), col("cnt").cast("long").as("cnt"),
+          lit(hotCell).as("split_cell"), lit(splitDim.toLong).as("split_dim"),
+          lit(hotCnt).as("max_before"), lit(maxAfter).as("max_after"))
+        .orderBy("cell")
+    }),
     "q308_k_anonymity" -> ((s, dir) => {
       // privacy-release audit (Sweeney 2002 k-anonymity): how much of the
       // table survives if every quasi-identifier group smaller than k is
@@ -1641,6 +2156,57 @@ private[graft] object RegistryAnnDedup {
         .select(col("id_a"), col("id_b"), col("hamming"))
         .orderBy("id_a", "id_b")
     }))
+
+  /** q458's oracle: q307's IVF structure (assignment crn = 1, probes
+    * crn <= np_leg) with np_leg derived by the SAME integer formula the
+    * engine runs — kept² ceil-division against 2·total², capped at the 16
+    * cells — per selectivity leg. */
+  private val q458Sql: String = {
+    val cos = (a: String, b: String) =>
+      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
+    val legs = Seq[(String, String => String)](
+      ("l1_all", _ => "1 = 1"),
+      ("l2_mild", a => s"$a.label <= 6"),
+      ("l3_half", a => s"$a.label <= 4"),
+      ("l4_narrow", a => s"$a.label = 2"))
+    val legCtes = legs.map { case (name, pred) =>
+      s"""k_$name AS (SELECT greatest(count(*), 1) AS kept FROM vecs WHERE ${pred("vecs")}),
+         |np_$name AS (SELECT least(16, (2 * t.n * t.n + k.kept * k.kept - 1) // (k.kept * k.kept)) AS np,
+         |    (10000 * k.kept) // t.n AS sel_bp FROM tot t, k_$name k),
+         |q_$name AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored
+         |  WHERE vec_id < 8 AND crn <= (SELECT np FROM np_$name)),
+         |iv_$name AS (SELECT query_id, neighbor_id FROM (
+         |    SELECT q.query_id, a.vec_id AS neighbor_id,
+         |      row_number() OVER (PARTITION BY q.query_id ORDER BY ${cos("q.qv", "a.vv")} DESC, a.vec_id) AS rn
+         |    FROM q_$name q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id WHERE ${pred("a")})
+         |  WHERE rn <= 5),
+         |tr_$name AS (SELECT query_id, neighbor_id FROM (
+         |    SELECT qq.vec_id AS query_id, n.vec_id AS neighbor_id,
+         |      row_number() OVER (PARTITION BY qq.vec_id ORDER BY ${cos("qq.vv", "n.vv")} DESC, n.vec_id) AS rn
+         |    FROM vecs qq CROSS JOIN vecs n
+         |    WHERE qq.vec_id < 8 AND n.vec_id <> qq.vec_id AND ${pred("n")})
+         |  WHERE rn <= 5),
+         |h_$name AS (SELECT '$name' AS leg, np.sel_bp, np.np AS nprobe, count(*) AS hits
+         |  FROM iv_$name i JOIN tr_$name t ON t.query_id = i.query_id AND t.neighbor_id = i.neighbor_id,
+         |    np_$name np GROUP BY 1, 2, 3)""".stripMargin
+    }.mkString(",\n")
+    val union = legs.map { case (name, _) => s"SELECT * FROM h_$name" }.mkString(" UNION ALL ")
+    s"""WITH vecs AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+       |tot AS (SELECT count(*) AS n FROM vecs),
+       |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+       |scored AS (SELECT x.vec_id, x.vv, c.cell,
+       |  row_number() OVER (PARTITION BY x.vec_id ORDER BY ${cos("x.vv", "c.cv")} DESC, c.cell) AS crn
+       |  FROM vecs x CROSS JOIN cent c),
+       |asg AS (SELECT s0.vec_id, v0.label, s0.vv, s0.cell FROM scored s0
+       |  JOIN vecs v0 ON v0.vec_id = s0.vec_id WHERE s0.crn = 1),
+       |$legCtes,
+       |u AS ($union),
+       |nq AS (SELECT count(*) AS n FROM vecs WHERE vec_id < 8)
+       |SELECT u.leg, CAST(u.sel_bp AS BIGINT) AS sel_bp, CAST(u.nprobe AS BIGINT) AS nprobe,
+       |  CAST(nq.n AS BIGINT) AS n_queries, CAST(u.hits AS BIGINT) AS hits,
+       |  (round(CAST(u.hits AS DOUBLE) / (CAST(nq.n AS DOUBLE) * 5), 4) + 0.0) AS recall
+       |FROM u, nq ORDER BY u.leg""".stripMargin
+  }
 
   val oracleSql: Seq[(String, String)] = Seq(
     "q243_stream_quota" ->
@@ -1891,6 +2457,181 @@ private[graft] object RegistryAnnDedup {
         |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
         |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin,
     "q257_ivf_train" -> q257Sql,
+    "q449_ann_serving" ->
+      // q58's oracle verbatim: the serving layout changes WHERE the index
+      // lives (a bucketed catalog table), never what the search returns
+      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+        |scored AS (SELECT x.vec_id, x.vv, c.cell,
+        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
+        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+        |    c.cell) AS crn
+        |  FROM vecs x CROSS JOIN cent c),
+        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
+        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM asg WHERE vec_id < 8),
+        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
+        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
+        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
+        |r AS (SELECT query_id, neighbor_id, cosine,
+        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
+        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
+        |ORDER BY query_id, rn""".stripMargin,
+    "q450_ivf_train_readout" ->
+      // the k=16 micro-Lloyd chain (shared lloydCtesK generator), exact
+      // seed/trained distortions from the chain's own argmin rows, and the
+      // q258-shape nprobe=1 searches under raw-seed vs rebuilt-trained
+      // centroid vectors, each scored against the exact top-5 truth
+      s"""WITH ${lloydCtesK(16)},
+         |dd3 AS (SELECT c.vec_id, ct.cell, sum((c.vm - ct.cm) * (c.vm - ct.cm)) AS d2
+         |  FROM comp c JOIN c2 ct USING (dim) GROUP BY 1, 2),
+         |b3 AS (SELECT vec_id, min(d2) AS md FROM dd3 GROUP BY 1),
+         |vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |cl0 AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+         |cl2 AS (SELECT cell, list(cm / 1000000.0 ORDER BY dim) AS cv FROM c2 GROUP BY 1),
+         |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
+         |bs AS (SELECT query_id, vec_id AS neighbor_id,
+         |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
+         |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
+         |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+         |  FROM bs) WHERE rn <= 5),
+         |cc0 AS (SELECT x.vec_id, c.cell,
+         |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
+         |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+         |    c.cell) AS crn
+         |  FROM vecs x CROSS JOIN cl0 c),
+         |cc2 AS (SELECT x.vec_id, c.cell,
+         |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
+         |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+         |    c.cell) AS crn
+         |  FROM vecs x CROSS JOIN cl2 c),
+         |s0 AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
+         |    list_dot_product(q.vv, n.vv) / (sqrt(list_dot_product(q.vv, q.vv)) * sqrt(list_dot_product(n.vv, n.vv))) AS cosine
+         |  FROM (SELECT vec_id, cell FROM cc0 WHERE vec_id < 8 AND crn <= 1) qp
+         |  JOIN (SELECT vec_id, cell FROM cc0 WHERE crn = 1) a ON a.cell = qp.cell
+         |    AND a.vec_id <> qp.vec_id
+         |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id),
+         |t0 AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+         |  FROM s0) WHERE rn <= 5),
+         |s2 AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
+         |    list_dot_product(q.vv, n.vv) / (sqrt(list_dot_product(q.vv, q.vv)) * sqrt(list_dot_product(n.vv, n.vv))) AS cosine
+         |  FROM (SELECT vec_id, cell FROM cc2 WHERE vec_id < 8 AND crn <= 1) qp
+         |  JOIN (SELECT vec_id, cell FROM cc2 WHERE crn = 1) a ON a.cell = qp.cell
+         |    AND a.vec_id <> qp.vec_id
+         |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id),
+         |t2 AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+         |  FROM s2) WHERE rn <= 5),
+         |h0 AS (SELECT count(*) AS hits FROM t0 JOIN tr USING (query_id, neighbor_id)),
+         |h2 AS (SELECT count(*) AS hits FROM t2 JOIN tr USING (query_id, neighbor_id))
+         |SELECT 'seed' AS variant,
+         |  (SELECT CAST(sum(md) AS BIGINT) FROM b1) AS sum_d2,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM b1) AS n_vecs,
+         |  (SELECT CAST(hits AS BIGINT) FROM h0) AS hits_at_5
+         |UNION ALL
+         |SELECT 'trained',
+         |  (SELECT CAST(sum(md) AS BIGINT) FROM b3),
+         |  (SELECT CAST(count(*) AS BIGINT) FROM b3),
+         |  (SELECT CAST(hits AS BIGINT) FROM h2)
+         |ORDER BY variant""".stripMargin,
+    "q451_adc_search" ->
+      // q449's cell assignment + q116's code assignment, the per-query LUT
+      // on the 1e-6 integer grid, 4 lookups summed per candidate, then the
+      // exact-float top-5 truth for the recall readout
+      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+        |scored AS (SELECT x.vec_id, x.vv, c.cell,
+        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
+        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+        |    c.cell) AS crn
+        |  FROM vecs x CROSS JOIN cent c),
+        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
+        |subs AS (SELECT vec_id, CAST(s.i AS INT) AS sub,
+        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
+        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
+        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
+        |sc AS (SELECT x.vec_id, x.sub, c.code,
+        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
+        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
+        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
+        |  FROM subs x JOIN cb c USING (sub)),
+        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
+        |lut AS (SELECT qq.vec_id AS query_id, c.sub, c.code,
+        |    CAST(round((list_dot_product(qq.xs, qq.xs) - 2 * list_dot_product(qq.xs, c.cs)
+        |      + list_dot_product(c.cs, c.cs)) * 1000000, 0) AS BIGINT) AS lq
+        |  FROM subs qq JOIN cb c USING (sub) WHERE qq.vec_id < 8),
+        |q AS (SELECT vec_id AS query_id, cell FROM asg WHERE vec_id < 8),
+        |cand AS (SELECT q.query_id, a.vec_id AS neighbor_id, c.sub, c.code
+        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id
+        |  JOIN codes c ON c.vec_id = a.vec_id),
+        |adc AS (SELECT query_id, neighbor_id, CAST(sum(lq) AS BIGINT) AS adc_d2q
+        |  FROM cand JOIN lut USING (query_id, sub, code) GROUP BY 1, 2),
+        |r AS (SELECT query_id, neighbor_id, adc_d2q,
+        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_d2q, neighbor_id) AS BIGINT) AS rn
+        |  FROM adc),
+        |bs AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+        |    list_dot_product(a.vv, b.vv) / (sqrt(list_dot_product(a.vv, a.vv)) * sqrt(list_dot_product(b.vv, b.vv))) AS cosine
+        |  FROM vecs a CROSS JOIN vecs b WHERE a.vec_id < 8 AND b.vec_id <> a.vec_id),
+        |truth AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS trn
+        |  FROM bs) WHERE trn <= 5)
+        |SELECT r.query_id, r.rn, r.neighbor_id, r.adc_d2q,
+        |  CAST(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS hit,
+        |  CAST(sum(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END)
+        |    OVER (PARTITION BY r.query_id) AS BIGINT) AS hits_at_5
+        |FROM r LEFT JOIN truth t ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
+        |WHERE r.rn <= 5 ORDER BY r.query_id, r.rn""".stripMargin,
+    "q453_graph_ann" -> {
+      // q443's LSH cells feed the graph build; the 4 beam rounds unroll as
+      // (expand ∪ keep, re-rank, cut-to-8) CTE triples — the oracle may be
+      // naive (full q×n dist table) where the engine does id-keyed lookups
+      val code = lshBandSqlGen(signaturePlanes, 1).head
+      def round(i: Int) =
+        s"""nb$i AS (SELECT v.query_id, e.dst AS node FROM v${i - 1} v
+           |  JOIN edges e ON e.src = v.node WHERE e.dst <> v.query_id),
+           |cand$i AS (SELECT query_id, node FROM v${i - 1}
+           |  UNION SELECT query_id, node FROM nb$i),
+           |sc$i AS (SELECT c.query_id, c.node, d.cq,
+           |    row_number() OVER (PARTITION BY c.query_id ORDER BY d.cq DESC, c.node) AS rn
+           |  FROM cand$i c JOIN dist d ON d.query_id = c.query_id AND d.node = c.node),
+           |v$i AS (SELECT query_id, node, cq FROM sc$i WHERE rn <= 8)""".stripMargin
+      s"""WITH nn AS (SELECT count(*) // 32 AS q FROM embeddings),
+         |cells AS (SELECT ${cellLadderSql} AS c FROM nn),
+         |b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |coded AS (SELECT vec_id, v, ($code) % (SELECT c FROM cells) AS cell FROM b),
+         |prs AS (SELECT a.vec_id AS src, b2.vec_id AS dst,
+         |    CAST(round(list_dot_product(a.v, b2.v) /
+         |      (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b2.v, b2.v))) * 1000000, 0) AS BIGINT) AS cq
+         |  FROM coded a JOIN coded b2 ON a.cell = b2.cell AND a.vec_id <> b2.vec_id),
+         |rk AS (SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY cq DESC, dst) AS rn FROM prs),
+         |edges AS (SELECT src, dst FROM rk WHERE rn <= 4
+         |  UNION SELECT dst, src FROM rk WHERE rn <= 4),
+         |q AS (SELECT vec_id AS query_id, v AS qv FROM b WHERE vec_id < 8),
+         |dist AS (SELECT q.query_id, c.vec_id AS node,
+         |    CAST(round(list_dot_product(q.qv, c.v) /
+         |      (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(c.v, c.v))) * 1000000, 0) AS BIGINT) AS cq
+         |  FROM q CROSS JOIN b c WHERE c.vec_id <> q.query_id),
+         |entry AS (SELECT query_id, min(node) AS node FROM dist GROUP BY 1),
+         |v0 AS (SELECT e.query_id, e.node, d.cq FROM entry e
+         |  JOIN dist d ON d.query_id = e.query_id AND d.node = e.node),
+         |${(1 to 4).map(round).mkString(",\n")},
+         |fin AS (SELECT query_id, node, cq,
+         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY cq DESC, node) AS BIGINT) AS rn
+         |  FROM v4),
+         |bs AS (SELECT a.vec_id AS query_id, c.vec_id AS neighbor_id,
+         |    list_dot_product(a.v, c.v) / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine
+         |  FROM b a CROSS JOIN b c WHERE a.vec_id < 8 AND c.vec_id <> a.vec_id),
+         |truth AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS trn
+         |  FROM bs) WHERE trn <= 5)
+         |SELECT f.query_id, f.rn, f.node AS neighbor_id, f.cq AS cos_q,
+         |  CAST(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS hit,
+         |  CAST(sum(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END)
+         |    OVER (PARTITION BY f.query_id) AS BIGINT) AS hits_at_5
+         |FROM fin f LEFT JOIN truth t ON t.query_id = f.query_id AND t.neighbor_id = f.node
+         |WHERE f.rn <= 5 ORDER BY f.query_id, f.rn""".stripMargin
+    },
     "q258_ivf_train_recall" -> q258Sql,
     "q268_ivfpq_curve" -> q268Sql,
     "q269_pq_codebook_curve" -> q269Sql,
@@ -2082,6 +2823,37 @@ private[graft] object RegistryAnnDedup {
         |FROM f WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
     // q273_semdedup / q276_editdist_confirm verify against their twins'
     // oracles (SparkEntry.retiredToTwins, round 17)
+    "q443_semdedup_lsh" -> {
+      val code = lshBandSqlGen(signaturePlanes, 1).head
+      s"""WITH nn AS (SELECT count(*) // 32 AS q FROM embeddings),
+         |cells AS (SELECT $cellLadderSql AS c FROM nn),
+         |b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |coded AS (SELECT vec_id, v, ($code) % (SELECT c FROM cells) AS cell FROM b),
+         |dropped AS (SELECT DISTINCT hi.vec_id
+         |  FROM coded hi JOIN coded lo ON hi.cell = lo.cell AND lo.vec_id < hi.vec_id
+         |  WHERE list_dot_product(hi.v, lo.v) /
+         |    (sqrt(list_dot_product(hi.v, hi.v)) * sqrt(list_dot_product(lo.v, lo.v))) > 0.4)
+         |SELECT c.vec_id, c.cell, CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
+         |FROM coded c LEFT JOIN dropped d ON d.vec_id = c.vec_id ORDER BY c.vec_id""".stripMargin
+    },
+    "q447_confirm_pruned" ->
+      // q44's banded candidates, the estimate gate, the length prefilter,
+      // the DP, the production threshold (est_jaccard is a 4dp-rounded
+      // multiple of 1/16 in both engines, so the 0.5 boundary is exact)
+      s"""WITH pairs AS ($q44Sql),
+         |j AS (SELECT p.id_a, p.id_b, p.est_jaccard,
+         |    levenshtein(a.text, b.text) AS lev,
+         |    greatest(length(a.text), length(b.text), 1) AS ml
+         |  FROM pairs p
+         |  JOIN documents a ON a.doc_id = p.id_a
+         |  JOIN documents b ON b.doc_id = p.id_b
+         |  WHERE p.est_jaccard >= 0.5
+         |    AND (10000 * abs(length(a.text) - length(b.text)))
+         |    // greatest(length(a.text), length(b.text), 1) <= 1000)
+         |SELECT id_a, id_b, est_jaccard, CAST(lev AS BIGINT) AS lev,
+         |  CAST(10000 - ((10000 * lev) // ml) AS BIGINT) AS sim_bp
+         |FROM j WHERE 10000 - ((10000 * lev) // ml) >= 9000
+         |ORDER BY id_a, id_b""".stripMargin,
     "q274_knn_label" ->
       // q45's exact top-5 chain, neighbors' labels gathered, majority with
       // ties to the smallest label
@@ -2290,6 +3062,62 @@ private[graft] object RegistryAnnDedup {
         |  CAST(count(*) AS BIGINT) AS cnt
         |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
     "q307_filtered_recall" -> q307Sql,
+    "q458_adaptive_nprobe" -> q458Sql,
+    "q459_histogram_selectivity" ->
+      // the same ntile histogram (q326's oracle convention), the same
+      // inclusive-width interpolation, exact counts per threshold
+      """WITH o AS (SELECT o_orderkey,
+        |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents FROM orders),
+        |n AS (SELECT count(*) AS n FROM o),
+        |r AS (SELECT cents,
+        |    CAST(ntile(32) OVER (ORDER BY cents, o_orderkey) AS BIGINT) AS bucket FROM o),
+        |h AS (SELECT bucket, count(*) AS cnt, min(cents) AS lo, max(cents) AS hi
+        |  FROM r GROUP BY 1),
+        |ts AS (SELECT CAST(unnest([5000000, 15000000, 25000000, 40000000, 48000000]) AS BIGINT) AS t_cents),
+        |e AS (SELECT t_cents, sum(CASE WHEN t_cents <= lo THEN cnt
+        |    WHEN t_cents > hi THEN 0
+        |    ELSE cnt * (hi - t_cents + 1) // (hi - lo + 1) END) AS est_rows
+        |  FROM h CROSS JOIN ts GROUP BY 1),
+        |a AS (SELECT t_cents, count(*) AS actual_rows FROM o JOIN ts ON cents >= t_cents GROUP BY 1)
+        |SELECT e.t_cents, CAST(n.n AS BIGINT) AS n_total,
+        |  CAST(e.est_rows AS BIGINT) AS est_rows,
+        |  CAST(coalesce(a.actual_rows, 0) AS BIGINT) AS actual_rows,
+        |  CAST(e.est_rows * 10000 // n.n AS BIGINT) AS est_bp,
+        |  CAST(coalesce(a.actual_rows, 0) * 10000 // n.n AS BIGINT) AS actual_bp,
+        |  CAST(abs(e.est_rows - coalesce(a.actual_rows, 0)) * 10000 // n.n AS BIGINT) AS err_bp
+        |FROM e LEFT JOIN a USING (t_cents) CROSS JOIN n ORDER BY e.t_cents""".stripMargin,
+    "q460_ivf_cell_split" ->
+      // the same cosine argmax assignment (q307's asg convention), the
+      // same KD split: widest-range dim (min dim id on ties), rank on
+      // (value, vec_id), ceil-half to the old id, rest to 16 + cell
+      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+        |scored AS (SELECT x.vec_id, x.vv, c.cell,
+        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
+        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+        |    c.cell) AS crn
+        |  FROM vecs x CROSS JOIN cent c),
+        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
+        |cc AS (SELECT cell, count(*) AS cnt FROM asg GROUP BY 1),
+        |hot AS (SELECT cell, cnt FROM cc ORDER BY cnt DESC, cell LIMIT 1),
+        |mem AS (SELECT a.vec_id, a.vv FROM asg a JOIN hot h ON a.cell = h.cell),
+        |dimx AS (SELECT CAST(u.i AS BIGINT) AS dim, m.vv[CAST(u.i + 1 AS INT)] AS v
+        |  FROM mem m, (SELECT unnest(range(0, 64)) AS i) u),
+        |sd AS (SELECT dim FROM (SELECT dim, max(v) - min(v) AS rng FROM dimx GROUP BY 1)
+        |  ORDER BY rng DESC, dim LIMIT 1),
+        |rk AS (SELECT m.vec_id,
+        |    row_number() OVER (ORDER BY m.vv[CAST(sd.dim + 1 AS INT)], m.vec_id) AS rn
+        |  FROM mem m, sd),
+        |sp AS (SELECT vec_id, CASE WHEN rn <= (SELECT (cnt + 1) // 2 FROM hot)
+        |    THEN (SELECT cell FROM hot) ELSE 16 + (SELECT cell FROM hot) END AS cell FROM rk),
+        |aft AS (SELECT cell, count(*) AS cnt FROM (
+        |  SELECT a.cell FROM asg a WHERE a.cell <> (SELECT cell FROM hot)
+        |  UNION ALL SELECT cell FROM sp) GROUP BY 1)
+        |SELECT aft.cell, CAST(aft.cnt AS BIGINT) AS cnt,
+        |  CAST(hot.cell AS BIGINT) AS split_cell, CAST(sd.dim AS BIGINT) AS split_dim,
+        |  CAST(hot.cnt AS BIGINT) AS max_before,
+        |  CAST((SELECT max(cnt) FROM aft) AS BIGINT) AS max_after
+        |FROM aft, hot, sd ORDER BY aft.cell""".stripMargin,
     "q308_k_anonymity" ->
       // the k-sweep is pure arithmetic over the QI-group counts; basis
       // points via non-negative integer division (trunc ≡ floor)

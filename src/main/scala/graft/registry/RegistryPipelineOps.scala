@@ -11,7 +11,8 @@ import graft.multimodal.Multimodal
 import SparkEntry._
 import graft.storage.Materialize.scratch
 
-/** Registry part: storage, streaming-replay, privacy and drift keys (q314-q383).
+/** Registry part: storage, streaming-replay, privacy and drift keys (q314-q383),
+  * with the streaming TTL-dedup and late-data keys q452/q455 next to q344.
   *
   * Split VERBATIM from SparkEntry's single queries/oracleSql map literals
   * (round-13 verdict item 8 - pure maintainability, zero semantic change);
@@ -794,6 +795,16 @@ private[graft] object RegistryPipelineOps {
           expr("n_late * 10000 div n_events").as("late_bp"))
         .orderBy("delay_s")
     }),
+    "q452_stream_ttl_dedup" -> ((s, dir) =>
+      graft.stream.Streaming.streamTtlDedupEras(s, dir, scratch("stream_ttl", dir))
+        .orderBy("user_id", "era")),
+    "q455_late_data_audit" -> ((s, dir) =>
+      // the per-day delivery ledger of a watermarked ingest with 3-day
+      // stragglers under a 1-day horizon: most delayed rows are dropped as
+      // LATE (the measured lag-2 watermark rule); see
+      // Streaming.lateDataAudit for the pinned semantics
+      graft.stream.Streaming.lateDataAudit(s, dir, scratch("stream_late", dir))
+        .orderBy("day")),
     "q345_prefix_cache" -> ((s, dir) => {
       // KV-cache prefix-sharing estimator (the vLLM/SGLang serving win):
       // at each prefix length N, the fraction of prompts whose first N
@@ -2295,6 +2306,81 @@ private[graft] object RegistryPipelineOps {
         |    AND m.tsm < m.prevmax - d.delay_s * 1000000 THEN 1 ELSE 0 END) * 10000
         |    // count(*) AS BIGINT) AS late_bp
         |FROM m CROSS JOIN d GROUP BY d.delay_s ORDER BY 1""".stripMargin,
+    "q452_stream_ttl_dedup" ->
+      // the pinned eviction recursion, unrolled on the round-17 3-DAY
+      // BUCKET spine (the measured rule is pinned by StreamingSpec's "q452
+      // semantics pin" and "q452: TTL bounds" tests): era j+1 = the user's
+      // first event bucket whose micro-batch sees an eviction watermark at
+      // or past era j's expiry — evict_base(d) = the bucket TWO batches
+      // back (the measured commit lag), condition date_diff(era_d,
+      // evict_base) >= 2·horizon where horizon = hd = 3·greatest(1,
+      // spanBuckets // 6) DAYS (the guard reads 2·hd).
+      // Four unrolled rounds cover any span at /6 (eras are >= 2·horizon +
+      // 2 buckets apart, so at most 3 fire; e5 is provably empty margin).
+      """WITH ev0 AS (SELECT DISTINCT user_id, date_trunc('day', CAST(ts AS TIMESTAMP)) AS rd
+        |  FROM events WHERE user_id IS NOT NULL),
+        |d0 AS (SELECT min(rd) AS d0 FROM ev0),
+        |ev AS (SELECT DISTINCT user_id,
+        |    d0.d0 + INTERVAL 1 DAY * (3 * (date_diff('day', d0.d0, rd) // 3)) AS d
+        |  FROM ev0, d0),
+        |span AS (SELECT 3 * greatest(1, (date_diff('day', min(d), max(d)) // 3 + 1) // 6) AS hd FROM ev),
+        |days AS (SELECT d, lag(d, 2) OVER (ORDER BY d) AS evict_base
+        |  FROM (SELECT DISTINCT d FROM ev)),
+        |e1 AS (SELECT user_id, min(d) AS d FROM ev GROUP BY 1),
+        |e2 AS (SELECT ev.user_id, min(ev.d) AS d FROM ev
+        |  JOIN e1 USING (user_id) JOIN days ON days.d = ev.d
+        |  WHERE days.evict_base IS NOT NULL
+        |    AND date_diff('day', e1.d, days.evict_base) >= 2 * (SELECT hd FROM span)
+        |  GROUP BY 1),
+        |e3 AS (SELECT ev.user_id, min(ev.d) AS d FROM ev
+        |  JOIN e2 USING (user_id) JOIN days ON days.d = ev.d
+        |  WHERE days.evict_base IS NOT NULL
+        |    AND date_diff('day', e2.d, days.evict_base) >= 2 * (SELECT hd FROM span)
+        |  GROUP BY 1),
+        |e4 AS (SELECT ev.user_id, min(ev.d) AS d FROM ev
+        |  JOIN e3 USING (user_id) JOIN days ON days.d = ev.d
+        |  WHERE days.evict_base IS NOT NULL
+        |    AND date_diff('day', e3.d, days.evict_base) >= 2 * (SELECT hd FROM span)
+        |  GROUP BY 1),
+        |e5 AS (SELECT ev.user_id, min(ev.d) AS d FROM ev
+        |  JOIN e4 USING (user_id) JOIN days ON days.d = ev.d
+        |  WHERE days.evict_base IS NOT NULL
+        |    AND date_diff('day', e4.d, days.evict_base) >= 2 * (SELECT hd FROM span)
+        |  GROUP BY 1),
+        |kept AS (SELECT user_id, d FROM e1 UNION ALL SELECT user_id, d FROM e2
+        |  UNION ALL SELECT user_id, d FROM e3 UNION ALL SELECT user_id, d FROM e4
+        |  UNION ALL SELECT user_id, d FROM e5)
+        |SELECT user_id, CAST(d AS DATE) AS day,
+        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY d) AS BIGINT) AS era
+        |FROM kept ORDER BY user_id, era""".stripMargin,
+    "q455_late_data_audit" ->
+      // the measured late rule replayed on the round-17 3-DAY BUCKET spine
+      // (pinned by StreamingSpec's "q455 semantics pin"): batch = bucket index
+      // (+3 for the delayed %17 stream), running max over batches <= N-2
+      // minus the 1-day horizon, boundary row dropped (ts > wm survives) —
+      // empty batches advance nothing
+      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts,
+        |    date_trunc('day', CAST(ts AS TIMESTAMP)) AS d FROM events
+        |    WHERE event_id IS NOT NULL),
+        |d0 AS (SELECT min(d) AS d0 FROM ev),
+        |rb AS (SELECT e.event_id, e.ts, e.d,
+        |    CASE WHEN e.event_id % 17 = 0
+        |      THEN date_diff('day', d0.d0, e.d) // 3 + 3
+        |      ELSE date_diff('day', d0.d0, e.d) // 3 END AS b
+        |  FROM ev e, d0),
+        |bm AS (SELECT b, max(ts) AS mt FROM rb GROUP BY 1),
+        |spine AS (SELECT CAST(unnest(range(0, (SELECT max(b) + 1 FROM rb))) AS BIGINT) AS b),
+        |wm AS (SELECT s.b,
+        |    max(bm.mt) OVER (ORDER BY s.b ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
+        |      - INTERVAL 1 DAY AS w
+        |  FROM spine s LEFT JOIN bm ON bm.b = s.b),
+        |deliv AS (SELECT r.event_id FROM rb r JOIN wm ON wm.b = r.b
+        |  WHERE wm.w IS NULL OR r.ts > wm.w)
+        |SELECT CAST(e.d AS DATE) AS day, CAST(count(*) AS BIGINT) AS total,
+        |  CAST(count(dv.event_id) AS BIGINT) AS delivered,
+        |  CAST(count(*) - count(dv.event_id) AS BIGINT) AS late_dropped
+        |FROM ev e LEFT JOIN deliv dv ON dv.event_id = e.event_id
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q345_prefix_cache" ->
       // same tokenization, same list-slice prefixes (DuckDB slices are
       // 1-based inclusive), same hit arithmetic

@@ -11,7 +11,8 @@ import graft.multimodal.Multimodal
 import SparkEntry._
 import graft.storage.Materialize.scratch
 
-/** Registry part: warehouse, multimodal and text-analysis keys (q64-q141).
+/** Registry part: warehouse, multimodal and text-analysis keys (q64-q141),
+  * with q456 next to q113.
   *
   * Split VERBATIM from SparkEntry's single queries/oracleSql map literals
   * (round-13 verdict item 8 - pure maintainability, zero semantic change);
@@ -546,7 +547,7 @@ private[graft] object RegistryWarehouseText {
       // index, q44 params) -> keep the LONGEST member per cluster (tie: min
       // id) — the quality-aware upgrade of q77's min-id canonicalization
       val (_, comp) = dedupIndex(s, dir)
-      Dedup.clusterRepresentativesFrom(comp, T(s, dir, "documents"), "doc_id", "n_chars")
+      Dedup.clusterRepresentatives(comp, T(s, dir, "documents"), "doc_id", "n_chars")
         .orderBy("component", "doc_id")
     }),
     "q106_sequence_assembly" -> ((s, dir) =>
@@ -639,6 +640,36 @@ private[graft] object RegistryWarehouseText {
           element_at(col("features"), 1).cast("long").as("sample_rate"),
           element_at(col("features"), 2).cast("long").as("n_frames"),
           element_at(col("features"), 3).cast("long").as("peak"))
+        .orderBy("doc_id")
+    }),
+    "q456_audio_fingerprint" -> ((s, dir) => {
+      // Walsh–Hadamard audio fingerprint dedup: per doc a 64-sample PCM
+      // waveform derives from a seed hashed off the doc's leading 40 chars
+      // (so docs sharing their opening content share audio — the planted
+      // '+ dup' family collides by construction), a REAL WAV container is
+      // synthesized and REALLY parsed back (javax.sound), the decoded
+      // samples fingerprint through the exact-integer WHT (see
+      // Multimodal.whtFingerprint), and matching is one equi-join on the
+      // 64-bit key. Output: every doc with its fingerprint, canonical
+      // group id (min doc_id) and group size.
+      import s.implicits._
+      // coalesce BEFORE the seed derivation: a null text must fingerprint
+      // as the empty waveform on both engines, not null-poison the typed
+      // decode (r16 advice — the generator permits null text)
+      val seeded = T(s, dir, "documents").select(col("doc_id"),
+        expr("CAST(conv(substring(sha2(substring(coalesce(text, ''), 1, 40), 256), 1, 8), 16, 10) AS BIGINT)")
+          .as("seed"))
+      val wavs = seeded.as[(Long, Long)].mapPartitions(_.map { case (id, seed) =>
+        val samples = Array.tabulate(64)(i =>
+          (((seed + i.toLong * 2654435761L) % 65536L) - 32768L).toShort)
+        (id, graft.multimodal.Multimodal.synthWavSamples(samples, 16000))
+      }).toDF("doc_id", "payload")
+      val fps = graft.multimodal.Multimodal.whtFingerprint(wavs, "doc_id")
+      val groups = fps.groupBy(col("fp"))
+        .agg(min(col("doc_id")).as("group_id"), count(lit(1)).as("group_size"))
+      fps.join(groups, "fp")
+        .select(col("doc_id"), col("fp"), col("group_id"),
+          col("group_size").cast("long").as("group_size"))
         .orderBy("doc_id")
     }),
     "q139_video_frames" -> ((s, dir) => {
@@ -1145,6 +1176,30 @@ private[graft] object RegistryWarehouseText {
         |  CAST(n_chars % 500 + 1 AS BIGINT) AS n_frames,
         |  CAST(doc_id % 30000 AS BIGINT) AS peak
         |FROM documents ORDER BY doc_id""".stripMargin,
+    "q456_audio_fingerprint" -> {
+      // the same seed (first 8 sha256 hex chars of the 40-char prefix),
+      // the same 64-sample integer waveform, the 6 WHT butterfly stages
+      // unrolled as list_transform CTEs, sign bits 1..32 packed
+      val stages = Iterator.iterate(1)(_ * 2).takeWhile(_ < 64).map { bit =>
+        val prev = if (bit == 1) "a0" else s"s${bit / 2}"
+        s"""s$bit AS (SELECT doc_id, list_transform(range(0, 64), i ->
+           |  CASE WHEN (i & $bit) = 0 THEN a[CAST(i + 1 AS INT)] + a[CAST(i + $bit + 1 AS INT)]
+           |  ELSE a[CAST(i - $bit + 1 AS INT)] - a[CAST(i + 1 AS INT)] END) AS a FROM $prev)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH sd AS (SELECT doc_id,
+         |    CAST(CAST(('0x' || substr(sha256(substr(coalesce(text, ''), 1, 40)), 1, 8)) AS UBIGINT) AS BIGINT) AS seed
+         |  FROM documents),
+         |a0 AS (SELECT doc_id,
+         |    list_transform(range(0, 64), i -> (seed + i * 2654435761) % 65536 - 32768) AS a
+         |  FROM sd),
+         |$stages,
+         |fps AS (SELECT doc_id, CAST(list_sum(list_transform(range(1, 33), j ->
+         |    CASE WHEN a[CAST(j + 1 AS INT)] > 0 THEN (CAST(1 AS BIGINT) << CAST(j - 1 AS INT)) ELSE 0 END))
+         |  AS BIGINT) AS fp FROM s32),
+         |g AS (SELECT fp, min(doc_id) AS group_id, count(*) AS group_size FROM fps GROUP BY 1)
+         |SELECT f.doc_id, f.fp, g.group_id, CAST(g.group_size AS BIGINT) AS group_size
+         |FROM fps f JOIN g USING (fp) ORDER BY f.doc_id""".stripMargin
+    },
     "q139_video_frames" ->
       // every-2nd-frame walk of a (n_chars%5+2)-frame animated GIF of
       // (doc_id%8+1)×3 solid-color frames — frame colors are pure

@@ -23,8 +23,6 @@ final case class SchemaRegistry(tables: Map[String, StructType]) {
   def schema(name: String): StructType =
     tables.getOrElse(name, sys.error(s"no registered schema: $name"))
 
-  def contains(name: String): Boolean = tables.contains(name)
-
   /** Conform a DataFrame to a registered schema: cast columns present in the
     * input, fill absent ones with typed nulls, drop extras, and order columns
     * exactly as registered — the generic per-source adapter the reference
@@ -45,21 +43,9 @@ final case class SchemaRegistry(tables: Map[String, StructType]) {
       }).cast(f.dataType).as(f.name)
     }: _*)
   }
-
-  /** Register (or replace) a table schema. */
-  def updated(name: String, schema: StructType): SchemaRegistry =
-    copy(tables = tables + (name -> schema))
 }
 
 object SchemaRegistry {
-
-  /** Build from the config shape the reference uses: table → ordered
-    * (column, SQL type name) pairs. Type names are standard Spark DDL
-    * ("string", "int", "boolean", "double", "timestamp", ...). */
-  def fromConfig(config: Map[String, Seq[(String, String)]]): SchemaRegistry =
-    SchemaRegistry(config.map { case (table, cols) =>
-      table -> StructType(cols.map { case (n, t) => StructField(n, DataType.fromDDL(t)) })
-    })
 
   /** Enrichment-table columns, mirroring the reference's analysis DDL
     * (`Data Analysis/Reddit_4chan_Analysis.py:66-76`): comment key, raw +

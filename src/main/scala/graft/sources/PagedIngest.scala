@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
   * distributed DataFrame handed to the sink (durable parquet append, JDBC,
   * or a streaming source's staging dir), so at most ONE page of rows ever
   * sits on the driver. Rate limiting, auth and retries live in the
-  * injectable client layer (same seam shape as `Moderation.Client` /
-  * `Multimodal.Decoder`); the loop itself is deterministic and testable.
+  * injectable client layer (same seam shape as `Multimodal.Decoder`); the
+  * loop itself is deterministic and testable.
   */
 object PagedIngest {
 
@@ -42,10 +42,7 @@ object PagedIngest {
     * distinguish the two None cases with `stuckAt.isDefined`. */
   final case class IngestResult(fetches: Int, pages: Int, rows: Long,
                                 resumeCursor: Option[String],
-                                stuckAt: Option[String] = None) {
-    /** True when the run stopped because the API repeated a cursor. */
-    def stuckCursor: Boolean = stuckAt.isDefined
-  }
+                                stuckAt: Option[String] = None)
 
   /** Drain the cursor chain, converting each page to a DataFrame and handing
     * it to `sink` (append-mode by convention). `maxFetches` bounds the number

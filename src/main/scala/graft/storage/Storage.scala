@@ -57,33 +57,10 @@ object Storage {
                properties: java.util.Properties = new java.util.Properties): DataFrame =
     spark.read.jdbc(url, table, properties)
 
-  /** Streaming JDBC append: checkpointed foreachBatch, each micro-batch one
-    * batched `.jdbc` write — the durable streaming twin of the reference's
-    * poll→insert loop. Delivery is at-least-once under crash replay; make the
-    * table idempotent (key/constraint) or dedup downstream. */
-  def jdbcStreamSink(stream: DataFrame, url: String, table: String,
-                     checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.stream.Streaming.foreachBatchSink(stream, checkpointDir) { (batch, _) =>
-      writeJdbc(batch, url, table)
-    }
-
-  /** Small-file compaction — the Parquet analogue of the reference's VACUUM
-    * task. Rewrites a prefix into ~`targetFileMB` files; run per partition
-    * directory on a cadence after streaming appends. */
-  def compact(spark: SparkSession, path: String, targetFileMB: Int = 256): Unit = {
-    val df = spark.read.parquet(path)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = math.max(1, (bytes / (targetFileMB.toLong << 20)).toInt)
-    val tmp = path.stripSuffix("/") + "__compact_tmp"
-    df.repartition(files).write.mode(SaveMode.Overwrite).parquet(tmp)
-    swapInto(spark, tmp, path)
-  }
-
   /** Replace `path` with the directory at `tmp`. The delete→rename window is
     * not atomic — a crash between the two leaves only the tmp dir, which is
     * recoverable by hand but invisible to readers; a production store does
-    * this under a txn-log commit instead. Shared by both compaction paths
-    * so that hardening lands in one place. */
+    * this under a txn-log commit instead. */
   private def swapInto(spark: SparkSession, tmp: String, path: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)

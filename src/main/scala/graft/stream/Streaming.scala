@@ -67,8 +67,8 @@ object Streaming {
     * and passes the finished query and the work dir to `finish`. The
     * checkpoint and work dir are deleted on every exit path once `finish`
     * returns, so `finish` must materialize whatever it reads from the work
-    * dir. Production sinks ([[toParquetSink]], [[foreachBatchSink]]) take
-    * the caller's durable checkpoint instead.
+    * dir. The production sink ([[toParquetSink]]) takes the caller's
+    * durable checkpoint instead.
     *
     * Streaming state partition count is a real deployment knob: it is
     * FIXED into the checkpoint at first start and every micro-batch pays a
@@ -145,19 +145,6 @@ object Streaming {
       .trigger(trigger)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).start()
   }
-
-  /** Generic durable sink for targets without a native streaming format
-    * (JDBC upserts, external stores): per-batch callback with checkpointed
-    * offsets. Delivery is at-least-once across crash/restart — the callback
-    * must be idempotent under (batchId) replay (e.g. overwrite a
-    * batchId-keyed location, or upsert on a key). */
-  def foreachBatchSink(stream: DataFrame, checkpointDir: String,
-                       trigger: Trigger = Trigger.AvailableNow())(
-      f: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream.foreachBatch(f)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
 
   /** Replays `build` (a stream on [[replay]]'s cloned session) into a
     * memory sink and returns the finished query; its result table is
@@ -390,16 +377,6 @@ object Streaming {
         .agg(count(lit(1)).as("cnt"))
         .select(col("window.start").as("bucket_start"), col("cnt")),
       "complete", statePartitions = Some(4))
-
-  /** q39 live shape: watermarked window agg — late rows beyond the horizon are
-    * dropped, the streaming analogue of the reference's "discard posts older
-    * than 3 min" (`Data Collection/chan4.py:76-77`). Used by tests; the verify
-    * twin anchors recency on max(ts) for determinism. */
-  def watermarkedDailyCounts(stream: DataFrame, horizon: String): DataFrame =
-    stream.withWatermark("ts", horizon)
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("bucket_start"), col("cnt"))
 
   /** q40 live shape: enrich-once incremental pipeline — each micro-batch
     * anti-joins the already-enriched keys then appends (reference:

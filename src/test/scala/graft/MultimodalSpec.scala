@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions._
+
 import graft.multimodal.Multimodal
 
 class MultimodalSpec extends SparkSpec {
@@ -56,13 +58,6 @@ class MultimodalSpec extends SparkSpec {
     assert(!r(3).getBoolean(7) && r(3).getLong(1) == 0L)
     // trailing garbage after IEND: chunks parse but stream is not clean
     assert(r(4).getLong(1) == 3L && !r(4).getBoolean(7))
-  }
-
-  test("resizeStub evolves metadata without touching payload") {
-    val docs = Seq((1L, "abcdef")).toDF("doc_id", "text")
-    val out = Multimodal.resizeStub(Multimodal.asMultimodal(docs, "doc_id", "text"), 640, 480)
-    val r = out.select("meta.target_w", "meta.target_h", "meta.n_bytes").head()
-    assert((r.getInt(0), r.getInt(1), r.getLong(2)) == ((640, 480, 6L)))
   }
 
   test("frameSampleStub fans out one row per frame slice") {
@@ -181,5 +176,20 @@ class MultimodalSpec extends SparkSpec {
     assert(feats.count() == 3)
     val m = feats.orderBy("doc_id").as[(Long, Array[Float])].collect()
     assert(m(0)._2(0) == 3f && m(2)._2.toSeq == Seq(0f, 0f, 0f, 0f))
+  }
+
+  test("q456: fingerprints group the planted '+ dup' docs with their source") {
+    // the dup family shares its leading 40 chars with the source doc, so
+    // their synthesized audio — and the WHT fingerprint — must collide
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text")).as[(Long, String)].collect().toSeq
+    val out = SparkEntry.queries("q456_audio_fingerprint")(spark, sf)
+      .select("doc_id", "fp").as[(Long, Long)].collect().toMap
+    assert(out.values.forall(_ != -1L), "every synthesized WAV must parse")
+    val byPrefix = docs.groupBy(_._2.take(40))
+    byPrefix.values.filter(_.size > 1).foreach { grp =>
+      val fps = grp.map(d => out(d._1)).distinct
+      assert(fps.size == 1, s"same leading content must share a fingerprint: $grp")
+    }
   }
 }

@@ -48,7 +48,7 @@ class PagedIngestSpec extends SparkSpec {
     val res = PagedIngest.ingest(spark, endless, maxFetches = 5)(_ => ())
     // resumeCursor is None (resuming from "again" would re-fetch a page that
     // already landed); the raw repeated cursor is surfaced in stuckAt
-    assert(res.fetches == 2 && res.pages == 0 && res.stuckCursor &&
+    assert(res.fetches == 2 && res.pages == 0 && res.stuckAt.isDefined &&
       res.resumeCursor.isEmpty && res.stuckAt == Some("again"))
   }
 
@@ -67,7 +67,7 @@ class PagedIngestSpec extends SparkSpec {
       written ++= df.as[(Long, String)].collect()
     }
     // runs to the maxFetches bound, not stuck; all 3 queue rows land
-    assert(res.fetches == 5 && res.rows == 3 && !res.stuckCursor &&
+    assert(res.fetches == 5 && res.rows == 3 && !res.stuckAt.isDefined &&
       res.resumeCursor == Some("tail"))
     assert(written.sorted == Seq((1L, "q"), (2L, "q"), (3L, "q")))
   }
@@ -83,7 +83,7 @@ class PagedIngestSpec extends SparkSpec {
     }
     // page at cursor None and page at cursor "loop" each land once; the
     // re-fetch of "loop" (which would duplicate) never happens
-    assert(res.fetches == 2 && res.rows == 2 && res.stuckCursor)
+    assert(res.fetches == 2 && res.rows == 2 && res.stuckAt.isDefined)
     assert(written.sorted == Seq((1L, "x"), (2L, "x")))
     // the documented resume recipe (persist resumeCursor, pass as startCursor)
     // is duplicate-free by construction: a stuck run reports no resume cursor

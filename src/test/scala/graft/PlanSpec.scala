@@ -1590,7 +1590,7 @@ class PlanSpec extends SparkSpec {
   test("name-group join: candidates come from a variant equi-join on the distinct-name frame (q445)") {
     // the registered key reads the shared materialized pair index — assert
     // the BUILD pipeline's shape (the confirmPrunedInner/q447 convention)
-    val inner = RegistryRound15.nameGroupPairs(spark, dir)
+    val inner = RegistryAnalyticsGraph.nameGroupPairs(spark, dir)
     inner.collect()
     val plan = finalPlan(inner)
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
@@ -1603,7 +1603,7 @@ class PlanSpec extends SparkSpec {
   test("pruned confirm: estimate gate reaches the pair index scan; gated pairs broadcast (q447)") {
     // the registered key truncates at the checkpoint barrier — assert the
     // inner pipeline (the kcenter/q430 convention for barrier'd keys)
-    val inner = RegistryRound15.confirmPrunedInner(spark, dir)
+    val inner = RegistryAnnDedup.confirmPrunedInner(spark, dir)
     inner.collect()
     val plan = finalPlan(inner)
     assert(plan.contains("GreaterThanOrEqual(est_jaccard,0.5)"),
@@ -1633,7 +1633,7 @@ class PlanSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (idxCells, queryCells) = RegistryRound15.annServingParts(spark, dir)
+      val (idxCells, queryCells) = RegistryAnnDedup.annServingParts(spark, dir)
       val probe = idxCells.join(queryCells.localCheckpoint(), "cell")
       assert(probe.count() > 0)
       val root = probe.queryExecution.executedPlan

@@ -39,11 +39,7 @@ class RegistrySpec extends AnyFunSuite {
       "RegistryAnnDedup" -> RegistryAnnDedup.queries,
       "RegistryPipelineOps" -> RegistryPipelineOps.queries,
       "RegistryStatsMl" -> RegistryStatsMl.queries,
-      "RegistryWarehouseText" -> RegistryWarehouseText.queries,
-      "RegistryRound14" -> RegistryRound14.queries,
-      "RegistryRound15" -> RegistryRound15.queries,
-      "RegistryRound16" -> RegistryRound16.queries,
-      "RegistryRound17" -> RegistryRound17.queries)
+      "RegistryWarehouseText" -> RegistryWarehouseText.queries)
     val all = parts.flatMap { case (n, qs) => qs.map(q => (q._1, n)) }
     val dupes = all.groupBy(_._1).filter(_._2.size > 1)
     assert(dupes.isEmpty, s"duplicate keys across parts: $dupes")

@@ -2,9 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Relational
+import graft.ops.{Policy, Relational}
 
 class RelationalSpec extends SparkSpec {
   import spark.implicits._
@@ -115,6 +116,39 @@ class RelationalSpec extends SparkSpec {
     assert(e.getMessage.contains("payload"))
   }
 
+  /** Unkeyed interval join via time-binning: pairs (l, r) with
+    * `rightTs ∈ [leftTs − before, leftTs + after]`. A naive unkeyed range
+    * join is a cartesian product; here both sides shuffle on a time BIN of
+    * `binWidth` micros — left rows replicate to every bin their interval
+    * touches (≤ 2 + (before+after)/binWidth copies), right rows keep their
+    * own bin, and the exact predicate re-applies after the equi-join on the
+    * bin. Cost is Σ bin² over co-occurring bins, not |L|·|R|; each matching
+    * pair meets in exactly one bin (the right row's), so no dedup pass.
+    * Timestamps must be non-negative (epoch micros; `div` floors there).
+    * The pair-enumerating q62 yardstick: q444's rank-difference count must
+    * equal its per-row match count.
+    */
+  private def binnedRangeJoin(left: DataFrame, right: DataFrame,
+                              leftTs: String, rightTs: String,
+                              before: String, after: String,
+                              binWidth: String = "1 hour"): DataFrame = {
+    def micros(interval: String): Column =
+      expr(s"unix_micros(timestamp '1970-01-01 00:00:00Z' + INTERVAL $interval)")
+    val w = micros(binWidth)
+    val lm = unix_micros(col(leftTs))
+    val lo = lm - micros(before)
+    val hi = lm + micros(after)
+    // micros < 2^53 ⇒ the double quotient is exact enough for floor (an
+    // integer quotient is itself representable, so floor can't misround)
+    val lBinned = left
+      .withColumn("__bin", explode(sequence(floor(lo / w), floor(hi / w))))
+    val rBinned = right.withColumn("__bin", floor(unix_micros(col(rightTs)) / w))
+    lBinned.join(rBinned, Seq("__bin"))
+      .filter(col(rightTs).between(col(leftTs) - expr(s"INTERVAL $before"),
+        col(leftTs) + expr(s"INTERVAL $after")))
+      .drop("__bin")
+  }
+
   test("binnedRangeJoin equals the naive range join across bin boundaries") {
     def ts(s: Long) = new java.sql.Timestamp(s * 1000)
     // seconds chosen to straddle the 60s bins: matches within same bin,
@@ -122,7 +156,7 @@ class RelationalSpec extends SparkSpec {
     val left = Seq((1L, ts(59)), (2L, ts(61)), (3L, ts(150))).toDF("lid", "lts")
     val right = Seq((10L, ts(30)), (11L, ts(60)), (12L, ts(89)),
       (13L, ts(121)), (14L, ts(179)), (15L, ts(181))).toDF("rid", "rts")
-    val binned = Relational.binnedRangeJoin(left, right, "lts", "rts",
+    val binned = binnedRangeJoin(left, right, "lts", "rts",
       before = "30 seconds", after = "30 seconds", binWidth = "1 minute")
       .select("lid", "rid").as[(Long, Long)].collect().toSet
     val naive = left.crossJoin(right)
@@ -544,5 +578,127 @@ class RelationalSpec extends SparkSpec {
     val out = Relational.longestStreak(ev, "user_id", "ts", "2024-01-01")
       .orderBy("user_id").as[(Long, Long)].collect().toSeq
     assert(out == Seq((1L, 3L), (2L, 1L)))
+  }
+
+  // ----------------------------------------------------------------- Policy
+
+  test("Policy: unknown action fails loudly, never passes data through") {
+    val df = Seq((1L, "alice")).toDF("id", "name")
+    val boom = intercept[IllegalArgumentException] {
+      Policy.applyPolicy(df,
+        Seq(Policy.Rule("r", "name", "redactt_tail", "3")),
+        roles = Seq("r"), keepCols = Seq("id", "name"))
+    }
+    assert(boom.getMessage.contains("unknown policy action"))
+  }
+
+  test("Policy: masks compose with the row filter; admin passthrough intact") {
+    val df = Seq((1L, "alice", 10.0), (2L, "bob", 20.0)).toDF("id", "name", "bal")
+    val out = Policy.applyPolicy(df,
+      Seq(Policy.Rule("a", "name", "redact_tail", "2"),
+        Policy.Rule("a", "bal", "nullify", ""),
+        Policy.Rule("a", "__row_filter__", "id <> 2", "")),
+      roles = Seq("a", "admin"), keepCols = Seq("id", "name", "bal"))
+      .orderBy("role", "id")
+      .as[(String, Long, String, Option[Double])].collect()
+    assert(out.toSeq == Seq(
+      ("a", 1L, "al***", None),
+      ("admin", 1L, "alice", Some(10.0)),
+      ("admin", 2L, "bob", Some(20.0))))
+  }
+
+  // --------------------------------------------------------------- hierarchy
+  test("q426: every path walks node -> root with depth segments") {
+    val rows = SparkEntry.queries("q426_hierarchy_paths")(spark, sf)
+      .select("node", "root", "depth", "path").as[(String, String, Long, String)]
+      .collect()
+    assert(rows.forall { case (n, r, d, p) =>
+      val segs = p.split("/")
+      segs.head == n && segs.last == r && segs.length == d + 1
+    })
+    assert(rows.filter(_._1.startsWith("c:")).forall(_._3 == 2L))
+    assert(rows.filter(_._1.startsWith("r:")).forall(r => r._1 == r._2))
+  }
+
+  test("q444: the rank-difference count IS the interval-join count (retired q62 shape)") {
+    // the superlinear original — pair-enumerating binned interval join —
+    // rebuilt inline as the yardstick (q62 now registers q444's plan)
+    val ev = Tables.events(spark, sf)
+    val signups = ev.filter(col("event_type") === "signup")
+      .select(col("event_id"), col("ts"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("ts").as("click_ts"))
+    val viaJoin = binnedRangeJoin(signups, clicks, "ts", "click_ts",
+      before = "30 minutes", after = "30 minutes", binWidth = "1 hour")
+      .groupBy(col("event_id")).agg(count(lit(1)).as("clicks_nearby"))
+      .select("event_id", "clicks_nearby").as[(Long, Long)].collect().toMap
+    val viaRank = SparkEntry.queries("q444_range_count_rank")(spark, sf)
+      .select("event_id", "clicks_nearby").as[(Long, Long)].collect().toMap
+    assert(viaRank == viaJoin, "same semantics, different algorithm — must agree")
+  }
+
+  test("q448: brute-force parity under the density-derived radius") {
+    val out = SparkEntry.queries("q448_radius_scaled")(spark, sf)
+      .select("u_a", "n_neighbors", "min_dist2", "sum_dist2")
+      .as[(Long, Long, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    val users = spark.read.parquet(s"$sf/events.parquet")
+      .filter(col("user_id").isNotNull)
+      .select("user_id").distinct().as[Long].collect()
+    val r2 = math.max(1L, 33750000L / users.length)
+    val pts = users.map(u => u -> ((u * 7919 % 1001) - 500, (u * 104729 % 1001) - 500)).toMap
+    users.foreach { u =>
+      val ds = users.filter(_ != u).map { v =>
+        val (xa, ya) = pts(u); val (xb, yb) = pts(v)
+        (xa - xb) * (xa - xb) + (ya - yb) * (ya - yb)
+      }.filter(_ <= r2)
+      if (ds.isEmpty) assert(!out.contains(u))
+      else {
+        val (n, mn, sm) = out(u)
+        assert(n == ds.length && mn == ds.min && sm == ds.sum,
+          s"user $u: got ($n,$mn,$sm) want (${ds.length},${ds.min},${ds.sum})")
+      }
+    }
+  }
+
+  test("retired q394 shape: fixed-knob grid join equals brute force at r=150") {
+    val users = spark.read.parquet(s"$sf/events.parquet")
+      .filter(col("user_id").isNotNull)
+      .select("user_id").distinct().as[Long].collect()
+    val pts = users.map(u => u -> ((u * 7919 % 1001) - 500, (u * 104729 % 1001) - 500)).toMap
+    // the original fixed 200-cell/150-radius plan, inline
+    val u = spark.read.parquet(s"$sf/events.parquet")
+      .filter(col("user_id").isNotNull)
+      .select(col("user_id")).distinct()
+      .select(col("user_id"),
+        (col("user_id") * 7919L % 1001L - 500L).as("px"),
+        (col("user_id") * 104729L % 1001L - 500L).as("py"))
+    val cell = u
+      .withColumn("cx", expr("(px + 500) div 200"))
+      .withColumn("cy", expr("(py + 500) div 200"))
+    val probe = cell
+      .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
+      .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
+      .select(col("user_id").as("u_a"), col("px").as("xa"), col("py").as("ya"),
+        (col("cx") + col("dx")).as("cx"), (col("cy") + col("dy")).as("cy"))
+    val build = cell.select(col("user_id").as("u_b"), col("px").as("xb"),
+      col("py").as("yb"), col("cx"), col("cy"))
+    val out = probe.join(build, Seq("cx", "cy"))
+      .filter(col("u_a") =!= col("u_b"))
+      .withColumn("dist2", expr("(xa - xb) * (xa - xb) + (ya - yb) * (ya - yb)"))
+      .filter(col("dist2") <= 22500L)
+      .groupBy(col("u_a"))
+      .agg(count(lit(1)).as("n"), min(col("dist2")).as("mn"), sum(col("dist2")).as("sm"))
+      .as[(Long, Long, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    users.foreach { x =>
+      val ds = users.filter(_ != x).map { v =>
+        val (xa, ya) = pts(x); val (xb, yb) = pts(v)
+        (xa - xb) * (xa - xb) + (ya - yb) * (ya - yb)
+      }.filter(_ <= 22500L)
+      if (ds.isEmpty) assert(!out.contains(x))
+      else assert(out(x) == ((ds.length.toLong, ds.min, ds.sum)),
+        s"user $x: got ${out(x)} want (${ds.length},${ds.min},${ds.sum})")
+    }
   }
 }

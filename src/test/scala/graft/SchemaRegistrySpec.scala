@@ -7,16 +7,12 @@ import graft.schema.{Comments, SchemaRegistry}
 class SchemaRegistrySpec extends SparkSpec {
   import spark.implicits._
 
-  test("fromConfig builds an an_*-shaped enrichment table from a config map") {
-    val reg = SchemaRegistry.fromConfig(Map(
-      "an_reddit" -> SchemaRegistry.enrichedColumns,
-      "raw_events" -> Seq("event_id" -> "bigint", "ts" -> "timestamp")))
-    val s = reg.schema("an_reddit")
+  test("default registry builds the an_*-shaped enrichment table from its column config") {
+    val s = SchemaRegistry.default.schema("an_reddit")
     assert(s.fieldNames.toSeq == Seq("comment_id", "original_comment", "cleaned_comment",
       "is_hate_speech", "hate_speech_confidence", "sentiment", "sentiment_score"))
     assert(s("is_hate_speech").dataType == BooleanType)
     assert(s("hate_speech_confidence").dataType == DoubleType)
-    assert(reg.schema("raw_events")("ts").dataType == TimestampType)
   }
 
   test("conform casts, fills missing columns with typed nulls, drops extras, reorders") {

@@ -36,15 +36,6 @@ class SentimentModerationSpec extends SparkSpec {
     assert(out(2) == (0.0, "neutral"))
   }
 
-  test("compoundUdf agrees with the lexicon-join formulation") {
-    val docs = Seq((1L, "good fast crash"), (2L, ""), (3L, "slow slow")).toDF("doc_id", "text")
-    val joined = Sentiment.scoreByLexiconJoin(docs, "doc_id", "text")
-      .orderBy("doc_id").select("sentiment_score").as[Double].collect()
-    val viaUdf = docs.orderBy("doc_id")
-      .select(Sentiment.compoundUdf(col("text")).as("c")).as[Double].collect()
-    joined.zip(viaUdf).foreach { case (a, b) => assert(math.abs(a - b) < 1e-3) }
-  }
-
   test("scoreByLexiconNative agrees bit-for-bit with the join form on testdata + edges") {
     val real = Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
@@ -112,15 +103,5 @@ class SentimentModerationSpec extends SparkSpec {
       (3L, 0.4927, "positive"), (4L, -0.4951, "negative"),
       (5L, -0.3865, "negative"), (6L, 0.6988, "positive"),
       (7L, 0.0, "neutral"), (8L, 0.1695, "positive")))
-  }
-
-  test("expression and mapPartitions classifiers agree") {
-    val df = Seq((1L, "bad slow error crash"), (2L, "fine"), (3L, null.asInstanceOf[String]))
-      .toDF("id", "text")
-    val a = Moderation.classify(df, "text").orderBy("id")
-      .select("hate_speech_confidence").as[Double].collect().toSeq
-    val b = Moderation.classifyPartitioned(df, "text").orderBy("id")
-      .select("hate_speech_confidence").as[Double].collect().toSeq
-    assert(a == b)
   }
 }

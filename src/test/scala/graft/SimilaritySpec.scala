@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -58,12 +59,28 @@ class SimilaritySpec extends SparkSpec {
     assert(out == Seq((2L, 1L), (3L, 2L))) // 2 candidates, ranks 1..2, no padding
   }
 
+  /** Embedding-cosine near-duplicate pairs: all (a, b), a < b, cosine ≥
+    * threshold. Brute-force all-pairs — O(N²) compute and shuffle, so this
+    * is no query path; it is the exact recall yardstick for
+    * [[Similarity.lshBucketNearDup]] (the scale path, which q54 registers).
+    */
+  private def cosineNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
+                                 threshold: Double): DataFrame = {
+    val a = vectors.select(col(idCol).as("id_a"), col(vecCol).as("va"))
+    val b = vectors.select(col(idCol).as("id_b"), col(vecCol).as("vb"))
+    a.crossJoin(b).filter(col("id_a") < col("id_b"))
+      .withColumn("cosine", Similarity.dot("va", "vb") /
+        (Similarity.norm("va") * Similarity.norm("vb")))
+      .filter(col("cosine") >= threshold)
+      .select(col("id_a"), col("id_b"), graft.ops.Num.roundz(col("cosine"), 4).as("cosine"))
+  }
+
   test("cosineNearDupPairs finds only pairs above threshold") {
     val vs = vecsDF(Seq(
       1L -> Array(1f, 0f),
       2L -> Array(0.99f, 0.01f),
       3L -> Array(0f, 1f)))
-    val out = Similarity.cosineNearDupPairs(vs, "vec_id", "embedding", 0.9)
+    val out = cosineNearDupPairs(vs, "vec_id", "embedding", 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
     assert(out == Seq((1L, 2L)))
   }
@@ -433,5 +450,320 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("vec_id").as[(Long, Array[Double])].collect().toSeq
     assert(out.map { case (id, v) => (id, v.toSeq) } ==
       Seq((0L, Seq(-1.0, 0.5)), (1L, Seq(0.25, 0.0))))
+  }
+
+  // -------------------------------------------------------------------- DTW
+  // identical series must cost 0 even under the band; a single spike costs
+  // exactly its |amplitude| once (the alignment absorbs the rest)
+
+  test("q431: DTW matches an independent Scala band-DP bit for bit") {
+    val out = SparkEntry.queries("q431_dtw_distance")(spark, sf)
+      .select("ta", "tb", "dtw").as[(String, String, Long)].collect()
+    assert(out.length == 10, s"5 types -> 10 pairs, got ${out.length}")
+    // symmetry of the metric: (a,b) emitted once with ta < tb
+    assert(out.forall { case (a, b, _) => a < b })
+    // independent reference: rebuild the dense daily series and run the
+    // Sakoe-Chiba w=3 DP in plain Scala; the query must match EXACTLY,
+    // and the banded cost must sit between the unbanded DTW (band only
+    // restricts paths) and the diagonal-path upper bound (always in-band)
+    val byDay = spark.read.parquet(s"$sf/events.parquet")
+      .groupBy(col("event_type"), dayofmonth(col("ts")).cast("long").as("day"))
+      .count().as[(String, Long, Long)].collect()
+      .groupBy(_._1).map { case (t, rs) =>
+        val m = rs.map(r => r._2 -> r._3).toMap
+        t -> (1L to 31L).map(d => m.getOrElse(d, 0L)).toArray
+      }
+    def dtw(a: Array[Long], b: Array[Long], w: Int): Long = {
+      val INF = 1000000000000000L
+      val n = a.length
+      var prev = Array.fill(n)(INF)
+      for (i <- 0 until n) {
+        val cur = Array.fill(n)(INF)
+        for (j <- 0 until n if math.abs(i - j) <= w) {
+          val best =
+            if (i == 0 && j == 0) 0L
+            else Seq(if (i > 0) prev(j) else INF,
+                     if (j > 0) cur(j - 1) else INF,
+                     if (i > 0 && j > 0) prev(j - 1) else INF).min
+          cur(j) = math.abs(a(i) - b(j)) + best
+        }
+        prev = cur
+      }
+      prev(n - 1)
+    }
+    out.foreach { case (ta, tb, got) =>
+      val (a, b) = (byDay(ta), byDay(tb))
+      val banded = dtw(a, b, 3)
+      val unbanded = dtw(a, b, 31)
+      val diag = a.zip(b).map { case (x, y) => math.abs(x - y) }.sum
+      assert(got == banded, s"$ta/$tb: query $got vs reference $banded")
+      assert(unbanded <= banded && banded <= diag,
+        s"$ta/$tb: band ordering violated ($unbanded, $banded, $diag)")
+      assert(dtw(a, a, 3) == 0L, "self-distance must be zero")
+    }
+  }
+
+  // --------------------------------------------------------------- k-center
+  // the radius curve must be non-increasing: adding a center can only
+  // shrink the farthest-point distance
+
+  test("q430: k-center radius curve is non-increasing") {
+    val rad = SparkEntry.queries("q430_kcenter_seeds")(spark, sf)
+      .filter(col("r") > 0).orderBy("r")
+      .select("radius").as[Double].collect()
+    assert(rad.length == 7)
+    rad.sliding(2).foreach { case Array(a, b) =>
+      assert(b <= a + 1e-9, s"radius grew: $a -> $b")
+    }
+  }
+
+  // ------------------------------------------------------------------- MIPS
+  // the norm-augmentation reduction is exact: transformed-cosine argmax
+  // must equal exact-dot argmax on every query (ties aside, which the
+  // fixture's random vectors don't produce)
+
+  test("q436: MIPS-transform argmax agrees with exact dot argmax everywhere") {
+    val rows = SparkEntry.queries("q436_mips_transform")(spark, sf)
+      .select("agree").as[Boolean].collect()
+    assert(rows.length == 8 && rows.forall(identity),
+      s"reduction must be exact on this fixture: ${rows.mkString(",")}")
+  }
+
+  // -------------------------------------------------------------------- LOF
+  // uniform random vectors have no density structure: LOF must hover
+  // around 1 (the inlier value); a fence at [0.5, 2] catches a broken
+  // lrd/reach-dist chain without overfitting the fixture
+
+  test("q438: LOF of uniform-noise probes stays near the inlier value 1") {
+    val lofs = SparkEntry.queries("q438_lof")(spark, sf)
+      .select("lof").as[Double].collect()
+    assert(lofs.length == 32)
+    lofs.foreach(v => assert(v > 0.5 && v < 2.0, s"LOF $v outside sanity fence"))
+  }
+
+  test("q442: sample is id % max(1, n/128) = 0 and every row is sampled") {
+    val n = spark.read.parquet(s"$sf/embeddings.parquet").count()
+    val mod = math.max(1L, n / 128L)
+    val ids = SparkEntry.queries("q442_silhouette_scaled")(spark, sf)
+      .select("vec_id").as[Long].collect()
+    assert(ids.forall(_ % mod == 0), "a non-sample id leaked into the output")
+    assert(ids.length == (0L until n).count(_ % mod == 0),
+      "every sampled point must surface (a and b exist at this SF)")
+  }
+
+  test("q449: the bucketed serving read path returns exactly q58's answer") {
+    val served = SparkEntry.queries("q449_ann_serving")(spark, sf)
+      .select("query_id", "neighbor_id", "rn").as[(Long, Long, Long)]
+      .collect().toSet
+    val direct = SparkEntry.queries("q58_ann_ivf")(spark, sf)
+      .select("query_id", "neighbor_id", "rn").as[(Long, Long, Long)]
+      .collect().toSet
+    assert(served == direct,
+      "the layout changes where the index lives, never what the search returns")
+  }
+
+  test("q450: Lloyd training strictly decreases exact within-cell distortion") {
+    val r = SparkEntry.queries("q450_ivf_train_readout")(spark, sf)
+      .select("variant", "sum_d2", "n_vecs", "hits_at_5")
+      .as[(String, Long, Long, Long)].collect().map(x => x._1 -> x).toMap
+    val n = spark.read.parquet(s"$sf/embeddings.parquet").count()
+    assert(r("seed")._3 == n && r("trained")._3 == n, "every vector assigned")
+    assert(r("trained")._2 < r("seed")._2,
+      s"Lloyd must reduce distortion: ${r("trained")._2} !< ${r("seed")._2}")
+    assert(r("seed")._4 >= 0 && r("trained")._4 >= 0)
+  }
+
+  test("q451: ADC distances equal an in-memory PQ lookup-table reconstruction") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().toMap
+    // codes: per vector, nearest codeword per 16-dim subspace (min L2,
+    // code-id tie-break) over the first-8 codebook — q116's assignment
+    def sub(v: Seq[Double], s: Int): Seq[Double] = v.slice(s * 16, s * 16 + 16)
+    def d2(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    val codebook = (0L until 8L).map(c => c -> emb(c)).toMap
+    def codeOf(v: Seq[Double], s: Int): Long =
+      codebook.toSeq.map { case (c, cv) => (d2(sub(v, s), sub(cv, s)), c) }
+        .min._2
+    // the engine's LUT entries land on the 1e-6 integer grid BEFORE the
+    // sum; reconstruct with the same expansion shape (x·x − 2x·c + c·c),
+    // tolerance ±1 grid unit per subspace for the double-chain difference
+    // between the zip-map reference here and the fixed-order DotProduct
+    def lutQ(q: Seq[Double], s: Int, code: Long): Long = {
+      val qs = sub(q, s); val cs = sub(codebook(code), s)
+      def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).map(t => t._1 * t._2).sum
+      math.round((dot(qs, qs) - 2.0 * dot(qs, cs) + dot(cs, cs)) * 1e6)
+    }
+    val out = SparkEntry.queries("q451_adc_search")(spark, sf)
+      .select("query_id", "neighbor_id", "adc_d2q")
+      .as[(Long, Long, Long)].collect()
+    assert(out.nonEmpty)
+    out.foreach { case (q, n, adc) =>
+      val expect = (0 until 4).map(s => lutQ(emb(q), s, codeOf(emb(n), s))).sum
+      assert(math.abs(adc - expect) <= 4,
+        s"ADC($q,$n)=$adc but LUT reconstruction says $expect")
+    }
+  }
+
+  test("q451: candidates live in the query's probed cell; ranks are 1..5 by distance") {
+    val serving = SparkEntry.queries("q449_ann_serving")(spark, sf)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (q, ns) => q -> ns.map(_._2).toSet }
+    val adc = SparkEntry.queries("q451_adc_search")(spark, sf)
+      .select("query_id", "rn", "neighbor_id", "adc_d2q")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    adc.groupBy(_._1).foreach { case (q, rows) =>
+      val sorted = rows.sortBy(_._2)
+      assert(sorted.map(_._2) == (1L to sorted.length), s"ranks not dense for $q")
+      assert(sorted.map(_._4) == sorted.map(_._4).sorted,
+        s"ADC distances must be non-decreasing in rank for $q")
+      assert(sorted.forall(r => r._3 != q), s"self-match leaked for $q")
+    }
+    // both keys search the SAME serving cells, so q451's candidate pool is
+    // q449's cell membership — any rank-5 cutoff difference aside, every
+    // ADC result must at least come from that cell (checked via q449's
+    // top-5 whenever the cell holds <= 5 non-self members)
+    serving.foreach { case (q, ns) =>
+      if (ns.size < 5)
+        assert(adc.filter(_._1 == q).map(_._3).toSet == ns,
+          s"sub-5 cell must return identical member sets for $q")
+    }
+  }
+
+  test("q451: hits_at_5 equals the overlap with the exact top-5 (q45)") {
+    val truth = SparkEntry.queries("q45_cosine_topk")(spark, sf)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    val adc = SparkEntry.queries("q451_adc_search")(spark, sf)
+      .select("query_id", "neighbor_id", "hit", "hits_at_5")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    adc.foreach { case (q, n, hit, _) =>
+      assert((hit == 1L) == truth((q, n)), s"hit flag wrong for ($q,$n)")
+    }
+    adc.groupBy(_._1).foreach { case (q, rows) =>
+      val expect = rows.count(r => truth((q, r._2))).toLong
+      assert(rows.forall(_._4 == expect), s"hits_at_5 wrong for $q")
+    }
+  }
+
+  test("q453: beam results are reachable, correctly ranked, and honestly scored") {
+    val out = SparkEntry.queries("q453_graph_ann")(spark, sf)
+      .select("query_id", "rn", "neighbor_id", "cos_q", "hit", "hits_at_5")
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    assert(out.nonEmpty)
+    out.groupBy(_._1).foreach { case (q, rows) =>
+      val sorted = rows.sortBy(_._2)
+      assert(sorted.map(_._2) == (1L to sorted.length), s"ranks not dense for $q")
+      assert(sorted.map(_._4).reverse == sorted.map(_._4).reverse.sorted,
+        s"cos_q must be non-increasing in rank for $q")
+      assert(sorted.forall(_._3 != q), s"self-match leaked for $q")
+      assert(rows.forall(_._6 == rows.map(_._5).sum), s"hits_at_5 wrong for $q")
+    }
+    // the recall readout is honest: hits flag exactly the exact-top-5 overlap
+    val truth = SparkEntry.queries("q45_cosine_topk")(spark, sf)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    out.foreach { case (q, _, n, _, hit, _) =>
+      assert((hit == 1L) == truth((q, n)), s"hit flag wrong for ($q,$n)")
+    }
+  }
+
+  test("q453: every emitted node is graph-reachable from the entry within 4 hops") {
+    // rebuild the graph the key builds (LSH cells, within-cell top-4
+    // symmetrized) and BFS from each query's entry — beam results must be
+    // a subset of the 4-hop reachable set (the beam can only prune, never
+    // teleport)
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().toMap
+    val n = emb.size.toLong
+    var cells = 1L
+    while (cells <= n / 32L) cells *= 2
+    val out = SparkEntry.queries("q453_graph_ann")(spark, sf)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSeq
+    // engine-computed cell per node (reuse the registered q443 key's cells:
+    // same signature, same modulus)
+    val cellOf = SparkEntry.queries("q443_semdedup_lsh")(spark, sf)
+      .select("vec_id", "cell").as[(Long, Long)].collect().toMap
+    def cos(a: Long, b: Long): Double = {
+      val (va, vb) = (emb(a), emb(b))
+      val dot = va.zip(vb).map(t => t._1 * t._2).sum
+      dot / (math.sqrt(va.map(x => x * x).sum) * math.sqrt(vb.map(x => x * x).sum))
+    }
+    val byCell = emb.keys.groupBy(cellOf)
+    val adj = scala.collection.mutable.Map.empty[Long, Set[Long]].withDefaultValue(Set.empty)
+    byCell.values.foreach { members =>
+      val m = members.toSeq
+      m.foreach { s =>
+        m.filter(_ != s)
+          .map(d => (math.round(cos(s, d) * 1e6), d))
+          .sortBy { case (cq, d) => (-cq, d) }.take(4)
+          .foreach { case (_, d) => adj(s) += d; adj(d) += s }
+      }
+    }
+    val ids = emb.keys.toSeq.sorted
+    out.groupBy(_._1).foreach { case (q, rows) =>
+      val entry = ids.find(_ != q).get
+      var frontier = Set(entry)
+      var seen = Set(entry)
+      (1 to 4).foreach { _ =>
+        frontier = frontier.flatMap(adj).diff(seen)
+        seen ++= frontier
+      }
+      rows.map(_._2).foreach(nd =>
+        assert(seen(nd) || nd == entry, s"node $nd not 4-hop reachable for query $q"))
+    }
+  }
+
+  test("q458: the rule closes q307's selective-filter recall gap (>= 0.85 every leg)") {
+    val rows = SparkEntry.queries("q458_adaptive_nprobe")(spark, sf)
+      .select("leg", "sel_bp", "nprobe", "recall")
+      .as[(String, Long, Long, Double)].collect()
+    assert(rows.map(_._1).toSeq ==
+      Seq("l1_all", "l2_mild", "l3_half", "l4_narrow"))
+    rows.foreach { case (leg, _, _, recall) =>
+      assert(recall >= 0.85, s"$leg recall $recall — the rule must hold the floor")
+    }
+    // the widths must follow the rule, monotone in selectivity, and the
+    // narrow leg must saturate to the exact pre-filtered fallback
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val total = emb.count()
+    val keptByLeg = Map(
+      "l1_all" -> total,
+      "l2_mild" -> emb.filter(col("label") <= 6).count(),
+      "l3_half" -> emb.filter(col("label") <= 4).count(),
+      "l4_narrow" -> emb.filter(col("label") === 2).count())
+    rows.foreach { case (leg, selBp, np, _) =>
+      val kept = keptByLeg(leg)
+      assert(selBp == 10000L * kept / total, s"$leg sel_bp")
+      assert(np == RegistryAnnDedup.adaptiveNprobe(total, kept, 16L).toLong,
+        s"$leg nprobe must come from the shared rule")
+    }
+    assert(rows.map(_._3).toSeq == rows.map(_._3).toSeq.sorted,
+      "nprobe must widen as selectivity falls")
+    assert(rows.last._3 == 16L, "the narrow leg must saturate to |cells| (exact fallback)")
+  }
+
+  test("q460: the split partitions the hot cell near-evenly and never grows the max") {
+    val rows = SparkEntry.queries("q460_ivf_cell_split")(spark, sf)
+      .select("cell", "cnt", "split_cell", "max_before", "max_after")
+      .as[(Long, Long, Long, Long, Long)].collect()
+    val total = spark.read.parquet(s"$sf/embeddings.parquet").count()
+    assert(rows.map(_._2).sum == total, "cells must partition the corpus")
+    val hot = rows.head._3
+    val a = rows.find(_._1 == hot).get._2
+    val b = rows.find(_._1 == 16 + hot).get._2
+    assert(math.abs(a - b) <= 1, s"KD split must halve: $a vs $b")
+    assert(a + b == rows.head._4, "the two halves must rebuild the hot cell")
+    assert(rows.head._5 == rows.map(_._2).max, "max_after readout")
+    assert(rows.head._5 <= rows.head._4, "a split may never raise the max occupancy")
+  }
+
+  test("q458 rule shape: ceil(2/sel^2) capped at cells, floor at base") {
+    import RegistryAnnDedup.adaptiveNprobe
+    assert(adaptiveNprobe(1000, 1000, 16) == 2)   // sel 1.0  -> base
+    assert(adaptiveNprobe(1000, 700, 16) == 5)    // sel 0.7  -> 4.08 -> 5
+    assert(adaptiveNprobe(1000, 500, 16) == 8)    // sel 0.5  -> 8
+    assert(adaptiveNprobe(1000, 250, 16) == 16)   // sel 0.25 -> 32 -> cap
+    assert(adaptiveNprobe(1000, 0, 16) == 16)     // empty estimate -> exact
   }
 }

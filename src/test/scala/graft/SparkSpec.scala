@@ -29,6 +29,9 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String = SparkSpec.tmpDir(prefix)
 
+  /** The smallest fixture SF (TESTDATA.md), which key-level checks run on. */
+  val sf: String = "/root/testdata/sf0.001"
+
   /** Runs `f` with the session confs `pairs` set, then restores each one's
     * previous value (or unsets it). */
   def withSQLConf[A](pairs: (String, String)*)(f: => A): A = {

@@ -831,4 +831,120 @@ class StatsSpec extends SparkSpec {
       .as[(String, Long, Long, Long, Option[Double], Boolean)].head()
     assert((n, s, v) == (3L, 2L, 48L))
   }
+
+  // ------------------------------------------------------------------- CUSUM
+  // the reflected-walk window identity must equal the direct sequential
+  // recursion S_i = max(0, S_{i-1} + inc_i) — replay it from the key's own
+  // output increments
+
+  test("q421: windowed CUSUM equals the sequential max(0, S+inc) recursion") {
+    val rows = SparkEntry.queries("q421_cusum_control")(spark, sf)
+      .select("event_type", "day", "inc", "s_scaled")
+      .as[(String, String, Long, Long)].collect()
+    rows.groupBy(_._1).foreach { case (_, days) =>
+      var s = 0L
+      days.sortBy(_._2).foreach { case (_, _, inc, got) =>
+        s = math.max(0L, s + inc)
+        assert(got == s, s"CUSUM mismatch: got $got want $s")
+      }
+    }
+  }
+
+  // ----------------------------------------------------------------- pass@k
+  // exact hand case: n=10, c=3 → pass@1 = 0.3, pass@10 = 1.0, and
+  // pass@5 = 1 - C(7,5)/C(10,5) = 1 - 21/252
+
+  test("q420: pass@k matches the order-specified reference fold on every row") {
+    def ref(n: Long, c: Long, k: Int): Double =
+      if (n - c < k) 1.0
+      else 1.0 - (0 until k).foldLeft(1.0) { (acc, i) =>
+        acc * ((n - c - i).toDouble / (n - i).toDouble)
+      }
+    val r = SparkEntry.queries("q420_pass_at_k")(spark, sf)
+      .select("n", "c", "pass_at_1", "pass_at_5", "pass_at_10")
+      .as[(Long, Long, Double, Double, Double)].collect()
+    assert(r.nonEmpty)
+    r.foreach { case (n, c, p1, p5, p10) =>
+      assert(p1 == ref(n, c, 1), s"pass@1 n=$n c=$c")
+      assert(p5 == ref(n, c, 5), s"pass@5 n=$n c=$c")
+      assert(p10 == ref(n, c, 10), s"pass@10 n=$n c=$c")
+      assert(p1 >= 0.0 && p1 <= p5 && p5 <= p10 && p10 <= 1.0)
+    }
+  }
+
+  // ------------------------------------------------------------ Mann-Whitney
+  // U1 + U2 = n1*n2 (doubled: u2_arm1 + u2_arm0 = 2*n1*n2) — recompute the
+  // other arm's U from the same frame by symmetry
+
+  test("q429: doubled U matches the pairwise definition; arms sum to 2*n1*n2") {
+    val r = SparkEntry.queries("q429_mannwhitney_u")(spark, sf)
+      .select("event_type", "n1", "n2", "u2")
+      .as[(String, Long, Long, Long)].collect()
+    assert(r.nonEmpty)
+    // independent recomputation from the raw rows: doubled U(arm1) =
+    // 2*#{x1 > x0} + #{x1 == x0} over every cross-arm pair (the histogram
+    // rank-sum route in the query never enumerates pairs — this does)
+    val byType = spark.read.parquet(s"$sf/events.parquet")
+      .select(col("event_type"),
+        expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"),
+        pmod(col("user_id"), lit(2L)).as("arm"))
+      .as[(String, Long, Long)].collect().groupBy(_._1)
+    def doubledU(win: Seq[Long], lose: Seq[Long]): Long =
+      win.iterator.map { x =>
+        2L * lose.count(x > _) + lose.count(x == _)
+      }.sum
+    r.foreach { case (t, n1, n2, u2) =>
+      val (a1, a0) = byType(t).toSeq.partition(_._3 == 1L)
+      assert(n1 == a1.length && n2 == a0.length, s"$t arm sizes")
+      assert(u2 == doubledU(a1.map(_._2), a0.map(_._2)),
+        s"$t: u2=$u2 disagrees with the pairwise definition")
+      // symmetry identity on the INDEPENDENTLY computed other arm
+      assert(u2 + doubledU(a0.map(_._2), a1.map(_._2)) == 2L * n1 * n2)
+    }
+  }
+
+  test("q457: summary estimates carry the equi-depth rank-error bound") {
+    // a 32-bound equi-depth summary's rank error is < ns/32 per shard, so
+    // the merged estimate's rank error is < N/32 — verify the VALUE at
+    // the estimate's exact rank stays inside that band, and the summary
+    // is exact wherever a shard bound lands on the target rank
+    val out = SparkEntry.queries("q457_quantile_merge")(spark, sf)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(out.map(_._1) == Seq(1L, 5L, 25L, 50L, 75L, 95L, 99L))
+    val cents = Tables.events(spark, sf)
+      .select(expr("CAST(round(value * 100, 0) AS BIGINT)").as("c"))
+      .as[Long].collect().sorted
+    val n = cents.length
+    out.foreach { case (p, est, exact, err) =>
+      assert(err == math.abs(est - exact))
+      assert(exact == cents(((p * n + 99) / 100 - 1).toInt),
+        s"exact side must be the true percentile at p=$p")
+      // est is >= exact (summaries bias up: bound_i sits at the TOP of its
+      // bucket) and its true rank is within N/32 + 8 (one bucket per shard
+      // boundary slack) of the target
+      assert(est >= exact, s"equi-depth upper bounds can't undershoot at p=$p")
+      val targetRank = (p * n + 99) / 100
+      val estRank = cents.count(_ <= est)
+      assert(estRank - targetRank <= n / 32 + 8,
+        s"estimate rank error beyond the summary bound at p=$p")
+    }
+  }
+
+  test("q459: the histogram estimate brackets the exact count within one bucket's mass") {
+    val rows = SparkEntry.queries("q459_histogram_selectivity")(spark, sf)
+      .select("t_cents", "n_total", "est_rows", "actual_rows", "err_bp")
+      .as[(Long, Long, Long, Long, Long)].collect()
+    assert(rows.length == 5)
+    rows.foreach { case (t, n, est, actual, err) =>
+      // the estimator can only be off inside the boundary bucket: its
+      // error is bounded by one bucket's row mass (ceil(n/32))
+      val bucketMass = (n + 31) / 32
+      assert(math.abs(est - actual) <= bucketMass,
+        s"t=$t: |$est - $actual| exceeds one bucket ($bucketMass)")
+      assert(err == math.abs(est - actual) * 10000 / n)
+    }
+    // monotone: higher thresholds keep fewer rows, estimated AND actual
+    assert(rows.map(_._3).toSeq == rows.map(_._3).toSeq.sorted.reverse)
+    assert(rows.map(_._4).toSeq == rows.map(_._4).toSeq.sorted.reverse)
+  }
 }

@@ -52,17 +52,6 @@ class StorageSpec extends SparkSpec {
     }
   }
 
-  test("compact rewrites many small files into few") {
-    val path = s"${tmpDir("store_compact")}/t"
-    (1 to 500).map(i => (i, s"v$i")).toDF("id", "v")
-      .repartition(20).write.mode("overwrite").parquet(path)
-    def parquetFiles = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles == 20)
-    Storage.compact(spark, path, targetFileMB = 256)
-    assert(parquetFiles == 1)
-    assert(spark.read.parquet(path).count() == 500)
-  }
-
   test("JDBC sink round-trips against embedded Derby (reference Postgres parity)") {
     val db = tmpDir("graft_derby") + "/db"
     val url = s"jdbc:derby:$db;create=true"
@@ -72,31 +61,6 @@ class StorageSpec extends SparkSpec {
     val back = Storage.readJdbc(spark, url, "comments")
       .orderBy("id").as[(Long, String)].collect().toSeq
     assert(back == Seq((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
-  test("streaming JDBC sink: checkpointed foreachBatch appends only new files") {
-    val base = tmpDir("graft_jdbc_stream")
-    val src = s"$base/src"; val chk = s"$base/chk"
-    val url = s"jdbc:derby:$base/db;create=true"
-    new java.io.File(src).mkdirs()
-    def addInput(name: String, ids: Seq[Long]): Unit = {
-      val stage = s"$base/stage_$name"
-      ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$src/$name.parquet"))
-    }
-    def runOnce(): Unit =
-      Storage.jdbcStreamSink(spark.readStream.schema("id LONG").parquet(src),
-        url, "stream_sink", chk).awaitTermination()
-    def sinkIds() = Storage.readJdbc(spark, url, "stream_sink")
-      .select("id").as[Long].collect().sorted.toSeq
-
-    addInput("b1", 1L to 4L)
-    runOnce()
-    assert(sinkIds() == (1L to 4L))
-    addInput("b2", 5L to 8L)
-    runOnce() // restart from checkpoint: only the new file lands in the table
-    assert(sinkIds() == (1L to 8L), "restart lost or duplicated rows")
   }
 
   test("saltedCount equals plain count under heavy key skew") {
@@ -292,5 +256,30 @@ class StorageSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() == 60L)
     // idempotent: a second vacuum finds nothing left to delete
     assert(Storage.vacuum(spark, log, 3L) == 0L)
+  }
+
+  // ------------------------------------------------------------------ Merkle
+  // every differing leaf must sit under a differing root: the descent
+  // property that makes log-pruning sound
+
+  test("q428: a differing leaf implies a differing ancestor at every level") {
+    val diffs = SparkEntry.queries("q428_merkle_ranges")(spark, sf)
+      .select("level", "node_id").as[(Long, Long)].collect().toSet
+    val leaves = diffs.filter(_._1 == 0L)
+    assert(leaves.nonEmpty, "planted edits must surface at leaf level")
+    leaves.foreach { case (_, n) =>
+      assert(diffs.contains((1L, n / 32)), s"leaf $n missing level-1 parent")
+      assert(diffs.contains((2L, 0L)), "root must differ")
+    }
+  }
+
+  test("q454: ORC read back prunes to the filtered partition directory") {
+    val df = SparkEntry.queries("q454_orc_roundtrip")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(plan.contains("Format: ORC") || plan.toLowerCase.contains("orc"), plan)
+    assert(plan.contains("PartitionFilters") &&
+      plan.contains("o_orderpriority"), s"partition predicate not pruning:\n$plan")
   }
 }

@@ -282,30 +282,6 @@ class StreamingSpec extends SparkSpec {
       s"restart lost or duplicated sessions: $got")
   }
 
-  test("watermark drops late data beyond the horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String)]
-    val agg = Streaming.watermarkedDailyCounts(
-      mem.toDF().toDF("ts", "k"), "1 hour")
-    val q = agg.writeStream.format("memory").queryName("wm_drop")
-      .outputMode("append").start()
-    mem.addData((Timestamp.valueOf("2024-01-01 10:00:00"), "x"))
-    q.processAllAvailable()
-    // advance watermark far past day 1
-    mem.addData((Timestamp.valueOf("2024-01-05 10:00:00"), "x"))
-    q.processAllAvailable()
-    // this arrival is 4 days late — beyond the 1h horizon, must be dropped
-    mem.addData((Timestamp.valueOf("2024-01-01 11:00:00"), "late"))
-    q.processAllAvailable()
-    mem.addData((Timestamp.valueOf("2024-01-09 10:00:00"), "x")) // flush day 5
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("wm_drop")
-      .select(col("bucket_start").cast("string"), col("cnt")).as[(String, Long)].collect().toMap
-    assert(out("2024-01-01 00:00:00") == 1L) // late row NOT counted
-    assert(out("2024-01-05 00:00:00") == 1L)
-  }
-
   test("live foreachBatch enrich-once appends only unseen keys to the sink") {
     implicit val sqlCtx = spark.sqlContext
     val sink = s"${tmpDir("stream_enrich")}/sink"
@@ -730,6 +706,44 @@ class StreamingSpec extends SparkSpec {
         s"$provider: state must hold at most one entry per key (state=$stateRows, users=$users)")
       assert(stateRows <= liveBound,
         s"$provider: state ($stateRows) must stay within the 2-horizon key bound ($liveBound)")
+    }
+  }
+
+  test("q452: era chains respect the 2-horizon minimum re-emission gap") {
+    // round-17: the replay runs on 3-DAY buckets, so every invariant is
+    // stated on the bucket spine — era days are bucket starts, the horizon
+    // is bucketDays * (spanBuckets div 6) days, and the eviction lag is
+    // two BATCHES = 2 * bucketDays days
+    val bucketDays = 3L
+    val out = SparkEntry.queries("q452_stream_ttl_dedup")(spark, dir)
+      .as[(Long, java.sql.Date, Long)].collect().toSeq
+    val evDays = Tables.events(spark, dir).filter(col("user_id").isNotNull)
+      .select(col("user_id"), to_date(col("ts")).as("d"))
+      .distinct().as[(Long, java.sql.Date)].collect()
+      .groupBy(_._1).map { case (u, ds) => u -> ds.map(_._2.toLocalDate.toEpochDay).sorted }
+    val d0 = evDays.values.flatten.min
+    val ev = evDays.map { case (u, ds) =>
+      u -> ds.map(d => d0 + bucketDays * ((d - d0) / bucketDays)).distinct.sorted
+    }
+    val spanBuckets = {
+      val all = ev.values.flatten
+      (all.max - all.min) / bucketDays + 1
+    }
+    val h = bucketDays * math.max(1L, spanBuckets / 6)
+    out.groupBy(_._1).foreach { case (u, rows) =>
+      val eras = rows.sortBy(_._3).map(_._2.toLocalDate.toEpochDay)
+      // era 1 is the user's first event bucket
+      assert(eras.head == ev(u).head, s"user $u era 1 is not the first event bucket")
+      // consecutive eras are at least 2h + 2 buckets apart: eviction needs
+      // the lag-2 watermark (max bucket two batches back, minus h) to
+      // reach the previous era's expiry (era bucket + h)
+      eras.sliding(2).foreach {
+        case Seq(a, b) => assert(b - a >= 2 * h + 2 * bucketDays,
+          s"user $u eras $a -> $b violate the eviction lag bound")
+        case _ =>
+      }
+      // every era day is one of the user's event buckets
+      assert(eras.forall(ev(u).contains), s"user $u emitted a non-event bucket")
     }
   }
 }

@@ -56,17 +56,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(g > 0.7 && j < 0.4 && g > j)
   }
 
-  test("approxDistinct tracks exact distinct within the sketch error bound") {
-    val events = Tables.events(spark, "/root/testdata/sf0.01")
-    val approx = TextAnalysis.approxDistinct(events, "event_type", "user_id")
-      .orderBy("event_type").as[(String, Long)].collect().toMap
-    val exact = events.groupBy("event_type").agg(countDistinct(col("user_id")).as("u"))
-      .orderBy("event_type").as[(String, Long)].collect().toMap
-    exact.foreach { case (k, e) =>
-      assert(math.abs(approx(k) - e).toDouble / e < 0.05, s"$k approx=${approx(k)} exact=$e")
-    }
-  }
-
   test("corpusStats aggregates per language") {
     val docs = Seq((1L, "aa bb", "en"), (2L, "cc", "en"), (3L, "dd ee ff", "de"))
       .toDF("doc_id", "text", "lang")

@@ -52,12 +52,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out == Timestamp.valueOf("1970-01-01 00:00:00"))
   }
 
-  test("nullGuard falls back on null and empty") {
-    val df = Seq(Some("x"), Some(""), None).toDF("s")
-    val out = df.select(nullGuard(col("s")).as("r")).as[String].collect().toSeq
-    assert(out == Seq("x", "not a string", "not a string"))
-  }
-
   test("jsonGetLong extracts with default") {
     val df = Seq("""{"score": 7}""", """{"other": 1}""", "not json").toDF("j")
     val out = df.select(jsonGetLong(col("j"), "score", 0).as("r")).as[Long].collect().toSeq
