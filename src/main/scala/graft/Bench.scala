@@ -15,14 +15,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = localSession()
 
     def materialize(name: String, dir: String): Boolean =
       try {
@@ -186,5 +179,22 @@ object Bench {
         }
     } catch { case _: Throwable => () } // never fail the bench over provenance
     spark.stop()
+  }
+
+  /** Local cores of the runners' session: `SPARK_GRAFT_CPUS`, default 4. */
+  private val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The local session both runners (Bench, [[Verify]]) run in:
+    * [[cpus]] cores and as many shuffle partitions, UTC, no UI, WARN
+    * logging. */
+  private[graft] def localSession(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

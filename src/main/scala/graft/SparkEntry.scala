@@ -405,30 +405,53 @@ object SparkEntry {
       s"list_transform(range(1, length($e) + 1), i -> CAST(ord(substr($e, CAST(i AS INT), 1)) AS BIGINT)), " +
       s"(a, b) -> (a * 31 + b) % 1000000007) END)"
 
-  /** DuckDB twin of [[Dedup.minHashNearDup]] (shingleK=2, numHashes=16,
-    * bands=8, threshold 0.25) — generated with the same [[HashFamily]]
-    * constants the Spark side uses, so signatures/bands/estimates agree
-    * bit-for-bit. */
-  private[graft] val q44Sql: String = {
+  /** q44's shingle → Karp–Rabin → 16-hash MinHash signature chain over a
+    * `corpus(<id>, text)` CTE or table: `ws`, `sh(<id>, shingle)`, `rh` and
+    * `sig(<id>, h0..h15)`, generated with the same [[HashFamily]] constants
+    * the Spark side uses ([[Dedup.minHashNearDup]]: shingleK=2,
+    * numHashes=16), so signatures agree bit-for-bit. */
+  private[graft] def minHashSigCtes(corpus: String, id: String = "doc_id"): String = {
     import graft.functions.HashFamily
     val sigCols = (0 until 16).map(i => s"min(${HashFamily.affineSql(i, "x")}) AS h$i").mkString(", ")
+    s"""ws AS (SELECT $id, regexp_split_to_array(lower(text), '\\s+') AS w FROM $corpus),
+       |sh AS (SELECT DISTINCT $id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
+       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
+       |rh AS (SELECT $id, ${krSql("shingle")} AS x FROM sh),
+       |sig AS (SELECT $id, $sigCols FROM rh GROUP BY $id)""".stripMargin
+  }
+
+  /** [[minHashSigCtes]] over `corpus(doc_id, text)` plus the 8-band split
+    * `banded(doc_id, band, bkey)`. The string band key (h₂ᵦ || ',' || h₂ᵦ₊₁)
+    * buckets identically to the engine's injective numeric band_hash. */
+  private[graft] def minHashBandCtes(corpus: String): String = {
     val bandKey = (0 until 8).map(b => s"WHEN $b THEN h${2 * b} || ',' || h${2 * b + 1}").mkString(" ")
     val bandVals = (0 until 8).map(b => s"($b)").mkString(", ")
-    val agree = (0 until 16).map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM documents),
-       |sh AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-       |rh AS (SELECT doc_id, ${krSql("shingle")} AS x FROM sh),
-       |sig AS (SELECT doc_id, $sigCols FROM rh GROUP BY doc_id),
+    s"""${minHashSigCtes(corpus)},
        |banded AS (SELECT doc_id, t.band, CASE t.band $bandKey END AS bkey
-       |  FROM sig, (VALUES $bandVals) AS t(band)),
-       |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
+       |  FROM sig, (VALUES $bandVals) AS t(band))""".stripMargin
+  }
+
+  /** Signature agreement of the pair `sig a` × `sig b`: the number of the 16
+    * hashes on which the two signatures agree. */
+  private[graft] val minHashAgreeSql: String =
+    (0 until 16).map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
+
+  /** The band-collision candidates `cand(id_a, id_b)` (id_a < id_b) of a
+    * [[minHashBandCtes]] chain and their signature agreement
+    * `est(id_a, id_b, agree)`. */
+  private[graft] val minHashPairCtes: String =
+    s"""cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
        |  FROM banded x JOIN banded y ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-       |est AS (SELECT id_a, id_b, ($agree) AS agree
-       |  FROM cand JOIN sig a ON a.doc_id = cand.id_a JOIN sig b ON b.doc_id = cand.id_b)
+       |est AS (SELECT id_a, id_b, ($minHashAgreeSql) AS agree
+       |  FROM cand JOIN sig a ON a.doc_id = cand.id_a JOIN sig b ON b.doc_id = cand.id_b)""".stripMargin
+
+  /** DuckDB twin of [[Dedup.minHashNearDup]] (shingleK=2, numHashes=16,
+    * bands=8, threshold 0.25). */
+  private[graft] val q44Sql: String =
+    s"""WITH ${minHashBandCtes("documents")},
+       |$minHashPairCtes
        |SELECT id_a, id_b, (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) AS est_jaccard FROM est
        |WHERE (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) >= 0.25 ORDER BY id_a, id_b""".stripMargin
-  }
 
   /** Connected-component labels for oracle SQL WITHOUT a recursive
     * transitive closure. The classic `conn(a, b)` CTE enumerates every
@@ -458,46 +481,178 @@ object SparkEntry {
          |  ) GROUP BY node)""".stripMargin
     }).mkString(",\n")
 
+  /** q246's IVF+PQ search chain up to the ADC distances: the
+    * [[ivfAssignCtes]] cells over the centroid slice [centLo, centHi), the
+    * eight queries' nprobe = 2 candidates `cand(query_id, neighbor_id)`,
+    * the [[pqLutCtes]] over the codebook slice [cbLo, cbHi), and
+    * `sc2(query_id, neighbor_id, adist_tb)`, each candidate's summed LUT
+    * distance. */
+  private[graft] def ivfPqAdcCtes(centLo: Int, centHi: Int, cbLo: Int, cbHi: Int): String =
+    s"""${ivfAssignCtes(centLo, centHi)},
+       |qprobe AS (SELECT vec_id AS query_id, cell FROM cells
+       |  WHERE vec_id < 8 AND crn <= 2),
+       |cand AS (SELECT DISTINCT qp.query_id, a.vec_id AS neighbor_id
+       |  FROM qprobe qp JOIN asg a ON a.cell = qp.cell
+       |  WHERE a.vec_id <> qp.query_id),
+       |${pqLutCtes(cbLo, cbHi)},
+       |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
+       |    CAST(sum(l.d) AS BIGINT) AS adist_tb
+       |  FROM codes k
+       |  JOIN lut l ON l.sub = k.sub AND l.code = k.code
+       |  JOIN cand cd ON cd.query_id = l.query_id AND cd.neighbor_id = k.vec_id
+       |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2)""".stripMargin
+
+  /** q44's pairs, in scope as `pairs(id_a, id_b)`, as the symmetric edge
+    * list `e(src, dst)` that [[minLabelCc]] expects. */
+  private[graft] val nearDupEdgesCte: String =
+    """e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
+      |      UNION SELECT id_b, id_a FROM pairs)""".stripMargin
+
+  /** The near-dup component preamble: q44's pairs, their symmetric edges,
+    * the [[minLabelCc]] rounds and `lab(<node>, component)`, the converged
+    * component-min label per paired doc (`node` is the select item that
+    * names the doc column, e.g. `node` or `node AS a`). */
+  private[graft] def nearDupComponentCtes(node: String): String =
+    s"""pairs AS MATERIALIZED ($q44Sql),
+       |$nearDupEdgesCte,
+       |${minLabelCc()},
+       |lab AS (SELECT $node, lab AS component FROM l$ccRounds)""".stripMargin
+
+  /** The exact-cosine top-5 truth `tr(query_id, neighbor_id)` of the eight
+    * queries vec_id < 8 over `vecs(vec_id, vv)`: every other vector scored
+    * (`bs`), ties to the smaller neighbor — the ANN recall keys' truth. */
+  private[graft] val cosTruthCtes: String =
+    """qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
+      |bs AS (SELECT query_id, vec_id AS neighbor_id,
+      |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
+      |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
+      |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+      |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+      |  FROM bs) WHERE rn <= 5)""".stripMargin
+
+  /** q45's exact-cosine scoring CTE `<name>(<cols>, cosine)` over the pairs
+    * `from` yields, a query side carrying `qv` and a corpus side carrying
+    * `cv` (e.g. `c CROSS JOIN q WHERE neighbor_id <> query_id`). */
+  private[graft] def exactCosCte(name: String, from: String,
+      cols: String = "query_id, neighbor_id"): String =
+    s"""$name AS (SELECT $cols,
+       |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
+       |  FROM $from)""".stripMargin
+
+  /** The cosine of two DOUBLE[] expressions. */
+  private[graft] def cosSql(a: String, b: String): String =
+    s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
+
+  /** IVF cosine cell ranking `<name>(<cols>, crn)`: every `vecs(vec_id, vv)`
+    * row against every centroid of `<cent>(cell, cv)`, ties to the smaller
+    * cell — crn = 1 is the row's cell, crn ≤ nprobe its probed cells. */
+  private[graft] def ivfCellCte(name: String, cent: String,
+      cols: String = "x.vec_id, c.cell"): String =
+    s"""$name AS (SELECT $cols,
+       |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
+       |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
+       |    c.cell) AS crn
+       |  FROM vecs x CROSS JOIN $cent c)""".stripMargin
+
+  /** vec_id in [lo, hi). */
+  private def idSlice(lo: Int, hi: Int): String =
+    if (lo == 0) s"vec_id < $hi" else s"vec_id >= $lo AND vec_id < $hi"
+
+  /** IVF cells over the centroid slice vec_id in [lo, hi) of `vecs`:
+    * `cent(cell, cv)`, the [[ivfCellCte]] ranking `cells` and the
+    * assignment `asg(vec_id, cell)` (crn = 1). */
+  private[graft] def ivfAssignCtes(lo: Int, hi: Int): String =
+    s"""cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE ${idSlice(lo, hi)}),
+       |${ivfCellCte("cells", "cent")},
+       |asg AS (SELECT vec_id, cell FROM cells WHERE crn = 1)""".stripMargin
+
+  /** q58's IVF top-5 search: the first 16 vectors as centroids, the
+    * corpus `asg` = the [[ivfCellCte]] rows passing `corpus` (crn = 1, the
+    * assigned cell, plus any filter), the probes `q(query_id, qv, cell)`
+    * read from `probes`, and cosine top-5 inside the probed cells. */
+  private[graft] def ivfTopKSql(corpus: String, probes: String): String =
+    s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+       |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+       |${ivfCellCte("scored", "cent", "x.vec_id, x.vv, c.cell")},
+       |asg AS (SELECT vec_id, vv, cell FROM scored WHERE $corpus),
+       |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM $probes),
+       |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
+       |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
+       |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
+       |r AS (SELECT query_id, neighbor_id, cosine,
+       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
+       |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
+       |ORDER BY query_id, rn""".stripMargin
+
+  /** PQ subspace split `<name>(<keys>, sub, <out>)`: the 64-dim `<vec>`
+    * of each `<src>` row as 4 sub-vectors of 16 dims. */
+  private[graft] def pqSplitCte(name: String, src: String, keys: String, vec: String,
+      out: String = "xs", subType: String = "BIGINT"): String =
+    s"""$name AS (SELECT $keys, CAST(s.i AS $subType) AS sub,
+       |    $vec[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS $out
+       |  FROM $src, LATERAL (SELECT unnest(range(0, 4)) AS i) s)""".stripMargin
+
+  /** [[pqSplitCte]] of `vecs(vec_id, vv)`: `subs(vec_id, sub, xs)`. */
+  private[graft] val pqSubsCte: String = pqSplitCte("subs", "vecs", "vec_id", "vv")
+
+  /** PQ codebook `cb<sfx>(code, sub, cs)`, the `<subs>` sub-vectors of
+    * vec_id in [lo, hi), and the code ranking `sc<sfx>`: every
+    * (vec_id, sub) against that codebook by the L2 expansion
+    * x·x − 2·x·c + c·c, ties to the smaller code (rn = 1 is the code). */
+  private[graft] def pqAssignCtes(lo: Int, hi: Int, sfx: String = "",
+      subs: String = "subs"): String =
+    s"""cb$sfx AS (SELECT vec_id AS code, sub, xs AS cs FROM $subs WHERE ${idSlice(lo, hi)}),
+       |sc$sfx AS (SELECT x.vec_id, x.sub, c.code,
+       |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
+       |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
+       |      + list_dot_product(c.cs, c.cs), c.code) AS rn
+       |  FROM $subs x JOIN cb$sfx c USING (sub))""".stripMargin
+
+  /** [[pqAssignCtes]] plus `codes<sfx>(vec_id, sub, code)`. */
+  private[graft] def pqCodeCtes(lo: Int, hi: Int, sfx: String = "",
+      subs: String = "subs"): String =
+    s"""${pqAssignCtes(lo, hi, sfx, subs)},
+       |codes$sfx AS (SELECT vec_id, sub, code FROM sc$sfx WHERE rn = 1)""".stripMargin
+
+  /** The ADC lookup table `lut<sfx>(<keys>, sub, code, d)`: per query
+    * sub-vector of `<q>(…, sub, qs)` and codeword of `cb<sfx>`, the squared
+    * L2 distance clamped at 0 on the 1e-5 integer grid. */
+  private[graft] def pqLutCte(sfx: String = "", q: String = "q",
+      keys: String = "q.query_id"): String =
+    s"""lut$sfx AS (SELECT $keys, c.sub, c.code,
+       |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
+       |      - 2 * list_dot_product(q.qs, c.cs)
+       |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
+       |  FROM $q JOIN cb$sfx c USING (sub))""".stripMargin
+
+  /** q224's PQ chain up to the ADC lookup table: [[pqSubsCte]],
+    * [[pqCodeCtes]] over the codebook slice [lo, hi), the eight queries'
+    * sub-vectors `q(query_id, sub, qs)` and [[pqLutCte]]. */
+  private[graft] def pqLutCtes(lo: Int, hi: Int): String =
+    s"""$pqSubsCte,
+       |${pqCodeCtes(lo, hi)},
+       |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
+       |${pqLutCte()}""".stripMargin
+
   /** q348's oracle: q44's signature/band CTEs, then per-band bucket-size
-    * aggregation — the exact candidate-pair volume Σ n(n−1)/2. The string
-    * band key (h₂ᵦ || ',' || h₂ᵦ₊₁) buckets identically to the engine's
-    * injective numeric band_hash (h·p + h' with h < p). */
-  private[graft] val q348Sql: String = {
-    import graft.functions.HashFamily
-    val sigCols = (0 until 16).map(i => s"min(${HashFamily.affineSql(i, "x")}) AS h$i").mkString(", ")
-    val bandKey = (0 until 8).map(b => s"WHEN $b THEN h${2 * b} || ',' || h${2 * b + 1}").mkString(" ")
-    val bandVals = (0 until 8).map(b => s"($b)").mkString(", ")
-    s"""WITH ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM documents),
-       |sh AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-       |rh AS (SELECT doc_id, ${krSql("shingle")} AS x FROM sh),
-       |sig AS (SELECT doc_id, $sigCols FROM rh GROUP BY doc_id),
-       |banded AS (SELECT doc_id, t.band, CASE t.band $bandKey END AS bkey
-       |  FROM sig, (VALUES $bandVals) AS t(band)),
+    * aggregation — the exact candidate-pair volume Σ n(n−1)/2. */
+  private[graft] val q348Sql: String =
+    s"""WITH ${minHashBandCtes("documents")},
        |bk AS (SELECT band, bkey, count(*) AS n FROM banded GROUP BY 1, 2)
        |SELECT CAST(band AS BIGINT) AS band, CAST(count(*) AS BIGINT) AS n_buckets,
        |  CAST(max(n) AS BIGINT) AS max_bucket,
        |  CAST(sum(n * (n - 1) // 2) AS BIGINT) AS candidate_pairs
        |FROM bk GROUP BY band ORDER BY band""".stripMargin
-  }
 
   /** Per-SOURCE sketch comparison (q293): q44's signature CTEs grouped by
     * source instead of doc, pairwise agreement on the sources frame. */
-  private[graft] val q293Sql: String = {
-    import graft.functions.HashFamily
-    val sigCols = (0 until 16).map(i => s"min(${HashFamily.affineSql(i, "x")}) AS h$i").mkString(", ")
-    val agree = (0 until 16).map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH ws AS (SELECT source, regexp_split_to_array(lower(text), '\\s+') AS w FROM documents),
-       |sh AS (SELECT DISTINCT source, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-       |rh AS (SELECT source, ${krSql("shingle")} AS x FROM sh),
-       |sig AS (SELECT source, $sigCols FROM rh GROUP BY source),
-       |p AS (SELECT a.source AS src_a, b.source AS src_b, ($agree) AS agree
+  private[graft] val q293Sql: String =
+    s"""WITH ${minHashSigCtes("documents", "source")},
+       |p AS (SELECT a.source AS src_a, b.source AS src_b, ($minHashAgreeSql) AS agree
        |  FROM sig a JOIN sig b ON a.source < b.source)
        |SELECT src_a, src_b, CAST(agree AS BIGINT) AS agree,
        |  (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) AS est_jaccard
        |FROM p ORDER BY src_a, src_b""".stripMargin
-  }
 
   /** q295's oracle: the q288 moment CTEs (both triangle halves), the same
     * 1e-5-unit correlation quantization, and 8 UNROLLED power-iteration
@@ -604,39 +759,43 @@ object SparkEntry {
        |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
   }
 
+  /** One selectivity leg of the filtered-ANN recall oracles (q307, q458),
+    * the leg's predicate applied to the corpus side as the engine applies
+    * it: `iv_<leg>`, the top-5 of the probes `<q>(query_id, qv, cell)` over
+    * the assigned corpus `asg(vec_id, label, vv, cell)`, and `tr_<leg>`, the
+    * exact top-5 of the eight queries over `vecs`. */
+  private[graft] def filteredLegCtes(leg: String, pred: String => String, q: String): String =
+    s"""iv_$leg AS (SELECT query_id, neighbor_id FROM (
+       |    SELECT q.query_id, a.vec_id AS neighbor_id,
+       |      row_number() OVER (PARTITION BY q.query_id ORDER BY ${cosSql("q.qv", "a.vv")} DESC, a.vec_id) AS rn
+       |    FROM $q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id WHERE ${pred("a")})
+       |  WHERE rn <= 5),
+       |tr_$leg AS (SELECT query_id, neighbor_id FROM (
+       |    SELECT qq.vec_id AS query_id, n.vec_id AS neighbor_id,
+       |      row_number() OVER (PARTITION BY qq.vec_id ORDER BY ${cosSql("qq.vv", "n.vv")} DESC, n.vec_id) AS rn
+       |    FROM vecs qq CROSS JOIN vecs n
+       |    WHERE qq.vec_id < 8 AND n.vec_id <> qq.vec_id AND ${pred("n")})
+       |  WHERE rn <= 5)""".stripMargin
+
   /** q307's oracle: q302's IVF structure (assignment crn = 1, probes
     * crn ≤ 2) and the brute-force truth, each repeated per selectivity
     * leg with the predicate applied to the SAME side the engine applies
     * it (the filtered corpus) — generated by the same leg list the Spark
     * side runs. */
   private[graft] val q307Sql: String = {
-    val cos = (a: String, b: String) =>
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
     val legs = Seq[(String, String => String)](
       ("all", _ => "1 = 1"),
       ("half", a => s"$a.label <= 1"),
       ("quarter", a => s"$a.label = 2"))
     val legCtes = legs.map { case (name, pred) =>
-      s"""iv_$name AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT q.query_id, a.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY ${cos("q.qv", "a.vv")} DESC, a.vec_id) AS rn
-         |    FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id WHERE ${pred("a")})
-         |  WHERE rn <= 5),
-         |tr_$name AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT qq.vec_id AS query_id, n.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY qq.vec_id ORDER BY ${cos("qq.vv", "n.vv")} DESC, n.vec_id) AS rn
-         |    FROM vecs qq CROSS JOIN vecs n
-         |    WHERE qq.vec_id < 8 AND n.vec_id <> qq.vec_id AND ${pred("n")})
-         |  WHERE rn <= 5),
+      s"""${filteredLegCtes(name, pred, "q")},
          |h_$name AS (SELECT '$name' AS leg, count(*) AS hits FROM iv_$name i
          |  JOIN tr_$name t ON t.query_id = i.query_id AND t.neighbor_id = i.neighbor_id)""".stripMargin
     }.mkString(",\n")
     val union = legs.map { case (name, _) => s"SELECT * FROM h_$name" }.mkString(" UNION ALL ")
     s"""WITH vecs AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-       |scored AS (SELECT x.vec_id, x.vv, c.cell,
-       |  row_number() OVER (PARTITION BY x.vec_id ORDER BY ${cos("x.vv", "c.cv")} DESC, c.cell) AS crn
-       |  FROM vecs x CROSS JOIN cent c),
+       |${ivfCellCte("scored", "cent", "x.vec_id, x.vv, c.cell")},
        |asg AS (SELECT s0.vec_id, v0.label, s0.vv, s0.cell FROM scored s0
        |  JOIN vecs v0 ON v0.vec_id = s0.vec_id WHERE s0.crn = 1),
        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored WHERE vec_id < 8 AND crn <= 2),
@@ -706,28 +865,16 @@ object SparkEntry {
     * (existing < 400) × (new ≥ 400) — the incremental probe contract (the
     * index side never self-joins; no ordering filter because the id sets
     * are disjoint). */
-  private[graft] val q141Sql: String = {
-    import graft.functions.HashFamily
-    val sigCols = (0 until 16).map(i => s"min(${HashFamily.affineSql(i, "x")}) AS h$i").mkString(", ")
-    val bandKey = (0 until 8).map(b => s"WHEN $b THEN h${2 * b} || ',' || h${2 * b + 1}").mkString(" ")
-    val bandVals = (0 until 8).map(b => s"($b)").mkString(", ")
-    val agree = (0 until 16).map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM documents),
-       |sh AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-       |rh AS (SELECT doc_id, ${krSql("shingle")} AS x FROM sh),
-       |sig AS (SELECT doc_id, $sigCols FROM rh GROUP BY doc_id),
-       |banded AS (SELECT doc_id, t.band, CASE t.band $bandKey END AS bkey
-       |  FROM sig, (VALUES $bandVals) AS t(band)),
+  private[graft] val q141Sql: String =
+    s"""WITH ${minHashBandCtes("documents")},
        |cand AS (SELECT DISTINCT x.doc_id AS existing_id, y.doc_id AS new_id
        |  FROM banded x JOIN banded y ON x.band = y.band AND x.bkey = y.bkey
        |  WHERE x.doc_id < 400 AND y.doc_id >= 400),
-       |est AS (SELECT existing_id, new_id, ($agree) AS agree
+       |est AS (SELECT existing_id, new_id, ($minHashAgreeSql) AS agree
        |  FROM cand JOIN sig a ON a.doc_id = cand.existing_id JOIN sig b ON b.doc_id = cand.new_id)
        |SELECT existing_id, new_id, (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) AS est_jaccard FROM est
        |WHERE (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) >= 0.25
        |ORDER BY existing_id, new_id""".stripMargin
-  }
 
   /** q230's WITH-chain (shared with q238): multinomial Naive Bayes trained
     * on doc_id % 5 <> 0 — Laplace-smoothed micro-nat weights quantized ONCE
@@ -795,28 +942,14 @@ object SparkEntry {
     * exact-Jaccard truth restricted to the planted pair mapping (a keyed
     * join, never all-pairs), recall = caught/truth — the dedup family's
     * eval loop, mirroring what q212/q225 do for ANN. */
-  private[graft] val q233Sql: String = {
-    import graft.functions.HashFamily
-    val sigCols = (0 until 16).map(i => s"min(${HashFamily.affineSql(i, "x")}) AS h$i").mkString(", ")
-    val bandKey = (0 until 8).map(b => s"WHEN $b THEN h${2 * b} || ',' || h${2 * b + 1}").mkString(" ")
-    val bandVals = (0 until 8).map(b => s"($b)").mkString(", ")
-    val agree = (0 until 16).map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
+  private[graft] val q233Sql: String =
     s"""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id < 300
        |  UNION ALL SELECT doc_id + 100000,
        |    array_to_string(wv[1:(len(wv) + 1) // 2], ' ')
        |  FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS wv
        |    FROM documents WHERE doc_id < 300 AND doc_id % 3 = 0)),
-       |ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM corp),
-       |sh AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-       |rh AS (SELECT doc_id, ${krSql("shingle")} AS x FROM sh),
-       |sig AS (SELECT doc_id, $sigCols FROM rh GROUP BY doc_id),
-       |banded AS (SELECT doc_id, t.band, CASE t.band $bandKey END AS bkey
-       |  FROM sig, (VALUES $bandVals) AS t(band)),
-       |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-       |  FROM banded x JOIN banded y ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-       |est AS (SELECT id_a, id_b, ($agree) AS agree
-       |  FROM cand JOIN sig a ON a.doc_id = cand.id_a JOIN sig b ON b.doc_id = cand.id_b),
+       |${minHashBandCtes("corp")},
+       |$minHashPairCtes,
        |mh AS (SELECT id_a, id_b FROM est
        |  WHERE (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) >= 0.25),
        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -831,7 +964,6 @@ object SparkEntry {
        |  CAST((SELECT count(*) FROM caught) AS BIGINT) AS n_caught,
        |  (round(CAST((SELECT count(*) FROM caught) AS DOUBLE) /
        |    (SELECT count(*) FROM truth), 4) + 0.0) AS recall""".stripMargin
-  }
 
   /** q234's oracle: [[bpeEncodeOracleSql]]'s WITH-chain up to the encoded
     * corpus, then tokens-per-word fertility per language — the tokenizer
@@ -895,11 +1027,7 @@ object SparkEntry {
     * recursive CTE, then Newman Q with the HUGEINT numerator
     * Σ(4·e_c·m − d_c²) over the exact 4m². */
   private[graft] val q250Sql: String =
-    s"""WITH pairs AS MATERIALIZED ($q44Sql),
-       |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-       |      UNION SELECT id_b, id_a FROM pairs),
-       |${minLabelCc()},
-|lab AS (SELECT node, lab AS component FROM l$ccRounds),
+    s"""WITH ${nearDupComponentCtes("node")},
        |m AS (SELECT count(*) AS m FROM pairs),
        |deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1),
        |ec AS (SELECT l.component, count(*) AS e_c
@@ -920,11 +1048,7 @@ object SparkEntry {
     * exact text dedup, and minhash near-dup components (keep one doc per
     * component; docs outside the pair graph survive untouched). */
   private[graft] val q255Sql: String =
-    s"""WITH pairs AS MATERIALIZED ($q44Sql),
-       |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-       |      UNION SELECT id_b, id_a FROM pairs),
-       |${minLabelCc()},
-|lab AS (SELECT node, lab AS component FROM l$ccRounds),
+    s"""WITH ${nearDupComponentCtes("node")},
        |n AS (SELECT count(*) AS docs FROM documents),
        |ex AS (SELECT count(DISTINCT text) AS survivors FROM documents),
        |nd AS (SELECT count(*) AS nodes, count(DISTINCT component) AS comps FROM lab),
@@ -993,57 +1117,35 @@ object SparkEntry {
     * cm/10⁶ double lists, the q58-shape cosine search (assign crn = 1,
     * probe crn ≤ 1, cosine over the raw vectors inside matched cells,
     * top-5) run under each, and per-query recall vs the q45 truth. */
-  private[graft] val q258Sql: String =
+  private[graft] val q258Sql: String = {
+    // one nprobe=1 search leg per centroid set: cl0 (seeds), cl2 (trained)
+    val legs = Seq(0, 2).map { t =>
+      s"""${ivfCellCte(s"cc$t", s"cl$t")},
+         |sc$t AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
+         |    ${cosSql("q.vv", "n.vv")} AS cosine
+         |  FROM (SELECT vec_id, cell FROM cc$t WHERE vec_id < 8 AND crn <= 1) qp
+         |  JOIN (SELECT vec_id, cell FROM cc$t WHERE crn = 1) a ON a.cell = qp.cell
+         |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id
+         |  WHERE a.vec_id <> qp.vec_id),
+         |ap$t AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+         |  FROM sc$t) WHERE rn <= 5),
+         |h$t AS (SELECT tr.query_id, count(ap$t.neighbor_id) AS hits FROM tr
+         |  LEFT JOIN ap$t ON ap$t.query_id = tr.query_id AND ap$t.neighbor_id = tr.neighbor_id
+         |  GROUP BY 1)""".stripMargin
+    }.mkString(",\n")
     s"""WITH $lloydCtes,
        |vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
        |cl0 AS (SELECT cell, list(cm / 1000000.0 ORDER BY dim) AS cv FROM c0 GROUP BY 1),
        |cl2 AS (SELECT cell, list(cm / 1000000.0 ORDER BY dim) AS cv FROM c2 GROUP BY 1),
-       |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
-       |bs AS (SELECT query_id, vec_id AS neighbor_id,
-       |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-       |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
-       |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |  FROM bs) WHERE rn <= 5),
-       |cc0 AS (SELECT x.vec_id, c.cell,
-       |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-       |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-       |    c.cell) AS crn
-       |  FROM vecs x CROSS JOIN cl0 c),
-       |sc0 AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
-       |    list_dot_product(q.vv, n.vv) / (sqrt(list_dot_product(q.vv, q.vv)) * sqrt(list_dot_product(n.vv, n.vv))) AS cosine
-       |  FROM (SELECT vec_id, cell FROM cc0 WHERE vec_id < 8 AND crn <= 1) qp
-       |  JOIN (SELECT vec_id, cell FROM cc0 WHERE crn = 1) a ON a.cell = qp.cell
-       |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id
-       |  WHERE a.vec_id <> qp.vec_id),
-       |ap0 AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |  FROM sc0) WHERE rn <= 5),
-       |h0 AS (SELECT tr.query_id, count(ap0.neighbor_id) AS hits FROM tr
-       |  LEFT JOIN ap0 ON ap0.query_id = tr.query_id AND ap0.neighbor_id = tr.neighbor_id
-       |  GROUP BY 1),
-       |cc2 AS (SELECT x.vec_id, c.cell,
-       |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-       |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-       |    c.cell) AS crn
-       |  FROM vecs x CROSS JOIN cl2 c),
-       |sc2 AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
-       |    list_dot_product(q.vv, n.vv) / (sqrt(list_dot_product(q.vv, q.vv)) * sqrt(list_dot_product(n.vv, n.vv))) AS cosine
-       |  FROM (SELECT vec_id, cell FROM cc2 WHERE vec_id < 8 AND crn <= 1) qp
-       |  JOIN (SELECT vec_id, cell FROM cc2 WHERE crn = 1) a ON a.cell = qp.cell
-       |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id
-       |  WHERE a.vec_id <> qp.vec_id),
-       |ap2 AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |  FROM sc2) WHERE rn <= 5),
-       |h2 AS (SELECT tr.query_id, count(ap2.neighbor_id) AS hits FROM tr
-       |  LEFT JOIN ap2 ON ap2.query_id = tr.query_id AND ap2.neighbor_id = tr.neighbor_id
-       |  GROUP BY 1)
+       |$cosTruthCtes,
+       |$legs
        |SELECT h0.query_id, CAST(h0.hits AS BIGINT) AS hits_seed,
        |  (round(h0.hits / 5.0, 4) + 0.0) AS recall_seed,
        |  CAST(h2.hits AS BIGINT) AS hits_trained,
        |  (round(h2.hits / 5.0, 4) + 0.0) AS recall_trained
        |FROM h0 JOIN h2 USING (query_id) ORDER BY query_id""".stripMargin
+  }
 
   /** q268's oracle: q256's shared IVF+PQ chain (disjoint cent/codebook),
     * the probe/candidate/ADC/rank CTEs instantiated per nprobe, recall
@@ -1051,39 +1153,10 @@ object SparkEntry {
     * textually identical machinery. */
   private[graft] val q268Sql: String = {
     val shared =
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
-        |bs AS (SELECT query_id, vec_id AS neighbor_id,
-        |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-        |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
-        |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM bs) WHERE rn <= 5),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs
-        |  WHERE vec_id >= 100 AND vec_id < 116),
-        |cells AS (SELECT x.vec_id, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, cell FROM cells WHERE crn = 1),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs
-        |  WHERE vec_id >= 200 AND vec_id < 208),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
-        |lut AS (SELECT q.query_id, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM q JOIN cb c USING (sub))""".stripMargin
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |$cosTruthCtes,
+         |${ivfAssignCtes(100, 116)},
+         |${pqLutCtes(200, 208)}""".stripMargin
     val legs = Seq(1, 2, 4, 8).map { np =>
       s"""qp$np AS (SELECT vec_id AS query_id, cell FROM cells
          |  WHERE vec_id < 8 AND crn <= $np),
@@ -1113,32 +1186,13 @@ object SparkEntry {
     * (disjoint slice 200..200+K), recall summed over the query set. */
   private[graft] val q269Sql: String = {
     val shared =
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
-        |bs AS (SELECT query_id, vec_id AS neighbor_id,
-        |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-        |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
-        |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM bs) WHERE rn <= 5),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8)""".stripMargin
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |$cosTruthCtes,
+         |$pqSubsCte,
+         |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8)""".stripMargin
     val legs = Seq(4, 8, 16, 32).map { kk =>
-      s"""cb$kk AS (SELECT vec_id AS code, sub, xs AS cs FROM subs
-         |  WHERE vec_id >= 200 AND vec_id < ${200 + kk}),
-         |sc$kk AS (SELECT x.vec_id, x.sub, c.code,
-         |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-         |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-         |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-         |  FROM subs x JOIN cb$kk c USING (sub)),
-         |codes$kk AS (SELECT vec_id, sub, code FROM sc$kk WHERE rn = 1),
-         |lut$kk AS (SELECT q.query_id, c.sub, c.code,
-         |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-         |      - 2 * list_dot_product(q.qs, c.cs)
-         |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-         |  FROM q JOIN cb$kk c USING (sub)),
+      s"""${pqCodeCtes(200, 200 + kk, kk.toString)},
+         |${pqLutCte(kk.toString)},
          |sc2_$kk AS (SELECT l.query_id, k.vec_id AS neighbor_id,
          |    CAST(sum(l.d) AS BIGINT) AS adist_tb
          |  FROM codes$kk k JOIN lut$kk l ON l.sub = k.sub AND l.code = k.code
@@ -1160,12 +1214,7 @@ object SparkEntry {
   /** q254's oracle: q233's machinery with the three-cohort planted corpus
     * and recall grouped by the exact-Jaccard band (floor(4j), clamped to
     * 3) — the empirical LSH collision curve. */
-  private[graft] val q254Sql: String = {
-    import graft.functions.HashFamily
-    val sigCols = (0 until 16).map(i => s"min(${HashFamily.affineSql(i, "x")}) AS h$i").mkString(", ")
-    val bandKey = (0 until 8).map(b => s"WHEN $b THEN h${2 * b} || ',' || h${2 * b + 1}").mkString(" ")
-    val bandVals = (0 until 8).map(b => s"($b)").mkString(", ")
-    val agree = (0 until 16).map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)").mkString(" + ")
+  private[graft] val q254Sql: String =
     s"""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id < 300
        |  UNION ALL SELECT doc_id + 100000,
        |    CASE WHEN doc_id % 3 = 0 THEN array_to_string(wv[1:(len(wv) + 1) // 2], ' ')
@@ -1173,17 +1222,8 @@ object SparkEntry {
        |         ELSE text || ' zzplantdup' END
        |  FROM (SELECT doc_id, text, regexp_split_to_array(text, '\\s+') AS wv
        |    FROM documents WHERE doc_id < 300)),
-       |ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS w FROM corp),
-       |sh AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-       |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-       |rh AS (SELECT doc_id, ${krSql("shingle")} AS x FROM sh),
-       |sig AS (SELECT doc_id, $sigCols FROM rh GROUP BY doc_id),
-       |banded AS (SELECT doc_id, t.band, CASE t.band $bandKey END AS bkey
-       |  FROM sig, (VALUES $bandVals) AS t(band)),
-       |cand AS (SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-       |  FROM banded x JOIN banded y ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id),
-       |est AS (SELECT id_a, id_b, ($agree) AS agree
-       |  FROM cand JOIN sig a ON a.doc_id = cand.id_a JOIN sig b ON b.doc_id = cand.id_b),
+       |${minHashBandCtes("corp")},
+       |$minHashPairCtes,
        |mh AS (SELECT id_a, id_b FROM est
        |  WHERE (round(CAST(agree AS DOUBLE) / 16, 4) + 0.0) >= 0.25),
        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
@@ -1204,7 +1244,6 @@ object SparkEntry {
        |    AS recall
        |FROM tt LEFT JOIN caught ON caught.jband = tt.jband
        |ORDER BY band""".stripMargin
-  }
 
   /** DuckDB twin of [[Dedup.simHash]]: 64 affine-parity bit generators over
     * the token Karp–Rabin fingerprint, fingerprint assembled by adding the
@@ -1386,29 +1425,23 @@ object SparkEntry {
        |       WHEN doc_id <> keeper THEN 'duplicate' END AS drop_reason
        |FROM p LEFT JOIN kk USING (text) ORDER BY doc_id""".stripMargin
 
-  /** q204 oracle (shared: q218 ranks these scores into terciles). Same
-    * map-side positional bigrams, same mixture text; the per-doc fold
-    * orders by the distinct bigram. */
   /** The IVF occupancy-audit SQL — shared verbatim by q283 (batch index
     * health) and q292 (streaming ingest): the streaming gate's proof is
     * that the accumulated per-batch index reproduces EXACTLY this
     * batch-assignment table. */
   private[graft] val q283Sql: String =
-    """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-      |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-      |cells AS (SELECT x.vec_id, c.cell,
-      |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-      |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-      |    c.cell) AS crn
-      |  FROM vecs x CROSS JOIN cent c),
-      |asg AS (SELECT vec_id, cell FROM cells WHERE crn = 1),
-      |t AS (SELECT count(*) AS n FROM asg)
-      |SELECT CAST(cell AS BIGINT) AS cell,
-      |  CAST(count(*) AS BIGINT) AS n_vecs,
-      |  CAST((10000 * count(*)) // t.n AS BIGINT) AS share_bp,
-      |  CAST((1000 * count(*) * 16) // t.n AS BIGINT) AS load_milli
-      |FROM asg, t GROUP BY cell, t.n ORDER BY cell""".stripMargin
+    s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+       |${ivfAssignCtes(0, 16)},
+       |t AS (SELECT count(*) AS n FROM asg)
+       |SELECT CAST(cell AS BIGINT) AS cell,
+       |  CAST(count(*) AS BIGINT) AS n_vecs,
+       |  CAST((10000 * count(*)) // t.n AS BIGINT) AS share_bp,
+       |  CAST((1000 * count(*) * 16) // t.n AS BIGINT) AS load_milli
+       |FROM asg, t GROUP BY cell, t.n ORDER BY cell""".stripMargin
 
+  /** q204 oracle (shared: q218 ranks these scores into terciles). Same
+    * map-side positional bigrams, same mixture text; the per-doc fold
+    * orders by the distinct bigram. */
   private[graft] val q204Sql: String =
     """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
         |    t -> length(t) > 0) AS arr FROM documents),

@@ -335,29 +335,14 @@ object Multimodal {
 
   /** Deterministic WAV synthesis: 16-bit LE mono PCM, constant amplitude —
     * a well-formed RIFF container [[WavDecoder]] genuinely parses. */
-  def synthWav(nSamples: Int, amplitude: Short, sampleRate: Int): Array[Byte] = {
-    val dataLen = nSamples * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1) // PCM
-      .putShort(1) // mono
-      .putInt(sampleRate)
-      .putInt(sampleRate * 2) // byte rate
-      .putShort(2)            // block align
-      .putShort(16)           // bits per sample
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < nSamples) { bb.putShort(amplitude); i += 1 }
-    bb.array()
-  }
+  def synthWav(nSamples: Int, amplitude: Short, sampleRate: Int): Array[Byte] =
+    synthWavSamples(Array.fill(nSamples)(amplitude), sampleRate)
 
-  /** [[synthWav]]'s per-sample variant: 16-bit LE mono PCM with caller-
-    * supplied samples. INPUT SYNTHESIS for the segmentation gate — the
-    * operator under test is [[silenceSegments]], which genuinely parses the
-    * RIFF container these bytes form. */
+  /** The WAV writer: 16-bit LE mono PCM with caller-supplied samples
+    * ([[synthWav]] is its constant-amplitude case). INPUT SYNTHESIS for
+    * the segmentation gate — the operator under test is
+    * [[silenceSegments]], which genuinely parses the RIFF container these
+    * bytes form. */
   def synthWavSamples(samples: Array[Short], sampleRate: Int): Array[Byte] = {
     val dataLen = samples.length * 2
     val bb = java.nio.ByteBuffer.allocate(44 + dataLen)

@@ -243,6 +243,21 @@ object Similarity {
       .select(col(idCol), col(vecCol), col("cell"))
   }
 
+  /** IVF index-health audit of a 16-cell assignment `asg(cell, ...)`: per
+    * cell its vector count, its share of the corpus in floor bp and its
+    * load vs the balanced ideal |corpus|/16 in milli-units (1000 = ideal).
+    * One |cells|-sized aggregate; the corpus total rides a broadcast. */
+  def ivfOccupancy(asg: DataFrame): DataFrame = {
+    val total = asg.agg(count(lit(1)).as("__n"))
+    asg.groupBy(col("cell"))
+      .agg(count(lit(1)).as("n_vecs"))
+      .crossJoin(broadcast(total))
+      .select(col("cell").cast("long").as("cell"),
+        col("n_vecs").cast("long").as("n_vecs"),
+        expr("(10000 * n_vecs) div __n").cast("long").as("share_bp"),
+        expr("(1000 * n_vecs * 16) div __n").cast("long").as("load_milli"))
+  }
+
   // ------------------------------------------------- micro-exact Lloyd (IVF)
 
   /** (id, dim, micro component) per vector — the [[nearestCentroid]]

@@ -1665,32 +1665,28 @@ private[graft] object RegistryAnalyticsGraph {
     "q212_recall_at_k" ->
       // truth = q45's brute-force top-5; approx = q58's nprobe=1 IVF top-5;
       // recall = |intersection| / k per query
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, vv AS qv FROM vecs WHERE vec_id < 8),
-        |bs AS (SELECT query_id, vec_id AS neighbor_id,
-        |  list_dot_product(qv, vv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-        |  FROM vecs CROSS JOIN q WHERE vec_id <> query_id),
-        |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM bs) WHERE rn <= 5),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
-        |qa AS (SELECT vec_id AS query_id, vv AS qv, cell FROM asg WHERE vec_id < 8),
-        |s2 AS (SELECT qa.query_id, a.vec_id AS neighbor_id,
-        |  list_dot_product(qa.qv, a.vv) / (sqrt(list_dot_product(qa.qv, qa.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM qa JOIN asg a ON a.cell = qa.cell AND a.vec_id <> qa.query_id),
-        |ap AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM s2) WHERE rn <= 5)
-        |SELECT tr.query_id, CAST(count(ap.neighbor_id) AS BIGINT) AS hits,
-        |  (round(count(ap.neighbor_id) / 5.0, 4) + 0.0) AS recall
-        |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
-        |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, vv AS qv FROM vecs WHERE vec_id < 8),
+         |bs AS (SELECT query_id, vec_id AS neighbor_id,
+         |  list_dot_product(qv, vv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(vv, vv))) AS cosine
+         |  FROM vecs CROSS JOIN q WHERE vec_id <> query_id),
+         |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+         |  FROM bs) WHERE rn <= 5),
+         |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+         |${ivfCellCte("scored", "cent", "x.vec_id, x.vv, c.cell")},
+         |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
+         |qa AS (SELECT vec_id AS query_id, vv AS qv, cell FROM asg WHERE vec_id < 8),
+         |s2 AS (SELECT qa.query_id, a.vec_id AS neighbor_id,
+         |  list_dot_product(qa.qv, a.vv) / (sqrt(list_dot_product(qa.qv, qa.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
+         |  FROM qa JOIN asg a ON a.cell = qa.cell AND a.vec_id <> qa.query_id),
+         |ap AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+         |  FROM s2) WHERE rn <= 5)
+         |SELECT tr.query_id, CAST(count(ap.neighbor_id) AS BIGINT) AS hits,
+         |  (round(count(ap.neighbor_id) / 5.0, 4) + 0.0) AS recall
+         |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
+         |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin,
     "q213_mann_kendall" ->
       // S and the tie-corrected 18·Var(S) exact; flag S²·18·10⁴ > 38416·var18
       """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day,
@@ -2107,67 +2103,31 @@ private[graft] object RegistryAnalyticsGraph {
       // q116's assignment CTEs verbatim, then the ADC chain: per-query LUT
       // of round(d·1e5) longs (clamped at 0 like q209), exact long sums,
       // (adist_tb, neighbor_id) ranking
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
-        |lut AS (SELECT q.query_id, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM q JOIN cb c USING (sub)),
-        |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-        |    CAST(sum(l.d) AS BIGINT) AS adist_tb
-        |  FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
-        |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
-        |r AS (SELECT query_id, neighbor_id, adist_tb,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2)
-        |SELECT query_id, neighbor_id, adist_tb, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |${pqLutCtes(0, 8)},
+         |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
+         |    CAST(sum(l.d) AS BIGINT) AS adist_tb
+         |  FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
+         |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
+         |r AS (SELECT query_id, neighbor_id, adist_tb,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2)
+         |SELECT query_id, neighbor_id, adist_tb, rn FROM r WHERE rn <= 5
+         |ORDER BY query_id, rn""".stripMargin,
     "q225_pq_recall" ->
       // q45's truth CTE + q224's ADC chain, joined per (query, neighbor)
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
-        |bs AS (SELECT query_id, vec_id AS neighbor_id,
-        |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-        |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
-        |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM bs) WHERE rn <= 5),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
-        |lut AS (SELECT q.query_id, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM q JOIN cb c USING (sub)),
-        |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-        |    CAST(sum(l.d) AS BIGINT) AS adist_tb
-        |  FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
-        |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
-        |ap AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2) WHERE rn <= 5)
-        |SELECT tr.query_id, CAST(count(ap.neighbor_id) AS BIGINT) AS hits,
-        |  (round(count(ap.neighbor_id) / 5.0, 4) + 0.0) AS recall
-        |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
-        |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin)
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |$cosTruthCtes,
+         |${pqLutCtes(0, 8)},
+         |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
+         |    CAST(sum(l.d) AS BIGINT) AS adist_tb
+         |  FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
+         |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
+         |ap AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2) WHERE rn <= 5)
+         |SELECT tr.query_id, CAST(count(ap.neighbor_id) AS BIGINT) AS hits,
+         |  (round(count(ap.neighbor_id) / 5.0, 4) + 0.0) AS recall
+         |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
+         |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin)
 }

@@ -1127,16 +1127,7 @@ private[graft] object RegistryAnnDedup {
       // (broadcast centroids), one |cells|-sized aggregate.
       val emb = T(s, dir, "embeddings")
       val cent = emb.filter(col("vec_id") < 16)
-      val asg = Similarity.ivfAssign(emb, cent, "vec_id", "embedding")
-      val total = asg.agg(count(lit(1)).as("__n"))
-      asg.groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_vecs"))
-        .crossJoin(broadcast(total))
-        .select(col("cell").cast("long").as("cell"),
-          col("n_vecs").cast("long").as("n_vecs"),
-          expr("(10000 * n_vecs) div __n").cast("long").as("share_bp"),
-          // occupancy vs the balanced ideal, milli-units: 1000 = ideal
-          expr("(1000 * n_vecs * 16) div __n").cast("long").as("load_milli"))
+      Similarity.ivfOccupancy(Similarity.ivfAssign(emb, cent, "vec_id", "embedding"))
         .orderBy("cell")
     }),
     "q284_sq8_search" -> ((s, dir) => {
@@ -2162,8 +2153,6 @@ private[graft] object RegistryAnnDedup {
     * engine runs — kept² ceil-division against 2·total², capped at the 16
     * cells — per selectivity leg. */
   private val q458Sql: String = {
-    val cos = (a: String, b: String) =>
-      s"list_dot_product($a, $b) / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)))"
     val legs = Seq[(String, String => String)](
       ("l1_all", _ => "1 = 1"),
       ("l2_mild", a => s"$a.label <= 6"),
@@ -2175,17 +2164,7 @@ private[graft] object RegistryAnnDedup {
          |    (10000 * k.kept) // t.n AS sel_bp FROM tot t, k_$name k),
          |q_$name AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored
          |  WHERE vec_id < 8 AND crn <= (SELECT np FROM np_$name)),
-         |iv_$name AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT q.query_id, a.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY ${cos("q.qv", "a.vv")} DESC, a.vec_id) AS rn
-         |    FROM q_$name q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id WHERE ${pred("a")})
-         |  WHERE rn <= 5),
-         |tr_$name AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT qq.vec_id AS query_id, n.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY qq.vec_id ORDER BY ${cos("qq.vv", "n.vv")} DESC, n.vec_id) AS rn
-         |    FROM vecs qq CROSS JOIN vecs n
-         |    WHERE qq.vec_id < 8 AND n.vec_id <> qq.vec_id AND ${pred("n")})
-         |  WHERE rn <= 5),
+         |${filteredLegCtes(name, pred, s"q_$name q")},
          |h_$name AS (SELECT '$name' AS leg, np.sel_bp, np.np AS nprobe, count(*) AS hits
          |  FROM iv_$name i JOIN tr_$name t ON t.query_id = i.query_id AND t.neighbor_id = i.neighbor_id,
          |    np_$name np GROUP BY 1, 2, 3)""".stripMargin
@@ -2194,9 +2173,7 @@ private[graft] object RegistryAnnDedup {
     s"""WITH vecs AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
        |tot AS (SELECT count(*) AS n FROM vecs),
        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-       |scored AS (SELECT x.vec_id, x.vv, c.cell,
-       |  row_number() OVER (PARTITION BY x.vec_id ORDER BY ${cos("x.vv", "c.cv")} DESC, c.cell) AS crn
-       |  FROM vecs x CROSS JOIN cent c),
+       |${ivfCellCte("scored", "cent", "x.vec_id, x.vv, c.cell")},
        |asg AS (SELECT s0.vec_id, v0.label, s0.vv, s0.cell FROM scored s0
        |  JOIN vecs v0 ON v0.vec_id = s0.vec_id WHERE s0.crn = 1),
        |$legCtes,
@@ -2281,46 +2258,13 @@ private[graft] object RegistryAnnDedup {
     "q246_ivfpq_search" ->
       // q58's cosine cell CTEs (assignment crn = 1, probe crn <= 2) bound
       // the candidates; q224's LUT/ADC chain scores only those pairs
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |cells AS (SELECT x.vec_id, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, cell FROM cells WHERE crn = 1),
-        |qprobe AS (SELECT vec_id AS query_id, cell FROM cells
-        |  WHERE vec_id < 8 AND crn <= 2),
-        |cand AS (SELECT DISTINCT qp.query_id, a.vec_id AS neighbor_id
-        |  FROM qprobe qp JOIN asg a ON a.cell = qp.cell
-        |  WHERE a.vec_id <> qp.query_id),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
-        |lut AS (SELECT q.query_id, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM q JOIN cb c USING (sub)),
-        |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-        |    CAST(sum(l.d) AS BIGINT) AS adist_tb
-        |  FROM codes k
-        |  JOIN lut l ON l.sub = k.sub AND l.code = k.code
-        |  JOIN cand cd ON cd.query_id = l.query_id AND cd.neighbor_id = k.vec_id
-        |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
-        |r AS (SELECT query_id, neighbor_id, adist_tb,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2)
-        |SELECT query_id, neighbor_id, adist_tb, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |${ivfPqAdcCtes(0, 16, 0, 8)},
+         |r AS (SELECT query_id, neighbor_id, adist_tb,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2)
+         |SELECT query_id, neighbor_id, adist_tb, rn FROM r WHERE rn <= 5
+         |ORDER BY query_id, rn""".stripMargin,
     "q247_best_threshold" ->
       // the same histogram + descending cumulative identity; max micro-F1
       // then max threshold among ties
@@ -2405,82 +2349,37 @@ private[graft] object RegistryAnnDedup {
     "q256_ivfpq_recall" ->
       // q246's composed IVF+PQ chain with DISJOINT slices (cent 100-115,
       // codebook 200-207) + q225's truth/recall join
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
-        |bs AS (SELECT query_id, vec_id AS neighbor_id,
-        |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-        |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
-        |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-        |  FROM bs) WHERE rn <= 5),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs
-        |  WHERE vec_id >= 100 AND vec_id < 116),
-        |cells AS (SELECT x.vec_id, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, cell FROM cells WHERE crn = 1),
-        |qprobe AS (SELECT vec_id AS query_id, cell FROM cells
-        |  WHERE vec_id < 8 AND crn <= 2),
-        |cand AS (SELECT DISTINCT qp.query_id, a.vec_id AS neighbor_id
-        |  FROM qprobe qp JOIN asg a ON a.cell = qp.cell
-        |  WHERE a.vec_id <> qp.query_id),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs
-        |  WHERE vec_id >= 200 AND vec_id < 208),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
-        |lut AS (SELECT q.query_id, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM q JOIN cb c USING (sub)),
-        |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-        |    CAST(sum(l.d) AS BIGINT) AS adist_tb
-        |  FROM codes k
-        |  JOIN lut l ON l.sub = k.sub AND l.code = k.code
-        |  JOIN cand cd ON cd.query_id = l.query_id AND cd.neighbor_id = k.vec_id
-        |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
-        |ap AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adist_tb, neighbor_id) AS rn FROM sc2) WHERE rn <= 5)
-        |SELECT tr.query_id, CAST(count(ap.neighbor_id) AS BIGINT) AS hits,
-        |  (round(count(ap.neighbor_id) / 5.0, 4) + 0.0) AS recall
-        |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
-        |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |$cosTruthCtes,
+         |${ivfPqAdcCtes(100, 116, 200, 208)},
+         |ap AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adist_tb, neighbor_id) AS rn FROM sc2) WHERE rn <= 5)
+         |SELECT tr.query_id, CAST(count(ap.neighbor_id) AS BIGINT) AS hits,
+         |  (round(count(ap.neighbor_id) / 5.0, 4) + 0.0) AS recall
+         |FROM tr LEFT JOIN ap ON ap.query_id = tr.query_id AND ap.neighbor_id = tr.neighbor_id
+         |GROUP BY tr.query_id ORDER BY tr.query_id""".stripMargin,
     "q257_ivf_train" -> q257Sql,
     "q449_ann_serving" ->
       // q58's oracle verbatim: the serving layout changes WHERE the index
       // lives (a bucketed catalog table), never what the search returns
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
-        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM asg WHERE vec_id < 8),
-        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
-    "q450_ivf_train_readout" ->
+      ivfTopKSql("crn = 1", "asg WHERE vec_id < 8"),
+    "q450_ivf_train_readout" -> {
       // the k=16 micro-Lloyd chain (shared lloydCtesK generator), exact
       // seed/trained distortions from the chain's own argmin rows, and the
       // q258-shape nprobe=1 searches under raw-seed vs rebuilt-trained
       // centroid vectors, each scored against the exact top-5 truth
+      val legs = Seq(0, 2).map { t =>
+        s"""s$t AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
+           |    ${cosSql("q.vv", "n.vv")} AS cosine
+           |  FROM (SELECT vec_id, cell FROM cc$t WHERE vec_id < 8 AND crn <= 1) qp
+           |  JOIN (SELECT vec_id, cell FROM cc$t WHERE crn = 1) a ON a.cell = qp.cell
+           |    AND a.vec_id <> qp.vec_id
+           |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id),
+           |t$t AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+           |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
+           |  FROM s$t) WHERE rn <= 5)""".stripMargin
+      }.mkString(",\n")
       s"""WITH ${lloydCtesK(16)},
          |dd3 AS (SELECT c.vec_id, ct.cell, sum((c.vm - ct.cm) * (c.vm - ct.cm)) AS d2
          |  FROM comp c JOIN c2 ct USING (dim) GROUP BY 1, 2),
@@ -2488,41 +2387,10 @@ private[graft] object RegistryAnnDedup {
          |vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
          |cl0 AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
          |cl2 AS (SELECT cell, list(cm / 1000000.0 ORDER BY dim) AS cv FROM c2 GROUP BY 1),
-         |qv AS (SELECT vec_id AS query_id, vv AS qvv FROM vecs WHERE vec_id < 8),
-         |bs AS (SELECT query_id, vec_id AS neighbor_id,
-         |  list_dot_product(qvv, vv) / (sqrt(list_dot_product(qvv, qvv)) * sqrt(list_dot_product(vv, vv))) AS cosine
-         |  FROM vecs CROSS JOIN qv WHERE vec_id <> query_id),
-         |tr AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-         |  FROM bs) WHERE rn <= 5),
-         |cc0 AS (SELECT x.vec_id, c.cell,
-         |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-         |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-         |    c.cell) AS crn
-         |  FROM vecs x CROSS JOIN cl0 c),
-         |cc2 AS (SELECT x.vec_id, c.cell,
-         |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-         |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-         |    c.cell) AS crn
-         |  FROM vecs x CROSS JOIN cl2 c),
-         |s0 AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    list_dot_product(q.vv, n.vv) / (sqrt(list_dot_product(q.vv, q.vv)) * sqrt(list_dot_product(n.vv, n.vv))) AS cosine
-         |  FROM (SELECT vec_id, cell FROM cc0 WHERE vec_id < 8 AND crn <= 1) qp
-         |  JOIN (SELECT vec_id, cell FROM cc0 WHERE crn = 1) a ON a.cell = qp.cell
-         |    AND a.vec_id <> qp.vec_id
-         |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id),
-         |t0 AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-         |  FROM s0) WHERE rn <= 5),
-         |s2 AS (SELECT qp.vec_id AS query_id, a.vec_id AS neighbor_id,
-         |    list_dot_product(q.vv, n.vv) / (sqrt(list_dot_product(q.vv, q.vv)) * sqrt(list_dot_product(n.vv, n.vv))) AS cosine
-         |  FROM (SELECT vec_id, cell FROM cc2 WHERE vec_id < 8 AND crn <= 1) qp
-         |  JOIN (SELECT vec_id, cell FROM cc2 WHERE crn = 1) a ON a.cell = qp.cell
-         |    AND a.vec_id <> qp.vec_id
-         |  JOIN vecs q ON q.vec_id = qp.vec_id JOIN vecs n ON n.vec_id = a.vec_id),
-         |t2 AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-         |  FROM s2) WHERE rn <= 5),
+         |$cosTruthCtes,
+         |${ivfCellCte("cc0", "cl0")},
+         |${ivfCellCte("cc2", "cl2")},
+         |$legs,
          |h0 AS (SELECT count(*) AS hits FROM t0 JOIN tr USING (query_id, neighbor_id)),
          |h2 AS (SELECT count(*) AS hits FROM t2 JOIN tr USING (query_id, neighbor_id))
          |SELECT 'seed' AS variant,
@@ -2534,54 +2402,43 @@ private[graft] object RegistryAnnDedup {
          |  (SELECT CAST(sum(md) AS BIGINT) FROM b3),
          |  (SELECT CAST(count(*) AS BIGINT) FROM b3),
          |  (SELECT CAST(hits AS BIGINT) FROM h2)
-         |ORDER BY variant""".stripMargin,
+         |ORDER BY variant""".stripMargin
+    },
     "q451_adc_search" ->
       // q449's cell assignment + q116's code assignment, the per-query LUT
       // on the 1e-6 integer grid, 4 lookups summed per candidate, then the
       // exact-float top-5 truth for the recall readout
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
-        |subs AS (SELECT vec_id, CAST(s.i AS INT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |lut AS (SELECT qq.vec_id AS query_id, c.sub, c.code,
-        |    CAST(round((list_dot_product(qq.xs, qq.xs) - 2 * list_dot_product(qq.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs)) * 1000000, 0) AS BIGINT) AS lq
-        |  FROM subs qq JOIN cb c USING (sub) WHERE qq.vec_id < 8),
-        |q AS (SELECT vec_id AS query_id, cell FROM asg WHERE vec_id < 8),
-        |cand AS (SELECT q.query_id, a.vec_id AS neighbor_id, c.sub, c.code
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id
-        |  JOIN codes c ON c.vec_id = a.vec_id),
-        |adc AS (SELECT query_id, neighbor_id, CAST(sum(lq) AS BIGINT) AS adc_d2q
-        |  FROM cand JOIN lut USING (query_id, sub, code) GROUP BY 1, 2),
-        |r AS (SELECT query_id, neighbor_id, adc_d2q,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_d2q, neighbor_id) AS BIGINT) AS rn
-        |  FROM adc),
-        |bs AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    list_dot_product(a.vv, b.vv) / (sqrt(list_dot_product(a.vv, a.vv)) * sqrt(list_dot_product(b.vv, b.vv))) AS cosine
-        |  FROM vecs a CROSS JOIN vecs b WHERE a.vec_id < 8 AND b.vec_id <> a.vec_id),
-        |truth AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS trn
-        |  FROM bs) WHERE trn <= 5)
-        |SELECT r.query_id, r.rn, r.neighbor_id, r.adc_d2q,
-        |  CAST(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS hit,
-        |  CAST(sum(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END)
-        |    OVER (PARTITION BY r.query_id) AS BIGINT) AS hits_at_5
-        |FROM r LEFT JOIN truth t ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
-        |WHERE r.rn <= 5 ORDER BY r.query_id, r.rn""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+         |${ivfCellCte("scored", "cent", "x.vec_id, x.vv, c.cell")},
+         |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
+         |${pqSplitCte("subs", "vecs", "vec_id", "vv", subType = "INT")},
+         |${pqCodeCtes(0, 8)},
+         |lut AS (SELECT qq.vec_id AS query_id, c.sub, c.code,
+         |    CAST(round((list_dot_product(qq.xs, qq.xs) - 2 * list_dot_product(qq.xs, c.cs)
+         |      + list_dot_product(c.cs, c.cs)) * 1000000, 0) AS BIGINT) AS lq
+         |  FROM subs qq JOIN cb c USING (sub) WHERE qq.vec_id < 8),
+         |q AS (SELECT vec_id AS query_id, cell FROM asg WHERE vec_id < 8),
+         |cand AS (SELECT q.query_id, a.vec_id AS neighbor_id, c.sub, c.code
+         |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id
+         |  JOIN codes c ON c.vec_id = a.vec_id),
+         |adc AS (SELECT query_id, neighbor_id, CAST(sum(lq) AS BIGINT) AS adc_d2q
+         |  FROM cand JOIN lut USING (query_id, sub, code) GROUP BY 1, 2),
+         |r AS (SELECT query_id, neighbor_id, adc_d2q,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_d2q, neighbor_id) AS BIGINT) AS rn
+         |  FROM adc),
+         |bs AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+         |    list_dot_product(a.vv, b.vv) / (sqrt(list_dot_product(a.vv, a.vv)) * sqrt(list_dot_product(b.vv, b.vv))) AS cosine
+         |  FROM vecs a CROSS JOIN vecs b WHERE a.vec_id < 8 AND b.vec_id <> a.vec_id),
+         |truth AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS trn
+         |  FROM bs) WHERE trn <= 5)
+         |SELECT r.query_id, r.rn, r.neighbor_id, r.adc_d2q,
+         |  CAST(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END AS BIGINT) AS hit,
+         |  CAST(sum(CASE WHEN t.neighbor_id IS NULL THEN 0 ELSE 1 END)
+         |    OVER (PARTITION BY r.query_id) AS BIGINT) AS hits_at_5
+         |FROM r LEFT JOIN truth t ON t.query_id = r.query_id AND t.neighbor_id = r.neighbor_id
+         |WHERE r.rn <= 5 ORDER BY r.query_id, r.rn""".stripMargin,
     "q453_graph_ann" -> {
       // q443's LSH cells feed the graph build; the 4 beam rounds unroll as
       // (expand ∪ keep, re-rank, cut-to-8) CTE triples — the oracle may be
@@ -2683,17 +2540,15 @@ private[graft] object RegistryAnnDedup {
          |FROM h JOIN f USING (hv) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "q264_hard_negatives" ->
       // q45's brute-force chain with the different-label filter
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv,
-        |    label AS ql FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv,
-        |    label AS cl FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id AND cl <> ql),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn
-        |FROM r WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv,
+         |    label AS ql FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv,
+         |    label AS cl FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id AND cl <> ql")},
+         |r AS (SELECT query_id, neighbor_id, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
+         |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn
+         |FROM r WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin,
     "q259_cached_views" ->
       // q34's lexicon/compound CTEs; both views from one labeled frame
       // (the cache is never semantic, so the oracle just recomputes)
@@ -2787,40 +2642,25 @@ private[graft] object RegistryAnnDedup {
     "q272_pq_rerank" ->
       // q224's ADC chain with a 20-deep shortlist, then q45's exact-cosine
       // scoring applied to shortlist rows only, re-ranked
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |q AS (SELECT vec_id AS query_id, sub, xs AS qs FROM subs WHERE vec_id < 8),
-        |lut AS (SELECT q.query_id, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM q JOIN cb c USING (sub)),
-        |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-        |    CAST(sum(l.d) AS BIGINT) AS adist_tb
-        |  FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
-        |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
-        |sl AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adist_tb, neighbor_id) AS rn FROM sc2) WHERE rn <= 20),
-        |rr AS (SELECT s.query_id, s.neighbor_id,
-        |    list_dot_product(qv.vv, nv.vv) /
-        |      (sqrt(list_dot_product(qv.vv, qv.vv)) * sqrt(list_dot_product(nv.vv, nv.vv))) AS cosine
-        |  FROM sl s JOIN vecs qv ON qv.vec_id = s.query_id
-        |  JOIN vecs nv ON nv.vec_id = s.neighbor_id),
-        |f AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM rr)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn
-        |FROM f WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |${pqLutCtes(0, 8)},
+         |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
+         |    CAST(sum(l.d) AS BIGINT) AS adist_tb
+         |  FROM codes k JOIN lut l ON l.sub = k.sub AND l.code = k.code
+         |  WHERE k.vec_id <> l.query_id GROUP BY 1, 2),
+         |sl AS (SELECT query_id, neighbor_id FROM (SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adist_tb, neighbor_id) AS rn FROM sc2) WHERE rn <= 20),
+         |rr AS (SELECT s.query_id, s.neighbor_id,
+         |    list_dot_product(qv.vv, nv.vv) /
+         |      (sqrt(list_dot_product(qv.vv, qv.vv)) * sqrt(list_dot_product(nv.vv, nv.vv))) AS cosine
+         |  FROM sl s JOIN vecs qv ON qv.vec_id = s.query_id
+         |  JOIN vecs nv ON nv.vec_id = s.neighbor_id),
+         |f AS (SELECT query_id, neighbor_id, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id
+         |    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM rr)
+         |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn
+         |FROM f WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
     // q273_semdedup / q276_editdist_confirm verify against their twins'
     // oracles (SparkEntry.retiredToTwins, round 17)
     "q443_semdedup_lsh" -> {
@@ -2857,20 +2697,18 @@ private[graft] object RegistryAnnDedup {
     "q274_knn_label" ->
       // q45's exact top-5 chain, neighbors' labels gathered, majority with
       // ties to the smallest label
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-        |r AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
-        |nn AS (SELECT query_id, neighbor_id FROM r WHERE rn <= 5),
-        |v AS (SELECT nn.query_id, e.label, count(*) AS votes
-        |  FROM nn JOIN embeddings e ON e.vec_id = nn.neighbor_id GROUP BY 1, 2),
-        |p AS (SELECT query_id, label, votes,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label) AS rn2 FROM v)
-        |SELECT query_id, CAST(label AS BIGINT) AS pred_label, CAST(votes AS BIGINT) AS votes
-        |FROM p WHERE rn2 = 1 ORDER BY query_id""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id")},
+         |r AS (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
+         |nn AS (SELECT query_id, neighbor_id FROM r WHERE rn <= 5),
+         |v AS (SELECT nn.query_id, e.label, count(*) AS votes
+         |  FROM nn JOIN embeddings e ON e.vec_id = nn.neighbor_id GROUP BY 1, 2),
+         |p AS (SELECT query_id, label, votes,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label) AS rn2 FROM v)
+         |SELECT query_id, CAST(label AS BIGINT) AS pred_label, CAST(votes AS BIGINT) AS votes
+         |FROM p WHERE rn2 = 1 ORDER BY query_id""".stripMargin,
     "q275_dsir" ->
       // token -> KR bucket, target/raw bucket margins, smoothed log-ratio
       // quantized to micro-nat longs, per-doc exact long sum
@@ -2894,26 +2732,24 @@ private[graft] object RegistryAnnDedup {
     "q277_ndcg" ->
       // q45's exact top-5, label-match relevance, micro-unit DCG weights,
       // IDCG over the first n_rel positions
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label AS nl FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id, ql, nl,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-        |r AS (SELECT query_id, ql, nl,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
-        |g AS (SELECT query_id, rn,
-        |    CASE WHEN nl = ql THEN 1 ELSE 0 END AS rel,
-        |    CAST(round(1000000 / (ln(rn + 1.0) / ln(2.0)), 0) AS BIGINT) AS w
-        |  FROM r WHERE rn <= 5),
-        |pq AS (SELECT query_id, sum(rel) AS n_rel, sum(rel * w) AS dcg_u FROM g GROUP BY 1),
-        |ic AS (SELECT g.query_id, sum(g.w) AS idcg_u
-        |  FROM g JOIN pq ON pq.query_id = g.query_id WHERE g.rn <= pq.n_rel GROUP BY 1)
-        |SELECT pq.query_id, CAST(pq.n_rel AS BIGINT) AS n_rel,
-        |  CAST(pq.dcg_u AS BIGINT) AS dcg_u,
-        |  CAST(coalesce(ic.idcg_u, 0) AS BIGINT) AS idcg_u,
-        |  (CASE WHEN coalesce(ic.idcg_u, 0) = 0 THEN 0.0
-        |    ELSE (round(CAST(pq.dcg_u AS DOUBLE) / ic.idcg_u, 4) + 0.0) END) AS ndcg
-        |FROM pq LEFT JOIN ic ON ic.query_id = pq.query_id ORDER BY pq.query_id""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label AS nl FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id", "query_id, neighbor_id, ql, nl")},
+         |r AS (SELECT query_id, ql, nl,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
+         |g AS (SELECT query_id, rn,
+         |    CASE WHEN nl = ql THEN 1 ELSE 0 END AS rel,
+         |    CAST(round(1000000 / (ln(rn + 1.0) / ln(2.0)), 0) AS BIGINT) AS w
+         |  FROM r WHERE rn <= 5),
+         |pq AS (SELECT query_id, sum(rel) AS n_rel, sum(rel * w) AS dcg_u FROM g GROUP BY 1),
+         |ic AS (SELECT g.query_id, sum(g.w) AS idcg_u
+         |  FROM g JOIN pq ON pq.query_id = g.query_id WHERE g.rn <= pq.n_rel GROUP BY 1)
+         |SELECT pq.query_id, CAST(pq.n_rel AS BIGINT) AS n_rel,
+         |  CAST(pq.dcg_u AS BIGINT) AS dcg_u,
+         |  CAST(coalesce(ic.idcg_u, 0) AS BIGINT) AS idcg_u,
+         |  (CASE WHEN coalesce(ic.idcg_u, 0) = 0 THEN 0.0
+         |    ELSE (round(CAST(pq.dcg_u AS DOUBLE) / ic.idcg_u, 4) + 0.0) END) AS ndcg
+         |FROM pq LEFT JOIN ic ON ic.query_id = pq.query_id ORDER BY pq.query_id""".stripMargin,
     "q278_lsh_precision" ->
       // q44 candidates bucketed by estimated-Jaccard decile; confirmed =
       // q276's floor-bp similarity >= 5000
@@ -2948,52 +2784,34 @@ private[graft] object RegistryAnnDedup {
       // q246's cell CTEs carrying (vv, cv) through, residuals as one
       // element-wise double subtraction, then the same LUT/ADC chain in
       // residual space with the table keyed per (query, probed cell)
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |cells AS (SELECT x.vec_id, x.vv, c.cell, c.cv,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |res AS (SELECT vec_id, cell,
-        |    list_transform(range(1, 65), i -> vv[i] - cv[i]) AS rv
-        |  FROM cells WHERE crn = 1),
-        |qres AS (SELECT vec_id AS query_id, cell,
-        |    list_transform(range(1, 65), i -> vv[i] - cv[i]) AS rv
-        |  FROM cells WHERE vec_id < 8 AND crn <= 2),
-        |rsubs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    rv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM res, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM rsubs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM rsubs x JOIN cb c USING (sub)),
-        |codes AS (SELECT vec_id, sub, code FROM sc WHERE rn = 1),
-        |qsubs AS (SELECT query_id, cell, CAST(s.i AS BIGINT) AS sub,
-        |    rv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS qs
-        |  FROM qres, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |lut AS (SELECT q.query_id, q.cell, c.sub, c.code,
-        |    CAST(round(greatest(list_dot_product(q.qs, q.qs)
-        |      - 2 * list_dot_product(q.qs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), 0) * 100000) AS BIGINT) AS d
-        |  FROM qsubs q JOIN cb c USING (sub)),
-        |cand AS (SELECT q.query_id, r.vec_id AS neighbor_id, q.cell
-        |  FROM qres q JOIN res r ON r.cell = q.cell
-        |  WHERE r.vec_id <> q.query_id),
-        |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
-        |    CAST(sum(l.d) AS BIGINT) AS adist_tb
-        |  FROM codes k
-        |  JOIN cand cd ON cd.neighbor_id = k.vec_id
-        |  JOIN lut l ON l.query_id = cd.query_id AND l.cell = cd.cell
-        |    AND l.sub = k.sub AND l.code = k.code
-        |  GROUP BY 1, 2),
-        |r2 AS (SELECT query_id, neighbor_id, adist_tb,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2)
-        |SELECT query_id, neighbor_id, adist_tb, rn FROM r2 WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+         |${ivfCellCte("cells", "cent", "x.vec_id, x.vv, c.cell, c.cv")},
+         |res AS (SELECT vec_id, cell,
+         |    list_transform(range(1, 65), i -> vv[i] - cv[i]) AS rv
+         |  FROM cells WHERE crn = 1),
+         |qres AS (SELECT vec_id AS query_id, cell,
+         |    list_transform(range(1, 65), i -> vv[i] - cv[i]) AS rv
+         |  FROM cells WHERE vec_id < 8 AND crn <= 2),
+         |${pqSplitCte("rsubs", "res", "vec_id", "rv")},
+         |${pqCodeCtes(0, 8, subs = "rsubs")},
+         |${pqSplitCte("qsubs", "qres", "query_id, cell", "rv", "qs")},
+         |${pqLutCte(q = "qsubs q", keys = "q.query_id, q.cell")},
+         |cand AS (SELECT q.query_id, r.vec_id AS neighbor_id, q.cell
+         |  FROM qres q JOIN res r ON r.cell = q.cell
+         |  WHERE r.vec_id <> q.query_id),
+         |sc2 AS (SELECT l.query_id, k.vec_id AS neighbor_id,
+         |    CAST(sum(l.d) AS BIGINT) AS adist_tb
+         |  FROM codes k
+         |  JOIN cand cd ON cd.neighbor_id = k.vec_id
+         |  JOIN lut l ON l.query_id = cd.query_id AND l.cell = cd.cell
+         |    AND l.sub = k.sub AND l.code = k.code
+         |  GROUP BY 1, 2),
+         |r2 AS (SELECT query_id, neighbor_id, adist_tb,
+         |    CAST(row_number() OVER (PARTITION BY query_id
+         |      ORDER BY adist_tb, neighbor_id) AS BIGINT) AS rn FROM sc2)
+         |SELECT query_id, neighbor_id, adist_tb, rn FROM r2 WHERE rn <= 5
+         |ORDER BY query_id, rn""".stripMargin,
     // q58's assignment CTE (crn = 1), then the occupancy table
     "q283_ivf_balance" -> q283Sql,
     // the SAME table: streaming-accumulated index ≡ batch assignment
@@ -3004,25 +2822,23 @@ private[graft] object RegistryAnnDedup {
     "q298_average_precision" ->
       // q45's exact top-5, label-match relevance, micro-unit precision@r
       // via non-negative integer division, min(R,5) normalization
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label AS nl FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id, ql, nl,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-        |r AS (SELECT query_id, ql, nl,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
-        |g AS (SELECT query_id, rn, CASE WHEN nl = ql THEN 1 ELSE 0 END AS rel FROM r WHERE rn <= 5),
-        |p AS (SELECT query_id, rn, rel,
-        |    (sum(rel) OVER (PARTITION BY query_id ORDER BY rn) * 1000000) // rn AS pu FROM g),
-        |pq AS (SELECT query_id, sum(rel) AS n_rel, sum(rel * pu) AS sum_pu FROM p GROUP BY 1),
-        |mt AS (SELECT label, count(*) AS cl FROM embeddings GROUP BY 1),
-        |d AS (SELECT e.vec_id AS query_id, least(mt.cl - 1, 5) AS denom
-        |  FROM embeddings e JOIN mt ON mt.label = e.label WHERE e.vec_id < 8)
-        |SELECT pq.query_id, CAST(pq.n_rel AS BIGINT) AS n_rel,
-        |  CAST(pq.sum_pu AS BIGINT) AS sum_pu, CAST(d.denom AS BIGINT) AS denom,
-        |  (CASE WHEN d.denom = 0 THEN 0.0
-        |    ELSE (round(CAST(pq.sum_pu AS DOUBLE) / (CAST(d.denom AS DOUBLE) * 1000000), 4) + 0.0) END) AS ap
-        |FROM pq JOIN d ON d.query_id = pq.query_id ORDER BY pq.query_id""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS ql FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label AS nl FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id", "query_id, neighbor_id, ql, nl")},
+         |r AS (SELECT query_id, ql, nl,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
+         |g AS (SELECT query_id, rn, CASE WHEN nl = ql THEN 1 ELSE 0 END AS rel FROM r WHERE rn <= 5),
+         |p AS (SELECT query_id, rn, rel,
+         |    (sum(rel) OVER (PARTITION BY query_id ORDER BY rn) * 1000000) // rn AS pu FROM g),
+         |pq AS (SELECT query_id, sum(rel) AS n_rel, sum(rel * pu) AS sum_pu FROM p GROUP BY 1),
+         |mt AS (SELECT label, count(*) AS cl FROM embeddings GROUP BY 1),
+         |d AS (SELECT e.vec_id AS query_id, least(mt.cl - 1, 5) AS denom
+         |  FROM embeddings e JOIN mt ON mt.label = e.label WHERE e.vec_id < 8)
+         |SELECT pq.query_id, CAST(pq.n_rel AS BIGINT) AS n_rel,
+         |  CAST(pq.sum_pu AS BIGINT) AS sum_pu, CAST(d.denom AS BIGINT) AS denom,
+         |  (CASE WHEN d.denom = 0 THEN 0.0
+         |    ELSE (round(CAST(pq.sum_pu AS DOUBLE) / (CAST(d.denom AS DOUBLE) * 1000000), 4) + 0.0) END) AS ap
+         |FROM pq JOIN d ON d.query_id = pq.query_id ORDER BY pq.query_id""".stripMargin,
     "q299_abtt_outliers" -> q299Sql,
     "q300_matryoshka_curve" -> q300Sql,
     "q302_filtered_ann" ->
@@ -3030,30 +2846,26 @@ private[graft] object RegistryAnnDedup {
       // query probes = rank ≤ 2; the pre-filter is a WHERE on the
       // assignment side, the post-filter counts survivors of the
       // unfiltered top-5
-      """WITH vecs AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.label, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, label, vv, cell FROM scored WHERE crn = 1),
-        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored WHERE vec_id < 8 AND crn <= 2),
-        |sf AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id WHERE a.label = 2),
-        |rf AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM sf),
-        |su AS (SELECT q.query_id, a.vec_id AS neighbor_id, a.label,
-        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
-        |ru AS (SELECT query_id, label,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM su),
-        |post AS (SELECT query_id, count(*) AS post_kept FROM ru WHERE rn <= 5 AND label = 2 GROUP BY 1)
-        |SELECT rf.query_id, rf.rn, rf.neighbor_id, (round(rf.cosine, 4) + 0.0) AS cosine,
-        |  CAST(coalesce(post.post_kept, 0) AS BIGINT) AS post_kept
-        |FROM rf LEFT JOIN post ON post.query_id = rf.query_id
-        |WHERE rf.rn <= 5 ORDER BY rf.query_id, rf.rn""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+         |${ivfCellCte("scored", "cent", "x.vec_id, x.label, x.vv, c.cell")},
+         |asg AS (SELECT vec_id, label, vv, cell FROM scored WHERE crn = 1),
+         |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored WHERE vec_id < 8 AND crn <= 2),
+         |sf AS (SELECT q.query_id, a.vec_id AS neighbor_id,
+         |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
+         |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id WHERE a.label = 2),
+         |rf AS (SELECT query_id, neighbor_id, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM sf),
+         |su AS (SELECT q.query_id, a.vec_id AS neighbor_id, a.label,
+         |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
+         |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
+         |ru AS (SELECT query_id, label,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM su),
+         |post AS (SELECT query_id, count(*) AS post_kept FROM ru WHERE rn <= 5 AND label = 2 GROUP BY 1)
+         |SELECT rf.query_id, rf.rn, rf.neighbor_id, (round(rf.cosine, 4) + 0.0) AS cosine,
+         |  CAST(coalesce(post.post_kept, 0) AS BIGINT) AS post_kept
+         |FROM rf LEFT JOIN post ON post.query_id = rf.query_id
+         |WHERE rf.rn <= 5 ORDER BY rf.query_id, rf.rn""".stripMargin,
     "q304_colbert_maxsim" -> q304Sql,
     "q306_vacuum_retention" ->
       // the post-vacuum retained snapshot must read as the full table —
@@ -3090,34 +2902,30 @@ private[graft] object RegistryAnnDedup {
       // the same cosine argmax assignment (q307's asg convention), the
       // same KD split: widest-range dim (min dim id on ties), rank on
       // (value, vec_id), ceil-half to the old id, rest to 16 + cell
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
-        |cc AS (SELECT cell, count(*) AS cnt FROM asg GROUP BY 1),
-        |hot AS (SELECT cell, cnt FROM cc ORDER BY cnt DESC, cell LIMIT 1),
-        |mem AS (SELECT a.vec_id, a.vv FROM asg a JOIN hot h ON a.cell = h.cell),
-        |dimx AS (SELECT CAST(u.i AS BIGINT) AS dim, m.vv[CAST(u.i + 1 AS INT)] AS v
-        |  FROM mem m, (SELECT unnest(range(0, 64)) AS i) u),
-        |sd AS (SELECT dim FROM (SELECT dim, max(v) - min(v) AS rng FROM dimx GROUP BY 1)
-        |  ORDER BY rng DESC, dim LIMIT 1),
-        |rk AS (SELECT m.vec_id,
-        |    row_number() OVER (ORDER BY m.vv[CAST(sd.dim + 1 AS INT)], m.vec_id) AS rn
-        |  FROM mem m, sd),
-        |sp AS (SELECT vec_id, CASE WHEN rn <= (SELECT (cnt + 1) // 2 FROM hot)
-        |    THEN (SELECT cell FROM hot) ELSE 16 + (SELECT cell FROM hot) END AS cell FROM rk),
-        |aft AS (SELECT cell, count(*) AS cnt FROM (
-        |  SELECT a.cell FROM asg a WHERE a.cell <> (SELECT cell FROM hot)
-        |  UNION ALL SELECT cell FROM sp) GROUP BY 1)
-        |SELECT aft.cell, CAST(aft.cnt AS BIGINT) AS cnt,
-        |  CAST(hot.cell AS BIGINT) AS split_cell, CAST(sd.dim AS BIGINT) AS split_dim,
-        |  CAST(hot.cnt AS BIGINT) AS max_before,
-        |  CAST((SELECT max(cnt) FROM aft) AS BIGINT) AS max_after
-        |FROM aft, hot, sd ORDER BY aft.cell""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
+         |${ivfCellCte("scored", "cent", "x.vec_id, x.vv, c.cell")},
+         |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
+         |cc AS (SELECT cell, count(*) AS cnt FROM asg GROUP BY 1),
+         |hot AS (SELECT cell, cnt FROM cc ORDER BY cnt DESC, cell LIMIT 1),
+         |mem AS (SELECT a.vec_id, a.vv FROM asg a JOIN hot h ON a.cell = h.cell),
+         |dimx AS (SELECT CAST(u.i AS BIGINT) AS dim, m.vv[CAST(u.i + 1 AS INT)] AS v
+         |  FROM mem m, (SELECT unnest(range(0, 64)) AS i) u),
+         |sd AS (SELECT dim FROM (SELECT dim, max(v) - min(v) AS rng FROM dimx GROUP BY 1)
+         |  ORDER BY rng DESC, dim LIMIT 1),
+         |rk AS (SELECT m.vec_id,
+         |    row_number() OVER (ORDER BY m.vv[CAST(sd.dim + 1 AS INT)], m.vec_id) AS rn
+         |  FROM mem m, sd),
+         |sp AS (SELECT vec_id, CASE WHEN rn <= (SELECT (cnt + 1) // 2 FROM hot)
+         |    THEN (SELECT cell FROM hot) ELSE 16 + (SELECT cell FROM hot) END AS cell FROM rk),
+         |aft AS (SELECT cell, count(*) AS cnt FROM (
+         |  SELECT a.cell FROM asg a WHERE a.cell <> (SELECT cell FROM hot)
+         |  UNION ALL SELECT cell FROM sp) GROUP BY 1)
+         |SELECT aft.cell, CAST(aft.cnt AS BIGINT) AS cnt,
+         |  CAST(hot.cell AS BIGINT) AS split_cell, CAST(sd.dim AS BIGINT) AS split_dim,
+         |  CAST(hot.cnt AS BIGINT) AS max_before,
+         |  CAST((SELECT max(cnt) FROM aft) AS BIGINT) AS max_after
+         |FROM aft, hot, sd ORDER BY aft.cell""".stripMargin,
     "q308_k_anonymity" ->
       // the k-sweep is pure arithmetic over the QI-group counts; basis
       // points via non-negative integer division (trunc ≡ floor)
@@ -3142,20 +2950,18 @@ private[graft] object RegistryAnnDedup {
     "q312_diverse_topk" ->
       // q45's scoring with k = 10, then the same two rank windows the
       // engine runs — at-most-2-per-label in rank order, best 5 survivors
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id, label,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-        |r AS (SELECT query_id, neighbor_id, label, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s),
-        |t AS (SELECT * FROM r WHERE rn <= 10),
-        |lr AS (SELECT *, row_number() OVER (PARTITION BY query_id, label ORDER BY rn) AS label_rank FROM t),
-        |kept AS (SELECT * FROM lr WHERE label_rank <= 2),
-        |sel AS (SELECT query_id, neighbor_id, label, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rn) AS BIGINT) AS sel_rn FROM kept)
-        |SELECT query_id, sel_rn, neighbor_id, label, (round(cosine, 4) + 0.0) AS cosine
-        |FROM sel WHERE sel_rn <= 5 ORDER BY query_id, sel_rn""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv, label FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id", "query_id, neighbor_id, label")},
+         |r AS (SELECT query_id, neighbor_id, label, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s),
+         |t AS (SELECT * FROM r WHERE rn <= 10),
+         |lr AS (SELECT *, row_number() OVER (PARTITION BY query_id, label ORDER BY rn) AS label_rank FROM t),
+         |kept AS (SELECT * FROM lr WHERE label_rank <= 2),
+         |sel AS (SELECT query_id, neighbor_id, label, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY rn) AS BIGINT) AS sel_rn FROM kept)
+         |SELECT query_id, sel_rn, neighbor_id, label, (round(cosine, 4) + 0.0) AS cosine
+         |FROM sel WHERE sel_rn <= 5 ORDER BY query_id, sel_rn""".stripMargin,
     "q313_image_neardup" ->
       // every gradient + per-variant-row bit predicted arithmetically
       // (pixel = (13g + x(y+3) + [y = v%7]·7x) mod 256, bit = right
@@ -3315,22 +3121,7 @@ private[graft] object RegistryAnnDedup {
       // the MONOLITHIC nprobe=2 IVF search — equality with the Spark
       // side's merged-two-shard search IS the gate's merge-correctness
       // proof (shared quantizer ⇒ assignment is per-vector ⇒ union ≡ whole)
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
-        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored WHERE vec_id < 8 AND crn <= 2),
-        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      ivfTopKSql("crn = 1", "scored WHERE vec_id < 8 AND crn <= 2"),
     "q286_mrr" ->
       // q277's exact top-5 chain, first label match per query, reciprocal
       // ranks as exact micro-unit integer divisions summed order-free
@@ -3387,23 +3178,8 @@ private[graft] object RegistryAnnDedup {
       // the monolithic nprobe=2 search over the TOMBSTONE-FILTERED corpus;
       // centroids stay the full parameter table (member deletion does not
       // retrain the quantizer)
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1 AND vec_id % 7 <> 3),
-        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM scored
-        |  WHERE vec_id < 8 AND vec_id % 7 <> 3 AND crn <= 2),
-        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      ivfTopKSql("crn = 1 AND vec_id % 7 <> 3",
+        "scored WHERE vec_id < 8 AND vec_id % 7 <> 3 AND crn <= 2"),
     "q290_image_resize" ->
       // every source pixel predicted from the synthesis ramps, then the
       // same 2×2 integer box mean (sum // 4)
@@ -3441,8 +3217,7 @@ private[graft] object RegistryAnnDedup {
          |    CAST(ntile(3) OVER (ORDER BY avg_nll, doc_id) AS BIGINT) AS bucket
          |  FROM scores),
          |pairs AS ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
+         |$nearDupEdgesCte,
          |lab AS (SELECT DISTINCT src AS a FROM e),
          |tk AS (SELECT doc_id,
          |    CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS nt
@@ -3456,22 +3231,14 @@ private[graft] object RegistryAnnDedup {
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q270_cluster_sizes" ->
       // q77's recursive closure, then size-of-cluster → count-of-size
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node AS a, lab AS component FROM l$ccRounds),
+      s"""WITH ${nearDupComponentCtes("node AS a")},
          |sz AS (SELECT component, count(*) AS s FROM lab GROUP BY 1)
          |SELECT s AS cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
          |FROM sz GROUP BY s ORDER BY cluster_size""".stripMargin,
     "q265_incremental_components" ->
       // the full-recompute twin: q77's recursive closure over the WHOLE
       // corpus — equality here proves the incremental star-merge path
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node AS a, lab AS component FROM l$ccRounds)
+      s"""WITH ${nearDupComponentCtes("node AS a")}
          |SELECT a AS doc_id, component FROM lab ORDER BY doc_id""".stripMargin,
     "q266_stream_neardup" ->
       // survivors = docs that are id_b of NO pair; batch_id from the

@@ -1931,32 +1931,30 @@ private[graft] object RegistryPipelineOps {
     "q316_binary_embedding" ->
       // same two 32-bit sign words, same integer hamming ranking, and the
       // float truth is q45's scoring verbatim
-      """WITH b AS (SELECT vec_id, i.i AS i,
-        |    CASE WHEN embedding[i.i + 1] > 0
-        |      THEN CAST(1 AS BIGINT) << CAST(i.i % 32 AS INT) ELSE 0 END AS v
-        |  FROM embeddings, (SELECT unnest(range(0, 64)) AS i) i),
-        |w AS (SELECT vec_id,
-        |    CAST(sum(CASE WHEN i < 32 THEN v ELSE 0 END) AS BIGINT) AS lo,
-        |    CAST(sum(CASE WHEN i >= 32 THEN v ELSE 0 END) AS BIGINT) AS hi
-        |  FROM b GROUP BY 1),
-        |q AS (SELECT vec_id AS query_id, lo AS q_lo, hi AS q_hi FROM w WHERE vec_id < 8),
-        |s AS (SELECT q.query_id, w.vec_id AS neighbor_id,
-        |    bit_count(xor(w.lo, q.q_lo)) + bit_count(xor(w.hi, q.q_hi)) AS hamming
-        |  FROM w CROSS JOIN q WHERE w.vec_id <> q.query_id),
-        |r AS (SELECT query_id, neighbor_id, hamming,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS BIGINT) AS rn FROM s),
-        |fq AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
-        |fc AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |fs AS (SELECT query_id, neighbor_id,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM fc CROSS JOIN fq WHERE neighbor_id <> query_id),
-        |fr AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM fs),
-        |truth AS (SELECT query_id, neighbor_id FROM fr WHERE rn <= 5)
-        |SELECT r.query_id, r.rn, r.neighbor_id, CAST(r.hamming AS BIGINT) AS hamming,
-        |  CAST(CASE WHEN truth.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS hit
-        |FROM r LEFT JOIN truth ON truth.query_id = r.query_id AND truth.neighbor_id = r.neighbor_id
-        |WHERE r.rn <= 5 ORDER BY r.query_id, r.rn""".stripMargin,
+      s"""WITH b AS (SELECT vec_id, i.i AS i,
+         |    CASE WHEN embedding[i.i + 1] > 0
+         |      THEN CAST(1 AS BIGINT) << CAST(i.i % 32 AS INT) ELSE 0 END AS v
+         |  FROM embeddings, (SELECT unnest(range(0, 64)) AS i) i),
+         |w AS (SELECT vec_id,
+         |    CAST(sum(CASE WHEN i < 32 THEN v ELSE 0 END) AS BIGINT) AS lo,
+         |    CAST(sum(CASE WHEN i >= 32 THEN v ELSE 0 END) AS BIGINT) AS hi
+         |  FROM b GROUP BY 1),
+         |q AS (SELECT vec_id AS query_id, lo AS q_lo, hi AS q_hi FROM w WHERE vec_id < 8),
+         |s AS (SELECT q.query_id, w.vec_id AS neighbor_id,
+         |    bit_count(xor(w.lo, q.q_lo)) + bit_count(xor(w.hi, q.q_hi)) AS hamming
+         |  FROM w CROSS JOIN q WHERE w.vec_id <> q.query_id),
+         |r AS (SELECT query_id, neighbor_id, hamming,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS BIGINT) AS rn FROM s),
+         |fq AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
+         |fc AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+         |${exactCosCte("fs", "fc CROSS JOIN fq WHERE neighbor_id <> query_id")},
+         |fr AS (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM fs),
+         |truth AS (SELECT query_id, neighbor_id FROM fr WHERE rn <= 5)
+         |SELECT r.query_id, r.rn, r.neighbor_id, CAST(r.hamming AS BIGINT) AS hamming,
+         |  CAST(CASE WHEN truth.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS hit
+         |FROM r LEFT JOIN truth ON truth.query_id = r.query_id AND truth.neighbor_id = r.neighbor_id
+         |WHERE r.rn <= 5 ORDER BY r.query_id, r.rn""".stripMargin,
     "q317_cdc_apply" -> q317Sql,
     "q339_stream_cdc_apply" ->
       // the oracle is q317's batch fold VERBATIM: equality of the
@@ -2413,18 +2411,16 @@ private[graft] object RegistryPipelineOps {
         |FROM sc""".stripMargin,
     "q347_retrieval_overlap" ->
       // q45's top-5 scoring twice + a pair-keyed overlap count
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-        |r AS (SELECT query_id, neighbor_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
-        |t5 AS (SELECT query_id, neighbor_id FROM r WHERE rn <= 5)
-        |SELECT a.query_id AS query_a, b.query_id AS query_b,
-        |  CAST(count(*) AS BIGINT) AS shared
-        |FROM t5 a JOIN t5 b ON a.neighbor_id = b.neighbor_id AND a.query_id < b.query_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id")},
+         |r AS (SELECT query_id, neighbor_id,
+         |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM s),
+         |t5 AS (SELECT query_id, neighbor_id FROM r WHERE rn <= 5)
+         |SELECT a.query_id AS query_a, b.query_id AS query_b,
+         |  CAST(count(*) AS BIGINT) AS shared
+         |FROM t5 a JOIN t5 b ON a.neighbor_id = b.neighbor_id AND a.query_id < b.query_id
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q348_lsh_cost_plan" -> q348Sql,
     "q349_oov_drift" ->
       // same frozen top-100 vocabulary (count desc, token), same OOV
@@ -2455,11 +2451,7 @@ private[graft] object RegistryPipelineOps {
       // q44's pair graph + the recursive component labels + q51's exact
       // quality formula; argmax as the rank window the engine's
       // max(struct) replaces, ties to the smallest id
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node, lab AS component FROM l$ccRounds),
+      s"""WITH ${nearDupComponentCtes("node")},
          |f AS (SELECT doc_id, CAST(length(text) AS DOUBLE) AS len,
          |    CAST(len(regexp_extract_all(text, '\\S+')) AS DOUBLE) AS toks,
          |    CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) AS alpha,
@@ -2480,11 +2472,7 @@ private[graft] object RegistryPipelineOps {
     "q352_dup_weighting" ->
       // same recursive component labels as q351; singletons (no component
       // row) keep full weight 10000 via the left joins
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node, lab AS component FROM l$ccRounds),
+      s"""WITH ${nearDupComponentCtes("node")},
          |sizes AS (SELECT component, count(*) AS csize FROM lab GROUP BY 1),
          |w AS (SELECT d.doc_id, d.source,
          |    COALESCE(CAST(10000 // s.csize AS BIGINT), 10000) AS w_bp
@@ -2521,32 +2509,28 @@ private[graft] object RegistryPipelineOps {
     "q354_bitext_margin" ->
       // forward and backward top-4 both as the exact q45 scoring shape;
       // margin from the bp-quantized sums, one IEEE division at the end
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |xq AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 2 = 0 AND vec_id < 16),
-        |yc AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id % 2 = 1),
-        |fs AS (SELECT query_id, neighbor_id,
-        |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM yc CROSS JOIN xq),
-        |fr AS (SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM fs),
-        |fwd AS (SELECT query_id, neighbor_id,
-        |    CAST(round(cosine * 10000) AS BIGINT) AS cos_bp FROM fr WHERE rn <= 4),
-        |px AS (SELECT query_id, CAST(sum(cos_bp) AS BIGINT) AS px_bp FROM fwd GROUP BY 1),
-        |nq AS (SELECT DISTINCT neighbor_id AS query_id FROM fwd),
-        |nqv AS (SELECT nq.query_id, e.v AS qv FROM nq JOIN e ON e.vec_id = nq.query_id),
-        |xc AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id % 2 = 0),
-        |bs AS (SELECT query_id, neighbor_id,
-        |    list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM xc CROSS JOIN nqv),
-        |br AS (SELECT query_id, (round(cosine, 4) + 0.0) AS cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM bs),
-        |py AS (SELECT query_id AS neighbor_id,
-        |    CAST(sum(CAST(round(cosine * 10000) AS BIGINT)) AS BIGINT) AS py_bp
-        |  FROM br WHERE rn <= 4 GROUP BY 1)
-        |SELECT f.query_id, f.neighbor_id, f.cos_bp, px.px_bp, py.py_bp,
-        |  (round(CAST(f.cos_bp * 8 AS DOUBLE) / CAST(px.px_bp + py.py_bp AS DOUBLE), 4) + 0.0) AS margin
-        |FROM fwd f JOIN px USING (query_id) JOIN py USING (neighbor_id)
-        |ORDER BY query_id, margin DESC, neighbor_id""".stripMargin,
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |xq AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 2 = 0 AND vec_id < 16),
+         |yc AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id % 2 = 1),
+         |${exactCosCte("fs", "yc CROSS JOIN xq")},
+         |fr AS (SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM fs),
+         |fwd AS (SELECT query_id, neighbor_id,
+         |    CAST(round(cosine * 10000) AS BIGINT) AS cos_bp FROM fr WHERE rn <= 4),
+         |px AS (SELECT query_id, CAST(sum(cos_bp) AS BIGINT) AS px_bp FROM fwd GROUP BY 1),
+         |nq AS (SELECT DISTINCT neighbor_id AS query_id FROM fwd),
+         |nqv AS (SELECT nq.query_id, e.v AS qv FROM nq JOIN e ON e.vec_id = nq.query_id),
+         |xc AS (SELECT vec_id AS neighbor_id, v AS cv FROM e WHERE vec_id % 2 = 0),
+         |${exactCosCte("bs", "xc CROSS JOIN nqv")},
+         |br AS (SELECT query_id, (round(cosine, 4) + 0.0) AS cosine,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM bs),
+         |py AS (SELECT query_id AS neighbor_id,
+         |    CAST(sum(CAST(round(cosine * 10000) AS BIGINT)) AS BIGINT) AS py_bp
+         |  FROM br WHERE rn <= 4 GROUP BY 1)
+         |SELECT f.query_id, f.neighbor_id, f.cos_bp, px.px_bp, py.py_bp,
+         |  (round(CAST(f.cos_bp * 8 AS DOUBLE) / CAST(px.px_bp + py.py_bp AS DOUBLE), 4) + 0.0) AS margin
+         |FROM fwd f JOIN px USING (query_id) JOIN py USING (neighbor_id)
+         |ORDER BY query_id, margin DESC, neighbor_id""".stripMargin,
     "q355_bucketed_batching" ->
       // the per-bucket window IS what prefixSumKeyed replaces; exclusive
       // prefix = inclusive minus own n, batch id by integer division

@@ -2557,22 +2557,15 @@ private[graft] object RegistryStatsMl {
     "q116_pq_encode" ->
       // same L2 expansion x·x − 2·x·c + c·c over list_dot_product, same
       // centroid-id tie-break — code assignment must agree per subvector
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |subs AS (SELECT vec_id, CAST(s.i AS BIGINT) AS sub,
-        |    vv[CAST(s.i * 16 + 1 AS INT) : CAST(s.i * 16 + 16 AS INT)] AS xs
-        |  FROM vecs, LATERAL (SELECT unnest(range(0, 4)) AS i) s),
-        |cb AS (SELECT vec_id AS code, sub, xs AS cs FROM subs WHERE vec_id < 8),
-        |sc AS (SELECT x.vec_id, x.sub, c.code,
-        |  row_number() OVER (PARTITION BY x.vec_id, x.sub ORDER BY
-        |    list_dot_product(x.xs, x.xs) - 2 * list_dot_product(x.xs, c.cs)
-        |      + list_dot_product(c.cs, c.cs), c.code) AS rn
-        |  FROM subs x JOIN cb c USING (sub))
-        |SELECT vec_id,
-        |  max(CASE WHEN sub = 0 THEN code END) AS c0,
-        |  max(CASE WHEN sub = 1 THEN code END) AS c1,
-        |  max(CASE WHEN sub = 2 THEN code END) AS c2,
-        |  max(CASE WHEN sub = 3 THEN code END) AS c3
-        |FROM sc WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin,
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |$pqSubsCte,
+         |${pqAssignCtes(0, 8)}
+         |SELECT vec_id,
+         |  max(CASE WHEN sub = 0 THEN code END) AS c0,
+         |  max(CASE WHEN sub = 1 THEN code END) AS c1,
+         |  max(CASE WHEN sub = 2 THEN code END) AS c2,
+         |  max(CASE WHEN sub = 3 THEN code END) AS c3
+         |FROM sc WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin,
     "q41_keyed_fanout" ->
       """SELECT n_name, count(*) AS cnt,
         |CAST((sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) * 2 + count(*)) // (2 * count(*)) AS BIGINT) / 100.0 AS avg_bal
@@ -2584,15 +2577,13 @@ private[graft] object RegistryStatsMl {
       """SELECT min(doc_id) AS keeper_id, count(*) AS dupes FROM documents
         |GROUP BY text ORDER BY keeper_id""".stripMargin,
     "q45_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-        |s AS (SELECT query_id, neighbor_id,
-        |  list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c CROSS JOIN q WHERE neighbor_id <> query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id")},
+         |r AS (SELECT query_id, neighbor_id, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
+         |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
+         |ORDER BY query_id, rn""".stripMargin,
     "q46_approx_distinct" ->
       "SELECT event_type, count(DISTINCT user_id) AS users FROM events GROUP BY 1 ORDER BY 1",
     "q47_text_stats" ->
@@ -2653,22 +2644,7 @@ private[graft] object RegistryStatsMl {
         |FROM documents ORDER BY doc_id""".stripMargin,
     "q57_sessionize" -> sessionizeSql,
     "q58_ann_ivf" ->
-      """WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-        |cent AS (SELECT vec_id AS cell, vv AS cv FROM vecs WHERE vec_id < 16),
-        |scored AS (SELECT x.vec_id, x.vv, c.cell,
-        |  row_number() OVER (PARTITION BY x.vec_id ORDER BY
-        |    list_dot_product(x.vv, c.cv) / (sqrt(list_dot_product(x.vv, x.vv)) * sqrt(list_dot_product(c.cv, c.cv))) DESC,
-        |    c.cell) AS crn
-        |  FROM vecs x CROSS JOIN cent c),
-        |asg AS (SELECT vec_id, vv, cell FROM scored WHERE crn = 1),
-        |q AS (SELECT vec_id AS query_id, vv AS qv, cell FROM asg WHERE vec_id < 8),
-        |s AS (SELECT q.query_id, a.vec_id AS neighbor_id,
-        |  list_dot_product(q.qv, a.vv) / (sqrt(list_dot_product(q.qv, q.qv)) * sqrt(list_dot_product(a.vv, a.vv))) AS cosine
-        |  FROM q JOIN asg a ON a.cell = q.cell AND a.vec_id <> q.query_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-        |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
-        |ORDER BY query_id, rn""".stripMargin,
+      ivfTopKSql("crn = 1", "asg WHERE vec_id < 8"),
     "q59_stratified_sample" ->
       """SELECT doc_id, lang FROM (
         |  SELECT doc_id, lang,

@@ -1097,11 +1097,7 @@ private[graft] object RegistryWarehouseText {
         |  doc_id = min(doc_id) OVER (PARTITION BY pref) AS kept
         |FROM p ORDER BY doc_id""".stripMargin,
     "q105_cluster_reps" ->
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node, lab AS component FROM l$ccRounds),
+      s"""WITH ${nearDupComponentCtes("node")},
          |j AS (SELECT lab.component, lab.node AS doc_id, d.n_chars
          |  FROM lab JOIN documents d ON d.doc_id = lab.node),
          |r AS (SELECT *, count(*) OVER (PARTITION BY component) AS cluster_size,
@@ -1371,11 +1367,7 @@ private[graft] object RegistryWarehouseText {
     "q138_cluster_split" ->
       // q77's component CTE; unpaired docs are singleton clusters; the
       // same reduce-first hash as q109, applied to the component id
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node AS a, lab AS component FROM l$ccRounds),
+      s"""WITH ${nearDupComponentCtes("node AS a")},
          |dc AS (SELECT d.doc_id, coalesce(l.component, d.doc_id) AS component, d.n_chars
          |       FROM documents d LEFT JOIN lab l ON d.doc_id = l.a),
          |s AS (SELECT *, (((component % 1000000007) * 2654435761) % 1000000007) % 100 AS cell FROM dc)
@@ -1411,11 +1403,7 @@ private[graft] object RegistryWarehouseText {
         |  list_reduce(postings, (a, x) -> (a * 31 + x) % 1000000007) AS postings_fp
         |FROM p ORDER BY term""".stripMargin,
     "q77_neardup_components" ->
-      s"""WITH pairs AS MATERIALIZED ($q44Sql),
-         |e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-         |      UNION SELECT id_b, id_a FROM pairs),
-         |${minLabelCc()},
-|lab AS (SELECT node AS a, lab AS component FROM l$ccRounds)
+      s"""WITH ${nearDupComponentCtes("node AS a")}
          |SELECT a AS doc_id, component, component = a AS is_canonical
          |FROM lab ORDER BY doc_id""".stripMargin)
 }

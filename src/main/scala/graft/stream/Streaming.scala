@@ -743,15 +743,7 @@ object Streaming {
           .write.mode("overwrite").parquet(s"$work/index/$tag")
       }
     } { work =>
-      val asg = spark.read.parquet(s"$work/index/b*")
-      val total = asg.agg(count(lit(1)).as("__n"))
-      asg.groupBy(col("cell"))
-        .agg(count(lit(1)).as("n_vecs"))
-        .crossJoin(broadcast(total))
-        .select(col("cell").cast("long").as("cell"),
-          col("n_vecs").cast("long").as("n_vecs"),
-          expr("(10000 * n_vecs) div __n").cast("long").as("share_bp"),
-          expr("(1000 * n_vecs * 16) div __n").cast("long").as("load_milli"))
+      Similarity.ivfOccupancy(spark.read.parquet(s"$work/index/b*"))
     }
   }
 

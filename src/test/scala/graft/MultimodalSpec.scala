@@ -33,6 +33,9 @@ class MultimodalSpec extends SparkSpec {
     val wav = Multimodal.synthWav(nSamples = 123, amplitude = 4567, sampleRate = 16000)
     val f = Multimodal.WavDecoder.decode(wav)
     assert(f.toSeq == Seq(16000f, 123f, 4567f))
+    // the constant-amplitude writer is the per-sample writer over a filled array
+    assert(wav.toSeq ==
+      Multimodal.synthWavSamples(Array.fill(123)(4567.toShort), 16000).toSeq)
     assert(Multimodal.WavDecoder.decode("noise".getBytes).toSeq == Seq(-1f, -1f, -1f))
   }
 

@@ -32,6 +32,19 @@ class RegistrySpec extends AnyFunSuite {
       s"noOracle=${(q -- o).toSeq.sorted.mkString(",")} noQuery=${(o -- q).toSeq.sorted.mkString(",")}")
   }
 
+  // The two slips a nested stripMargin/interpolation fold can make: a margin
+  // bar left on a line (or a `||` line stripped down to one `|`), and a `${`
+  // that was never interpolated. Either one only fails at the DuckDB replay.
+  test("no oracle line starts with a lone margin bar or holds an unexpanded interpolation") {
+    val slips = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (key, sql) =>
+      sql.linesIterator.zipWithIndex.collect {
+        case (line, i) if line.trim.matches("""\|(?!\|).*""") || line.contains("${") =>
+          s"$key line ${i + 1}: $line"
+      }
+    }
+    assert(slips.isEmpty, slips.mkString("\n"))
+  }
+
   test("no part file registers a key another part already holds") {
     val parts = Seq(
       "RegistryReference" -> RegistryReference.queries,
