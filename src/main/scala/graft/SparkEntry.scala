@@ -91,6 +91,13 @@ object SparkEntry {
         expr("CAST(round(cosine * 10000) AS BIGINT)").as("cos_bp"))
   }
 
+  /** The ANN recall join: exact top-k `truth(query_id, neighbor_id)`
+    * left-joined with the approximate top-k `approx(query_id, neighbor_id,
+    * …)` renamed to (`__aq`, `__an`), so `count(__an)` counts the hits. */
+  private[graft] def recallJoin(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.join(approx.select(col("query_id").as("__aq"), col("neighbor_id").as("__an")),
+      col("query_id") === col("__aq") && col("neighbor_id") === col("__an"), "left")
+
   private[graft] def dedupIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     Dedup.componentIndex(T(s, dir, "documents"), "doc_id", "text",
       shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25,
@@ -404,6 +411,61 @@ object SparkEntry {
     s"(CASE WHEN length($e) = 0 THEN CAST(0 AS BIGINT) ELSE list_reduce(" +
       s"list_transform(range(1, length($e) + 1), i -> CAST(ord(substr($e, CAST(i AS INT), 1)) AS BIGINT)), " +
       s"(a, b) -> (a * 31 + b) % 1000000007) END)"
+
+  /** The oracle's ordered double sum: `term` folded left to right from 0.0
+    * in `order` — the IEEE additions the engine's sorted-array fold
+    * ([[graft.ops.Num.orderedSum]]) performs, in the same order. */
+  private[graft] def orderedSumSql(term: String, order: String): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list($term ORDER BY $order)), (a, b) -> a + b)"
+
+  /** q178's BM25 chain up to `top(doc_id, bm25)`, the 20 best documents
+    * for the query terms join/filter/scan: idf, the length normalizer and
+    * the ordered per-doc term fold, rounded to 4 dp. q189 fuses the same
+    * list. */
+  private[graft] val bm25TopCtes: String =
+    s"""raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
+       |    t -> length(t) > 0) AS arr FROM documents),
+       |lens AS (SELECT doc_id, len(arr) AS len FROM raw),
+       |st AS (SELECT count(*) AS n, sum(len) AS tl FROM lens),
+       |tok AS (SELECT doc_id, unnest(arr) AS tok FROM raw),
+       |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok
+       |  WHERE tok IN ('join', 'filter', 'scan') GROUP BY 1, 2),
+       |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
+       |sc AS (SELECT tf.doc_id, tf.tok,
+       |  ln(1.0 + (CAST(st.n - df.df AS DOUBLE) + 0.5) / (CAST(df.df AS DOUBLE) + 0.5)) *
+       |  (CAST(tf.tf AS DOUBLE) * 2.2) /
+       |  (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+       |    (CAST(lens.len AS DOUBLE) / (CAST(st.tl AS DOUBLE) / st.n)))) AS s
+       |  FROM tf JOIN df USING (tok) JOIN lens ON tf.doc_id = lens.doc_id CROSS JOIN st),
+       |agg AS (SELECT doc_id, (round(${orderedSumSql("s", "tok")}, 4) + 0.0) AS bm25 FROM sc GROUP BY 1),
+       |top AS (SELECT doc_id, bm25 FROM agg ORDER BY bm25 DESC, doc_id LIMIT 20)""".stripMargin
+
+  /** q209's silhouette oracle: pairwise Euclidean distance via norms and a
+    * dot product on the double-cast lists, quantized to the tenth-of-bp
+    * integer grid before any mean, over the sample of vec_ids divisible by
+    * greatest(`minMod`, |embeddings| div `per`) — the clamp the engine
+    * derives. */
+  private[graft] def silhouetteSql(minMod: Int, per: Int): String =
+    s"""WITH s AS (SELECT vec_id AS sid, label AS sl,
+       |    CAST(embedding AS DOUBLE[]) AS sv FROM embeddings
+       |    WHERE vec_id % greatest($minMod, (SELECT count(*) // $per FROM embeddings)) = 0),
+       |p AS (SELECT vec_id AS pid, label AS pl,
+       |    CAST(embedding AS DOUBLE[]) AS pv FROM embeddings),
+       |sn AS (SELECT sid, sl, sv, list_dot_product(sv, sv) AS snorm FROM s),
+       |pn AS (SELECT pid, pl, pv, list_dot_product(pv, pv) AS pnorm FROM p),
+       |pr AS (SELECT sid, sl, pl,
+       |    CAST(round(sqrt(greatest(snorm + pnorm - 2 * list_dot_product(sv, pv), 0))
+       |      * 100000, 0) AS BIGINT) AS d
+       |  FROM pn CROSS JOIN sn WHERE pid <> sid),
+       |pc AS (SELECT sid, sl, pl, sum(d) AS sm, count(*) AS n FROM pr GROUP BY 1, 2, 3),
+       |ab AS (SELECT sid, sl,
+       |    max(CASE WHEN pl = sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS a,
+       |    min(CASE WHEN pl <> sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS b
+       |  FROM pc GROUP BY 1, 2)
+       |SELECT sid AS vec_id, sl AS label,
+       |  (round(a / 100000, 4) + 0.0) AS a_dist, (round(b / 100000, 4) + 0.0) AS b_dist,
+       |  (round((b - a) / greatest(a, b), 4) + 0.0) AS silhouette
+       |FROM ab WHERE a IS NOT NULL AND b IS NOT NULL ORDER BY vec_id""".stripMargin
 
   /** q44's shingle → Karp–Rabin → 16-hash MinHash signature chain over a
     * `corpus(<id>, text)` CTE or table: `ws`, `sh(<id>, shingle)`, `rh` and
@@ -1443,7 +1505,7 @@ object SparkEntry {
     * map-side positional bigrams, same mixture text; the per-doc fold
     * orders by the distinct bigram. */
   private[graft] val q204Sql: String =
-    """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+    s"""WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
         |    t -> length(t) > 0) AS arr FROM documents),
         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(arr)),
         |    i -> {'a': arr[i], 'b': arr[i + 1]})) AS g FROM raw),
@@ -1460,8 +1522,7 @@ object SparkEntry {
         |  FROM dbc JOIN cf2 USING (a, b) JOIN cf1 USING (a)
         |  JOIN cfu ON dbc.b = cfu.t CROSS JOIN n),
         |agg AS (SELECT doc_id, sum(c) AS nb,
-        |    (round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY a, b)),
-        |      (x, y) -> x + y) / sum(c), 4) + 0.0) AS avg_nll
+        |    (round(-${orderedSumSql("term", "a, b")} / sum(c), 4) + 0.0) AS avg_nll
         |  FROM terms GROUP BY doc_id)
         |SELECT d.doc_id, CAST(coalesce(agg.nb, 0) AS BIGINT) AS n_bigrams,
         |  coalesce(agg.avg_nll, CAST(0.0 AS DOUBLE)) AS avg_nll

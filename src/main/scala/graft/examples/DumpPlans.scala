@@ -3,10 +3,10 @@ package graft.examples
 import java.nio.file.{Files, Paths}
 import java.util.regex.{Matcher, Pattern}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 
 /** The plan tool. Every key runs through its frame's OWN QueryExecution
   * (`toRdd`, drained where it runs, so no result rows reach the driver) and
@@ -21,6 +21,8 @@ import graft.SparkEntry
   *     hashes — to `<outDir>/<key>.txt`; PLANS.md is left alone.
   *
   * `sfDir` defaults to /root/testdata/sf0.001, the scale PLANS.md records.
+  * The session is [[graft.Bench.localSession]]'s (`SPARK_GRAFT_CPUS` cores
+  * and shuffle partitions, 4 by default — the count PLANS.md records).
   */
 object DumpPlans {
   /** What to look for in a key's plan; `PlanSpec` asserts these in CI. */
@@ -486,12 +488,7 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     def plan(key: String): String =
       try normalize(finalPlan(SparkEntry.queries(key)(spark, dir)))

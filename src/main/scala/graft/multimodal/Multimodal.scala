@@ -150,20 +150,68 @@ object Multimodal {
       val img = Codec.readImage(payload)
       if (img == null) return Array(-1f, -1f, -1f, -1f, -1f)
       val (w, h) = (img.getWidth, img.getHeight)
-      var (sr, sg, sb) = (0L, 0L, 0L)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-          x += 1
-        }
-        y += 1
-      }
+      val (sr, sg, sb) = rgbSum(img, 0, 0, w, h)
       val n = w.toLong * h
       Array(w.toFloat, h.toFloat, sr.toFloat / n, sg.toFloat / n, sb.toFloat / n)
     }
+  }
+
+  /** Per-channel sums (r, g, b) of `img`'s pixels in the box
+    * [x0, x1) × [y0, y1) — exact longs, the numerators of every decoded
+    * mean ([[ImageDecoder]], [[resizeBox]], [[sampleGifFrames]]). */
+  private def rgbSum(img: java.awt.image.BufferedImage,
+                     x0: Int, y0: Int, x1: Int, y1: Int): (Long, Long, Long) = {
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var y = y0
+    while (y < y1) {
+      var x = x0
+      while (x < x1) {
+        val p = img.getRGB(x, y)
+        sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (sr, sg, sb)
+  }
+
+  /** The 16-bit little-endian mono PCM samples of a WAV payload, or None
+    * when the payload does not parse or parses to another format (stereo,
+    * 8-bit, big-endian, float) — the format contract of [[whtFingerprint]],
+    * [[silenceSegments]] and [[downsampleBox]]: their sample loops would
+    * read a valid-but-different WAV wrongly instead of failing, so such a
+    * payload must quarantine. */
+  private def pcm16Mono(payload: Array[Byte]): Option[Array[Short]] = {
+    val in =
+      try javax.sound.sampled.AudioSystem.getAudioInputStream(
+        new java.io.ByteArrayInputStream(payload))
+      catch { case _: Exception => null }
+    val conforming = in != null && {
+      val f = in.getFormat
+      f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+        f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian
+    }
+    if (!conforming) None
+    else {
+      val bytes = in.readAllBytes()
+      Some(Array.tabulate(bytes.length / 2)(i =>
+        ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)).toShort))
+    }
+  }
+
+  /** The Row seam of the payload operators ([[dHash56]], [[pngChunkWalk]],
+    * [[resizeBox]], [[sampleGifFrames]], [[extractFeatures]]): inside one
+    * `mapPartitions` over `mm`, `rows` turns each row's (id, payload) into
+    * its output rows. The output schema is `idCol`, with its input type,
+    * followed by `fields`. */
+  private def payloadRows(mm: DataFrame, idCol: String, fields: StructField*)(
+      rows: (Any, Array[Byte]) => Iterator[Row]): DataFrame = {
+    val idIdx = mm.schema.fieldIndex(idCol)
+    val payloadIdx = mm.schema.fieldIndex("payload")
+    val schema = StructType(StructField(idCol, mm.schema(idIdx).dataType) +: fields)
+    val rdd = mm.rdd.mapPartitions(_.flatMap(r =>
+      rows(r.get(idIdx), r.getAs[Array[Byte]](payloadIdx))))
+    mm.sparkSession.createDataFrame(rdd, schema)
   }
 
   /** REAL audio decoder — JDK `javax.sound.sampled` (WAV/PCM), no external
@@ -232,40 +280,28 @@ object Multimodal {
     * One decode per row inside `mapPartitions` (same seam as
     * [[extractFeatures]]); undecodable payloads hash to −1 (quarantine).
     * Output: (idCol, dhash). */
-  def dHash56(mm: DataFrame, idCol: String): DataFrame = {
-    val spark = mm.sparkSession
-    val idIdx = mm.schema.fieldIndex(idCol)
-    val payloadIdx = mm.schema.fieldIndex("payload")
-    val idType = mm.schema(idIdx).dataType
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
-      StructField("dhash", LongType)))
-    val rdd = mm.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val img = Codec.readImage(payload)
-        val hash = if (img == null) -1L else {
-          var acc = 0L
-          val xs = math.min(img.getWidth - 1, 8)
-          val ys = math.min(img.getHeight, 7)
-          var y = 0
-          while (y < ys) {
-            var x = 0
-            while (x < xs) {
-              val a = (img.getRGB(x, y) >> 16) & 0xff
-              val b = (img.getRGB(x + 1, y) >> 16) & 0xff
-              if (b > a) acc |= 1L << (y * 8 + x)
-              x += 1
-            }
-            y += 1
+  def dHash56(mm: DataFrame, idCol: String): DataFrame =
+    payloadRows(mm, idCol, StructField("dhash", LongType)) { (id, payload) =>
+      val img = Codec.readImage(payload)
+      val hash = if (img == null) -1L else {
+        var acc = 0L
+        val xs = math.min(img.getWidth - 1, 8)
+        val ys = math.min(img.getHeight, 7)
+        var y = 0
+        while (y < ys) {
+          var x = 0
+          while (x < xs) {
+            val a = (img.getRGB(x, y) >> 16) & 0xff
+            val b = (img.getRGB(x + 1, y) >> 16) & 0xff
+            if (b > a) acc |= 1L << (y * 8 + x)
+            x += 1
           }
-          acc
+          y += 1
         }
-        Row(r.get(idIdx), hash)
+        acc
       }
+      Iterator.single(Row(id, hash))
     }
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** PNG CHUNK WALK — header-only metadata extraction WITHOUT decoding:
     * validates the 8-byte signature, walks the length-prefixed chunk
@@ -282,55 +318,45 @@ object Multimodal {
     * color_type, crc_ok). Unparsed IHDR fields stay −1.
     */
   def pngChunkWalk(mm: DataFrame, idCol: String): DataFrame = {
-    val spark = mm.sparkSession
-    val idIdx = mm.schema.fieldIndex(idCol)
-    val payloadIdx = mm.schema.fieldIndex("payload")
-    val idType = mm.schema(idIdx).dataType
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
+    val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
+    payloadRows(mm, idCol,
       StructField("n_chunks", LongType),
       StructField("chunk_types", StringType),
       StructField("width", LongType),
       StructField("height", LongType),
       StructField("bit_depth", LongType),
       StructField("color_type", LongType),
-      StructField("crc_ok", BooleanType)))
-    val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    val rdd = mm.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val b = r.getAs[Array[Byte]](payloadIdx)
-        def be32(i: Int): Long =
-          ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-            ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-        var structOk = b.length > 8 && (0 until 8).forall(j => (b(j) & 0xff) == sig(j))
-        var i = 8
-        var n = 0L
-        val types = new StringBuilder
-        var w = -1L; var h = -1L; var depth = -1L; var ct = -1L
-        var crcOk = true
-        while (structOk && i + 12 <= b.length) {
-          val len = be32(i).toInt
-          if (len < 0 || i + 12 + len > b.length) structOk = false
-          else {
-            val tpe = new String(b, i + 4, 4, "US-ASCII")
-            val crc = new java.util.zip.CRC32()
-            crc.update(b, i + 4, 4 + len)
-            if (crc.getValue != be32(i + 8 + len)) crcOk = false
-            if (n > 0) types.append(',')
-            types.append(tpe)
-            if (tpe == "IHDR" && len == 13) {
-              w = be32(i + 8); h = be32(i + 12)
-              depth = (b(i + 16) & 0xff).toLong; ct = (b(i + 17) & 0xff).toLong
-            }
-            n += 1
-            i += 12 + len
+      StructField("crc_ok", BooleanType)) { (id, b) =>
+      def be32(i: Int): Long =
+        ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
+          ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
+      var structOk = b.length > 8 && (0 until 8).forall(j => (b(j) & 0xff) == sig(j))
+      var i = 8
+      var n = 0L
+      val types = new StringBuilder
+      var w = -1L; var h = -1L; var depth = -1L; var ct = -1L
+      var crcOk = true
+      while (structOk && i + 12 <= b.length) {
+        val len = be32(i).toInt
+        if (len < 0 || i + 12 + len > b.length) structOk = false
+        else {
+          val tpe = new String(b, i + 4, 4, "US-ASCII")
+          val crc = new java.util.zip.CRC32()
+          crc.update(b, i + 4, 4 + len)
+          if (crc.getValue != be32(i + 8 + len)) crcOk = false
+          if (n > 0) types.append(',')
+          types.append(tpe)
+          if (tpe == "IHDR" && len == 13) {
+            w = be32(i + 8); h = be32(i + 12)
+            depth = (b(i + 16) & 0xff).toLong; ct = (b(i + 17) & 0xff).toLong
           }
+          n += 1
+          i += 12 + len
         }
-        Row(r.get(idIdx), n, types.toString,
-          w, h, depth, ct, structOk && crcOk && i == b.length)
       }
+      Iterator.single(Row(id, n, types.toString,
+        w, h, depth, ct, structOk && crcOk && i == b.length))
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** Deterministic WAV synthesis: 16-bit LE mono PCM, constant amplitude —
@@ -381,44 +407,35 @@ object Multimodal {
     mm.select(col(idCol).cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, payload) =>
-        val in =
-          try javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          catch { case _: Exception => null }
-        val conforming = in != null && {
-          val f = in.getFormat
-          f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-            f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian
-        }
-        if (!conforming) (id, -1L)
-        else {
-          val bytes = in.readAllBytes()
-          val n = math.min(bytes.length / 2, 64)
-          val a = Array.ofDim[Long](64)
-          var i = 0
-          while (i < n) {
-            a(i) = ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)).toShort.toLong
-            i += 1
-          }
-          var bit = 1
-          while (bit < 64) {
-            var j = 0
-            while (j < 64) {
-              if ((j & bit) == 0) {
-                val x = a(j); val y = a(j + bit)
-                a(j) = x + y; a(j + bit) = x - y
-              }
-              j += 1
+        pcm16Mono(payload) match {
+          case None => (id, -1L)
+          case Some(samples) =>
+            val n = math.min(samples.length, 64)
+            val a = Array.ofDim[Long](64)
+            var i = 0
+            while (i < n) {
+              a(i) = samples(i).toLong
+              i += 1
             }
-            bit <<= 1
-          }
-          var fp = 0L
-          var k = 1
-          while (k <= 32) {
-            if (a(k) > 0L) fp |= 1L << (k - 1)
-            k += 1
-          }
-          (id, fp)
+            var bit = 1
+            while (bit < 64) {
+              var j = 0
+              while (j < 64) {
+                if ((j & bit) == 0) {
+                  val x = a(j); val y = a(j + bit)
+                  a(j) = x + y; a(j + bit) = x - y
+                }
+                j += 1
+              }
+              bit <<= 1
+            }
+            var fp = 0L
+            var k = 1
+            while (k <= 32) {
+              if (a(k) > 0L) fp |= 1L << (k - 1)
+              k += 1
+            }
+            (id, fp)
         }
       }).toDF(idCol, "fp")
   }
@@ -442,42 +459,28 @@ object Multimodal {
     mm.select(col(idCol).cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, payload) =>
-        val in =
-          try javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          catch { case _: Exception => null }
-        // format contract, not just parse success: the PCM loop below reads
-        // 16-bit LE mono signed samples, so a VALID-but-different WAV
-        // (stereo, 8-bit, big-endian, float) must quarantine rather than
-        // yield silently wrong block/segment counts
-        val conforming = in != null && {
-          val f = in.getFormat
-          f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-            f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian
-        }
-        if (!conforming) (id, -1L, -1L, -1L)
-        else {
-          val bytes = in.readAllBytes()
-          val n = bytes.length / 2
-          val nb = (n + blockSamples - 1) / blockSamples
-          var segments = 0; var silent = 0; var prevSilent = true
-          var b = 0
-          while (b < nb) {
-            var peak = 0
-            var i = b * blockSamples
-            val end = math.min(n, i + blockSamples)
-            while (i < end) {
-              val s = ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)).toShort
-              val a = math.abs(s.toInt)
-              if (a > peak) peak = a
-              i += 1
+        pcm16Mono(payload) match {
+          case None => (id, -1L, -1L, -1L)
+          case Some(samples) =>
+            val n = samples.length
+            val nb = (n + blockSamples - 1) / blockSamples
+            var segments = 0; var silent = 0; var prevSilent = true
+            var b = 0
+            while (b < nb) {
+              var peak = 0
+              var i = b * blockSamples
+              val end = math.min(n, i + blockSamples)
+              while (i < end) {
+                val a = math.abs(samples(i).toInt)
+                if (a > peak) peak = a
+                i += 1
+              }
+              val isSil = peak < threshold
+              if (isSil) silent += 1 else if (prevSilent) segments += 1
+              prevSilent = isSil
+              b += 1
             }
-            val isSil = peak < threshold
-            if (isSil) silent += 1 else if (prevSilent) segments += 1
-            prevSilent = isSil
-            b += 1
-          }
-          (id, nb.toLong, silent.toLong, segments.toLong)
+            (id, nb.toLong, silent.toLong, segments.toLong)
         }
       }).toDF(idCol, "n_blocks", "n_silent", "n_segments")
   }
@@ -500,40 +503,31 @@ object Multimodal {
     mm.select(col(idCol).cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, payload) =>
-        val in =
-          try javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          catch { case _: Exception => null }
-        val conforming = in != null && {
-          val f = in.getFormat
-          f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-            f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian
-        }
-        if (!conforming) (id, -1L, -1L, -1L, -1L, -1L)
-        else {
-          val bytes = in.readAllBytes()
-          val n = bytes.length / 2
-          val nOut = n / k
-          var sumOut = 0L
-          var minOut = Long.MaxValue
-          var maxOut = Long.MinValue
-          var b = 0
-          while (b < nOut) {
-            var blockSum = 0L
-            var i = b * k
-            val end = i + k
-            while (i < end) {
-              blockSum += ((bytes(2 * i + 1) << 8) | (bytes(2 * i) & 0xff)).toShort
-              i += 1
+        pcm16Mono(payload) match {
+          case None => (id, -1L, -1L, -1L, -1L, -1L)
+          case Some(samples) =>
+            val n = samples.length
+            val nOut = n / k
+            var sumOut = 0L
+            var minOut = Long.MaxValue
+            var maxOut = Long.MinValue
+            var b = 0
+            while (b < nOut) {
+              var blockSum = 0L
+              var i = b * k
+              val end = i + k
+              while (i < end) {
+                blockSum += samples(i)
+                i += 1
+              }
+              val m = Math.floorDiv(blockSum, k.toLong)
+              sumOut += m
+              if (m < minOut) minOut = m
+              if (m > maxOut) maxOut = m
+              b += 1
             }
-            val m = Math.floorDiv(blockSum, k.toLong)
-            sumOut += m
-            if (m < minOut) minOut = m
-            if (m > maxOut) maxOut = m
-            b += 1
-          }
-          if (nOut == 0) (id, n.toLong, 0L, 0L, 0L, 0L)
-          else (id, n.toLong, nOut.toLong, sumOut, minOut, maxOut)
+            if (nOut == 0) (id, n.toLong, 0L, 0L, 0L, 0L)
+            else (id, n.toLong, nOut.toLong, sumOut, minOut, maxOut)
         }
       }).toDF(idCol, "n_in", "n_out", "sum_out", "min_out", "max_out")
   }
@@ -562,46 +556,25 @@ object Multimodal {
     * Scale shape: decode + downsample fan out per-partition before any
     * shuffle (one row in, outW·outH rows out — map-side); the operator
     * never shuffles pixels. Output: (idCol, ox, oy, pr, pg, pb). */
-  def resizeBox(mm: DataFrame, idCol: String, outW: Int, outH: Int): DataFrame = {
-    val spark = mm.sparkSession
-    val idIdx = mm.schema.fieldIndex(idCol)
-    val payloadIdx = mm.schema.fieldIndex("payload")
-    val idType = mm.schema(idIdx).dataType
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
+  def resizeBox(mm: DataFrame, idCol: String, outW: Int, outH: Int): DataFrame =
+    payloadRows(mm, idCol,
       StructField("ox", LongType), StructField("oy", LongType),
       StructField("pr", LongType), StructField("pg", LongType),
-      StructField("pb", LongType)))
-    val rdd = mm.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val img = Codec.readImage(payload)
-        if (img == null || outW <= 0 || outH <= 0 ||
-            img.getWidth % outW != 0 || img.getHeight % outH != 0)
-          Iterator.single(Row(r.get(idIdx), -1L, -1L, -1L, -1L, -1L))
-        else {
-          val fx = img.getWidth / outW
-          val fy = img.getHeight / outH
-          val box = fx.toLong * fy.toLong
-          (for (oy <- 0 until outH; ox <- 0 until outW) yield {
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var y = oy * fy
-            while (y < (oy + 1) * fy) {
-              var x = ox * fx
-              while (x < (ox + 1) * fx) {
-                val p = img.getRGB(x, y)
-                sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            Row(r.get(idIdx), ox.toLong, oy.toLong, sr / box, sg / box, sb / box)
-          }).iterator
-        }
+      StructField("pb", LongType)) { (id, payload) =>
+      val img = Codec.readImage(payload)
+      if (img == null || outW <= 0 || outH <= 0 ||
+          img.getWidth % outW != 0 || img.getHeight % outH != 0)
+        Iterator.single(Row(id, -1L, -1L, -1L, -1L, -1L))
+      else {
+        val fx = img.getWidth / outW
+        val fy = img.getHeight / outH
+        val box = fx.toLong * fy.toLong
+        (for (oy <- 0 until outH; ox <- 0 until outW) yield {
+          val (sr, sg, sb) = rgbSum(img, ox * fx, oy * fy, (ox + 1) * fx, (oy + 1) * fy)
+          Row(id, ox.toLong, oy.toLong, sr / box, sg / box, sb / box)
+        }).iterator
       }
     }
-    spark.createDataFrame(rdd, schema)
-  }
 
   /** Deterministic animated-GIF synthesis: one solid-color frame per entry
     * in `colors`, stored TYPE_BYTE_INDEXED with a 2-entry palette whose
@@ -648,8 +621,8 @@ object Multimodal {
     * exact per-channel pixel means — the n-rows-out-per-video fan-out of a
     * production frame sampler, happening map-side before any shuffle.
     *
-    * One `ImageReader` instance per PARTITION (`setInput` per payload) —
-    * codec lookup is not paid per row. Undecodable payloads emit a single
+    * One `ImageReader` instance per task thread ([[Codec]]'s cache,
+    * `setInput` per payload) — codec lookup is not paid per row. Undecodable payloads emit a single
     * quarantine row (frame_idx −1, features −1), mirroring [[ImageDecoder]].
     *
     * Output: (idCol, n_frames, frame_idx, width, height, mean_r, mean_g,
@@ -657,56 +630,35 @@ object Multimodal {
     * solid-color frames the gate synthesizes). */
   def sampleGifFrames(mm: DataFrame, idCol: String, step: Int): DataFrame = {
     require(step > 0, "frame stride must be positive")
-    val spark = mm.sparkSession
-    val idIdx = mm.schema.fieldIndex(idCol)
-    val payloadIdx = mm.schema.fieldIndex("payload")
-    val idType = mm.schema(idIdx).dataType
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
+    payloadRows(mm, idCol,
       StructField("n_frames", LongType),
       StructField("frame_idx", LongType),
       StructField("width", LongType),
       StructField("height", LongType),
       StructField("mean_r", LongType),
       StructField("mean_g", LongType),
-      StructField("mean_b", LongType)))
-    val rdd = mm.rdd.mapPartitions { rows =>
+      StructField("mean_b", LongType)) { (id, payload) =>
       val reader = Codec.reader("gif") // thread-cached; setInput per payload
-      rows.flatMap { r =>
-        val id = r.get(idIdx)
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val frames =
-          try {
-            reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(payload)), false, false)
-            // a non-GIF payload surfaces as zero readable frames (the JDK
-            // reader often reports 0 rather than throwing) — quarantine it
-            val n = reader.getNumImages(true)
-            if (n <= 0) throw new java.io.IOException("no readable frames")
-            (0 until n by step).map { i =>
-              val img = reader.read(i)
-              val (w, h) = (img.getWidth, img.getHeight)
-              var (sr, sg, sb) = (0L, 0L, 0L)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val p = img.getRGB(x, y)
-                  sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              val np = w.toLong * h
-              Row(id, n.toLong, i.toLong, w.toLong, h.toLong, sr / np, sg / np, sb / np)
-            }
-          } catch { case _: Exception =>
-            Seq(Row(id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
+      val frames =
+        try {
+          reader.setInput(new javax.imageio.stream.MemoryCacheImageInputStream(
+            new java.io.ByteArrayInputStream(payload)), false, false)
+          // a non-GIF payload surfaces as zero readable frames (the JDK
+          // reader often reports 0 rather than throwing) — quarantine it
+          val n = reader.getNumImages(true)
+          if (n <= 0) throw new java.io.IOException("no readable frames")
+          (0 until n by step).map { i =>
+            val img = reader.read(i)
+            val (w, h) = (img.getWidth, img.getHeight)
+            val (sr, sg, sb) = rgbSum(img, 0, 0, w, h)
+            val np = w.toLong * h
+            Row(id, n.toLong, i.toLong, w.toLong, h.toLong, sr / np, sg / np, sb / np)
           }
-        frames
-      }
+        } catch { case _: Exception =>
+          Seq(Row(id, -1L, -1L, -1L, -1L, -1L, -1L, -1L))
+        }
+      frames.iterator
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** Byte-window frame fan-out: emits one row per sampled window index with a
@@ -725,18 +677,8 @@ object Multimodal {
   /** Partition-parallel feature extraction over the payload column: the
     * decoder is instantiated once per partition and applied to every row —
     * never per-row init, never a driver-side loop. */
-  def extractFeatures(mm: DataFrame, idCol: String, decoder: Decoder): DataFrame = {
-    val spark = mm.sparkSession
-    val idIdx = mm.schema.fieldIndex(idCol)
-    val payloadIdx = mm.schema.fieldIndex("payload")
-    val idType = mm.schema(idIdx).dataType
-    val schema = StructType(Seq(
-      StructField(idCol, idType),
-      StructField("features", ArrayType(FloatType))))
-    val rdd = mm.rdd.mapPartitions { rows =>
-      val d = decoder // partition-local handle; real impl would open codec here
-      rows.map(r => Row(r.get(idIdx), d.decode(r.getAs[Array[Byte]](payloadIdx))))
+  def extractFeatures(mm: DataFrame, idCol: String, decoder: Decoder): DataFrame =
+    payloadRows(mm, idCol, StructField("features", ArrayType(FloatType))) {
+      (id, payload) => Iterator.single(Row(id, decoder.decode(payload)))
     }
-    spark.createDataFrame(rdd, schema)
-  }
 }

@@ -178,15 +178,21 @@ object Curation {
     * Spark at id ≈ 2^31.7 while the oracle's wider integers do not. */
   def trainValTestSplit(docs: DataFrame, idCol: String, sizeCol: String,
                         trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    val cell = pmod(pmod(pmod(col(idCol), lit(1000000007L)) * lit(2654435761L),
-      lit(1000000007L)), lit(100))
     docs
-      .withColumn("split",
-        when(cell < trainPct, "train")
-          .when(cell < trainPct + valPct, "val")
-          .otherwise(lit("test")))
+      .withColumn("split", splitOf(col(idCol), trainPct, valPct))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"), sum(col(sizeCol)).as("total_chars"))
+  }
+
+  /** The split label of [[trainValTestSplit]] and [[clusterSafeSplit]]:
+    * the reduce-first multiplicative hash of `key` into 100 cells, then
+    * train below `trainPct`, val below `trainPct + valPct`, test above. */
+  private def splitOf(key: Column, trainPct: Int, valPct: Int): Column = {
+    val cell = pmod(pmod(pmod(key, lit(1000000007L)) * lit(2654435761L),
+      lit(1000000007L)), lit(100))
+    when(cell < trainPct, "train")
+      .when(cell < trainPct + valPct, "val")
+      .otherwise(lit("test"))
   }
 
   /** Token-budget corpus selection: keep the highest-quality documents whose
@@ -239,13 +245,8 @@ object Curation {
       .filter(when(col("__comp") >= 0, lit(true)).otherwise(raise_error(
         lit("clusterSafeSplit: cluster/doc ids must be non-negative " +
           "(pmod cell-hash precondition)"))))
-    val cell = pmod(pmod(pmod(col("__comp"), lit(1000000007L)) * lit(2654435761L),
-      lit(1000000007L)), lit(100))
     withComp
-      .withColumn("split",
-        when(cell < trainPct, "train")
-          .when(cell < trainPct + valPct, "val")
-          .otherwise(lit("test")))
+      .withColumn("split", splitOf(col("__comp"), trainPct, valPct))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("__comp")).as("n_clusters"),

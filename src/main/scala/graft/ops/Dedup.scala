@@ -369,12 +369,7 @@ object Dedup {
     */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
                    k: Int, threshold: Double, maxShingleDf: Int = 100): DataFrame = {
-    val all = wordShingles(docs, idCol, textCol, k)
-    // shingles are distinct per doc, so count == document frequency
-    val rare = all.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxShingleDf).select("shingle")
-    val sh = all.join(rare, "shingle")
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+    val (sh, sizes) = rareShingles(docs, idCol, textCol, k, maxShingleDf)
     val shared = sh.as("x").join(sh.as("y"), Seq("shingle"))
       .filter(col(s"x.$idCol") < col(s"y.$idCol"))
       .groupBy(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
@@ -386,6 +381,20 @@ object Dedup {
         Num.roundz(col("shared").cast("double") / (col("na") + col("nb") - col("shared")), 4))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+  }
+
+  /** The shingle universe of [[ngramJaccard]] and [[ngramContainment]]:
+    * each doc's distinct word k-shingles, minus every shingle in more than
+    * `maxShingleDf` docs, and each doc's count `n` of the shingles kept.
+    * Returns (idCol, shingle) and (idCol, n). */
+  private def rareShingles(docs: DataFrame, idCol: String, textCol: String,
+                           k: Int, maxShingleDf: Int): (DataFrame, DataFrame) = {
+    val all = wordShingles(docs, idCol, textCol, k)
+    // shingles are distinct per doc, so count == document frequency
+    val rare = all.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
+      .filter(col("__df") <= maxShingleDf).select("shingle")
+    val sh = all.join(rare, "shingle")
+    (sh, sh.groupBy(col(idCol)).agg(count(lit(1)).as("n")))
   }
 
   /** Exact n-gram CONTAINMENT — [[ngramJaccard]]'s asymmetric twin,
@@ -407,11 +416,7 @@ object Dedup {
   def ngramContainment(docs: DataFrame, idCol: String, textCol: String,
                        k: Int, threshold: Double,
                        maxShingleDf: Int = 100): DataFrame = {
-    val all = wordShingles(docs, idCol, textCol, k)
-    val rare = all.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxShingleDf).select("shingle")
-    val sh = all.join(rare, "shingle")
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+    val (sh, sizes) = rareShingles(docs, idCol, textCol, k, maxShingleDf)
     sh.as("x").join(sh.as("y"), Seq("shingle"))
       .filter(col(s"x.$idCol") =!= col(s"y.$idCol"))
       .groupBy(col(s"x.$idCol").as("src_id"), col(s"y.$idCol").as("dst_id"))

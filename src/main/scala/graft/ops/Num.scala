@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{lit, round}
+import org.apache.spark.sql.functions.{expr, lit, round}
 
 /** Numeric display-value hygiene shared by every operator that surfaces a
   * rounded float.
@@ -44,4 +44,15 @@ object Num {
     * stays greppable).
     */
   def roundz(c: Column): Column = normZero(round(c, 0))
+
+  /** The ordered double sum: `aggregate` folds `term` (an expression over
+    * the element `t`) left to right from 0.0 over the array column `list`,
+    * which the caller builds with `sort_array(collect_list(struct(key…,
+    * term…)))`. Float addition is not associative, so a plain `sum` gives
+    * a result that depends on partitioning; folding in sorted key order
+    * makes Spark execute the same IEEE additions in the same order as the
+    * oracle's `list_reduce` over `list(term ORDER BY key)`.
+    */
+  def orderedSum(list: String, term: String): Column =
+    expr(s"aggregate($list, CAST(0.0 AS DOUBLE), (acc, t) -> acc + $term)")
 }

@@ -112,30 +112,8 @@ object Relational {
     */
   def asOfJoin(left: DataFrame, right: DataFrame, key: String,
                leftTs: String, rightTs: String,
-               payloadCols: Seq[String]): DataFrame = {
-    // the union namespace must be unambiguous: a left column named like a
-    // payload (or the markers) would be carried as the "as-of" value
-    val reserved = payloadCols ++ Seq("__ts", "__side", "__payload")
-    val clash = reserved.filter(left.columns.contains)
-    require(clash.isEmpty, s"left side must not contain column(s): ${clash.mkString(", ")}")
-    // payload travels as ONE struct so the carried value is an atomic right
-    // ROW — per-column last() would stitch fields from different right rows
-    // whenever a payload field is null, and could never represent a null
-    // field in the genuinely-latest row
-    val r = right.select(col(key), col(rightTs).as("__ts"), lit(0).as("__side"),
-      struct(payloadCols.map(col): _*).as("__payload"))
-    val l = left
-      .withColumn("__ts", col(leftTs))
-      .withColumn("__side", lit(1))
-    val u = l.unionByName(r, allowMissingColumns = true)
-    val w = Window.partitionBy(col(key))
-      .orderBy(col("__ts"), col("__side"), col("__payload"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = u.withColumn("__asof", last(col("__payload"), ignoreNulls = true).over(w))
-    val outCols = left.columns.map(col).toSeq ++
-      payloadCols.map(p => col(s"__asof.$p").as(p))
-    carried.filter(col("__side") === 1).select(outCols: _*)
-  }
+               payloadCols: Seq[String]): DataFrame =
+    asOfInterleave(left, right, key, leftTs, rightTs, payloadCols, forward = false)
 
   /** FORWARD as-of join — the mirror of [[asOfJoin]]: each left row is
     * enriched with the EARLIEST right row at-or-after its timestamp (the
@@ -154,20 +132,41 @@ object Relational {
     * `payloadCols` (null where no following right row). */
   def asOfJoinForward(left: DataFrame, right: DataFrame, key: String,
                       leftTs: String, rightTs: String,
-                      payloadCols: Seq[String]): DataFrame = {
+                      payloadCols: Seq[String]): DataFrame =
+    asOfInterleave(left, right, key, leftTs, rightTs, payloadCols, forward = true)
+
+  /** The body of [[asOfJoin]] (`forward = false`) and [[asOfJoinForward]]:
+    * left rows (side 1) interleave with right rows on (key, ts, side,
+    * payload) and one window carries the nearest right payload to each
+    * left row. Backward, right rows are side 0 (a tie at the left ts sorts
+    * first) and `last` looks back; forward, they are side 2 (a tie sorts
+    * after) and `first` looks ahead. */
+  private def asOfInterleave(left: DataFrame, right: DataFrame, key: String,
+                             leftTs: String, rightTs: String,
+                             payloadCols: Seq[String], forward: Boolean): DataFrame = {
+    // the union namespace must be unambiguous: a left column named like a
+    // payload (or the markers) would be carried as the "as-of" value
     val reserved = payloadCols ++ Seq("__ts", "__side", "__payload")
     val clash = reserved.filter(left.columns.contains)
     require(clash.isEmpty, s"left side must not contain column(s): ${clash.mkString(", ")}")
-    val r = right.select(col(key), col(rightTs).as("__ts"), lit(2).as("__side"),
+    // payload travels as ONE struct so the carried value is an atomic right
+    // ROW — per-column last() would stitch fields from different right rows
+    // whenever a payload field is null, and could never represent a null
+    // field in the genuinely-latest row
+    val r = right.select(col(key), col(rightTs).as("__ts"),
+      lit(if (forward) 2 else 0).as("__side"),
       struct(payloadCols.map(col): _*).as("__payload"))
     val l = left
       .withColumn("__ts", col(leftTs))
       .withColumn("__side", lit(1))
     val u = l.unionByName(r, allowMissingColumns = true)
-    val w = Window.partitionBy(col(key))
+    val ordered = Window.partitionBy(col(key))
       .orderBy(col("__ts"), col("__side"), col("__payload"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val carried = u.withColumn("__asof", first(col("__payload"), ignoreNulls = true).over(w))
+    val carried = u.withColumn("__asof",
+      if (forward) first(col("__payload"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+      else last(col("__payload"), ignoreNulls = true)
+        .over(ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val outCols = left.columns.map(col).toSeq ++
       payloadCols.map(p => col(s"__asof.$p").as(p))
     carried.filter(col("__side") === 1).select(outCols: _*)

@@ -231,7 +231,15 @@ object Similarity {
     * neighbors that straddle a cell boundary. One row per (vector, probed
     * cell). Centroids broadcast; one corpus scan. */
   def ivfProbe(vectors: DataFrame, centroids: DataFrame, idCol: String,
-               vecCol: String, nprobe: Int): DataFrame = {
+               vecCol: String, nprobe: Int): DataFrame =
+    rankedCells(vectors, centroids, idCol, vecCol, nprobe)
+      .select(col(idCol), col(vecCol), col("cell"))
+
+  /** The cell scoring of [[ivfProbe]] and [[ivfProbeRanked]]: every vector
+    * against every broadcast centroid by cosine, ranked `__rn` per vector
+    * (centroid-id tie-break) and cut at `maxProbe`. */
+  private def rankedCells(vectors: DataFrame, centroids: DataFrame, idCol: String,
+                          vecCol: String, maxProbe: Int): DataFrame = {
     val c = broadcast(centroids.select(
       col(idCol).as("cell"), col(vecCol).as("cv")))
     val scored = vectors.select(col(idCol), col(vecCol))
@@ -239,8 +247,7 @@ object Similarity {
       .withColumn("__cos", dot(vecCol, "cv") / (norm(vecCol) * norm("cv")))
     val w = Window.partitionBy(col(idCol)).orderBy(col("__cos").desc, col("cell"))
     scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nprobe)
-      .select(col(idCol), col(vecCol), col("cell"))
+      .filter(col("__rn") <= maxProbe)
   }
 
   /** IVF index-health audit of a 16-cell assignment `asg(cell, ...)`: per
@@ -395,18 +402,10 @@ object Similarity {
     * re-running a window per point — nprobe=1 rows double as the storage
     * assignment. Output: (id, vec, cell, probe_rank). */
   def ivfProbeRanked(vectors: DataFrame, centroids: DataFrame, idCol: String,
-                     vecCol: String, maxProbe: Int): DataFrame = {
-    val c = broadcast(centroids.select(
-      col(idCol).as("cell"), col(vecCol).as("cv")))
-    val scored = vectors.select(col(idCol), col(vecCol))
-      .crossJoin(c)
-      .withColumn("__cos", dot(vecCol, "cv") / (norm(vecCol) * norm("cv")))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("__cos").desc, col("cell"))
-    scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= maxProbe)
+                     vecCol: String, maxProbe: Int): DataFrame =
+    rankedCells(vectors, centroids, idCol, vecCol, maxProbe)
       .select(col(idCol), col(vecCol), col("cell"),
         col("__rn").as("probe_rank"))
-  }
 
   /** The probed-cell scoring core shared by [[ivfTopK]]/[[ivfTopKIndexed]]:
     * both sides already carry their cells. */
@@ -587,10 +586,7 @@ object Similarity {
     val qs = sliced(queries, "query_id", "qs")
     val cb = sliced(codebook, "code", "cs")
     val lut = qs.join(cb, Seq("sub"))
-      .select(col("query_id"), col("sub"), col("code"),
-        Num.roundz(greatest(lit(0.0),
-          dot("qs", "qs") - lit(2.0) * dot("qs", "cs") + dot("cs", "cs")) *
-          lit(100000d)).cast("long").as("__d_tb"))
+      .select(col("query_id"), col("sub"), col("code"), lutEntry)
     val unpivot = corpusCodes.select(col(idCol).as("neighbor_id"),
       posexplode(array((0 until m).map(i => col(s"c$i")): _*))
         .as(Seq("sub", "code")))
@@ -607,8 +603,22 @@ object Similarity {
         .join(broadcast(lut), Seq("query_id", "sub", "code"))
       case None => unpivot.join(broadcast(lut), Seq("sub", "code"))
     }
+    adcTopK(paired.filter(col("neighbor_id") =!= col("query_id")), k)
+  }
+
+  /** One ADC lookup-table entry `__d_tb` of query subvector `qs` against
+    * codeword `cs`: their squared L2, clamped at 0 and quantized to the
+    * tenth-of-bp integer grid. */
+  private def lutEntry: Column =
+    Num.roundz(greatest(lit(0.0),
+      dot("qs", "qs") - lit(2.0) * dot("qs", "cs") + dot("cs", "cs")) *
+      lit(100000d)).cast("long").as("__d_tb")
+
+  /** The ADC tail of [[pqSearchTopK]] and [[pqResidualSearchTopK]]: each
+    * (query, neighbor)'s joined LUT entries `__d_tb` summed into one exact
+    * long, then the k smallest per query through [[topKPerQuery]]. */
+  private def adcTopK(paired: DataFrame, k: Int): DataFrame = {
     val scored = paired
-      .filter(col("neighbor_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("__d_tb")).as("__dist"))
       // negate into topKPerQuery's (cosine desc) order: exact — the longs
@@ -704,10 +714,7 @@ object Similarity {
       Seq(col(idCol).as("query_id"), col("cell")), "qs")
     val cb = sliced(codebook, Seq(col(idCol).as("code")), "cs")
     val lut = qs.join(cb, Seq("sub"))
-      .select(col("query_id"), col("cell"), col("sub"), col("code"),
-        Num.roundz(greatest(lit(0.0),
-          dot("qs", "qs") - lit(2.0) * dot("qs", "cs") + dot("cs", "cs")) *
-          lit(100000d)).cast("long").as("__d_tb"))
+      .select(col("query_id"), col("cell"), col("sub"), col("code"), lutEntry)
     // a corpus vector lives in exactly one cell, so (query, neighbor) pairs
     // are unique across probed cells — no dedup needed, and each pair's sum
     // draws from the single (query, cell) table that matches its neighbor
@@ -715,21 +722,12 @@ object Similarity {
       .join(corpusRes.select(col(idCol).as("neighbor_id"), col("cell")), Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
     val codes = pqEncode(corpusRes, codebook, idCol, "rvec", m, subDim)
-    val scored = codes
+    adcTopK(codes
       .select(col(idCol).as("neighbor_id"),
         posexplode(array((0 until m).map(i => col(s"c$i")): _*))
           .as(Seq("sub", "code")))
       .join(cand, Seq("neighbor_id"))
-      .join(broadcast(lut), Seq("query_id", "cell", "sub", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("__d_tb")).as("__dist"))
-      // negate into topKPerQuery's (cosine desc) order: exact — the longs
-      // are far below 2^53, so the double round-trips bit-perfectly
-      .select(col("query_id"), col("neighbor_id"),
-        negate(col("__dist").cast("double")).as("cosine"))
-    topKPerQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"),
-        negate(col("cosine")).cast("long").as("adist_tb"), col("rn"))
+      .join(broadcast(lut), Seq("query_id", "cell", "sub", "code")), k)
   }
 
   /** Scalar quantization (SQ8): each dimension affinely mapped onto 0..255

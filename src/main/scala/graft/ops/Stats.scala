@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Comparative statistics over grouped streams: distribution drift,
@@ -67,7 +67,7 @@ object Stats {
         sort_array(collect_list(struct(col("bin"), col("term")))).as("__t"))
       .select(col("g").as(groupCol),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
-        Num.roundz(expr("aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)"), 4)
+        Num.roundz(Num.orderedSum("__t", "t.term"), 4)
           .as("psi"))
   }
 
@@ -116,22 +116,28 @@ object Stats {
     * combine, then a per-group fold over that group's DISTINCT categories
     * only — the collect_list is bounded by the category domain, never by
     * row count. */
-  def categoricalEntropy(df: DataFrame, groupCol: String, catCol: String): DataFrame = {
+  def categoricalEntropy(df: DataFrame, groupCol: String, catCol: String): DataFrame =
+    shareFold(df, groupCol, catCol, p => p * log(p),
+      total => Num.roundz(negate(total), 4).as("entropy"))
+
+  /** The body [[categoricalEntropy]] and [[hhiByGroup]] share: per group,
+    * count each category, turn the count into its share p = c/n, and fold
+    * `term(p)` over the categories in sorted order. Output: (groupCol, n,
+    * n_cats, `out(folded sum)`). */
+  private def shareFold(df: DataFrame, groupCol: String, catCol: String,
+                        term: Column => Column, out: Column => Column): DataFrame = {
     val counts = df.groupBy(col(groupCol), col(catCol))
       .agg(count(lit(1)).as("c"))
     val totals = counts.groupBy(col(groupCol)).agg(sum(col("c")).as("n"))
     counts.join(broadcast(totals), Seq(groupCol))
       .select(col(groupCol), col("n"), col(catCol).as("cat"),
-        ((col("c").cast("double") / col("n")) *
-          log(col("c").cast("double") / col("n"))).as("term"))
+        term(col("c").cast("double") / col("n")).as("term"))
       .groupBy(col(groupCol))
       .agg(first(col("n")).as("__n"), count(lit(1)).as("n_cats"),
         sort_array(collect_list(struct(col("cat"), col("term")))).as("__t"))
       .select(col(groupCol), col("__n").cast("long").as("n"),
         col("n_cats").cast("long").as("n_cats"),
-        Num.roundz(negate(expr(
-          "aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)")), 4)
-          .as("entropy"))
+        out(Num.orderedSum("__t", "t.term")))
   }
 
   /** Per-slice conversion rate vs the global baseline, with a
@@ -198,7 +204,7 @@ object Stats {
       .groupBy(col(groupCol))
       .agg(first(col("n")).as("__n"), sort_array(collect_list(col("__cell"))).as("__t"))
       .select(col(groupCol), col("__n").cast("long").as("n"),
-        Num.roundz(expr("aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)"), 4)
+        Num.roundz(Num.orderedSum("__t", "t.term"), 4)
           .as("mi"))
   }
 
@@ -245,22 +251,9 @@ object Stats {
     * Same single count shuffle and category-ordered fold as entropy; the
     * two surface complementary readings of the same distribution (entropy:
     * "how many effective categories"; HHI: "how dominated by the top"). */
-  def hhiByGroup(df: DataFrame, groupCol: String, catCol: String): DataFrame = {
-    val counts = df.groupBy(col(groupCol), col(catCol))
-      .agg(count(lit(1)).as("c"))
-    val totals = counts.groupBy(col(groupCol)).agg(sum(col("c")).as("n"))
-    counts.join(broadcast(totals), Seq(groupCol))
-      .select(col(groupCol), col("n"), col(catCol).as("cat"),
-        ((col("c").cast("double") / col("n")) *
-          (col("c").cast("double") / col("n"))).as("term"))
-      .groupBy(col(groupCol))
-      .agg(first(col("n")).as("__n"), count(lit(1)).as("n_cats"),
-        sort_array(collect_list(struct(col("cat"), col("term")))).as("__t"))
-      .select(col(groupCol), col("__n").cast("long").as("n"),
-        col("n_cats").cast("long").as("n_cats"),
-        Num.roundz(expr("aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)"), 4)
-          .as("hhi"))
-  }
+  def hhiByGroup(df: DataFrame, groupCol: String, catCol: String): DataFrame =
+    shareFold(df, groupCol, catCol, p => p * p,
+      total => Num.roundz(total, 4).as("hhi"))
 
   /** CUSUM changepoint probe over a per-group ordered series: with K
     * buckets and total S, the k-th cumulative sum of (K·xᵢ − S) crosses
@@ -586,8 +579,7 @@ object Stats {
       .select(col("__na").cast("long").as("n_a"),
         col("__nb").cast("long").as("n_b"),
         col("n_cats").cast("long").as("n_cats"),
-        Num.roundz(expr(
-          "aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)") / 2, 4)
+        Num.roundz(Num.orderedSum("__t", "t.term") / 2, 4)
           .as("jsd"))
   }
 
@@ -628,15 +620,7 @@ object Stats {
     // monotone long image of the leading order column (timestamp → epoch
     // seconds): equal keys share a bin, bins inherit the order
     val binKeyNum = col(orderCols.head).cast("long")
-    val fracs = (1 until bins).map(_.toDouble / bins)
-    val cutsRow = deltas
-      .agg(percentile_approx(binKeyNum, array(fracs.map(lit): _*), lit(10000)))
-      .first()
-    val cuts: Seq[Any] =
-      if (cutsRow.isNullAt(0)) Nil else cutsRow.getSeq[Any](0).distinct
-    val binCol = cuts.foldLeft(lit(0)) { (acc, c) =>
-      acc + when(binKeyNum >= lit(c), 1).otherwise(0)
-    }
+    val binCol = TwoPhase.rangeBin(deltas, binKeyNum, bins)
     val wseg = Window.partitionBy(col(keyCol), col("__bin"))
       .orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -696,8 +680,7 @@ object Stats {
         col("x"))
       .groupBy(col("g"))
       .agg(sort_array(collect_list(struct(col("x"), col("term")))).as("__t"))
-      .select(col("g"), expr(
-        "aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)").as("tsum"))
+      .select(col("g"), Num.orderedSum("__t", "t.term").as("tsum"))
     // group terms fold over |groups| rows, g-sorted
     gstat.join(within, Seq("g"))
       .select(col("g"), col("n"), col("ng"),
@@ -711,11 +694,9 @@ object Stats {
         sort_array(collect_list(struct(col("g"), col("wterm")))).as("__w"))
       .select(col("__n").cast("long").as("n"),
         col("n_groups").cast("long").as("n_groups"),
-        Num.roundz(expr(
-          "aggregate(__b, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.bterm)"), 4)
+        Num.roundz(Num.orderedSum("__b", "t.bterm"), 4)
           .as("t_between"),
-        Num.roundz(expr(
-          "aggregate(__w, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.wterm)"), 4)
+        Num.roundz(Num.orderedSum("__w", "t.wterm"), 4)
           .as("t_within"))
       .withColumn("t_total", Num.roundz(col("t_between") + col("t_within"), 4))
   }
@@ -969,19 +950,8 @@ object Stats {
     * all windows partition by group. Raw rows are touched once. */
   def ksDriftByGroup(df: DataFrame, groupCol: String, unitsCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = df.groupBy(col(groupCol).as("__g"), col(unitsCol).as("__u"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
-    val groups = counts.groupBy(col("__g")).agg(sum("__c").as("__ng"))
-    val units = counts.groupBy(col("__u")).agg(sum("__c").as("__cu"))
-    val grand = counts.agg(sum("__c").as("__n"))
-    val grid = units.crossJoin(broadcast(groups))
-      .join(counts, Seq("__g", "__u"), "left")
-      .withColumn("__cg", coalesce(col("__c"), lit(0L)))
-    val w = Window.partitionBy(col("__g")).orderBy(col("__u"))
+    val (grid, _, grand) = ecdfGrid(df, groupCol, unitsCol)
     val cums = grid
-      .withColumn("__cumG", sum("__cg").over(w))
-      .withColumn("__cumAll", sum("__cu").over(w))
       .crossJoin(broadcast(grand))
       .withColumn("__nr", col("__n") - col("__ng"))
       .withColumn("__diff", abs(col("__cumG") * col("__nr") -
@@ -998,6 +968,31 @@ object Stats {
         (col("d_num").cast(dec) * col("d_num").cast(dec) * lit(1000000L).cast(dec) >
           lit(1844164L).cast(dec) * col("__ng").cast(dec) * col("__nr").cast(dec) *
             (col("__ng") + col("__nr")).cast(dec)).as("drift_flag"))
+  }
+
+  /** The group×unit ECDF grid [[ksDriftByGroup]] and [[emdDriftByGroup]]
+    * share: one (group, unit) count shuffle (checkpointed), every pooled
+    * distinct unit crossed with every group and zero-filled, then the
+    * group's cumulative count `__cumG` and the pooled one `__cumAll` in
+    * unit order. Returns the grid (`__g`, `__u`, `__ng`, `__cu`, `__cg`,
+    * the two cums), its group-partitioned unit-ordered window (a caller's
+    * further columns over it share the one exchange) and the 1-row grand
+    * total `__n`. */
+  private def ecdfGrid(df: DataFrame, groupCol: String,
+                       unitsCol: String): (DataFrame, WindowSpec, DataFrame) = {
+    val counts = df.groupBy(col(groupCol).as("__g"), col(unitsCol).as("__u"))
+      .agg(count(lit(1)).as("__c"))
+      .localCheckpoint(eager = false)
+    val groups = counts.groupBy(col("__g")).agg(sum("__c").as("__ng"))
+    val units = counts.groupBy(col("__u")).agg(sum("__c").as("__cu"))
+    val grand = counts.agg(sum("__c").as("__n"))
+    val w = Window.partitionBy(col("__g")).orderBy(col("__u"))
+    val grid = units.crossJoin(broadcast(groups))
+      .join(counts, Seq("__g", "__u"), "left")
+      .withColumn("__cg", coalesce(col("__c"), lit(0L)))
+      .withColumn("__cumG", sum("__cg").over(w))
+      .withColumn("__cumAll", sum("__cu").over(w))
+    (grid, w, grand)
   }
 
   /** Exact AUC (= Mann-Whitney U / (nP·nN)) of an integer score column
@@ -1475,19 +1470,8 @@ object Stats {
     * the unit lead share ONE exchange), ≤ |groups| output rows. */
   def emdDriftByGroup(df: DataFrame, groupCol: String, unitsCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    val counts = df.groupBy(col(groupCol).as("__g"), col(unitsCol).as("__u"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
-    val groups = counts.groupBy(col("__g")).agg(sum("__c").as("__ng"))
-    val units = counts.groupBy(col("__u")).agg(sum("__c").as("__cu"))
-    val grand = counts.agg(sum("__c").as("__n"))
-    val grid = units.crossJoin(broadcast(groups))
-      .join(counts, Seq("__g", "__u"), "left")
-      .withColumn("__cg", coalesce(col("__c"), lit(0L)))
-    val w = Window.partitionBy(col("__g")).orderBy(col("__u"))
+    val (grid, w, grand) = ecdfGrid(df, groupCol, unitsCol)
     val cums = grid
-      .withColumn("__cumG", sum("__cg").over(w))
-      .withColumn("__cumAll", sum("__cu").over(w))
       .withColumn("__gap", coalesce(lead(col("__u"), 1).over(w) - col("__u"), lit(0L)))
       .crossJoin(broadcast(grand))
       .withColumn("__nr", col("__n") - col("__ng"))

@@ -157,10 +157,9 @@ object TextAnalysis {
       .agg(sort_array(collect_list(struct(col("tok"), col("c")))).as("__tc"),
         sum(col("c")).as("__n"))
       .select(col(idCol), col("__n").cast("long").as("n_tokens"),
-        Num.roundz(negate(expr(
-          "aggregate(__tc, CAST(0.0 AS DOUBLE), (acc, t) -> acc + " +
-            "(CAST(t.c AS DOUBLE) / CAST(__n AS DOUBLE)) * " +
-            "ln(CAST(t.c AS DOUBLE) / CAST(__n AS DOUBLE)))")), 4).as("entropy"))
+        Num.roundz(negate(Num.orderedSum("__tc",
+          "(CAST(t.c AS DOUBLE) / CAST(__n AS DOUBLE)) * " +
+            "ln(CAST(t.c AS DOUBLE) / CAST(__n AS DOUBLE))")), 4).as("entropy"))
     docs.select(col(idCol)).join(stats, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
@@ -199,9 +198,8 @@ object TextAnalysis {
         sum(col("c")).as("__nt"),
         first(col("__n")).as("__N"))
       .select(col(idCol), col("__nt").cast("long").as("n_tokens"),
-        Num.roundz(negate(expr(
-          "aggregate(__tc, CAST(0.0 AS DOUBLE), (acc, t) -> acc + " +
-            "CAST(t.c AS DOUBLE) * ln(CAST(t.cf AS DOUBLE) / CAST(__N AS DOUBLE)))"))
+        Num.roundz(negate(Num.orderedSum("__tc",
+          "CAST(t.c AS DOUBLE) * ln(CAST(t.cf AS DOUBLE) / CAST(__N AS DOUBLE))"))
           / col("__nt"), 4).as("avg_nll"))
     docs.select(col(idCol)).join(stats, Seq(idCol), "left")
       .select(col(idCol),
@@ -395,8 +393,7 @@ object TextAnalysis {
           (lit(0.25) + lit(0.75) * (col("__len").cast("double") / col("__avg")))))
     val perDoc = scored.groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("tok"), col("__s")))).as("__t"))
-      .select(col(idCol), Num.roundz(expr(
-        "aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.__s)"), 4)
+      .select(col(idCol), Num.roundz(Num.orderedSum("__t", "t.__s"), 4)
         .as("bm25"))
       .orderBy(col("bm25").desc, col(idCol)).limit(k)
     perDoc.withColumn("rank",
@@ -468,8 +465,7 @@ object TextAnalysis {
       .agg(sum(col("c")).as("__nb"),
         sort_array(collect_list(struct(col("a"), col("b"), col("term")))).as("__t"))
       .select(col(idCol), col("__nb").cast("long").as("n_bigrams"),
-        Num.roundz(negate(expr(
-          "aggregate(__t, CAST(0.0 AS DOUBLE), (acc, t) -> acc + t.term)"))
+        Num.roundz(negate(Num.orderedSum("__t", "t.term"))
           / col("__nb"), 4).as("avg_nll"))
     docs.select(col(idCol)).join(stats, Seq(idCol), "left")
       .select(col(idCol),

@@ -37,6 +37,24 @@ import org.apache.spark.sql.functions._
   */
 object TwoPhase {
 
+  /** Step 1, the range bin of `binKey` in `df` (an integer column, 0 until
+    * `bins`): the `bins - 1` range cutpoints come from one approx-sketch
+    * pass collected as literals (accuracy only shapes bin balance), and
+    * the bin is the number of cutpoints <= `binKey` — a codegen'd indicator
+    * ladder, so equal keys always share a bin and bins inherit the key's
+    * order. */
+  private[ops] def rangeBin(df: DataFrame, binKey: Column, bins: Int): Column = {
+    val fracs = (1 until bins).map(_.toDouble / bins)
+    val cutsRow = df
+      .agg(percentile_approx(binKey, array(fracs.map(lit): _*), lit(10000)).as("c"))
+      .first()
+    val cuts: Seq[Any] =
+      if (cutsRow.isNullAt(0)) Nil else cutsRow.getSeq[Any](0).distinct
+    cuts.foldLeft(lit(0)) { (acc, c) =>
+      acc + when(binKey >= lit(c), 1).otherwise(0)
+    }
+  }
+
   /** Inclusive running `sum(value)` over the total order `order`, added as
     * column `out` (LongType). Returns the frame and the grand total (the
     * per-bin totals are already on the driver, so the total is free — q96's
@@ -50,20 +68,7 @@ object TwoPhase {
         s"prefixSum: input already has a column named '$tmp' (reserved as a " +
           "temp column by the two-phase rewrite) — rename it first")
     }
-    // phase 1: range cutpoints for the bin key — one approx-sketch pass,
-    // collected as (bins-1) literals. Accuracy only shapes bin balance.
-    val fracs = (1 until bins).map(_.toDouble / bins)
-    val cutsRow = df
-      .agg(percentile_approx(binKey, array(fracs.map(lit): _*), lit(10000)).as("c"))
-      .first()
-    val cuts: Seq[Any] =
-      if (cutsRow.isNullAt(0)) Nil else cutsRow.getSeq[Any](0).distinct
-    // bin = number of cutpoints <= binKey: a codegen'd indicator ladder, so
-    // equal keys always share a bin and bins inherit the key's order
-    val binCol = cuts.foldLeft(lit(0)) { (acc, c) =>
-      acc + when(binKey >= lit(c), 1).otherwise(0)
-    }
-    val binned = df.withColumn("__bin", binCol)
+    val binned = df.withColumn("__bin", rangeBin(df, binKey, bins))
     // phase 3 input: per-bin totals — `bins` rows of metadata, prefix-scanned
     // on the driver (this is a scan over bin COUNT, not over data)
     val totals = binned.groupBy(col("__bin"))
@@ -123,16 +128,7 @@ object TwoPhase {
       require(!df.columns.contains(tmp),
         s"prefixSumKeyed: input already has a column named '$tmp' (reserved)")
     }
-    val fracs = (1 until bins).map(_.toDouble / bins)
-    val cutsRow = df
-      .agg(percentile_approx(binKey, array(fracs.map(lit): _*), lit(10000)).as("c"))
-      .first()
-    val cuts: Seq[Any] =
-      if (cutsRow.isNullAt(0)) Nil else cutsRow.getSeq[Any](0).distinct
-    val binCol = cuts.foldLeft(lit(0)) { (acc, c) =>
-      acc + when(binKey >= lit(c), 1).otherwise(0)
-    }
-    val binned = df.withColumn("__bin", binCol)
+    val binned = df.withColumn("__bin", rangeBin(df, binKey, bins))
     val totals = binned.groupBy(col(keyCol), col("__bin"))
       .agg(sum(value).cast("long").as("__tot"))
       .collect()

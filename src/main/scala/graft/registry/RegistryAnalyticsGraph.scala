@@ -504,10 +504,7 @@ private[graft] object RegistryAnalyticsGraph {
         .select(col("query_id"), col("neighbor_id"))
       val approx = Similarity.ivfTopK(emb, queries, emb.filter(col("vec_id") < 16),
         "vec_id", "embedding", 5)
-        .select(col("query_id").as("__aq"), col("neighbor_id").as("__an"))
-      truth.join(approx,
-          col("query_id") === col("__aq") && col("neighbor_id") === col("__an"),
-          "left")
+      recallJoin(truth, approx)
         .groupBy(col("query_id"))
         .agg(count(col("__an")).as("hits"))
         .select(col("query_id"), col("hits").cast("long").as("hits"),
@@ -657,10 +654,7 @@ private[graft] object RegistryAnalyticsGraph {
         m = 4, subDim = 16)
       val approx = Similarity.pqSearchTopK(codes, queries, queries,
         "vec_id", "embedding", m = 4, subDim = 16, k = 5)
-        .select(col("query_id").as("__aq"), col("neighbor_id").as("__an"))
-      truth.join(approx,
-          col("query_id") === col("__aq") && col("neighbor_id") === col("__an"),
-          "left")
+      recallJoin(truth, approx)
         .groupBy(col("query_id"))
         .agg(count(col("__an")).as("hits"))
         .select(col("query_id"), col("hits").cast("long").as("hits"),
@@ -1068,23 +1062,7 @@ private[graft] object RegistryAnalyticsGraph {
     "q178_bm25" ->
       // identical float shapes: idf, the length normalizer, the ordered
       // per-doc term fold; rank over the ROUNDED score after the limit
-      """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    t -> length(t) > 0) AS arr FROM documents),
-        |lens AS (SELECT doc_id, len(arr) AS len FROM raw),
-        |st AS (SELECT count(*) AS n, sum(len) AS tl FROM lens),
-        |tok AS (SELECT doc_id, unnest(arr) AS tok FROM raw),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok
-        |  WHERE tok IN ('join', 'filter', 'scan') GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.tok,
-        |  ln(1.0 + (CAST(st.n - df.df AS DOUBLE) + 0.5) / (CAST(df.df AS DOUBLE) + 0.5)) *
-        |  (CAST(tf.tf AS DOUBLE) * 2.2) /
-        |  (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |    (CAST(lens.len AS DOUBLE) / (CAST(st.tl AS DOUBLE) / st.n)))) AS s
-        |  FROM tf JOIN df USING (tok) JOIN lens ON tf.doc_id = lens.doc_id CROSS JOIN st),
-        |agg AS (SELECT doc_id, (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list(s ORDER BY tok)), (a, b) -> a + b), 4) + 0.0) AS bm25 FROM sc GROUP BY 1),
-        |top AS (SELECT doc_id, bm25 FROM agg ORDER BY bm25 DESC, doc_id LIMIT 20)
+      s"""WITH $bm25TopCtes
         |SELECT doc_id, bm25,
         |  CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rank
         |FROM top ORDER BY rank""".stripMargin,
@@ -1220,23 +1198,7 @@ private[graft] object RegistryAnalyticsGraph {
     "q189_rrf_fusion" ->
       // q178's BM25 list fused with a length ranking; reciprocal terms in
       // fixed order, fused rank over the ROUNDED score
-      """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    t -> length(t) > 0) AS arr FROM documents),
-        |lens AS (SELECT doc_id, len(arr) AS len FROM raw),
-        |st AS (SELECT count(*) AS n, sum(len) AS tl FROM lens),
-        |tok AS (SELECT doc_id, unnest(arr) AS tok FROM raw),
-        |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok
-        |  WHERE tok IN ('join', 'filter', 'scan') GROUP BY 1, 2),
-        |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT tf.doc_id, tf.tok,
-        |  ln(1.0 + (CAST(st.n - df.df AS DOUBLE) + 0.5) / (CAST(df.df AS DOUBLE) + 0.5)) *
-        |  (CAST(tf.tf AS DOUBLE) * 2.2) /
-        |  (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |    (CAST(lens.len AS DOUBLE) / (CAST(st.tl AS DOUBLE) / st.n)))) AS s
-        |  FROM tf JOIN df USING (tok) JOIN lens ON tf.doc_id = lens.doc_id CROSS JOIN st),
-        |agg AS (SELECT doc_id, (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list(s ORDER BY tok)), (a, b) -> a + b), 4) + 0.0) AS bm25 FROM sc GROUP BY 1),
-        |top AS (SELECT doc_id, bm25 FROM agg ORDER BY bm25 DESC, doc_id LIMIT 20),
+      s"""WITH $bm25TopCtes,
         |la AS (SELECT doc_id,
         |  CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT) AS rank_0 FROM top),
         |lb AS (SELECT doc_id, rank_1 FROM (SELECT doc_id,
@@ -1252,7 +1214,7 @@ private[graft] object RegistryAnalyticsGraph {
     "q190_jsd" ->
       // 0·ln0 ≡ 0 encoded as the same CASE guard; category-sorted fold,
       // halved then rounded — identical formula text
-      """WITH p AS (SELECT event_type AS cat,
+      s"""WITH p AS (SELECT event_type AS cat,
         |    CASE WHEN CAST(ts AS DATE) < DATE '2024-01-16' THEN 'a' ELSE 'b' END AS period
         |  FROM events),
         |c AS (SELECT cat, count(*) FILTER (WHERE period = 'a') AS ca,
@@ -1266,8 +1228,7 @@ private[graft] object RegistryAnalyticsGraph {
         |  FROM r)
         |SELECT CAST(max(na) AS BIGINT) AS n_a, CAST(max(nb) AS BIGINT) AS n_b,
         |  CAST(count(*) AS BIGINT) AS n_cats,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY cat)),
-        |    (a, b) -> a + b) / 2, 4) + 0.0) AS jsd
+        |  (round(${orderedSumSql("term", "cat")} / 2, 4) + 0.0) AS jsd
         |FROM s""".stripMargin,
     "q191_kcore" ->
       // the same 3 peel rounds unrolled; degree recounted AFTER the last
@@ -1322,7 +1283,7 @@ private[graft] object RegistryAnalyticsGraph {
     "q194_theil" ->
       // same decomposition: member folds per group, group folds over the
       // nation list, total DEFINED as between + within
-      """WITH rows0 AS (SELECT n_name AS g,
+      s"""WITH rows0 AS (SELECT n_name AS g,
         |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS x
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  JOIN nation ON c_nationkey = n_nationkey),
@@ -1331,19 +1292,15 @@ private[graft] object RegistryAnalyticsGraph {
         |gs AS (SELECT g, ng, sxg, n, sx,
         |    CAST(sxg AS DOUBLE) / ng AS mug, CAST(sx AS DOUBLE) / n AS mu
         |  FROM grp, tot),
-        |w AS (SELECT r.g, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list((r.x / gs.mug) * ln(r.x / gs.mug) ORDER BY r.x)),
-        |    (a, b) -> a + b) AS tsum
+        |w AS (SELECT r.g, ${orderedSumSql("(r.x / gs.mug) * ln(r.x / gs.mug)", "r.x")} AS tsum
         |  FROM rows0 r JOIN gs USING (g) GROUP BY r.g),
         |f AS (SELECT gs.g, gs.n, gs.ng,
         |    (CAST(gs.sxg AS DOUBLE) / CAST(gs.sx AS DOUBLE)) * ln(gs.mug / gs.mu) AS bterm,
         |    (CAST(gs.sxg AS DOUBLE) / CAST(gs.sx AS DOUBLE)) * (w.tsum / gs.ng) AS wterm
         |  FROM gs JOIN w USING (g)),
         |z AS (SELECT CAST(max(n) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_groups,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(bterm ORDER BY g)),
-        |    (a, b) -> a + b), 4) + 0.0) AS t_between,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(wterm ORDER BY g)),
-        |    (a, b) -> a + b), 4) + 0.0) AS t_within
+        |  (round(${orderedSumSql("bterm", "g")}, 4) + 0.0) AS t_between,
+        |  (round(${orderedSumSql("wterm", "g")}, 4) + 0.0) AS t_within
         |  FROM f)
         |SELECT n, n_groups, t_between, t_within,
         |  (round(t_between + t_within, 4) + 0.0) AS t_total FROM z""".stripMargin,
@@ -1590,49 +1547,11 @@ private[graft] object RegistryAnalyticsGraph {
       // DotProduct accumulation bit for bit; the sample mod is the same
       // greatest(4, n div 500) count clamp the engine derives (= 4 at every
       // fixture SF, so the historical hash is unchanged there)
-      """WITH s AS (SELECT vec_id AS sid, label AS sl,
-        |    CAST(embedding AS DOUBLE[]) AS sv FROM embeddings
-        |    WHERE vec_id % greatest(4, (SELECT count(*) // 500 FROM embeddings)) = 0),
-        |p AS (SELECT vec_id AS pid, label AS pl,
-        |    CAST(embedding AS DOUBLE[]) AS pv FROM embeddings),
-        |sn AS (SELECT sid, sl, sv, list_dot_product(sv, sv) AS snorm FROM s),
-        |pn AS (SELECT pid, pl, pv, list_dot_product(pv, pv) AS pnorm FROM p),
-        |pr AS (SELECT sid, sl, pl,
-        |    CAST(round(sqrt(greatest(snorm + pnorm - 2 * list_dot_product(sv, pv), 0))
-        |      * 100000, 0) AS BIGINT) AS d
-        |  FROM pn CROSS JOIN sn WHERE pid <> sid),
-        |pc AS (SELECT sid, sl, pl, sum(d) AS sm, count(*) AS n FROM pr GROUP BY 1, 2, 3),
-        |ab AS (SELECT sid, sl,
-        |    max(CASE WHEN pl = sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS a,
-        |    min(CASE WHEN pl <> sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS b
-        |  FROM pc GROUP BY 1, 2)
-        |SELECT sid AS vec_id, sl AS label,
-        |  (round(a / 100000, 4) + 0.0) AS a_dist, (round(b / 100000, 4) + 0.0) AS b_dist,
-        |  (round((b - a) / greatest(a, b), 4) + 0.0) AS silhouette
-        |FROM ab WHERE a IS NOT NULL AND b IS NOT NULL ORDER BY vec_id""".stripMargin,
+      silhouetteSql(4, 500),
     "q442_silhouette_scaled" ->
       // q209's pairwise-Euclidean-on-the-integer-grid oracle with the
       // sample mod derived from the same count the engine uses
-      """WITH s AS (SELECT vec_id AS sid, label AS sl,
-        |    CAST(embedding AS DOUBLE[]) AS sv FROM embeddings
-        |    WHERE vec_id % greatest(1, (SELECT count(*) // 128 FROM embeddings)) = 0),
-        |p AS (SELECT vec_id AS pid, label AS pl,
-        |    CAST(embedding AS DOUBLE[]) AS pv FROM embeddings),
-        |sn AS (SELECT sid, sl, sv, list_dot_product(sv, sv) AS snorm FROM s),
-        |pn AS (SELECT pid, pl, pv, list_dot_product(pv, pv) AS pnorm FROM p),
-        |pr AS (SELECT sid, sl, pl,
-        |    CAST(round(sqrt(greatest(snorm + pnorm - 2 * list_dot_product(sv, pv), 0))
-        |      * 100000, 0) AS BIGINT) AS d
-        |  FROM pn CROSS JOIN sn WHERE pid <> sid),
-        |pc AS (SELECT sid, sl, pl, sum(d) AS sm, count(*) AS n FROM pr GROUP BY 1, 2, 3),
-        |ab AS (SELECT sid, sl,
-        |    max(CASE WHEN pl = sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS a,
-        |    min(CASE WHEN pl <> sl THEN CAST(sm AS DOUBLE) / CAST(n AS DOUBLE) END) AS b
-        |  FROM pc GROUP BY 1, 2)
-        |SELECT sid AS vec_id, sl AS label,
-        |  (round(a / 100000, 4) + 0.0) AS a_dist, (round(b / 100000, 4) + 0.0) AS b_dist,
-        |  (round((b - a) / greatest(a, b), 4) + 0.0) AS silhouette
-        |FROM ab WHERE a IS NOT NULL AND b IS NOT NULL ORDER BY vec_id""".stripMargin,
+      silhouetteSql(1, 128),
     "q210_chi2_assoc" ->
       // per-cell chi-square contribution in exact micro-units:
       // (o·n − r·c)²·10⁶ // (r·c·n) on hugeint ≡ the engine's decimal floor

@@ -354,10 +354,7 @@ private[graft] object RegistryAnnDedup {
           centroids = emb.filter(col("vec_id") >= 100 && col("vec_id") < 116),
           codebook = emb.filter(col("vec_id") >= 200 && col("vec_id") < 208),
           "vec_id", "embedding", m = 4, subDim = 16, k = 5, nprobe = 2)
-        .select(col("query_id").as("__aq"), col("neighbor_id").as("__an"))
-      truth.join(approx,
-          col("query_id") === col("__aq") && col("neighbor_id") === col("__an"),
-          "left")
+      recallJoin(truth, approx)
         .groupBy(col("query_id"))
         .agg(count(col("__an")).as("hits"))
         .select(col("query_id"), col("hits").cast("long").as("hits"),
@@ -595,10 +592,7 @@ private[graft] object RegistryAnnDedup {
         val cvecs = Similarity.microCentroidVectors(cent, "vec_id", "embedding")
         val approx = Similarity.ivfTopK(emb, queries, cvecs,
             "vec_id", "embedding", 5, nprobe = 1)
-          .select(col("query_id").as("__aq"), col("neighbor_id").as("__an"))
-        truth.join(approx,
-            col("query_id") === col("__aq") && col("neighbor_id") === col("__an"),
-            "left")
+        recallJoin(truth, approx)
           .groupBy(col("query_id")).agg(count(col("__an")).cast("long").as(as))
       }
       val seedH = hits(
@@ -733,10 +727,7 @@ private[graft] object RegistryAnnDedup {
             centroids = emb.filter(col("vec_id") >= 100 && col("vec_id") < 116),
             codebook = emb.filter(col("vec_id") >= 200 && col("vec_id") < 208),
             "vec_id", "embedding", m = 4, subDim = 16, k = 5, nprobe = np)
-          .select(col("query_id").as("__aq"), col("neighbor_id").as("__an"))
-        truth.join(approx,
-            col("query_id") === col("__aq") && col("neighbor_id") === col("__an"),
-            "left")
+        recallJoin(truth, approx)
           .agg(count(col("__an")).as("hits"))
           .select(lit(np.toLong).as("nprobe"), col("hits").cast("long").as("hits"),
             ops.Num.roundz(col("hits") / lit(40.0), 4).as("recall"))
@@ -758,10 +749,7 @@ private[graft] object RegistryAnnDedup {
           m = 4, subDim = 16)
         val approx = Similarity.pqSearchTopK(codes, queries, cb,
             "vec_id", "embedding", m = 4, subDim = 16, k = 5)
-          .select(col("query_id").as("__aq"), col("neighbor_id").as("__an"))
-        truth.join(approx,
-            col("query_id") === col("__aq") && col("neighbor_id") === col("__an"),
-            "left")
+        recallJoin(truth, approx)
           .agg(count(col("__an")).as("hits"))
           .select(lit(kk.toLong).as("codebook_k"),
             col("hits").cast("long").as("hits"),
@@ -2606,7 +2594,7 @@ private[graft] object RegistryAnnDedup {
     "q267_stream_psi" ->
       // q158's smoothed-term/bin-fold machinery; reference = batch 0 of
       // the arithmetic id-span batching, one PSI row per later batch
-      """WITH m AS (SELECT max(event_id) AS mx FROM events),
+      s"""WITH m AS (SELECT max(event_id) AS mx FROM events),
         |e AS (SELECT event_id // ((mx + 4) // 4) AS b,
         |    least(CAST(round(value * 100, 0) AS BIGINT) // 5000, 9) AS bin
         |  FROM events, m),
@@ -2626,8 +2614,7 @@ private[graft] object RegistryAnnDedup {
         |  CROSS JOIN na JOIN tb ON tb.b = s.b)
         |SELECT b AS batch_id, CAST(any_value(na) AS BIGINT) AS n_a,
         |  CAST(any_value(nb) AS BIGINT) AS n_b,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY bin)),
-        |    (a, b) -> a + b), 4) + 0.0) AS psi
+        |  (round(${orderedSumSql("term", "bin")}, 4) + 0.0) AS psi
         |FROM terms GROUP BY b ORDER BY batch_id""".stripMargin,
     "q271_source_dup_matrix" ->
       // the q44 pair list joined to sources, grouped by the unordered pair

@@ -689,7 +689,7 @@ private[graft] object RegistryReference {
         |FROM dev JOIN md USING (event_type) ORDER BY event_type, day""".stripMargin,
     "q148_unigram_logprob" ->
       // the identical ordered fold as q140, over corpus-frequency terms
-      """WITH raw AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS arr FROM documents),
+      s"""WITH raw AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS arr FROM documents),
         |tok AS (SELECT doc_id, unnest(arr) AS tok FROM raw),
         |tk AS (SELECT doc_id, tok, count(*) AS c FROM tok WHERE length(tok) > 0 GROUP BY 1, 2),
         |cf AS (SELECT tok, sum(c) AS cf FROM tk GROUP BY 1),
@@ -699,8 +699,7 @@ private[graft] object RegistryReference {
         |  CAST(c AS DOUBLE) * ln(CAST(cf AS DOUBLE) / CAST(n.n AS DOUBLE)) AS term
         |  FROM tk JOIN cf USING (tok) CROSS JOIN n),
         |s AS (SELECT t.doc_id,
-        |  (round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY tok)),
-        |    (a, b) -> a + b) / CAST(any_value(sz.nt) AS DOUBLE), 4) + 0.0) AS avg_nll
+        |  (round(-${orderedSumSql("term", "tok")} / CAST(any_value(sz.nt) AS DOUBLE), 4) + 0.0) AS avg_nll
         |  FROM terms t JOIN sz ON t.doc_id = sz.doc_id GROUP BY t.doc_id)
         |SELECT d.doc_id, CAST(coalesce(sz.nt, 0) AS BIGINT) AS n_tokens,
         |  coalesce(s.avg_nll, CAST(0.0 AS DOUBLE)) AS avg_nll
@@ -792,7 +791,7 @@ private[graft] object RegistryReference {
     "q158_psi_drift" ->
       // identical smoothed-term formula and bin-ordered fold as the Spark
       // side; the explicit spine makes absent bins contribute in both
-      """WITH e AS (SELECT event_type AS g,
+      s"""WITH e AS (SELECT event_type AS g,
         |  CASE WHEN strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') < '2024-01-16'
         |    THEN 'a' ELSE 'b' END AS p,
         |  least(CAST(round(value * 100, 0) AS BIGINT) // 5000, 9) AS bin FROM events),
@@ -809,8 +808,7 @@ private[graft] object RegistryReference {
         |  JOIN t ON spine.g = t.g)
         |SELECT g AS event_type, CAST(any_value(na) AS BIGINT) AS n_a,
         |  CAST(any_value(nb) AS BIGINT) AS n_b,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY bin)),
-        |    (a, b) -> a + b), 4) + 0.0) AS psi
+        |  (round(${orderedSumSql("term", "bin")}, 4) + 0.0) AS psi
         |FROM terms GROUP BY g ORDER BY 1""".stripMargin,
     "q159_group_corr" ->
       // exact integer power sums (HUGEINT ≡ Spark decimal(38,0)), then the
@@ -834,15 +832,14 @@ private[graft] object RegistryReference {
         |FROM s ORDER BY 1""".stripMargin,
     "q160_event_entropy" ->
       // the q148-style ordered fold, over each day's category terms
-      """WITH c AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
+      s"""WITH c AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
         |  event_type AS cat, count(*) AS c FROM events GROUP BY 1, 2),
         |t AS (SELECT day, sum(c) AS n FROM c GROUP BY 1),
         |terms AS (SELECT c.day, t.n, c.cat,
         |  (CAST(c.c AS DOUBLE) / t.n) * ln(CAST(c.c AS DOUBLE) / t.n) AS term
         |  FROM c JOIN t USING (day))
         |SELECT day, CAST(any_value(n) AS BIGINT) AS n, count(*) AS n_cats,
-        |  (round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY cat)),
-        |    (a, b) -> a + b), 4) + 0.0) AS entropy
+        |  (round(-${orderedSumSql("term", "cat")}, 4) + 0.0) AS entropy
         |FROM terms GROUP BY day ORDER BY day""".stripMargin,
     "q161_pmi_bigrams" ->
       // pmi = ln cb − ln Nb − ln cx − ln cy + 2·ln Nu, the exact term order
@@ -938,7 +935,7 @@ private[graft] object RegistryReference {
         |SELECT * FROM su UNION ALL SELECT * FROM se ORDER BY col_name""".stripMargin,
     "q167_mutual_info" ->
       // same ln-space cell terms as the Spark side, folded in (x, y) order
-      """WITH e AS (SELECT
+      s"""WITH e AS (SELECT
         |  date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS week,
         |  event_type,
         |  date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7 AS dow FROM events),
@@ -953,8 +950,7 @@ private[graft] object RegistryReference {
         |  JOIN my ON cells.week = my.week AND cells.y = my.y
         |  JOIN t ON cells.week = t.week)
         |SELECT week, CAST(any_value(n) AS BIGINT) AS n,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY x, y)),
-        |    (a, b) -> a + b), 4) + 0.0) AS mi
+        |  (round(${orderedSumSql("term", "x, y")}, 4) + 0.0) AS mi
         |FROM terms GROUP BY week ORDER BY week""".stripMargin,
     "q168_gini" ->
       // rank-sum identity over grouped values: a run of c equal values v
@@ -972,15 +968,14 @@ private[graft] object RegistryReference {
         |FROM a ORDER BY 1""".stripMargin,
     "q169_hhi" ->
       // same count shuffle + ordered fold as q160, squared-share terms
-      """WITH c AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
+      s"""WITH c AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
         |  event_type AS cat, count(*) AS c FROM events GROUP BY 1, 2),
         |t AS (SELECT day, sum(c) AS n FROM c GROUP BY 1),
         |terms AS (SELECT c.day, t.n, c.cat,
         |  (CAST(c.c AS DOUBLE) / t.n) * (CAST(c.c AS DOUBLE) / t.n) AS term
         |  FROM c JOIN t USING (day))
         |SELECT day, CAST(any_value(n) AS BIGINT) AS n, count(*) AS n_cats,
-        |  (round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY cat)),
-        |    (a, b) -> a + b), 4) + 0.0) AS hhi
+        |  (round(${orderedSumSql("term", "cat")}, 4) + 0.0) AS hhi
         |FROM terms GROUP BY day ORDER BY day""".stripMargin,
     "q170_changepoint" ->
       // K-scaled CUSUM keeps everything in exact longs; ties resolve to the

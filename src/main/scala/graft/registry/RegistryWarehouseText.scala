@@ -1214,7 +1214,7 @@ private[graft] object RegistryWarehouseText {
     "q140_token_entropy" ->
       // the identical ordered fold: per-token terms listed in sorted token
       // order, summed left-to-right from 0.0 — same IEEE ops, same order
-      """WITH raw AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS arr FROM documents),
+      s"""WITH raw AS (SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS arr FROM documents),
         |tok AS (SELECT doc_id, unnest(arr) AS tok FROM raw),
         |tk AS (SELECT doc_id, tok, count(*) AS c FROM tok WHERE length(tok) > 0 GROUP BY 1, 2),
         |sz AS (SELECT doc_id, sum(c) AS n FROM tk GROUP BY 1),
@@ -1222,8 +1222,7 @@ private[graft] object RegistryWarehouseText {
         |  (CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) AS term
         |  FROM tk JOIN sz USING (doc_id)),
         |ent AS (SELECT doc_id,
-        |  (round(-list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(term ORDER BY tok)),
-        |    (a, b) -> a + b), 4) + 0.0) AS entropy
+        |  (round(-${orderedSumSql("term", "tok")}, 4) + 0.0) AS entropy
         |  FROM terms GROUP BY doc_id)
         |SELECT d.doc_id, CAST(coalesce(sz.n, 0) AS BIGINT) AS n_tokens,
         |  coalesce(ent.entropy, CAST(0.0 AS DOUBLE)) AS entropy

@@ -170,6 +170,26 @@ class MultimodalSpec extends SparkSpec {
     val out = Multimodal.silenceSegments(mm, "doc_id", blockSamples = 10,
       threshold = 250).as[(Long, Long, Long, Long)].collect().toSeq
     assert(out == Seq((7L, -1L, -1L, -1L)))
+    // the two other operators under the same format contract
+    val fp = Multimodal.whtFingerprint(mm, "doc_id").as[(Long, Long)].collect().toSeq
+    assert(fp == Seq((7L, -1L)))
+    val down = Multimodal.downsampleBox(mm, "doc_id", k = 4)
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    assert(down == Seq((7L, -1L, -1L, -1L, -1L, -1L)))
+  }
+
+  test("downsampleBox floor-means the full k-sample blocks of a conforming WAV") {
+    // k = 3 over [10, -3, 7 | 0, -5, -6 | 1]: block sums 14 and -11 floor
+    // to 4 and -4 (floor, not truncation), the 1-sample tail is dropped;
+    // 2 samples make no full block; a non-WAV payload quarantines
+    val mm = Seq(
+      (1L, Multimodal.synthWavSamples(Array[Short](10, -3, 7, 0, -5, -6, 1), 8000)),
+      (2L, Multimodal.synthWavSamples(Array[Short](5, 5), 8000)),
+      (3L, "not audio".getBytes("UTF-8"))).toDF("doc_id", "payload")
+    val out = Multimodal.downsampleBox(mm, "doc_id", k = 3).orderBy("doc_id")
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    assert(out == Seq((1L, 7L, 2L, 0L, -4L, 4L), (2L, 2L, 0L, 0L, 0L, 0L),
+      (3L, -1L, -1L, -1L, -1L, -1L)))
   }
 
   test("extractFeatures runs the decoder per partition over every row") {

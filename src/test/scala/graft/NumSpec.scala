@@ -74,6 +74,26 @@ class NumSpec extends SparkSpec {
       s"tiny-negative r must normalize to +0.0, got $r bits ${bits(r).toHexString}")
   }
 
+  test("orderedSum: bit-identical over 1 and 8 partitions, equal to a left fold in key order") {
+    // ±1e16 beside small terms: 1e16 + x rounds x away unless the big
+    // terms have cancelled first, so the sum depends on the addition order
+    // and only a fold in key order reproduces
+    val terms = (0 until 64).map { k =>
+      (k, Seq(1e16, 1.0 + k, -1e16, 0.5 * k)(k % 4))
+    }
+    val rows = new scala.util.Random(7).shuffle(terms)
+    val byKey = terms.foldLeft(0.0)(_ + _._2)
+    assert(bits(rows.foldLeft(0.0)(_ + _._2)) != bits(byKey),
+      "the terms must sum differently in row order and in key order")
+    def folded(parts: Int): Double = rows.toDF("k", "term").repartition(parts)
+      .groupBy()
+      .agg(sort_array(collect_list(struct(col("k"), col("term")))).as("__t"))
+      .select(Num.orderedSum("__t", "t.term")).as[Double].head()
+    val (one, eight) = (folded(1), folded(8))
+    assert(bits(one) == bits(eight), s"1 partition $one vs 8 partitions $eight")
+    assert(bits(one) == bits(byKey), s"$one vs the key-order left fold $byKey")
+  }
+
   test("every oracle round( is +0.0-normalized or integer-destined") {
     // paren-match each round(...) in each oracle SQL; it must either be
     // directly inside CAST( (integer-destined) or followed by `+ 0.0`.
