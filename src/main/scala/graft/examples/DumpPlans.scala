@@ -443,12 +443,27 @@ object DumpPlans {
     }
   }
 
+  /** A lambda variable's name (`lambda x_5`): its suffix is a JVM-global
+    * counter, so it moves with how many lambdas were built before. */
+  private val LambdaVar = "(?<=lambda )[A-Za-z]\\w*_\\d+\\b".r
+  private val SuffixedName = "\\b([A-Za-z]\\w*)_(\\d+)\\b".r
+
+  /** Spark abbreviates a scan's metadata values (`DataFilters`, …) to
+    * `spark.sql.maxMetadataStringLength` characters of the RAW text, so the
+    * cut moves with exprId digit widths: [[normalize]] masks a cut value, and
+    * the dump session raises the length so its own plans print them whole. */
+  private val MetadataStringLength = Int.MaxValue
+
   private[graft] def normalize(plan: String): String = {
     val ids = scala.collection.mutable.HashMap[String, Int]()
     val idRe = "#(\\d+)".r
     val renumbered = idRe.replaceAllIn(canonExpandArgs(plan),
       m => "#" + ids.getOrElseUpdate(m.group(1), ids.size + 1))
-    renumbered
+    // lambda variables renumbered by first appearance, like the exprIds
+    val lambdas = LambdaVar.findAllIn(renumbered).distinct.zipWithIndex.toMap
+    SuffixedName.replaceAllIn(renumbered, m => Matcher.quoteReplacement(
+      lambdas.get(m.matched).fold(m.matched)(i => s"${m.group(1)}_${i + 1}")))
+      .replaceAll("(?m)(\\w+): (?:(?!, \\w+: ).)*?\\.\\.\\.(?=, \\w+: |$)", "$1: <cut>")
       .replaceAll("plan_id=\\d+", "plan_id=x")
       .replaceAll("\\[id=#?\\d+\\]", "[id=x]")
       .replaceAll("Statistics\\([^)]*\\)", "Statistics(x)")
@@ -490,6 +505,7 @@ object DumpPlans {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = Bench.localSession()
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.maxMetadataStringLength", MetadataStringLength)
     def plan(key: String): String =
       try normalize(finalPlan(SparkEntry.queries(key)(spark, dir)))
       finally spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))

@@ -1713,6 +1713,29 @@ class PlanSpec extends SparkSpec {
     val scan = "Scan ExistingRDD (1)\nArguments: [node#1L], MapPartitionsRDD[42] " +
       "at localCheckpoint at Dedup.scala:%d, ExistingRDD, UnknownPartitioning(0)"
     assert(fp(normalize(scan.format(637))) == fp(normalize(scan.format(559))))
+    // a lambda variable's suffix is a JVM-global counter: how many lambdas
+    // were built before this frame, not the plan
+    val lambdaA = "Output [2]: [vec_id#1L, zip_with(cast(embedding#2 as array<double>), __cv#3, " +
+      "lambdafunction((lambda x_1#4 - lambda y_2#5), lambda x_1#4, lambda y_2#5, false)) AS rvec#6]"
+    val lambdaB = lambdaA.replaceAll("#(\\d)", "#12$1").replace("x_1", "x_5").replace("y_2", "y_6")
+    assert(normalize(lambdaA) == normalize(lambdaB), s"\n${normalize(lambdaA)}\n---\n${normalize(lambdaB)}")
+    assert(normalize(lambdaA) != normalize(
+      lambdaA.replace("(lambda x_1#4 - lambda y_2#5)", "(lambda y_2#5 - lambda x_1#4)")))
+    // Spark cuts a scan's metadata value at spark.sql.maxMetadataStringLength
+    // characters of the RAW text, so the cut moves with exprId digit widths
+    val scanRest = "Format: Parquet, Location: InMemoryFileIndex [<path>, ... 2 entries], " +
+      "PartitionFilters: [], PushedFilters: [IsNotNull(vec_id), IsNotNull(embedding), " +
+      "LessThan(vec_id,8), IsNotNull(label)], ReadSchema: struct<vec_id:bigint,embedding:array<float>,label:int>"
+    val cutNarrow = "+- FileScan parquet [vec_id#12L,embedding#13,label#14] Batched: true, DataFilters: " +
+      "[isnotnull(vec_id#12L), isnotnull(embedding#13), (vec_id#12L < 8), (size(embedding#13, true) = 64..., " +
+      scanRest
+    val cutWide = "+- FileScan parquet [vec_id#1204L,embedding#1205,label#1206] Batched: true, DataFilters: " +
+      "[isnotnull(vec_id#1204L), isnotnull(embedding#1205), (vec_id#1204L < 8), (size(embedding#1205, tr..., " +
+      scanRest
+    assert(normalize(cutNarrow) == normalize(cutWide), s"\n${normalize(cutNarrow)}\n---\n${normalize(cutWide)}")
+    // the mask takes the cut value only: the other entries still count
+    assert(normalize(cutNarrow) != normalize(cutNarrow.replace("LessThan(vec_id,8)", "LessThan(vec_id,16)")))
+    assert(normalize(cutNarrow).contains("InMemoryFileIndex [<path>, ... 2 entries]"))
 
     val broadcast = raw("q12_anti_join_dedup")
     val shuffled = withSQLConf(broadcastOff)(raw("q12_anti_join_dedup"))
