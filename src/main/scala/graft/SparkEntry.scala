@@ -91,6 +91,10 @@ object SparkEntry {
         expr("CAST(round(cosine * 10000) AS BIGINT)").as("cos_bp"))
   }
 
+  /** The eight evaluation vectors (`vec_id < 8`): the query batch the ANN
+    * keys score, and the PQ keys' codebook. */
+  private[graft] def evalVectors(emb: DataFrame): DataFrame = emb.filter(col("vec_id") < 8)
+
   /** The ANN recall join: exact top-k `truth(query_id, neighbor_id)`
     * left-joined with the approximate top-k `approx(query_id, neighbor_id,
     * …)` renamed to (`__aq`, `__an`), so `count(__an)` counts the hits. */
@@ -185,38 +189,59 @@ object SparkEntry {
   private[graft] def valueBucket = when(col("value") >= 100, "high")
     .when(col("value") >= 50, "mid").otherwise(lit("low"))
 
+  /** One registry entry: a key's name and what to look for in its plan
+    * (`note`, PLANS.md's third column; `PlanSpec` asserts these in CI). */
+  private[graft] sealed trait Entry {
+    def name: String
+    def note: String
+  }
+
+  /** A key's record in its family part: the frame it builds over an input
+    * dir, and its independent DuckDB formulation. */
+  private[graft] final case class Key(name: String,
+      build: (SparkSession, String) => DataFrame, oracle: String,
+      note: String = "") extends Entry
+
   /** Round-17 retirement of the six density-superlinear shapes IN PLACE
-    * (r16 verdict item 1): each key on the left now RUNS its density-scaled
-    * twin's plan — same registered name, the twin's engine code and oracle —
-    * so the full registry scale-benches with ZERO exclusions and a user
-    * calling any of these keys at 100× gets the linear plan, not the melt.
-    * The superlinear originals survive as Spec-only yardsticks: DedupSpec
+    * (r16 verdict item 1): each alias RUNS its density-scaled twin's plan —
+    * same registered name, the twin's engine code and oracle — so the full
+    * registry scale-benches with ZERO exclusions and a user calling any of
+    * these keys at 100× gets the linear plan, not the melt. The superlinear
+    * originals survive as Spec-only yardsticks: DedupSpec
     * (q127/q203/q273/q276) and RelationalSpec (q62/q394) rebuild each shape
     * inline and pin that the twin preserves
     * the semantics (exact identity for q62/q444; the documented
     * density-scaled re-statements for the rest — group-level pairs/closure
     * for q127/q203, LSH cells for q273, the production 9000 bp confirm
-    * stratum for q276, density-derived radius for q394). q62 keeps its OWN
-    * interval-join oracle: the rank-difference engine vs the join-formulated
-    * SQL re-proves the TwoPhase equivalence at every gate SF. */
-  private[graft] val retiredToTwins: Map[String, String] = Map(
-    "q62_range_join" -> "q444_range_count_rank",
-    "q127_fuzzy_join" -> "q445_name_group_join",
-    "q203_entity_resolution" -> "q446_er_groups",
-    "q273_semdedup" -> "q443_semdedup_lsh",
-    "q276_editdist_confirm" -> "q447_confirm_pruned",
-    "q394_grid_radius_join" -> "q448_radius_scaled")
+    * stratum for q276, density-derived radius for q394). An alias with its
+    * own `oracle` (q62's interval join) verifies against that instead of
+    * its twin's. */
+  private[graft] final case class Alias(name: String, twin: String,
+      oracle: Option[String] = None, note: String = "") extends Entry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val base =
-      (RegistryReference.queries ++
-        RegistryAnalyticsGraph.queries ++
-        RegistryAnnDedup.queries ++
-        RegistryPipelineOps.queries ++
-        RegistryStatsMl.queries ++
-        RegistryWarehouseText.queries).toMap
-    base ++ retiredToTwins.map { case (k, twin) => k -> base(twin) }
+  /** Every registry entry, family part by family part. */
+  private[graft] def registry: Seq[Entry] =
+    RegistryReference.keys ++ RegistryAnalyticsGraph.keys ++ RegistryAnnDedup.keys ++
+      RegistryPipelineOps.keys ++ RegistryStatsMl.keys ++ RegistryWarehouseText.keys
+
+  /** Each entry with the record it runs: a key's own, an alias's twin. */
+  private def resolved: Seq[(Entry, Key)] = {
+    val entries = registry
+    val byName = entries.collect { case k: Key => k.name -> k }.toMap
+    entries.map {
+      case k: Key => k -> k
+      case a: Alias => a -> byName(a.twin)
+    }
   }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    resolved.map { case (e, k) => e.name -> k.build }.toMap
+
+  def oracleSql: Map[String, String] =
+    resolved.map {
+      case (a: Alias, k) => a.name -> a.oracle.getOrElse(k.oracle)
+      case (e, k) => e.name -> k.oracle
+    }.toMap
 
   // ------------------------------------------------------------------ oracle
 
@@ -1459,6 +1484,18 @@ object SparkEntry {
       |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end, count(*) AS events
       |FROM y GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
 
+  /** q57's gap sessions per event as two CTEs over `events` (q188, q193):
+    * `x` flags a break (a user's first event, or more than 30 minutes after
+    * the previous one) and `y` numbers the sessions (`sid`) by the running
+    * break sum, per event time `t`. */
+  private[graft] val gapSessionCtes: String =
+    """x AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t,
+      |  CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
+      |       OR CAST(ts AS TIMESTAMP) - lag(CAST(ts AS TIMESTAMP)) OVER w > INTERVAL 30 MINUTE
+      |       THEN 1 ELSE 0 END AS brk
+      |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+      |y AS (SELECT user_id, t, sum(brk) OVER (PARTITION BY user_id ORDER BY t) AS sid FROM x)""".stripMargin
+
   /** DuckDB twin of [[graft.ops.Curation.curationChain]]: the q50/q51/q73
     * stage formulas verbatim, dedup keyed on raw text (equivalent to the
     * Spark side's sha2 key — same groups), first-failure drop reasons. */
@@ -1612,21 +1649,5 @@ object SparkEntry {
        |      x -> length(x) > 0),
        |    x -> ltrim(x, chr(31))), ' ') AS tokens_s
        |FROM doc$k ORDER BY doc_id""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = {
-    val base =
-      (RegistryReference.oracleSql ++
-        RegistryAnalyticsGraph.oracleSql ++
-        RegistryAnnDedup.oracleSql ++
-        RegistryPipelineOps.oracleSql ++
-        RegistryStatsMl.oracleSql ++
-        RegistryWarehouseText.oracleSql).toMap
-    // the retired keys verify against their twin's oracle — EXCEPT q62,
-    // whose own interval-join SQL is kept as the cross-formulation witness
-    // for the rank-difference plan (see retiredToTwins)
-    base ++ retiredToTwins.collect {
-      case (k, twin) if k != "q62_range_join" => k -> base(twin)
-    }
   }
 }

@@ -16,10 +16,10 @@ import graft.storage.Materialize.scratch
   * extensions (q41-q63, q116-q127), with the density-scaled twins q444/q448
   * (where q62/q394 were) and q454 next to q63.
   *
-  * Split VERBATIM from SparkEntry's single queries/oracleSql map literals
-  * (round-13 verdict item 8 - pure maintainability, zero semantic change);
-  * merged back into the public maps at SparkEntry init. RegistrySpec pins
-  * the merged key set and the 1:1 queries<->oracleSql correspondence.
+  * Each key is ONE record in `keys`, which sits last so that every val an
+  * oracle reads is set before it: a [[SparkEntry.Key]] (frame, DuckDB oracle,
+  * plan note) or a retired key's [[SparkEntry.Alias]]. SparkEntry's maps
+  * project the records; RegistrySpec pins the key set.
   */
 private[graft] object RegistryStatsMl {
 
@@ -72,8 +72,8 @@ private[graft] object RegistryStatsMl {
         .as("xs"))
   }
 
-  val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q384_worst_slices" -> ((s, dir) => {
+  val keys: Seq[Entry] = Seq(
+    Key("q384_worst_slices", (s, dir) => {
       // worst-slice mining (SliceFinder-style): evaluate the q50 langid
       // model per (source, lang) subgroup and surface the 10 worst
       // slices with support ≥ 20 — per-slice evaluation catches the
@@ -92,8 +92,14 @@ private[graft] object RegistryStatsMl {
           expr("correct * 10000 div n").as("acc_bp"))
         .orderBy(col("acc_bp"), col("n").desc, col("source"), col("lang"))
         .limit(10)
-    }),
-    "q385_variant_shred" -> ((s, dir) =>
+    },
+      s"""SELECT source, lang, count(*) AS n,
+         |  CAST(sum(CASE WHEN $langCase = lang THEN 1 ELSE 0 END) AS BIGINT) AS correct,
+         |  CAST(sum(CASE WHEN $langCase = lang THEN 1 ELSE 0 END) * 10000 // count(*) AS BIGINT) AS acc_bp
+         |FROM documents GROUP BY 1, 2 HAVING count(*) >= 20
+         |ORDER BY acc_bp, n DESC, source, lang LIMIT 10""".stripMargin,
+      note = "one slice aggregate; heap worst-10"),
+    Key("q385_variant_shred", (s, dir) =>
       // semi-structured payloads through Spark 4's native VARIANT type:
       // parse_json once into the binary variant encoding, then typed
       // path extraction (variant_get) — the open-schema ingest shape that
@@ -107,8 +113,14 @@ private[graft] object RegistryStatsMl {
         .selectExpr("parse_json(props) AS v")
         .selectExpr("CAST(variant_get(v, '$.k') AS BIGINT) AS k")
         .groupBy(col("k")).agg(count(lit(1)).as("cnt"))
-        .orderBy("k")),
-    "q386_observed_metrics" -> ((s, dir) => {
+        .orderBy("k"),
+      // the engine parses once into VARIANT and walks the binary field;
+      // the oracle re-parses the JSON text — same typed values
+      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+        |  count(*) AS cnt
+        |FROM events WHERE props IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "parse_json once; variant_get binary walk; one aggregate"),
+    Key("q386_observed_metrics", (s, dir) => {
       // pipeline observability WITHOUT a second scan: Dataset.observe
       // attaches accumulator-backed metrics (row count, null count, value
       // mass) to the input of a real aggregation, and the metrics arrive
@@ -133,8 +145,14 @@ private[graft] object RegistryStatsMl {
         m("null_values").asInstanceOf[Long],
         m("cents_in").asInstanceOf[Long], rowsOut))
         .toDF("rows_in", "null_values", "cents_in", "rows_out")
-    }),
-    "q387_pipe_sql" -> ((s, dir) => {
+    },
+      // the oracle computes directly what observe() must have reported
+      """SELECT count(*) AS rows_in,
+        |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_values,
+        |  CAST(sum(COALESCE(CAST(round(value * 100) AS BIGINT), 0)) AS BIGINT) AS cents_in,
+        |  CAST(count(DISTINCT event_type) AS BIGINT) AS rows_out
+        |FROM events""".stripMargin),
+    Key("q387_pipe_sql", (s, dir) => {
       // Spark 4 SQL PIPE syntax (`|>`): the linear query form that reads
       // in execution order — same Catalyst plan as the nested-SELECT
       // equivalent the oracle runs, which is the point: the surface is
@@ -148,8 +166,14 @@ private[graft] object RegistryStatsMl {
           |     CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
           |   GROUP BY event_type
           ||> ORDER BY event_type""".stripMargin)
-    }),
-    "q388_collated_group" -> ((s, dir) =>
+    },
+      // the nested-SELECT equivalent of the pipe program
+      """SELECT event_type, count(*) AS cnt,
+        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+        |FROM events WHERE value IS NOT NULL AND value > 50
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "|> program == nested SQL plan, bit for bit"),
+    Key("q388_collated_group", (s, dir) =>
       // Spark 4 COLLATION support: case-insensitive grouping via a
       // UTF8_LCASE-collated key instead of the lower()-projection
       // workaround — collation-aware hashing/equality runs inside the
@@ -163,8 +187,14 @@ private[graft] object RegistryStatsMl {
         .groupBy(expr("collate(s, 'UTF8_LCASE')").as("g"))
         .agg(min(col("s")).as("variant_min"), count(lit(1)).as("cnt"))
         .select(col("variant_min"), col("cnt"))
-        .orderBy("variant_min")),
-    "q389_markov_attribution" -> ((s, dir) => {
+        .orderBy("variant_min"),
+      // collation-aware grouping ≡ the lower()-projection workaround
+      """WITH d AS (SELECT CASE WHEN doc_id % 2 = 1 THEN upper(source)
+        |    ELSE source END AS s FROM documents)
+        |SELECT min(s) AS variant_min, count(*) AS cnt FROM d
+        |GROUP BY lower(s) ORDER BY variant_min""".stripMargin,
+      note = "UTF8_LCASE hashing inside the aggregate"),
+    Key("q389_markov_attribution", (s, dir) => {
       // Markov removal-effect attribution (Anderl et al. 2014) — the
       // data-driven alternative to q131's positional rules: each
       // channel's credit is how much the journey chain's conversion
@@ -222,8 +252,10 @@ private[graft] object RegistryStatsMl {
         (c, b, r, b - r, (b - r) * 10000L / sumDiff)
       }.toDF("channel", "p_base_ppm", "p_removed_ppm", "diff_ppm", "share_bp")
         .orderBy("channel")
-    }),
-    "q390_restatement_ledger" -> ((s, dir) => {
+    },
+      q389Sql,
+      note = "one lead pass to metadata tallies; chain solved exactly; local consumer"),
+    Key("q390_restatement_ledger", (s, dir) => {
       // RESTATEMENT ledger: what yesterday's report said vs what the data
       // says now. Each event's arrival is its event time plus a
       // deterministic processing delay (q344's jitter device); the
@@ -247,8 +279,19 @@ private[graft] object RegistryStatsMl {
         .select(col("day"), col("n_final"), col("n_first"),
           expr("(n_final - n_first) * 10000 div n_final").as("restated_bp"))
         .orderBy("day")
-    }),
-    "q391_aqe_skew_join" -> ((s, dir) => {
+    },
+      // identical deterministic arrival = event time + (id % 48) hours
+      """WITH e AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
+        |    CAST(ts AS TIMESTAMP) + (event_id % 48) * INTERVAL 1 HOUR AS arrival,
+        |    CAST(CAST(ts AS DATE) + 1 AS TIMESTAMP) AS day_end
+        |  FROM events)
+        |SELECT day, count(*) AS n_final,
+        |  CAST(sum(CASE WHEN arrival < day_end THEN 1 ELSE 0 END) AS BIGINT) AS n_first,
+        |  CAST((count(*) - sum(CASE WHEN arrival < day_end THEN 1 ELSE 0 END)) * 10000
+        |    // count(*) AS BIGINT) AS restated_bp
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "one scan, two conditional sums per day"),
+    Key("q391_aqe_skew_join", (s, dir) => {
       // AQE SKEW-JOIN under the gate: a fact⋈dim join with 90% of rows on
       // one planted hot key, executed with the broadcast path disabled
       // and the skew thresholds lowered so OptimizeSkewedJoin must split
@@ -282,8 +325,21 @@ private[graft] object RegistryStatsMl {
       } finally saved.foreach { case (k, v) =>
         v.fold(conf.unset(k))(conf.set(k, _))
       }
-    }),
-    "q392_ols_regression" -> ((s, dir) => {
+    },
+      // the plain join — the runtime skew split must change nothing
+      """WITH f AS (SELECT event_id,
+        |    CASE WHEN event_id % 10 < 9 THEN 'hot'
+        |         ELSE 'cold' || CAST(event_id % 97 AS VARCHAR) END AS k,
+        |    (event_id * 48271) % 2147483647 AS pad
+        |  FROM events),
+        |d AS (SELECT k, count(*) AS dim_n FROM f GROUP BY 1),
+        |j AS (SELECT f.k, f.pad, d.dim_n FROM f JOIN d USING (k))
+        |SELECT CASE WHEN k = 'hot' THEN 'hot' ELSE 'cold' END AS k_class,
+        |  count(*) AS n, CAST(sum(dim_n) AS BIGINT) AS dim_mass,
+        |  CAST(sum(pad) AS BIGINT) AS pad_mass
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "AQE splits the 90%-hot key at runtime: skew=true on the sort-merge join under scoped thresholds"),
+    Key("q392_ols_regression", (s, dir) => {
       // Per-cohort OLS by NORMAL EQUATIONS: the only corpus-sized work is
       // one hash aggregate collecting six exact integer moments (n, Σx,
       // Σy, Σxy, Σx², Σy²) — sufficient statistics combine associatively,
@@ -313,8 +369,27 @@ private[graft] object RegistryStatsMl {
             .as("intercept"),
           Num.roundz(cov * cov / (vx * vy), 4).as("r2"))
         .orderBy("event_type")
-    }),
-    "q393_logistic_gd" -> ((s, dir) => {
+    },
+      // same six exact integer moments, same fixed double chain
+      """WITH e AS (SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x,
+        |    CAST(round(value * 100, 0) AS BIGINT) AS y
+        |  FROM events WHERE value IS NOT NULL),
+        |m AS (SELECT event_type, count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
+        |    CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
+        |    CAST(sum(x * x) AS BIGINT) AS sx2, CAST(sum(y * y) AS BIGINT) AS sy2
+        |  FROM e GROUP BY 1)
+        |SELECT event_type, n,
+        |  (round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |    / (CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 4) + 0.0) AS slope,
+        |  (round((CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |    / (CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |    * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 4) + 0.0) AS intercept,
+        |  (round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |    * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+        |    / ((CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |       * (CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 4) + 0.0) AS r2
+        |FROM m ORDER BY event_type""".stripMargin),
+    Key("q393_logistic_gd", (s, dir) => {
       // FULL-BATCH gradient descent trained in-engine: 3 unrolled
       // iterations of a hard-sigmoid logistic fit (σ̂(z) = clamp(0.5 +
       // z/4, 0, 1), the piecewise-linear sigmoid of Courbariaux et al.
@@ -348,8 +423,33 @@ private[graft] object RegistryStatsMl {
           count(lit(1)).as("n"),
           sum(when(col("pred") === col("pos"), 1L).otherwise(0L)).as("correct"))
         .selectExpr("w0", "w1", "n", "correct * 10000 div n AS correct_bp")
-    }),
-    "q395_winnowing" -> ((s, dir) => {
+    },
+      // the 3 GD steps unrolled as chained CTEs; `//` and `div` both
+      // truncate toward zero, so the integer walk is bit-identical
+      """WITH e AS (SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) - 12 AS x,
+        |    CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT) ELSE 0 END AS y FROM events),
+        |i0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1),
+        |s1 AS (SELECT max(w0) AS pw0, max(w1) AS pw1, count(*) AS n,
+        |    CAST(sum(greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) AS BIGINT) AS g0,
+        |    CAST(sum((greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) * x) AS BIGINT) AS g1
+        |  FROM e CROSS JOIN i0),
+        |i1 AS (SELECT pw0 - g0 // (2 * n) AS w0, pw1 - g1 // (20 * n) AS w1 FROM s1),
+        |s2 AS (SELECT max(w0) AS pw0, max(w1) AS pw1, count(*) AS n,
+        |    CAST(sum(greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) AS BIGINT) AS g0,
+        |    CAST(sum((greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) * x) AS BIGINT) AS g1
+        |  FROM e CROSS JOIN i1),
+        |i2 AS (SELECT pw0 - g0 // (2 * n) AS w0, pw1 - g1 // (20 * n) AS w1 FROM s2),
+        |s3 AS (SELECT max(w0) AS pw0, max(w1) AS pw1, count(*) AS n,
+        |    CAST(sum(greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) AS BIGINT) AS g0,
+        |    CAST(sum((greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) * x) AS BIGINT) AS g1
+        |  FROM e CROSS JOIN i2),
+        |i3 AS (SELECT pw0 - g0 // (2 * n) AS w0, pw1 - g1 // (20 * n) AS w1 FROM s3),
+        |ev AS (SELECT max(w0) AS w0, max(w1) AS w1, count(*) AS n,
+        |    CAST(sum(CASE WHEN (greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) > 500000) = (y = 1)
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS correct
+        |  FROM e CROSS JOIN i3)
+        |SELECT w0, w1, n, correct * 10000 // n AS correct_bp FROM ev""".stripMargin),
+    Key("q395_winnowing", (s, dir) => {
       // Winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD 2003
       // — the MOSS algorithm): token-trigram Karp–Rabin hashes, then from
       // every window of w = 4 consecutive hashes keep the RIGHTMOST
@@ -382,8 +482,30 @@ private[graft] object RegistryStatsMl {
           expr("wmin div 1048576").as("hash"),
           (lit(1048575L) - expr("wmin % 1048576")).as("pos"))
         .orderBy("doc_id", "pos")
-    }),
-    "q396_t_closeness" -> ((s, dir) => {
+    },
+      // same trigram Karp-Rabin ring (the q353-proven ord/byte parity),
+      // same packed rightmost-min key, same 4-row window
+      """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    t -> length(t) > 0) AS arr FROM documents),
+        |px AS (SELECT doc_id, unnest(list_transform(range(1, len(arr) + 1),
+        |    i -> {'pos': i - 1, 'tok': arr[i]})) AS g FROM raw),
+        |th AS (SELECT doc_id, CAST(g.pos AS BIGINT) AS pos,
+        |    list_reduce(list_transform(range(1, length(g.tok) + 1),
+        |      i -> CAST(ord(substr(g.tok, CAST(i AS INT), 1)) AS BIGINT)),
+        |      (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |  FROM px),
+        |tri AS (SELECT doc_id, pos,
+        |    ((h * 31 + lead(h, 1) OVER w) % 1000000007 * 31 + lead(h, 2) OVER w) % 1000000007 AS gh,
+        |    lead(h, 2) OVER w IS NOT NULL AS full3
+        |  FROM th WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+        |k AS (SELECT doc_id, pos, gh * 1048576 + (1048575 - pos) AS k FROM tri WHERE full3),
+        |wm AS (SELECT doc_id, pos, min(k) OVER (PARTITION BY doc_id ORDER BY pos
+        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS wmin FROM k),
+        |sel AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE pos >= 3)
+        |SELECT doc_id, wmin // 1048576 AS hash, 1048575 - (wmin % 1048576) AS pos
+        |FROM sel ORDER BY doc_id, pos""".stripMargin,
+      note = "packed (hash, pos) key makes rightmost-min a plain bounded window min — no argmin self-join; per-doc windows only"),
+    Key("q396_t_closeness", (s, dir) => {
       // t-closeness release audit (Li, Li & Venkatasubramanian, ICDE
       // 2007) — completes the privacy triad next to q308's k-anonymity
       // and q366's l-diversity: per quasi-identifier group, the ORDERED
@@ -431,8 +553,32 @@ private[graft] object RegistryStatsMl {
           expr("emd_sum div 3").as("emd_ppm"))
         .withColumn("meets_t20", col("emd_ppm") <= 200000L)
         .orderBy("nat", "seg")
-    }),
-    "q397_ips_eval" -> ((s, dir) => {
+    },
+      // same 4-band grid, same ppm integer divisions, same (m-1) cum sum
+      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nat, c_mktsegment AS seg,
+        |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents FROM customer),
+        |b AS (SELECT nat, seg, greatest(least((cents + 100000) // 300000, 3), 0) AS band FROM c),
+        |g AS (SELECT band, count(*) AS gc FROM b GROUP BY 1),
+        |gt AS (SELECT count(*) AS gn FROM b),
+        |q AS (SELECT CAST(gb.band AS BIGINT) AS band,
+        |    coalesce(g.gc, 0) * 1000000 // gt.gn AS q_ppm
+        |  FROM (SELECT unnest([0, 1, 2, 3]) AS band) gb
+        |  LEFT JOIN g ON g.band = gb.band, gt),
+        |gr AS (SELECT nat, seg, count(*) AS n FROM b GROUP BY 1, 2),
+        |grid AS (SELECT nat, seg, n, CAST(unnest([0, 1, 2, 3]) AS BIGINT) AS band FROM gr),
+        |cnt AS (SELECT nat, seg, band, count(*) AS nb FROM b GROUP BY 1, 2, 3),
+        |p AS (SELECT grid.nat, grid.seg, grid.band, grid.n,
+        |    coalesce(cnt.nb, 0) * 1000000 // grid.n AS p_ppm, q.q_ppm
+        |  FROM grid LEFT JOIN cnt USING (nat, seg, band) JOIN q USING (band)),
+        |cum AS (SELECT nat, seg, n, band,
+        |    sum(p_ppm) OVER (PARTITION BY nat, seg ORDER BY band) AS cp,
+        |    sum(q_ppm) OVER (PARTITION BY nat, seg ORDER BY band) AS cq
+        |  FROM p)
+        |SELECT nat, seg, CAST(max(n) AS BIGINT) AS n,
+        |  CAST(sum(abs(cp - cq)) AS BIGINT) // 3 AS emd_ppm,
+        |  (CAST(sum(abs(cp - cq)) AS BIGINT) // 3) <= 200000 AS meets_t20
+        |FROM cum WHERE band <= 2 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Key("q397_ips_eval", (s, dir) => {
       // OFFLINE POLICY EVALUATION by inverse propensity scoring (Horvitz–
       // Thompson; SNIPS per Swaminathan & Joachims 2015): logged actions
       // with known behavior-policy propensities {0.5, 0.3, 0.2} are
@@ -461,8 +607,22 @@ private[graft] object RegistryStatsMl {
           expr("swr * 10000 div greatest(sw, 1)").as("snips_bp"),
           expr("sr * 10000 div n").as("logged_reward_bp"))
         .orderBy("pi_arm")
-    }),
-    "q398_bitmap_index" -> ((s, dir) => {
+    },
+      // same hash-planted actions/propensities, same exact micro weights
+      """WITH e AS (SELECT CAST(user_id % 3 AS BIGINT) AS pi_arm,
+        |    CASE WHEN event_id % 10 < 5 THEN 0 WHEN event_id % 10 < 8 THEN 1 ELSE 2 END AS a,
+        |    CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT) ELSE 0 END AS r
+        |  FROM events WHERE user_id IS NOT NULL),
+        |w AS (SELECT pi_arm, r,
+        |    CASE WHEN a = 0 THEN 2000000 WHEN a = 1 THEN 3333333 ELSE 5000000 END AS w_micro,
+        |    CASE WHEN pi_arm = a THEN CAST(1 AS BIGINT) ELSE 0 END AS m FROM e)
+        |SELECT pi_arm, count(*) AS n, CAST(sum(m) AS BIGINT) AS n_matched,
+        |  CAST(sum(r * m * w_micro) AS BIGINT) // count(*) AS ips_micro,
+        |  CAST(sum(r * m * w_micro) AS BIGINT) * 10000
+        |    // greatest(CAST(sum(m * w_micro) AS BIGINT), 1) AS snips_bp,
+        |  CAST(sum(r) AS BIGINT) * 10000 // count(*) AS logged_reward_bp
+        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q398_bitmap_index", (s, dir) => {
       // BITMAP INDEX set algebra: each event-type segment's user set is
       // packed into 32-bit words (word = id div 32, mask = 1 << id%32,
       // OR-aggregated — 32, not 64, because DuckDB's left shift overflows
@@ -495,8 +655,25 @@ private[graft] object RegistryStatsMl {
           (col("card_a") + col("card_b") - col("inter")).as("uni"))
         .withColumn("jaccard_bp", expr("inter * 10000 div uni"))
         .orderBy("seg_a", "seg_b")
-    }),
-    "q399_powerlaw_mle" -> ((s, dir) =>
+    },
+      // same 32-bit word packing, same bit_or / bit_count algebra
+      """WITH d AS (SELECT DISTINCT event_type AS seg, user_id FROM events
+        |  WHERE user_id IS NOT NULL),
+        |bm AS (SELECT seg, user_id // 32 AS w,
+        |    bit_or(CAST(1 AS BIGINT) << CAST(user_id % 32 AS INT)) AS bits
+        |  FROM d GROUP BY 1, 2),
+        |card AS (SELECT seg, CAST(sum(bit_count(bits)) AS BIGINT) AS card FROM bm GROUP BY 1),
+        |inter AS (SELECT a.seg AS seg_a, b.seg AS seg_b,
+        |    CAST(sum(bit_count(a.bits & b.bits)) AS BIGINT) AS inter
+        |  FROM bm a JOIN bm b ON a.w = b.w AND a.seg < b.seg GROUP BY 1, 2),
+        |pairs AS (SELECT ca.seg AS seg_a, cb.seg AS seg_b, ca.card AS card_a, cb.card AS card_b
+        |  FROM card ca CROSS JOIN card cb WHERE ca.seg < cb.seg)
+        |SELECT p.seg_a, p.seg_b, p.card_a, p.card_b,
+        |  coalesce(i.inter, 0) AS inter,
+        |  p.card_a + p.card_b - coalesce(i.inter, 0) AS uni,
+        |  coalesce(i.inter, 0) * 10000 // (p.card_a + p.card_b - coalesce(i.inter, 0)) AS jaccard_bp
+        |FROM pairs p LEFT JOIN inter i USING (seg_a, seg_b) ORDER BY 1, 2""".stripMargin),
+    Key("q399_powerlaw_mle", (s, dir) =>
       // Power-law tail fit (Clauset, Shalizi & Newman 2009): per source,
       // the continuous MLE α = 1 + n / Σ ln(x/xmin) over doc lengths ≥
       // xmin = 200. Each row's log is quantized to EXACT floor-micros
@@ -514,8 +691,16 @@ private[graft] object RegistryStatsMl {
         .select(col("source"), col("n_tail"), col("s_micro"),
           Num.roundz(lit(1.0) + col("n_tail").cast("double") * 1000000.0
             / expr("CAST(nullif(s_micro, 0) AS DOUBLE)"), 4).as("alpha"))
-        .orderBy("source")),
-    "q400_brier_decomposition" -> ((s, dir) => {
+        .orderBy("source"),
+      // same floor-micro log quantization, same single closing division
+      """WITH d AS (SELECT source,
+        |    CAST(floor(ln(CAST(n_chars AS DOUBLE) / 200.0) * 1000000) AS BIGINT) AS lnx
+        |  FROM documents WHERE n_chars >= 200)
+        |SELECT source, count(*) AS n_tail, CAST(sum(lnx) AS BIGINT) AS s_micro,
+        |  (round(1.0 + CAST(count(*) AS DOUBLE) * 1000000.0
+        |    / CAST(nullif(CAST(sum(lnx) AS BIGINT), 0) AS DOUBLE), 4) + 0.0) AS alpha
+        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q400_brier_decomposition", (s, dir) => {
       // Murphy decomposition of the Brier score (Murphy 1973): forecasts
       // bucketed into 11 probability bins; per bin the EXACT ingredients
       // — n, hits, Σforecast_bp, and the raw Brier numerator
@@ -537,8 +722,19 @@ private[graft] object RegistryStatsMl {
             * (col("sum_f_bp").cast("double") - lit(10000.0) * col("o"))
             / (lit(100000000.0) * col("n")), 4))
         .orderBy("bin")
-    }),
-    "q401_neyman_allocation" -> ((s, dir) => {
+    },
+      // same 11 bins, same exact Brier numerator, same double rel chain
+      """WITH e AS (SELECT (user_id * 31 % 101) * 100 AS f_bp,
+        |    CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT) ELSE 0 END AS y
+        |  FROM events WHERE user_id IS NOT NULL)
+        |SELECT f_bp // 1000 AS bin, count(*) AS n, CAST(sum(y) AS BIGINT) AS o,
+        |  CAST(sum(f_bp) AS BIGINT) AS sum_f_bp,
+        |  CAST(sum((f_bp - y * 10000) * (f_bp - y * 10000)) AS BIGINT) AS brier_num,
+        |  (round((CAST(CAST(sum(f_bp) AS BIGINT) AS DOUBLE) - 10000.0 * CAST(sum(y) AS BIGINT))
+        |    * (CAST(CAST(sum(f_bp) AS BIGINT) AS DOUBLE) - 10000.0 * CAST(sum(y) AS BIGINT))
+        |    / (100000000.0 * count(*)), 4) + 0.0) AS rel
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q401_neyman_allocation", (s, dir) => {
       // NEYMAN OPTIMAL ALLOCATION (Neyman 1934) of a 1000-row sample
       // budget across strata: n_h ∝ N_h·S_h, with each stratum's sd from
       // exact integer moments and the weight quantized to floor(N·sd·10³)
@@ -570,8 +766,29 @@ private[graft] object RegistryStatsMl {
           + when(col("rk") <= lit(1000L) - col("ub"), 1L).otherwise(0L))
         .select(col("event_type"), col("n"), col("w_scaled"), col("alloc"))
         .orderBy("event_type")
-    }),
-    "q402_paa_symbolize" -> ((s, dir) => {
+    },
+      // same exact moments, same floor(N·sd·10³) quantization, same
+      // largest-remainder walk over the 5-row strata frame
+      """WITH m AS (SELECT event_type, count(*) AS n,
+        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS s,
+        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)
+        |      * CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS ss
+        |  FROM events GROUP BY 1),
+        |w AS (SELECT event_type, n,
+        |    CAST(floor(CAST(n AS DOUBLE) * sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+        |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) * 1000) AS BIGINT) AS w_scaled
+        |  FROM m),
+        |t AS (SELECT CAST(sum(w_scaled) AS BIGINT) AS tw FROM w),
+        |b AS (SELECT w.event_type, w.n, w.w_scaled,
+        |    w.w_scaled * 1000 // t.tw AS alloc_base, (w.w_scaled * 1000) % t.tw AS rem
+        |  FROM w, t),
+        |u AS (SELECT CAST(sum(alloc_base) AS BIGINT) AS ub FROM b),
+        |r AS (SELECT b.*, u.ub, row_number() OVER (ORDER BY rem DESC, event_type) AS rk FROM b, u)
+        |SELECT event_type, n, w_scaled,
+        |  alloc_base + CASE WHEN rk <= 1000 - ub THEN 1 ELSE 0 END AS alloc
+        |FROM r ORDER BY event_type""".stripMargin),
+    Key("q402_paa_symbolize", (s, dir) => {
       // SAX-style series symbolization (Lin, Keogh et al. 2003): each
       // event type's daily-count series is piecewise-aggregate-
       // approximated over 4-day segments (exact micro means via integer
@@ -595,8 +812,20 @@ private[graft] object RegistryStatsMl {
         .select(col("event_type"), col("seg"), col("n_days"), col("sum_cnt"),
           col("paa_micro"), col("sym"))
         .orderBy("event_type", "seg")
-    }),
-    "q403_poisson_bootstrap" -> ((s, dir) => {
+    },
+      // same fixed anchor, same exact micro PAA, same min-max symbols
+      """WITH daily AS (SELECT event_type,
+        |    CAST(date_diff('day', DATE '2020-01-01', CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS d,
+        |    count(*) AS cnt
+        |  FROM events GROUP BY 1, 2),
+        |paa AS (SELECT event_type, d // 4 AS seg, count(*) AS n_days,
+        |    CAST(sum(cnt) AS BIGINT) AS sum_cnt FROM daily GROUP BY 1, 2),
+        |p2 AS (SELECT *, sum_cnt * 1000000 // n_days AS paa_micro FROM paa),
+        |rng AS (SELECT event_type, min(paa_micro) AS lo, max(paa_micro) AS hi FROM p2 GROUP BY 1)
+        |SELECT p2.event_type, p2.seg, p2.n_days, p2.sum_cnt, p2.paa_micro,
+        |  (p2.paa_micro - rng.lo) * 4 // (rng.hi - rng.lo + 1) AS sym
+        |FROM p2 JOIN rng USING (event_type) ORDER BY 1, 2""".stripMargin),
+    Key("q403_poisson_bootstrap", (s, dir) => {
       // POISSON BOOTSTRAP standard error (Chamandy et al. 2012, the
       // resampling that works on streams/shards because replicate weights
       // are i.i.d. per row — no global sample draw): 32 replicas, each
@@ -629,8 +858,28 @@ private[graft] object RegistryStatsMl {
             - col("sm").cast("double") * col("sm"))
             / (col("n_rep").cast("double") * (col("n_rep") - lit(1L)))), 4)
             .as("boot_se_micros"))
-    }),
-    "q404_theta_sketch" -> ((s, dir) => {
+    },
+      // same hash-threshold Poisson(1) weights, same exact micro means,
+      // same integer moments with one closing sqrt
+      """WITH e AS (SELECT event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
+        |rep AS (SELECT event_id, cents, CAST(unnest(range(0, 32)) AS BIGINT) AS r FROM e),
+        |h AS (SELECT r, cents, ((event_id * 131 + r) * 48271) % 2147483647 % 10000 AS h FROM rep),
+        |w AS (SELECT r, cents, CASE WHEN h < 3679 THEN 0 WHEN h < 7358 THEN 1
+        |    WHEN h < 9197 THEN 2 WHEN h < 9810 THEN 3 WHEN h < 9963 THEN 4 ELSE 5 END AS w
+        |  FROM h),
+        |g AS (SELECT r, CAST(sum(w) AS BIGINT) AS sw, CAST(sum(w * cents) AS BIGINT) AS swy
+        |  FROM w GROUP BY 1),
+        |mm AS (SELECT swy * 100 // greatest(sw, 1) AS m FROM g),
+        |agg AS (SELECT count(*) AS n_rep, CAST(sum(m) AS BIGINT) AS sm,
+        |    CAST(sum(m * m) AS BIGINT) AS sm2 FROM mm),
+        |pe AS (SELECT count(*) AS n_events,
+        |    CAST(sum(cents) AS BIGINT) * 100 // count(*) AS point_mean_micros FROM e)
+        |SELECT pe.n_events, pe.point_mean_micros, agg.sm // agg.n_rep AS boot_mean_micros,
+        |  (round(sqrt((CAST(agg.n_rep AS DOUBLE) * CAST(agg.sm2 AS DOUBLE)
+        |    - CAST(agg.sm AS DOUBLE) * CAST(agg.sm AS DOUBLE))
+        |    / (CAST(agg.n_rep AS DOUBLE) * CAST(agg.n_rep - 1 AS DOUBLE))), 4) + 0.0) AS boot_se_micros
+        |FROM pe, agg""".stripMargin),
+    Key("q404_theta_sketch", (s, dir) => {
       // THETA (KMV bottom-k) sketch set algebra (Dasgupta et al. 2016,
       // the DataSketches theta family): per segment keep the k = 32
       // smallest MINSTD priorities — a mergeable O(k) summary. Union /
@@ -686,8 +935,40 @@ private[graft] object RegistryStatsMl {
           expr("coalesce(i_cnt, 0) * 2147483647 div th").as("est_inter"),
           coalesce(col("true_inter"), lit(0L)).as("true_inter"))
         .orderBy("seg_a", "seg_b")
-    }),
-    "q405_borda_kendall" -> ((s, dir) => {
+    },
+      // same MINSTD priorities, same bottom-32 retention, same θ algebra
+      """WITH d AS (SELECT DISTINCT event_type AS seg, user_id FROM events
+        |  WHERE user_id IS NOT NULL),
+        |pr AS (SELECT seg, user_id, (user_id * 48271) % 2147483647 + 1 AS p FROM d),
+        |sk AS (SELECT seg, p FROM (SELECT seg, p,
+        |    row_number() OVER (PARTITION BY seg ORDER BY p) AS rn FROM pr)
+        |  WHERE rn <= 32),
+        |th AS (SELECT sk.seg, CASE WHEN count(*) < 32 THEN 2147483647
+        |    ELSE max(sk.p) END AS theta, count(*) AS n_ret FROM sk GROUP BY 1),
+        |ne AS (SELECT seg, count(*) AS n_exact FROM pr GROUP BY 1),
+        |est AS (SELECT th.seg, th.theta,
+        |    CASE WHEN th.n_ret < 32 THEN ne.n_exact
+        |      ELSE CAST(31 AS BIGINT) * 2147483647 // th.theta END AS est
+        |  FROM th JOIN ne USING (seg)),
+        |pairs AS (SELECT a.seg AS seg_a, b.seg AS seg_b, a.est AS est_a, b.est AS est_b,
+        |    least(a.theta, b.theta) AS th
+        |  FROM est a CROSS JOIN est b WHERE a.seg < b.seg),
+        |skp AS (SELECT p.seg_a, p.seg_b, p.th, s.p AS pv, count(*) AS c
+        |  FROM pairs p JOIN sk s ON (s.seg = p.seg_a OR s.seg = p.seg_b) AND s.p < p.th
+        |  GROUP BY 1, 2, 3, 4),
+        |cnts AS (SELECT seg_a, seg_b, th, count(*) AS u_cnt,
+        |    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS i_cnt
+        |  FROM skp GROUP BY 1, 2, 3),
+        |ex AS (SELECT a.seg AS seg_a, b.seg AS seg_b, count(*) AS true_inter
+        |  FROM d a JOIN d b ON a.user_id = b.user_id AND a.seg < b.seg GROUP BY 1, 2)
+        |SELECT p.seg_a, p.seg_b, p.est_a, p.est_b,
+        |  coalesce(c.u_cnt, 0) * 2147483647 // p.th AS est_union,
+        |  coalesce(c.i_cnt, 0) * 2147483647 // p.th AS est_inter,
+        |  coalesce(ex.true_inter, 0) AS true_inter
+        |FROM pairs p LEFT JOIN cnts c USING (seg_a, seg_b)
+        |LEFT JOIN ex USING (seg_a, seg_b) ORDER BY 1, 2""".stripMargin,
+      note = "per-segment bottom-32 via window top-k (TwoPhase heap at scale); union/intersect algebra on the ≤5·32-row retained frame"),
+    Key("q405_borda_kendall", (s, dir) => {
       // RANK AGGREGATION with agreement audit: three rankers' top-20s
       // (price, size, and a MINSTD "random" baseline) fuse by BORDA COUNT
       // (score = Σ(21 − rank), absent = 0, de Borda 1781), then each
@@ -730,8 +1011,45 @@ private[graft] object RegistryStatsMl {
       }
       tau("r_price").unionByName(tau("r_size")).unionByName(tau("r_hash"))
         .orderBy("ranker")
-    }),
-    "q406_good_turing" -> ((s, dir) => {
+    },
+      // same three top-20 heaps, same Borda fold, same pair concordance
+      """WITH r1 AS (SELECT p_partkey, row_number() OVER (ORDER BY p_retailprice DESC, p_partkey) AS r_price
+        |  FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 20),
+        |r2 AS (SELECT p_partkey, row_number() OVER (ORDER BY p_size DESC, p_partkey) AS r_size
+        |  FROM part ORDER BY p_size DESC, p_partkey LIMIT 20),
+        |r3 AS (SELECT p_partkey, row_number() OVER (ORDER BY (p_partkey * 16807) % 2147483647, p_partkey) AS r_hash
+        |  FROM part ORDER BY (p_partkey * 16807) % 2147483647, p_partkey LIMIT 20),
+        |fused AS (SELECT coalesce(r1.p_partkey, r2.p_partkey, r3.p_partkey) AS k,
+        |    r_price, r_size, r_hash,
+        |    CAST(coalesce(21 - r_price, 0) + coalesce(21 - r_size, 0)
+        |      + coalesce(21 - r_hash, 0) AS BIGINT) AS borda
+        |  FROM r1 FULL JOIN r2 ON r1.p_partkey = r2.p_partkey
+        |  FULL JOIN r3 ON coalesce(r1.p_partkey, r2.p_partkey) = r3.p_partkey),
+        |cons AS (SELECT k, r_price, r_size, r_hash,
+        |    row_number() OVER (ORDER BY borda DESC, k) AS consensus FROM fused),
+        |tp AS (SELECT 'r_price' AS ranker, x.consensus AS c1, y.consensus AS c2,
+        |    CAST(x.r_price AS BIGINT) AS v1, CAST(y.r_price AS BIGINT) AS v2
+        |  FROM cons x JOIN cons y ON x.k < y.k
+        |  WHERE x.r_price IS NOT NULL AND y.r_price IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'r_size', x.consensus, y.consensus,
+        |    CAST(x.r_size AS BIGINT), CAST(y.r_size AS BIGINT)
+        |  FROM cons x JOIN cons y ON x.k < y.k
+        |  WHERE x.r_size IS NOT NULL AND y.r_size IS NOT NULL
+        |  UNION ALL
+        |  SELECT 'r_hash', x.consensus, y.consensus,
+        |    CAST(x.r_hash AS BIGINT), CAST(y.r_hash AS BIGINT)
+        |  FROM cons x JOIN cons y ON x.k < y.k
+        |  WHERE x.r_hash IS NOT NULL AND y.r_hash IS NOT NULL)
+        |SELECT ranker, count(*) AS n_pairs,
+        |  CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT) AS concordant,
+        |  count(*) - CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT) AS discordant,
+        |  (CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT)
+        |    - (count(*) - CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT)))
+        |    * 1000 // count(*) AS tau_milli
+        |FROM tp GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "each ranker's top-20 is TakeOrderedAndProject, never a global sort of part; Borda/Kendall on ≤60-row metadata"),
+    Key("q406_good_turing", (s, dir) => {
       // GOOD–TURING frequency re-estimation (Good 1953, the smoothing
       // under Katz backoff and the SGT family): token frequencies r →
       // frequencies-of-frequencies N_r → adjusted mass r* = (r+1)·N_{r+1}
@@ -754,8 +1072,20 @@ private[graft] object RegistryStatsMl {
           expr("n1 * 10000 div n_tokens").as("p0_bp"))
         .orderBy("r").limit(20) // the 20 lowest frequencies PRESENT (a
         // fixed r <= 20 cut can be empty on a head-heavy tiny corpus)
-    }),
-    "q407_hash_ring" -> ((s, dir) => {
+    },
+      // same tokenization, same N_r table, same exact milli adjustment
+      """WITH tok AS (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    t -> length(t) > 0)) AS tok FROM documents),
+        |freq AS (SELECT tok, count(*) AS r FROM tok GROUP BY 1),
+        |nr AS (SELECT r, count(*) AS n_r FROM freq GROUP BY 1),
+        |tot AS (SELECT CAST(sum(r) AS BIGINT) AS n_tokens,
+        |    CAST(sum(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1 FROM freq)
+        |SELECT nr.r, nr.n_r,
+        |  (nr.r + 1) * coalesce(n2.n_r, 0) * 1000 // nr.n_r AS r_star_milli,
+        |  tot.n1 * 10000 // tot.n_tokens AS p0_bp
+        |FROM nr LEFT JOIN nr n2 ON n2.r = nr.r + 1 CROSS JOIN tot
+        |ORDER BY nr.r LIMIT 20""".stripMargin),
+    Key("q407_hash_ring", (s, dir) => {
       // CONSISTENT-HASH RING with a resize audit — the ring twin of
       // q341's rendezvous sharding: 8 virtual nodes per shard at MINSTD
       // positions, every key owned by its clockwise successor (min
@@ -795,8 +1125,26 @@ private[graft] object RegistryStatsMl {
           sum(when(col("shard9") === 8, 1L).otherwise(0L)).as("n_to_new"))
         .withColumn("moved_bp", expr("n_moved * 10000 div n_keys"))
         .orderBy("shard8")
-    }),
-    "q408_contribution_bounding" -> ((s, dir) => {
+    },
+      // same 72-vnode ring, same packed successor argmin, same audit
+      """WITH vn AS (SELECT CAST(unnest(range(0, 72)) AS BIGINT) AS v),
+        |ring AS (SELECT v // 8 AS shard, ((v + 1) * 2654435761) % 2147483647 AS pos FROM vn),
+        |pk AS (SELECT shard, pos, pos * 100 + shard AS packed FROM ring),
+        |keys AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
+        |kh AS (SELECT user_id, (user_id * 2654435761) % 2147483647 AS kh FROM keys),
+        |asg AS (SELECT k.user_id,
+        |    coalesce(min(CASE WHEN p.shard < 8 AND p.pos >= k.kh THEN p.packed END),
+        |      min(CASE WHEN p.shard < 8 THEN p.packed END)) % 100 AS shard8,
+        |    coalesce(min(CASE WHEN p.pos >= k.kh THEN p.packed END),
+        |      min(p.packed)) % 100 AS shard9
+        |  FROM kh k CROSS JOIN pk p GROUP BY 1, k.kh)
+        |SELECT shard8, count(*) AS n_keys,
+        |  CAST(sum(CASE WHEN shard9 <> shard8 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved,
+        |  CAST(sum(CASE WHEN shard9 = 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_to_new,
+        |  CAST(sum(CASE WHEN shard9 <> shard8 THEN 1 ELSE 0 END) AS BIGINT) * 10000
+        |    // count(*) AS moved_bp
+        |FROM asg GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q408_contribution_bounding", (s, dir) => {
       // PER-USER CONTRIBUTION BOUNDING — the differential-privacy
       // preprocessing step (Wilson et al. 2020, "DP SQL"): each user
       // contributes at most k = 8 events (first 8 by time, deterministic
@@ -815,8 +1163,17 @@ private[graft] object RegistryStatsMl {
         .withColumn("clamp_loss_bp",
           expr("(n_raw - n_bounded) * 10000 div n_raw"))
         .orderBy("day")
-    }),
-    "q409_skipgram_pairs" -> ((s, dir) => {
+    },
+      // same first-8-per-user clamp, same per-day ledger
+      """WITH e AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
+        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+        |  FROM events WHERE user_id IS NOT NULL)
+        |SELECT day, count(*) AS n_raw,
+        |  CAST(sum(CASE WHEN rn <= 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounded,
+        |  (count(*) - CAST(sum(CASE WHEN rn <= 8 THEN 1 ELSE 0 END) AS BIGINT)) * 10000
+        |    // count(*) AS clamp_loss_bp
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q409_skipgram_pairs", (s, dir) => {
       // SKIP-GRAM training-pair extraction (Mikolov et al. 2013): for
       // every token, its contexts at offsets ±1 and ±2 — both directions
       // emitted, so the pair table is exactly what a word2vec/fastText
@@ -843,8 +1200,24 @@ private[graft] object RegistryStatsMl {
         .withColumn("weight_milli", expr("1000 div dist"))
         .orderBy(col("cnt").desc, col("w1"), col("w2"), col("dist"))
         .limit(30)
-    }),
-    "q410_churn_labels" -> ((s, dir) => {
+    },
+      // same per-doc leads, both directions, same top-30 total order
+      """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    t -> length(t) > 0) AS arr FROM documents),
+        |px AS (SELECT doc_id, unnest(list_transform(range(1, len(arr) + 1),
+        |    i -> {'pos': i - 1, 'tok': arr[i]})) AS g FROM raw),
+        |t AS (SELECT doc_id, g.pos AS pos, g.tok AS tok,
+        |    lead(g.tok, 1) OVER w AS n1, lead(g.tok, 2) OVER w AS n2
+        |  FROM px WINDOW w AS (PARTITION BY doc_id ORDER BY g.pos)),
+        |prs AS (SELECT tok AS w1, n1 AS w2, CAST(1 AS BIGINT) AS dist FROM t WHERE n1 IS NOT NULL
+        |  UNION ALL SELECT tok, n2, 2 FROM t WHERE n2 IS NOT NULL
+        |  UNION ALL SELECT n1, tok, 1 FROM t WHERE n1 IS NOT NULL
+        |  UNION ALL SELECT n2, tok, 2 FROM t WHERE n2 IS NOT NULL)
+        |SELECT w1, w2, dist, count(*) AS cnt, 1000 // dist AS weight_milli
+        |FROM prs GROUP BY 1, 2, 3
+        |ORDER BY cnt DESC, w1, w2, dist LIMIT 30""".stripMargin,
+      note = "window leads per doc (no position self-join); both directions union BEFORE one count agg; TakeOrdered head"),
+    Key("q410_churn_labels", (s, dir) => {
       // FORWARD-WINDOW CHURN LABELING — the label-generation twin of
       // q310's point-in-time features: a user-day is "churned" when the
       // user has NO activity in the strictly-later 14-day window. The
@@ -865,8 +1238,19 @@ private[graft] object RegistryStatsMl {
         .agg(count(lit(1)).as("n_user_days"), sum(col("churned")).as("n_churned"))
         .withColumn("churn_bp", expr("n_churned * 10000 div n_user_days"))
         .orderBy("day")
-    }),
-    "q411_haar_wavelet" -> ((s, dir) => {
+    },
+      // same distinct active days, same strictly-forward 14-day lookahead
+      """WITH days AS (SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
+        |  FROM events WHERE user_id IS NOT NULL),
+        |lb AS (SELECT user_id, d, lead(d, 1) OVER (PARTITION BY user_id ORDER BY d) AS nxt
+        |  FROM days)
+        |SELECT strftime(d, '%Y-%m-%d') AS day, count(*) AS n_user_days,
+        |  CAST(sum(CASE WHEN nxt IS NULL OR date_diff('day', d, nxt) > 14
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_churned,
+        |  CAST(sum(CASE WHEN nxt IS NULL OR date_diff('day', d, nxt) > 14
+        |    THEN 1 ELSE 0 END) AS BIGINT) * 10000 // count(*) AS churn_bp
+        |FROM lb GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q411_haar_wavelet", (s, dir) => {
       // UNNORMALIZED HAAR WAVELET decomposition of each event type's
       // daily-count series (Haar 1910; the data-sketch use is Matias,
       // Vitter & Wang SIGMOD'98 wavelet synopses): 3 levels of pairwise
@@ -907,8 +1291,33 @@ private[graft] object RegistryStatsMl {
         .select(col("event_type"), col("level"), col("idx"),
           col("c").as("smooth"), col("dcoef"))
         .orderBy("event_type", "level", "idx")
-    }),
-    "q412_mutual_knn" -> ((s, dir) => {
+    },
+      // same dense calendar, same 3 pairwise (sum, diff) levels
+      """WITH e AS (SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d FROM events),
+        |b AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
+        |cal AS (SELECT CAST(unnest(range(0, date_diff('day', d0, d1) + 1)) AS BIGINT) AS idx FROM b),
+        |ty AS (SELECT DISTINCT event_type FROM e),
+        |daily AS (SELECT event_type, CAST(date_diff('day', b.d0, e.d) AS BIGINT) AS idx,
+        |    count(*) AS c FROM e, b GROUP BY 1, 2),
+        |dense AS (SELECT ty.event_type, cal.idx, CAST(coalesce(daily.c, 0) AS BIGINT) AS c
+        |  FROM ty CROSS JOIN cal LEFT JOIN daily
+        |  ON daily.event_type = ty.event_type AND daily.idx = cal.idx),
+        |l1 AS (SELECT event_type, idx // 2 AS idx, CAST(sum(c) AS BIGINT) AS c,
+        |    CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS dcoef
+        |  FROM dense GROUP BY 1, 2),
+        |l2 AS (SELECT event_type, idx // 2 AS idx, CAST(sum(c) AS BIGINT) AS c,
+        |    CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS dcoef
+        |  FROM l1 GROUP BY 1, 2),
+        |l3 AS (SELECT event_type, idx // 2 AS idx, CAST(sum(c) AS BIGINT) AS c,
+        |    CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS dcoef
+        |  FROM l2 GROUP BY 1, 2),
+        |uni AS (SELECT event_type, CAST(1 AS BIGINT) AS level, idx, c AS smooth, dcoef FROM l1
+        |  UNION ALL SELECT event_type, 2, idx, c, dcoef FROM l2
+        |  UNION ALL SELECT event_type, 3, idx, c, dcoef FROM l3)
+        |SELECT event_type, level, idx, smooth, dcoef FROM uni
+        |ORDER BY event_type, level, idx""".stripMargin,
+      note = "calendar densify from a 1-row min/max broadcast; 3 bounded idx-div-2 aggregates — integer-exact, no per-level window"),
+    Key("q412_mutual_knn", (s, dir) => {
       // MUTUAL nearest neighbors (reciprocal top-1) — the hard filter on
       // top of q354's soft margin for bitext/alignment mining: x↔y is a
       // pair iff y is x's best forward match AND x is y's best backward
@@ -921,8 +1330,27 @@ private[graft] object RegistryStatsMl {
       // materialized yardstick (mutualKnnExactIndex) q417's recall curve
       // reads — built once per (dir) per JVM.
       mutualKnnExactIndex(s, dir).orderBy("x")
-    }),
-    "q413_anova" -> ((s, dir) => {
+    },
+      // same forward/backward exact scoring (q45's raw-cosine ranking),
+      // backward restricted to the forward-hit set, same bp quantization
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |xs AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 0 AND vec_id < 2000),
+        |ys AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
+        |fs AS (SELECT x.vec_id AS x, y.vec_id AS y,
+        |    list_dot_product(x.v, y.v) / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) AS cosine
+        |  FROM xs x CROSS JOIN ys y),
+        |fr AS (SELECT x, y, cosine, row_number() OVER (PARTITION BY x ORDER BY cosine DESC, y) AS rn FROM fs),
+        |fwd AS (SELECT x, y, cosine FROM fr WHERE rn = 1),
+        |bq AS (SELECT DISTINCT y FROM fwd),
+        |bs AS (SELECT b.y, x.vec_id AS bx,
+        |    list_dot_product(yv.v, x.v) / (sqrt(list_dot_product(yv.v, yv.v)) * sqrt(list_dot_product(x.v, x.v))) AS cosine
+        |  FROM bq b JOIN ys yv ON yv.vec_id = b.y CROSS JOIN xs x),
+        |br AS (SELECT y, bx, row_number() OVER (PARTITION BY y ORDER BY cosine DESC, bx) AS rn FROM bs),
+        |bwd AS (SELECT y, bx FROM br WHERE rn = 1)
+        |SELECT f.x, f.y, CAST(round(f.cosine * 10000) AS BIGINT) AS cos_bp
+        |FROM fwd f JOIN bwd ON f.y = bwd.y AND f.x = bwd.bx ORDER BY f.x""".stripMargin,
+      note = "both directions broadcast-queries/one-corpus-scan (requireQueryBatch-guarded); backward pass scores ONLY forward hits — no pool×pool cartesian"),
+    Key("q413_anova", (s, dir) => {
       // ONE-WAY ANOVA across the k = 5 event-type arms (Fisher): the
       // k-arm generalization of q244's two-arm Welch t. Between/within
       // sums of squares decompose into per-group exact integer moments
@@ -954,8 +1382,24 @@ private[graft] object RegistryStatsMl {
             / (col("k") - lit(1L)))
             / ((col("tss").cast("double") - col("sg_centi") / lit(100.0))
               / (col("nn") - col("k"))), 4).as("f_stat"))
-    }),
-    "q414_stratified_kfold" -> ((s, dir) =>
+    },
+      // same per-arm exact moments, same centi-quantized Σs²/n, same chain
+      """WITH e AS (SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS y FROM events),
+        |m AS (SELECT event_type, count(*) AS n, CAST(sum(y) AS BIGINT) AS s,
+        |    CAST(sum(y * y) AS BIGINT) AS ss FROM e GROUP BY 1),
+        |g AS (SELECT count(*) AS k, CAST(sum(n) AS BIGINT) AS nn,
+        |    CAST(sum(s) AS BIGINT) AS ts, CAST(sum(ss) AS BIGINT) AS tss,
+        |    CAST(sum(CAST(floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
+        |      / CAST(n AS DOUBLE) * 100) AS BIGINT)) AS BIGINT) AS sg_centi
+        |  FROM m)
+        |SELECT k, nn,
+        |  (round(sg_centi / 100.0 - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE), 4) + 0.0) AS ssb,
+        |  (round(CAST(tss AS DOUBLE) - sg_centi / 100.0, 4) + 0.0) AS ssw,
+        |  (round(((sg_centi / 100.0 - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE))
+        |    / CAST(k - 1 AS DOUBLE))
+        |    / ((CAST(tss AS DOUBLE) - sg_centi / 100.0) / CAST(nn - k AS DOUBLE)), 4) + 0.0) AS f_stat
+        |FROM g""".stripMargin),
+    Key("q414_stratified_kfold", (s, dir) =>
       // STRATIFIED k-fold assignment (the cross-validation counterpart of
       // q109's single split): within each label stratum, documents take
       // folds round-robin in a deterministic (doc_id) order, so every
@@ -971,8 +1415,14 @@ private[graft] object RegistryStatsMl {
           .groupBy(col("fold").cast("long").as("fold"), col("lang"))
           .agg(count(lit(1)).as("n"))
           .orderBy("fold", "lang")
-      }),
-    "q415_eb_shrinkage" -> ((s, dir) => {
+      },
+      // same per-stratum round-robin in (doc_id) order
+      """WITH d AS (SELECT doc_id, lang,
+        |    (row_number() OVER (PARTITION BY lang ORDER BY doc_id) - 1) % 5 AS fold
+        |  FROM documents)
+        |SELECT CAST(fold AS BIGINT) AS fold, lang, count(*) AS n
+        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Key("q415_eb_shrinkage", (s, dir) => {
       // EMPIRICAL-BAYES shrinkage of per-part return rates toward the
       // corpus prior (additive smoothing with data-derived prior mean,
       // prior strength τ = 20 pseudo-observations) — the stabilizer next
@@ -990,8 +1440,16 @@ private[graft] object RegistryStatsMl {
           expr("r * 10000 div n").as("raw_bp"),
           expr("(r * nn + 20 * rr) * 10000 div ((n + 20) * nn)").as("shrunk_bp"))
         .orderBy(col("shrunk_bp").desc, col("l_partkey")).limit(20)
-    }),
-    "q416_set_cover" -> ((s, dir) => {
+    },
+      // same exact-integer additive-smoothing identity, same top-20 order
+      """WITH per AS (SELECT l_partkey, count(*) AS n,
+        |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS r
+        |  FROM lineitem GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn, CAST(sum(r) AS BIGINT) AS rr FROM per)
+        |SELECT l_partkey, n, r, r * 10000 // n AS raw_bp,
+        |  (r * nn + 20 * rr) * 10000 // ((n + 20) * nn) AS shrunk_bp
+        |FROM per, tot ORDER BY shrunk_bp DESC, l_partkey LIMIT 20""".stripMargin),
+    Key("q416_set_cover", (s, dir) => {
       // GREEDY SET COVER over token vocabularies — coverage-maximizing
       // corpus selection (the submodular data-selection shape of
       // facility-location/coreset curation, Wei et al. 2015): 10 rounds,
@@ -1020,8 +1478,10 @@ private[graft] object RegistryStatsMl {
         .distinct()
         .localCheckpoint()
       Curation.greedySetCover(s, pairs, rounds = 10)
-    }),
-    "q417_mutual_knn_ivf" -> ((s, dir) => {
+    },
+      q416Sql,
+      note = "anti-join of the covered broadcast sits BELOW the per-round aggregate; argmax is a 1-row collect; pair index checkpointed once"),
+    Key("q417_mutual_knn_ivf", (s, dir) => {
       // IVF-INDEXED mutual kNN — the corpus-scale variant q412's design
       // note promises: BOTH directions run on the q58 IVF index (probed
       // cells only, never a full scan), and recall is measured against
@@ -1079,8 +1539,10 @@ private[graft] object RegistryStatsMl {
             Num.roundz(col("hits") / greatest(col("n_exact"), lit(1L)), 4)
               .as("recall"))
       }.reduce(_ unionByName _).orderBy("nprobe")
-    }),
-    "q418_mcnemar" -> ((s, dir) => {
+    },
+      q417Sql,
+      note = "all eight direction passes are probed-cell equi-joins on the broadcast centroid assignment — never a full cross score; exact truth computed once and checkpointed"),
+    Key("q418_mcnemar", (s, dir) => {
       // McNemar's paired test — the eval-family gap next to q208 (AUC) /
       // q238 (kappa): q208 scores ONE model, q238 measures rater agreement;
       // shipping a model swap needs the PAIRED comparison on the SAME docs,
@@ -1103,8 +1565,21 @@ private[graft] object RegistryStatsMl {
             .as("chi2_centi"),
           (expr("CASE WHEN b + c = 0 THEN 0L ELSE (100 * (b - c) * (b - c)) div (b + c) END")
             > 384L).as("significant"))
+    }, {
+      val langCase = SparkEntry.langCaseOn("text")
+      s"""WITH cls AS (SELECT ($langCase) = lang AS a_ok, lang = 'en' AS b_ok FROM documents),
+         |m AS (SELECT
+         |  CAST(sum(CASE WHEN a_ok AND b_ok THEN 1 ELSE 0 END) AS BIGINT) AS n11,
+         |  CAST(sum(CASE WHEN a_ok AND NOT b_ok THEN 1 ELSE 0 END) AS BIGINT) AS b,
+         |  CAST(sum(CASE WHEN NOT a_ok AND b_ok THEN 1 ELSE 0 END) AS BIGINT) AS c,
+         |  CAST(sum(CASE WHEN NOT a_ok AND NOT b_ok THEN 1 ELSE 0 END) AS BIGINT) AS n00
+         |  FROM cls)
+         |SELECT n11, b, c, n00,
+         |  CAST(CASE WHEN b + c = 0 THEN 0 ELSE (100 * (b - c) * (b - c)) // (b + c) END AS BIGINT) AS chi2_centi,
+         |  (CASE WHEN b + c = 0 THEN 0 ELSE (100 * (b - c) * (b - c)) // (b + c) END) > 384 AS significant
+         |FROM m""".stripMargin
     }),
-    "q419_shapley_attribution" -> ((s, dir) => {
+    Key("q419_shapley_attribution", (s, dir) => {
       // exact Shapley-value channel attribution — the cooperative-game
       // complement of q389's Markov removal effect: v(S) counts converted
       // users whose touched-channel set fits inside coalition S, and each
@@ -1138,8 +1613,25 @@ private[graft] object RegistryStatsMl {
           " WHEN 2 THEN 'purchase' WHEN 3 THEN 'signup' ELSE 'view' END")
           .as("channel"), col("shapley_x120"))
         .orderBy("channel")
-    }),
-    "q420_pass_at_k" -> ((s, dir) => {
+    },
+      """WITH u AS (SELECT user_id,
+        |    CAST(sum(DISTINCT 1 << (CASE event_type WHEN 'click' THEN 0 WHEN 'error' THEN 1
+        |      WHEN 'purchase' THEN 2 WHEN 'signup' THEN 3 ELSE 4 END)) AS BIGINT) AS mask,
+        |    max(value) AS mx FROM events GROUP BY 1),
+        |obs AS (SELECT mask, count(*) AS cnt FROM u WHERE mx >= 300.0 GROUP BY 1),
+        |coal AS (SELECT unnest(range(0, 32)) AS sm),
+        |v AS (SELECT sm, CAST(coalesce(sum(cnt), 0) AS BIGINT) AS v
+        |  FROM coal LEFT JOIN obs ON (obs.mask & coal.sm) = obs.mask GROUP BY 1),
+        |ch AS (SELECT unnest(range(0, 5)) AS ci)
+        |SELECT CASE ci WHEN 0 THEN 'click' WHEN 1 THEN 'error' WHEN 2 THEN 'purchase'
+        |    WHEN 3 THEN 'signup' ELSE 'view' END AS channel,
+        |  CAST(sum((CASE bit_count(vs.sm) WHEN 0 THEN 24 WHEN 1 THEN 6 WHEN 2 THEN 4
+        |    WHEN 3 THEN 6 ELSE 24 END) * (vi.v - vs.v)) AS BIGINT) AS shapley_x120
+        |FROM ch JOIN v vs ON (vs.sm & (1 << ci)) = 0
+        |JOIN v vi ON vi.sm = (vs.sm | (1 << ci))
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "ONE corpus-wide user aggregate; the 32-coalition lattice and both v() joins are broadcasts over a localCheckpoint'd <=32-row frame"),
+    Key("q420_pass_at_k", (s, dir) => {
       // the unbiased pass@k estimator (1 - C(n-c,k)/C(n,k)) per part,
       // treating its lineitems as trials and returnflag='R' as a pass —
       // the LLM-eval aggregation shape (n samples per task, c successes,
@@ -1162,8 +1654,22 @@ private[graft] object RegistryStatsMl {
           passAt(1).as("pass_at_1"), passAt(5).as("pass_at_5"),
           passAt(10).as("pass_at_10"))
         .orderBy("l_partkey")
-    }),
-    "q421_cusum_control" -> ((s, dir) => {
+    },
+      """WITH g AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS c
+        |  FROM lineitem GROUP BY 1 HAVING count(*) >= 10)
+        |SELECT l_partkey, n, c,
+        |  CASE WHEN n - c < 1 THEN CAST(1.0 AS DOUBLE) ELSE 1.0 - list_reduce(
+        |    list_transform(range(0, 1), i -> CAST(n - c - i AS DOUBLE) / CAST(n - i AS DOUBLE)),
+        |    (acc, x) -> acc * x) END AS pass_at_1,
+        |  CASE WHEN n - c < 5 THEN CAST(1.0 AS DOUBLE) ELSE 1.0 - list_reduce(
+        |    list_transform(range(0, 5), i -> CAST(n - c - i AS DOUBLE) / CAST(n - i AS DOUBLE)),
+        |    (acc, x) -> acc * x) END AS pass_at_5,
+        |  CASE WHEN n - c < 10 THEN CAST(1.0 AS DOUBLE) ELSE 1.0 - list_reduce(
+        |    list_transform(range(0, 10), i -> CAST(n - c - i AS DOUBLE) / CAST(n - i AS DOUBLE)),
+        |    (acc, x) -> acc * x) END AS pass_at_10
+        |FROM g ORDER BY l_partkey""".stripMargin),
+    Key("q421_cusum_control", (s, dir) => {
       // one-sided CUSUM control chart per event type: baseline mean from
       // the first 10 calendar days, then S_i = max(0, S_{i-1} + x_i - mu -
       // mu/20) over the monitored days, alarming when S crosses 4*mu.
@@ -1190,8 +1696,25 @@ private[graft] object RegistryStatsMl {
         .select(col("event_type"), col("day"), col("inc"), col("s_scaled"),
           (col("s_scaled") > expr("80 * base_sum")).as("alarm"))
         .orderBy("event_type", "day")
-    }),
-    "q422_decision_stump" -> ((s, dir) => {
+    },
+      """WITH d AS (SELECT event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
+        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
+        |  FROM events GROUP BY 1, 2),
+        |b AS (SELECT event_type, CAST(sum(cents) AS BIGINT) AS base_sum,
+        |    CAST(count(*) AS BIGINT) AS n0
+        |  FROM d WHERE day <= '2024-01-10' GROUP BY 1),
+        |m AS (SELECT d.event_type, d.day,
+        |    CAST(20 * b.n0 * d.cents - 21 * b.base_sum AS BIGINT) AS inc, b.base_sum
+        |  FROM d JOIN b ON d.event_type = b.event_type WHERE d.day > '2024-01-10'),
+        |p0 AS (SELECT event_type, day, inc, base_sum,
+        |    sum(inc) OVER (PARTITION BY event_type ORDER BY day) AS p FROM m),
+        |p AS (SELECT event_type, day, inc, base_sum, p,
+        |    min(p) OVER (PARTITION BY event_type ORDER BY day) AS mp FROM p0)
+        |SELECT event_type, day, inc, CAST(p - least(0, mp) AS BIGINT) AS s_scaled,
+        |  (p - least(0, mp)) > 80 * base_sum AS alarm
+        |FROM p ORDER BY event_type, day""".stripMargin,
+      note = "two windows (prefix sum, running min) over the per-day frame partitioned by type; baseline is a broadcast 1-row-per-type join — raw events never re-sort"),
+    Key("q422_decision_stump", (s, dir) => {
       // histogram-based split finding (the LightGBM/XGBoost hist trick) —
       // the tree-learning primitive the stats family lacks: bin the feature
       // (price, $100 bins), aggregate per-bin (n, pos) once, then score
@@ -1226,8 +1749,25 @@ private[graft] object RegistryStatsMl {
           col("pr"), col("score_ppm"))
         .orderBy(col("score_ppm").desc, col("split_bin"))
         .limit(10)
-    }),
-    "q423_uplift_qini" -> ((s, dir) => {
+    },
+      """WITH bins AS (SELECT CAST(round(p_retailprice * 100, 0) AS BIGINT) // 10000 AS bin,
+        |    CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(CASE WHEN p_size >= 25 THEN 1 ELSE 0 END) AS BIGINT) AS pos
+        |  FROM part GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(pos) AS BIGINT) AS pt FROM bins),
+        |pre AS (SELECT bin,
+        |    CAST(sum(n) OVER (ORDER BY bin) AS BIGINT) AS nl,
+        |    CAST(sum(pos) OVER (ORDER BY bin) AS BIGINT) AS pl
+        |  FROM bins),
+        |sc AS (SELECT bin, nl, pl, nt - nl AS nr, pt - pl AS pr,
+        |    pl * pl + (nl - pl) * (nl - pl) AS a,
+        |    pr * pr + ((nt - nl) - pr) * ((nt - nl) - pr) AS bb
+        |  FROM pre, tot WHERE nl < nt)
+        |SELECT bin AS split_bin, nl, pl, CAST(nr AS BIGINT) AS nr, CAST(pr AS BIGINT) AS pr,
+        |  CAST((CAST(1000000 AS HUGEINT) * (CAST(a AS HUGEINT) * nr + CAST(bb AS HUGEINT) * nl))
+        |    // (CAST(nl AS HUGEINT) * nr) AS BIGINT) AS score_ppm
+        |FROM sc ORDER BY score_ppm DESC, split_bin LIMIT 10""".stripMargin),
+    Key("q423_uplift_qini", (s, dir) => {
       // uplift deciles + the Qini numerator — the targeting readout next to
       // q163's average lift: rank users by a pre-period activity score,
       // then per score-decile compare treated vs control conversion, and
@@ -1260,8 +1800,26 @@ private[graft] object RegistryStatsMl {
         .select(col("decile"), col("nt"), col("nc"), col("ct"), col("cc"),
           col("qini_x"))
         .orderBy("decile")
-    }),
-    "q424_bleu" -> ((s, dir) => {
+    },
+      """WITH u AS (SELECT user_id,
+        |    CAST(sum(CASE WHEN strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') <= '2024-01-15'
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS score,
+        |    CAST(max(CASE WHEN strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') > '2024-01-15'
+        |      AND value >= 300.0 THEN 1 ELSE 0 END) AS BIGINT) AS conv,
+        |    user_id % 2 AS arm
+        |  FROM events GROUP BY user_id),
+        |d AS (SELECT *, CAST(ntile(10) OVER (ORDER BY score DESC, user_id) AS BIGINT) AS decile FROM u),
+        |g AS (SELECT decile,
+        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
+        |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
+        |    CAST(sum(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS ct,
+        |    CAST(sum(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS cc
+        |  FROM d GROUP BY 1)
+        |SELECT decile, nt, nc, ct, cc,
+        |  CAST(sum(ct) OVER (ORDER BY decile) * sum(nc) OVER (ORDER BY decile)
+        |    - sum(cc) OVER (ORDER BY decile) * sum(nt) OVER (ORDER BY decile) AS BIGINT) AS qini_x
+        |FROM g ORDER BY decile""".stripMargin),
+    Key("q424_bleu", (s, dir) => {
       // corpus BLEU-4 — the generation-eval twin of q314's ROUGE overlap:
       // candidates are the planted near-dup docs, references their
       // originals (cand = ref + ' dup'), paired by an equi-join on the
@@ -1316,8 +1874,42 @@ private[graft] object RegistryStatsMl {
             "(CAST(match3 AS DOUBLE) / CAST(total3 AS DOUBLE)) * " +
             "(CAST(match4 AS DOUBLE) / CAST(total4 AS DOUBLE))))"))
         .drop("c_len", "r_len")
-    }),
-    "q425_sort_for_compression" -> ((s, dir) => {
+    },
+      """WITH pr AS (SELECT c.doc_id AS pair_id,
+        |    regexp_split_to_array(c.text, ' ') AS ct, regexp_split_to_array(r.text, ' ') AS rt
+        |  FROM documents c JOIN documents r ON c.text = r.text || ' dup'),
+        |ns AS (SELECT unnest(range(1, 5)) AS n),
+        |cg0 AS (SELECT pair_id, n, ct, unnest(range(1, len(ct) - n + 2)) AS i
+        |  FROM pr, ns WHERE len(ct) >= n),
+        |cg AS (SELECT pair_id, n,
+        |    array_to_string(ct[CAST(i AS BIGINT):CAST(i + n - 1 AS BIGINT)], ' ') AS g,
+        |    count(*) AS cnt FROM cg0 GROUP BY 1, 2, 3),
+        |rg0 AS (SELECT pair_id, n, rt, unnest(range(1, len(rt) - n + 2)) AS i
+        |  FROM pr, ns WHERE len(rt) >= n),
+        |rg AS (SELECT pair_id, n,
+        |    array_to_string(rt[CAST(i AS BIGINT):CAST(i + n - 1 AS BIGINT)], ' ') AS g,
+        |    count(*) AS rcnt FROM rg0 GROUP BY 1, 2, 3),
+        |mm AS (SELECT cg.n, CAST(coalesce(sum(least(cg.cnt, rg.rcnt)), 0) AS BIGINT) AS m
+        |  FROM cg JOIN rg ON cg.pair_id = rg.pair_id AND cg.n = rg.n AND cg.g = rg.g
+        |  GROUP BY 1),
+        |tt AS (SELECT n, CAST(sum(cnt) AS BIGINT) AS tot FROM cg GROUP BY 1),
+        |agg AS (SELECT
+        |    max(CASE WHEN n = 1 THEN coalesce(m, 0) END) AS match1, max(CASE WHEN n = 1 THEN tot END) AS total1,
+        |    max(CASE WHEN n = 2 THEN coalesce(m, 0) END) AS match2, max(CASE WHEN n = 2 THEN tot END) AS total2,
+        |    max(CASE WHEN n = 3 THEN coalesce(m, 0) END) AS match3, max(CASE WHEN n = 3 THEN tot END) AS total3,
+        |    max(CASE WHEN n = 4 THEN coalesce(m, 0) END) AS match4, max(CASE WHEN n = 4 THEN tot END) AS total4
+        |  FROM tt LEFT JOIN mm USING (n)),
+        |ln2 AS (SELECT CAST(sum(len(ct)) AS BIGINT) AS c_len, CAST(sum(len(rt)) AS BIGINT) AS r_len FROM pr)
+        |SELECT match1, total1, match2, total2, match3, total3, match4, total4,
+        |  (CASE WHEN c_len >= r_len THEN CAST(1.0 AS DOUBLE)
+        |    ELSE exp(1.0 - CAST(r_len AS DOUBLE) / CAST(c_len AS DOUBLE)) END) *
+        |  sqrt(sqrt((CAST(match1 AS DOUBLE) / CAST(total1 AS DOUBLE)) *
+        |    (CAST(match2 AS DOUBLE) / CAST(total2 AS DOUBLE)) *
+        |    (CAST(match3 AS DOUBLE) / CAST(total3 AS DOUBLE)) *
+        |    (CAST(match4 AS DOUBLE) / CAST(total4 AS DOUBLE)))) AS bleu
+        |FROM agg, ln2""".stripMargin,
+      note = "pair join keys on text equality once, checkpointed; each n-gram pass explodes ONLY the paired 5% slice, grouped counts both sides before the bounded join"),
+    Key("q425_sort_for_compression", (s, dir) => {
       // layout advisor: which sort key makes the OTHER columns compress? —
       // the decision input for q99/q124-style rewrites. For each candidate
       // key, count the RLE runs each payload column would have after
@@ -1362,8 +1954,27 @@ private[graft] object RegistryStatsMl {
           col("l_returnflag").as("runs_returnflag"),
           col("l_linestatus").as("runs_linestatus"))
         .orderBy("sort_key")
-    }),
-    "q426_hierarchy_paths" -> ((s, dir) => {
+    }, {
+      def runsSql(keyExpr: String, keyName: String) =
+        s"""SELECT '$keyName' AS sort_key,
+           |  CAST(sum(CASE WHEN pp IS NULL OR pp <> l_partkey THEN 1 ELSE 0 END) AS BIGINT) AS runs_partkey,
+           |  CAST(sum(CASE WHEN ps IS NULL OR ps <> l_suppkey THEN 1 ELSE 0 END) AS BIGINT) AS runs_suppkey,
+           |  CAST(sum(CASE WHEN pf IS NULL OR pf <> l_returnflag THEN 1 ELSE 0 END) AS BIGINT) AS runs_returnflag,
+           |  CAST(sum(CASE WHEN pl IS NULL OR pl <> l_linestatus THEN 1 ELSE 0 END) AS BIGINT) AS runs_linestatus
+           |FROM (SELECT l_partkey, l_suppkey, l_returnflag, l_linestatus,
+           |  lag(l_partkey) OVER w AS pp, lag(l_suppkey) OVER w AS ps,
+           |  lag(l_returnflag) OVER w AS pf, lag(l_linestatus) OVER w AS pl
+           |  FROM (SELECT *, $keyExpr AS __k, l_orderkey // 4096 AS __b FROM lineitem)
+           |  WINDOW w AS (PARTITION BY __k, __b
+           |    ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag, l_linestatus))""".stripMargin
+      Seq(
+        runsSql("CAST(l_returnflag AS VARCHAR)", "l_returnflag"),
+        runsSql("CAST(l_linestatus AS VARCHAR)", "l_linestatus"),
+        runsSql("strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m')", "ship_month"))
+        .mkString("", "\nUNION ALL\n", "\nORDER BY sort_key")
+    },
+      note = "three independent bucketed windows partitioned by (key, orderkey div 4096) — no low-cardinality key ever owns a global window task"),
+    Key("q426_hierarchy_paths", (s, dir) => {
       // FK-chain flatten: every node's root + full path through the
       // customer→nation→region hierarchy, by POINTER JUMPING — each round
       // joins the state with itself on (my farthest ancestor = your node),
@@ -1398,8 +2009,21 @@ private[graft] object RegistryStatsMl {
       resolved.select(col("node"), col("anc").as("root"), col("depth"),
         concat(col("node"), col("sfx")).as("path"))
         .orderBy("node")
-    }),
-    "q427_policy_mask" -> ((s, dir) => {
+    },
+      """WITH RECURSIVE e AS (
+        |  SELECT 'c:' || c_custkey AS node, 'n:' || c_nationkey AS parent FROM customer
+        |  UNION ALL SELECT 'n:' || n_nationkey, 'r:' || n_regionkey FROM nation
+        |  UNION ALL SELECT 'r:' || r_regionkey, NULL FROM region),
+        |rec AS (
+        |  SELECT node, node AS cur, 0 AS depth, node AS path FROM e
+        |  UNION ALL
+        |  SELECT r.node, e.parent, r.depth + 1, r.path || '/' || e.parent
+        |  FROM rec r JOIN e ON e.node = r.cur WHERE e.parent IS NOT NULL)
+        |SELECT r.node, r.cur AS root, CAST(r.depth AS BIGINT) AS depth, r.path
+        |FROM rec r JOIN e t ON t.node = r.cur
+        |WHERE t.parent IS NULL ORDER BY r.node""".stripMargin,
+      note = "two pointer-jump self-joins on the ancestor key (horizon 4 >= depth 3); path concat rides the join, no per-level scan of the table"),
+    Key("q427_policy_mask", (s, dir) => {
       // data-driven row/column security (ops.Policy): the rule set below is
       // METADATA — per role it compiles to one pushed row-filter + one
       // codegen'd masking projection over customer, zero extra shuffles.
@@ -1419,8 +2043,17 @@ private[graft] object RegistryStatsMl {
         roles = Seq("admin", "analyst", "support"),
         keepCols = Seq("c_custkey", "c_name", "c_acctbal", "c_mktsegment"))
         .orderBy("role", "c_custkey")
-    }),
-    "q428_merkle_ranges" -> ((s, dir) => {
+    },
+      """SELECT * FROM (
+        |  SELECT 'admin' AS role, c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
+        |  UNION ALL
+        |  SELECT 'analyst', c_custkey, substr(c_name, 1, 9) || '***',
+        |    CAST(NULL AS DOUBLE), c_mktsegment
+        |  FROM customer WHERE c_mktsegment <> 'AUTOMOBILE'
+        |  UNION ALL
+        |  SELECT 'support', c_custkey, md5(c_name), c_acctbal, c_mktsegment FROM customer)
+        |ORDER BY role, c_custkey""".stripMargin),
+    Key("q428_merkle_ranges", (s, dir) => {
       // snapshot diff by Merkle descent — the integrity primitive behind
       // "which key ranges changed between yesterday's copy and today's?"
       // without shipping either table: both snapshots hash into a 3-level
@@ -1451,8 +2084,30 @@ private[graft] object RegistryStatsMl {
           coalesce(col("node_id"), col("cn")).as("node_id"),
           col("h").as("base_h"), col("ch").as("cur_h"))
         .orderBy(col("level").desc, col("node_id"))
-    }),
-    "q429_mannwhitney_u" -> ((s, dir) => {
+    },
+      """WITH rows0 AS (SELECT o_orderkey AS k,
+        |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents, o_orderstatus
+        |  FROM orders),
+        |b AS (SELECT k, md5(k || '|' || cents || '|' || o_orderstatus) AS rh FROM rows0),
+        |c AS (SELECT k, md5(k || '|' ||
+        |    (CASE WHEN k % 997 = 0 THEN cents + 100 ELSE cents END) || '|' || o_orderstatus) AS rh
+        |  FROM rows0 WHERE k % 1009 <> 0),
+        |b0 AS (SELECT k // 512 AS node_id, md5(string_agg(rh, '' ORDER BY k)) AS h, 0 AS level FROM b GROUP BY 1),
+        |b1 AS (SELECT node_id // 32 AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 1 AS level FROM b0 GROUP BY 1),
+        |b2 AS (SELECT CAST(0 AS BIGINT) AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 2 AS level FROM b1),
+        |c0 AS (SELECT k // 512 AS node_id, md5(string_agg(rh, '' ORDER BY k)) AS h, 0 AS level FROM c GROUP BY 1),
+        |c1 AS (SELECT node_id // 32 AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 1 AS level FROM c0 GROUP BY 1),
+        |c2 AS (SELECT CAST(0 AS BIGINT) AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 2 AS level FROM c1),
+        |bt AS (SELECT * FROM b0 UNION ALL SELECT * FROM b1 UNION ALL SELECT * FROM b2),
+        |ct AS (SELECT * FROM c0 UNION ALL SELECT * FROM c1 UNION ALL SELECT * FROM c2)
+        |SELECT CAST(coalesce(bt.level, ct.level) AS BIGINT) AS level,
+        |  CAST(coalesce(bt.node_id, ct.node_id) AS BIGINT) AS node_id,
+        |  bt.h AS base_h, ct.h AS cur_h
+        |FROM bt FULL OUTER JOIN ct ON bt.level = ct.level AND bt.node_id = ct.node_id
+        |WHERE bt.h IS DISTINCT FROM ct.h
+        |ORDER BY level DESC, node_id""".stripMargin,
+      note = "both trees are 3 bounded hash aggregates (collect_list capped by fanout); the diff is one full-outer join on (level, node) carrying 32-char hashes only"),
+    Key("q429_mannwhitney_u", (s, dir) => {
       // Mann-Whitney U — the nonparametric twin of q244's Welch t: arm
       // comparison on RANKS, so one $10k outlier cannot buy the verdict.
       // Rank sums come from the (type, cents) HISTOGRAM, not per-row
@@ -1480,8 +2135,23 @@ private[graft] object RegistryStatsMl {
           expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * u2) div (n1 * n2) AS BIGINT)")
             .as("rb_plus1_ppm"))
         .orderBy("event_type")
-    }),
-    "q430_kcenter_seeds" -> ((s, dir) => {
+    },
+      """WITH e AS (SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS cents,
+        |    user_id % 2 AS arm FROM events),
+        |g AS (SELECT event_type, cents, CAST(count(*) AS BIGINT) AS t,
+        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t1
+        |  FROM e GROUP BY 1, 2),
+        |r AS (SELECT *, coalesce(sum(t) OVER (PARTITION BY event_type ORDER BY cents
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s FROM g),
+        |p AS (SELECT event_type, CAST(sum(t1 * (2 * s + t + 1)) AS BIGINT) AS r1_2,
+        |    CAST(sum(t1) AS BIGINT) AS n1, CAST(sum(t - t1) AS BIGINT) AS n2
+        |  FROM r GROUP BY 1)
+        |SELECT event_type, n1, n2, CAST(r1_2 - n1 * (n1 + 1) AS BIGINT) AS u2,
+        |  CAST((CAST(1000000 AS HUGEINT) * (r1_2 - n1 * (n1 + 1)))
+        |    // (CAST(n1 AS HUGEINT) * n2) AS BIGINT) AS rb_plus1_ppm
+        |FROM p ORDER BY event_type""".stripMargin,
+      note = "rank window runs over the (type, cents) HISTOGRAM, not rows; the corpus pays one hash aggregate, U and the effect are integer algebra on 5 rows"),
+    Key("q430_kcenter_seeds", (s, dir) => {
       // greedy farthest-point k-center seeding — the deterministic
       // initializer the q257/q58 kmeans path lacks (its seeds are fixed id
       // ranges): each round picks the point farthest from every chosen
@@ -1509,8 +2179,32 @@ private[graft] object RegistryStatsMl {
         .toDF("r", "cid", "radius")
         .select(col("r"), col("cid"), ops.Num.normZero(col("radius")).as("radius"))
         .orderBy("r")
-    }),
-    "q431_dtw_distance" -> ((s, dir) => {
+    }, {
+      // 7 chained MATERIALIZED greedy rounds (the q416/q422 oracle
+      // technique); dist^2 via the same dot identity, rounded 6dp before
+      // the (d DESC, vec_id) argmax
+      val rounds = new StringBuilder(
+        "c0 AS MATERIALIZED (SELECT 0 AS r, CAST(0 AS BIGINT) AS cid, CAST(NULL AS DOUBLE) AS radius)")
+      (1 to 7).foreach { r =>
+        val prev = (0 until r).map(i => s"SELECT cid FROM c$i").mkString(" UNION ALL ")
+        rounds.append(
+          s""",
+             |d$r AS MATERIALIZED (SELECT p.vec_id, min((round(
+             |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[]))
+             |    - 2 * list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
+             |    + list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) + 0.0)) AS d
+             |  FROM embeddings p CROSS JOIN (SELECT e.embedding FROM embeddings e
+             |    WHERE e.vec_id IN ($prev)) c GROUP BY 1),
+             |c$r AS MATERIALIZED (SELECT $r AS r, vec_id AS cid, d AS radius FROM d$r
+             |  ORDER BY d DESC, vec_id LIMIT 1)""".stripMargin)
+      }
+      val union = (0 to 7).map(i => s"SELECT * FROM c$i").mkString(" UNION ALL ")
+      s"""WITH ${rounds.result()}
+         |SELECT CAST(r AS BIGINT) AS r, cid, (radius + 0.0) AS radius
+         |FROM ($union) ORDER BY r""".stripMargin
+    },
+      note = "emitted frame is the driver-built 8-row seed list (LocalTableScan here); the load-bearing per-round probe plan (centers broadcast-crossed, min per point, no point-point matrix) is asserted in PlanSpec"),
+    Key("q431_dtw_distance", (s, dir) => {
       // banded Dynamic Time Warping between every pair of event-type daily
       // series — the elastic series similarity q220's lag-scan cross-
       // correlation cannot express (DTW aligns local stretches, not one
@@ -1544,8 +2238,45 @@ private[graft] object RegistryStatsMl {
       pairs.select(col("ta"), col("tb"),
         expr(s"element_at($dp, 31)").as("dtw"))
         .orderBy("ta", "tb")
-    }),
-    "q432_fellegi_sunter" -> ((s, dir) => {
+    },
+      // row-major linearized DP: one recursive CTE step per cell, state =
+      // (prev row P, current row N) as BIGINT lists; 31*31 steps per pair.
+      // (The engine folds the same grid via nested aggregate() lambdas —
+      // DuckDB's list_reduce cannot carry a list accumulator, hence the
+      // linearization here.)
+      """WITH RECURSIVE d AS (
+        |  SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
+        |    count(*) AS x FROM events GROUP BY 1, 2),
+        |cal AS (SELECT unnest(range(1, 32)) AS day),
+        |types AS (SELECT DISTINCT event_type FROM d),
+        |dense AS (SELECT t.event_type, c.day, coalesce(d.x, 0) AS x
+        |  FROM types t CROSS JOIN cal c
+        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
+        |ser AS (SELECT event_type, list(x ORDER BY day) AS xs FROM dense GROUP BY 1),
+        |pairs AS (SELECT a.event_type AS ta, b.event_type AS tb, a.xs AS xa, b.xs AS xb
+        |  FROM ser a JOIN ser b ON a.event_type < b.event_type),
+        |rec AS (
+        |  SELECT ta, tb, xa, xb, CAST(1 AS BIGINT) AS s,
+        |    CAST([] AS BIGINT[]) AS p,
+        |    CAST([abs(xa[1] - xb[1])] AS BIGINT[]) AS n
+        |  FROM pairs
+        |  UNION ALL
+        |  SELECT ta, tb, xa, xb, s + 1,
+        |    CASE WHEN (s % 31) = 0 THEN n ELSE p END,
+        |    CASE WHEN (s % 31) = 0
+        |      THEN [CASE WHEN abs((s // 31 + 1) - 1) <= 3
+        |        THEN abs(xa[CAST(s // 31 + 1 AS BIGINT)] - xb[1]) + n[1]
+        |        ELSE 1000000000000000 END]
+        |      ELSE n || [CASE WHEN abs((s // 31 + 1) - (s % 31 + 1)) <= 3
+        |        THEN abs(xa[CAST(s // 31 + 1 AS BIGINT)] - xb[CAST(s % 31 + 1 AS BIGINT)]) +
+        |          least(CASE WHEN s // 31 = 0 THEN 1000000000000000 ELSE p[CAST(s % 31 + 1 AS BIGINT)] END,
+        |                CASE WHEN s // 31 = 0 OR s % 31 = 0 THEN 1000000000000000 ELSE p[CAST(s % 31 AS BIGINT)] END,
+        |                n[CAST(s % 31 AS BIGINT)])
+        |        ELSE 1000000000000000 END]
+        |      END
+        |  FROM rec WHERE s < 31 * 31)
+        |SELECT ta, tb, n[31] AS dtw FROM rec WHERE s = 31 * 31 ORDER BY ta, tb""".stripMargin),
+    Key("q432_fellegi_sunter", (s, dir) => {
       // Fellegi-Sunter probabilistic record linkage — the WEIGHTED layer
       // q203's rule-based entity resolution lacks: per comparison field
       // estimate m (agreement rate among true matches) and u (among
@@ -1596,8 +2327,38 @@ private[graft] object RegistryStatsMl {
         .select(col("f1"), col("f2"), col("f3"), col("n_pairs"), col("n_match"),
           col("weight"))
         .orderBy("f1", "f2", "f3")
+    }, {
+      def ratioSql(k: Int) =
+        s"""CASE WHEN f$k THEN
+           |  CASE WHEN mt = 0 OR ut = 0 OR ua$k = 0 THEN CAST(NULL AS DOUBLE)
+           |    ELSE (CAST(ma$k AS DOUBLE) / CAST(mt AS DOUBLE)) / (CAST(ua$k AS DOUBLE) / CAST(ut AS DOUBLE)) END
+           |ELSE
+           |  CASE WHEN mt = 0 OR ut = 0 OR ut = ua$k THEN CAST(NULL AS DOUBLE)
+           |    ELSE (CAST(mt - ma$k AS DOUBLE) / CAST(mt AS DOUBLE)) / (CAST(ut - ua$k AS DOUBLE) / CAST(ut AS DOUBLE)) END
+           |END""".stripMargin
+      s"""WITH d AS (SELECT doc_id, text, lang, source, n_chars, n_chars // 25 AS bucket
+         |  FROM documents WHERE doc_id < 400),
+         |cands AS (SELECT a.lang = b.lang AS f1, a.source = b.source AS f2,
+         |    abs(a.n_chars - b.n_chars) <= 4 AS f3,
+         |    b.text = a.text || ' dup' AS is_match
+         |  FROM d a JOIN d b ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
+         |g AS (SELECT
+         |    CAST(sum(CASE WHEN is_match THEN 1 ELSE 0 END) AS BIGINT) AS mt,
+         |    CAST(sum(CASE WHEN NOT is_match THEN 1 ELSE 0 END) AS BIGINT) AS ut,
+         |    CAST(sum(CASE WHEN is_match AND f1 THEN 1 ELSE 0 END) AS BIGINT) AS ma1,
+         |    CAST(sum(CASE WHEN NOT is_match AND f1 THEN 1 ELSE 0 END) AS BIGINT) AS ua1,
+         |    CAST(sum(CASE WHEN is_match AND f2 THEN 1 ELSE 0 END) AS BIGINT) AS ma2,
+         |    CAST(sum(CASE WHEN NOT is_match AND f2 THEN 1 ELSE 0 END) AS BIGINT) AS ua2,
+         |    CAST(sum(CASE WHEN is_match AND f3 THEN 1 ELSE 0 END) AS BIGINT) AS ma3,
+         |    CAST(sum(CASE WHEN NOT is_match AND f3 THEN 1 ELSE 0 END) AS BIGINT) AS ua3
+         |  FROM cands)
+         |SELECT f1, f2, f3, CAST(count(*) AS BIGINT) AS n_pairs,
+         |  CAST(sum(CASE WHEN is_match THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
+         |  ((${ratioSql(1)}) * (${ratioSql(2)})) * (${ratioSql(3)}) AS weight
+         |FROM cands, g GROUP BY f1, f2, f3, mt, ut, ma1, ua1, ma2, ua2, ma3, ua3
+         |ORDER BY f1, f2, f3""".stripMargin
     }),
-    "q433_holt_winters" -> ((s, dir) => {
+    Key("q433_holt_winters", (s, dir) => {
       // additive Holt-Winters (level + trend + weekly seasonality) — the
       // seasonal extension of q200's Holt: q175 MEASURES seasonality,
       // q200 smooths through it; this key forecasts WITH it. State
@@ -1630,8 +2391,34 @@ private[graft] object RegistryStatsMl {
           ops.Num.roundz(expr("__f.l + __f.b + element_at(__f.s, 1)"), 4)
             .as("forecast"))
         .orderBy("event_type")
-    }),
-    "q434_theilsen_slope" -> ((s, dir) => {
+    },
+      """WITH RECURSIVE d AS (
+        |  SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
+        |    count(*) AS x FROM events GROUP BY 1, 2),
+        |cal AS (SELECT unnest(range(1, 32)) AS day),
+        |types AS (SELECT DISTINCT event_type FROM d),
+        |dense AS (SELECT t.event_type, c.day, CAST(coalesce(d.x, 0) AS DOUBLE) AS x
+        |  FROM types t CROSS JOIN cal c
+        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
+        |ser AS (SELECT event_type, list(x ORDER BY day) AS xs FROM dense GROUP BY 1),
+        |init AS (SELECT event_type, xs,
+        |    (xs[1] + xs[2] + xs[3] + xs[4] + xs[5] + xs[6] + xs[7]) / 7.0 AS m1,
+        |    (xs[8] + xs[9] + xs[10] + xs[11] + xs[12] + xs[13] + xs[14]) / 7.0 AS m2
+        |  FROM ser),
+        |rec AS (
+        |  SELECT event_type, xs, CAST(7 AS BIGINT) AS t, m1 AS lvl, (m2 - m1) / 7.0 AS tr,
+        |    [xs[1] - m1, xs[2] - m1, xs[3] - m1, xs[4] - m1, xs[5] - m1, xs[6] - m1, xs[7] - m1] AS s
+        |  FROM init
+        |  UNION ALL
+        |  SELECT event_type, xs, t + 1,
+        |    0.3 * (xs[CAST(t + 1 AS BIGINT)] - s[1]) + 0.7 * (lvl + tr),
+        |    0.1 * ((0.3 * (xs[CAST(t + 1 AS BIGINT)] - s[1]) + 0.7 * (lvl + tr)) - lvl) + 0.9 * tr,
+        |    s[2:7] || [0.2 * (xs[CAST(t + 1 AS BIGINT)] - (0.3 * (xs[CAST(t + 1 AS BIGINT)] - s[1]) + 0.7 * (lvl + tr))) + 0.8 * s[1]]
+        |  FROM rec WHERE t < 31)
+        |SELECT event_type, (round(lvl, 4) + 0.0) AS level, (round(tr, 4) + 0.0) AS trend,
+        |  (round(lvl + tr + s[1], 4) + 0.0) AS forecast
+        |FROM rec WHERE t = 31 ORDER BY event_type""".stripMargin),
+    Key("q434_theilsen_slope", (s, dir) => {
       // Theil-Sen robust trend per event type: the MEDIAN of all pairwise
       // slopes (x_j - x_i)/(j - i) — one wild day cannot buy the trend the
       // way it buys q392's OLS line. The 465 day-pairs per type come from
@@ -1660,8 +2447,23 @@ private[graft] object RegistryStatsMl {
         .filter(col("rn") === expr("CAST(ceil(n_pairs / 2.0) AS BIGINT)"))
         .select(col("event_type"), col("n_pairs"), col("slope_q").as("median_slope_q"))
         .orderBy("event_type")
-    }),
-    "q435_delta_method_ci" -> ((s, dir) => {
+    },
+      """WITH d AS (SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
+        |    count(*) AS x FROM events GROUP BY 1, 2),
+        |cal AS (SELECT unnest(range(1, 32)) AS day),
+        |types AS (SELECT DISTINCT event_type FROM d),
+        |dense AS (SELECT t.event_type, c.day AS i, coalesce(d.x, 0) AS x
+        |  FROM types t CROSS JOIN cal c
+        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
+        |p AS (SELECT a.event_type, a.i AS i, b.i AS j,
+        |    CAST(floor(1000000 * (CAST(b.x - a.x AS DOUBLE) / CAST(b.i - a.i AS DOUBLE))) AS BIGINT) AS slope_q
+        |  FROM dense a JOIN dense b ON a.event_type = b.event_type AND a.i < b.i),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY slope_q, i, j) AS rn,
+        |    count(*) OVER (PARTITION BY event_type) AS np FROM p)
+        |SELECT event_type, CAST(np AS BIGINT) AS n_pairs, slope_q AS median_slope_q
+        |FROM r WHERE rn = CAST(ceil(np / 2.0) AS BIGINT) ORDER BY event_type""".stripMargin,
+      note = "pairs self-join the 31-row-per-type daily frame (broadcast at this size); the median rank window runs over 465 rows per type, events pay one rollup"),
+    Key("q435_delta_method_ci", (s, dir) => {
       // ratio-metric variance by the delta method — the missing CI next to
       // q359's proportion z-test: per-user ratio metrics (cents per event)
       // violate the iid-row assumption, so var(X̄/Ȳ) is estimated as
@@ -1694,8 +2496,27 @@ private[graft] object RegistryStatsMl {
         .select(col("event_type"), col("arm"), col("n"), col("r"),
           col("vr"), expr("1.96 * sqrt(vr)").as("ci_half"))
         .orderBy("event_type", "arm")
-    }),
-    "q436_mips_transform" -> ((s, dir) => {
+    },
+      """WITH u AS (SELECT event_type, user_id % 2 AS arm, user_id,
+        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS x,
+        |    CAST(count(*) AS BIGINT) AS y
+        |  FROM events GROUP BY 1, 2, 3),
+        |g AS (SELECT event_type, CAST(arm AS BIGINT) AS arm, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |    sum(CAST(x AS HUGEINT) * x) AS sxx, sum(CAST(y AS HUGEINT) * y) AS syy,
+        |    sum(CAST(x AS HUGEINT) * y) AS sxy
+        |  FROM u GROUP BY 1, 2 HAVING count(*) >= 2),
+        |v AS (SELECT *, CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r FROM g),
+        |w AS (SELECT *,
+        |    (((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE))
+        |     - (2.0 * r) * ((CAST(sxy AS DOUBLE) - (CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE))
+        |     + (r * r) * ((CAST(syy AS DOUBLE) - (CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE)))
+        |    / (CAST(n AS DOUBLE) * ((CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))) AS vr
+        |  FROM v)
+        |SELECT event_type, arm, n, r, vr, 1.96 * sqrt(vr) AS ci_half
+        |FROM w ORDER BY event_type, arm""".stripMargin,
+      note = "two hash aggregates (user totals, then moments); squares ride decimal(38) in the partial agg — the corpus shuffles user totals only"),
+    Key("q436_mips_transform", (s, dir) => {
       // maximum-inner-product search via the norm-augmentation reduction
       // (Bachrach et al. '14): append sqrt(M² − |x|²) to every corpus
       // vector and 0 to the query — argmax cosine on the augmented space
@@ -1710,7 +2531,7 @@ private[graft] object RegistryStatsMl {
           "transform(embedding, v -> CAST(v AS DOUBLE) * ((1 + (vec_id % 5)) / 5.0))")
           .as("embedding"))
         .localCheckpoint() // two scoring passes over a frozen frame
-      val qs = emb.filter(col("vec_id") < 8)
+      val qs = evalVectors(emb)
       // exact MIPS: brute-force dot (queries broadcast over one scan)
       val dot = "aggregate(zip_with(%s, %s, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
       val exact = emb.crossJoin(broadcast(
@@ -1735,8 +2556,32 @@ private[graft] object RegistryStatsMl {
         .select(col("qid"), col("exact_id"), col("mips_id"),
           (col("exact_id") === col("mips_id")).as("agree"))
         .orderBy("qid")
-    }),
-    "q437_simpson_flags" -> ((s, dir) => {
+    },
+      """WITH e AS (SELECT vec_id,
+        |    list_transform(embedding, v -> CAST(v AS DOUBLE) * ((1 + (vec_id % 5)) / 5.0)) AS emb
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < 8),
+        |ex AS (SELECT qid, e.vec_id, (round(list_dot_product(emb, qe), 6) + 0.0) AS ip
+        |  FROM e CROSS JOIN q WHERE e.vec_id <> qid),
+        |exr AS (SELECT qid, vec_id,
+        |    row_number() OVER (PARTITION BY qid ORDER BY ip DESC, vec_id) AS rn FROM ex),
+        |exact AS (SELECT qid, vec_id AS exact_id FROM exr WHERE rn = 1),
+        |m2 AS (SELECT max(list_dot_product(emb, emb)) AS m2 FROM e),
+        |aug AS (SELECT vec_id, emb || [sqrt(m2.m2 - list_dot_product(emb, emb))] AS emb
+        |  FROM e, m2),
+        |augq AS (SELECT vec_id AS qid, emb || [CAST(0.0 AS DOUBLE)] AS qe
+        |  FROM e WHERE vec_id < 8),
+        |cosd AS (SELECT qid, a.vec_id,
+        |    list_dot_product(a.emb, qe) /
+        |      (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(qe, qe))) AS cosine
+        |  FROM aug a CROSS JOIN augq WHERE a.vec_id <> qid),
+        |cosr AS (SELECT qid, vec_id,
+        |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rn FROM cosd),
+        |mips AS (SELECT qid, vec_id AS mips_id FROM cosr WHERE rn = 1)
+        |SELECT exact.qid, exact_id, mips_id, exact_id = mips_id AS agree
+        |FROM exact JOIN mips ON exact.qid = mips.qid ORDER BY exact.qid""".stripMargin,
+      note = "both scoring paths are broadcast-queries over one corpus scan (native DotProduct, norms precomputed); the augmented side reuses the q45 two-phase k-heap — no matrix anywhere"),
+    Key("q437_simpson_flags", (s, dir) => {
       // Simpson's-paradox detector: per market segment, does the
       // within-stratum (acctbal, order count) association point the OTHER
       // way from the pooled one? The decision rides EXACT integer
@@ -1766,8 +2611,26 @@ private[graft] object RegistryStatsMl {
           (signum(col("cov_num").cast("double")) =!=
             signum(col("pooled_num").cast("double"))).as("flipped"))
         .orderBy("c_mktsegment")
-    }),
-    "q438_lof" -> ((s, dir) => {
+    },
+      """WITH cust AS (SELECT c_custkey, c_mktsegment,
+        |    min(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS x,
+        |    CAST(count(o_orderkey) AS BIGINT) AS y
+        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey GROUP BY 1, 2),
+        |per AS (SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |    sum(CAST(x AS HUGEINT) * y) AS sxy
+        |  FROM cust GROUP BY 1),
+        |per2 AS (SELECT *, CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS cov_num FROM per),
+        |pooled AS (SELECT CAST(count(*) AS BIGINT) AS pn, CAST(sum(x) AS BIGINT) AS psx,
+        |    CAST(sum(y) AS BIGINT) AS psy, sum(CAST(x AS HUGEINT) * y) AS psxy FROM cust),
+        |pooled2 AS (SELECT CAST(pn AS HUGEINT) * psxy - CAST(psx AS HUGEINT) * psy AS pooled_num FROM pooled)
+        |SELECT c_mktsegment, n,
+        |  CAST(sign(CAST(cov_num AS DOUBLE)) AS BIGINT) AS stratum_sign,
+        |  CAST(sign(CAST(pooled_num AS DOUBLE)) AS BIGINT) AS pooled_sign,
+        |  sign(CAST(cov_num AS DOUBLE)) <> sign(CAST(pooled_num AS DOUBLE)) AS flipped
+        |FROM per2, pooled2 ORDER BY c_mktsegment""".stripMargin,
+      note = "customer-orders LEFT join then one customer-grain aggregate; stratum and pooled moments from the SAME frame, pooled is a 1-row broadcast"),
+    Key("q438_lof", (s, dir) => {
       // Local Outlier Factor (Breunig '00) over embeddings — DENSITY-
       // relative anomaly detection: a point is outlying iff its local
       // density is low relative to its neighbors', which z-score fences
@@ -1810,8 +2673,43 @@ private[graft] object RegistryStatsMl {
           max(col("plrd"))).as("lof"))
         .select(col("q").as("vec_id"), col("lof"))
         .orderBy("vec_id")
-    }),
-    "q439_cohens_d" -> ((s, dir) => {
+    },
+      // the same three staged kNN closures; reach/lrd folds via
+      // list(... ORDER BY d, o) + list_reduce (left fold = the engine's
+      // aggregate() with a 0.0 seed — 0.0 + x is exact)
+      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        |probes AS (SELECT vec_id, v FROM e WHERE vec_id < 32),
+        |dA AS (SELECT p.vec_id AS q, c.vec_id AS o, (round(
+        |    list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.v) + list_dot_product(c.v, c.v), 6) + 0.0) AS d
+        |  FROM probes p CROSS JOIN e c WHERE c.vec_id <> p.vec_id),
+        |rA AS (SELECT *, row_number() OVER (PARTITION BY q ORDER BY d, o) AS rn FROM dA),
+        |nA AS (SELECT q, o, d FROM rA WHERE rn <= 5),
+        |q2 AS (SELECT DISTINCT vec_id FROM (SELECT q AS vec_id FROM nA UNION ALL SELECT o FROM nA)),
+        |e2 AS (SELECT e.vec_id, v FROM e JOIN q2 USING (vec_id)),
+        |dB AS (SELECT p.vec_id AS q, c.vec_id AS o, (round(
+        |    list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.v) + list_dot_product(c.v, c.v), 6) + 0.0) AS d
+        |  FROM e2 p CROSS JOIN e c WHERE c.vec_id <> p.vec_id),
+        |rB AS (SELECT *, row_number() OVER (PARTITION BY q ORDER BY d, o) AS rn FROM dB),
+        |nB AS (SELECT q, o, d FROM rB WHERE rn <= 5),
+        |q3 AS (SELECT DISTINCT o AS vec_id FROM nB),
+        |e3 AS (SELECT e.vec_id, v FROM e JOIN q3 USING (vec_id)),
+        |dC AS (SELECT p.vec_id AS q, c.vec_id AS o, (round(
+        |    list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.v) + list_dot_product(c.v, c.v), 6) + 0.0) AS d
+        |  FROM e3 p CROSS JOIN e c WHERE c.vec_id <> p.vec_id),
+        |rC AS (SELECT q, d, row_number() OVER (PARTITION BY q ORDER BY d, o) AS rn FROM dC),
+        |kd AS (SELECT q AS vec_id, d AS kdist FROM rC WHERE rn = 5),
+        |reach AS (SELECT nB.q, nB.o, nB.d, greatest(kd.kdist, nB.d) AS rd
+        |  FROM nB JOIN kd ON kd.vec_id = nB.o),
+        |lrd AS (SELECT q AS vec_id,
+        |    5.0 / list_reduce(list(rd ORDER BY d, o), (a, b) -> a + b) AS lrd
+        |  FROM reach GROUP BY q),
+        |lof AS (SELECT nA.q, (list_reduce(list(lo.lrd ORDER BY nA.d, nA.o), (a, b) -> a + b) / 5.0)
+        |      / max(lp.lrd) AS lof
+        |  FROM nA JOIN lrd lo ON lo.vec_id = nA.o JOIN lrd lp ON lp.vec_id = nA.q
+        |  GROUP BY nA.q)
+        |SELECT q AS vec_id, lof FROM lof ORDER BY vec_id""".stripMargin,
+      note = "three staged knnL2 batches, each broadcast-queries over one corpus scan with per-partition k-heaps (no Window on the scored set); lrd/LOF are bounded folds over 5-row neighbor lists"),
+    Key("q439_cohens_d", (s, dir) => {
       // Cohen's d + Hedges' g per event type — the standardized EFFECT SIZE
       // the q244/q413 test family reports next to its p-value ("significant"
       // is not "large" at 6M rows, where trivial deltas reach p<.05). One
@@ -1842,8 +2740,27 @@ private[graft] object RegistryStatsMl {
         .select(col("event_type"), col("n1"), col("n0"), col("d"),
           expr("d * (1.0 - 3.0 / CAST(4 * (n1 + n0) - 9 AS DOUBLE))").as("hedges_g"))
         .orderBy("event_type")
-    }),
-    "q440_levene_bf" -> ((s, dir) => {
+    },
+      """WITH m AS (SELECT event_type,
+        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
+        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS BIGINT) AS sx1,
+        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS BIGINT) AS sx0,
+        |    sum(CASE WHEN user_id % 2 = 1 THEN CAST(CAST(round(value * 100, 0) AS BIGINT) AS HUGEINT) * CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS sxx1,
+        |    sum(CASE WHEN user_id % 2 = 0 THEN CAST(CAST(round(value * 100, 0) AS BIGINT) AS HUGEINT) * CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS sxx0
+        |  FROM events GROUP BY 1
+        |  HAVING sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) >= 2
+        |    AND sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) >= 2),
+        |d AS (SELECT *,
+        |    ((CAST(sx1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - (CAST(sx0 AS DOUBLE) / CAST(n0 AS DOUBLE)))
+        |    / sqrt(((CAST(sxx1 AS DOUBLE) - (CAST(sx1 AS DOUBLE) * CAST(sx1 AS DOUBLE)) / CAST(n1 AS DOUBLE))
+        |    + (CAST(sxx0 AS DOUBLE) - (CAST(sx0 AS DOUBLE) * CAST(sx0 AS DOUBLE)) / CAST(n0 AS DOUBLE)))
+        |    / CAST(n1 + n0 - 2 AS DOUBLE)) AS d
+        |  FROM m)
+        |SELECT event_type, n1, n0, d,
+        |  d * (1.0 - 3.0 / CAST(4 * (n1 + n0) - 9 AS DOUBLE)) AS hedges_g
+        |FROM d ORDER BY event_type""".stripMargin),
+    Key("q440_levene_bf", (s, dir) => {
       // Brown-Forsythe (median-centered Levene) variance-homogeneity test
       // per event type — the GATE before q244/q439 trust their pooled-SD
       // assumptions: are the two arms' spreads even comparable? Group
@@ -1894,8 +2811,43 @@ private[graft] object RegistryStatsMl {
           expr("CASE WHEN ssw = 0.0 THEN CAST(NULL AS DOUBLE)" +
             " ELSE (ssb * CAST(n1 + n0 - 2 AS DOUBLE)) / ssw END").as("f_bf"))
         .orderBy("event_type")
-    }),
-    "q441_ordinal_patterns" -> ((s, dir) => {
+    },
+      """WITH ev AS (SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS x,
+        |    user_id % 2 AS arm FROM events),
+        |hist AS (SELECT event_type, arm, x, CAST(count(*) AS BIGINT) AS c
+        |  FROM ev GROUP BY 1, 2, 3),
+        |np AS (SELECT event_type, arm, CAST(count(*) AS BIGINT) AS n FROM ev GROUP BY 1, 2),
+        |cum AS (SELECT *, sum(c) OVER (PARTITION BY event_type, arm ORDER BY x) AS hi FROM hist),
+        |cum2 AS (SELECT *, hi - c + 1 AS lo FROM cum),
+        |med AS (SELECT cum2.event_type, cum2.arm,
+        |    CAST(sum(CASE WHEN lo <= (n + 1) // 2 AND (n + 1) // 2 <= hi THEN x ELSE 0 END)
+        |      + sum(CASE WHEN lo <= (n + 2) // 2 AND (n + 2) // 2 <= hi THEN x ELSE 0 END) AS BIGINT) AS med2
+        |  FROM cum2 JOIN np ON np.event_type = cum2.event_type AND np.arm = cum2.arm
+        |  GROUP BY 1, 2),
+        |z AS (SELECT ev.event_type, ev.arm, abs(2 * x - med2) AS z
+        |  FROM ev JOIN med ON med.event_type = ev.event_type AND med.arm = ev.arm),
+        |g AS (SELECT event_type,
+        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
+        |    CAST(sum(CASE WHEN arm = 1 THEN z ELSE 0 END) AS BIGINT) AS sz1,
+        |    CAST(sum(CASE WHEN arm = 0 THEN z ELSE 0 END) AS BIGINT) AS sz0,
+        |    sum(CASE WHEN arm = 1 THEN CAST(z AS HUGEINT) * z ELSE 0 END) AS szz1,
+        |    sum(CASE WHEN arm = 0 THEN CAST(z AS HUGEINT) * z ELSE 0 END) AS szz0
+        |  FROM z GROUP BY 1
+        |  HAVING sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) >= 2
+        |    AND sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) >= 2),
+        |f AS (SELECT *,
+        |    (CAST(szz1 AS DOUBLE) - (CAST(sz1 AS DOUBLE) * CAST(sz1 AS DOUBLE)) / CAST(n1 AS DOUBLE))
+        |    + (CAST(szz0 AS DOUBLE) - (CAST(sz0 AS DOUBLE) * CAST(sz0 AS DOUBLE)) / CAST(n0 AS DOUBLE)) AS ssw,
+        |    CAST(n1 AS DOUBLE) * (((CAST(sz1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE))) * ((CAST(sz1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE))))
+        |    + CAST(n0 AS DOUBLE) * (((CAST(sz0 AS DOUBLE) / CAST(n0 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE))) * ((CAST(sz0 AS DOUBLE) / CAST(n0 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE)))) AS ssb
+        |  FROM g)
+        |SELECT event_type, n1, n0,
+        |  CASE WHEN ssw = 0.0 THEN CAST(NULL AS DOUBLE)
+        |    ELSE (ssb * CAST(n1 + n0 - 2 AS DOUBLE)) / ssw END AS f_bf
+        |FROM f ORDER BY event_type""".stripMargin,
+      note = "group medians from the (type, arm, cents) histogram window (value-domain sized); the deviation pass joins the broadcast 10-row median frame — rows never sort"),
+    Key("q441_ordinal_patterns", (s, dir) => {
       // Bandt-Pompe ordinal patterns (order 3) per event-type daily series
       // — the permutation-entropy complexity histogram: each of the 29
       // sliding windows maps to the permutation that sorts its 3 values
@@ -1922,8 +2874,26 @@ private[graft] object RegistryStatsMl {
         .groupBy(col("event_type"), col("code"))
         .agg(count(lit(1)).as("cnt"))
         .orderBy("event_type", "code")
-    }),
-    "q457_quantile_merge" -> ((s, dir) => {
+    },
+      """WITH d AS (SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
+        |    count(*) AS x FROM events GROUP BY 1, 2),
+        |cal AS (SELECT unnest(range(1, 32)) AS day),
+        |types AS (SELECT DISTINCT event_type FROM d),
+        |dense AS (SELECT t.event_type, c.day, coalesce(d.x, 0) AS x
+        |  FROM types t CROSS JOIN cal c
+        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
+        |w AS (SELECT event_type, day, x AS x0,
+        |    lead(x, 1) OVER (PARTITION BY event_type ORDER BY day) AS x1,
+        |    lead(x, 2) OVER (PARTITION BY event_type ORDER BY day) AS x2
+        |  FROM dense),
+        |codes AS (SELECT event_type,
+        |    CAST(4 * CAST((x0 < x1 OR (x0 = x1 AND 0 < 1)) AS INT)
+        |      + 2 * CAST((x0 < x2 OR (x0 = x2 AND 0 < 2)) AS INT)
+        |      + CAST((x1 < x2 OR (x1 = x2 AND 1 < 2)) AS INT) AS BIGINT) AS code
+        |  FROM w WHERE day <= 29)
+        |SELECT event_type, code, CAST(count(*) AS BIGINT) AS cnt
+        |FROM codes GROUP BY 1, 2 ORDER BY event_type, code""".stripMargin),
+    Key("q457_quantile_merge", (s, dir) => {
       // MERGEABLE quantile summaries — the distributed-percentile pattern
       // a 100 TB deployment actually runs: each shard (event_id % 8,
       // standing in for 8 independent ingest partitions) reduces to a
@@ -1977,8 +2947,43 @@ private[graft] object RegistryStatsMl {
         .select(col("p"), col("est_cents"), col("exact_cents"),
           abs(col("est_cents") - col("exact_cents")).as("abs_err"))
         .orderBy("p")
-    }),
-    "q41_keyed_fanout" -> ((s, dir) =>
+    },
+      // the summary-merge recursion (error bound pinned by StatsSpec's
+      // "q457: summary estimates carry the equi-depth rank-error bound"):
+      // per-shard CDF, 32 exact-rank bounds with integer weights, merged
+      // weighted CDF vs the exact global CDF, ceil-rank targets
+      """WITH ev AS (SELECT event_id % 8 AS shard,
+        |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
+        |hist AS (SELECT shard, cents, count(*) AS c FROM ev GROUP BY 1, 2),
+        |cum AS (SELECT shard, cents, c,
+        |    sum(c) OVER (PARTITION BY shard ORDER BY cents) AS cr,
+        |    sum(c) OVER (PARTITION BY shard) AS ns
+        |  FROM hist),
+        |sz AS (SELECT shard, max(ns) AS ns FROM cum GROUP BY 1),
+        |bk AS (SELECT shard,
+        |    (CAST(t.i AS BIGINT) * ns) // 32 AS r,
+        |    (CAST(t.i AS BIGINT) * ns) // 32 - ((CAST(t.i AS BIGINT) - 1) * ns) // 32 AS w
+        |  FROM sz, LATERAL (SELECT unnest(range(1, 33)) AS i) t),
+        |summ AS (SELECT b.shard, b.r, b.w, min(c.cents) AS cents
+        |  FROM bk b JOIN cum c ON c.shard = b.shard AND c.cr >= b.r
+        |  WHERE b.w > 0 GROUP BY 1, 2, 3),
+        |mg AS (SELECT cents, sum(w) AS w FROM summ GROUP BY 1),
+        |mc AS (SELECT cents, w, sum(w) OVER (ORDER BY cents) AS cw FROM mg),
+        |eh AS (SELECT cents, sum(c) AS c FROM hist GROUP BY 1),
+        |ec AS (SELECT cents, sum(c) OVER (ORDER BY cents) AS cr,
+        |    sum(c) OVER () AS n FROM eh),
+        |ps AS (SELECT CAST(unnest([1, 5, 25, 50, 75, 95, 99]) AS BIGINT) AS p),
+        |tgt AS (SELECT p, (p * (SELECT max(n) FROM ec) + 99) // 100 AS r FROM ps),
+        |est AS (SELECT t.p, min(m.cents) AS est_cents FROM tgt t
+        |  JOIN mc m ON m.cw >= t.r GROUP BY 1),
+        |exq AS (SELECT t.p, min(e.cents) AS exact_cents FROM tgt t
+        |  JOIN ec e ON e.cr >= t.r GROUP BY 1)
+        |SELECT e.p, CAST(e.est_cents AS BIGINT) AS est_cents,
+        |  CAST(x.exact_cents AS BIGINT) AS exact_cents,
+        |  CAST(abs(e.est_cents - x.exact_cents) AS BIGINT) AS abs_err
+        |FROM est e JOIN exq x USING (p) ORDER BY e.p""".stripMargin,
+      note = "per-shard CDF windows partitioned by shard over the value-domain histogram; the 256-row summary union is metadata; the exact side is a TwoPhase prefix sum (no single-partition window over data)"),
+    Key("q41_keyed_fanout", (s, dir) =>
       broadcast(T(s, dir, "nation"))
         .join(T(s, dir, "customer"), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
@@ -1988,66 +2993,146 @@ private[graft] object RegistryStatsMl {
         // semantics differ between Spark and DuckDB at exact .5 boundaries)
         .withColumn("avg_bal", (expr("(__cents * 2 + cnt) div (2 * cnt)") / lit(100.0)))
         .drop("__cents")
-        .orderBy("n_name")),
-    "q42_session_window" -> ((s, dir) =>
-      Streaming.tumblingDailyCounts(s, dir).orderBy("bucket_start")),
+        .orderBy("n_name"),
+      """SELECT n_name, count(*) AS cnt,
+        |CAST((sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) * 2 + count(*)) // (2 * count(*)) AS BIGINT) / 100.0 AS avg_bal
+        |FROM nation JOIN customer ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q42_session_window", (s, dir) =>
+      Streaming.tumblingDailyCounts(s, dir).orderBy("bucket_start"),
+      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS bucket_start, count(*) AS cnt
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "complete-mode tumbling day agg: partial agg BEFORE the state-store exchange, state rows = |days|, not events"),
     // ---------------------------------------------------------- §2.10 extensions
-    "q43_exact_dedup" -> ((s, dir) =>
-      Dedup.exactDedup(T(s, dir, "documents"), "doc_id", "text").orderBy("keeper_id")),
-    "q44_minhash_neardup" -> ((s, dir) =>
+    Key("q43_exact_dedup", (s, dir) =>
+      Dedup.exactDedup(T(s, dir, "documents"), "doc_id", "text").orderBy("keeper_id"),
+      """SELECT min(doc_id) AS keeper_id, count(*) AS dupes FROM documents
+        |GROUP BY text ORDER BY keeper_id""".stripMargin,
+      note = "exchange carries sha2 hash + id, never text"),
+    Key("q44_minhash_neardup", (s, dir) =>
       Dedup.minHashNearDup(T(s, dir, "documents"), "doc_id", "text",
         shingleK = 2, numHashes = 16, bands = 8, threshold = 0.25)
-        .orderBy("id_a", "id_b")),
-    "q45_cosine_topk" -> ((s, dir) => {
+        .orderBy("id_a", "id_b"),
+      q44Sql,
+      note = "band self-join on short CSV keys; signatures, never text, in the exchanges"),
+    Key("q45_cosine_topk", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      Similarity.cosineTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5)
+      Similarity.cosineTopK(emb, evalVectors(emb), "vec_id", "embedding", 5)
         .orderBy("query_id", "rn")
-    }),
-    "q46_approx_distinct" -> ((s, dir) =>
+    },
+      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
+         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
+         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id")},
+         |r AS (SELECT query_id, neighbor_id, cosine,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
+         |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
+         |ORDER BY query_id, rn""".stripMargin,
+      note = "corpus scanned once, query side broadcast; two-phase top-k (MapPartitions k-heap, no Window)"),
+    Key("q46_approx_distinct", (s, dir) =>
       T(s, dir, "events").groupBy(col("event_type"))
-        .agg(count_distinct(col("user_id")).as("users")).orderBy("event_type")),
-    "q47_text_stats" -> ((s, dir) =>
-      TextAnalysis.corpusStats(T(s, dir, "documents"), "lang", "text").orderBy("lang")),
-    "q48_simhash" -> ((s, dir) =>
-      Dedup.simHash(T(s, dir, "documents"), "doc_id", "text").orderBy("doc_id")),
-    "q49_ngram_jaccard" -> ((s, dir) =>
+        .agg(count_distinct(col("user_id")).as("users")).orderBy("event_type"),
+      "SELECT event_type, count(DISTINCT user_id) AS users FROM events GROUP BY 1 ORDER BY 1"),
+    Key("q47_text_stats", (s, dir) =>
+      TextAnalysis.corpusStats(T(s, dir, "documents"), "lang", "text").orderBy("lang"),
+      """SELECT lang, count(*) AS docs,
+        |CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS tokens,
+        |(round(avg(length(text)), 2) + 0.0) AS avg_chars, CAST(max(length(text)) AS BIGINT) AS max_chars
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q48_simhash", (s, dir) =>
+      Dedup.simHash(T(s, dir, "documents"), "doc_id", "text").orderBy("doc_id"),
+      q48Sql,
+      note = "64 per-bit sums in ONE hash aggregate; exchange carries (doc_id, bit sums), never text"),
+    Key("q49_ngram_jaccard", (s, dir) =>
       Dedup.ngramJaccard(T(s, dir, "documents").filter(col("doc_id") < 100),
         "doc_id", "text", k = 2, threshold = 0.1)
-        .orderBy("id_a", "id_b")),
-    "q50_langid" -> ((s, dir) =>
+        .orderBy("id_a", "id_b"),
+      """WITH ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w FROM documents WHERE doc_id < 100),
+        |sha AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
+        |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
+        |rare AS (SELECT shingle FROM sha GROUP BY shingle HAVING count(*) <= 100),
+        |sh AS (SELECT sha.doc_id, sha.shingle FROM sha JOIN rare USING (shingle)),
+        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+        |shared AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS shared
+        |  FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
+        |SELECT id_a, id_b, (round(CAST(shared AS DOUBLE) / (na.n + nb.n - shared), 4) + 0.0) AS jaccard
+        |FROM shared JOIN sizes na ON na.doc_id = id_a JOIN sizes nb ON nb.doc_id = id_b
+        |WHERE (round(CAST(shared AS DOUBLE) / (na.n + nb.n - shared), 4) + 0.0) >= 0.1
+        |ORDER BY id_a, id_b""".stripMargin),
+    Key("q50_langid", (s, dir) =>
       T(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-    "q51_quality_score" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      s"SELECT doc_id, $langCase AS lang_pred FROM documents ORDER BY doc_id"),
+    Key("q51_quality_score", (s, dir) =>
       T(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")),
-    "q52_token_count" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      """WITH f AS (SELECT doc_id,
+        |CAST(length(text) AS DOUBLE) AS len,
+        |CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) AS toks,
+        |CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) AS alpha,
+        |CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|is|a)\b')) AS DOUBLE) AS stop
+        |FROM documents)
+        |SELECT doc_id, (round(
+        |(CASE WHEN len >= 100 AND len <= 10000 THEN CAST(1.0 AS DOUBLE) WHEN len >= 20 THEN CAST(0.5 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) * CAST(0.4 AS DOUBLE)
+        |+ (CASE WHEN len > 0 THEN alpha / len ELSE CAST(0.0 AS DOUBLE) END) * CAST(0.3 AS DOUBLE)
+        |+ (CASE WHEN toks > 0 THEN least(stop / toks * CAST(5.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) ELSE CAST(0.0 AS DOUBLE) END) * CAST(0.3 AS DOUBLE),
+        |4) + 0.0) AS quality FROM f ORDER BY doc_id""".stripMargin),
+    Key("q52_token_count", (s, dir) =>
       T(s, dir, "documents").groupBy(col("lang"))
         .agg(sum(TextAnalysis.tokenCount(col("text"))).as("ws_tokens"),
           sum(TextAnalysis.bpeishTokenCount(col("text"))).as("bpe_tokens"))
-        .orderBy("lang")),
-    "q53_fingerprint" -> ((s, dir) =>
+        .orderBy("lang"),
+      """SELECT lang,
+        |CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS ws_tokens,
+        |CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS bpe_tokens
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Key("q53_fingerprint", (s, dir) =>
       T(s, dir, "documents")
         .select(col("doc_id"), graft.functions.RollingHash(col("text")).as("fp"))
-        .orderBy("doc_id")),
-    "q54_embed_neardup" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      // fold over code points replicates the byte fold exactly for ASCII corpora
+      // (the testdata is pure ASCII; unicode behavior is unit-tested Spark-side)
+      """SELECT doc_id, list_reduce(
+        |  list_transform(range(1, length(text) + 1),
+        |    i -> CAST(ord(substr(text, CAST(i AS INT), 1)) AS BIGINT)),
+        |  (a, b) -> (a * 31 + b) % 1000000007) AS fp
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q54_embed_neardup", (s, dir) =>
       // scale path: LSH-banded candidates + exact cosine re-score — no
       // CartesianProduct anywhere in the plan (the brute-force all-pairs
       // variant survives only as the recall yardstick in SimilaritySpec)
       Similarity.lshBucketNearDup(
         T(s, dir, "embeddings").filter(col("vec_id") < 200), "vec_id", "embedding",
         threshold = 0.35, numPlanes = 32, bands = 8, dim = 64)
-        .orderBy("id_a", "id_b")),
-    "q55_ann_lsh" -> ((s, dir) =>
+        .orderBy("id_a", "id_b"),
+      q54Sql,
+      note = "LSH candidates + exact re-score; NO CartesianProduct anywhere"),
+    Key("q55_ann_lsh", (s, dir) =>
       Similarity.lshBucketNearDup(T(s, dir, "embeddings"), "vec_id", "embedding",
         threshold = 0.35, numPlanes = 32, bands = 4, dim = 64)
-        .orderBy("id_a", "id_b")),
-    "q56_multimodal" -> ((s, dir) =>
+        .orderBy("id_a", "id_b"),
+      s"""WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |bb AS (SELECT vec_id, v,
+         |  (${lshBandSql(0)}) AS buck0, (${lshBandSql(1)}) AS buck1,
+         |  (${lshBandSql(2)}) AS buck2, (${lshBandSql(3)}) AS buck3 FROM b),
+         |banded AS (SELECT vec_id, v, t.band,
+         |  CASE t.band WHEN 0 THEN buck0 WHEN 1 THEN buck1 WHEN 2 THEN buck2 ELSE buck3 END AS bucket
+         |  FROM bb, (VALUES (0), (1), (2), (3)) AS t(band)),
+         |cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS xv, y.v AS yv
+         |  FROM banded x JOIN banded y ON x.band = y.band AND x.bucket = y.bucket AND x.vec_id < y.vec_id),
+         |p AS (SELECT id_a, id_b,
+         |  list_dot_product(xv, yv) / (sqrt(list_dot_product(xv, xv)) * sqrt(list_dot_product(yv, yv))) AS cosine
+         |  FROM cand)
+         |SELECT id_a, id_b, (round(cosine, 4) + 0.0) AS cosine FROM p WHERE cosine >= 0.35
+         |ORDER BY id_a, id_b""".stripMargin,
+      note = "one-pass signatures (broadcast plane row), zero shuffles before the bucket join"),
+    Key("q56_multimodal", (s, dir) =>
       Multimodal.asMultimodal(T(s, dir, "documents"), "doc_id", "text")
         .select(col("doc_id"), col("meta.n_bytes").as("n_bytes"))
-        .orderBy("doc_id")),
-    "q57_sessionize" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Key("q57_sessionize", (s, dir) =>
       // gap-based sessionization (session_window): a new session starts only
       // when the inter-event gap EXCEEDS 30 min — session_window merges a
       // window starting exactly at the previous end (boundary-inclusive;
@@ -2057,21 +3142,31 @@ private[graft] object RegistryStatsMl {
         .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
           count(lit(1)).as("events"))
         .drop("session_window")
-        .orderBy("user_id", "session_start")),
-    "q58_ann_ivf" -> ((s, dir) => {
+        .orderBy("user_id", "session_start"),
+      sessionizeSql),
+    Key("q58_ann_ivf", (s, dir) => {
       val emb = T(s, dir, "embeddings")
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8),
+      Similarity.ivfTopK(emb, evalVectors(emb),
         emb.filter(col("vec_id") < 16), "vec_id", "embedding", 5)
         .orderBy("query_id", "rn")
-    }),
-    "q59_stratified_sample" -> ((s, dir) =>
+    },
+      ivfTopKSql("crn = 1", "asg WHERE vec_id < 8")),
+    Key("q59_stratified_sample", (s, dir) =>
       Curation.stratifiedSample(T(s, dir, "documents"), "lang", "doc_id", 20)
         .select(col("doc_id"), col("lang"))
-        .orderBy("lang", "doc_id")),
-    "q60_vader" -> ((s, dir) =>
+        .orderBy("lang", "doc_id"),
+      """SELECT doc_id, lang FROM (
+        |  SELECT doc_id, lang,
+        |    row_number() OVER (PARTITION BY lang
+        |      ORDER BY ((doc_id % 1000003) * 2654435761) % 1000003, doc_id) AS rn
+        |  FROM documents)
+        |WHERE rn <= 20 ORDER BY lang, doc_id""".stripMargin),
+    Key("q60_vader", (s, dir) =>
       Sentiment.scoreVader(T(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "q61_asof_join" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      q60Sql,
+      note = "window lags for negation scope; lexicon BroadcastHashJoin; no UDF"),
+    Key("q61_asof_join", (s, dir) => {
       // point-in-time lookup: each purchase labeled with the user's most
       // recent view at-or-before it (union + one window pass — no range join)
       val ev = T(s, dir, "events")
@@ -2083,8 +3178,26 @@ private[graft] object RegistryStatsMl {
       Relational.asOfJoin(purchases, views, "user_id", "ts", "ts",
         Seq("view_event_id", "view_value"))
         .orderBy("event_id")
-    }),
-    "q142_asof_forward" -> ((s, dir) => {
+    },
+      // one struct carried by ONE last_value(IGNORE NULLS): mirrors the Spark
+      // asOfJoin's atomic payload carry, so a view row with a NULL view_value
+      // can never have its fields stitched from two different view rows
+      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
+        |u AS (
+        |  SELECT user_id, ts AS uts, 0 AS side, event_id AS view_event_id,
+        |         {'vid': event_id, 'vval': value} AS payload,
+        |         CAST(NULL AS BIGINT) AS event_id, CAST(NULL AS TIMESTAMP) AS pts
+        |    FROM ev WHERE event_type = 'view'
+        |  UNION ALL
+        |  SELECT user_id, ts, 1, NULL, NULL, event_id, ts FROM ev WHERE event_type = 'purchase'),
+        |c AS (SELECT *,
+        |  last_value(payload IGNORE NULLS) OVER win AS a
+        |  FROM u WINDOW win AS (PARTITION BY user_id ORDER BY uts, side, view_event_id
+        |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+        |SELECT event_id, user_id, pts AS ts, a.vid AS view_event_id, a.vval AS view_value
+        |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin,
+      note = "as-of = union + ONE window sort on (key, ts); no range join"),
+    Key("q142_asof_forward", (s, dir) => {
       // the mirror lookup of q61: each purchase labeled with the user's
       // NEXT view at-or-after it (post-purchase behavior attribution) —
       // union + one forward-facing window pass, no range join
@@ -2097,16 +3210,46 @@ private[graft] object RegistryStatsMl {
       Relational.asOfJoinForward(purchases, views, "user_id", "ts", "ts",
         Seq("view_event_id", "view_value"))
         .orderBy("event_id")
-    }),
+    },
+      // q61's carry, mirrored: left orders BEFORE right at equal ts (side
+      // 1 vs 2) and first_value faces the following frame
+      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
+        |u AS (
+        |  SELECT user_id, ts AS uts, 2 AS side, event_id AS view_event_id,
+        |         {'vid': event_id, 'vval': value} AS payload,
+        |         CAST(NULL AS BIGINT) AS event_id, CAST(NULL AS TIMESTAMP) AS pts
+        |    FROM ev WHERE event_type = 'view'
+        |  UNION ALL
+        |  SELECT user_id, ts, 1, NULL, NULL, event_id, ts FROM ev WHERE event_type = 'purchase'),
+        |c AS (SELECT *,
+        |  first_value(payload IGNORE NULLS) OVER win AS a
+        |  FROM u WINDOW win AS (PARTITION BY user_id ORDER BY uts, side, view_event_id
+        |                        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+        |SELECT event_id, user_id, pts AS ts, a.vid AS view_event_id, a.vval AS view_value
+        |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin,
+      note = "union + ONE forward-frame window on (key, ts, side) — no range join, single shuffle"),
     // q62_range_join / q127_fuzzy_join / q394_grid_radius_join are
-    // registered via SparkEntry.retiredToTwins (round 17): the binned
+    // retired onto their twins (round 17): the binned
     // interval join, the prefix/suffix-blocked row-level fuzzy join and the
     // fixed-knob grid radius join enumerate pair volumes that grow
     // superlinearly with density; the registered plans are their
     // density-scaled twins (q444/q445/q448) and the original shapes live on
     // as RelationalSpec (q62/q394) and DedupSpec (q127) yardsticks built
-    // inline.
-    "q444_range_count_rank" -> ((s, dir) => {
+    // inline. q62 keeps its OWN interval-join oracle: the rank-difference
+    // engine vs the join-formulated SQL re-proves the TwoPhase equivalence
+    // at every gate SF.
+    Alias("q62_range_join", "q444_range_count_rank",
+      oracle = Some("""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
+        |s AS (SELECT event_id, ts FROM ev WHERE event_type = 'signup'),
+        |c AS (SELECT ts AS cts FROM ev WHERE event_type = 'click')
+        |SELECT s.event_id, count(*) AS clicks_nearby
+        |FROM s JOIN c ON cts BETWEEN s.ts - INTERVAL 30 MINUTE AND s.ts + INTERVAL 30 MINUTE
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+      note = "interval join shuffles on time bins, then exact filter"),
+    Alias("q127_fuzzy_join", "q445_name_group_join",
+      note = "block-key equi-join bounds candidates; levenshtein runs post-join — no cartesian"),
+    Alias("q394_grid_radius_join", "q448_radius_scaled"),
+    Key("q444_range_count_rank", (s, dir) => {
       // q62's EXACT semantics (clicks within ±30min per signup) computed
       // WITHOUT enumerating pairs: the count is a difference of two
       // cumulative click ranks — F(t+30min, inclusive) − F(t−30min,
@@ -2143,8 +3286,17 @@ private[graft] object RegistryStatsMl {
           max(when(col("__side") === 0, col("__f")))).as("clicks_nearby"))
         .filter(col("clicks_nearby") > 0)
         .orderBy("event_id")
-    }),
-    "q448_radius_scaled" -> ((s, dir) => {
+    },
+      // IDENTICAL semantics to q62 — the oracle is q62's interval join;
+      // the engine side proves the rank-difference identity against it
+      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
+        |s AS (SELECT event_id, ts FROM ev WHERE event_type = 'signup'),
+        |c AS (SELECT ts AS cts FROM ev WHERE event_type = 'click')
+        |SELECT s.event_id, count(*) AS clicks_nearby
+        |FROM s JOIN c ON cts BETWEEN s.ts - INTERVAL 30 MINUTE AND s.ts + INTERVAL 30 MINUTE
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "NO join at all: two-phase prefix sum (every Window partitioned by __bin, offsets broadcast) — q62's count without enumerating one candidate pair"),
+    Key("q448_radius_scaled", (s, dir) => {
       // q394's grid radius join with the radius (and with it the cell
       // size) derived from density: r² = max(1, 33_750_000 div n) keeps
       // the EXPECTED neighbor count per point constant (≈34 on the
@@ -2186,14 +3338,34 @@ private[graft] object RegistryStatsMl {
           min(col("dist2")).as("min_dist2"),
           sum(col("dist2")).as("sum_dist2"))
         .orderBy("u_a")
-    }),
-    "q63_orc_roundtrip" -> ((s, dir) => {
+    },
+      // q394's plane and halo with r² and w derived from the same
+      // distinct-point count
+      """WITH u AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
+        |nn AS (SELECT greatest(1, 33750000 // count(*)) AS r2 FROM u),
+        |ww AS (SELECT r2, CAST(floor(sqrt(CAST(r2 AS DOUBLE))) AS BIGINT) + 1 AS w FROM nn),
+        |p AS (SELECT user_id, (user_id * 7919) % 1001 - 500 AS px,
+        |    (user_id * 104729) % 1001 - 500 AS py FROM u),
+        |c AS (SELECT user_id, px, py, (px + 500) // (SELECT w FROM ww) AS cx,
+        |    (py + 500) // (SELECT w FROM ww) AS cy FROM p),
+        |o AS (SELECT CAST(unnest([-1, 0, 1]) AS BIGINT) AS d),
+        |pr AS (SELECT c.user_id AS u_a, px AS xa, py AS ya,
+        |    cx + ox.d AS cx, cy + oy.d AS cy FROM c, o ox, o oy),
+        |j AS (SELECT pr.u_a,
+        |    (pr.xa - b.px) * (pr.xa - b.px) + (pr.ya - b.py) * (pr.ya - b.py) AS dist2
+        |  FROM pr JOIN c b ON pr.cx = b.cx AND pr.cy = b.cy AND pr.u_a <> b.user_id)
+        |SELECT u_a, count(*) AS n_neighbors, CAST(min(dist2) AS BIGINT) AS min_dist2,
+        |  CAST(sum(dist2) AS BIGINT) AS sum_dist2
+        |FROM j WHERE dist2 <= (SELECT r2 FROM ww) GROUP BY 1 ORDER BY 1""".stripMargin,
+      note = "q394's halo join with cell/radius from density: equi-join on (cx, cy), per-cell occupancy ~34 constant by the r² = C/n knob — candidates 300·n, never n²"),
+    Key("q63_orc_roundtrip", (s, dir) => {
       val nation = T(s, dir, "nation")
       val tmp = scratch("q63_orc", dir)
       nation.coalesce(1).write.mode("overwrite").orc(tmp)
       s.read.schema(nation.schema).orc(tmp).orderBy("n_nationkey")
-    }),
-    "q454_orc_roundtrip" -> ((s, dir) => {
+    },
+      "SELECT * FROM nation ORDER BY n_nationkey"),
+    Key("q454_orc_roundtrip", (s, dir) => {
       // ORC source/sink (Spark-native, the other columnar interchange
       // format next to parquet/q115's XML): hive-partitioned write on the
       // priority key, read back with a partition predicate — the scan
@@ -2209,22 +3381,56 @@ private[graft] object RegistryStatsMl {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderdate"), col("o_orderpriority"))
         .orderBy("o_orderkey")
-    }),
-    "q116_pq_encode" -> ((s, dir) => {
+    },
+      // the layout changes the container, never the values — the oracle is
+      // the filtered source table
+      """SELECT o_orderkey, o_custkey, o_totalprice,
+        |  CAST(o_orderdate AS TIMESTAMP) AS o_orderdate, o_orderpriority
+        |FROM orders WHERE o_orderpriority = '1-URGENT'
+        |ORDER BY o_orderkey""".stripMargin),
+    Key("q116_pq_encode", (s, dir) => {
       // product quantization: m=4 subvectors × 16 dims, codes = nearest
       // codebook centroid per subvector (min L2, id tie-break); codebook =
       // first 8 vectors by id, q58's deterministic-gate convention
       val emb = T(s, dir, "embeddings")
-      Similarity.pqEncode(emb, emb.filter(col("vec_id") < 8),
+      Similarity.pqEncode(emb, evalVectors(emb),
         "vec_id", "embedding", m = 4, subDim = 16)
         .orderBy("vec_id")
-    }),
-    "q117_rare_tokens" -> ((s, dir) =>
+    },
+      // same L2 expansion x·x − 2·x·c + c·c over list_dot_product, same
+      // centroid-id tie-break — code assignment must agree per subvector
+      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+         |$pqSubsCte,
+         |${pqAssignCtes(0, 8)}
+         |SELECT vec_id,
+         |  max(CASE WHEN sub = 0 THEN code END) AS c0,
+         |  max(CASE WHEN sub = 1 THEN code END) AS c1,
+         |  max(CASE WHEN sub = 2 THEN code END) AS c2,
+         |  max(CASE WHEN sub = 3 THEN code END) AS c3
+         |FROM sc WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin,
+      note = "codebook broadcast; corpus explodes m-way and reduces straight back — nothing wider than a subvector shuffles"),
+    Key("q117_rare_tokens", (s, dir) =>
       // unigram-LM-flavored quality signal: rare-token counts + basis-point
       // ratio, all exact integers (no float accumulation anywhere)
       TextAnalysis.rareTokenStats(T(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "q118_schema_evolution" -> ((s, dir) => {
+        .orderBy("doc_id"),
+      // same folded threshold: cf·10⁶ < n·ppm ⇔ cf ≤ (n·ppm − 1) // 10⁶
+      """WITH tok AS (SELECT doc_id, t.term FROM documents,
+        |  LATERAL (SELECT unnest(regexp_split_to_array(lower(text), '\s+')) AS term) t
+        |  WHERE length(t.term) > 0),
+        |f AS (SELECT term, count(*) AS cf FROM tok GROUP BY 1),
+        |n AS (SELECT CAST(coalesce(sum(cf), 0) AS BIGINT) AS n FROM f),
+        |s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+        |    CAST(sum(CASE WHEN cf <= (n.n * 1000 - 1) // 1000000 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS rare_tokens
+        |  FROM tok JOIN f USING (term) CROSS JOIN n GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(n_tokens, 0) AS n_tokens,
+        |  coalesce(rare_tokens, 0) AS rare_tokens,
+        |  CAST(CASE WHEN coalesce(n_tokens, 0) > 0
+        |    THEN (10000 * rare_tokens) // n_tokens ELSE 0 END AS BIGINT) AS rare_bp
+        |FROM documents d LEFT JOIN s USING (doc_id) ORDER BY d.doc_id""".stripMargin,
+      note = "one token pass; vocabulary-sized frequency table broadcast back — the corpus never shuffles on term"),
+    Key("q118_schema_evolution", (s, dir) => {
       // schema drift across ingest batches: an early batch lacks a column
       // later batches carry; mergeSchema reads the union, old rows NULL
       val nation = T(s, dir, "nation")
@@ -2236,8 +3442,13 @@ private[graft] object RegistryStatsMl {
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),
           col("batch").cast("int").as("batch"))
         .orderBy("batch", "n_nationkey")
-    }),
-    "q119_bloom_prune" -> ((s, dir) => {
+    },
+      """SELECT n_nationkey, n_name, CAST(NULL AS BIGINT) AS n_regionkey,
+        |  CAST(1 AS INTEGER) AS batch FROM nation
+        |UNION ALL
+        |SELECT n_nationkey, n_name, n_regionkey, CAST(2 AS INTEGER) FROM nation
+        |ORDER BY batch, n_nationkey""".stripMargin),
+    Key("q119_bloom_prune", (s, dir) => {
       // bloom-filter join pruning: the dim key set rides as a sketch that
       // filters the fact MAP-SIDE before its exchange; the semi join then
       // removes false positives, so the result is exactly the semi join
@@ -2245,16 +3456,34 @@ private[graft] object RegistryStatsMl {
       Relational.bloomPrunedSemiJoin(T(s, dir, "orders"), cust,
         "o_custkey", "c_custkey", expectedItems = 100000L)
         .orderBy("o_orderkey")
-    }),
-    "q120_copurchase_rank" -> ((s, dir) =>
+    },
+      """SELECT * FROM orders WHERE o_custkey IN
+        |  (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
+        |ORDER BY o_orderkey""".stripMargin,
+      note = "bloom_might_contain Filter directly over the fact scan, BEFORE the exchange; semi join rechecks exactly"),
+    Key("q120_copurchase_rank", (s, dir) =>
       // item-importance over the co-purchase graph: damped PageRank in
       // scaled-long arithmetic (deterministic across partitionings)
       Graph.pageRank(
         copurchaseEdges(s, dir),
         iterations = 3) // auto strategy: |parts| nodes measure inside broadcast range
         .select(col("node").as("p_partkey"), col("rank").as("rank_scaled"))
-        .orderBy("p_partkey")),
-    "q121_line_dedup" -> ((s, dir) => {
+        .orderBy("p_partkey"),
+      // 3 unrolled damped-PageRank steps in the same scaled-long arithmetic
+      """WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+        |d AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
+        |r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS r FROM d),
+        |r1 AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(r0.r // d.deg)) // 100 AS BIGINT) AS r
+        |  FROM e JOIN d USING (src) JOIN r0 ON r0.node = e.src GROUP BY e.dst),
+        |r2 AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(r1.r // d.deg)) // 100 AS BIGINT) AS r
+        |  FROM e JOIN d USING (src) JOIN r1 ON r1.node = e.src GROUP BY e.dst),
+        |r3 AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(r2.r // d.deg)) // 100 AS BIGINT) AS r
+        |  FROM e JOIN d USING (src) JOIN r2 ON r2.node = e.src GROUP BY e.dst)
+        |SELECT node AS p_partkey, r AS rank_scaled FROM r3 ORDER BY 1""".stripMargin,
+      note = "edge self-join keyed on the order; each iteration one join + one hash agg on short keys (iteration shape asserted separately in PlanSpec — the lazy checkpoint hides it here)"),
+    Key("q121_line_dedup", (s, dir) => {
       // corpus-frequency boilerplate removal (CCNet-style line dedup). The
       // testdata carries no newlines, so the gate segments each doc into
       // fixed 3-token pseudo-lines — the operator takes any lines array
@@ -2265,8 +3494,25 @@ private[graft] object RegistryStatsMl {
         " i -> concat_ws(' ', slice(__tk, i * 3 + 1, 3)))")
       Dedup.commonLineRemoval(docs, "doc_id", lines, maxFreq = 2, sep = " ")
         .orderBy("doc_id")
-    }),
-    "q122_binary_ingest" -> ((s, dir) => {
+    },
+      // same 3-token segmentation, frequency on the line text itself (the
+      // engine counts on xxhash64(line) — identical modulo 64-bit collisions)
+      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+        |chunks AS (
+        |  SELECT doc_id,
+        |    unnest(list_transform(range(0, CAST(ceil(len(tk) / 3.0) AS BIGINT)),
+        |      i -> array_to_string(tk[i * 3 + 1 : i * 3 + 3], ' '))) AS line,
+        |    unnest(range(0, CAST(ceil(len(tk) / 3.0) AS BIGINT))) AS pos
+        |  FROM toks),
+        |freq AS (SELECT line, count(*) AS cf FROM chunks GROUP BY line)
+        |SELECT c.doc_id,
+        |  coalesce(string_agg(c.line, ' ' ORDER BY c.pos) FILTER (f.cf <= 2), '') AS clean_text,
+        |  CAST(count(*) FILTER (f.cf <= 2) AS BIGINT) AS kept_lines,
+        |  CAST(count(*) FILTER (f.cf > 2) AS BIGINT) AS dropped_lines
+        |FROM chunks c JOIN freq f USING (line)
+        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+      note = "pseudo-line explode map-side; the frequency table is vocabulary-sized and re-joins broadcast — rebuild never shuffles text"),
+    Key("q122_binary_ingest", (s, dir) => {
       // blob-directory ingest via the binaryFile source — the multimodal
       // landing pattern (a crawl dumps one file per asset; Spark lists,
       // batches small files by maxPartitionBytes, and reads (path, length,
@@ -2307,8 +3553,12 @@ private[graft] object RegistryStatsMl {
           col("length").as("n_bytes"),
           sha2(col("content"), 256).as("sha"))
         .orderBy("doc_id")
-    }),
-    "q123_cdc_diff" -> ((s, dir) => {
+    },
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |  sha256(text) AS sha
+        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
+      note = "binaryFile source scan + sha2 projection; fingerprint agg is the only exchange"),
+    Key("q123_cdc_diff", (s, dir) => {
       // snapshot-diff CDC: the upstream republishes full snapshots; the diff
       // emits the delta stream (insert/update/delete + old/new values).
       // Synthetic drift off one deterministic base: keys ≡3 (mod 10) are
@@ -2325,8 +3575,24 @@ private[graft] object RegistryStatsMl {
           when(col("c_custkey") % 13 === 0, lit("CHURNED")).otherwise(col("c_mktsegment")))
       Warehouse.cdcDiff(oldSnap, newSnap, "c_custkey", Seq("c_acctbal", "c_mktsegment"))
         .orderBy("c_custkey")
-    }),
-    "q124_zorder_layout" -> ((s, dir) => {
+    },
+      """WITH base AS (SELECT c_custkey, c_acctbal, c_mktsegment FROM customer),
+        |o AS (SELECT * FROM base WHERE c_custkey % 10 <> 3),
+        |n AS (SELECT c_custkey,
+        |    CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 10 ELSE c_acctbal END AS c_acctbal,
+        |    CASE WHEN c_custkey % 13 = 0 THEN 'CHURNED' ELSE c_mktsegment END AS c_mktsegment
+        |  FROM base WHERE c_custkey % 10 <> 0)
+        |SELECT coalesce(o.c_custkey, n.c_custkey) AS c_custkey,
+        |  CASE WHEN o.c_custkey IS NULL THEN 'insert'
+        |       WHEN n.c_custkey IS NULL THEN 'delete' ELSE 'update' END AS change_type,
+        |  o.c_acctbal AS old_c_acctbal, n.c_acctbal AS new_c_acctbal,
+        |  o.c_mktsegment AS old_c_mktsegment, n.c_mktsegment AS new_c_mktsegment
+        |FROM o FULL OUTER JOIN n ON o.c_custkey = n.c_custkey
+        |WHERE o.c_custkey IS NULL OR n.c_custkey IS NULL
+        |   OR o.c_acctbal IS DISTINCT FROM n.c_acctbal
+        |   OR o.c_mktsegment IS DISTINCT FROM n.c_mktsegment
+        |ORDER BY c_custkey""".stripMargin),
+    Key("q124_zorder_layout", (s, dir) => {
       // Z-order clustered layout: interleave (user bucket, day-of-month)
       // into one Morton key, range-partition + sort the write on it so every
       // file's min/max footer spans a small rectangle of BOTH dimensions —
@@ -2343,8 +3609,15 @@ private[graft] object RegistryStatsMl {
         .sortWithinPartitions(col("zval"))
         .write.mode("overwrite").parquet(tmp)
       s.read.parquet(tmp).orderBy("event_id")
-    }),
-    "q125_triangle_count" -> ((s, dir) =>
+    },
+      // bit-by-bit Morton interleave, generated as plain bit arithmetic —
+      // the engine's magic-number spread (ZOrder.scala) must agree on every
+      // one of the 32 bit placements
+      s"""WITH b AS (SELECT event_id, CAST(user_id % 1024 AS BIGINT) AS xb,
+         |    CAST(day(ts) AS BIGINT) AS yb FROM events)
+         |SELECT event_id, xb, yb, CAST(${zorderSql("xb", "yb")} AS BIGINT) AS zval
+         |FROM b ORDER BY event_id""".stripMargin),
+    Key("q125_triangle_count", (s, dir) =>
       // local clustering over the co-purchase graph: per-part triangle
       // participation via degree-oriented wedge closing (Graph.scala — the
       // O(m^1.5) formulation; no hub ever owns Σdeg² work)
@@ -2353,187 +3626,7 @@ private[graft] object RegistryStatsMl {
         degrees = Some(copurchaseDegrees(s, dir)))
         .select(col("node").as("p_partkey"), col("triangles"))
         .orderBy(col("triangles").desc, col("p_partkey"))
-        .limit(20)),
-    "q126_grouping_sets" -> ((s, dir) =>
-      // one-pass multi-granularity OLAP: CUBE over (status, priority) with
-      // grouping_id disambiguating subtotal levels from genuine NULL keys;
-      // revenue in scaled-long cents (float sums are accumulation-order-
-      // dependent and could never hash-match)
-      T(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("cnt"),
-          sum(ops.Num.roundz(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
-        .orderBy(col("gid"), col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)))
-
-  val oracleSql: Seq[(String, String)] = Seq(
-    "q60_vader" -> q60Sql,
-    "q61_asof_join" ->
-      // one struct carried by ONE last_value(IGNORE NULLS): mirrors the Spark
-      // asOfJoin's atomic payload carry, so a view row with a NULL view_value
-      // can never have its fields stitched from two different view rows
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
-        |u AS (
-        |  SELECT user_id, ts AS uts, 0 AS side, event_id AS view_event_id,
-        |         {'vid': event_id, 'vval': value} AS payload,
-        |         CAST(NULL AS BIGINT) AS event_id, CAST(NULL AS TIMESTAMP) AS pts
-        |    FROM ev WHERE event_type = 'view'
-        |  UNION ALL
-        |  SELECT user_id, ts, 1, NULL, NULL, event_id, ts FROM ev WHERE event_type = 'purchase'),
-        |c AS (SELECT *,
-        |  last_value(payload IGNORE NULLS) OVER win AS a
-        |  FROM u WINDOW win AS (PARTITION BY user_id ORDER BY uts, side, view_event_id
-        |                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id, user_id, pts AS ts, a.vid AS view_event_id, a.vval AS view_value
-        |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin,
-    "q142_asof_forward" ->
-      // q61's carry, mirrored: left orders BEFORE right at equal ts (side
-      // 1 vs 2) and first_value faces the following frame
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
-        |u AS (
-        |  SELECT user_id, ts AS uts, 2 AS side, event_id AS view_event_id,
-        |         {'vid': event_id, 'vval': value} AS payload,
-        |         CAST(NULL AS BIGINT) AS event_id, CAST(NULL AS TIMESTAMP) AS pts
-        |    FROM ev WHERE event_type = 'view'
-        |  UNION ALL
-        |  SELECT user_id, ts, 1, NULL, NULL, event_id, ts FROM ev WHERE event_type = 'purchase'),
-        |c AS (SELECT *,
-        |  first_value(payload IGNORE NULLS) OVER win AS a
-        |  FROM u WINDOW win AS (PARTITION BY user_id ORDER BY uts, side, view_event_id
-        |                        ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_id, user_id, pts AS ts, a.vid AS view_event_id, a.vval AS view_value
-        |FROM c WHERE side = 1 ORDER BY event_id""".stripMargin,
-    "q62_range_join" ->
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        |s AS (SELECT event_id, ts FROM ev WHERE event_type = 'signup'),
-        |c AS (SELECT ts AS cts FROM ev WHERE event_type = 'click')
-        |SELECT s.event_id, count(*) AS clicks_nearby
-        |FROM s JOIN c ON cts BETWEEN s.ts - INTERVAL 30 MINUTE AND s.ts + INTERVAL 30 MINUTE
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q444_range_count_rank" ->
-      // IDENTICAL semantics to q62 — the oracle is q62's interval join;
-      // the engine side proves the rank-difference identity against it
-      """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        |s AS (SELECT event_id, ts FROM ev WHERE event_type = 'signup'),
-        |c AS (SELECT ts AS cts FROM ev WHERE event_type = 'click')
-        |SELECT s.event_id, count(*) AS clicks_nearby
-        |FROM s JOIN c ON cts BETWEEN s.ts - INTERVAL 30 MINUTE AND s.ts + INTERVAL 30 MINUTE
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q448_radius_scaled" ->
-      // q394's plane and halo with r² and w derived from the same
-      // distinct-point count
-      """WITH u AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
-        |nn AS (SELECT greatest(1, 33750000 // count(*)) AS r2 FROM u),
-        |ww AS (SELECT r2, CAST(floor(sqrt(CAST(r2 AS DOUBLE))) AS BIGINT) + 1 AS w FROM nn),
-        |p AS (SELECT user_id, (user_id * 7919) % 1001 - 500 AS px,
-        |    (user_id * 104729) % 1001 - 500 AS py FROM u),
-        |c AS (SELECT user_id, px, py, (px + 500) // (SELECT w FROM ww) AS cx,
-        |    (py + 500) // (SELECT w FROM ww) AS cy FROM p),
-        |o AS (SELECT CAST(unnest([-1, 0, 1]) AS BIGINT) AS d),
-        |pr AS (SELECT c.user_id AS u_a, px AS xa, py AS ya,
-        |    cx + ox.d AS cx, cy + oy.d AS cy FROM c, o ox, o oy),
-        |j AS (SELECT pr.u_a,
-        |    (pr.xa - b.px) * (pr.xa - b.px) + (pr.ya - b.py) * (pr.ya - b.py) AS dist2
-        |  FROM pr JOIN c b ON pr.cx = b.cx AND pr.cy = b.cy AND pr.u_a <> b.user_id)
-        |SELECT u_a, count(*) AS n_neighbors, CAST(min(dist2) AS BIGINT) AS min_dist2,
-        |  CAST(sum(dist2) AS BIGINT) AS sum_dist2
-        |FROM j WHERE dist2 <= (SELECT r2 FROM ww) GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q63_orc_roundtrip" -> "SELECT * FROM nation ORDER BY n_nationkey",
-    "q454_orc_roundtrip" ->
-      // the layout changes the container, never the values — the oracle is
-      // the filtered source table
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |  CAST(o_orderdate AS TIMESTAMP) AS o_orderdate, o_orderpriority
-        |FROM orders WHERE o_orderpriority = '1-URGENT'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q117_rare_tokens" ->
-      // same folded threshold: cf·10⁶ < n·ppm ⇔ cf ≤ (n·ppm − 1) // 10⁶
-      """WITH tok AS (SELECT doc_id, t.term FROM documents,
-        |  LATERAL (SELECT unnest(regexp_split_to_array(lower(text), '\s+')) AS term) t
-        |  WHERE length(t.term) > 0),
-        |f AS (SELECT term, count(*) AS cf FROM tok GROUP BY 1),
-        |n AS (SELECT CAST(coalesce(sum(cf), 0) AS BIGINT) AS n FROM f),
-        |s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |    CAST(sum(CASE WHEN cf <= (n.n * 1000 - 1) // 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS rare_tokens
-        |  FROM tok JOIN f USING (term) CROSS JOIN n GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(n_tokens, 0) AS n_tokens,
-        |  coalesce(rare_tokens, 0) AS rare_tokens,
-        |  CAST(CASE WHEN coalesce(n_tokens, 0) > 0
-        |    THEN (10000 * rare_tokens) // n_tokens ELSE 0 END AS BIGINT) AS rare_bp
-        |FROM documents d LEFT JOIN s USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    "q118_schema_evolution" ->
-      """SELECT n_nationkey, n_name, CAST(NULL AS BIGINT) AS n_regionkey,
-        |  CAST(1 AS INTEGER) AS batch FROM nation
-        |UNION ALL
-        |SELECT n_nationkey, n_name, n_regionkey, CAST(2 AS INTEGER) FROM nation
-        |ORDER BY batch, n_nationkey""".stripMargin,
-    "q119_bloom_prune" ->
-      """SELECT * FROM orders WHERE o_custkey IN
-        |  (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |ORDER BY o_orderkey""".stripMargin,
-    "q120_copurchase_rank" ->
-      // 3 unrolled damped-PageRank steps in the same scaled-long arithmetic
-      """WITH e AS (SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-        |d AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-        |r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS r FROM d),
-        |r1 AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(r0.r // d.deg)) // 100 AS BIGINT) AS r
-        |  FROM e JOIN d USING (src) JOIN r0 ON r0.node = e.src GROUP BY e.dst),
-        |r2 AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(r1.r // d.deg)) // 100 AS BIGINT) AS r
-        |  FROM e JOIN d USING (src) JOIN r1 ON r1.node = e.src GROUP BY e.dst),
-        |r3 AS (SELECT e.dst AS node, CAST(150000 + (85 * sum(r2.r // d.deg)) // 100 AS BIGINT) AS r
-        |  FROM e JOIN d USING (src) JOIN r2 ON r2.node = e.src GROUP BY e.dst)
-        |SELECT node AS p_partkey, r AS rank_scaled FROM r3 ORDER BY 1""".stripMargin,
-    "q121_line_dedup" ->
-      // same 3-token segmentation, frequency on the line text itself (the
-      // engine counts on xxhash64(line) — identical modulo 64-bit collisions)
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |chunks AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(0, CAST(ceil(len(tk) / 3.0) AS BIGINT)),
-        |      i -> array_to_string(tk[i * 3 + 1 : i * 3 + 3], ' '))) AS line,
-        |    unnest(range(0, CAST(ceil(len(tk) / 3.0) AS BIGINT))) AS pos
-        |  FROM toks),
-        |freq AS (SELECT line, count(*) AS cf FROM chunks GROUP BY line)
-        |SELECT c.doc_id,
-        |  coalesce(string_agg(c.line, ' ' ORDER BY c.pos) FILTER (f.cf <= 2), '') AS clean_text,
-        |  CAST(count(*) FILTER (f.cf <= 2) AS BIGINT) AS kept_lines,
-        |  CAST(count(*) FILTER (f.cf > 2) AS BIGINT) AS dropped_lines
-        |FROM chunks c JOIN freq f USING (line)
-        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-    "q122_binary_ingest" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  sha256(text) AS sha
-        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
-    "q123_cdc_diff" ->
-      """WITH base AS (SELECT c_custkey, c_acctbal, c_mktsegment FROM customer),
-        |o AS (SELECT * FROM base WHERE c_custkey % 10 <> 3),
-        |n AS (SELECT c_custkey,
-        |    CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 10 ELSE c_acctbal END AS c_acctbal,
-        |    CASE WHEN c_custkey % 13 = 0 THEN 'CHURNED' ELSE c_mktsegment END AS c_mktsegment
-        |  FROM base WHERE c_custkey % 10 <> 0)
-        |SELECT coalesce(o.c_custkey, n.c_custkey) AS c_custkey,
-        |  CASE WHEN o.c_custkey IS NULL THEN 'insert'
-        |       WHEN n.c_custkey IS NULL THEN 'delete' ELSE 'update' END AS change_type,
-        |  o.c_acctbal AS old_c_acctbal, n.c_acctbal AS new_c_acctbal,
-        |  o.c_mktsegment AS old_c_mktsegment, n.c_mktsegment AS new_c_mktsegment
-        |FROM o FULL OUTER JOIN n ON o.c_custkey = n.c_custkey
-        |WHERE o.c_custkey IS NULL OR n.c_custkey IS NULL
-        |   OR o.c_acctbal IS DISTINCT FROM n.c_acctbal
-        |   OR o.c_mktsegment IS DISTINCT FROM n.c_mktsegment
-        |ORDER BY c_custkey""".stripMargin,
-    "q124_zorder_layout" ->
-      // bit-by-bit Morton interleave, generated as plain bit arithmetic —
-      // the engine's magic-number spread (ZOrder.scala) must agree on every
-      // one of the 32 bit placements
-      s"""WITH b AS (SELECT event_id, CAST(user_id % 1024 AS BIGINT) AS xb,
-         |    CAST(day(ts) AS BIGINT) AS yb FROM events)
-         |SELECT event_id, xb, yb, CAST(${zorderSql("xb", "yb")} AS BIGINT) AS zval
-         |FROM b ORDER BY event_id""".stripMargin,
-    "q125_triangle_count" ->
+        .limit(20),
       // plain u<v<w three-way join enumeration (no orientation needed at
       // oracle scale), each triangle credited to all three vertices
       """WITH e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -2545,1152 +3638,23 @@ private[graft] object RegistryStatsMl {
         |n AS (SELECT unnest([a, b, c]) AS p_partkey FROM t)
         |SELECT p_partkey, CAST(count(*) AS BIGINT) AS triangles
         |FROM n GROUP BY 1 ORDER BY triangles DESC, p_partkey LIMIT 20""".stripMargin,
-    "q126_grouping_sets" ->
+      note = "wedge closing against BROADCAST adjacency, one codegen span; single post-closing exchange (partial+final agg)"),
+    Key("q126_grouping_sets", (s, dir) =>
+      // one-pass multi-granularity OLAP: CUBE over (status, priority) with
+      // grouping_id disambiguating subtotal levels from genuine NULL keys;
+      // revenue in scaled-long cents (float sums are accumulation-order-
+      // dependent and could never hash-match)
+      T(s, dir, "orders")
+        .cube(col("o_orderstatus"), col("o_orderpriority"))
+        .agg(grouping_id().cast("long").as("gid"),
+          count(lit(1)).as("cnt"),
+          sum(ops.Num.roundz(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
+        .orderBy(col("gid"), col("o_orderstatus").asc_nulls_first,
+          col("o_orderpriority").asc_nulls_first),
       """SELECT o_orderstatus, o_orderpriority,
         |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
         |  count(*) AS cnt,
         |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
         |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    // q127_fuzzy_join / q394_grid_radius_join verify against their twins'
-    // oracles (SparkEntry.retiredToTwins, round 17)
-    "q116_pq_encode" ->
-      // same L2 expansion x·x − 2·x·c + c·c over list_dot_product, same
-      // centroid-id tie-break — code assignment must agree per subvector
-      s"""WITH vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-         |$pqSubsCte,
-         |${pqAssignCtes(0, 8)}
-         |SELECT vec_id,
-         |  max(CASE WHEN sub = 0 THEN code END) AS c0,
-         |  max(CASE WHEN sub = 1 THEN code END) AS c1,
-         |  max(CASE WHEN sub = 2 THEN code END) AS c2,
-         |  max(CASE WHEN sub = 3 THEN code END) AS c3
-         |FROM sc WHERE rn = 1 GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    "q41_keyed_fanout" ->
-      """SELECT n_name, count(*) AS cnt,
-        |CAST((sum(CAST(round(c_acctbal * 100, 0) AS BIGINT)) * 2 + count(*)) // (2 * count(*)) AS BIGINT) / 100.0 AS avg_bal
-        |FROM nation JOIN customer ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q42_session_window" ->
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS bucket_start, count(*) AS cnt
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q43_exact_dedup" ->
-      """SELECT min(doc_id) AS keeper_id, count(*) AS dupes FROM documents
-        |GROUP BY text ORDER BY keeper_id""".stripMargin,
-    "q45_cosine_topk" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings),
-         |${exactCosCte("s", "c CROSS JOIN q WHERE neighbor_id <> query_id")},
-         |r AS (SELECT query_id, neighbor_id, cosine,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rn FROM s)
-         |SELECT query_id, neighbor_id, (round(cosine, 4) + 0.0) AS cosine, rn FROM r WHERE rn <= 5
-         |ORDER BY query_id, rn""".stripMargin,
-    "q46_approx_distinct" ->
-      "SELECT event_type, count(DISTINCT user_id) AS users FROM events GROUP BY 1 ORDER BY 1",
-    "q47_text_stats" ->
-      """SELECT lang, count(*) AS docs,
-        |CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS tokens,
-        |(round(avg(length(text)), 2) + 0.0) AS avg_chars, CAST(max(length(text)) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q49_ngram_jaccard" ->
-      """WITH ws AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w FROM documents WHERE doc_id < 100),
-        |sha AS (SELECT DISTINCT doc_id, w[CAST(i AS BIGINT)] || ' ' || w[CAST(i AS BIGINT) + 1] AS shingle
-        |  FROM ws, LATERAL (SELECT unnest(range(1, len(w))) AS i) t),
-        |rare AS (SELECT shingle FROM sha GROUP BY shingle HAVING count(*) <= 100),
-        |sh AS (SELECT sha.doc_id, sha.shingle FROM sha JOIN rare USING (shingle)),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |shared AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS shared
-        |  FROM sh x JOIN sh y USING (shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b, (round(CAST(shared AS DOUBLE) / (na.n + nb.n - shared), 4) + 0.0) AS jaccard
-        |FROM shared JOIN sizes na ON na.doc_id = id_a JOIN sizes nb ON nb.doc_id = id_b
-        |WHERE (round(CAST(shared AS DOUBLE) / (na.n + nb.n - shared), 4) + 0.0) >= 0.1
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q50_langid" ->
-      s"SELECT doc_id, $langCase AS lang_pred FROM documents ORDER BY doc_id",
-    "q51_quality_score" ->
-      """WITH f AS (SELECT doc_id,
-        |CAST(length(text) AS DOUBLE) AS len,
-        |CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE) AS toks,
-        |CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) AS alpha,
-        |CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|is|a)\b')) AS DOUBLE) AS stop
-        |FROM documents)
-        |SELECT doc_id, (round(
-        |(CASE WHEN len >= 100 AND len <= 10000 THEN CAST(1.0 AS DOUBLE) WHEN len >= 20 THEN CAST(0.5 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) * CAST(0.4 AS DOUBLE)
-        |+ (CASE WHEN len > 0 THEN alpha / len ELSE CAST(0.0 AS DOUBLE) END) * CAST(0.3 AS DOUBLE)
-        |+ (CASE WHEN toks > 0 THEN least(stop / toks * CAST(5.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) ELSE CAST(0.0 AS DOUBLE) END) * CAST(0.3 AS DOUBLE),
-        |4) + 0.0) AS quality FROM f ORDER BY doc_id""".stripMargin,
-    "q52_token_count" ->
-      """SELECT lang,
-        |CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS ws_tokens,
-        |CAST(sum(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))) AS BIGINT) AS bpe_tokens
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q54_embed_neardup" -> q54Sql,
-    "q55_ann_lsh" ->
-      s"""WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bb AS (SELECT vec_id, v,
-         |  (${lshBandSql(0)}) AS buck0, (${lshBandSql(1)}) AS buck1,
-         |  (${lshBandSql(2)}) AS buck2, (${lshBandSql(3)}) AS buck3 FROM b),
-         |banded AS (SELECT vec_id, v, t.band,
-         |  CASE t.band WHEN 0 THEN buck0 WHEN 1 THEN buck1 WHEN 2 THEN buck2 ELSE buck3 END AS bucket
-         |  FROM bb, (VALUES (0), (1), (2), (3)) AS t(band)),
-         |cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS xv, y.v AS yv
-         |  FROM banded x JOIN banded y ON x.band = y.band AND x.bucket = y.bucket AND x.vec_id < y.vec_id),
-         |p AS (SELECT id_a, id_b,
-         |  list_dot_product(xv, yv) / (sqrt(list_dot_product(xv, xv)) * sqrt(list_dot_product(yv, yv))) AS cosine
-         |  FROM cand)
-         |SELECT id_a, id_b, (round(cosine, 4) + 0.0) AS cosine FROM p WHERE cosine >= 0.35
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q56_multimodal" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q57_sessionize" -> sessionizeSql,
-    "q58_ann_ivf" ->
-      ivfTopKSql("crn = 1", "asg WHERE vec_id < 8"),
-    "q59_stratified_sample" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY ((doc_id % 1000003) * 2654435761) % 1000003, doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 20 ORDER BY lang, doc_id""".stripMargin,
-    // fold over code points replicates the byte fold exactly for ASCII corpora
-    // (the testdata is pure ASCII; unicode behavior is unit-tested Spark-side)
-    "q53_fingerprint" ->
-      """SELECT doc_id, list_reduce(
-        |  list_transform(range(1, length(text) + 1),
-        |    i -> CAST(ord(substr(text, CAST(i AS INT), 1)) AS BIGINT)),
-        |  (a, b) -> (a * 31 + b) % 1000000007) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q44_minhash_neardup" -> q44Sql,
-    "q384_worst_slices" ->
-      s"""SELECT source, lang, count(*) AS n,
-         |  CAST(sum(CASE WHEN $langCase = lang THEN 1 ELSE 0 END) AS BIGINT) AS correct,
-         |  CAST(sum(CASE WHEN $langCase = lang THEN 1 ELSE 0 END) * 10000 // count(*) AS BIGINT) AS acc_bp
-         |FROM documents GROUP BY 1, 2 HAVING count(*) >= 20
-         |ORDER BY acc_bp, n DESC, source, lang LIMIT 10""".stripMargin,
-    "q385_variant_shred" ->
-      // the engine parses once into VARIANT and walks the binary field;
-      // the oracle re-parses the JSON text — same typed values
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-        |  count(*) AS cnt
-        |FROM events WHERE props IS NOT NULL GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q386_observed_metrics" ->
-      // the oracle computes directly what observe() must have reported
-      """SELECT count(*) AS rows_in,
-        |  CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_values,
-        |  CAST(sum(COALESCE(CAST(round(value * 100) AS BIGINT), 0)) AS BIGINT) AS cents_in,
-        |  CAST(count(DISTINCT event_type) AS BIGINT) AS rows_out
-        |FROM events""".stripMargin,
-    "q387_pipe_sql" ->
-      // the nested-SELECT equivalent of the pipe program
-      """SELECT event_type, count(*) AS cnt,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |FROM events WHERE value IS NOT NULL AND value > 50
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q388_collated_group" ->
-      // collation-aware grouping ≡ the lower()-projection workaround
-      """WITH d AS (SELECT CASE WHEN doc_id % 2 = 1 THEN upper(source)
-        |    ELSE source END AS s FROM documents)
-        |SELECT min(s) AS variant_min, count(*) AS cnt FROM d
-        |GROUP BY lower(s) ORDER BY variant_min""".stripMargin,
-    "q389_markov_attribution" -> q389Sql,
-    "q390_restatement_ledger" ->
-      // identical deterministic arrival = event time + (id % 48) hours
-      """WITH e AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-        |    CAST(ts AS TIMESTAMP) + (event_id % 48) * INTERVAL 1 HOUR AS arrival,
-        |    CAST(CAST(ts AS DATE) + 1 AS TIMESTAMP) AS day_end
-        |  FROM events)
-        |SELECT day, count(*) AS n_final,
-        |  CAST(sum(CASE WHEN arrival < day_end THEN 1 ELSE 0 END) AS BIGINT) AS n_first,
-        |  CAST((count(*) - sum(CASE WHEN arrival < day_end THEN 1 ELSE 0 END)) * 10000
-        |    // count(*) AS BIGINT) AS restated_bp
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q391_aqe_skew_join" ->
-      // the plain join — the runtime skew split must change nothing
-      """WITH f AS (SELECT event_id,
-        |    CASE WHEN event_id % 10 < 9 THEN 'hot'
-        |         ELSE 'cold' || CAST(event_id % 97 AS VARCHAR) END AS k,
-        |    (event_id * 48271) % 2147483647 AS pad
-        |  FROM events),
-        |d AS (SELECT k, count(*) AS dim_n FROM f GROUP BY 1),
-        |j AS (SELECT f.k, f.pad, d.dim_n FROM f JOIN d USING (k))
-        |SELECT CASE WHEN k = 'hot' THEN 'hot' ELSE 'cold' END AS k_class,
-        |  count(*) AS n, CAST(sum(dim_n) AS BIGINT) AS dim_mass,
-        |  CAST(sum(pad) AS BIGINT) AS pad_mass
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q392_ols_regression" ->
-      // same six exact integer moments, same fixed double chain
-      """WITH e AS (SELECT event_type, CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |m AS (SELECT event_type, count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |    CAST(sum(y) AS BIGINT) AS sy, CAST(sum(x * y) AS BIGINT) AS sxy,
-        |    CAST(sum(x * x) AS BIGINT) AS sx2, CAST(sum(y * y) AS BIGINT) AS sy2
-        |  FROM e GROUP BY 1)
-        |SELECT event_type, n,
-        |  (round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 4) + 0.0) AS slope,
-        |  (round((CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |    * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 4) + 0.0) AS intercept,
-        |  (round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / ((CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |       * (CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 4) + 0.0) AS r2
-        |FROM m ORDER BY event_type""".stripMargin,
-    "q393_logistic_gd" ->
-      // the 3 GD steps unrolled as chained CTEs; `//` and `div` both
-      // truncate toward zero, so the integer walk is bit-identical
-      """WITH e AS (SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) - 12 AS x,
-        |    CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT) ELSE 0 END AS y FROM events),
-        |i0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1),
-        |s1 AS (SELECT max(w0) AS pw0, max(w1) AS pw1, count(*) AS n,
-        |    CAST(sum(greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) AS BIGINT) AS g0,
-        |    CAST(sum((greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) * x) AS BIGINT) AS g1
-        |  FROM e CROSS JOIN i0),
-        |i1 AS (SELECT pw0 - g0 // (2 * n) AS w0, pw1 - g1 // (20 * n) AS w1 FROM s1),
-        |s2 AS (SELECT max(w0) AS pw0, max(w1) AS pw1, count(*) AS n,
-        |    CAST(sum(greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) AS BIGINT) AS g0,
-        |    CAST(sum((greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) * x) AS BIGINT) AS g1
-        |  FROM e CROSS JOIN i1),
-        |i2 AS (SELECT pw0 - g0 // (2 * n) AS w0, pw1 - g1 // (20 * n) AS w1 FROM s2),
-        |s3 AS (SELECT max(w0) AS pw0, max(w1) AS pw1, count(*) AS n,
-        |    CAST(sum(greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) AS BIGINT) AS g0,
-        |    CAST(sum((greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) - y * 1000000) * x) AS BIGINT) AS g1
-        |  FROM e CROSS JOIN i2),
-        |i3 AS (SELECT pw0 - g0 // (2 * n) AS w0, pw1 - g1 // (20 * n) AS w1 FROM s3),
-        |ev AS (SELECT max(w0) AS w0, max(w1) AS w1, count(*) AS n,
-        |    CAST(sum(CASE WHEN (greatest(least(500000 + (w0 + w1 * x) // 4, 1000000), 0) > 500000) = (y = 1)
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS correct
-        |  FROM e CROSS JOIN i3)
-        |SELECT w0, w1, n, correct * 10000 // n AS correct_bp FROM ev""".stripMargin,
-    "q395_winnowing" ->
-      // same trigram Karp-Rabin ring (the q353-proven ord/byte parity),
-      // same packed rightmost-min key, same 4-row window
-      """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    t -> length(t) > 0) AS arr FROM documents),
-        |px AS (SELECT doc_id, unnest(list_transform(range(1, len(arr) + 1),
-        |    i -> {'pos': i - 1, 'tok': arr[i]})) AS g FROM raw),
-        |th AS (SELECT doc_id, CAST(g.pos AS BIGINT) AS pos,
-        |    list_reduce(list_transform(range(1, length(g.tok) + 1),
-        |      i -> CAST(ord(substr(g.tok, CAST(i AS INT), 1)) AS BIGINT)),
-        |      (a, b) -> (a * 31 + b) % 1000000007) AS h
-        |  FROM px),
-        |tri AS (SELECT doc_id, pos,
-        |    ((h * 31 + lead(h, 1) OVER w) % 1000000007 * 31 + lead(h, 2) OVER w) % 1000000007 AS gh,
-        |    lead(h, 2) OVER w IS NOT NULL AS full3
-        |  FROM th WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        |k AS (SELECT doc_id, pos, gh * 1048576 + (1048575 - pos) AS k FROM tri WHERE full3),
-        |wm AS (SELECT doc_id, pos, min(k) OVER (PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS wmin FROM k),
-        |sel AS (SELECT DISTINCT doc_id, wmin FROM wm WHERE pos >= 3)
-        |SELECT doc_id, wmin // 1048576 AS hash, 1048575 - (wmin % 1048576) AS pos
-        |FROM sel ORDER BY doc_id, pos""".stripMargin,
-    "q396_t_closeness" ->
-      // same 4-band grid, same ppm integer divisions, same (m-1) cum sum
-      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nat, c_mktsegment AS seg,
-        |    CAST(round(c_acctbal * 100, 0) AS BIGINT) AS cents FROM customer),
-        |b AS (SELECT nat, seg, greatest(least((cents + 100000) // 300000, 3), 0) AS band FROM c),
-        |g AS (SELECT band, count(*) AS gc FROM b GROUP BY 1),
-        |gt AS (SELECT count(*) AS gn FROM b),
-        |q AS (SELECT CAST(gb.band AS BIGINT) AS band,
-        |    coalesce(g.gc, 0) * 1000000 // gt.gn AS q_ppm
-        |  FROM (SELECT unnest([0, 1, 2, 3]) AS band) gb
-        |  LEFT JOIN g ON g.band = gb.band, gt),
-        |gr AS (SELECT nat, seg, count(*) AS n FROM b GROUP BY 1, 2),
-        |grid AS (SELECT nat, seg, n, CAST(unnest([0, 1, 2, 3]) AS BIGINT) AS band FROM gr),
-        |cnt AS (SELECT nat, seg, band, count(*) AS nb FROM b GROUP BY 1, 2, 3),
-        |p AS (SELECT grid.nat, grid.seg, grid.band, grid.n,
-        |    coalesce(cnt.nb, 0) * 1000000 // grid.n AS p_ppm, q.q_ppm
-        |  FROM grid LEFT JOIN cnt USING (nat, seg, band) JOIN q USING (band)),
-        |cum AS (SELECT nat, seg, n, band,
-        |    sum(p_ppm) OVER (PARTITION BY nat, seg ORDER BY band) AS cp,
-        |    sum(q_ppm) OVER (PARTITION BY nat, seg ORDER BY band) AS cq
-        |  FROM p)
-        |SELECT nat, seg, CAST(max(n) AS BIGINT) AS n,
-        |  CAST(sum(abs(cp - cq)) AS BIGINT) // 3 AS emd_ppm,
-        |  (CAST(sum(abs(cp - cq)) AS BIGINT) // 3) <= 200000 AS meets_t20
-        |FROM cum WHERE band <= 2 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q397_ips_eval" ->
-      // same hash-planted actions/propensities, same exact micro weights
-      """WITH e AS (SELECT CAST(user_id % 3 AS BIGINT) AS pi_arm,
-        |    CASE WHEN event_id % 10 < 5 THEN 0 WHEN event_id % 10 < 8 THEN 1 ELSE 2 END AS a,
-        |    CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT) ELSE 0 END AS r
-        |  FROM events WHERE user_id IS NOT NULL),
-        |w AS (SELECT pi_arm, r,
-        |    CASE WHEN a = 0 THEN 2000000 WHEN a = 1 THEN 3333333 ELSE 5000000 END AS w_micro,
-        |    CASE WHEN pi_arm = a THEN CAST(1 AS BIGINT) ELSE 0 END AS m FROM e)
-        |SELECT pi_arm, count(*) AS n, CAST(sum(m) AS BIGINT) AS n_matched,
-        |  CAST(sum(r * m * w_micro) AS BIGINT) // count(*) AS ips_micro,
-        |  CAST(sum(r * m * w_micro) AS BIGINT) * 10000
-        |    // greatest(CAST(sum(m * w_micro) AS BIGINT), 1) AS snips_bp,
-        |  CAST(sum(r) AS BIGINT) * 10000 // count(*) AS logged_reward_bp
-        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q398_bitmap_index" ->
-      // same 32-bit word packing, same bit_or / bit_count algebra
-      """WITH d AS (SELECT DISTINCT event_type AS seg, user_id FROM events
-        |  WHERE user_id IS NOT NULL),
-        |bm AS (SELECT seg, user_id // 32 AS w,
-        |    bit_or(CAST(1 AS BIGINT) << CAST(user_id % 32 AS INT)) AS bits
-        |  FROM d GROUP BY 1, 2),
-        |card AS (SELECT seg, CAST(sum(bit_count(bits)) AS BIGINT) AS card FROM bm GROUP BY 1),
-        |inter AS (SELECT a.seg AS seg_a, b.seg AS seg_b,
-        |    CAST(sum(bit_count(a.bits & b.bits)) AS BIGINT) AS inter
-        |  FROM bm a JOIN bm b ON a.w = b.w AND a.seg < b.seg GROUP BY 1, 2),
-        |pairs AS (SELECT ca.seg AS seg_a, cb.seg AS seg_b, ca.card AS card_a, cb.card AS card_b
-        |  FROM card ca CROSS JOIN card cb WHERE ca.seg < cb.seg)
-        |SELECT p.seg_a, p.seg_b, p.card_a, p.card_b,
-        |  coalesce(i.inter, 0) AS inter,
-        |  p.card_a + p.card_b - coalesce(i.inter, 0) AS uni,
-        |  coalesce(i.inter, 0) * 10000 // (p.card_a + p.card_b - coalesce(i.inter, 0)) AS jaccard_bp
-        |FROM pairs p LEFT JOIN inter i USING (seg_a, seg_b) ORDER BY 1, 2""".stripMargin,
-    "q399_powerlaw_mle" ->
-      // same floor-micro log quantization, same single closing division
-      """WITH d AS (SELECT source,
-        |    CAST(floor(ln(CAST(n_chars AS DOUBLE) / 200.0) * 1000000) AS BIGINT) AS lnx
-        |  FROM documents WHERE n_chars >= 200)
-        |SELECT source, count(*) AS n_tail, CAST(sum(lnx) AS BIGINT) AS s_micro,
-        |  (round(1.0 + CAST(count(*) AS DOUBLE) * 1000000.0
-        |    / CAST(nullif(CAST(sum(lnx) AS BIGINT), 0) AS DOUBLE), 4) + 0.0) AS alpha
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q400_brier_decomposition" ->
-      // same 11 bins, same exact Brier numerator, same double rel chain
-      """WITH e AS (SELECT (user_id * 31 % 101) * 100 AS f_bp,
-        |    CASE WHEN event_type = 'purchase' THEN CAST(1 AS BIGINT) ELSE 0 END AS y
-        |  FROM events WHERE user_id IS NOT NULL)
-        |SELECT f_bp // 1000 AS bin, count(*) AS n, CAST(sum(y) AS BIGINT) AS o,
-        |  CAST(sum(f_bp) AS BIGINT) AS sum_f_bp,
-        |  CAST(sum((f_bp - y * 10000) * (f_bp - y * 10000)) AS BIGINT) AS brier_num,
-        |  (round((CAST(CAST(sum(f_bp) AS BIGINT) AS DOUBLE) - 10000.0 * CAST(sum(y) AS BIGINT))
-        |    * (CAST(CAST(sum(f_bp) AS BIGINT) AS DOUBLE) - 10000.0 * CAST(sum(y) AS BIGINT))
-        |    / (100000000.0 * count(*)), 4) + 0.0) AS rel
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q401_neyman_allocation" ->
-      // same exact moments, same floor(N·sd·10³) quantization, same
-      // largest-remainder walk over the 5-row strata frame
-      """WITH m AS (SELECT event_type, count(*) AS n,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS s,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)
-        |      * CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS ss
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT event_type, n,
-        |    CAST(floor(CAST(n AS DOUBLE) * sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) * 1000) AS BIGINT) AS w_scaled
-        |  FROM m),
-        |t AS (SELECT CAST(sum(w_scaled) AS BIGINT) AS tw FROM w),
-        |b AS (SELECT w.event_type, w.n, w.w_scaled,
-        |    w.w_scaled * 1000 // t.tw AS alloc_base, (w.w_scaled * 1000) % t.tw AS rem
-        |  FROM w, t),
-        |u AS (SELECT CAST(sum(alloc_base) AS BIGINT) AS ub FROM b),
-        |r AS (SELECT b.*, u.ub, row_number() OVER (ORDER BY rem DESC, event_type) AS rk FROM b, u)
-        |SELECT event_type, n, w_scaled,
-        |  alloc_base + CASE WHEN rk <= 1000 - ub THEN 1 ELSE 0 END AS alloc
-        |FROM r ORDER BY event_type""".stripMargin,
-    "q402_paa_symbolize" ->
-      // same fixed anchor, same exact micro PAA, same min-max symbols
-      """WITH daily AS (SELECT event_type,
-        |    CAST(date_diff('day', DATE '2020-01-01', CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS d,
-        |    count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |paa AS (SELECT event_type, d // 4 AS seg, count(*) AS n_days,
-        |    CAST(sum(cnt) AS BIGINT) AS sum_cnt FROM daily GROUP BY 1, 2),
-        |p2 AS (SELECT *, sum_cnt * 1000000 // n_days AS paa_micro FROM paa),
-        |rng AS (SELECT event_type, min(paa_micro) AS lo, max(paa_micro) AS hi FROM p2 GROUP BY 1)
-        |SELECT p2.event_type, p2.seg, p2.n_days, p2.sum_cnt, p2.paa_micro,
-        |  (p2.paa_micro - rng.lo) * 4 // (rng.hi - rng.lo + 1) AS sym
-        |FROM p2 JOIN rng USING (event_type) ORDER BY 1, 2""".stripMargin,
-    "q403_poisson_bootstrap" ->
-      // same hash-threshold Poisson(1) weights, same exact micro means,
-      // same integer moments with one closing sqrt
-      """WITH e AS (SELECT event_id, CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-        |rep AS (SELECT event_id, cents, CAST(unnest(range(0, 32)) AS BIGINT) AS r FROM e),
-        |h AS (SELECT r, cents, ((event_id * 131 + r) * 48271) % 2147483647 % 10000 AS h FROM rep),
-        |w AS (SELECT r, cents, CASE WHEN h < 3679 THEN 0 WHEN h < 7358 THEN 1
-        |    WHEN h < 9197 THEN 2 WHEN h < 9810 THEN 3 WHEN h < 9963 THEN 4 ELSE 5 END AS w
-        |  FROM h),
-        |g AS (SELECT r, CAST(sum(w) AS BIGINT) AS sw, CAST(sum(w * cents) AS BIGINT) AS swy
-        |  FROM w GROUP BY 1),
-        |mm AS (SELECT swy * 100 // greatest(sw, 1) AS m FROM g),
-        |agg AS (SELECT count(*) AS n_rep, CAST(sum(m) AS BIGINT) AS sm,
-        |    CAST(sum(m * m) AS BIGINT) AS sm2 FROM mm),
-        |pe AS (SELECT count(*) AS n_events,
-        |    CAST(sum(cents) AS BIGINT) * 100 // count(*) AS point_mean_micros FROM e)
-        |SELECT pe.n_events, pe.point_mean_micros, agg.sm // agg.n_rep AS boot_mean_micros,
-        |  (round(sqrt((CAST(agg.n_rep AS DOUBLE) * CAST(agg.sm2 AS DOUBLE)
-        |    - CAST(agg.sm AS DOUBLE) * CAST(agg.sm AS DOUBLE))
-        |    / (CAST(agg.n_rep AS DOUBLE) * CAST(agg.n_rep - 1 AS DOUBLE))), 4) + 0.0) AS boot_se_micros
-        |FROM pe, agg""".stripMargin,
-    "q404_theta_sketch" ->
-      // same MINSTD priorities, same bottom-32 retention, same θ algebra
-      """WITH d AS (SELECT DISTINCT event_type AS seg, user_id FROM events
-        |  WHERE user_id IS NOT NULL),
-        |pr AS (SELECT seg, user_id, (user_id * 48271) % 2147483647 + 1 AS p FROM d),
-        |sk AS (SELECT seg, p FROM (SELECT seg, p,
-        |    row_number() OVER (PARTITION BY seg ORDER BY p) AS rn FROM pr)
-        |  WHERE rn <= 32),
-        |th AS (SELECT sk.seg, CASE WHEN count(*) < 32 THEN 2147483647
-        |    ELSE max(sk.p) END AS theta, count(*) AS n_ret FROM sk GROUP BY 1),
-        |ne AS (SELECT seg, count(*) AS n_exact FROM pr GROUP BY 1),
-        |est AS (SELECT th.seg, th.theta,
-        |    CASE WHEN th.n_ret < 32 THEN ne.n_exact
-        |      ELSE CAST(31 AS BIGINT) * 2147483647 // th.theta END AS est
-        |  FROM th JOIN ne USING (seg)),
-        |pairs AS (SELECT a.seg AS seg_a, b.seg AS seg_b, a.est AS est_a, b.est AS est_b,
-        |    least(a.theta, b.theta) AS th
-        |  FROM est a CROSS JOIN est b WHERE a.seg < b.seg),
-        |skp AS (SELECT p.seg_a, p.seg_b, p.th, s.p AS pv, count(*) AS c
-        |  FROM pairs p JOIN sk s ON (s.seg = p.seg_a OR s.seg = p.seg_b) AND s.p < p.th
-        |  GROUP BY 1, 2, 3, 4),
-        |cnts AS (SELECT seg_a, seg_b, th, count(*) AS u_cnt,
-        |    CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS i_cnt
-        |  FROM skp GROUP BY 1, 2, 3),
-        |ex AS (SELECT a.seg AS seg_a, b.seg AS seg_b, count(*) AS true_inter
-        |  FROM d a JOIN d b ON a.user_id = b.user_id AND a.seg < b.seg GROUP BY 1, 2)
-        |SELECT p.seg_a, p.seg_b, p.est_a, p.est_b,
-        |  coalesce(c.u_cnt, 0) * 2147483647 // p.th AS est_union,
-        |  coalesce(c.i_cnt, 0) * 2147483647 // p.th AS est_inter,
-        |  coalesce(ex.true_inter, 0) AS true_inter
-        |FROM pairs p LEFT JOIN cnts c USING (seg_a, seg_b)
-        |LEFT JOIN ex USING (seg_a, seg_b) ORDER BY 1, 2""".stripMargin,
-    "q405_borda_kendall" ->
-      // same three top-20 heaps, same Borda fold, same pair concordance
-      """WITH r1 AS (SELECT p_partkey, row_number() OVER (ORDER BY p_retailprice DESC, p_partkey) AS r_price
-        |  FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 20),
-        |r2 AS (SELECT p_partkey, row_number() OVER (ORDER BY p_size DESC, p_partkey) AS r_size
-        |  FROM part ORDER BY p_size DESC, p_partkey LIMIT 20),
-        |r3 AS (SELECT p_partkey, row_number() OVER (ORDER BY (p_partkey * 16807) % 2147483647, p_partkey) AS r_hash
-        |  FROM part ORDER BY (p_partkey * 16807) % 2147483647, p_partkey LIMIT 20),
-        |fused AS (SELECT coalesce(r1.p_partkey, r2.p_partkey, r3.p_partkey) AS k,
-        |    r_price, r_size, r_hash,
-        |    CAST(coalesce(21 - r_price, 0) + coalesce(21 - r_size, 0)
-        |      + coalesce(21 - r_hash, 0) AS BIGINT) AS borda
-        |  FROM r1 FULL JOIN r2 ON r1.p_partkey = r2.p_partkey
-        |  FULL JOIN r3 ON coalesce(r1.p_partkey, r2.p_partkey) = r3.p_partkey),
-        |cons AS (SELECT k, r_price, r_size, r_hash,
-        |    row_number() OVER (ORDER BY borda DESC, k) AS consensus FROM fused),
-        |tp AS (SELECT 'r_price' AS ranker, x.consensus AS c1, y.consensus AS c2,
-        |    CAST(x.r_price AS BIGINT) AS v1, CAST(y.r_price AS BIGINT) AS v2
-        |  FROM cons x JOIN cons y ON x.k < y.k
-        |  WHERE x.r_price IS NOT NULL AND y.r_price IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'r_size', x.consensus, y.consensus,
-        |    CAST(x.r_size AS BIGINT), CAST(y.r_size AS BIGINT)
-        |  FROM cons x JOIN cons y ON x.k < y.k
-        |  WHERE x.r_size IS NOT NULL AND y.r_size IS NOT NULL
-        |  UNION ALL
-        |  SELECT 'r_hash', x.consensus, y.consensus,
-        |    CAST(x.r_hash AS BIGINT), CAST(y.r_hash AS BIGINT)
-        |  FROM cons x JOIN cons y ON x.k < y.k
-        |  WHERE x.r_hash IS NOT NULL AND y.r_hash IS NOT NULL)
-        |SELECT ranker, count(*) AS n_pairs,
-        |  CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT) AS concordant,
-        |  count(*) - CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT) AS discordant,
-        |  (CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT)
-        |    - (count(*) - CAST(sum(CASE WHEN (c1 < c2) = (v1 < v2) THEN 1 ELSE 0 END) AS BIGINT)))
-        |    * 1000 // count(*) AS tau_milli
-        |FROM tp GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q406_good_turing" ->
-      // same tokenization, same N_r table, same exact milli adjustment
-      """WITH tok AS (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    t -> length(t) > 0)) AS tok FROM documents),
-        |freq AS (SELECT tok, count(*) AS r FROM tok GROUP BY 1),
-        |nr AS (SELECT r, count(*) AS n_r FROM freq GROUP BY 1),
-        |tot AS (SELECT CAST(sum(r) AS BIGINT) AS n_tokens,
-        |    CAST(sum(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1 FROM freq)
-        |SELECT nr.r, nr.n_r,
-        |  (nr.r + 1) * coalesce(n2.n_r, 0) * 1000 // nr.n_r AS r_star_milli,
-        |  tot.n1 * 10000 // tot.n_tokens AS p0_bp
-        |FROM nr LEFT JOIN nr n2 ON n2.r = nr.r + 1 CROSS JOIN tot
-        |ORDER BY nr.r LIMIT 20""".stripMargin,
-    "q407_hash_ring" ->
-      // same 72-vnode ring, same packed successor argmin, same audit
-      """WITH vn AS (SELECT CAST(unnest(range(0, 72)) AS BIGINT) AS v),
-        |ring AS (SELECT v // 8 AS shard, ((v + 1) * 2654435761) % 2147483647 AS pos FROM vn),
-        |pk AS (SELECT shard, pos, pos * 100 + shard AS packed FROM ring),
-        |keys AS (SELECT DISTINCT user_id FROM events WHERE user_id IS NOT NULL),
-        |kh AS (SELECT user_id, (user_id * 2654435761) % 2147483647 AS kh FROM keys),
-        |asg AS (SELECT k.user_id,
-        |    coalesce(min(CASE WHEN p.shard < 8 AND p.pos >= k.kh THEN p.packed END),
-        |      min(CASE WHEN p.shard < 8 THEN p.packed END)) % 100 AS shard8,
-        |    coalesce(min(CASE WHEN p.pos >= k.kh THEN p.packed END),
-        |      min(p.packed)) % 100 AS shard9
-        |  FROM kh k CROSS JOIN pk p GROUP BY 1, k.kh)
-        |SELECT shard8, count(*) AS n_keys,
-        |  CAST(sum(CASE WHEN shard9 <> shard8 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved,
-        |  CAST(sum(CASE WHEN shard9 = 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_to_new,
-        |  CAST(sum(CASE WHEN shard9 <> shard8 THEN 1 ELSE 0 END) AS BIGINT) * 10000
-        |    // count(*) AS moved_bp
-        |FROM asg GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q408_contribution_bounding" ->
-      // same first-8-per-user clamp, same per-day ledger
-      """WITH e AS (SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE user_id IS NOT NULL)
-        |SELECT day, count(*) AS n_raw,
-        |  CAST(sum(CASE WHEN rn <= 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_bounded,
-        |  (count(*) - CAST(sum(CASE WHEN rn <= 8 THEN 1 ELSE 0 END) AS BIGINT)) * 10000
-        |    // count(*) AS clamp_loss_bp
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q409_skipgram_pairs" ->
-      // same per-doc leads, both directions, same top-30 total order
-      """WITH raw AS (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    t -> length(t) > 0) AS arr FROM documents),
-        |px AS (SELECT doc_id, unnest(list_transform(range(1, len(arr) + 1),
-        |    i -> {'pos': i - 1, 'tok': arr[i]})) AS g FROM raw),
-        |t AS (SELECT doc_id, g.pos AS pos, g.tok AS tok,
-        |    lead(g.tok, 1) OVER w AS n1, lead(g.tok, 2) OVER w AS n2
-        |  FROM px WINDOW w AS (PARTITION BY doc_id ORDER BY g.pos)),
-        |prs AS (SELECT tok AS w1, n1 AS w2, CAST(1 AS BIGINT) AS dist FROM t WHERE n1 IS NOT NULL
-        |  UNION ALL SELECT tok, n2, 2 FROM t WHERE n2 IS NOT NULL
-        |  UNION ALL SELECT n1, tok, 1 FROM t WHERE n1 IS NOT NULL
-        |  UNION ALL SELECT n2, tok, 2 FROM t WHERE n2 IS NOT NULL)
-        |SELECT w1, w2, dist, count(*) AS cnt, 1000 // dist AS weight_milli
-        |FROM prs GROUP BY 1, 2, 3
-        |ORDER BY cnt DESC, w1, w2, dist LIMIT 30""".stripMargin,
-    "q410_churn_labels" ->
-      // same distinct active days, same strictly-forward 14-day lookahead
-      """WITH days AS (SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
-        |  FROM events WHERE user_id IS NOT NULL),
-        |lb AS (SELECT user_id, d, lead(d, 1) OVER (PARTITION BY user_id ORDER BY d) AS nxt
-        |  FROM days)
-        |SELECT strftime(d, '%Y-%m-%d') AS day, count(*) AS n_user_days,
-        |  CAST(sum(CASE WHEN nxt IS NULL OR date_diff('day', d, nxt) > 14
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_churned,
-        |  CAST(sum(CASE WHEN nxt IS NULL OR date_diff('day', d, nxt) > 14
-        |    THEN 1 ELSE 0 END) AS BIGINT) * 10000 // count(*) AS churn_bp
-        |FROM lb GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q411_haar_wavelet" ->
-      // same dense calendar, same 3 pairwise (sum, diff) levels
-      """WITH e AS (SELECT event_type, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d FROM events),
-        |b AS (SELECT min(d) AS d0, max(d) AS d1 FROM e),
-        |cal AS (SELECT CAST(unnest(range(0, date_diff('day', d0, d1) + 1)) AS BIGINT) AS idx FROM b),
-        |ty AS (SELECT DISTINCT event_type FROM e),
-        |daily AS (SELECT event_type, CAST(date_diff('day', b.d0, e.d) AS BIGINT) AS idx,
-        |    count(*) AS c FROM e, b GROUP BY 1, 2),
-        |dense AS (SELECT ty.event_type, cal.idx, CAST(coalesce(daily.c, 0) AS BIGINT) AS c
-        |  FROM ty CROSS JOIN cal LEFT JOIN daily
-        |  ON daily.event_type = ty.event_type AND daily.idx = cal.idx),
-        |l1 AS (SELECT event_type, idx // 2 AS idx, CAST(sum(c) AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS dcoef
-        |  FROM dense GROUP BY 1, 2),
-        |l2 AS (SELECT event_type, idx // 2 AS idx, CAST(sum(c) AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS dcoef
-        |  FROM l1 GROUP BY 1, 2),
-        |l3 AS (SELECT event_type, idx // 2 AS idx, CAST(sum(c) AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS dcoef
-        |  FROM l2 GROUP BY 1, 2),
-        |uni AS (SELECT event_type, CAST(1 AS BIGINT) AS level, idx, c AS smooth, dcoef FROM l1
-        |  UNION ALL SELECT event_type, 2, idx, c, dcoef FROM l2
-        |  UNION ALL SELECT event_type, 3, idx, c, dcoef FROM l3)
-        |SELECT event_type, level, idx, smooth, dcoef FROM uni
-        |ORDER BY event_type, level, idx""".stripMargin,
-    "q412_mutual_knn" ->
-      // same forward/backward exact scoring (q45's raw-cosine ranking),
-      // backward restricted to the forward-hit set, same bp quantization
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |xs AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 0 AND vec_id < 2000),
-        |ys AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
-        |fs AS (SELECT x.vec_id AS x, y.vec_id AS y,
-        |    list_dot_product(x.v, y.v) / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) AS cosine
-        |  FROM xs x CROSS JOIN ys y),
-        |fr AS (SELECT x, y, cosine, row_number() OVER (PARTITION BY x ORDER BY cosine DESC, y) AS rn FROM fs),
-        |fwd AS (SELECT x, y, cosine FROM fr WHERE rn = 1),
-        |bq AS (SELECT DISTINCT y FROM fwd),
-        |bs AS (SELECT b.y, x.vec_id AS bx,
-        |    list_dot_product(yv.v, x.v) / (sqrt(list_dot_product(yv.v, yv.v)) * sqrt(list_dot_product(x.v, x.v))) AS cosine
-        |  FROM bq b JOIN ys yv ON yv.vec_id = b.y CROSS JOIN xs x),
-        |br AS (SELECT y, bx, row_number() OVER (PARTITION BY y ORDER BY cosine DESC, bx) AS rn FROM bs),
-        |bwd AS (SELECT y, bx FROM br WHERE rn = 1)
-        |SELECT f.x, f.y, CAST(round(f.cosine * 10000) AS BIGINT) AS cos_bp
-        |FROM fwd f JOIN bwd ON f.y = bwd.y AND f.x = bwd.bx ORDER BY f.x""".stripMargin,
-    "q413_anova" ->
-      // same per-arm exact moments, same centi-quantized Σs²/n, same chain
-      """WITH e AS (SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS y FROM events),
-        |m AS (SELECT event_type, count(*) AS n, CAST(sum(y) AS BIGINT) AS s,
-        |    CAST(sum(y * y) AS BIGINT) AS ss FROM e GROUP BY 1),
-        |g AS (SELECT count(*) AS k, CAST(sum(n) AS BIGINT) AS nn,
-        |    CAST(sum(s) AS BIGINT) AS ts, CAST(sum(ss) AS BIGINT) AS tss,
-        |    CAST(sum(CAST(floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |      / CAST(n AS DOUBLE) * 100) AS BIGINT)) AS BIGINT) AS sg_centi
-        |  FROM m)
-        |SELECT k, nn,
-        |  (round(sg_centi / 100.0 - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE), 4) + 0.0) AS ssb,
-        |  (round(CAST(tss AS DOUBLE) - sg_centi / 100.0, 4) + 0.0) AS ssw,
-        |  (round(((sg_centi / 100.0 - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE))
-        |    / CAST(k - 1 AS DOUBLE))
-        |    / ((CAST(tss AS DOUBLE) - sg_centi / 100.0) / CAST(nn - k AS DOUBLE)), 4) + 0.0) AS f_stat
-        |FROM g""".stripMargin,
-    "q414_stratified_kfold" ->
-      // same per-stratum round-robin in (doc_id) order
-      """WITH d AS (SELECT doc_id, lang,
-        |    (row_number() OVER (PARTITION BY lang ORDER BY doc_id) - 1) % 5 AS fold
-        |  FROM documents)
-        |SELECT CAST(fold AS BIGINT) AS fold, lang, count(*) AS n
-        |FROM d GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q415_eb_shrinkage" ->
-      // same exact-integer additive-smoothing identity, same top-20 order
-      """WITH per AS (SELECT l_partkey, count(*) AS n,
-        |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS r
-        |  FROM lineitem GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nn, CAST(sum(r) AS BIGINT) AS rr FROM per)
-        |SELECT l_partkey, n, r, r * 10000 // n AS raw_bp,
-        |  (r * nn + 20 * rr) * 10000 // ((n + 20) * nn) AS shrunk_bp
-        |FROM per, tot ORDER BY shrunk_bp DESC, l_partkey LIMIT 20""".stripMargin,
-    "q416_set_cover" -> q416Sql,
-    "q417_mutual_knn_ivf" -> q417Sql,
-    "q418_mcnemar" -> {
-      val langCase = SparkEntry.langCaseOn("text")
-      s"""WITH cls AS (SELECT ($langCase) = lang AS a_ok, lang = 'en' AS b_ok FROM documents),
-         |m AS (SELECT
-         |  CAST(sum(CASE WHEN a_ok AND b_ok THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-         |  CAST(sum(CASE WHEN a_ok AND NOT b_ok THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         |  CAST(sum(CASE WHEN NOT a_ok AND b_ok THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         |  CAST(sum(CASE WHEN NOT a_ok AND NOT b_ok THEN 1 ELSE 0 END) AS BIGINT) AS n00
-         |  FROM cls)
-         |SELECT n11, b, c, n00,
-         |  CAST(CASE WHEN b + c = 0 THEN 0 ELSE (100 * (b - c) * (b - c)) // (b + c) END AS BIGINT) AS chi2_centi,
-         |  (CASE WHEN b + c = 0 THEN 0 ELSE (100 * (b - c) * (b - c)) // (b + c) END) > 384 AS significant
-         |FROM m""".stripMargin
-    },
-    "q419_shapley_attribution" ->
-      """WITH u AS (SELECT user_id,
-        |    CAST(sum(DISTINCT 1 << (CASE event_type WHEN 'click' THEN 0 WHEN 'error' THEN 1
-        |      WHEN 'purchase' THEN 2 WHEN 'signup' THEN 3 ELSE 4 END)) AS BIGINT) AS mask,
-        |    max(value) AS mx FROM events GROUP BY 1),
-        |obs AS (SELECT mask, count(*) AS cnt FROM u WHERE mx >= 300.0 GROUP BY 1),
-        |coal AS (SELECT unnest(range(0, 32)) AS sm),
-        |v AS (SELECT sm, CAST(coalesce(sum(cnt), 0) AS BIGINT) AS v
-        |  FROM coal LEFT JOIN obs ON (obs.mask & coal.sm) = obs.mask GROUP BY 1),
-        |ch AS (SELECT unnest(range(0, 5)) AS ci)
-        |SELECT CASE ci WHEN 0 THEN 'click' WHEN 1 THEN 'error' WHEN 2 THEN 'purchase'
-        |    WHEN 3 THEN 'signup' ELSE 'view' END AS channel,
-        |  CAST(sum((CASE bit_count(vs.sm) WHEN 0 THEN 24 WHEN 1 THEN 6 WHEN 2 THEN 4
-        |    WHEN 3 THEN 6 ELSE 24 END) * (vi.v - vs.v)) AS BIGINT) AS shapley_x120
-        |FROM ch JOIN v vs ON (vs.sm & (1 << ci)) = 0
-        |JOIN v vi ON vi.sm = (vs.sm | (1 << ci))
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q420_pass_at_k" ->
-      """WITH g AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS c
-        |  FROM lineitem GROUP BY 1 HAVING count(*) >= 10)
-        |SELECT l_partkey, n, c,
-        |  CASE WHEN n - c < 1 THEN CAST(1.0 AS DOUBLE) ELSE 1.0 - list_reduce(
-        |    list_transform(range(0, 1), i -> CAST(n - c - i AS DOUBLE) / CAST(n - i AS DOUBLE)),
-        |    (acc, x) -> acc * x) END AS pass_at_1,
-        |  CASE WHEN n - c < 5 THEN CAST(1.0 AS DOUBLE) ELSE 1.0 - list_reduce(
-        |    list_transform(range(0, 5), i -> CAST(n - c - i AS DOUBLE) / CAST(n - i AS DOUBLE)),
-        |    (acc, x) -> acc * x) END AS pass_at_5,
-        |  CASE WHEN n - c < 10 THEN CAST(1.0 AS DOUBLE) ELSE 1.0 - list_reduce(
-        |    list_transform(range(0, 10), i -> CAST(n - c - i AS DOUBLE) / CAST(n - i AS DOUBLE)),
-        |    (acc, x) -> acc * x) END AS pass_at_10
-        |FROM g ORDER BY l_partkey""".stripMargin,
-    "q421_cusum_control" ->
-      """WITH d AS (SELECT event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT event_type, CAST(sum(cents) AS BIGINT) AS base_sum,
-        |    CAST(count(*) AS BIGINT) AS n0
-        |  FROM d WHERE day <= '2024-01-10' GROUP BY 1),
-        |m AS (SELECT d.event_type, d.day,
-        |    CAST(20 * b.n0 * d.cents - 21 * b.base_sum AS BIGINT) AS inc, b.base_sum
-        |  FROM d JOIN b ON d.event_type = b.event_type WHERE d.day > '2024-01-10'),
-        |p0 AS (SELECT event_type, day, inc, base_sum,
-        |    sum(inc) OVER (PARTITION BY event_type ORDER BY day) AS p FROM m),
-        |p AS (SELECT event_type, day, inc, base_sum, p,
-        |    min(p) OVER (PARTITION BY event_type ORDER BY day) AS mp FROM p0)
-        |SELECT event_type, day, inc, CAST(p - least(0, mp) AS BIGINT) AS s_scaled,
-        |  (p - least(0, mp)) > 80 * base_sum AS alarm
-        |FROM p ORDER BY event_type, day""".stripMargin,
-    "q422_decision_stump" ->
-      """WITH bins AS (SELECT CAST(round(p_retailprice * 100, 0) AS BIGINT) // 10000 AS bin,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CASE WHEN p_size >= 25 THEN 1 ELSE 0 END) AS BIGINT) AS pos
-        |  FROM part GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt, CAST(sum(pos) AS BIGINT) AS pt FROM bins),
-        |pre AS (SELECT bin,
-        |    CAST(sum(n) OVER (ORDER BY bin) AS BIGINT) AS nl,
-        |    CAST(sum(pos) OVER (ORDER BY bin) AS BIGINT) AS pl
-        |  FROM bins),
-        |sc AS (SELECT bin, nl, pl, nt - nl AS nr, pt - pl AS pr,
-        |    pl * pl + (nl - pl) * (nl - pl) AS a,
-        |    pr * pr + ((nt - nl) - pr) * ((nt - nl) - pr) AS bb
-        |  FROM pre, tot WHERE nl < nt)
-        |SELECT bin AS split_bin, nl, pl, CAST(nr AS BIGINT) AS nr, CAST(pr AS BIGINT) AS pr,
-        |  CAST((CAST(1000000 AS HUGEINT) * (CAST(a AS HUGEINT) * nr + CAST(bb AS HUGEINT) * nl))
-        |    // (CAST(nl AS HUGEINT) * nr) AS BIGINT) AS score_ppm
-        |FROM sc ORDER BY score_ppm DESC, split_bin LIMIT 10""".stripMargin,
-    "q423_uplift_qini" ->
-      """WITH u AS (SELECT user_id,
-        |    CAST(sum(CASE WHEN strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') <= '2024-01-15'
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS score,
-        |    CAST(max(CASE WHEN strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') > '2024-01-15'
-        |      AND value >= 300.0 THEN 1 ELSE 0 END) AS BIGINT) AS conv,
-        |    user_id % 2 AS arm
-        |  FROM events GROUP BY user_id),
-        |d AS (SELECT *, CAST(ntile(10) OVER (ORDER BY score DESC, user_id) AS BIGINT) AS decile FROM u),
-        |g AS (SELECT decile,
-        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-        |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-        |    CAST(sum(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS ct,
-        |    CAST(sum(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS cc
-        |  FROM d GROUP BY 1)
-        |SELECT decile, nt, nc, ct, cc,
-        |  CAST(sum(ct) OVER (ORDER BY decile) * sum(nc) OVER (ORDER BY decile)
-        |    - sum(cc) OVER (ORDER BY decile) * sum(nt) OVER (ORDER BY decile) AS BIGINT) AS qini_x
-        |FROM g ORDER BY decile""".stripMargin,
-    "q424_bleu" ->
-      """WITH pr AS (SELECT c.doc_id AS pair_id,
-        |    regexp_split_to_array(c.text, ' ') AS ct, regexp_split_to_array(r.text, ' ') AS rt
-        |  FROM documents c JOIN documents r ON c.text = r.text || ' dup'),
-        |ns AS (SELECT unnest(range(1, 5)) AS n),
-        |cg0 AS (SELECT pair_id, n, ct, unnest(range(1, len(ct) - n + 2)) AS i
-        |  FROM pr, ns WHERE len(ct) >= n),
-        |cg AS (SELECT pair_id, n,
-        |    array_to_string(ct[CAST(i AS BIGINT):CAST(i + n - 1 AS BIGINT)], ' ') AS g,
-        |    count(*) AS cnt FROM cg0 GROUP BY 1, 2, 3),
-        |rg0 AS (SELECT pair_id, n, rt, unnest(range(1, len(rt) - n + 2)) AS i
-        |  FROM pr, ns WHERE len(rt) >= n),
-        |rg AS (SELECT pair_id, n,
-        |    array_to_string(rt[CAST(i AS BIGINT):CAST(i + n - 1 AS BIGINT)], ' ') AS g,
-        |    count(*) AS rcnt FROM rg0 GROUP BY 1, 2, 3),
-        |mm AS (SELECT cg.n, CAST(coalesce(sum(least(cg.cnt, rg.rcnt)), 0) AS BIGINT) AS m
-        |  FROM cg JOIN rg ON cg.pair_id = rg.pair_id AND cg.n = rg.n AND cg.g = rg.g
-        |  GROUP BY 1),
-        |tt AS (SELECT n, CAST(sum(cnt) AS BIGINT) AS tot FROM cg GROUP BY 1),
-        |agg AS (SELECT
-        |    max(CASE WHEN n = 1 THEN coalesce(m, 0) END) AS match1, max(CASE WHEN n = 1 THEN tot END) AS total1,
-        |    max(CASE WHEN n = 2 THEN coalesce(m, 0) END) AS match2, max(CASE WHEN n = 2 THEN tot END) AS total2,
-        |    max(CASE WHEN n = 3 THEN coalesce(m, 0) END) AS match3, max(CASE WHEN n = 3 THEN tot END) AS total3,
-        |    max(CASE WHEN n = 4 THEN coalesce(m, 0) END) AS match4, max(CASE WHEN n = 4 THEN tot END) AS total4
-        |  FROM tt LEFT JOIN mm USING (n)),
-        |ln2 AS (SELECT CAST(sum(len(ct)) AS BIGINT) AS c_len, CAST(sum(len(rt)) AS BIGINT) AS r_len FROM pr)
-        |SELECT match1, total1, match2, total2, match3, total3, match4, total4,
-        |  (CASE WHEN c_len >= r_len THEN CAST(1.0 AS DOUBLE)
-        |    ELSE exp(1.0 - CAST(r_len AS DOUBLE) / CAST(c_len AS DOUBLE)) END) *
-        |  sqrt(sqrt((CAST(match1 AS DOUBLE) / CAST(total1 AS DOUBLE)) *
-        |    (CAST(match2 AS DOUBLE) / CAST(total2 AS DOUBLE)) *
-        |    (CAST(match3 AS DOUBLE) / CAST(total3 AS DOUBLE)) *
-        |    (CAST(match4 AS DOUBLE) / CAST(total4 AS DOUBLE)))) AS bleu
-        |FROM agg, ln2""".stripMargin,
-    "q425_sort_for_compression" -> {
-      def runsSql(keyExpr: String, keyName: String) =
-        s"""SELECT '$keyName' AS sort_key,
-           |  CAST(sum(CASE WHEN pp IS NULL OR pp <> l_partkey THEN 1 ELSE 0 END) AS BIGINT) AS runs_partkey,
-           |  CAST(sum(CASE WHEN ps IS NULL OR ps <> l_suppkey THEN 1 ELSE 0 END) AS BIGINT) AS runs_suppkey,
-           |  CAST(sum(CASE WHEN pf IS NULL OR pf <> l_returnflag THEN 1 ELSE 0 END) AS BIGINT) AS runs_returnflag,
-           |  CAST(sum(CASE WHEN pl IS NULL OR pl <> l_linestatus THEN 1 ELSE 0 END) AS BIGINT) AS runs_linestatus
-           |FROM (SELECT l_partkey, l_suppkey, l_returnflag, l_linestatus,
-           |  lag(l_partkey) OVER w AS pp, lag(l_suppkey) OVER w AS ps,
-           |  lag(l_returnflag) OVER w AS pf, lag(l_linestatus) OVER w AS pl
-           |  FROM (SELECT *, $keyExpr AS __k, l_orderkey // 4096 AS __b FROM lineitem)
-           |  WINDOW w AS (PARTITION BY __k, __b
-           |    ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, l_returnflag, l_linestatus))""".stripMargin
-      Seq(
-        runsSql("CAST(l_returnflag AS VARCHAR)", "l_returnflag"),
-        runsSql("CAST(l_linestatus AS VARCHAR)", "l_linestatus"),
-        runsSql("strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m')", "ship_month"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY sort_key")
-    },
-    "q426_hierarchy_paths" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT 'c:' || c_custkey AS node, 'n:' || c_nationkey AS parent FROM customer
-        |  UNION ALL SELECT 'n:' || n_nationkey, 'r:' || n_regionkey FROM nation
-        |  UNION ALL SELECT 'r:' || r_regionkey, NULL FROM region),
-        |rec AS (
-        |  SELECT node, node AS cur, 0 AS depth, node AS path FROM e
-        |  UNION ALL
-        |  SELECT r.node, e.parent, r.depth + 1, r.path || '/' || e.parent
-        |  FROM rec r JOIN e ON e.node = r.cur WHERE e.parent IS NOT NULL)
-        |SELECT r.node, r.cur AS root, CAST(r.depth AS BIGINT) AS depth, r.path
-        |FROM rec r JOIN e t ON t.node = r.cur
-        |WHERE t.parent IS NULL ORDER BY r.node""".stripMargin,
-    "q427_policy_mask" ->
-      """SELECT * FROM (
-        |  SELECT 'admin' AS role, c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-        |  UNION ALL
-        |  SELECT 'analyst', c_custkey, substr(c_name, 1, 9) || '***',
-        |    CAST(NULL AS DOUBLE), c_mktsegment
-        |  FROM customer WHERE c_mktsegment <> 'AUTOMOBILE'
-        |  UNION ALL
-        |  SELECT 'support', c_custkey, md5(c_name), c_acctbal, c_mktsegment FROM customer)
-        |ORDER BY role, c_custkey""".stripMargin,
-    "q428_merkle_ranges" ->
-      """WITH rows0 AS (SELECT o_orderkey AS k,
-        |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents, o_orderstatus
-        |  FROM orders),
-        |b AS (SELECT k, md5(k || '|' || cents || '|' || o_orderstatus) AS rh FROM rows0),
-        |c AS (SELECT k, md5(k || '|' ||
-        |    (CASE WHEN k % 997 = 0 THEN cents + 100 ELSE cents END) || '|' || o_orderstatus) AS rh
-        |  FROM rows0 WHERE k % 1009 <> 0),
-        |b0 AS (SELECT k // 512 AS node_id, md5(string_agg(rh, '' ORDER BY k)) AS h, 0 AS level FROM b GROUP BY 1),
-        |b1 AS (SELECT node_id // 32 AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 1 AS level FROM b0 GROUP BY 1),
-        |b2 AS (SELECT CAST(0 AS BIGINT) AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 2 AS level FROM b1),
-        |c0 AS (SELECT k // 512 AS node_id, md5(string_agg(rh, '' ORDER BY k)) AS h, 0 AS level FROM c GROUP BY 1),
-        |c1 AS (SELECT node_id // 32 AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 1 AS level FROM c0 GROUP BY 1),
-        |c2 AS (SELECT CAST(0 AS BIGINT) AS node_id, md5(string_agg(h, '' ORDER BY node_id)) AS h, 2 AS level FROM c1),
-        |bt AS (SELECT * FROM b0 UNION ALL SELECT * FROM b1 UNION ALL SELECT * FROM b2),
-        |ct AS (SELECT * FROM c0 UNION ALL SELECT * FROM c1 UNION ALL SELECT * FROM c2)
-        |SELECT CAST(coalesce(bt.level, ct.level) AS BIGINT) AS level,
-        |  CAST(coalesce(bt.node_id, ct.node_id) AS BIGINT) AS node_id,
-        |  bt.h AS base_h, ct.h AS cur_h
-        |FROM bt FULL OUTER JOIN ct ON bt.level = ct.level AND bt.node_id = ct.node_id
-        |WHERE bt.h IS DISTINCT FROM ct.h
-        |ORDER BY level DESC, node_id""".stripMargin,
-    "q429_mannwhitney_u" ->
-      """WITH e AS (SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS cents,
-        |    user_id % 2 AS arm FROM events),
-        |g AS (SELECT event_type, cents, CAST(count(*) AS BIGINT) AS t,
-        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS t1
-        |  FROM e GROUP BY 1, 2),
-        |r AS (SELECT *, coalesce(sum(t) OVER (PARTITION BY event_type ORDER BY cents
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s FROM g),
-        |p AS (SELECT event_type, CAST(sum(t1 * (2 * s + t + 1)) AS BIGINT) AS r1_2,
-        |    CAST(sum(t1) AS BIGINT) AS n1, CAST(sum(t - t1) AS BIGINT) AS n2
-        |  FROM r GROUP BY 1)
-        |SELECT event_type, n1, n2, CAST(r1_2 - n1 * (n1 + 1) AS BIGINT) AS u2,
-        |  CAST((CAST(1000000 AS HUGEINT) * (r1_2 - n1 * (n1 + 1)))
-        |    // (CAST(n1 AS HUGEINT) * n2) AS BIGINT) AS rb_plus1_ppm
-        |FROM p ORDER BY event_type""".stripMargin,
-    "q430_kcenter_seeds" -> {
-      // 7 chained MATERIALIZED greedy rounds (the q416/q422 oracle
-      // technique); dist^2 via the same dot identity, rounded 6dp before
-      // the (d DESC, vec_id) argmax
-      val rounds = new StringBuilder(
-        "c0 AS MATERIALIZED (SELECT 0 AS r, CAST(0 AS BIGINT) AS cid, CAST(NULL AS DOUBLE) AS radius)")
-      (1 to 7).foreach { r =>
-        val prev = (0 until r).map(i => s"SELECT cid FROM c$i").mkString(" UNION ALL ")
-        rounds.append(
-          s""",
-             |d$r AS MATERIALIZED (SELECT p.vec_id, min((round(
-             |    list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(p.embedding AS DOUBLE[]))
-             |    - 2 * list_dot_product(CAST(p.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))
-             |    + list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])), 6) + 0.0)) AS d
-             |  FROM embeddings p CROSS JOIN (SELECT e.embedding FROM embeddings e
-             |    WHERE e.vec_id IN ($prev)) c GROUP BY 1),
-             |c$r AS MATERIALIZED (SELECT $r AS r, vec_id AS cid, d AS radius FROM d$r
-             |  ORDER BY d DESC, vec_id LIMIT 1)""".stripMargin)
-      }
-      val union = (0 to 7).map(i => s"SELECT * FROM c$i").mkString(" UNION ALL ")
-      s"""WITH ${rounds.result()}
-         |SELECT CAST(r AS BIGINT) AS r, cid, (radius + 0.0) AS radius
-         |FROM ($union) ORDER BY r""".stripMargin
-    },
-    "q431_dtw_distance" ->
-      // row-major linearized DP: one recursive CTE step per cell, state =
-      // (prev row P, current row N) as BIGINT lists; 31*31 steps per pair.
-      // (The engine folds the same grid via nested aggregate() lambdas —
-      // DuckDB's list_reduce cannot carry a list accumulator, hence the
-      // linearization here.)
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
-        |    count(*) AS x FROM events GROUP BY 1, 2),
-        |cal AS (SELECT unnest(range(1, 32)) AS day),
-        |types AS (SELECT DISTINCT event_type FROM d),
-        |dense AS (SELECT t.event_type, c.day, coalesce(d.x, 0) AS x
-        |  FROM types t CROSS JOIN cal c
-        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
-        |ser AS (SELECT event_type, list(x ORDER BY day) AS xs FROM dense GROUP BY 1),
-        |pairs AS (SELECT a.event_type AS ta, b.event_type AS tb, a.xs AS xa, b.xs AS xb
-        |  FROM ser a JOIN ser b ON a.event_type < b.event_type),
-        |rec AS (
-        |  SELECT ta, tb, xa, xb, CAST(1 AS BIGINT) AS s,
-        |    CAST([] AS BIGINT[]) AS p,
-        |    CAST([abs(xa[1] - xb[1])] AS BIGINT[]) AS n
-        |  FROM pairs
-        |  UNION ALL
-        |  SELECT ta, tb, xa, xb, s + 1,
-        |    CASE WHEN (s % 31) = 0 THEN n ELSE p END,
-        |    CASE WHEN (s % 31) = 0
-        |      THEN [CASE WHEN abs((s // 31 + 1) - 1) <= 3
-        |        THEN abs(xa[CAST(s // 31 + 1 AS BIGINT)] - xb[1]) + n[1]
-        |        ELSE 1000000000000000 END]
-        |      ELSE n || [CASE WHEN abs((s // 31 + 1) - (s % 31 + 1)) <= 3
-        |        THEN abs(xa[CAST(s // 31 + 1 AS BIGINT)] - xb[CAST(s % 31 + 1 AS BIGINT)]) +
-        |          least(CASE WHEN s // 31 = 0 THEN 1000000000000000 ELSE p[CAST(s % 31 + 1 AS BIGINT)] END,
-        |                CASE WHEN s // 31 = 0 OR s % 31 = 0 THEN 1000000000000000 ELSE p[CAST(s % 31 AS BIGINT)] END,
-        |                n[CAST(s % 31 AS BIGINT)])
-        |        ELSE 1000000000000000 END]
-        |      END
-        |  FROM rec WHERE s < 31 * 31)
-        |SELECT ta, tb, n[31] AS dtw FROM rec WHERE s = 31 * 31 ORDER BY ta, tb""".stripMargin,
-    "q432_fellegi_sunter" -> {
-      def ratioSql(k: Int) =
-        s"""CASE WHEN f$k THEN
-           |  CASE WHEN mt = 0 OR ut = 0 OR ua$k = 0 THEN CAST(NULL AS DOUBLE)
-           |    ELSE (CAST(ma$k AS DOUBLE) / CAST(mt AS DOUBLE)) / (CAST(ua$k AS DOUBLE) / CAST(ut AS DOUBLE)) END
-           |ELSE
-           |  CASE WHEN mt = 0 OR ut = 0 OR ut = ua$k THEN CAST(NULL AS DOUBLE)
-           |    ELSE (CAST(mt - ma$k AS DOUBLE) / CAST(mt AS DOUBLE)) / (CAST(ut - ua$k AS DOUBLE) / CAST(ut AS DOUBLE)) END
-           |END""".stripMargin
-      s"""WITH d AS (SELECT doc_id, text, lang, source, n_chars, n_chars // 25 AS bucket
-         |  FROM documents WHERE doc_id < 400),
-         |cands AS (SELECT a.lang = b.lang AS f1, a.source = b.source AS f2,
-         |    abs(a.n_chars - b.n_chars) <= 4 AS f3,
-         |    b.text = a.text || ' dup' AS is_match
-         |  FROM d a JOIN d b ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-         |g AS (SELECT
-         |    CAST(sum(CASE WHEN is_match THEN 1 ELSE 0 END) AS BIGINT) AS mt,
-         |    CAST(sum(CASE WHEN NOT is_match THEN 1 ELSE 0 END) AS BIGINT) AS ut,
-         |    CAST(sum(CASE WHEN is_match AND f1 THEN 1 ELSE 0 END) AS BIGINT) AS ma1,
-         |    CAST(sum(CASE WHEN NOT is_match AND f1 THEN 1 ELSE 0 END) AS BIGINT) AS ua1,
-         |    CAST(sum(CASE WHEN is_match AND f2 THEN 1 ELSE 0 END) AS BIGINT) AS ma2,
-         |    CAST(sum(CASE WHEN NOT is_match AND f2 THEN 1 ELSE 0 END) AS BIGINT) AS ua2,
-         |    CAST(sum(CASE WHEN is_match AND f3 THEN 1 ELSE 0 END) AS BIGINT) AS ma3,
-         |    CAST(sum(CASE WHEN NOT is_match AND f3 THEN 1 ELSE 0 END) AS BIGINT) AS ua3
-         |  FROM cands)
-         |SELECT f1, f2, f3, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN is_match THEN 1 ELSE 0 END) AS BIGINT) AS n_match,
-         |  ((${ratioSql(1)}) * (${ratioSql(2)})) * (${ratioSql(3)}) AS weight
-         |FROM cands, g GROUP BY f1, f2, f3, mt, ut, ma1, ua1, ma2, ua2, ma3, ua3
-         |ORDER BY f1, f2, f3""".stripMargin
-    },
-    "q433_holt_winters" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
-        |    count(*) AS x FROM events GROUP BY 1, 2),
-        |cal AS (SELECT unnest(range(1, 32)) AS day),
-        |types AS (SELECT DISTINCT event_type FROM d),
-        |dense AS (SELECT t.event_type, c.day, CAST(coalesce(d.x, 0) AS DOUBLE) AS x
-        |  FROM types t CROSS JOIN cal c
-        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
-        |ser AS (SELECT event_type, list(x ORDER BY day) AS xs FROM dense GROUP BY 1),
-        |init AS (SELECT event_type, xs,
-        |    (xs[1] + xs[2] + xs[3] + xs[4] + xs[5] + xs[6] + xs[7]) / 7.0 AS m1,
-        |    (xs[8] + xs[9] + xs[10] + xs[11] + xs[12] + xs[13] + xs[14]) / 7.0 AS m2
-        |  FROM ser),
-        |rec AS (
-        |  SELECT event_type, xs, CAST(7 AS BIGINT) AS t, m1 AS lvl, (m2 - m1) / 7.0 AS tr,
-        |    [xs[1] - m1, xs[2] - m1, xs[3] - m1, xs[4] - m1, xs[5] - m1, xs[6] - m1, xs[7] - m1] AS s
-        |  FROM init
-        |  UNION ALL
-        |  SELECT event_type, xs, t + 1,
-        |    0.3 * (xs[CAST(t + 1 AS BIGINT)] - s[1]) + 0.7 * (lvl + tr),
-        |    0.1 * ((0.3 * (xs[CAST(t + 1 AS BIGINT)] - s[1]) + 0.7 * (lvl + tr)) - lvl) + 0.9 * tr,
-        |    s[2:7] || [0.2 * (xs[CAST(t + 1 AS BIGINT)] - (0.3 * (xs[CAST(t + 1 AS BIGINT)] - s[1]) + 0.7 * (lvl + tr))) + 0.8 * s[1]]
-        |  FROM rec WHERE t < 31)
-        |SELECT event_type, (round(lvl, 4) + 0.0) AS level, (round(tr, 4) + 0.0) AS trend,
-        |  (round(lvl + tr + s[1], 4) + 0.0) AS forecast
-        |FROM rec WHERE t = 31 ORDER BY event_type""".stripMargin,
-    "q434_theilsen_slope" ->
-      """WITH d AS (SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
-        |    count(*) AS x FROM events GROUP BY 1, 2),
-        |cal AS (SELECT unnest(range(1, 32)) AS day),
-        |types AS (SELECT DISTINCT event_type FROM d),
-        |dense AS (SELECT t.event_type, c.day AS i, coalesce(d.x, 0) AS x
-        |  FROM types t CROSS JOIN cal c
-        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
-        |p AS (SELECT a.event_type, a.i AS i, b.i AS j,
-        |    CAST(floor(1000000 * (CAST(b.x - a.x AS DOUBLE) / CAST(b.i - a.i AS DOUBLE))) AS BIGINT) AS slope_q
-        |  FROM dense a JOIN dense b ON a.event_type = b.event_type AND a.i < b.i),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY slope_q, i, j) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS np FROM p)
-        |SELECT event_type, CAST(np AS BIGINT) AS n_pairs, slope_q AS median_slope_q
-        |FROM r WHERE rn = CAST(ceil(np / 2.0) AS BIGINT) ORDER BY event_type""".stripMargin,
-    "q435_delta_method_ci" ->
-      """WITH u AS (SELECT event_type, user_id % 2 AS arm, user_id,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS x,
-        |    CAST(count(*) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2, 3),
-        |g AS (SELECT event_type, CAST(arm AS BIGINT) AS arm, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    sum(CAST(x AS HUGEINT) * x) AS sxx, sum(CAST(y AS HUGEINT) * y) AS syy,
-        |    sum(CAST(x AS HUGEINT) * y) AS sxy
-        |  FROM u GROUP BY 1, 2 HAVING count(*) >= 2),
-        |v AS (SELECT *, CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r FROM g),
-        |w AS (SELECT *,
-        |    (((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE))
-        |     - (2.0 * r) * ((CAST(sxy AS DOUBLE) - (CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE))
-        |     + (r * r) * ((CAST(syy AS DOUBLE) - (CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) / CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE)))
-        |    / (CAST(n AS DOUBLE) * ((CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))) AS vr
-        |  FROM v)
-        |SELECT event_type, arm, n, r, vr, 1.96 * sqrt(vr) AS ci_half
-        |FROM w ORDER BY event_type, arm""".stripMargin,
-    "q436_mips_transform" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, v -> CAST(v AS DOUBLE) * ((1 + (vec_id % 5)) / 5.0)) AS emb
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS qid, emb AS qe FROM e WHERE vec_id < 8),
-        |ex AS (SELECT qid, e.vec_id, (round(list_dot_product(emb, qe), 6) + 0.0) AS ip
-        |  FROM e CROSS JOIN q WHERE e.vec_id <> qid),
-        |exr AS (SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY ip DESC, vec_id) AS rn FROM ex),
-        |exact AS (SELECT qid, vec_id AS exact_id FROM exr WHERE rn = 1),
-        |m2 AS (SELECT max(list_dot_product(emb, emb)) AS m2 FROM e),
-        |aug AS (SELECT vec_id, emb || [sqrt(m2.m2 - list_dot_product(emb, emb))] AS emb
-        |  FROM e, m2),
-        |augq AS (SELECT vec_id AS qid, emb || [CAST(0.0 AS DOUBLE)] AS qe
-        |  FROM e WHERE vec_id < 8),
-        |cosd AS (SELECT qid, a.vec_id,
-        |    list_dot_product(a.emb, qe) /
-        |      (sqrt(list_dot_product(a.emb, a.emb)) * sqrt(list_dot_product(qe, qe))) AS cosine
-        |  FROM aug a CROSS JOIN augq WHERE a.vec_id <> qid),
-        |cosr AS (SELECT qid, vec_id,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rn FROM cosd),
-        |mips AS (SELECT qid, vec_id AS mips_id FROM cosr WHERE rn = 1)
-        |SELECT exact.qid, exact_id, mips_id, exact_id = mips_id AS agree
-        |FROM exact JOIN mips ON exact.qid = mips.qid ORDER BY exact.qid""".stripMargin,
-    "q437_simpson_flags" ->
-      """WITH cust AS (SELECT c_custkey, c_mktsegment,
-        |    min(CAST(round(c_acctbal * 100, 0) AS BIGINT)) AS x,
-        |    CAST(count(o_orderkey) AS BIGINT) AS y
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey GROUP BY 1, 2),
-        |per AS (SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    sum(CAST(x AS HUGEINT) * y) AS sxy
-        |  FROM cust GROUP BY 1),
-        |per2 AS (SELECT *, CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS cov_num FROM per),
-        |pooled AS (SELECT CAST(count(*) AS BIGINT) AS pn, CAST(sum(x) AS BIGINT) AS psx,
-        |    CAST(sum(y) AS BIGINT) AS psy, sum(CAST(x AS HUGEINT) * y) AS psxy FROM cust),
-        |pooled2 AS (SELECT CAST(pn AS HUGEINT) * psxy - CAST(psx AS HUGEINT) * psy AS pooled_num FROM pooled)
-        |SELECT c_mktsegment, n,
-        |  CAST(sign(CAST(cov_num AS DOUBLE)) AS BIGINT) AS stratum_sign,
-        |  CAST(sign(CAST(pooled_num AS DOUBLE)) AS BIGINT) AS pooled_sign,
-        |  sign(CAST(cov_num AS DOUBLE)) <> sign(CAST(pooled_num AS DOUBLE)) AS flipped
-        |FROM per2, pooled2 ORDER BY c_mktsegment""".stripMargin,
-    "q438_lof" ->
-      // the same three staged kNN closures; reach/lrd folds via
-      // list(... ORDER BY d, o) + list_reduce (left fold = the engine's
-      // aggregate() with a 0.0 seed — 0.0 + x is exact)
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |probes AS (SELECT vec_id, v FROM e WHERE vec_id < 32),
-        |dA AS (SELECT p.vec_id AS q, c.vec_id AS o, (round(
-        |    list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.v) + list_dot_product(c.v, c.v), 6) + 0.0) AS d
-        |  FROM probes p CROSS JOIN e c WHERE c.vec_id <> p.vec_id),
-        |rA AS (SELECT *, row_number() OVER (PARTITION BY q ORDER BY d, o) AS rn FROM dA),
-        |nA AS (SELECT q, o, d FROM rA WHERE rn <= 5),
-        |q2 AS (SELECT DISTINCT vec_id FROM (SELECT q AS vec_id FROM nA UNION ALL SELECT o FROM nA)),
-        |e2 AS (SELECT e.vec_id, v FROM e JOIN q2 USING (vec_id)),
-        |dB AS (SELECT p.vec_id AS q, c.vec_id AS o, (round(
-        |    list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.v) + list_dot_product(c.v, c.v), 6) + 0.0) AS d
-        |  FROM e2 p CROSS JOIN e c WHERE c.vec_id <> p.vec_id),
-        |rB AS (SELECT *, row_number() OVER (PARTITION BY q ORDER BY d, o) AS rn FROM dB),
-        |nB AS (SELECT q, o, d FROM rB WHERE rn <= 5),
-        |q3 AS (SELECT DISTINCT o AS vec_id FROM nB),
-        |e3 AS (SELECT e.vec_id, v FROM e JOIN q3 USING (vec_id)),
-        |dC AS (SELECT p.vec_id AS q, c.vec_id AS o, (round(
-        |    list_dot_product(p.v, p.v) - 2 * list_dot_product(p.v, c.v) + list_dot_product(c.v, c.v), 6) + 0.0) AS d
-        |  FROM e3 p CROSS JOIN e c WHERE c.vec_id <> p.vec_id),
-        |rC AS (SELECT q, d, row_number() OVER (PARTITION BY q ORDER BY d, o) AS rn FROM dC),
-        |kd AS (SELECT q AS vec_id, d AS kdist FROM rC WHERE rn = 5),
-        |reach AS (SELECT nB.q, nB.o, nB.d, greatest(kd.kdist, nB.d) AS rd
-        |  FROM nB JOIN kd ON kd.vec_id = nB.o),
-        |lrd AS (SELECT q AS vec_id,
-        |    5.0 / list_reduce(list(rd ORDER BY d, o), (a, b) -> a + b) AS lrd
-        |  FROM reach GROUP BY q),
-        |lof AS (SELECT nA.q, (list_reduce(list(lo.lrd ORDER BY nA.d, nA.o), (a, b) -> a + b) / 5.0)
-        |      / max(lp.lrd) AS lof
-        |  FROM nA JOIN lrd lo ON lo.vec_id = nA.o JOIN lrd lp ON lp.vec_id = nA.q
-        |  GROUP BY nA.q)
-        |SELECT q AS vec_id, lof FROM lof ORDER BY vec_id""".stripMargin,
-    "q439_cohens_d" ->
-      """WITH m AS (SELECT event_type,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN user_id % 2 = 1 THEN CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS BIGINT) AS sx1,
-        |    CAST(sum(CASE WHEN user_id % 2 = 0 THEN CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS BIGINT) AS sx0,
-        |    sum(CASE WHEN user_id % 2 = 1 THEN CAST(CAST(round(value * 100, 0) AS BIGINT) AS HUGEINT) * CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS sxx1,
-        |    sum(CASE WHEN user_id % 2 = 0 THEN CAST(CAST(round(value * 100, 0) AS BIGINT) AS HUGEINT) * CAST(round(value * 100, 0) AS BIGINT) ELSE 0 END) AS sxx0
-        |  FROM events GROUP BY 1
-        |  HAVING sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) >= 2
-        |    AND sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) >= 2),
-        |d AS (SELECT *,
-        |    ((CAST(sx1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - (CAST(sx0 AS DOUBLE) / CAST(n0 AS DOUBLE)))
-        |    / sqrt(((CAST(sxx1 AS DOUBLE) - (CAST(sx1 AS DOUBLE) * CAST(sx1 AS DOUBLE)) / CAST(n1 AS DOUBLE))
-        |    + (CAST(sxx0 AS DOUBLE) - (CAST(sx0 AS DOUBLE) * CAST(sx0 AS DOUBLE)) / CAST(n0 AS DOUBLE)))
-        |    / CAST(n1 + n0 - 2 AS DOUBLE)) AS d
-        |  FROM m)
-        |SELECT event_type, n1, n0, d,
-        |  d * (1.0 - 3.0 / CAST(4 * (n1 + n0) - 9 AS DOUBLE)) AS hedges_g
-        |FROM d ORDER BY event_type""".stripMargin,
-    "q440_levene_bf" ->
-      """WITH ev AS (SELECT event_type, CAST(round(value * 100, 0) AS BIGINT) AS x,
-        |    user_id % 2 AS arm FROM events),
-        |hist AS (SELECT event_type, arm, x, CAST(count(*) AS BIGINT) AS c
-        |  FROM ev GROUP BY 1, 2, 3),
-        |np AS (SELECT event_type, arm, CAST(count(*) AS BIGINT) AS n FROM ev GROUP BY 1, 2),
-        |cum AS (SELECT *, sum(c) OVER (PARTITION BY event_type, arm ORDER BY x) AS hi FROM hist),
-        |cum2 AS (SELECT *, hi - c + 1 AS lo FROM cum),
-        |med AS (SELECT cum2.event_type, cum2.arm,
-        |    CAST(sum(CASE WHEN lo <= (n + 1) // 2 AND (n + 1) // 2 <= hi THEN x ELSE 0 END)
-        |      + sum(CASE WHEN lo <= (n + 2) // 2 AND (n + 2) // 2 <= hi THEN x ELSE 0 END) AS BIGINT) AS med2
-        |  FROM cum2 JOIN np ON np.event_type = cum2.event_type AND np.arm = cum2.arm
-        |  GROUP BY 1, 2),
-        |z AS (SELECT ev.event_type, ev.arm, abs(2 * x - med2) AS z
-        |  FROM ev JOIN med ON med.event_type = ev.event_type AND med.arm = ev.arm),
-        |g AS (SELECT event_type,
-        |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN arm = 1 THEN z ELSE 0 END) AS BIGINT) AS sz1,
-        |    CAST(sum(CASE WHEN arm = 0 THEN z ELSE 0 END) AS BIGINT) AS sz0,
-        |    sum(CASE WHEN arm = 1 THEN CAST(z AS HUGEINT) * z ELSE 0 END) AS szz1,
-        |    sum(CASE WHEN arm = 0 THEN CAST(z AS HUGEINT) * z ELSE 0 END) AS szz0
-        |  FROM z GROUP BY 1
-        |  HAVING sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) >= 2
-        |    AND sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) >= 2),
-        |f AS (SELECT *,
-        |    (CAST(szz1 AS DOUBLE) - (CAST(sz1 AS DOUBLE) * CAST(sz1 AS DOUBLE)) / CAST(n1 AS DOUBLE))
-        |    + (CAST(szz0 AS DOUBLE) - (CAST(sz0 AS DOUBLE) * CAST(sz0 AS DOUBLE)) / CAST(n0 AS DOUBLE)) AS ssw,
-        |    CAST(n1 AS DOUBLE) * (((CAST(sz1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE))) * ((CAST(sz1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE))))
-        |    + CAST(n0 AS DOUBLE) * (((CAST(sz0 AS DOUBLE) / CAST(n0 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE))) * ((CAST(sz0 AS DOUBLE) / CAST(n0 AS DOUBLE)) - ((CAST(sz1 AS DOUBLE) + CAST(sz0 AS DOUBLE)) / CAST(n1 + n0 AS DOUBLE)))) AS ssb
-        |  FROM g)
-        |SELECT event_type, n1, n0,
-        |  CASE WHEN ssw = 0.0 THEN CAST(NULL AS DOUBLE)
-        |    ELSE (ssb * CAST(n1 + n0 - 2 AS DOUBLE)) / ssw END AS f_bf
-        |FROM f ORDER BY event_type""".stripMargin,
-    "q441_ordinal_patterns" ->
-      """WITH d AS (SELECT event_type, CAST(strftime(CAST(ts AS TIMESTAMP), '%d') AS BIGINT) AS day,
-        |    count(*) AS x FROM events GROUP BY 1, 2),
-        |cal AS (SELECT unnest(range(1, 32)) AS day),
-        |types AS (SELECT DISTINCT event_type FROM d),
-        |dense AS (SELECT t.event_type, c.day, coalesce(d.x, 0) AS x
-        |  FROM types t CROSS JOIN cal c
-        |  LEFT JOIN d ON d.event_type = t.event_type AND d.day = c.day),
-        |w AS (SELECT event_type, day, x AS x0,
-        |    lead(x, 1) OVER (PARTITION BY event_type ORDER BY day) AS x1,
-        |    lead(x, 2) OVER (PARTITION BY event_type ORDER BY day) AS x2
-        |  FROM dense),
-        |codes AS (SELECT event_type,
-        |    CAST(4 * CAST((x0 < x1 OR (x0 = x1 AND 0 < 1)) AS INT)
-        |      + 2 * CAST((x0 < x2 OR (x0 = x2 AND 0 < 2)) AS INT)
-        |      + CAST((x1 < x2 OR (x1 = x2 AND 1 < 2)) AS INT) AS BIGINT) AS code
-        |  FROM w WHERE day <= 29)
-        |SELECT event_type, code, CAST(count(*) AS BIGINT) AS cnt
-        |FROM codes GROUP BY 1, 2 ORDER BY event_type, code""".stripMargin,
-    "q457_quantile_merge" ->
-      // the summary-merge recursion (error bound pinned by StatsSpec's
-      // "q457: summary estimates carry the equi-depth rank-error bound"):
-      // per-shard CDF, 32 exact-rank bounds with integer weights, merged
-      // weighted CDF vs the exact global CDF, ceil-rank targets
-      """WITH ev AS (SELECT event_id % 8 AS shard,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-        |hist AS (SELECT shard, cents, count(*) AS c FROM ev GROUP BY 1, 2),
-        |cum AS (SELECT shard, cents, c,
-        |    sum(c) OVER (PARTITION BY shard ORDER BY cents) AS cr,
-        |    sum(c) OVER (PARTITION BY shard) AS ns
-        |  FROM hist),
-        |sz AS (SELECT shard, max(ns) AS ns FROM cum GROUP BY 1),
-        |bk AS (SELECT shard,
-        |    (CAST(t.i AS BIGINT) * ns) // 32 AS r,
-        |    (CAST(t.i AS BIGINT) * ns) // 32 - ((CAST(t.i AS BIGINT) - 1) * ns) // 32 AS w
-        |  FROM sz, LATERAL (SELECT unnest(range(1, 33)) AS i) t),
-        |summ AS (SELECT b.shard, b.r, b.w, min(c.cents) AS cents
-        |  FROM bk b JOIN cum c ON c.shard = b.shard AND c.cr >= b.r
-        |  WHERE b.w > 0 GROUP BY 1, 2, 3),
-        |mg AS (SELECT cents, sum(w) AS w FROM summ GROUP BY 1),
-        |mc AS (SELECT cents, w, sum(w) OVER (ORDER BY cents) AS cw FROM mg),
-        |eh AS (SELECT cents, sum(c) AS c FROM hist GROUP BY 1),
-        |ec AS (SELECT cents, sum(c) OVER (ORDER BY cents) AS cr,
-        |    sum(c) OVER () AS n FROM eh),
-        |ps AS (SELECT CAST(unnest([1, 5, 25, 50, 75, 95, 99]) AS BIGINT) AS p),
-        |tgt AS (SELECT p, (p * (SELECT max(n) FROM ec) + 99) // 100 AS r FROM ps),
-        |est AS (SELECT t.p, min(m.cents) AS est_cents FROM tgt t
-        |  JOIN mc m ON m.cw >= t.r GROUP BY 1),
-        |exq AS (SELECT t.p, min(e.cents) AS exact_cents FROM tgt t
-        |  JOIN ec e ON e.cr >= t.r GROUP BY 1)
-        |SELECT e.p, CAST(e.est_cents AS BIGINT) AS est_cents,
-        |  CAST(x.exact_cents AS BIGINT) AS exact_cents,
-        |  CAST(abs(e.est_cents - x.exact_cents) AS BIGINT) AS abs_err
-        |FROM est e JOIN exq x USING (p) ORDER BY e.p""".stripMargin,
-    "q48_simhash" -> q48Sql
-  )
+        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin))
 }

@@ -2,12 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the registry after the per-family split (round-13 verdict item 8):
-  * the merged maps must carry EXACTLY the canonical key set — a part file
-  * accidentally dropping, duplicating, or renaming an entry fails here, not
-  * silently at the driver's gate. The canonical list is a committed test
-  * resource; appending a NEW key is a deliberate two-line change (entry +
-  * resource line).
+/** Pins the registry. Each key is one record in its family part's `keys`
+  * Seq (`Registry*.scala`): a [[SparkEntry.Key]] holds its frame, oracle and
+  * plan note, a [[SparkEntry.Alias]] names the key it runs. The records must
+  * carry EXACTLY the canonical key set — a part file accidentally dropping,
+  * duplicating, or renaming a record fails here, not silently at the
+  * driver's gate. The canonical list is a committed test resource; appending
+  * a NEW key is a deliberate two-line change (record + resource line).
   */
 class RegistrySpec extends AnyFunSuite {
 
@@ -25,13 +26,6 @@ class RegistrySpec extends AnyFunSuite {
       s"missing=${missing.toSeq.sorted.mkString(",")} extra=${extra.toSeq.sorted.mkString(",")}")
   }
 
-  test("every query key has an oracle and vice versa") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o).isEmpty && (o -- q).isEmpty,
-      s"noOracle=${(q -- o).toSeq.sorted.mkString(",")} noQuery=${(o -- q).toSeq.sorted.mkString(",")}")
-  }
-
   // The two slips a nested stripMargin/interpolation fold can make: a margin
   // bar left on a line (or a `||` line stripped down to one `|`), and a `${`
   // that was never interpolated. Either one only fails at the DuckDB replay.
@@ -45,22 +39,23 @@ class RegistrySpec extends AnyFunSuite {
     assert(slips.isEmpty, slips.mkString("\n"))
   }
 
-  test("no part file registers a key another part already holds") {
-    val parts = Seq(
-      "RegistryReference" -> RegistryReference.queries,
-      "RegistryAnalyticsGraph" -> RegistryAnalyticsGraph.queries,
-      "RegistryAnnDedup" -> RegistryAnnDedup.queries,
-      "RegistryPipelineOps" -> RegistryPipelineOps.queries,
-      "RegistryStatsMl" -> RegistryStatsMl.queries,
-      "RegistryWarehouseText" -> RegistryWarehouseText.queries)
-    val all = parts.flatMap { case (n, qs) => qs.map(q => (q._1, n)) }
-    val dupes = all.groupBy(_._1).filter(_._2.size > 1)
-    assert(dupes.isEmpty, s"duplicate keys across parts: $dupes")
-    // the retired keys (round 17) live in NO part file — SparkEntry
-    // composes them onto their twins' code, so the canonical set is the
-    // part union plus exactly that alias map
-    assert(all.size + SparkEntry.retiredToTwins.size == canonical.size)
-    assert(SparkEntry.retiredToTwins.keySet.intersect(all.map(_._1).toSet).isEmpty,
-      "a retired key must not ALSO be registered in a part file")
+  // Each key is one record in its family part; SparkEntry's maps are
+  // projections of them, so a pairing slip can only show up here.
+  test("the records carry each canonical key once, aliases name keys, oracles are set") {
+    val entries = SparkEntry.registry
+    val names = entries.map(_.name)
+    val dupes = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(dupes.isEmpty, s"keys held by more than one record: ${dupes.toSeq.sorted.mkString(",")}")
+    assert(names.toSet == canonical,
+      s"missing=${(canonical -- names).toSeq.sorted.mkString(",")} extra=${(names.toSet -- canonical).toSeq.sorted.mkString(",")}")
+    val keys = entries.collect { case k: SparkEntry.Key => k.name }.toSet
+    val strays = entries.collect { case a: SparkEntry.Alias if !keys(a.twin) => s"${a.name} -> ${a.twin}" }
+    assert(strays.isEmpty, s"aliases whose twin is no key record: ${strays.mkString(", ")}")
+    // an oracle that reads a val defined below the records sees null
+    val unset = entries.collect {
+      case k: SparkEntry.Key if k.oracle == null || k.oracle.trim.isEmpty => k.name
+      case a: SparkEntry.Alias if a.oracle.exists(o => o == null || o.trim.isEmpty) => a.name
+    }
+    assert(unset.isEmpty, s"null or blank oracles: ${unset.sorted.mkString(",")}")
   }
 }
