@@ -41,13 +41,12 @@ class RegistrySpec extends AnyFunSuite {
 
   // Each key is one record in its family part; SparkEntry's maps are
   // projections of them, so a pairing slip can only show up here.
-  test("the records carry each canonical key once, aliases name keys, oracles are set") {
+  test("every query key has an oracle and vice versa") {
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert((q -- o).isEmpty && (o -- q).isEmpty,
+      s"noOracle=${(q -- o).toSeq.sorted.mkString(",")} noQuery=${(o -- q).toSeq.sorted.mkString(",")}")
     val entries = SparkEntry.registry
-    val names = entries.map(_.name)
-    val dupes = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
-    assert(dupes.isEmpty, s"keys held by more than one record: ${dupes.toSeq.sorted.mkString(",")}")
-    assert(names.toSet == canonical,
-      s"missing=${(canonical -- names).toSeq.sorted.mkString(",")} extra=${(names.toSet -- canonical).toSeq.sorted.mkString(",")}")
     val keys = entries.collect { case k: SparkEntry.Key => k.name }.toSet
     val strays = entries.collect { case a: SparkEntry.Alias if !keys(a.twin) => s"${a.name} -> ${a.twin}" }
     assert(strays.isEmpty, s"aliases whose twin is no key record: ${strays.mkString(", ")}")
@@ -57,5 +56,24 @@ class RegistrySpec extends AnyFunSuite {
       case a: SparkEntry.Alias if a.oracle.exists(o => o == null || o.trim.isEmpty) => a.name
     }
     assert(unset.isEmpty, s"null or blank oracles: ${unset.sorted.mkString(",")}")
+  }
+
+  test("no part file registers a key another part already holds") {
+    val parts = Seq(
+      "RegistryReference" -> RegistryReference.keys,
+      "RegistryAnalyticsGraph" -> RegistryAnalyticsGraph.keys,
+      "RegistryAnnDedup" -> RegistryAnnDedup.keys,
+      "RegistryPipelineOps" -> RegistryPipelineOps.keys,
+      "RegistryStatsMl" -> RegistryStatsMl.keys,
+      "RegistryWarehouseText" -> RegistryWarehouseText.keys)
+    val all = parts.flatMap { case (part, es) => es.map(e => (e.name, part)) }
+    val dupes = all.groupBy(_._1).collect { case (n, ps) if ps.size > 1 => s"$n in ${ps.map(_._2).mkString("+")}" }
+    assert(dupes.isEmpty, s"keys held by more than one record: ${dupes.toSeq.sorted.mkString(", ")}")
+    // SparkEntry.registry is exactly the part union, and that union is the
+    // canonical key set
+    assert(SparkEntry.registry.map(_.name) == all.map(_._1))
+    val names = all.map(_._1).toSet
+    assert(names == canonical,
+      s"missing=${(canonical -- names).toSeq.sorted.mkString(",")} extra=${(names -- canonical).toSeq.sorted.mkString(",")}")
   }
 }
